@@ -8,7 +8,9 @@ contract the pipeline needs on plain parquet:
 
 - a *snapshot* is ``<root>/<table>/snapshot=<id>/`` written atomically
   (parquet + `_MANIFEST.json` committed last; a snapshot without a manifest
-  is invisible),
+  is invisible). The manifest carries the row count, observed on the write
+  itself (no re-read), and the read schema: every reader passes it to
+  ``spark.read.schema`` so opening a snapshot starts no inference job,
 - a *run* spans one snapshot per table; the run is committed by a single
   ``_runs/<id>.json`` manifest written AFTER every table snapshot of that
   run. Readers and resume key off committed runs, so a crash between table
@@ -31,7 +33,8 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -56,14 +59,18 @@ class ParquetSnapshotCatalog:
         self, df: DataFrame, table: str, snapshot_id: str, extra_meta: dict | None = None
     ) -> dict:
         path = self._snap_dir(table, snapshot_id)
-        df.write.mode("overwrite").parquet(path)
-        spark = df.sparkSession
-        n_rows = spark.read.parquet(path).count()
+        # the row count rides on the write job; Spark reports it even when
+        # AQE prunes an empty plan, so `get` never waits on a missing metric
+        obs = Observation()
+        observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        observed.write.mode("overwrite").parquet(path)
         manifest = {
             "table": table,
             "snapshot_id": snapshot_id,
-            "rows": n_rows,
+            "rows": obs.get["rows"],
             "committed_at_epoch": time.time(),
+            # file sources read every field as nullable, so the writer's
+            # schema reads back exactly as inference would see it
             "schema": df.schema.jsonValue(),
             **(extra_meta or {}),
         }
@@ -121,11 +128,21 @@ class ParquetSnapshotCatalog:
         out.sort(key=lambda m: m["committed_at_epoch"])
         return out
 
+    def _read(self, spark: SparkSession, table: str, snapshot_ids: list[str]) -> DataFrame:
+        """Read snapshots with the newest one's manifest schema: no footer
+        inference, hence no Spark job, to open a table."""
+        newest = self._snap_dir(table, snapshot_ids[-1])
+        with open(os.path.join(newest, "_MANIFEST.json")) as fh:
+            schema = StructType.fromJson(json.load(fh)["schema"])
+        return spark.read.schema(schema).parquet(
+            *[self._snap_dir(table, s) for s in snapshot_ids]
+        )
+
     def read_snapshot(
         self, spark: SparkSession, table: str, snapshot_id: str
     ) -> DataFrame:
         """Read one committed snapshot (this run's contribution only)."""
-        return spark.read.parquet(self._snap_dir(table, snapshot_id))
+        return self._read(spark, table, [snapshot_id])
 
     def _committed_run_snaps(self, table: str) -> list[str]:
         """Snapshot ids of `table` that belong to a COMMITTED run, in run
@@ -137,7 +154,7 @@ class ParquetSnapshotCatalog:
         snaps = self._committed_run_snaps(table)
         if not snaps:
             return None
-        return spark.read.parquet(*[self._snap_dir(table, s) for s in snaps])
+        return self._read(spark, table, snaps)
 
     def read_table_latest(self, spark: SparkSession, table: str) -> DataFrame | None:
         """Newest committed run's snapshot only — replace semantics for
@@ -145,4 +162,4 @@ class ParquetSnapshotCatalog:
         snaps = self._committed_run_snaps(table)
         if not snaps:
             return None
-        return spark.read.parquet(self._snap_dir(table, snaps[-1]))
+        return self._read(spark, table, snaps[-1:])

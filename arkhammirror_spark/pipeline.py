@@ -24,11 +24,15 @@ from __future__ import annotations
 
 import hashlib
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from .catalog import ParquetSnapshotCatalog
+from .operators.edges import comention_edges_from_name_sets
 from .operators.entities import aggregate_entities, filter_valid_mentions
 from .operators.extract import extract_docs
 from .operators.spans import (
@@ -127,6 +131,15 @@ def _audit_from_docs(docs_raw: DataFrame, snapshot_id: str) -> DataFrame:
     )
 
 
+def _mentions_from_docs(docs_raw: DataFrame) -> DataFrame:
+    """The mentions table: one row per fused mock-NER span of an error-free doc."""
+    return (
+        docs_raw.where(F.col("error").isNull())
+        .select("url", F.explode("_mentions").alias("m"))
+        .select("url", "m.*")
+    )
+
+
 def run_extraction_stats(
     spark: SparkSession,
     pages: DataFrame,
@@ -142,7 +155,6 @@ def run_extraction_stats(
     """
     from pyspark import StorageLevel
 
-    from .operators.edges import comention_edges_from_name_sets
     from .shipping import ensure_shipped
 
     ensure_shipped(spark)
@@ -211,13 +223,14 @@ def run_pipeline(
     catalog = ParquetSnapshotCatalog(out_dir) if out_dir else None
     stats: dict = {}
 
-    if catalog and resume:
-        done = catalog.read_table(spark, "docs")
-        if done is not None:
-            # AQE converts this to a broadcast anti-join when the committed
-            # url set is small; at 10^12 scale it stays a shuffle anti-join
-            # co-partitioned with the url-hash repartition below.
-            pages = pages.join(done.select("url").distinct(), "url", "left_anti")
+    # committed docs of earlier runs: the resume key set, and the prior part
+    # of the entities/edges recompute below
+    prior_docs = catalog.read_table(spark, "docs") if catalog else None
+    if prior_docs is not None and resume:
+        # AQE converts this to a broadcast anti-join when the committed
+        # url set is small; at 10^12 scale it stays a shuffle anti-join
+        # co-partitioned with the url-hash repartition below.
+        pages = pages.join(prior_docs.select("url").distinct(), "url", "left_anti")
 
     pages = partition_pages(pages, num_partitions)
 
@@ -255,88 +268,81 @@ def run_pipeline(
     docs = docs_raw.drop(*_PRIVATE)
 
     tables: dict[str, DataFrame] = {"docs": docs}
+    # the tables built from the docs, as builders: the catalog arm builds
+    # each frame in the thread that writes it, so plan analysis (a py4j
+    # round trip per column expression) overlaps the writes already running
+    builders: dict[str, Callable[[], DataFrame]] = {}
 
     if with_spans:
         clean = docs_raw.select("url", "extracted_text", "error").where(
             F.col("error").isNull()
         )
-        mentions = (
-            docs_raw.where(F.col("error").isNull())
-            .select("url", F.explode("_mentions").alias("m"))
-            .select("url", "m.*")
-        )
-        tables["mentions"] = mentions
-        tables["dates"] = extract_dates(clean)
-        # native pair combination over the fused _mentions — the Python
-        # re-extraction variant cost half the pipeline wall (see
-        # extract_rels_from_mentions)
-        tables["rels"] = extract_rels_from_mentions(docs_raw)
-        tables["chunks"] = extract_chunks(clean)
-        tables["claims"] = extract_claims_df(clean)
+        # entities/edges are DERIVED AGGREGATES, not append tables: a
+        # per-increment aggregation would split counts across snapshots,
+        # apply min_count per increment (dropping cross-snapshot
+        # co-occurrences) and turn limit into a per-increment top-N.
+        # Recompute them over the FULL committed docs (prior runs + this
+        # increment) each run; readers take the latest run's result.
+        full_docs = docs_raw if prior_docs is None else prior_docs.unionByName(docs_raw)
+        full_docs = full_docs.where(F.col("error").isNull())
+        builders = {
+            "mentions": lambda: _mentions_from_docs(docs_raw),
+            "dates": lambda: extract_dates(clean),
+            # native pair combination over the fused _mentions — the Python
+            # re-extraction variant cost half the pipeline wall (see
+            # extract_rels_from_mentions)
+            "rels": lambda: extract_rels_from_mentions(docs_raw),
+            "chunks": lambda: extract_chunks(clean),
+            "claims": lambda: extract_claims_df(clean),
+            # the docs' `_mentions` explode to exactly the mentions table's
+            # rows, so entities never wait on the mentions write
+            "entities": lambda: aggregate_entities(
+                filter_valid_mentions(_mentions_from_docs(full_docs))
+            ),
+            # Edges build from the fused `_names` arrays (the sorted distinct
+            # valid lowered names the extract pass already computed):
+            # output-identical to comention_edges over the exploded valid
+            # mentions (verified equal on the full bench corpus) with one
+            # narrow explode instead of a mention-row explode + per-doc
+            # re-aggregation — half the shuffles. document_ids arrays are
+            # opt-in: at 10^12-doc scale an unbounded ARRAY_AGG per edge is a
+            # memory hazard; the (doc, entity) mapping is already
+            # materialized in the mentions table.
+            "edges": lambda: comention_edges_from_name_sets(
+                full_docs, min_count=min_edge_count, include_doc_ids=edge_doc_ids,
+            ),
+        }
 
-    if catalog:
-        # per-document tables append this run's increment. The writes are
-        # INDEPENDENT jobs over the same pruned docs snapshot, so submit
-        # them from worker threads and let Spark's scheduler interleave
-        # their stages — the mentions explode and the regex-heavy
-        # dates/claims scans overlap instead of serializing (each job alone
-        # underutilizes the executors during its narrow final write stage).
-        # Run-level atomicity is untouched: commit_run still happens after
-        # the barrier below.
-        from concurrent.futures import ThreadPoolExecutor
+    if not catalog:
+        tables.update((name, build()) for name, build in builders.items())
+    else:
+        # Every table left to write reads only docs snapshots already on
+        # disk (this run's and the committed runs'), never another table of
+        # this run, so the writes are independent jobs: submit them all at
+        # once from worker threads and let Spark's scheduler interleave
+        # their stages (each job alone underutilizes the executors during
+        # its narrow final write stage). Each callable carries the caller's
+        # local properties (job group, description, scheduler pool), so
+        # cancelling the caller's job group stops the wave too. Run-level
+        # atomicity is untouched: commit_run happens only after the barrier
+        # below.
+        wave = {**builders, "audit": lambda: audit}
 
-        span_tables = [n for n in tables if n != "docs"]  # docs written above
-        if span_tables:
-            with ThreadPoolExecutor(max_workers=min(4, len(span_tables))) as ex:
-                futures = {
-                    n: ex.submit(catalog.write_snapshot, tables[n], n, snapshot_id)
-                    for n in span_tables
-                }
-                for n, fut in futures.items():
-                    fut.result()  # surface the first failure, keep run orphaned
+        def write(name: str, build: Callable[[], DataFrame]) -> dict:
+            return catalog.write_snapshot(build(), name, snapshot_id)
 
-        if with_spans:
-            # entities/edges are DERIVED AGGREGATES, not append tables: a
-            # per-increment aggregation would split counts across snapshots,
-            # apply min_count per increment (dropping cross-snapshot
-            # co-occurrences) and turn limit into a per-increment top-N.
-            # Recompute them over the FULL committed mentions (prior runs +
-            # this increment) each run; readers take the latest run's result.
-            prior = catalog.read_table(spark, "mentions")
-            inc = catalog.read_snapshot(spark, "mentions", snapshot_id)
-            full_mentions = inc if prior is None else prior.unionByName(inc)
-            valid = filter_valid_mentions(full_mentions)
-            tables["entities"] = aggregate_entities(valid)
-            # document_ids arrays are opt-in: at 10^12-doc scale an unbounded
-            # ARRAY_AGG per edge is a memory hazard; the (doc, entity) mapping
-            # is already materialized in the mentions table.
-            # Edges build from the docs table's fused `_names` arrays (the
-            # sorted distinct valid lowered names the extract pass already
-            # computed): output-identical to comention_edges over the
-            # exploded valid mentions (verified equal on the full bench
-            # corpus) with one narrow explode instead of a mention-row
-            # explode + per-doc re-aggregation — half the shuffles.
-            from .operators.edges import comention_edges_from_name_sets
-
-            prior_docs = catalog.read_table(spark, "docs")
-            inc_docs = catalog.read_snapshot(spark, "docs", snapshot_id)
-            full_docs = (
-                inc_docs if prior_docs is None
-                else prior_docs.unionByName(inc_docs)
-            )
-            tables["edges"] = comention_edges_from_name_sets(
-                full_docs.where(F.col("error").isNull()),
-                min_count=min_edge_count, include_doc_ids=edge_doc_ids,
-            )
-            catalog.write_snapshot(tables["entities"], "entities", snapshot_id)
-            catalog.write_snapshot(tables["edges"], "edges", snapshot_id)
-
-        catalog.write_snapshot(audit, "audit", snapshot_id)
+        with ThreadPoolExecutor(max_workers=len(wave)) as ex:
+            futures = [
+                ex.submit(inheritable_thread_target(spark)(write), name, build)
+                for name, build in wave.items()
+            ]
+            for fut in futures:
+                fut.result()  # surface the first failure, keep run orphaned
         # run-level atomic commit point: ONLY now does this increment become
         # visible to readers and to resume. A crash anywhere above leaves an
         # invisible orphan run whose urls are re-extracted next time — no
         # half-committed increment, no silently lost downstream rows.
-        catalog.commit_run(snapshot_id, [*tables.keys(), "audit"])
+        catalog.commit_run(snapshot_id, ["docs", *wave])
 
         # expose committed data; public docs view prunes the internal columns
         _DERIVED = ("entities", "edges")
@@ -346,20 +352,9 @@ def run_pipeline(
                 if name in _DERIVED
                 else catalog.read_table(spark, name)
             )
-            for name in tables  # type: ignore[misc]
+            for name in ["docs", *builders]
         }
         tables["docs"] = tables["docs"].drop(*_PRIVATE)
-    elif with_spans:
-        from .operators.edges import comention_edges_from_name_sets
-
-        valid = filter_valid_mentions(tables["mentions"])
-        tables["entities"] = aggregate_entities(valid)
-        # same `_names` fast path as the catalog arm (docs_raw here is the
-        # pruned scratch-parquet read, so `_names` is a cheap column read)
-        tables["edges"] = comention_edges_from_name_sets(
-            docs_raw.where(F.col("error").isNull()),
-            min_count=min_edge_count, include_doc_ids=edge_doc_ids,
-        )
 
     return PipelineResult(
         snapshot_id=snapshot_id, tables=tables, audit=audit, stats=stats

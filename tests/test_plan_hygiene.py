@@ -156,3 +156,38 @@ def test_driver_java_options_merge():
     assert flag in merged and "-XX:+UseG1GC" in merged and "-Dfoo=1" in merged
     pinned = "-Dlog4j.configurationFile=file:/theirs.properties -Dbar=2"
     assert _merge_driver_java_options(pinned, flag) == pinned
+
+
+# Spark jobs one cold plus one resume run_pipeline may start (50 pages, then
+# the same 50 plus 5 new ones). Measured at 28: every catalog write is one
+# job, plus one where AQE runs a shuffle stage as its own job, and opening
+# a committed table starts none (manifest row counts are observed on the
+# write; reads pin the manifest schema). A re-read count() or a parquet
+# schema inference per table read adds jobs, and fails this gate.
+_PIPELINE_JOB_BUDGET = 28
+
+
+def test_pipeline_job_budget(spark, tmp_path):
+    from arkhammirror_spark.datagen import gen_pages_df
+    from arkhammirror_spark.pipeline import run_pipeline
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    out = str(tmp_path / "catalog")
+    cold, both = gen_pages_df(spark, 50, seed=3), gen_pages_df(spark, 55, seed=3)
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("pipeline-job-budget", "cold + resume run_pipeline")
+    try:
+        run_pipeline(spark, cold, out_dir=out, num_partitions=4)
+        run_pipeline(spark, both, out_dir=out, num_partitions=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the write wave's threads inherit the caller's job group, so every job
+    # is counted (and sc.cancelJobGroup can stop all of them)
+    lost = set(tracker.getJobIdsForGroup(None)) - ungrouped
+    assert not lost, f"jobs {sorted(lost)} ran outside the caller's job group"
+    jobs = tracker.getJobIdsForGroup("pipeline-job-budget")
+    assert len(jobs) <= _PIPELINE_JOB_BUDGET, (
+        f"{len(jobs)} Spark jobs for a cold + resume run_pipeline, budget "
+        f"{_PIPELINE_JOB_BUDGET}"
+    )
