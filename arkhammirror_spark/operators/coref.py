@@ -2,50 +2,40 @@
 
 Per-document sequential semantics (the pronoun scanner walks words left to
 right carrying "last seen entity" state), so this is one of the two operators
-that genuinely needs grouped pandas execution (SURVEY §2.8): an Arrow-batched
-``mapInPandas`` over (doc, text) applying the reference_impl scanner per
-document — still zero row-at-a-time Python at the Spark level.
+that genuinely needs grouped pandas execution (SURVEY §2.8): the shared
+per-document explode lane (``spans._explode_per_doc``) applying the
+reference_impl scanner per document — still zero row-at-a-time Python at the
+Spark level.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..reference_impl.coreference import resolve_coreferences
 from ..reference_impl.ner import mock_ner
-
-COREF_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("pronoun", StringType(), False),
-        StructField("resolved_to", StringType(), False),
-    ]
-)
+from .spans import _explode_per_doc
 
 
-def resolve_coref(docs: DataFrame, text_col: str = "extracted_text") -> DataFrame:
-    """(url, pronoun, resolved_to) rows; mentions come from the mock-NER path
-    (all PERSON — matching the reference's deterministic pipeline where the
-    parse shard feeds NER output into the resolver)."""
-
-    from ..shipping import ensure_shipped
-
-    ensure_shipped(docs.sparkSession)
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, text in zip(pdf["url"].tolist(), pdf[text_col].tolist()):
-                if not text:
-                    continue
-                res = resolve_coreferences(text, mock_ner(text))
-                for pron, ent in res.items():
-                    rows.append({"url": url, "pronoun": pron, "resolved_to": ent})
-            yield pd.DataFrame(rows, columns=["url", "pronoun", "resolved_to"])
-
-    return docs.select("url", text_col).mapInPandas(_run, COREF_SCHEMA)
+def resolve_coref(docs: DataFrame) -> DataFrame:
+    """(key, pronoun, resolved_to) rows from a two-column (key, text) frame;
+    mentions come from the mock-NER path (all PERSON — matching the
+    reference's deterministic pipeline where the parse shard feeds NER output
+    into the resolver)."""
+    key = docs.schema.fields[0]
+    schema = StructType(
+        [
+            StructField(key.name, key.dataType, False),
+            StructField("pronoun", StringType(), False),
+            StructField("resolved_to", StringType(), False),
+        ]
+    )
+    return _explode_per_doc(
+        docs,
+        lambda t: [
+            {"pronoun": p, "resolved_to": e}
+            for p, e in resolve_coreferences(t, mock_ner(t)).items()
+        ],
+        schema,
+    )

@@ -4,7 +4,8 @@ Reference lineage: image preprocessing (arkham-shard-ingest/workers/
 image_worker.py:212-687 — grayscale/denoise/deskew/Otsu-binarize/resize via
 PIL/cv2) and OCR (arkham-shard-ocr/workers/paddle_worker.py:123-293).
 
-Image decode is gated THREE ways, mirroring ocr_model.py:
+Image decode is gated THREE ways (the optional library is imported lazily,
+once per worker; the mode decides what its absence means):
 - mode="auto" (default): PIL when importable, else the REAL stdlib lane —
   PNG (zlib inflate + scanline unfilter), uncompressed 24-bit BMP, and
   binary PNM (P5/P6) decode to numpy with no codec library; undecodable
@@ -81,7 +82,7 @@ FRAME_SAMPLE_SCHEMA = StructType(
 
 
 def _load_pil():
-    """Lazy PIL gate (the ocr_model._load_engine pattern) — module or None."""
+    """Lazy PIL gate: the module when importable, else None."""
     try:
         from PIL import Image  # type: ignore
 
@@ -487,7 +488,7 @@ def extract_image_features(
 
     mode gates the decode (see module docstring): auto = PIL-else-stdlib
     real decode with per-row quarantine; strict = ImportError when PIL is
-    missing (raised once per worker, the ocr_model strict contract);
+    missing (raised once per worker, before any row is decoded);
     mock = deterministic payload-hash fake.
     """
     if mode not in ("auto", "strict", "mock"):

@@ -28,28 +28,31 @@ from ..reference_impl.relations import extract_relations
 from ..schemas import CHUNK_STRUCT, CLAIM_STRUCT, DATE_STRUCT, MENTION_STRUCT, REL_STRUCT
 
 
-def _keyed_schema(struct: StructType) -> StructType:
-    return StructType([StructField("url", StringType(), False)] + list(struct.fields))
-
-
 def _explode_per_doc(
-    docs: DataFrame, fn: Callable[[str], list[dict]], struct: StructType
+    docs: DataFrame, fn: Callable[[str], list[dict]], schema: StructType
 ) -> DataFrame:
+    """The per-document explode lane: one ``mapInPandas`` pass over a
+    two-column (key, text) frame — key ``url`` on the pipeline side,
+    ``doc_id`` on the query side. ``fn`` maps each document's text to
+    records; each record gets the document's key and the rows are projected
+    onto ``schema``, the caller's full output schema (key field first).
+    Null or empty texts emit nothing: every extractor routed here returns an
+    empty result on ""."""
     from ..shipping import ensure_shipped
 
     ensure_shipped(docs.sparkSession)
-    schema = _keyed_schema(struct)
+    key, text_col = docs.columns
     names = [f.name for f in schema.fields]
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out_rows: list[dict] = []
-            for url, text in zip(pdf["url"].tolist(), pdf["extracted_text"].tolist()):
+            for k, text in zip(pdf[key].tolist(), pdf[text_col].tolist()):
                 if not text:
                     continue
                 for rec in fn(text):
                     rec = dict(rec)
-                    rec["url"] = url
+                    rec[key] = k
                     out_rows.append(rec)
             if out_rows:
                 out = pd.DataFrame(out_rows)
@@ -61,12 +64,20 @@ def _explode_per_doc(
             else:
                 yield pd.DataFrame({n: pd.Series(dtype="object") for n in names})
 
-    return docs.select("url", "extracted_text").mapInPandas(_run, schema)
+    return docs.mapInPandas(_run, schema)
+
+
+def _per_url(
+    docs: DataFrame, fn: Callable[[str], list[dict]], struct: StructType
+) -> DataFrame:
+    """The pipeline side of the lane: (url, extracted_text) → url + `struct`."""
+    schema = StructType([StructField("url", StringType(), False)] + list(struct.fields))
+    return _explode_per_doc(docs.select("url", "extracted_text"), fn, schema)
 
 
 def extract_mentions(docs: DataFrame) -> DataFrame:
     """Mock-NER mentions (ner.py:94-143 semantics)."""
-    return _explode_per_doc(docs, mock_ner, MENTION_STRUCT)
+    return _per_url(docs, mock_ner, MENTION_STRUCT)
 
 
 def extract_dates(docs: DataFrame, include_relative: bool = True) -> DataFrame:
@@ -78,7 +89,7 @@ def extract_dates(docs: DataFrame, include_relative: bool = True) -> DataFrame:
             out = out + extract_relative_dates(text)
         return out
 
-    return _explode_per_doc(docs, _fn, DATE_STRUCT)
+    return _per_url(docs, _fn, DATE_STRUCT)
 
 
 def extract_rels(docs: DataFrame) -> DataFrame:
@@ -87,7 +98,7 @@ def extract_rels(docs: DataFrame) -> DataFrame:
     def _fn(text: str) -> list[dict]:
         return extract_relations(text, mock_ner(text))
 
-    return _explode_per_doc(docs, _fn, REL_STRUCT)
+    return _per_url(docs, _fn, REL_STRUCT)
 
 
 def extract_chunks(
@@ -102,12 +113,12 @@ def extract_chunks(
     def _fn(text: str) -> list[dict]:
         return chunker(text, chunk_size=chunk_size, overlap=overlap)
 
-    return _explode_per_doc(docs, _fn, CHUNK_STRUCT)
+    return _per_url(docs, _fn, CHUNK_STRUCT)
 
 
 def extract_claims_df(docs: DataFrame) -> DataFrame:
     """Rule-based claims (claims/shard.py:300-374)."""
-    return _explode_per_doc(docs, extract_claims, CLAIM_STRUCT)
+    return _per_url(docs, extract_claims, CLAIM_STRUCT)
 
 
 def extract_chunks_strategy(
@@ -121,7 +132,7 @@ def extract_chunks_strategy(
     def _fn(text: str) -> list[dict]:
         return chunk_with_strategy(text, strategy, **kw)
 
-    return _explode_per_doc(docs, _fn, CHUNK_STRUCT)
+    return _per_url(docs, _fn, CHUNK_STRUCT)
 
 
 def extract_chunks_semantic(
@@ -152,7 +163,7 @@ def extract_chunks_semantic(
 
         return chunk_semantic(text, _embed, chunk_size=chunk_size, overlap=overlap)
 
-    return _explode_per_doc(docs, _fn, CHUNK_STRUCT)
+    return _per_url(docs, _fn, CHUNK_STRUCT)
 
 
 def extract_rels_from_mentions(docs_raw: DataFrame) -> DataFrame:

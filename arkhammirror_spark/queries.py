@@ -11,14 +11,19 @@ apply a deterministic dictionary-casing step (`_cased`, identical expression
 in both engines) to give mock-NER capital runs to find; date queries append a
 doc_id-derived date suffix for the same reason. This keeps every extractor
 query non-trivial while remaining exactly reproducible in ANSI SQL.
+
+Adding a part is one ``@register(name, oracle)`` call on its Spark function;
+an oracle built after its function is attached in the same module as
+``ORACLE_SQL[name] = ...``. The parts live in this module and in
+``queries_ext``, ``queries_ext2`` and ``queries_ext3``, which load as a
+chain: each module imports the next one on its last line, after its own
+parts are registered. Whichever of them is imported first, the registry
+ends up with every part, in this module order.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -30,10 +35,28 @@ from pyspark.sql.types import (
 )
 
 from .operators.edges import comention_edges
+from .operators.spans import _explode_per_doc
 from .operators.spread import spread as _spread
 from .operators.entities import aggregate_entities, filter_valid_mentions
 from .reference_impl.claims import extract_claims
 from .reference_impl.ner import mock_ner
+
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+ORACLE_SQL: dict[str, str] = {}
+
+
+def register(name: str, oracle: str | None):
+    """Decorator: add the part `name` and its DuckDB oracle to the registry
+    (None when the oracle is attached later as ``ORACLE_SQL[name]``)."""
+
+    def deco(fn):
+        QUERIES[name] = fn
+        if oracle is not None:
+            ORACLE_SQL[name] = oracle
+        return fn
+
+    return deco
+
 
 # ---------------------------------------------------------------------------
 # shared fixture-enrichment expressions (identical Spark + DuckDB)
@@ -102,16 +125,11 @@ def _mentions_df(
         # parquet scan and bounds the mapInPandas work, not just its output
         docs = docs.where(docs_where)
     docs = docs.select("doc_id", _cased_spark(F.col("text")).alias("t"))
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, t in zip(pdf["doc_id"].tolist(), pdf["t"].tolist()):
-                for m in mock_ner(t or ""):
-                    rows.append({"doc_id": doc_id, "entity_text": m["text"]})
-            yield pd.DataFrame(rows, columns=["doc_id", "entity_text"])
-
-    return _spread(docs, "doc_id").mapInPandas(_run, _MENTIONS_SCHEMA)
+    return _explode_per_doc(
+        _spread(docs, "doc_id"),
+        lambda t: [{"entity_text": m["text"]} for m in mock_ner(t)],
+        _MENTIONS_SCHEMA,
+    )
 
 
 # gaps-and-islands reproduction of ner.py:94-143 (validated row-identical
@@ -182,10 +200,21 @@ _VALID_SQL = """
 """
 
 
+@register("mentions", _MENTIONS_CTE + "SELECT doc_id, entity_text FROM mentions")
 def q_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _mentions_df(spark, sf_dir)
 
 
+@register("entities", _MENTIONS_CTE + f"""
+, valid AS (
+  SELECT doc_id, entity_text FROM mentions WHERE {_VALID_SQL}
+)
+SELECT lower(entity_text) AS name_lower,
+       'PERSON' AS entity_type,
+       count(*) AS mention_count,
+       count(DISTINCT doc_id) AS doc_count
+FROM valid GROUP BY 1, 2
+""")
 def q_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = _mentions_df(spark, sf_dir).select(
         F.col("doc_id"),
@@ -199,6 +228,22 @@ def q_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register("comention_edges", _MENTIONS_CTE + f"""
+, valid AS (
+  SELECT doc_id, entity_text FROM mentions WHERE {_VALID_SQL}
+),
+pairs AS (
+  SELECT DISTINCT doc_id, lower(entity_text) AS name FROM valid
+)
+SELECT a.name AS entity_a, b.name AS entity_b,
+       count(DISTINCT a.doc_id) AS co_occurrence_count,
+       least(1.0, count(DISTINCT a.doc_id) / 10.0) AS weight
+FROM pairs a JOIN pairs b ON a.doc_id = b.doc_id AND a.name < b.name
+GROUP BY 1, 2
+HAVING count(DISTINCT a.doc_id) >= 2
+ORDER BY co_occurrence_count DESC, entity_a, entity_b
+LIMIT 1000
+""")
 def q_comention_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = _mentions_df(spark, sf_dir).select(
         F.col("doc_id"),
@@ -216,6 +261,10 @@ def q_comention_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+@register("exact_dedup", """
+SELECT sha256(text) AS checksum, count(*) AS n_copies, min(doc_id) AS keeper_doc_id
+FROM documents GROUP BY 1
+""")
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _load(spark, sf_dir, "documents")
     return (
@@ -227,6 +276,20 @@ def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register("iso_dates", f"""
+WITH t AS (
+  SELECT doc_id, text || {_DATE_SUFFIX_SQL} AS t FROM documents
+),
+hits AS (
+  SELECT doc_id, unnest(regexp_extract_all(t, '\\b(\\d{{4}})-(\\d{{2}})-(\\d{{2}})\\b')) AS date_text
+  FROM t
+)
+SELECT doc_id, date_text,
+       CAST(try_strptime(date_text, '%Y-%m-%d') AS DATE) AS normalized_date,
+       0.8::DOUBLE AS confidence, 'absolute' AS date_type
+FROM hits
+WHERE try_strptime(date_text, '%Y-%m-%d') IS NOT NULL
+""")
 def q_iso_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _load(spark, sf_dir, "documents").select(
         "doc_id", F.concat(F.col("text"), _date_suffix_spark()).alias("t")
@@ -248,6 +311,21 @@ def q_iso_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register("relative_dates", """
+WITH t AS (
+  SELECT doc_id, text || ' ' ||
+    CASE doc_id % 4 WHEN 0 THEN 'seen yesterday' WHEN 1 THEN 'noted last week'
+                    WHEN 2 THEN 'logged 3 days ago' ELSE 'unchanged' END AS t
+  FROM documents
+),
+hits AS (
+  SELECT doc_id, unnest(regexp_extract_all(t,
+    '(?i)\\b(yesterday|today|tomorrow)\\b|\\b(last|next) (week|month|year)\\b|\\b(\\d+) (days?|weeks?|months?|years?) ago\\b'
+  )) AS date_text
+  FROM t
+)
+SELECT doc_id, date_text, 0.7::DOUBLE AS confidence, 'relative' AS date_type FROM hits
+""")
 def q_relative_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     phr = F.array(*[F.lit(p) for p in _REL_PHRASES])
     docs = _load(spark, sf_dir, "documents").select(
@@ -266,6 +344,31 @@ def q_relative_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register("claims", f"""
+WITH cased AS (
+  SELECT doc_id, {_cased_sql("replace(text, ' the ', '. The ')")} AS t FROM documents
+),
+sentences AS (
+  SELECT doc_id, g.i AS i,
+         trim(parts[g.i], ' ' || chr(9) || chr(10) || chr(13)) AS s
+  FROM (
+    SELECT doc_id,
+           string_split(regexp_replace(t, '([.!?])\\s+([A-Z])', '\\1' || chr(1) || '\\2', 'g'), chr(1)) AS parts
+    FROM cased
+  ), LATERAL (SELECT unnest(generate_series(1, len(parts))) AS i) g
+),
+kept AS (
+  SELECT doc_id, i, s,
+         row_number() OVER (PARTITION BY doc_id ORDER BY i) AS rk
+  FROM sentences
+  WHERE s <> ''
+    AND len(string_split_regex(s, '\\s+')) >= 5
+    AND NOT ends_with(rtrim(s), '?')
+    AND NOT (starts_with(s, '-') OR starts_with(s, '*') OR starts_with(s, '#'))
+)
+SELECT doc_id, substr(s, 1, 1000) AS claim_text, 0.5::DOUBLE AS confidence
+FROM kept WHERE rk <= 100
+""")
 def q_claims(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sentence punctuation is injected deterministically (the soup has none)
     docs = _load(spark, sf_dir, "documents").select(
@@ -281,20 +384,38 @@ def q_claims(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("confidence", DoubleType(), False),
         ]
     )
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, t in zip(pdf["doc_id"].tolist(), pdf["t"].tolist()):
-                for c in extract_claims(t or ""):
-                    rows.append(
-                        {"doc_id": doc_id, "claim_text": c["text"], "confidence": 0.5}
-                    )
-            yield pd.DataFrame(rows, columns=["doc_id", "claim_text", "confidence"])
-
-    return _spread(docs, "doc_id").mapInPandas(_run, schema)
+    return _explode_per_doc(
+        _spread(docs, "doc_id"),
+        lambda t: [{"claim_text": c["text"], "confidence": 0.5} for c in extract_claims(t)],
+        schema,
+    )
 
 
+@register("text_quality_flags", """
+WITH base AS (
+  SELECT doc_id,
+         len(regexp_extract_all(text, '\\S+'))::BIGINT AS word_count,
+         length(text)::BIGINT AS char_count,
+         length(regexp_replace(text, '[^\\p{L}]', '', 'g'))::BIGINT AS letter_count,
+         length(regexp_replace(text, '[^0-9]', '', 'g'))::BIGINT AS digit_count,
+         regexp_extract_all(text, '\\S+') AS words
+  FROM documents
+),
+per_word AS (
+  SELECT doc_id, word_count, char_count, letter_count, digit_count, w.word AS word, count(*) AS wn
+  FROM base, LATERAL (SELECT unnest(words) AS word) w
+  GROUP BY 1,2,3,4,5,6
+),
+agg AS (
+  SELECT doc_id, word_count, char_count, letter_count, digit_count, max(wn) AS top_word_n
+  FROM per_word GROUP BY 1,2,3,4,5
+)
+SELECT doc_id, word_count, char_count, letter_count, digit_count,
+       digit_count::DOUBLE / char_count > 0.5 AS mostly_numbers,
+       letter_count::DOUBLE / char_count < 0.3 AS low_letter_ratio,
+       top_word_n::DOUBLE / word_count > 0.3 AS repetitive_words
+FROM agg
+""")
 def q_text_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _load(spark, sf_dir, "documents")
     toks = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), F.lit(0))
@@ -343,6 +464,21 @@ def q_text_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register("lang_script_counts", """
+WITH c AS (
+  SELECT doc_id,
+    length(regexp_replace(text, '[^A-Za-z\\x{00C0}-\\x{024F}]', '', 'g'))::BIGINT AS latin_n,
+    length(regexp_replace(text, '[^\\x{0400}-\\x{04FF}]', '', 'g'))::BIGINT AS cyrillic_n,
+    length(regexp_replace(text, '[^\\x{0600}-\\x{06FF}]', '', 'g'))::BIGINT AS arabic_n,
+    length(regexp_replace(text, '[^\\x{4E00}-\\x{9FFF}\\x{3040}-\\x{30FF}]', '', 'g'))::BIGINT AS cjk_n
+  FROM documents
+)
+SELECT doc_id, latin_n, cyrillic_n, arabic_n, cjk_n,
+       CASE WHEN latin_n >= greatest(cyrillic_n, arabic_n, cjk_n) THEN 'en'
+            WHEN cyrillic_n >= greatest(arabic_n, cjk_n) THEN 'ru'
+            WHEN arabic_n >= cjk_n THEN 'ar' ELSE 'zh' END AS lang_guess
+FROM c
+""")
 def q_lang_script_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _load(spark, sf_dir, "documents")
 
@@ -367,6 +503,15 @@ def q_lang_script_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register("doc_fingerprint", f"""
+SELECT doc_id,
+       list_reduce(
+         list_prepend(0::BIGINT,
+           list_transform(generate_series(1, length(text)), i -> unicode(substr(text, i, 1))::BIGINT)),
+         (acc, c) -> (acc * 31 + c) % {_FP_MOD}
+       ) AS fingerprint
+FROM documents
+""")
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _load(spark, sf_dir, "documents")
     chars = F.split(F.col("text"), "")
@@ -378,6 +523,12 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", fp.alias("fingerprint"))
 
 
+@register("token_stats", """
+SELECT doc_id,
+       len(regexp_extract_all(text, '\\S+'))::BIGINT AS ws_tokens,
+       len(regexp_extract_all(text, '[a-z]+|[A-Z][a-z]*|[0-9]+|[^A-Za-z0-9\\s]'))::BIGINT AS bpe_tokens
+FROM documents
+""")
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-ish tokenization: letter runs / digit runs / single punct."""
     docs = _load(spark, sf_dir, "documents")
@@ -397,6 +548,16 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+@register("pricing_summary", """
+SELECT l_returnflag, l_linestatus,
+       round(sum(l_quantity), 2) AS sum_qty,
+       round(sum(l_extendedprice), 2) AS sum_base_price,
+       round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS sum_disc_price,
+       count(*) AS count_order
+FROM lineitem
+WHERE l_shipdate <= '2098-12-01'
+GROUP BY 1, 2
+""")
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _load(spark, sf_dir, "lineitem")
     return (
@@ -413,6 +574,13 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register("top_orders_per_customer", """
+SELECT o_custkey, o_orderkey, o_totalprice, rk FROM (
+  SELECT o_custkey, o_orderkey, o_totalprice,
+         row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC)::BIGINT AS rk
+  FROM orders
+) WHERE rk <= 3
+""")
 def q_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
@@ -427,6 +595,13 @@ def q_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register("customer_nation_rollup", """
+SELECT r_name, n_name, count(*) AS n_customers, round(sum(c_acctbal), 2) AS total_acctbal
+FROM customer
+JOIN nation ON c_nationkey = n_nationkey
+JOIN region ON n_regionkey = r_regionkey
+GROUP BY 1, 2
+""")
 def q_customer_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _load(spark, sf_dir, "customer")
     n = _load(spark, sf_dir, "nation")
@@ -442,6 +617,27 @@ def q_customer_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register("event_sessions", """
+WITH base AS (
+  SELECT user_id, event_id,
+         datediff('microseconds', TIMESTAMP '2024-01-01 00:00:00', ts) AS ts_us
+  FROM events
+),
+w AS (
+  SELECT user_id, event_id, ts_us,
+         ts_us - lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS gap
+  FROM base
+),
+s AS (
+  SELECT user_id, ts_us,
+         sum(CASE WHEN gap IS NULL OR gap > 1800 * 1000000 THEN 1 ELSE 0 END)
+           OVER (PARTITION BY user_id ORDER BY ts_us, event_id)::BIGINT AS session_idx
+  FROM w
+)
+SELECT user_id, session_idx, count(*) AS n_events,
+       min(ts_us)::BIGINT AS start_epoch, max(ts_us)::BIGINT AS end_epoch
+FROM s GROUP BY 1, 2
+""")
 def q_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
@@ -468,6 +664,23 @@ def q_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register("embedding_knn", """
+WITH q AS (
+  SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0
+),
+scored AS (
+  SELECT e.vec_id,
+    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 64),
+        i -> (e.embedding[i]::DOUBLE) * (q.qv[i]))), (a, x) -> a + x)
+    / (sqrt(list_reduce(list_prepend(0.0, list_transform(generate_series(1, 64),
+        i -> (e.embedding[i]::DOUBLE) * (e.embedding[i]::DOUBLE))), (a, x) -> a + x))
+     * sqrt(list_reduce(list_prepend(0.0, list_transform(generate_series(1, 64),
+        i -> q.qv[i] * q.qv[i])), (a, x) -> a + x))) AS cos_raw
+  FROM embeddings e, q WHERE e.vec_id <> 0
+)
+SELECT vec_id, round(cos_raw, 4) AS cosine
+FROM scored ORDER BY cosine DESC, vec_id ASC LIMIT 10
+""")
 def q_embedding_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -492,251 +705,5 @@ def q_embedding_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# registry + oracle SQL
-# ---------------------------------------------------------------------------
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "mentions": q_mentions,
-    "entities": q_entities,
-    "comention_edges": q_comention_edges,
-    "exact_dedup": q_exact_dedup,
-    "iso_dates": q_iso_dates,
-    "relative_dates": q_relative_dates,
-    "claims": q_claims,
-    "text_quality_flags": q_text_quality_flags,
-    "lang_script_counts": q_lang_script_counts,
-    "doc_fingerprint": q_doc_fingerprint,
-    "token_stats": q_token_stats,
-    "pricing_summary": q_pricing_summary,
-    "top_orders_per_customer": q_top_orders_per_customer,
-    "customer_nation_rollup": q_customer_nation_rollup,
-    "event_sessions": q_event_sessions,
-    "embedding_knn": q_embedding_knn,
-}
-
-ORACLE_SQL: dict[str, str] = {
-    "mentions": _MENTIONS_CTE + "SELECT doc_id, entity_text FROM mentions",
-    "entities": _MENTIONS_CTE
-    + f"""
-, valid AS (
-  SELECT doc_id, entity_text FROM mentions WHERE {_VALID_SQL}
-)
-SELECT lower(entity_text) AS name_lower,
-       'PERSON' AS entity_type,
-       count(*) AS mention_count,
-       count(DISTINCT doc_id) AS doc_count
-FROM valid GROUP BY 1, 2
-""",
-    "comention_edges": _MENTIONS_CTE
-    + f"""
-, valid AS (
-  SELECT doc_id, entity_text FROM mentions WHERE {_VALID_SQL}
-),
-pairs AS (
-  SELECT DISTINCT doc_id, lower(entity_text) AS name FROM valid
-)
-SELECT a.name AS entity_a, b.name AS entity_b,
-       count(DISTINCT a.doc_id) AS co_occurrence_count,
-       least(1.0, count(DISTINCT a.doc_id) / 10.0) AS weight
-FROM pairs a JOIN pairs b ON a.doc_id = b.doc_id AND a.name < b.name
-GROUP BY 1, 2
-HAVING count(DISTINCT a.doc_id) >= 2
-ORDER BY co_occurrence_count DESC, entity_a, entity_b
-LIMIT 1000
-""",
-    "exact_dedup": """
-SELECT sha256(text) AS checksum, count(*) AS n_copies, min(doc_id) AS keeper_doc_id
-FROM documents GROUP BY 1
-""",
-    "iso_dates": f"""
-WITH t AS (
-  SELECT doc_id, text || {_DATE_SUFFIX_SQL} AS t FROM documents
-),
-hits AS (
-  SELECT doc_id, unnest(regexp_extract_all(t, '\\b(\\d{{4}})-(\\d{{2}})-(\\d{{2}})\\b')) AS date_text
-  FROM t
-)
-SELECT doc_id, date_text,
-       CAST(try_strptime(date_text, '%Y-%m-%d') AS DATE) AS normalized_date,
-       0.8::DOUBLE AS confidence, 'absolute' AS date_type
-FROM hits
-WHERE try_strptime(date_text, '%Y-%m-%d') IS NOT NULL
-""",
-    "relative_dates": """
-WITH t AS (
-  SELECT doc_id, text || ' ' ||
-    CASE doc_id % 4 WHEN 0 THEN 'seen yesterday' WHEN 1 THEN 'noted last week'
-                    WHEN 2 THEN 'logged 3 days ago' ELSE 'unchanged' END AS t
-  FROM documents
-),
-hits AS (
-  SELECT doc_id, unnest(regexp_extract_all(t,
-    '(?i)\\b(yesterday|today|tomorrow)\\b|\\b(last|next) (week|month|year)\\b|\\b(\\d+) (days?|weeks?|months?|years?) ago\\b'
-  )) AS date_text
-  FROM t
-)
-SELECT doc_id, date_text, 0.7::DOUBLE AS confidence, 'relative' AS date_type FROM hits
-""",
-    "claims": f"""
-WITH cased AS (
-  SELECT doc_id, {_cased_sql("replace(text, ' the ', '. The ')")} AS t FROM documents
-),
-sentences AS (
-  SELECT doc_id, g.i AS i,
-         trim(parts[g.i], ' ' || chr(9) || chr(10) || chr(13)) AS s
-  FROM (
-    SELECT doc_id,
-           string_split(regexp_replace(t, '([.!?])\\s+([A-Z])', '\\1' || chr(1) || '\\2', 'g'), chr(1)) AS parts
-    FROM cased
-  ), LATERAL (SELECT unnest(generate_series(1, len(parts))) AS i) g
-),
-kept AS (
-  SELECT doc_id, i, s,
-         row_number() OVER (PARTITION BY doc_id ORDER BY i) AS rk
-  FROM sentences
-  WHERE s <> ''
-    AND len(string_split_regex(s, '\\s+')) >= 5
-    AND NOT ends_with(rtrim(s), '?')
-    AND NOT (starts_with(s, '-') OR starts_with(s, '*') OR starts_with(s, '#'))
-)
-SELECT doc_id, substr(s, 1, 1000) AS claim_text, 0.5::DOUBLE AS confidence
-FROM kept WHERE rk <= 100
-""",
-    "text_quality_flags": """
-WITH base AS (
-  SELECT doc_id,
-         len(regexp_extract_all(text, '\\S+'))::BIGINT AS word_count,
-         length(text)::BIGINT AS char_count,
-         length(regexp_replace(text, '[^\\p{L}]', '', 'g'))::BIGINT AS letter_count,
-         length(regexp_replace(text, '[^0-9]', '', 'g'))::BIGINT AS digit_count,
-         regexp_extract_all(text, '\\S+') AS words
-  FROM documents
-),
-per_word AS (
-  SELECT doc_id, word_count, char_count, letter_count, digit_count, w.word AS word, count(*) AS wn
-  FROM base, LATERAL (SELECT unnest(words) AS word) w
-  GROUP BY 1,2,3,4,5,6
-),
-agg AS (
-  SELECT doc_id, word_count, char_count, letter_count, digit_count, max(wn) AS top_word_n
-  FROM per_word GROUP BY 1,2,3,4,5
-)
-SELECT doc_id, word_count, char_count, letter_count, digit_count,
-       digit_count::DOUBLE / char_count > 0.5 AS mostly_numbers,
-       letter_count::DOUBLE / char_count < 0.3 AS low_letter_ratio,
-       top_word_n::DOUBLE / word_count > 0.3 AS repetitive_words
-FROM agg
-""",
-    "lang_script_counts": """
-WITH c AS (
-  SELECT doc_id,
-    length(regexp_replace(text, '[^A-Za-z\\x{00C0}-\\x{024F}]', '', 'g'))::BIGINT AS latin_n,
-    length(regexp_replace(text, '[^\\x{0400}-\\x{04FF}]', '', 'g'))::BIGINT AS cyrillic_n,
-    length(regexp_replace(text, '[^\\x{0600}-\\x{06FF}]', '', 'g'))::BIGINT AS arabic_n,
-    length(regexp_replace(text, '[^\\x{4E00}-\\x{9FFF}\\x{3040}-\\x{30FF}]', '', 'g'))::BIGINT AS cjk_n
-  FROM documents
-)
-SELECT doc_id, latin_n, cyrillic_n, arabic_n, cjk_n,
-       CASE WHEN latin_n >= greatest(cyrillic_n, arabic_n, cjk_n) THEN 'en'
-            WHEN cyrillic_n >= greatest(arabic_n, cjk_n) THEN 'ru'
-            WHEN arabic_n >= cjk_n THEN 'ar' ELSE 'zh' END AS lang_guess
-FROM c
-""",
-    "doc_fingerprint": f"""
-SELECT doc_id,
-       list_reduce(
-         list_prepend(0::BIGINT,
-           list_transform(generate_series(1, length(text)), i -> unicode(substr(text, i, 1))::BIGINT)),
-         (acc, c) -> (acc * 31 + c) % {_FP_MOD}
-       ) AS fingerprint
-FROM documents
-""",
-    "token_stats": """
-SELECT doc_id,
-       len(regexp_extract_all(text, '\\S+'))::BIGINT AS ws_tokens,
-       len(regexp_extract_all(text, '[a-z]+|[A-Z][a-z]*|[0-9]+|[^A-Za-z0-9\\s]'))::BIGINT AS bpe_tokens
-FROM documents
-""",
-    "pricing_summary": """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2) AS sum_qty,
-       round(sum(l_extendedprice), 2) AS sum_base_price,
-       round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS sum_disc_price,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= '2098-12-01'
-GROUP BY 1, 2
-""",
-    "top_orders_per_customer": """
-SELECT o_custkey, o_orderkey, o_totalprice, rk FROM (
-  SELECT o_custkey, o_orderkey, o_totalprice,
-         row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC)::BIGINT AS rk
-  FROM orders
-) WHERE rk <= 3
-""",
-    "customer_nation_rollup": """
-SELECT r_name, n_name, count(*) AS n_customers, round(sum(c_acctbal), 2) AS total_acctbal
-FROM customer
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY 1, 2
-""",
-    "event_sessions": """
-WITH base AS (
-  SELECT user_id, event_id,
-         datediff('microseconds', TIMESTAMP '2024-01-01 00:00:00', ts) AS ts_us
-  FROM events
-),
-w AS (
-  SELECT user_id, event_id, ts_us,
-         ts_us - lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS gap
-  FROM base
-),
-s AS (
-  SELECT user_id, ts_us,
-         sum(CASE WHEN gap IS NULL OR gap > 1800 * 1000000 THEN 1 ELSE 0 END)
-           OVER (PARTITION BY user_id ORDER BY ts_us, event_id)::BIGINT AS session_idx
-  FROM w
-)
-SELECT user_id, session_idx, count(*) AS n_events,
-       min(ts_us)::BIGINT AS start_epoch, max(ts_us)::BIGINT AS end_epoch
-FROM s GROUP BY 1, 2
-""",
-    "embedding_knn": """
-WITH q AS (
-  SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0
-),
-scored AS (
-  SELECT e.vec_id,
-    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 64),
-        i -> (e.embedding[i]::DOUBLE) * (q.qv[i]))), (a, x) -> a + x)
-    / (sqrt(list_reduce(list_prepend(0.0, list_transform(generate_series(1, 64),
-        i -> (e.embedding[i]::DOUBLE) * (e.embedding[i]::DOUBLE))), (a, x) -> a + x))
-     * sqrt(list_reduce(list_prepend(0.0, list_transform(generate_series(1, 64),
-        i -> q.qv[i] * q.qv[i])), (a, x) -> a + x))) AS cos_raw
-  FROM embeddings e, q WHERE e.vec_id <> 0
-)
-SELECT vec_id, round(cos_raw, 4) AS cosine
-FROM scored ORDER BY cosine DESC, vec_id ASC LIMIT 10
-""",
-}
-
-
-# merge the extended registry (search / near-dup / simhash / anomalies /
-# timeline / relations); import at module bottom so queries_ext can import
-# the shared helpers above without a circular-init problem
-from .queries_ext import ORACLE_EXT, QUERIES_EXT  # noqa: E402
-
-QUERIES.update(QUERIES_EXT)
-ORACLE_SQL.update(ORACLE_EXT)
-
-from .queries_ext2 import ORACLE_EXT2, QUERIES_EXT2  # noqa: E402
-
-QUERIES.update(QUERIES_EXT2)
-ORACLE_SQL.update(ORACLE_EXT2)
-
-from .queries_ext3 import ORACLE_EXT3, QUERIES_EXT3  # noqa: E402
-
-QUERIES.update(QUERIES_EXT3)
-ORACLE_SQL.update(ORACLE_EXT3)
+# the extension modules register their parts on import (see the docstring)
+from . import queries_ext  # noqa: E402,F401

@@ -9,7 +9,6 @@ the derivation is identical SQL/DataFrame logic on both engines.
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from typing import Iterator
 
 import pandas as pd
@@ -17,7 +16,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType,
-    DoubleType,
     LongType,
     StringType,
     StructField,
@@ -25,10 +23,11 @@ from pyspark.sql.types import (
 )
 
 
+from .queries import ORACLE_SQL, _MENTIONS_CTE, _cased_spark, _load, register
 from .operators.dedup import ngram_jaccard_pairs, verified_neardup_pairs
+from .operators.spans import _explode_per_doc
 from .operators.spread import spread as _spread
 from .operators.timeline import extract_timeline_events
-from .queries import _cased_spark, _cased_sql, _load
 from .reference_impl.ner import mock_ner
 
 BM25_TERMS = ["customer", "spark", "window"]
@@ -39,131 +38,10 @@ _STOP = (
 )
 
 
-# --- near-dup derived corpus (anchor-join), identical on both engines -------
-
-
-def _neardup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _load(spark, sf_dir, "documents").select("doc_id", "text")
-    anchors = d.select(
-        F.col("doc_id").alias("anchor_id"), F.col("text").alias("anchor_text")
-    )
-    return (
-        d.withColumn("anchor_id", F.col("doc_id") - F.col("doc_id") % 10)
-        .join(anchors, "anchor_id")
-        .select(
-            "doc_id",
-            F.concat(
-                F.col("anchor_text"),
-                F.format_string(" marker%d tail", (F.col("doc_id") % 3).cast("int")),
-            ).alias("text"),
-        )
-    )
-
-
-_NEARDUP_CTE = """
-WITH nd AS (
-  SELECT d.doc_id,
-         a.text || printf(' marker%d tail', (d.doc_id % 3)::INT) AS text
-  FROM documents d
-  JOIN documents a ON a.doc_id = d.doc_id - d.doc_id % 10
-),
-sh AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           generate_series(1, greatest(len(ws) - 2, 1)),
-           i -> array_to_string(list_slice(ws, i, i + 2), ' ')))) AS shingle
-  FROM (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS ws FROM nd)
-  WHERE len(ws) > 0
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-shared AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT s.id_a, s.id_b,
-       s.n_shared::DOUBLE / (sa.sz + sb.sz - s.n_shared) AS jaccard
-FROM shared s
-JOIN sizes sa ON sa.doc_id = s.id_a
-JOIN sizes sb ON sb.doc_id = s.id_b
-WHERE s.n_shared::DOUBLE / (sa.sz + sb.sz - s.n_shared) >= {thr}
-"""
-
-
-def q_neardup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ngram_jaccard_pairs(_neardup_docs(spark, sf_dir), threshold=0.8)
-
-
-# capped variant: every doc carries a constant boilerplate footer (a planted
-# corpus-wide hot shingle, df = n_docs); df_cap=30 must drop exactly those
-# shingles from intersection AND sizes on both engines
-_CAPPED_FOOTER = " common boilerplate footer shared"
-
-
-def q_neardup_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the df-cap gate needs the planted hot shingle, not the whole corpus:
-    # doc_id < 1500 bounds this part at large SF (covers ALL of sf<=0.01
-    # — 500 docs — and 30% of sf0.1) so the ENTRY doesn't pay the brute
-    # O(shared-shingle^2) join twice; the uncapped part above stays
-    # full-corpus as the honest oracle lane. The cap property being
-    # gated (hot shingles dropped from candidate generation, exact over
-    # the df-filtered universe) is id-independent.
-    docs = (
-        _neardup_docs(spark, sf_dir)
-        .where(F.col("doc_id") < 1500)
-        .select(
-            "doc_id",
-            F.concat(F.col("text"), F.lit(_CAPPED_FOOTER)).alias("text"),
-        )
-    )
-    return ngram_jaccard_pairs(docs, threshold=0.8, df_cap=30)
-
-
-_NEARDUP_CAPPED_SQL = """
-WITH nd AS (
-  SELECT d.doc_id,
-         a.text || printf(' marker%d tail', (d.doc_id % 3)::INT)
-                || ' common boilerplate footer shared' AS text
-  FROM documents d
-  JOIN documents a ON a.doc_id = d.doc_id - d.doc_id % 10
-  WHERE d.doc_id < 1500
-),
-sh AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           generate_series(1, greatest(len(ws) - 2, 1)),
-           i -> array_to_string(list_slice(ws, i, i + 2), ' ')))) AS shingle
-  FROM (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS ws FROM nd)
-  WHERE len(ws) > 0
-),
-dfreq AS (SELECT shingle, count(*) AS df FROM sh GROUP BY 1),
-kept AS (
-  SELECT s.doc_id, s.shingle FROM sh s JOIN dfreq f USING (shingle)
-  WHERE f.df <= 30
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM kept GROUP BY 1),
-shared AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
-  FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT s.id_a, s.id_b,
-       s.n_shared::DOUBLE / (sa.sz + sb.sz - s.n_shared) AS jaccard
-FROM shared s
-JOIN sizes sa ON sa.doc_id = s.id_a
-JOIN sizes sb ON sb.doc_id = s.id_b
-WHERE s.n_shared::DOUBLE / (sa.sz + sb.sz - s.n_shared) >= 0.8
-"""
-
-
-def q_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH + exact-Jaccard verification; equals brute force with miss
-    probability (1−0.8⁴)³² ≈ 5e−8 per true pair, so the brute-force SQL is a
-    valid oracle."""
-    return verified_neardup_pairs(_neardup_docs(spark, sf_dir), threshold=0.8)
-
-
 # --- reference-faithful BM25 (keyword.py quirks preserved) -------------------
 
 
+@register("bm25_search", None)  # oracle below
 def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 with the reference engine's exact corpus-stat quirks
     (keyword.py:166-213, 294-338): avgdl = AVG(LENGTH(text)) in CHARS over
@@ -269,6 +147,132 @@ scored AS (
 )
 SELECT doc_id, round(raw / (SELECT max(raw) FROM scored), 6) AS score FROM scored
 """
+ORACLE_SQL["bm25_search"] = _BM25_SQL
+
+
+# --- near-dup derived corpus (anchor-join), identical on both engines -------
+
+
+def _neardup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = _load(spark, sf_dir, "documents").select("doc_id", "text")
+    anchors = d.select(
+        F.col("doc_id").alias("anchor_id"), F.col("text").alias("anchor_text")
+    )
+    return (
+        d.withColumn("anchor_id", F.col("doc_id") - F.col("doc_id") % 10)
+        .join(anchors, "anchor_id")
+        .select(
+            "doc_id",
+            F.concat(
+                F.col("anchor_text"),
+                F.format_string(" marker%d tail", (F.col("doc_id") % 3).cast("int")),
+            ).alias("text"),
+        )
+    )
+
+
+_NEARDUP_CTE = """
+WITH nd AS (
+  SELECT d.doc_id,
+         a.text || printf(' marker%d tail', (d.doc_id % 3)::INT) AS text
+  FROM documents d
+  JOIN documents a ON a.doc_id = d.doc_id - d.doc_id % 10
+),
+sh AS (
+  SELECT doc_id, unnest(list_distinct(list_transform(
+           generate_series(1, greatest(len(ws) - 2, 1)),
+           i -> array_to_string(list_slice(ws, i, i + 2), ' ')))) AS shingle
+  FROM (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS ws FROM nd)
+  WHERE len(ws) > 0
+),
+sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
+shared AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
+  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+)
+SELECT s.id_a, s.id_b,
+       s.n_shared::DOUBLE / (sa.sz + sb.sz - s.n_shared) AS jaccard
+FROM shared s
+JOIN sizes sa ON sa.doc_id = s.id_a
+JOIN sizes sb ON sb.doc_id = s.id_b
+WHERE s.n_shared::DOUBLE / (sa.sz + sb.sz - s.n_shared) >= {thr}
+"""
+
+
+@register("neardup_jaccard", _NEARDUP_CTE.format(thr=0.8))
+def q_neardup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return ngram_jaccard_pairs(_neardup_docs(spark, sf_dir), threshold=0.8)
+
+
+# capped variant: every doc carries a constant boilerplate footer (a planted
+# corpus-wide hot shingle, df = n_docs); df_cap=30 must drop exactly those
+# shingles from intersection AND sizes on both engines
+_CAPPED_FOOTER = " common boilerplate footer shared"
+
+
+@register("neardup_jaccard_capped", None)  # oracle below
+def q_neardup_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # the df-cap gate needs the planted hot shingle, not the whole corpus:
+    # doc_id < 1500 bounds this part at large SF (covers ALL of sf<=0.01
+    # — 500 docs — and 30% of sf0.1) so the ENTRY doesn't pay the brute
+    # O(shared-shingle^2) join twice; the uncapped part above stays
+    # full-corpus as the honest oracle lane. The cap property being
+    # gated (hot shingles dropped from candidate generation, exact over
+    # the df-filtered universe) is id-independent.
+    docs = (
+        _neardup_docs(spark, sf_dir)
+        .where(F.col("doc_id") < 1500)
+        .select(
+            "doc_id",
+            F.concat(F.col("text"), F.lit(_CAPPED_FOOTER)).alias("text"),
+        )
+    )
+    return ngram_jaccard_pairs(docs, threshold=0.8, df_cap=30)
+
+
+ORACLE_SQL["neardup_jaccard_capped"] = """
+WITH nd AS (
+  SELECT d.doc_id,
+         a.text || printf(' marker%d tail', (d.doc_id % 3)::INT)
+                || ' common boilerplate footer shared' AS text
+  FROM documents d
+  JOIN documents a ON a.doc_id = d.doc_id - d.doc_id % 10
+  WHERE d.doc_id < 1500
+),
+sh AS (
+  SELECT doc_id, unnest(list_distinct(list_transform(
+           generate_series(1, greatest(len(ws) - 2, 1)),
+           i -> array_to_string(list_slice(ws, i, i + 2), ' ')))) AS shingle
+  FROM (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS ws FROM nd)
+  WHERE len(ws) > 0
+),
+dfreq AS (SELECT shingle, count(*) AS df FROM sh GROUP BY 1),
+kept AS (
+  SELECT s.doc_id, s.shingle FROM sh s JOIN dfreq f USING (shingle)
+  WHERE f.df <= 30
+),
+sizes AS (SELECT doc_id, count(*) AS sz FROM kept GROUP BY 1),
+shared AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
+  FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+)
+SELECT s.id_a, s.id_b,
+       s.n_shared::DOUBLE / (sa.sz + sb.sz - s.n_shared) AS jaccard
+FROM shared s
+JOIN sizes sa ON sa.doc_id = s.id_a
+JOIN sizes sb ON sb.doc_id = s.id_b
+WHERE s.n_shared::DOUBLE / (sa.sz + sb.sz - s.n_shared) >= 0.8
+"""
+
+
+@register("minhash_lsh_neardup", _NEARDUP_CTE.format(thr=0.8))
+def q_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash-LSH + exact-Jaccard verification; equals brute force with miss
+    probability (1−0.8⁴)³² ≈ 5e−8 per true pair, so the brute-force SQL is a
+    valid oracle."""
+    return verified_neardup_pairs(_neardup_docs(spark, sf_dir), threshold=0.8)
 
 
 # --- simhash (md5 token hash so both engines agree) --------------------------
@@ -276,6 +280,7 @@ SELECT doc_id, round(raw / (SELECT max(raw) FROM scored), 6) AS score FROM score
 N_SIMHASH_BITS = 16  # demo width: 16 md5-derived bits (operator supports 64)
 
 
+@register("simhash_fingerprint", None)  # oracle below
 def q_simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _spread(_load(spark, sf_dir, "documents"), "doc_id")
     toks = docs.select(
@@ -316,11 +321,13 @@ SELECT doc_id,
        sum(CASE WHEN s > 0 THEN (1::BIGINT << i) ELSE 0 END)::BIGINT AS simhash
 FROM bits GROUP BY 1
 """
+ORACLE_SQL["simhash_fingerprint"] = _SIMHASH_SQL
 
 
 # --- anomalies / timeline / relations / red flags ---------------------------
 
 
+@register("zscore_len_anomaly", None)  # oracle below
 def q_zscore_len_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """detect_statistical_anomalies over the reference's exact five text
     stats (detector.py:139-209, 384-395) with the _calculate_severity
@@ -334,7 +341,7 @@ def q_zscore_len_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ZSCORE_SQL = """
+ORACLE_SQL["zscore_len_anomaly"] = """
 WITH m AS (
   SELECT doc_id,
          len(list_filter(string_split_regex(text, '[\\s\\p{Z}\\x{0085}]+'),
@@ -399,6 +406,7 @@ def _tl_case_sql(expr: str) -> str:
     )
 
 
+@register("timeline_events", None)  # oracle below
 def q_timeline_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     phr = F.array(*[F.lit(p) for p in _TL_PHRASES])
     docs = _load(spark, sf_dir, "documents").select(
@@ -560,8 +568,33 @@ UNION ALL SELECT * FROM num_ok WHERE date_start IS NOT NULL
 UNION ALL SELECT * FROM approx_ok WHERE date_start IS NOT NULL
 UNION ALL SELECT * FROM prd_ok WHERE date_start IS NOT NULL
 """
+ORACLE_SQL["timeline_events"] = _TIMELINE_SQL
 
 
+# relations oracle: mentions islands + ordered pair join, conf 0.5
+_RELATIONS_SQL = (
+    _MENTIONS_CTE.replace(
+        "SELECT r.doc_id, string_agg(r.w, ' ' ORDER BY r.pos) AS entity_text",
+        "SELECT r.doc_id, string_agg(r.w, ' ' ORDER BY r.pos) AS entity_text,\n         a.start_pos AS mpos",
+    )
+    + """
+, ordered AS (
+  SELECT doc_id, entity_text,
+         row_number() OVER (PARTITION BY doc_id ORDER BY mpos) AS idx
+  FROM mentions
+)
+SELECT m1.doc_id,
+       m1.entity_text AS source_text,
+       m2.entity_text AS target_text,
+       'co_occurrence' AS relation_type,
+       0.5::DOUBLE AS confidence
+FROM ordered m1
+JOIN ordered m2 ON m1.doc_id = m2.doc_id AND m1.idx < m2.idx
+"""
+)
+
+
+@register("relations_cooccur", _RELATIONS_SQL)
 def q_relations_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E5 relations on the mock-NER path: degenerate 0/0 offsets → every
     mention pair in document order becomes co_occurrence conf 0.5
@@ -621,6 +654,12 @@ def q_relations_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register("red_flag_scan", """
+SELECT doc_id,
+       len(regexp_extract_all(text, '\\b(slow|merge|vector)\\b'))::BIGINT AS n_flags,
+       len(regexp_extract_all(text, '\\b(slow|merge|vector)\\b')) > 3 AS flagged
+FROM documents
+""")
 def q_red_flag_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 pattern scan (detector.py:211-319 rlike heuristics) with flags from
     the corpus vocabulary."""
@@ -634,63 +673,23 @@ def q_red_flag_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "bm25_search": q_bm25_search,
-    "neardup_jaccard": q_neardup_jaccard,
-    "neardup_jaccard_capped": q_neardup_jaccard_capped,
-    "minhash_lsh_neardup": q_minhash_lsh_neardup,
-    "simhash_fingerprint": q_simhash_fingerprint,
-    "zscore_len_anomaly": q_zscore_len_anomaly,
-    "timeline_events": q_timeline_events,
-    "relations_cooccur": q_relations_cooccur,
-    "red_flag_scan": q_red_flag_scan,
-}
-
-ORACLE_EXT: dict[str, str] = {
-    "bm25_search": _BM25_SQL,
-    "neardup_jaccard": _NEARDUP_CTE.format(thr=0.8),
-    "neardup_jaccard_capped": _NEARDUP_CAPPED_SQL,
-    "minhash_lsh_neardup": _NEARDUP_CTE.format(thr=0.8),
-    "simhash_fingerprint": _SIMHASH_SQL,
-    "zscore_len_anomaly": _ZSCORE_SQL,
-    "timeline_events": _TIMELINE_SQL,
-    "red_flag_scan": """
-SELECT doc_id,
-       len(regexp_extract_all(text, '\\b(slow|merge|vector)\\b'))::BIGINT AS n_flags,
-       len(regexp_extract_all(text, '\\b(slow|merge|vector)\\b')) > 3 AS flagged
-FROM documents
-""",
-    "relations_cooccur": None,  # filled below (needs the mentions islands CTE)
-}
-
-# relations oracle: mentions islands + ordered pair join, conf 0.5
-from .queries import _MENTIONS_CTE  # noqa: E402
-
-ORACLE_EXT["relations_cooccur"] = (
-    _MENTIONS_CTE.replace(
-        "SELECT r.doc_id, string_agg(r.w, ' ' ORDER BY r.pos) AS entity_text",
-        "SELECT r.doc_id, string_agg(r.w, ' ' ORDER BY r.pos) AS entity_text,\n         a.start_pos AS mpos",
-    )
-    + """
-, ordered AS (
-  SELECT doc_id, entity_text,
-         row_number() OVER (PARTITION BY doc_id ORDER BY mpos) AS idx
-  FROM mentions
-)
-SELECT m1.doc_id,
-       m1.entity_text AS source_text,
-       m2.entity_text AS target_text,
-       'co_occurrence' AS relation_type,
-       0.5::DOUBLE AS confidence
-FROM ordered m1
-JOIN ordered m2 ON m1.doc_id = m2.doc_id AND m1.idx < m2.idx
-"""
-)
-
-
 # --- C1 fixed chunking with a pure-SQL oracle --------------------------------
 
 
+@register("chunk_fixed", """
+WITH starts AS (
+  SELECT doc_id, text, g.i AS idx, (g.i * 80)::BIGINT AS start
+  FROM documents,
+       LATERAL (SELECT unnest(generate_series(0, (length(text) - 1) // 80)) AS i) g
+  WHERE g.i * 80 < length(text)
+)
+SELECT doc_id, idx::BIGINT AS chunk_index,
+       substr(text, start + 1, 100) AS chunk_text,
+       start AS char_start,
+       least(start + 100, length(text))::BIGINT AS char_end,
+       len(regexp_extract_all(substr(text, start + 1, 100), '\\S+'))::BIGINT AS token_count
+FROM starts
+""")
 def q_chunk_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C1 fixed chunker (chunker.py:64-110) at size=100/overlap=20 over the
     documents table; the oracle reproduces the window arithmetic in SQL."""
@@ -707,47 +706,27 @@ def q_chunk_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("token_count", LongType(), False),
         ]
     )
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, t in zip(pdf["doc_id"].tolist(), pdf["text"].tolist()):
-                for c in chunk_fixed(t or "", chunk_size=100, overlap=20):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "chunk_index": c["chunk_index"],
-                            "chunk_text": c["text"],
-                            "char_start": c["char_start"],
-                            "char_end": c["char_end"],
-                            "token_count": c["token_count"],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    return _spread(docs, "doc_id").mapInPandas(_run, schema)
-
-
-QUERIES_EXT["chunk_fixed"] = q_chunk_fixed
-ORACLE_EXT["chunk_fixed"] = """
-WITH starts AS (
-  SELECT doc_id, text, g.i AS idx, (g.i * 80)::BIGINT AS start
-  FROM documents,
-       LATERAL (SELECT unnest(generate_series(0, (length(text) - 1) // 80)) AS i) g
-  WHERE g.i * 80 < length(text)
-)
-SELECT doc_id, idx::BIGINT AS chunk_index,
-       substr(text, start + 1, 100) AS chunk_text,
-       start AS char_start,
-       least(start + 100, length(text))::BIGINT AS char_end,
-       len(regexp_extract_all(substr(text, start + 1, 100), '\\S+'))::BIGINT AS token_count
-FROM starts
-"""
+    return _explode_per_doc(
+        _spread(docs, "doc_id"),
+        lambda t: [
+            {**c, "chunk_text": c["text"]}
+            for c in chunk_fixed(t, chunk_size=100, overlap=20)
+        ],
+        schema,
+    )
 
 
 # --- E15 node degrees + Q3 hybrid search --------------------------------------
 
 
+@register("edge_degrees", f"""
+WITH edges AS ({ORACLE_SQL["comention_edges"]})
+SELECT entity_name, count(*)::BIGINT AS degree FROM (
+  SELECT entity_a AS entity_name FROM edges
+  UNION ALL
+  SELECT entity_b AS entity_name FROM edges
+) GROUP BY 1
+""")
 def q_edge_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Node degrees over the co-mention edge list (builder.py:439-456)."""
     from .operators.edges import node_degrees
@@ -757,6 +736,26 @@ def q_edge_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     return node_degrees(edges).withColumnRenamed("name", "entity_name")
 
 
+@register("hybrid_search", f"""
+WITH kw AS ({_BM25_SQL}),
+sem AS (
+  SELECT e.vec_id AS doc_id,
+    round(
+      list_reduce(list_prepend(0.0, list_transform(generate_series(1, 64),
+          i -> (e.embedding[i]::DOUBLE) * (q.qv[i]))), (a, x) -> a + x)
+      / (sqrt(list_reduce(list_prepend(0.0, list_transform(generate_series(1, 64),
+          i -> (e.embedding[i]::DOUBLE) * (e.embedding[i]::DOUBLE))), (a, x) -> a + x))
+       * sqrt(list_reduce(list_prepend(0.0, list_transform(generate_series(1, 64),
+          i -> q.qv[i] * q.qv[i])), (a, x) -> a + x))), 6) AS score
+  FROM embeddings e, (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0) q
+  WHERE e.vec_id <> 0
+)
+SELECT coalesce(sem.doc_id, kw.doc_id) AS doc_id,
+       coalesce(sem.score, 0.0) * 0.5 + coalesce(kw.score, 0.0) * 0.5 AS hybrid_score,
+       coalesce(sem.score, 0.0) AS semantic_score,
+       coalesce(kw.score, 0.0) AS keyword_score
+FROM sem FULL OUTER JOIN kw ON sem.doc_id = kw.doc_id
+""")
 def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q3 hybrid merge (hybrid.py:51-81): keyword BM25 over documents +
     semantic cosine over embeddings (vec_id ≡ doc_id pairing), weights for
@@ -790,37 +789,4 @@ def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merged.select("doc_id", "hybrid_score", "semantic_score", "keyword_score")
 
 
-QUERIES_EXT["edge_degrees"] = q_edge_degrees
-QUERIES_EXT["hybrid_search"] = q_hybrid_search
-
-from .queries import ORACLE_SQL as _BASE_ORACLES  # noqa: E402
-
-ORACLE_EXT["edge_degrees"] = f"""
-WITH edges AS ({_BASE_ORACLES["comention_edges"]})
-SELECT entity_name, count(*)::BIGINT AS degree FROM (
-  SELECT entity_a AS entity_name FROM edges
-  UNION ALL
-  SELECT entity_b AS entity_name FROM edges
-) GROUP BY 1
-"""
-
-ORACLE_EXT["hybrid_search"] = f"""
-WITH kw AS ({_BM25_SQL}),
-sem AS (
-  SELECT e.vec_id AS doc_id,
-    round(
-      list_reduce(list_prepend(0.0, list_transform(generate_series(1, 64),
-          i -> (e.embedding[i]::DOUBLE) * (q.qv[i]))), (a, x) -> a + x)
-      / (sqrt(list_reduce(list_prepend(0.0, list_transform(generate_series(1, 64),
-          i -> (e.embedding[i]::DOUBLE) * (e.embedding[i]::DOUBLE))), (a, x) -> a + x))
-       * sqrt(list_reduce(list_prepend(0.0, list_transform(generate_series(1, 64),
-          i -> q.qv[i] * q.qv[i])), (a, x) -> a + x))), 6) AS score
-  FROM embeddings e, (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0) q
-  WHERE e.vec_id <> 0
-)
-SELECT coalesce(sem.doc_id, kw.doc_id) AS doc_id,
-       coalesce(sem.score, 0.0) * 0.5 + coalesce(kw.score, 0.0) * 0.5 AS hybrid_score,
-       coalesce(sem.score, 0.0) AS semantic_score,
-       coalesce(kw.score, 0.0) AS keyword_score
-FROM sem FULL OUTER JOIN kw ON sem.doc_id = kw.doc_id
-"""
+from . import queries_ext2  # noqa: E402,F401  (next module in the registry chain)

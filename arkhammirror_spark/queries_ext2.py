@@ -11,25 +11,11 @@ float math, round() on computed floats only.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .queries import _cased_spark, _cased_sql, _load
+from .queries import ORACLE_SQL, _cased_spark, _cased_sql, _load, register
+from .operators.spans import _explode_per_doc
 from .operators.spread import spread as _spread
-
-QUERIES_EXT2: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE_EXT2: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES_EXT2[name] = fn
-        if oracle is not None:
-            ORACLE_EXT2[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
@@ -214,7 +200,7 @@ ranked AS (
 )
 SELECT doc_id, source, round(score, 6) AS score FROM ranked WHERE rk <= 3
 """
-ORACLE_EXT2["reranked_search"] = _RERANK_ORACLE
+ORACLE_SQL["reranked_search"] = _RERANK_ORACLE
 
 
 # ---------------------------------------------------------------------------
@@ -314,7 +300,7 @@ FROM w WHERE prev_date IS NOT NULL
 """
 
 
-ORACLE_EXT2["interval_conflicts"] = _tl2_oracle()
+ORACLE_SQL["interval_conflicts"] = _tl2_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -332,10 +318,8 @@ def q_rels_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rels_dedup_oracle() -> str:
-    from .queries_ext import ORACLE_EXT
-
     return f"""
-WITH rels AS ({ORACLE_EXT["relations_cooccur"]})
+WITH rels AS ({ORACLE_SQL["relations_cooccur"]})
 SELECT lower(source_text) AS source_lower,
        lower(target_text) AS target_lower,
        relation_type,
@@ -345,7 +329,7 @@ FROM rels GROUP BY 1, 2, 3
 """
 
 
-ORACLE_EXT2["rels_dedup"] = _rels_dedup_oracle()
+ORACLE_SQL["rels_dedup"] = _rels_dedup_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -380,7 +364,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
 """
 
 
-ORACLE_EXT2["simhash_hamming_pairs"] = _simhash_pairs_oracle()
+ORACLE_SQL["simhash_hamming_pairs"] = _simhash_pairs_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -481,7 +465,7 @@ SELECT * FROM matched UNION ALL SELECT * FROM fuzzy
     )
 
 
-ORACLE_EXT2["linked_mentions"] = _linked_oracle()
+ORACLE_SQL["linked_mentions"] = _linked_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -612,7 +596,7 @@ SELECT id_a, id_b,
 FROM verified
 WHERE negation OR numeric_mismatch
 """
-ORACLE_EXT2["claim_contradictions"] = _CONTRA_ORACLE
+ORACLE_SQL["claim_contradictions"] = _CONTRA_ORACLE
 
 
 # ---------------------------------------------------------------------------
@@ -628,38 +612,13 @@ _COREF_SUFFIX = " later he agreed and she left"
 
 @register("coref_resolutions", None)  # oracle below
 def q_coref_resolutions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from .reference_impl.coreference import resolve_coreferences
-    from .reference_impl.ner import mock_ner
+    from .operators.coref import resolve_coref
 
     docs = _load(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat(_cased_spark(F.col("text")), F.lit(_COREF_SUFFIX)).alias("t"),
     )
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), False),
-            StructField("pronoun", StringType(), False),
-            StructField("resolved_to", StringType(), False),
-        ]
-    )
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, t in zip(pdf["doc_id"].tolist(), pdf["t"].tolist()):
-                res = resolve_coreferences(t or "", mock_ner(t or ""))
-                for pron, ent in res.items():
-                    rows.append(
-                        {"doc_id": doc_id, "pronoun": pron, "resolved_to": ent}
-                    )
-            yield pd.DataFrame(rows, columns=["doc_id", "pronoun", "resolved_to"])
-
-    return _spread(docs, "doc_id").mapInPandas(_run, schema)
+    return resolve_coref(_spread(docs, "doc_id"))
 
 
 def _coref_oracle() -> str:
@@ -704,7 +663,7 @@ WHERE b.rk = 1
     )
 
 
-ORACLE_EXT2["coref_resolutions"] = _coref_oracle()
+ORACLE_SQL["coref_resolutions"] = _coref_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -718,9 +677,6 @@ _C2_SIZE = 120
 
 @register("chunk_sentences", None)  # oracle below
 def q_chunk_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from .reference_impl.chunker import chunk_sentences
@@ -739,25 +695,14 @@ def q_chunk_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("token_count", LongType(), False),
         ]
     )
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, t in zip(pdf["doc_id"].tolist(), pdf["t"].tolist()):
-                for c in chunk_sentences(t or "", chunk_size=_C2_SIZE):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "chunk_index": c["chunk_index"],
-                            "chunk_text": c["text"],
-                            "char_start": c["char_start"],
-                            "char_end": c["char_end"],
-                            "token_count": c["token_count"],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    return _spread(docs, "doc_id").mapInPandas(_run, schema)
+    return _explode_per_doc(
+        _spread(docs, "doc_id"),
+        lambda t: [
+            {**c, "chunk_text": c["text"]}
+            for c in chunk_sentences(t, chunk_size=_C2_SIZE)
+        ],
+        schema,
+    )
 
 
 _C2_ORACLE = f"""
@@ -814,7 +759,7 @@ SELECT doc_id, chunk_index::BIGINT AS chunk_index, chunk_text,
        len(regexp_extract_all(chunk_text, '\\S+'))::BIGINT AS token_count
 FROM emitted
 """
-ORACLE_EXT2["chunk_sentences"] = _C2_ORACLE
+ORACLE_SQL["chunk_sentences"] = _C2_ORACLE
 
 
 # ---------------------------------------------------------------------------
@@ -835,10 +780,8 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cc_oracle() -> str:
-    from .queries import ORACLE_SQL as _BASE
-
     return f"""
-WITH RECURSIVE edges AS ({_BASE["comention_edges"]}),
+WITH RECURSIVE edges AS ({ORACLE_SQL["comention_edges"]}),
 sym AS (
   SELECT entity_a AS src, entity_b AS dst FROM edges
   UNION
@@ -853,7 +796,7 @@ SELECT src AS name, min(dst) AS component FROM reach GROUP BY 1
 """
 
 
-ORACLE_EXT2["graph_components"] = _cc_oracle()
+ORACLE_SQL["graph_components"] = _cc_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -886,8 +829,6 @@ def _pr_oracle() -> str:
     at the last ulp — CLAUDE.md invariant 2). The (1.0-0.85) and 0.85
     factors are written as the same IEEE double expressions Spark folds
     (1.0-0.85 != 0.15 in binary)."""
-    from .queries import ORACLE_SQL as _BASE
-
     # rank expression for iteration t, given integer incoming sum c.inc
     rank_expr = (
         "(1.0::DOUBLE - 0.85::DOUBLE) / nn.n"
@@ -910,7 +851,7 @@ r{t} AS (
 )"""
         prev = f"r{t}"
     return f"""
-WITH edges AS ({_BASE["comention_edges"]}),
+WITH edges AS ({ORACLE_SQL["comention_edges"]}),
 sym AS (
   SELECT entity_a AS src, entity_b AS dst FROM edges
   UNION
@@ -927,7 +868,7 @@ SELECT name, round(rank, 6) AS rank FROM {prev}
 """
 
 
-ORACLE_EXT2["graph_pagerank"] = _pr_oracle()
+ORACLE_SQL["graph_pagerank"] = _pr_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -996,7 +937,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
 
 
-ORACLE_EXT2["embedding_neardup"] = f"""
+ORACLE_SQL["embedding_neardup"] = f"""
 WITH derived AS ({_DERIVED_EMB_SQL})
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
        round({_sql_cos('a.v', 'b.v')}, 6) AS cosine
@@ -1074,7 +1015,7 @@ LIMIT 10
 """
 
 
-ORACLE_EXT2["ann_lsh_topk"] = _ann_lsh_oracle()
+ORACLE_SQL["ann_lsh_topk"] = _ann_lsh_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1181,7 +1122,7 @@ def _values_oracle(rows: list[tuple], cols: list[str]) -> str:
 
 # Constant expected values (deterministic fixtures: pinned zip DOS epoch,
 # gzip mtime=0, static bytes) — regenerate with scripts/fixture_hashes.py
-ORACLE_EXT2["format_extracts"] = _values_oracle(
+ORACLE_SQL["format_extracts"] = _values_oracle(
     [
         ("fx://csv", "en", "743268b229a3daa9462d08755c3d499bf57aeebc0a9d190c1c55fb9a54ab7388"),
         ("fx://docx", "en", "528f720d8b3a733b6d213d0a2e94acca8b77c8b469983af3b7c32eb7ce7f425f"),
@@ -1194,7 +1135,7 @@ ORACLE_EXT2["format_extracts"] = _values_oracle(
     ["url", "lang", "text_sha"],
 )
 
-ORACLE_EXT2["archive_members"] = _values_oracle(
+ORACLE_SQL["archive_members"] = _values_oracle(
     [
         ("fx://tar!t.txt", "t.txt", "e79faaf0a722d0c86d2ded74959c5b9e8738ff276c8d6c8de01d8bf2c2e48817"),
         ("fx://tgz!t.txt", "t.txt", "e79faaf0a722d0c86d2ded74959c5b9e8738ff276c8d6c8de01d8bf2c2e48817"),
@@ -1226,10 +1167,8 @@ def q_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _graph_stats_oracle() -> str:
-    from .queries import ORACLE_SQL as _BASE
-
     return f"""
-WITH edges AS ({_BASE["comention_edges"]}),
+WITH edges AS ({ORACLE_SQL["comention_edges"]}),
 nodes AS (
   SELECT entity_a AS name FROM edges UNION SELECT entity_b FROM edges
 ),
@@ -1245,7 +1184,7 @@ FROM c
 """
 
 
-ORACLE_EXT2["graph_stats"] = _graph_stats_oracle()
+ORACLE_SQL["graph_stats"] = _graph_stats_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1275,10 +1214,8 @@ def q_graph_ego(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ego_oracle() -> str:
-    from .queries import ORACLE_SQL as _BASE
-
     return f"""
-WITH edges AS ({_BASE["comention_edges"]}),
+WITH edges AS ({ORACLE_SQL["comention_edges"]}),
 deg AS (
   SELECT name, count(*) AS degree FROM (
     SELECT entity_a AS name FROM edges UNION ALL SELECT entity_b FROM edges
@@ -1298,7 +1235,7 @@ WHERE entity_a IN (SELECT name FROM seen) AND entity_b IN (SELECT name FROM seen
 """
 
 
-ORACLE_EXT2["graph_ego"] = _ego_oracle()
+ORACLE_SQL["graph_ego"] = _ego_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1345,7 +1282,7 @@ def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT2["warc_ingest"] = _values_oracle(
+ORACLE_SQL["warc_ingest"] = _values_oracle(
     [
         ("https://fx.example/html", "2026-01-02 03:04:05",
          "3effcf663c6d1160ce1973754faac170c74dc840ce991c6f80b3a7113dfc7ee3"),
@@ -1390,7 +1327,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT2["ann_ivf_topk"] = "SELECT 10::BIGINT AS k, true AS recall_ok"
+ORACLE_SQL["ann_ivf_topk"] = "SELECT 10::BIGINT AS k, true AS recall_ok"
 
 
 # ---------------------------------------------------------------------------
@@ -1403,9 +1340,6 @@ ORACLE_EXT2["ann_ivf_topk"] = "SELECT 10::BIGINT AS k, true AS recall_ok"
 def q_chunk_strategy_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C7 paragraph strategy (frame services/chunks.py paragraph splitter)
     over documents with deterministic paragraph breaks injected."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from .reference_impl.frame_chunks import chunk_paragraph
@@ -1421,16 +1355,14 @@ def q_chunk_strategy_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("chunk_text", StringType(), False),
         ]
     )
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, t in zip(pdf["doc_id"].tolist(), pdf["t"].tolist()):
-                for i, (text, _s, _e) in enumerate(chunk_paragraph(t or "", chunk_size=200)):
-                    rows.append({"doc_id": doc_id, "chunk_index": i, "chunk_text": text})
-            yield pd.DataFrame(rows, columns=["doc_id", "chunk_index", "chunk_text"])
-
-    return _spread(docs, "doc_id").mapInPandas(_run, schema)
+    return _explode_per_doc(
+        _spread(docs, "doc_id"),
+        lambda t: [
+            {"chunk_index": i, "chunk_text": text}
+            for i, (text, _s, _e) in enumerate(chunk_paragraph(t, chunk_size=200))
+        ],
+        schema,
+    )
 
 
 _C7_ORACLE = """
@@ -1471,7 +1403,7 @@ SELECT doc_id, cidx::BIGINT, pending FROM (
   FROM pack
 ) WHERE rk = 1
 """
-ORACLE_EXT2["chunk_strategy_paragraph"] = _C7_ORACLE
+ORACLE_SQL["chunk_strategy_paragraph"] = _C7_ORACLE
 
 
 # ---------------------------------------------------------------------------
@@ -1516,7 +1448,7 @@ FROM mentions
     )
 
 
-ORACLE_EXT2["ner_model_mentions"] = _ner_model_oracle()
+ORACLE_SQL["ner_model_mentions"] = _ner_model_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1604,7 +1536,7 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_lines(d, min_chars=10)
 
 
-ORACLE_EXT2["line_dedup"] = """
+ORACLE_SQL["line_dedup"] = """
 WITH derived AS (
   SELECT doc_id,
          printf('block header line for %d', (doc_id - doc_id % 10)::INT)
@@ -1688,7 +1620,7 @@ lower(regexp_extract({u}, '^([A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*)', 1))
     return expr
 
 
-ORACLE_EXT2["canonical_urls"] = f"""
+ORACLE_SQL["canonical_urls"] = f"""
 WITH derived AS (
   SELECT CASE doc_id % 5
     WHEN 0 THEN 'http://' || printf('site%d.example/path/p%d', (doc_id // 5), (doc_id // 5))
@@ -1752,7 +1684,7 @@ def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GQ_WORDS = (
     "list_filter(string_split_regex(text, '\\s+'), w -> length(w) > 0)"
 )
-ORACLE_EXT2["gopher_quality"] = f"""
+ORACLE_SQL["gopher_quality"] = f"""
 WITH derived AS (
   SELECT doc_id,
          CASE doc_id % 4
@@ -1840,7 +1772,7 @@ def q_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
-ORACLE_EXT2["events_rollup"] = """
+ORACLE_SQL["events_rollup"] = """
 SELECT
   CASE WHEN grouping(h) = 0 THEN 'hour'
        WHEN grouping(d) = 0 THEN 'day'
@@ -1890,7 +1822,7 @@ def q_asof_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT2["asof_latest_order"] = """
+ORACLE_SQL["asof_latest_order"] = """
 WITH r AS (
   SELECT o_custkey AS user_id, o_orderdate, max(o_orderkey) AS o_orderkey
   FROM orders GROUP BY 1, 2
@@ -1924,7 +1856,7 @@ def q_range_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(F.col("event_id").alias("pid"), "iid")
 
 
-ORACLE_EXT2["range_window_events"] = """
+ORACLE_SQL["range_window_events"] = """
 WITH ivals AS (
   SELECT user_id, ts AS w_start, ts + INTERVAL 6 HOUR AS w_end,
          event_id AS iid
@@ -1985,7 +1917,7 @@ a{n} AS (
 )"""
 
 
-ORACLE_EXT2["gopher_repetition"] = f"""
+ORACLE_SQL["gopher_repetition"] = f"""
 WITH derived AS (
   SELECT doc_id,
          text || repeat(chr(10) || 'repeated closing line', (doc_id % 3)::INT) AS text
@@ -2069,7 +2001,7 @@ list_filter(regexp_extract_all(text, '{card}'), c ->
       (a, x) -> a + x) % 10 = 0)
 """.replace("{card}", _PII_CARD)
 
-ORACLE_EXT2["pii_scan"] = f"""
+ORACLE_SQL["pii_scan"] = f"""
 WITH derived AS (
   SELECT doc_id,
          text || CASE doc_id % 5
@@ -2148,7 +2080,7 @@ def q_graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.groupBy("community").agg(F.count(F.lit(1)).alias("size"))
 
 
-ORACLE_EXT2["graph_betweenness"] = """
+ORACLE_SQL["graph_betweenness"] = """
 SELECT * FROM (VALUES
   ('n04', 1.552381::DOUBLE, 1),
   ('n12', 1.342857::DOUBLE, 2),
@@ -2163,7 +2095,7 @@ SELECT * FROM (VALUES
 ) AS fx(node, score, rank)
 """
 
-ORACLE_EXT2["graph_communities"] = """
+ORACLE_SQL["graph_communities"] = """
 SELECT * FROM (VALUES
   ('n00', 7::BIGINT),
   ('n04', 6::BIGINT),
@@ -2255,7 +2187,7 @@ def q_webtext_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT2["webtext_prep"] = """
+ORACLE_SQL["webtext_prep"] = """
 SELECT * FROM (VALUES
   ('https://w/a', 461::BIGINT,
    '70e65e4017763669391084cc2d503ac8af88c3a6de4f3b1abebf11309353a174'),
@@ -2318,7 +2250,7 @@ def q_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT2["main_content"] = """
+ORACLE_SQL["main_content"] = """
 SELECT * FROM (VALUES
   ('https://fx/article', 4, 259::BIGINT,
    'ec3367b8351077b14c93e1fa418c0c48403afdbbf918998bed494036818be765'),
@@ -2373,7 +2305,7 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT2["image_features"] = """
+ORACLE_SQL["image_features"] = """
 SELECT * FROM (VALUES
   ('img-png', 12, 8, 0.373815::DOUBLE, 0.177599::DOUBLE, 0.003922::DOUBLE,
    0.745098::DOUBLE, 0.372549::DOUBLE, 0.376471::DOUBLE, 0.479167::DOUBLE,
@@ -2385,14 +2317,14 @@ SELECT * FROM (VALUES
         f_otsu, f_fg, f_aspect)
 """
 
-ORACLE_EXT2["audio_features"] = """
+ORACLE_SQL["audio_features"] = """
 SELECT * FROM (VALUES
   ('aud-440', 8000, 1, 16, 0.25::DOUBLE, 0.353526::DOUBLE, 0.499969::DOUBLE),
   ('aud-880', 8000, 1, 16, 0.25::DOUBLE, 0.353529::DOUBLE, 0.499969::DOUBLE)
 ) AS fx(media_id, sample_rate, channels, bits, duration_s, rms, peak)
 """
 
-ORACLE_EXT2["video_frame_samples"] = """
+ORACLE_SQL["video_frame_samples"] = """
 SELECT * FROM (VALUES
   ('vid-1', 0, 0.0::DOUBLE, '2d04d7c8deec039e'),
   ('vid-1', 1, 1.0::DOUBLE, '5cc43f682efde440'),
@@ -2490,7 +2422,7 @@ def q_temporal_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _VOCAB_SQL = "[" + ", ".join(f"'{w}'" for w in _CONFLICT_VOCAB) + "]"
 
-ORACLE_EXT2["temporal_conflicts"] = f"""
+ORACLE_SQL["temporal_conflicts"] = f"""
 WITH v AS (SELECT {_VOCAB_SQL} AS w),
 ev AS (
   SELECT doc_id AS ord,
@@ -2679,7 +2611,7 @@ def q_ann_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT2["ann_ivf_filtered"] = "SELECT 5::BIGINT AS k, true AS recall_ok"
+ORACLE_SQL["ann_ivf_filtered"] = "SELECT 5::BIGINT AS k, true AS recall_ok"
 
 
 @register("content_anomaly", None)  # oracle below
@@ -2721,7 +2653,7 @@ def q_content_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT2["content_anomaly"] = f"""
+ORACLE_SQL["content_anomaly"] = f"""
 WITH derived AS ({_DERIVED_EMB_SQL}),
 base AS (
   SELECT vec_id, v FROM derived WHERE vec_id < 200
@@ -2811,7 +2743,7 @@ def q_red_flags_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT2["red_flags_ref"] = r"""
+ORACLE_SQL["red_flags_ref"] = r"""
 WITH base AS (
   SELECT doc_id, text,
          CASE doc_id % 5
@@ -2902,7 +2834,7 @@ def q_ivf_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_health_check(cat, "2026-06-15")
 
 
-ORACLE_EXT2["ivf_tuning"] = """
+ORACLE_SQL["ivf_tuning"] = """
 WITH ids AS (SELECT doc_id AS i FROM documents WHERE doc_id < 50),
 cat AS (
   SELECT 'c' || lpad(i::VARCHAR, 2, '0') AS name,
@@ -2945,3 +2877,6 @@ SELECT name, vc AS vector_count, cur AS current_lists,
        ) AS warnings
 FROM flags
 """
+
+
+from . import queries_ext3  # noqa: E402,F401  (next module in the registry chain)

@@ -10,22 +10,9 @@ pattern), full SQL mirrors for the column-math lanes.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-QUERIES_EXT3: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE_EXT3: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES_EXT3[name] = fn
-        if oracle is not None:
-            ORACLE_EXT3[name] = oracle
-        return fn
-
-    return deco
+from .queries import ORACLE_SQL, _load, register
 
 
 # ---------------------------------------------------------------------------
@@ -109,7 +96,7 @@ def q_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT3["image_phash"] = """
+ORACLE_SQL["image_phash"] = """
 SELECT * FROM (VALUES
   ('img-base',   '4f7be0171fe4701f', '631c768a887339cc', '85e181e43f5272af'),
   ('img-edit',   '4f7be0171fe4701f', '631c768a887339cc', '85f181e43f52722f'),
@@ -118,7 +105,7 @@ SELECT * FROM (VALUES
 ) AS fx(media_id, ahash, dhash, phash)
 """
 
-ORACLE_EXT3["image_neardup"] = """
+ORACLE_SQL["image_neardup"] = """
 SELECT * FROM (VALUES
   ('img-base', 'img-edit', 2::BIGINT)
 ) AS fx(id_a, id_b, hamming)
@@ -355,7 +342,7 @@ def q_metadata_relationships(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT3["metadata_timeline"] = """
+ORACLE_SQL["metadata_timeline"] = """
 SELECT * FROM (VALUES
   ('d1', 'created', '2022-03-01T10:00:00', 'office', 'Alice'),
   ('j1', 'captured', '2021:06:01 09:00:00', 'exif', 'Canon EOS'),
@@ -366,7 +353,7 @@ SELECT * FROM (VALUES
 ) AS fx(media_id, event_type, event_ts, event_source, event_actor)
 """
 
-ORACLE_EXT3["metadata_relationships"] = """
+ORACLE_SQL["metadata_relationships"] = """
 SELECT * FROM (VALUES
   ('d1', 'p1', 'same_author', 0.8::DOUBLE, 0.6::DOUBLE, 'same_author'),
   ('d1', 'p2', 'same_author', 0.8::DOUBLE, 0.6::DOUBLE, 'same_author'),
@@ -410,7 +397,7 @@ def q_sun_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT3["sun_positions"] = """
+ORACLE_SQL["sun_positions"] = """
 SELECT * FROM (VALUES
   ('equator-equinox', 89.8::DOUBLE, 139.59::DOUBLE, 319.59::DOUBLE,
    0.0::DOUBLE, true,
@@ -432,7 +419,7 @@ SELECT * FROM (VALUES
 """
 
 
-ORACLE_EXT3["ela_metrics"] = """
+ORACLE_SQL["ela_metrics"] = """
 SELECT * FROM (VALUES
   ('ela-flat', 60.0::DOUBLE, 0.0::DOUBLE, 60.0::DOUBLE, 1.0::DOUBLE,
    'Highly uniform error levels', 0),
@@ -461,8 +448,6 @@ def q_credibility_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         deception_overall,
         factor_weighted_scores,
     )
-    from .queries import _load
-
     docs = _load(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") % 10 < 3
     )
@@ -509,7 +494,7 @@ def q_credibility_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT3["credibility_scores"] = """
+ORACLE_SQL["credibility_scores"] = """
 WITH src AS (SELECT doc_id FROM documents WHERE doc_id % 10 < 3),
 ks AS (SELECT unnest(generate_series(0, 4)) AS k),
 factors AS (
@@ -566,8 +551,6 @@ FROM cred JOIN overall ON cred.source_id = overall.source_id
 @register("credibility_trend", None)  # oracle below
 def q_credibility_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.credibility import credibility_trend
-    from .queries import _load
-
     docs = _load(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") % 10 < 3
     )
@@ -587,7 +570,7 @@ def q_credibility_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return credibility_trend(assessments)
 
 
-ORACLE_EXT3["credibility_trend"] = """
+ORACLE_SQL["credibility_trend"] = """
 WITH src AS (SELECT doc_id FROM documents WHERE doc_id % 10 < 3),
 seqs AS (
   SELECT doc_id AS source_id, unnest(generate_series(0, (doc_id % 6)::INT)) AS seq
@@ -680,7 +663,7 @@ def q_ach_diagnosticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT3["ach_diagnosticity"] = """
+ORACLE_SQL["ach_diagnosticity"] = """
 WITH ms AS (SELECT unnest(generate_series(0, 2)) AS m),
 hs AS (SELECT unnest(generate_series(0, 3)) AS h),
 es AS (SELECT unnest(generate_series(0, 7)) AS e),
@@ -713,7 +696,7 @@ FROM finals WHERE variance > 0.5
 """
 
 
-ORACLE_EXT3["ach_scores"] = """
+ORACLE_SQL["ach_scores"] = """
 WITH ms AS (SELECT unnest(generate_series(0, 2)) AS m),
 hs AS (SELECT unnest(generate_series(0, 3)) AS h),
 es AS (SELECT unnest(generate_series(0, 7)) AS e),
@@ -895,7 +878,7 @@ FROM scored
     )
 
 
-ORACLE_EXT3["entity_correlations"] = _entity_correlations_oracle()
+ORACLE_SQL["entity_correlations"] = _entity_correlations_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1078,7 +1061,7 @@ FROM r
 """
 
 
-ORACLE_EXT3["c2pa_scan"] = _c2pa_oracle()
+ORACLE_SQL["c2pa_scan"] = _c2pa_oracle()
 
 
 def _media_metadata_full_oracle() -> str:
@@ -1117,7 +1100,7 @@ JOIN (VALUES
 """
 
 
-ORACLE_EXT3["media_metadata"] = _media_metadata_full_oracle()
+ORACLE_SQL["media_metadata"] = _media_metadata_full_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1131,8 +1114,6 @@ ORACLE_EXT3["media_metadata"] = _media_metadata_full_oracle()
 @register("spearman_corr", None)  # oracle below
 def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.correlations import spearman_int_rank
-    from .queries import _load
-
     d = _load(spark, sf_dir, "documents").select("doc_id")
     df = d.select(
         (F.col("doc_id") % 6).alias("g"),
@@ -1147,7 +1128,7 @@ def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT3["spearman_corr"] = """
+ORACLE_SQL["spearman_corr"] = """
 WITH src AS (
   SELECT doc_id % 6 AS g, (doc_id * 7) % 5 AS x,
          (doc_id * 3 + doc_id % 2) % 4 AS y
@@ -1219,8 +1200,6 @@ pats AS (SELECT * FROM kept ORDER BY firstkey LIMIT 10)
 @register("recurring_patterns", None)  # oracle below
 def q_recurring_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.patterns import detect_recurring_patterns
-    from .queries import _load
-
     d = _load(spark, sf_dir, "documents").select("doc_id", "text")
     out = detect_recurring_patterns(d, min_confidence=0.25)
     return out.select(
@@ -1232,7 +1211,7 @@ def q_recurring_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT3["recurring_patterns"] = _RECURRING_CTE + """
+ORACLE_SQL["recurring_patterns"] = _RECURRING_CTE + """
 SELECT 'Recurring: ' || word AS name,
        printf('The term ''%s'' appears %d times', word, n) AS description,
        word, n::BIGINT AS n_occurrences,
@@ -1247,8 +1226,6 @@ def q_pattern_doc_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         detect_recurring_patterns,
         match_patterns_to_docs,
     )
-    from .queries import _load
-
     d = _load(spark, sf_dir, "documents").select("doc_id", "text")
     pats = detect_recurring_patterns(d, min_confidence=0.25).select(
         "name", F.array("word").alias("keywords")
@@ -1264,7 +1241,7 @@ def q_pattern_doc_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT3["pattern_doc_matches"] = _RECURRING_CTE + """
+ORACLE_SQL["pattern_doc_matches"] = _RECURRING_CTE + """
 , hits AS (
   SELECT 'Recurring: ' || p.word AS pattern_name, d.doc_id, d.text,
          p.word, strpos(lower(d.text), p.word) AS sp
@@ -1294,8 +1271,6 @@ FROM hits
 @register("reference_simhash", None)  # oracle below
 def q_reference_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import simhash64_reference
-    from .queries import _load
-
     d = _load(spark, sf_dir, "documents").select("doc_id", "text")
     return simhash64_reference(d).select("doc_id", "simhash_bits")
 
@@ -1351,7 +1326,7 @@ bitstr AS (
 """.replace("{src}", src)
 
 
-ORACLE_EXT3["reference_simhash"] = (
+ORACLE_SQL["reference_simhash"] = (
     "WITH" + _simhash_bits_cte("documents") + """
 SELECT d.doc_id, coalesce(b.bits, repeat('0', 64)) AS simhash_bits
 FROM documents d LEFT JOIN bitstr b USING (doc_id)
@@ -1369,8 +1344,6 @@ FROM documents d LEFT JOIN bitstr b USING (doc_id)
 
 @register("doc_content_hashes", None)  # oracle below
 def q_doc_content_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .queries import _load
-
     d = _load(spark, sf_dir, "documents").select("doc_id", "text")
     return d.select(
         "doc_id",
@@ -1380,7 +1353,7 @@ def q_doc_content_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT3["doc_content_hashes"] = """
+ORACLE_SQL["doc_content_hashes"] = """
 SELECT doc_id, md5(text) AS content_md5, sha256(text) AS content_sha256,
        length(text)::BIGINT AS text_length
 FROM documents
@@ -1401,8 +1374,6 @@ FROM documents
 @register("simhash_duplicate_groups", None)  # oracle below
 def q_simhash_duplicate_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import content_hashes, duplicate_groups
-    from .queries import _load
-
     # fixture cap: 1500 docs (500 triplets) exercises the full path at
     # every gate scale (sf<=0.01 passes all docs) without paying the
     # whole-corpus simhash in the sf0.1 sweep; the component loop's
@@ -1442,7 +1413,7 @@ def q_simhash_duplicate_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT3["simhash_duplicate_groups"] = (
+ORACLE_SQL["simhash_duplicate_groups"] = (
     """WITH RECURSIVE derived AS (
   SELECT v.doc_id, a.text || ' variant' || (v.doc_id % 3)::VARCHAR AS text
   FROM documents v JOIN documents a ON a.doc_id = v.doc_id - v.doc_id % 3
@@ -1486,8 +1457,6 @@ SELECT c::BIGINT AS primary_id, n::BIGINT AS member_id FROM comp
 @register("dedup_merge", None)  # oracle below
 def q_dedup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import deduplication_stats, merge_documents
-    from .queries import _load
-
     d = _load(spark, sf_dir, "documents").select("doc_id", "text")
     docs = d.select("doc_id")
     grouped = docs.where(F.col("doc_id") < 300)
@@ -1580,7 +1549,7 @@ def q_dedup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT3["dedup_merge"] = """
+ORACLE_SQL["dedup_merge"] = """
 WITH g AS (
   SELECT doc_id FROM documents WHERE doc_id < 300
 ),
@@ -1672,8 +1641,6 @@ UNION ALL SELECT * FROM refs UNION ALL SELECT * FROM stats
 @register("similar_claims", None)  # oracle below
 def q_similar_claims(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.claims_ops import similar_claims
-    from .queries import _load
-
     d = _load(spark, sf_dir, "documents").select("doc_id", "text")
     base = d.where(F.col("doc_id") % 3 == 0).select(
         F.col("doc_id").alias("base_id"), "text"
@@ -1721,7 +1688,7 @@ def q_similar_claims(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT3["similar_claims"] = r"""
+ORACLE_SQL["similar_claims"] = r"""
 WITH m AS (
   SELECT doc_id, doc_id - doc_id % 3 AS base_id
   FROM documents WHERE doc_id < 240
@@ -1786,8 +1753,6 @@ FROM ranked WHERE match_rank <= 10
 @register("claims_merge", None)  # oracle below
 def q_claims_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.claims_ops import merge_claims
-    from .queries import _load
-
     g = _load(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") < 300
     )
@@ -1873,7 +1838,7 @@ def q_claims_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.unionByName(states).unionByName(ev_counts)
 
 
-ORACLE_EXT3["claims_merge"] = """
+ORACLE_SQL["claims_merge"] = """
 WITH g AS (SELECT doc_id FROM documents WHERE doc_id < 300),
 mem AS (
   SELECT doc_id - doc_id % 3 AS p, doc_id AS m
@@ -1988,8 +1953,6 @@ UNION ALL SELECT * FROM primary_states UNION ALL SELECT * FROM ev_rows
 
 
 def _hidden_payload_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .queries import _load
-
     ids = _load(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") < 60
     )
@@ -2068,7 +2031,7 @@ def q_hidden_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT3["hidden_content"] = """
+ORACLE_SQL["hidden_content"] = """
 WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 60),
 bytes AS (
   SELECT doc_id, p.j,
@@ -2176,8 +2139,6 @@ def q_composite_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.graph_scoring import (
         CompositeConfig, composite_entity_scores,
     )
-    from .queries import _load
-
     ids = _load(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") < 40
     )
@@ -2244,7 +2205,7 @@ def q_composite_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EXT3["composite_scores"] = """
+ORACLE_SQL["composite_scores"] = """
 WITH ids AS (SELECT doc_id AS i FROM documents WHERE doc_id < 40),
 nodes AS (
   SELECT i, 'n' || i AS node_id, 'E' || i AS entity_id,
@@ -2385,8 +2346,6 @@ def q_temporal_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
 
     from .operators.graph_temporal import snapshot_series
-    from .queries import _load
-
     ids = _load(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") < 300
     )
@@ -2421,7 +2380,7 @@ def q_temporal_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     return frames[0].unionByName(frames[1])
 
 
-ORACLE_EXT3["temporal_snapshots"] = """
+ORACLE_SQL["temporal_snapshots"] = """
 WITH ids AS (SELECT doc_id AS i FROM documents WHERE doc_id < 300),
 m AS (
   SELECT DISTINCT 'E' || (i % 20) AS e, 'd' || (i % 13) AS doc,
@@ -2531,8 +2490,6 @@ def q_causal_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         intervention_effect,
         validate_dag,
     )
-    from .queries import _load
-
     ids = _load(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") < 200
     )
@@ -2618,7 +2575,7 @@ def q_causal_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     return order_rows.unionByName(ddf)
 
 
-ORACLE_EXT3["causal_analysis"] = """
+ORACLE_SQL["causal_analysis"] = """
 WITH RECURSIVE ids AS (
   SELECT doc_id AS i FROM documents WHERE doc_id < 200
 ),
@@ -2716,8 +2673,6 @@ def q_geo_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.geospatial import (
         edge_distances, extract_geo_nodes, filter_by_bounds, geo_bounds,
     )
-    from .queries import _load
-
     ids = _load(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") < 80
     )
@@ -2821,7 +2776,7 @@ def q_geo_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(filt_row)
 
 
-ORACLE_EXT3["geo_analysis"] = """
+ORACLE_SQL["geo_analysis"] = """
 WITH ids AS (SELECT doc_id AS i FROM documents WHERE doc_id < 80),
 coords AS (
   SELECT 'L' || i AS name,
@@ -3392,7 +3347,7 @@ _ACH_SCORE_AGG_SQL = """
 """
 
 
-ORACLE_EXT3["ach_sensitivity"] = f"""
+ORACLE_SQL["ach_sensitivity"] = f"""
 WITH {_ACH_FIX_SQL.strip()},
 old_scored AS ({_ACH_SCORE_AGG_SQL} FROM ratings
                GROUP BY matrix_id, hypothesis_id),
@@ -3463,7 +3418,7 @@ FROM summ
 """
 
 
-ORACLE_EXT3["ach_evidence"] = f"""
+ORACLE_SQL["ach_evidence"] = f"""
 WITH {_ACH_FIX_SQL.strip()},
 q AS (
   SELECT matrix_id, evidence_id,
@@ -3603,7 +3558,7 @@ FROM sug
 """
 
 
-ORACLE_EXT3["ach_argumentation"] = f"""
+ORACLE_SQL["ach_argumentation"] = f"""
 WITH {_ACH_FIX_SQL.strip()},
 scored AS ({_ACH_SCORE_AGG_SQL},
          COUNT(*) AS evidence_count
@@ -3736,6 +3691,7 @@ def _flows_comention(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("entity_a", "entity_b", "co_occurrence_count", "weight")
 
 
+@register("graph_flows", None)  # oracle below
 def q_graph_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.flows import (
         aggregate_flows, extract_entity_flows, extract_relationship_flows,
@@ -3818,9 +3774,7 @@ def q_graph_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _graph_flows_oracle() -> str:
-    from .queries import ORACLE_SQL as _BASE
-
-    comention = _BASE["comention_edges"]
+    comention = ORACLE_SQL["comention_edges"]
     # mirror the doc_id % 3 bound of _flows_comention (the comention SQL
     # reads `documents` exactly once, in its cased CTE)
     assert comention.count("FROM documents") == 1
@@ -3951,8 +3905,7 @@ FROM stats
 """
 
 
-QUERIES_EXT3["graph_flows"] = q_graph_flows
-ORACLE_EXT3["graph_flows"] = _graph_flows_oracle()
+ORACLE_SQL["graph_flows"] = _graph_flows_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -4104,7 +4057,7 @@ FROM (VALUES
 """
 
 
-ORACLE_EXT3["graph_export_filter"] = _gf_oracle()
+ORACLE_SQL["graph_export_filter"] = _gf_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -4152,6 +4105,7 @@ def _iq_fixture_media():
     ]
 
 
+@register("image_quality", None)  # oracle below
 def q_image_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.image_quality import (
         classify_image_quality, image_quality_metrics, ocr_route,
@@ -4184,13 +4138,12 @@ def q_image_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT3["image_quality"] = q_image_quality
 
 
 # pinned from the fixture run; every row verified against the ACTUAL
 # ImageQualityClassifier + ImageQualityScore + get_ocr_route by the
 # injected-PIL differential suite (tests/test_image_quality.py)
-ORACLE_EXT3["image_quality"] = """
+ORACLE_SQL["image_quality"] = """
 SELECT * FROM (VALUES
   ('iq-blank', 150, true, 0.030924::DOUBLE, 0.0::DOUBLE, 0.0::DOUBLE,
    false, 'simple', true, 'fixable', false, 1.0::DOUBLE,
@@ -4234,6 +4187,7 @@ _FT_NAMES = [
 ]
 
 
+@register("file_routes", None)  # oracle below
 def q_file_routes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.extract import file_type_info
 
@@ -4285,5 +4239,4 @@ FROM extd
 """
 
 
-QUERIES_EXT3["file_routes"] = q_file_routes
-ORACLE_EXT3["file_routes"] = _file_routes_oracle()
+ORACLE_SQL["file_routes"] = _file_routes_oracle()

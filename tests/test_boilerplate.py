@@ -171,7 +171,6 @@ class TestSelection:
         """prepare_webtext_corpus over the fixture pages: url-variant
         collapse, exact dup, near dup, quality gate, link farm, and shared
         footer line each handled by their stage."""
-        import arkhammirror_spark.queries  # noqa: F401  (import-order guard)
         from arkhammirror_spark.operators.webtext import prepare_webtext_corpus
         from arkhammirror_spark.queries_ext2 import _WEBTEXT_PAGES, _WT_FOOTER
 
@@ -190,7 +189,6 @@ class TestSelection:
         """main_content_py (the streaming/pin path) must match the
         url-partitioned window variant exactly on every fixture page —
         including the webtext fixtures with their rescue/heading cases."""
-        import arkhammirror_spark.queries  # noqa: F401
         from arkhammirror_spark.operators.boilerplate import main_content_py
         from arkhammirror_spark.queries_ext2 import _BOILER_PAGES, _WEBTEXT_PAGES
 

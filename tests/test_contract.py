@@ -6,7 +6,11 @@ columns (the gate's pandas row-sort comparator factorizes cells; a list
 cell raises `unhashable type: 'list'` — measured on canonical_urls in
 round 4)."""
 
+import json
 import os
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import types as T
@@ -24,6 +28,74 @@ def test_contract_fits_the_50_entry_gate():
     contract, oracles = build_contract()
     assert len(contract) == 50
     assert set(contract) == set(oracles)
+
+
+# The 50 contract names in served order: the external gate checks the first
+# 50 `queries()` entries, so an order change moves entries in or out of it.
+_CONTRACT_NAMES = [
+    "date_extractions", "chunking", "anomalies", "simhash_neardup",
+    "graph_node_labels", "graph_centrality", "graph_overview", "ann_topk",
+    "container_extracts", "mentions", "mention_resolution", "content_scans",
+    "image_hashes", "media_forensics", "credibility_analysis", "ach_analysis",
+    "pattern_analysis", "interval_conflicts", "timeline_events", "claims",
+    "graph_ego", "neardup_jaccard", "media_features", "doc_profile",
+    "entities", "comention_edges", "exact_dedup", "pricing_summary",
+    "top_orders_per_customer", "customer_nation_rollup", "bm25_search",
+    "minhash_lsh_neardup", "relations_cooccur", "hybrid_search",
+    "regex_search_email", "autocomplete_prefix", "reranked_search",
+    "rels_dedup", "claim_contradictions", "embedding_neardup", "line_dedup",
+    "canonical_urls", "gopher_quality", "events_rollup", "asof_latest_order",
+    "range_window_events", "gopher_repetition", "webtext_prep",
+    "main_content", "media_metadata",
+]
+
+
+def test_contract_names_are_pinned_in_order():
+    contract, _ = build_contract()
+    assert list(contract) == _CONTRACT_NAMES
+
+
+_REGISTRY_DUMP = """
+import json, sys
+import arkhammirror_spark.{first}
+from arkhammirror_spark.contract import build_contract
+from arkhammirror_spark.queries import ORACLE_SQL, QUERIES
+contract, oracles = build_contract()
+json.dump({{"parts": list(QUERIES), "oracles": ORACLE_SQL,
+           "contract": list(contract), "contract_oracles": oracles}}, sys.stdout)
+"""
+
+
+def _registry_after_importing(first: str) -> dict:
+    repo = Path(__file__).resolve().parent.parent
+    out = subprocess.run(
+        [sys.executable, "-c", _REGISTRY_DUMP.format(first=first)],
+        cwd=repo, env={**os.environ, "PYTHONPATH": str(repo)},
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    return json.loads(out.stdout)
+
+
+@pytest.fixture(scope="module")
+def registry_via_queries():
+    reg = _registry_after_importing("queries")
+    assert len(reg["parts"]) == 108
+    assert reg["contract"] == _CONTRACT_NAMES
+    return reg
+
+
+@pytest.mark.parametrize(
+    "first", ["queries_ext", "queries_ext2", "queries_ext3", "contract"]
+)
+def test_registry_is_the_same_whichever_module_is_imported_first(
+    first, registry_via_queries
+):
+    """The four registry modules load as a chain; importing any of them (or
+    the contract) first in a fresh interpreter must build the registry the
+    `queries` import builds: every part, in the same order, with the same
+    oracle text, and the same contract."""
+    assert _registry_after_importing(first) == registry_via_queries
 
 
 def test_every_part_query_is_served_exactly_once():

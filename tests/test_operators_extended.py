@@ -317,15 +317,80 @@ class TestGraph:
 
 
 class TestCoref:
+    TEXT = "John Smith said he would resign. Acme Corp claimed it was fine."
+
     def test_matches_reference_impl(self, spark):
-        text = "John Smith said he would resign. Acme Corp claimed it was fine."
-        docs = spark.createDataFrame([("u1", text)], "url: string, extracted_text: string")
-        got = {(r["pronoun"], r["resolved_to"]) for r in resolve_coref(docs).collect()}
+        text = self.TEXT
+        docs = spark.createDataFrame(
+            [("u1", text), ("u2", ""), ("u3", None)],
+            "url: string, extracted_text: string",
+        )
+        got = {
+            (r["url"], r["pronoun"], r["resolved_to"])
+            for r in resolve_coref(docs).collect()
+        }
         expected = {
-            (p, e) for p, e in resolve_coreferences(text, mock_ner(text)).items()
+            ("u1", p, e) for p, e in resolve_coreferences(text, mock_ner(text)).items()
         }
         assert got == expected
-        assert ("he", "John Smith") in got
+        assert ("u1", "he", "John Smith") in got
+
+    def test_keyed_by_the_first_column(self, spark):
+        """The query side keys by a bigint doc_id under any text column name."""
+        docs = spark.createDataFrame([(7, self.TEXT)], "doc_id: bigint, t: string")
+        out = resolve_coref(docs)
+        assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+            ("doc_id", "bigint"), ("pronoun", "string"), ("resolved_to", "string"),
+        ]
+        assert ("he", "John Smith") in {
+            (r["pronoun"], r["resolved_to"]) for r in out.collect() if r["doc_id"] == 7
+        }
+
+
+def _lane_extractors() -> dict:
+    """Every reference function the per-document explode lane
+    (spans._explode_per_doc) applies, called the way its callers call it."""
+    from arkhammirror_spark.operators.embed_model import fake_embedding
+    from arkhammirror_spark.reference_impl.chunker import chunk_fixed, chunk_sentences
+    from arkhammirror_spark.reference_impl.claims import extract_claims
+    from arkhammirror_spark.reference_impl.dates import (
+        extract_iso_dates,
+        extract_relative_dates,
+    )
+    from arkhammirror_spark.reference_impl.frame_chunks import (
+        STRATEGIES,
+        chunk_paragraph,
+        chunk_with_strategy,
+    )
+    from arkhammirror_spark.reference_impl.relations import extract_relations
+    from arkhammirror_spark.reference_impl.semantic_chunker import chunk_semantic
+
+    fns = {
+        "mock_ner": mock_ner,
+        "extract_iso_dates": extract_iso_dates,
+        "extract_relative_dates": extract_relative_dates,
+        "extract_relations": lambda t: extract_relations(t, mock_ner(t)),
+        "extract_claims": extract_claims,
+        "chunk_fixed": lambda t: chunk_fixed(t, chunk_size=100, overlap=20),
+        "chunk_sentences": lambda t: chunk_sentences(t, chunk_size=120),
+        "chunk_paragraph": lambda t: chunk_paragraph(t, chunk_size=200),
+        "resolve_coreferences": lambda t: resolve_coreferences(t, mock_ner(t)),
+        "chunk_semantic": lambda t: chunk_semantic(
+            t, lambda sents: [fake_embedding(x) for x in sents]
+        ),
+    }
+    for strategy in STRATEGIES:
+        fns[f"chunk_with_strategy[{strategy}]"] = (
+            lambda t, s=strategy: chunk_with_strategy(t, s)
+        )
+    return fns
+
+
+@pytest.mark.parametrize("name", sorted(_lane_extractors()))
+def test_lane_extractors_return_nothing_on_empty_text(name):
+    """The lane skips null and empty texts. That equals calling the
+    extractor on `t or ""` only while each returns an empty result on ""."""
+    assert len(_lane_extractors()[name]("")) == 0
 
 
 class TestLinking:
@@ -418,7 +483,8 @@ class TestMultimodal:
 
     def test_image_features_strict_requires_pil(self, media):
         """strict mode raises the install-hint ImportError when PIL is
-        absent (the ocr_model strict contract) — this sandbox has no PIL."""
+        absent (strict never downgrades to another lane) — this sandbox has
+        no PIL."""
         with pytest.raises(Exception, match="pillow"):
             extract_image_features(media, mode="strict").collect()
 
@@ -601,92 +667,6 @@ class TestStreaming:
         assert row["extracted_text"] == oracle["extracted_text"]
 
 
-class TestPagedSpans:
-    def test_pdf_pages_split_and_numbered(self, spark):
-        from arkhammirror_spark.operators.paged import paged_chunks, paged_mentions
-
-        docs = spark.createDataFrame(
-            [
-                ("u1", "John Smith spoke first.\n\nActa Corp replied later.", "pdf"),
-                ("u2", "Jane Doe wrote a single page note.", "html"),
-            ],
-            "url: string, extracted_text: string, kind: string",
-        )
-        ments = paged_mentions(docs).collect()
-        by_page = {}
-        for m in ments:
-            by_page.setdefault((m["url"], m["page_number"]), []).append(m["text"])
-        assert by_page[("u1", 1)] == ["John Smith"]
-        assert by_page[("u1", 2)] == ["Acta Corp"]
-        assert by_page[("u2", 1)] == ["Jane Doe"]
-
-        chunks = paged_chunks(docs).collect()
-        pages = {(c["url"], c["page_number"]): c["text"] for c in chunks}
-        assert pages[("u1", 2)] == "Acta Corp replied later."
-        # offsets restart per page (the reference's per-page loop semantics)
-        assert all(c["char_start"] == 0 for c in chunks)
-
-    def test_without_kind_column_single_page(self, spark):
-        from arkhammirror_spark.operators.paged import paged_mentions
-
-        docs = spark.createDataFrame(
-            [("u1", "Alpha Beta here.\n\nGamma Delta there.")],
-            "url: string, extracted_text: string",
-        )
-        got = paged_mentions(docs).collect()
-        assert {m["page_number"] for m in got} == {1}
-
-
-class TestStatefulStreaming:
-    def test_checksum_dedup_state_survives_batches(self, spark, tmp_path):
-        from arkhammirror_spark.datagen import gen_pages_df
-        from arkhammirror_spark.schemas import PAGES_SCHEMA
-        from arkhammirror_spark.streaming.stateful import streaming_checksum_dedup
-        from arkhammirror_spark.shipping import ensure_shipped
-
-        ensure_shipped(spark)
-        pages_dir = str(tmp_path / "pages")
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-
-        batch1 = gen_pages_df(spark, 97, seed=3)  # rows 13,14 duplicate row 0 content
-        batch1.write.mode("append").parquet(pages_dir)
-
-        stream = spark.readStream.schema(PAGES_SCHEMA).parquet(pages_dir)
-        q = (
-            streaming_checksum_dedup(stream)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        n1 = spark.read.parquet(out_dir).count()
-        # duplicates collapsed: fewer outputs than inputs
-        assert n1 < 97
-
-        # second delivery of the SAME payloads: state drops all of them
-        gen_pages_df(spark, 97, seed=3).selectExpr(
-            "concat(url, '-redelivery') as url", "warc_ts", "html", "text", "lang", "kind"
-        ).write.mode("append").parquet(pages_dir)
-        q2 = (
-            streaming_checksum_dedup(
-                spark.readStream.schema(PAGES_SCHEMA).parquet(pages_dir)
-            )
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q2.awaitTermination()
-        n2 = spark.read.parquet(out_dir).count()
-        assert n2 == n1  # nothing new emitted: every checksum already seen
-
-
 class TestModelNer:
     def test_falls_back_to_mock_without_spacy(self, spark):
         from arkhammirror_spark.operators.ner_model import (
@@ -738,117 +718,6 @@ class TestEmbedModel:
         qv = fake_embedding("text number 7")
         top = brute_force_topk(emb, qv, k=1, id_col="doc_id").collect()
         assert top[0]["doc_id"] == 7  # exact self-match wins
-
-
-class TestOcrModel:
-    def test_mock_path_deterministic(self, spark):
-        from arkhammirror_spark.operators.ocr_model import ocr_images
-
-        pages = spark.createDataFrame(
-            [("u1", b"fake-image-bytes"), ("u2", b"fake-image-bytes"), ("u3", None)],
-            "url: string, payload: binary",
-        )
-        rows = {r["url"]: r for r in ocr_images(pages, mode="mock").collect()}
-        assert rows["u1"]["engine"] == "mock"
-        assert rows["u1"]["full_text"] == rows["u2"]["full_text"]
-        assert rows["u1"]["full_text"].startswith("[ocr-mock ")
-        assert rows["u3"]["error"] is not None  # empty payload quarantined
-
-    def test_strict_mode_raises_without_engine(self, spark):
-        import pytest as _pt
-
-        from arkhammirror_spark.operators.ocr_model import _load_engine, ocr_images
-
-        if _load_engine("en") is not None:
-            _pt.skip("paddleocr installed; strict gate not exercisable")
-        pages = spark.createDataFrame(
-            [("u1", b"img")], "url: string, payload: binary"
-        )
-        with _pt.raises(Exception, match="paddleocr not installed"):
-            ocr_images(pages, mode="strict").collect()
-
-    def test_auto_mode_falls_back_to_mock(self, spark):
-        from arkhammirror_spark.operators.ocr_model import ocr_images
-
-        pages = spark.createDataFrame(
-            [("u1", b"img-bytes")], "url: string, payload: binary"
-        )
-        r = ocr_images(pages, mode="auto").collect()[0]
-        assert r["engine"] in ("mock", "paddle")
-        assert r["error"] is None
-
-
-class TestVlmOcr:
-    def test_request_body_matches_reference_contract(self):
-        """qwen_worker.py:259-283 wire format, field for field."""
-        from arkhammirror_spark.operators.vlm_ocr import (
-            DEFAULT_OCR_PROMPT,
-            OCR_SYSTEM_PROMPT,
-            build_vlm_request,
-        )
-
-        req = build_vlm_request(b"imgbytes")
-        assert req["model"] == "qwen2.5-vl-7b-instruct"
-        assert req["temperature"] == 0.1 and req["max_tokens"] == 4096
-        sys_msg, user_msg = req["messages"]
-        assert sys_msg == {"role": "system", "content": OCR_SYSTEM_PROMPT}
-        assert "robotic OCR engine" in OCR_SYSTEM_PROMPT
-        text_part, img_part = user_msg["content"]
-        assert text_part == {"type": "text", "text": DEFAULT_OCR_PROMPT}
-        import base64 as b64
-
-        assert img_part["image_url"]["url"] == (
-            "data:image/png;base64," + b64.b64encode(b"imgbytes").decode()
-        )
-
-    def test_parse_response(self):
-        from arkhammirror_spark.operators.vlm_ocr import parse_vlm_response
-
-        assert parse_vlm_response(
-            {"choices": [{"message": {"content": "hi"}}]}
-        ) == "hi"
-        assert parse_vlm_response({}) == ""
-        assert parse_vlm_response({"choices": []}) == ""
-
-    def test_mock_mode_deterministic(self, spark):
-        from arkhammirror_spark.operators.vlm_ocr import vlm_ocr_images
-
-        pages = spark.createDataFrame(
-            [("u1", b"same"), ("u2", b"same"), ("u3", None)],
-            "url: string, payload: binary",
-        )
-        rows = {r["url"]: r for r in vlm_ocr_images(pages, mode="mock").collect()}
-        assert rows["u1"]["engine"] == "mock"
-        assert rows["u1"]["full_text"] == rows["u2"]["full_text"]
-        assert rows["u1"]["full_text"].startswith("[vlm-mock ")
-        assert rows["u3"]["error"] is not None
-
-    def test_injected_transport_runs_real_path(self, spark):
-        """The injected transport must be importable on EXECUTORS — the
-        shipped loopback_transport proves build → transport → parse."""
-        from arkhammirror_spark.operators.vlm_ocr import (
-            loopback_transport,
-            vlm_ocr_images,
-        )
-
-        pages = spark.createDataFrame(
-            [("u1", b"img")], "url: string, payload: binary"
-        )
-        r = vlm_ocr_images(pages, transport=loopback_transport).collect()[0]
-        assert r["engine"] == "vlm"
-        assert r["full_text"] == "TRANSCRIPT parts=2 temp=0.1"
-        assert r["model"] == "qwen2.5-vl-7b-instruct"
-
-    def test_strict_without_transport_raises_connection_hint(self, spark):
-        import pytest as _pt
-
-        from arkhammirror_spark.operators.vlm_ocr import vlm_ocr_images
-
-        pages = spark.createDataFrame(
-            [("u1", b"img")], "url: string, payload: binary"
-        )
-        with _pt.raises(Exception, match="VLM endpoint"):
-            vlm_ocr_images(pages, mode="strict").collect()
 
 
 class TestLineDedup:

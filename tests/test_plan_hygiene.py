@@ -1,6 +1,8 @@
 """Plan-hygiene gate: every registry query must be free of row-at-a-time
 Python, and document-table queries must column-prune their scans. Plan-only
-(no execution) so the whole sweep is fast."""
+(no execution) so the whole sweep is fast. The structural rules beside it
+include the dead-module guard (every package module is imported by an
+entry point)."""
 
 import pytest
 
@@ -191,3 +193,87 @@ def test_pipeline_job_budget(spark, tmp_path):
         f"{len(jobs)} Spark jobs for a cold + resume run_pipeline, budget "
         f"{_PIPELINE_JOB_BUDGET}"
     )
+
+
+
+# Modules under arkhammirror_spark/ that no entry point imports, kept on
+# purpose (with the packages enclosing them). Anything else unreachable is
+# dead code and fails the guard below.
+_UNREACHABLE_OK = {
+    "arkhammirror_spark.plans.inspect",  # plan-inspection tooling for tests
+    # capabilities SURVEY §2.0 claims; keep-or-delete decision deferred
+    "arkhammirror_spark.streaming.pipeline",
+    "arkhammirror_spark.operators.bucketing",
+}
+
+
+def _package_modules():
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+
+    def name_of(path: Path) -> str:
+        parts = path.relative_to(repo).with_suffix("").parts
+        return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+    files = {name_of(p): p for p in (repo / "arkhammirror_spark").rglob("*.py")}
+    entry_points = [files[f"arkhammirror_spark.{m}"] for m in ("queries", "pipeline", "contract")]
+    entry_points += [repo / f for f in ("bench.py", "bench_extra.py", "__spark_entry__.py")]
+    entry_points += sorted((repo / "scripts").glob("*.py"))
+    entry_points += sorted((repo / "perfbench").glob("*.py"))
+    return files, entry_points, name_of
+
+
+def _imported_from(roots, files, name_of) -> set[str]:
+    """Package modules reached by walking ``ast`` import statements (module
+    level and function local) from `roots`. Nothing is imported."""
+    import ast
+
+    seen: set[str] = set()
+    todo = list(roots)
+
+    def visit(target: str) -> None:
+        # importing a module runs every enclosing package's __init__
+        parts = target.split(".")
+        for i in range(1, len(parts) + 1):
+            mod = ".".join(parts[:i])
+            if mod in files and mod not in seen:
+                seen.add(mod)
+                todo.append(files[mod])
+
+    for path in roots:
+        visit(name_of(path))
+    while todo:
+        path = todo.pop()
+        name = name_of(path)
+        here = name.split(".") if path.name == "__init__.py" else name.split(".")[:-1]
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                targets = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                base = node.module or ""
+                if node.level:
+                    pkg = here[: len(here) - node.level + 1]
+                    base = ".".join(pkg + ([node.module] if node.module else []))
+                targets = [base] + [f"{base}.{a.name}" for a in node.names]
+            else:
+                continue
+            for t in targets:
+                visit(t)
+    return seen
+
+
+def test_no_unreachable_modules():
+    """Every module under arkhammirror_spark/ is imported (transitively) by
+    the registry, the pipeline, the contract, bench.py, bench_extra.py,
+    __spark_entry__.py, scripts/ or perfbench/ — or is on the allow-list."""
+    files, entry_points, name_of = _package_modules()
+    reached = _imported_from(entry_points, files, name_of)
+    assert "arkhammirror_spark.queries_ext3" in reached  # the walk follows the chain
+    stale = sorted(_UNREACHABLE_OK & reached)
+    assert not stale, f"allow-listed modules are reachable again: {stale}"
+    kept = _imported_from(
+        [files[m] for m in _UNREACHABLE_OK] + entry_points, files, name_of
+    )
+    dead = sorted(set(files) - kept)
+    assert not dead, f"modules nothing imports: {dead}"
