@@ -1,10 +1,11 @@
-"""Storage seam: Iceberg when the runtime is on the classpath, else
-parquet-with-manifest snapshots with the same commit/resume semantics.
+"""Storage seam: parquet-with-manifest snapshots with Iceberg's
+commit/resume semantics.
 
-The 10^12-row deployment writes ``df.writeTo("catalog.db.table").append()``
-into Iceberg (snapshot isolation, partition evolution, audit branch). This
-sandbox has no Iceberg runtime JAR, so the fallback implements the minimal
-contract the pipeline needs on plain parquet:
+There is no Iceberg switch: every run commits through
+``ParquetSnapshotCatalog``. A 10^12-row deployment would write
+``df.writeTo("catalog.db.table").append()`` into Iceberg (snapshot
+isolation, partition evolution, audit branch); this class implements the
+minimal contract the pipeline needs of it on plain parquet:
 
 - a *snapshot* is ``<root>/<table>/snapshot=<id>/`` written atomically
   (parquet + `_MANIFEST.json` committed last; a snapshot without a manifest
@@ -17,13 +18,12 @@ contract the pipeline needs on plain parquet:
   writes leaves only an invisible orphan run (re-extracted next time),
   never a half-committed increment (Iceberg analogue: one multi-table
   transaction / WAP commit),
-- ``committed_snapshots`` lists per-table manifests in commit order,
 - ``read_table`` unions the snapshots of committed runs (append semantics);
   ``read_table_latest`` returns only the newest committed run's snapshot
   (replace semantics — for derived aggregates recomputed per run).
 
 Resume-from-checkpoint = anti-join against the union of committed runs'
-keys, identical in both backends.
+keys.
 """
 
 from __future__ import annotations
@@ -37,14 +37,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.Table  # type: ignore[attr-defined]
-        return True
-    except Exception:
-        return False
-
-
 @dataclass
 class ParquetSnapshotCatalog:
     root: str
@@ -55,9 +47,7 @@ class ParquetSnapshotCatalog:
     def _snap_dir(self, table: str, snapshot_id: str) -> str:
         return os.path.join(self._table_dir(table), f"snapshot={snapshot_id}")
 
-    def write_snapshot(
-        self, df: DataFrame, table: str, snapshot_id: str, extra_meta: dict | None = None
-    ) -> dict:
+    def write_snapshot(self, df: DataFrame, table: str, snapshot_id: str) -> dict:
         path = self._snap_dir(table, snapshot_id)
         # the row count rides on the write job; Spark reports it even when
         # AQE prunes an empty plan, so `get` never waits on a missing metric
@@ -72,7 +62,6 @@ class ParquetSnapshotCatalog:
             # file sources read every field as nullable, so the writer's
             # schema reads back exactly as inference would see it
             "schema": df.schema.jsonValue(),
-            **(extra_meta or {}),
         }
         tmp = os.path.join(path, "_MANIFEST.json.tmp")
         final = os.path.join(path, "_MANIFEST.json")
@@ -86,7 +75,7 @@ class ParquetSnapshotCatalog:
     def _runs_dir(self) -> str:
         return os.path.join(self.root, "_runs")
 
-    def commit_run(self, run_id: str, tables: list[str], extra_meta: dict | None = None) -> dict:
+    def commit_run(self, run_id: str, tables: list[str]) -> dict:
         """Atomic run commit point: written only after every table snapshot
         of the run is on disk."""
         os.makedirs(self._runs_dir(), exist_ok=True)
@@ -94,7 +83,6 @@ class ParquetSnapshotCatalog:
             "run_id": run_id,
             "tables": sorted(tables),
             "committed_at_epoch": time.time(),
-            **(extra_meta or {}),
         }
         tmp = os.path.join(self._runs_dir(), f"{run_id}.json.tmp")
         final = os.path.join(self._runs_dir(), f"{run_id}.json")
@@ -111,19 +99,6 @@ class ParquetSnapshotCatalog:
         for name in sorted(os.listdir(rdir)):
             if name.endswith(".json"):
                 with open(os.path.join(rdir, name)) as fh:
-                    out.append(json.load(fh))
-        out.sort(key=lambda m: m["committed_at_epoch"])
-        return out
-
-    def committed_snapshots(self, table: str) -> list[dict]:
-        tdir = self._table_dir(table)
-        if not os.path.isdir(tdir):
-            return []
-        out = []
-        for name in sorted(os.listdir(tdir)):
-            mf = os.path.join(tdir, name, "_MANIFEST.json")
-            if name.startswith("snapshot=") and os.path.isfile(mf):
-                with open(mf) as fh:
                     out.append(json.load(fh))
         out.sort(key=lambda m: m["committed_at_epoch"])
         return out

@@ -188,9 +188,7 @@ def select_blocks_py(
     """Pure-python twin of score_nodes + select_content over ONE page's
     node rows — selection only ever looks at a page's own neighbours, so
     per-page python ≡ the url-partitioned window variant (pinned by a
-    differential test). Powers the stateless STREAMING lane (window
-    functions need a shuffle the per-page batch already implies) and the
-    oracle pins."""
+    differential test); the oracle pins use it."""
     base = [
         (r["text_len"] >= min_chars)
         and (r["link_text_len"] / max(1, r["text_len"]) <= max_link_density)

@@ -1,5 +1,5 @@
-"""Causal graph analysis — DAG validation, causal/backdoor paths,
-confounders, do-calculus effect estimation, causal ordering.
+"""Causal graph analysis — DAG validation, causal paths, confounders,
+do-calculus effect estimation, causal ordering.
 
 Reference lineage: arkham-shard-graph/causal.py (`CausalGraphEngine`):
 - ``validate_dag`` (:176-224): DFS cycle detection, first cycle per
@@ -7,15 +7,14 @@ Reference lineage: arkham-shard-graph/causal.py (`CausalGraphEngine`):
 - ``find_causal_paths`` (:226-284): all simple directed paths ≤
   max_length nodes, strength = product of edge strengths, path_type
   direct/indirect.
-- ``find_backdoor_paths`` (:286-360): paths that leave the treatment
-  AGAINST edge direction first, then move freely, ≤ 10 nodes.
 - ``identify_confounders`` (:362-430): common ancestors of treatment
   and outcome, minus causal-path nodes and the endpoints, with
   BFS paths from each confounder to both.
 - ``calculate_intervention_effect`` (:470-548): do(X=x) estimate =
   mean of causal-path strengths, confounders as the default
   adjustment set, ±0.2 clipped confidence interval.
-- ``get_causal_ordering`` (:550-586): Kahn topological sort.
+- ``get_causal_ordering`` (:550-586): Kahn topological sort, distributed
+  below.
 
 Causal graphs are curated DAGs — the driver lane ports the reference
 exactly (same traversal orders, so outputs are comparable
@@ -25,8 +24,7 @@ per-round localCheckpoint) — every edge constraint then checks as
 layer(cause) < layer(effect) in one join, DAG-validity falls out as
 "every node got a layer", and the layer frame scales to edge tables the
 driver lane cannot hold. Path ENUMERATION is exponential by nature and
-deliberately stays driver-side behind the same ≤-cap convention as
-graph_algorithms.all_paths.
+deliberately stays driver-side behind the reference's ≤-cap convention.
 """
 
 from __future__ import annotations
@@ -34,23 +32,6 @@ from __future__ import annotations
 from collections import deque
 
 from pyspark.sql import DataFrame, functions as F
-
-DEFAULT_CAUSAL_EDGE_TYPES = [
-    "causes", "influences", "leads_to", "results_in",
-    "precedes", "triggers", "enables",
-]
-
-
-def filter_causal_edges(
-    edges: DataFrame,
-    type_col: str = "relationship_type",
-    causal_edge_types: list[str] | None = None,
-) -> DataFrame:
-    """build_causal_graph's edge-type filter (:127-150)."""
-    types = [
-        t.lower() for t in (causal_edge_types or DEFAULT_CAUSAL_EDGE_TYPES)
-    ]
-    return edges.where(F.lower(F.col(type_col)).isin(types))
 
 
 # --- driver parity lane --------------------------------------------------
@@ -126,53 +107,6 @@ def find_causal_paths(
 
     dfs(cause, {cause}, [cause], [])
     return paths
-
-
-def find_backdoor_paths(
-    edge_rows, treatment: str, outcome: str
-) -> list[list[str]]:
-    """Backdoor paths (:306-360): leave the treatment backwards first,
-    then move in either direction; ≤ 10 nodes."""
-    forward: dict[str, list[str]] = {}
-    backward: dict[str, list[str]] = {}
-    for c, e, *_ in edge_rows:
-        forward.setdefault(c, []).append(e)
-        backward.setdefault(e, []).append(c)
-
-    out: list[list[str]] = []
-
-    def rec(current, visited, path, started_backward):
-        if len(path) > 10:
-            return
-        if current == outcome and started_backward:
-            out.append(list(path))
-            return
-        if current == treatment and not started_backward:
-            for parent in backward.get(current, []):
-                if parent not in visited:
-                    visited.add(parent)
-                    path.append(parent)
-                    rec(parent, visited, path, True)
-                    path.pop()
-                    visited.remove(parent)
-        elif started_backward:
-            for nb in forward.get(current, []):
-                if nb not in visited:
-                    visited.add(nb)
-                    path.append(nb)
-                    rec(nb, visited, path, True)
-                    path.pop()
-                    visited.remove(nb)
-            for nb in backward.get(current, []):
-                if nb not in visited:
-                    visited.add(nb)
-                    path.append(nb)
-                    rec(nb, visited, path, True)
-                    path.pop()
-                    visited.remove(nb)
-
-    rec(treatment, {treatment}, [treatment], False)
-    return out
 
 
 def _ancestors(node: str, parents: dict[str, set[str]]) -> set[str]:
@@ -262,26 +196,6 @@ def intervention_effect(
             max(0, effect - 0.2), min(1, effect + 0.2)
         ),
     }
-
-
-def causal_ordering(edge_rows, node_ids) -> list[str]:
-    """Kahn topological sort (:563-586), FIFO queue seeded in
-    ``node_ids`` order."""
-    in_degree: dict[str, int] = {}
-    children: dict[str, list[str]] = {}
-    for c, e, *_ in edge_rows:
-        in_degree[e] = in_degree.get(e, 0) + 1
-        children.setdefault(c, []).append(e)
-    queue = deque([n for n in node_ids if in_degree.get(n, 0) == 0])
-    ordering = []
-    while queue:
-        node = queue.popleft()
-        ordering.append(node)
-        for child in children.get(node, []):
-            in_degree[child] -= 1
-            if in_degree[child] == 0:
-                queue.append(child)
-    return ordering
 
 
 # --- distributed Kahn layers ---------------------------------------------

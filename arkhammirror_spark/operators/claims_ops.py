@@ -21,9 +21,9 @@ scanning up to 1000 claims in driver Python; here both lanes run
 corpus-wide. Candidates for the fuzzy arm come from
 ``operators.contradictions.candidate_claim_pairs`` (shared-rare-token ∪
 masked-fingerprint blocking — the skew design documented there), so the
-whole corpus pairs in one shuffle instead of O(n) service calls; the
-semantic arm reuses the banded hyperplane LSH from
-``operators.similarity``. The merge lane is the claims analogue of
+whole corpus pairs in one shuffle instead of O(n) service calls. Only
+the fallback arm is restated; the vector arm needs the vector service.
+The merge lane is the claims analogue of
 ``operators.dedup.merge_documents``: the member→primary map drives
 set-oriented joins (one per reference table + one count agg), so a
 100-TB corpus merges in a constant number of shuffles instead of
@@ -35,7 +35,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .contradictions import candidate_claim_pairs
-from .similarity import pairwise_cosine_above_banded
 
 
 def _ranked_matches(
@@ -43,13 +42,12 @@ def _ranked_matches(
     score_col: str,
     threshold: float,
     limit: int,
-    match_type: str,
-    merge_at: float | None,
 ) -> DataFrame:
     """Symmetrize unordered (id_a < id_b) pairs into per-claim match lists:
     score ≥ threshold, sorted score-desc (matched-id tiebreak for
     determinism — the reference's sort is stable on DB order, which has no
-    cross-engine meaning), truncated to ``limit`` per claim (shard.py:924).
+    cross-engine meaning), truncated to ``limit`` per claim (shard.py:924),
+    tagged fuzzy/review like the reference's fallback arm.
     """
     sym = pairs.select(
         F.col("id_a").alias("claim_id"),
@@ -65,19 +63,12 @@ def _ranked_matches(
     w = Window.partitionBy("claim_id").orderBy(
         F.desc("similarity_score"), F.asc("matched_claim_id")
     )
-    action = (
-        F.lit("review")
-        if merge_at is None
-        else F.when(
-            F.col("similarity_score") >= merge_at, F.lit("merge")
-        ).otherwise(F.lit("review"))
-    )
     return (
         sym.where(F.col("similarity_score") >= threshold)
         .withColumn("match_rank", F.row_number().over(w))
         .where(F.col("match_rank") <= limit)
-        .withColumn("match_type", F.lit(match_type))
-        .withColumn("suggested_action", action)
+        .withColumn("match_type", F.lit("fuzzy"))
+        .withColumn("suggested_action", F.lit("review"))
         .select(
             "claim_id", "matched_claim_id", "similarity_score",
             "match_type", "suggested_action", "match_rank",
@@ -109,33 +100,7 @@ def similar_claims(
         claims, id_col=id_col, text_col=text_col,
         threshold=threshold, df_cap=df_cap,
     )
-    return _ranked_matches(
-        pairs, "similarity", threshold, limit, "fuzzy", merge_at=None
-    )
-
-
-def similar_claims_semantic(
-    claim_vectors: DataFrame,
-    id_col: str = "claim_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.8,
-    limit: int = 10,
-    bands: int = 8,
-    rows_per_band: int | None = None,
-) -> DataFrame:
-    """Corpus-wide ``find_similar_claims`` vector arm (shard.py:894-908):
-    cosine ≥ threshold over claim embeddings, ``match_type="semantic"``,
-    ``suggested_action="merge"`` at score ≥ 0.95 (:907), top-``limit``.
-    Candidates via the banded hyperplane LSH (the embedding-near-dup scale
-    path); exact cosine verifies every emitted score.
-    """
-    pairs = pairwise_cosine_above_banded(
-        claim_vectors, threshold, id_col=id_col, vec_col=vec_col,
-        bands=bands, rows_per_band=rows_per_band,
-    )
-    return _ranked_matches(
-        pairs, "cosine", threshold, limit, "semantic", merge_at=0.95
-    )
+    return _ranked_matches(pairs, "similarity", threshold, limit)
 
 
 def merge_claims(
@@ -149,9 +114,8 @@ def merge_claims(
 
     Inputs: ``claims`` keyed by ``id_col`` with optional ``status`` and an
     ``entity_col`` array of linked entity ids; ``merge_plan`` =
-    (primary_claim_id, member_id) rows — e.g. the ``suggested_action ==
-    'merge'`` pairs from :func:`similar_claims_semantic` resolved to
-    groups, or :func:`operators.dedup.duplicate_groups` output renamed;
+    (primary_claim_id, member_id) rows — e.g.
+    :func:`operators.dedup.duplicate_groups` output renamed;
     ``evidence`` keyed by ``evidence_id`` with ``claim_id`` and
     ``relationship`` ('supports' / 'refutes' / other).
 

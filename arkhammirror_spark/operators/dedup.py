@@ -156,9 +156,8 @@ def lsh_candidate_pairs(
     so a bucket's join fan-out is bounded by bucket_cap^2 while every
     surviving member still pairs with every other (near-identical pages
     collapse to the same keeper set either way). `truncated` flags pairs
-    whose every co-occurrence was in a capped bucket; the dropped-member
-    recall audit is `lsh_bucket_audit`. bucket_cap=None disables the
-    guard entirely."""
+    whose every co-occurrence was in a capped bucket. bucket_cap=None
+    disables the guard entirely."""
     banded = _banded_buckets(sigs, id_col, bands, rows)
     if bucket_cap is not None:
         w = Window.partitionBy("band", "bucket").orderBy(id_col)
@@ -197,54 +196,6 @@ def lsh_candidate_pairs(
     )
 
 
-def lsh_bucket_audit(
-    sigs: DataFrame,
-    id_col: str = "doc_id",
-    bands: int = 32,
-    rows: int = 4,
-    bucket_cap: int = 5000,
-) -> DataFrame:
-    """(band, bucket, size, kept, dropped) for every bucket over the cap —
-    the recall ledger for truncated candidate generation."""
-    return (
-        _banded_buckets(sigs, id_col, bands, rows)
-        .groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("size"))
-        .where(F.col("size") > bucket_cap)
-        .select(
-            "band",
-            "bucket",
-            "size",
-            F.lit(bucket_cap).cast("long").alias("kept"),
-            (F.col("size") - bucket_cap).cast("long").alias("dropped"),
-        )
-    )
-
-
-def jaccard_for_pairs(
-    pairs: DataFrame, sh: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact Jaccard for given (id_a, id_b) pairs from a (id, shingle) or
-    slim (id, h) frame — the join only needs shingle equality."""
-    key = "h" if "h" in sh.columns else "shingle"
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.select(F.col(id_col).alias("id_a"), key)
-    b = sh.select(F.col(id_col).alias("id_b"), key)
-    shared = (
-        pairs.join(a, "id_a").join(b, ["id_b", key]).groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    return (
-        shared.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_shared")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("n_shared")),
-        )
-    )
-
-
 def verified_neardup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -260,7 +211,7 @@ def verified_neardup_pairs(
 
     `bucket_cap` forwards to lsh_candidate_pairs' hot-bucket guard; a
     capped bucket loses its kept-x-dropped pairs too (bounded recall by
-    design — audit with lsh_bucket_audit, disable with bucket_cap=None).
+    design — disable with bucket_cap=None).
 
     Storage discipline (CLAUDE.md invariant 5): the RAW shingle frame is
     ~n× the corpus text and is never cached. Instead the slim HASHED frame
@@ -738,53 +689,6 @@ def content_hashes(
     )
     sims = simhash64_reference(df, id_col, text_col)
     return base.join(sims, id_col)
-
-
-def similar_documents(
-    hashes: DataFrame,
-    source_id,
-    threshold: float = 0.85,
-    limit: int = 20,
-    id_col: str = "doc_id",
-    sig_col: str = "simhash",
-) -> DataFrame:
-    """Documents similar to `source_id` by SimHash (deduplication.py's
-    find_similar_documents, :326-401): similarity = 1 - hamming/64,
-    filtered >= threshold (default 0.85, the service's config default,
-    :210), match_type exact (h=0) / near (h<=5) / content_similar,
-    similarity rounded to 4, strongest first.
-
-    The reference scans every hash in driver Python; this is the same
-    math as one filtered column expression over the hash table (the
-    banded join in simhash_pairs_from_sigs is the all-pairs analogue).
-    Ties at equal similarity order by id (the reference's stable sort
-    leaves them in unspecified DB row order)."""
-    src = hashes.where(F.col(id_col) == source_id).select(
-        F.col(sig_col).alias("_src_sig")
-    )
-    h = F.bit_count(F.col(sig_col).bitwiseXOR(F.col("_src_sig")))
-    sim = F.lit(1.0) - h.cast("double") / F.lit(64.0)
-    return (
-        hashes.where(F.col(id_col) != source_id)
-        .crossJoin(F.broadcast(src))
-        .withColumn("hamming_distance", h.cast("long"))
-        .withColumn("similarity_score", F.round(sim, 4))
-        .where(sim >= threshold)
-        .withColumn(
-            "match_type",
-            F.when(F.col("hamming_distance") == 0, "exact")
-            .when(F.col("hamming_distance") <= 5, "near")
-            .otherwise("content_similar"),
-        )
-        .select(
-            F.col(id_col).alias("document_id"),
-            "similarity_score",
-            "hamming_distance",
-            "match_type",
-        )
-        .orderBy(F.desc("similarity_score"), F.asc("document_id"))
-        .limit(limit)
-    )
 
 
 def duplicate_groups(

@@ -7,11 +7,10 @@ doc), HAVING count ≥ min, ORDER BY count DESC LIMIT n — plus edge weight
 min(1, count/10) (builder.py:420-432) and node degrees (builder.py:439-456).
 
 Scale notes:
-- mentions are deduped to distinct (doc, name) pairs BEFORE the self-join —
-  output-identical (the agg counts distinct docs) and it collapses the join
-  input by the per-doc mention multiplicity, which is what explodes at 100 TB;
-- the join shuffles both sides on the doc key (the pipeline pre-partitions by
-  url hash so this is a local co-partitioned join under AQE);
+- no self-join: each doc's distinct names become one sorted array and the
+  i<j pairs explode inside that doc's task — output-identical (each
+  (a, b, doc) appears once, so count(*) ≡ COUNT(DISTINCT doc)), and the
+  per-doc mention multiplicity never reaches a shuffle;
 - ORDER BY+LIMIT compiles to TakeOrderedAndProject (no global sort);
   deterministic tiebreak on the pair names.
 """
@@ -33,45 +32,13 @@ def comention_edges(
     # combinable), then explode the i<j combinations natively. Output is
     # identical to the self-join + COUNT(DISTINCT) form — each (a, b, doc)
     # appears exactly once, so count(*) ≡ COUNT(DISTINCT doc) — but the plan
-    # has two shuffles instead of four and no join at all. Per-doc entity
-    # counts are bounded (documents are bounded size), so the combination
-    # explosion is O(m²) with small m, inside one task.
+    # has two shuffles instead of four and no join at all.
     per_doc = mentions.groupBy(F.col(doc_col).alias("doc")).agg(
         F.sort_array(F.collect_set(F.lower(F.col("text")))).alias("names")
     )
-    n = F.size("names")
-    pair_structs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.transform(
-                F.slice(F.col("names"), i + 1, n - i),
-                lambda y: F.struct(
-                    F.element_at(F.col("names"), i).alias("entity_a"),
-                    y.alias("entity_b"),
-                ),
-            ),
-        )
+    return comention_edges_from_name_sets(
+        per_doc, "names", "doc", min_count, limit, include_doc_ids
     )
-    exploded = per_doc.where(n >= 2).select(
-        "doc", F.explode(pair_structs).alias("p")
-    ).select("doc", "p.entity_a", "p.entity_b")
-
-    aggs = [F.count(F.lit(1)).alias("co_occurrence_count")]
-    if include_doc_ids:
-        aggs.append(F.sort_array(F.collect_list(F.col("doc"))).alias("document_ids"))
-    edges = (
-        exploded.groupBy("entity_a", "entity_b")
-        .agg(*aggs)
-        .where(F.col("co_occurrence_count") >= min_count)
-        .withColumn(
-            "weight",
-            F.least(F.lit(1.0), F.col("co_occurrence_count") / F.lit(10.0)),
-        )
-    )
-    ordered = edges.orderBy(
-        F.desc("co_occurrence_count"), F.asc("entity_a"), F.asc("entity_b")
-    )
-    return ordered.limit(limit) if limit else ordered
 
 
 def comention_edges_from_name_sets(
@@ -82,10 +49,12 @@ def comention_edges_from_name_sets(
     limit: int | None = 1000,
     include_doc_ids: bool = False,
 ) -> DataFrame:
-    """Edge build from per-doc sorted-distinct name arrays (the fused extract
-    already produced them): the per-doc groupBy disappears entirely — one
-    narrow pair explosion feeding a tiny partial-aggregated count. Output is
-    identical to ``comention_edges`` over the exploded mentions."""
+    """Edge build from per-doc sorted-distinct name arrays: one narrow pair
+    explosion feeding a tiny partial-aggregated count. The pipeline passes
+    the arrays its fused extract already produced (no per-doc groupBy at
+    all); ``comention_edges`` builds them from mention rows. Per-doc entity
+    counts are bounded (documents are bounded size), so the combination
+    explosion is O(m²) with small m, inside one task."""
     n = F.size(names_col)
     pair_structs = F.flatten(
         F.transform(

@@ -1,37 +1,17 @@
-"""Model-gated embedding generation — the arkham-shard-embed contract on
-Spark.
+"""Embedding stand-ins for the semantic chunker (the arkham-shard-embed
+model contract).
 
 Reference lineage: arkham_shard_embed/embedder.py — EmbeddingManager loads a
-sentence-transformers model once (:67-130), embeds in batches of
-config.batch_size = 32 with optional L2 normalization (:196-226;
-PACKAGE_SUMMARY.md "Batch (32 texts)" throughput contract).
-
-Spark pattern (same as ner_model.py): lazy per-executor-python-worker
-singleton inside the mapInPandas closure, reused across Arrow batches. This
-sandbox has no sentence-transformers, so the operator transparently falls
-back to a DETERMINISTIC fake embedding (md5-derived unit vector) — same
-schema, same downstream consumers (similarity/anomaly/ANN operators), so a
-real model is a config change, not a code change.
+sentence-transformers model once (:67-130). `_load_model` does the same and
+returns None when the library is absent (it is in this sandbox), and
+`fake_embedding` is the DETERMINISTIC fallback (md5-derived unit vector) —
+same shape, so a real model is a config change, not a code change.
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
-from typing import Iterator
-
-import pandas as pd
-
-from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
-
-DEFAULT_BATCH_SIZE = 32  # embedder.py config.batch_size default
 
 
 def fake_embedding(text: str, dim: int = 64, normalize: bool = True) -> list[float]:
@@ -61,50 +41,3 @@ def _load_model(model_name: str):
         return SentenceTransformer(model_name)
     except Exception:
         return None
-
-
-def embed_texts(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    model_name: str = "BAAI/bge-m3",
-    dim: int = 64,
-    batch_size: int = DEFAULT_BATCH_SIZE,
-    normalize: bool = True,
-) -> DataFrame:
-    """(id, embedding) rows; sentence-transformers when importable, the
-    deterministic fake otherwise. Batches of `batch_size` inside each Arrow
-    batch mirror the reference's encode(batch_size=32) contract (and bound
-    model peak memory per worker)."""
-    from ..shipping import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
-    schema = StructType(
-        [
-            StructField(id_col, LongType(), False),
-            StructField("embedding", ArrayType(DoubleType(), False), False),
-        ]
-    )
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = _load_model(model_name)  # once per python worker
-        for pdf in batches:
-            ids = pdf[id_col].tolist()
-            texts = [t or "" for t in pdf[text_col].tolist()]
-            vecs: list[list[float]] = []
-            for i in range(0, len(texts), batch_size):
-                chunk = texts[i : i + batch_size]
-                if model is not None:
-                    enc = model.encode(
-                        chunk, batch_size=batch_size,
-                        normalize_embeddings=normalize,
-                    )
-                    vecs.extend([list(map(float, v)) for v in enc])
-                else:
-                    vecs.extend(
-                        fake_embedding(t, dim=dim, normalize=normalize)
-                        for t in chunk
-                    )
-            yield pd.DataFrame({id_col: ids, "embedding": vecs})
-
-    return df.select(id_col, text_col).mapInPandas(_run, schema)

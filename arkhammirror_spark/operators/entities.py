@@ -123,10 +123,3 @@ _TYPE_MAP = {
     "WORK_OF_ART": "DOCUMENT",
     "OTHER": "OTHER",
 }
-
-
-def map_entity_type(entity_type: Column) -> Column:
-    expr: Column = F.lit("OTHER")
-    mapping = F.create_map(*[F.lit(x) for kv in _TYPE_MAP.items() for x in kv])
-    expr = F.coalesce(mapping.getItem(entity_type), F.lit("OTHER"))
-    return expr

@@ -1,5 +1,5 @@
 """Geospatial graph analysis — coordinate extraction, haversine
-distances, bounds, clustering, bounds filtering.
+distances, bounds, bounds filtering.
 
 Reference lineage: arkham-shard-graph/geospatial.py (`GeoGraphEngine`):
 - ``extract_geo_nodes`` (:115-217): coordinate resolution cascade —
@@ -12,8 +12,6 @@ Reference lineage: arkham-shard-graph/geospatial.py (`GeoGraphEngine`):
 - ``calculate_edge_distances`` (:292-333): per-edge distance for edges
   whose BOTH endpoints resolved.
 - ``calculate_bounds`` (:335-348) + ``GeoBounds.center``/``contains``.
-- ``cluster_nodes`` (:350-413): greedy input-order distance clustering
-  with mean center and max-distance radius.
 - ``filter_by_bounds`` (:458-482): bounds filter + endpoint-pruned
   edges + total distance.
 
@@ -22,8 +20,7 @@ Catalyst column math (radians/sin/cos/atan2 stay in whole-stage
 codegen — the haversine never touches Python); the extraction cascade
 runs as ONE Arrow-batched pass because its middle arm anchors a regex
 on each row's OWN label (a per-row pattern no native regex function
-expresses); greedy clustering is input-order-sequential by definition
-and stays a driver lane under the repo's visualization-cap convention.
+expresses).
 """
 
 from __future__ import annotations
@@ -279,36 +276,3 @@ def filter_by_bounds(
         "nodes": fn, "edges": fe, "bounds": geo_bounds(fn),
         "total": total,
     }
-
-
-def cluster_geo_nodes(node_rows, radius_km: float = 50.0) -> list[dict]:
-    """Greedy input-order clustering (:350-413) — driver lane;
-    ``node_rows`` = (entity_id, lat, lng) in the reference's node
-    order (composition is order-dependent by design)."""
-    clusters: list[dict] = []
-    assigned: set = set()
-    rows = list(node_rows)
-    for eid, lat, lng in rows:
-        if eid in assigned:
-            continue
-        members = [(eid, lat, lng)]
-        assigned.add(eid)
-        for oid, olat, olng in rows:
-            if oid in assigned:
-                continue
-            if haversine_py(lat, lng, olat, olng) <= radius_km:
-                members.append((oid, olat, olng))
-                assigned.add(oid)
-        clat = sum(m[1] for m in members) / len(members)
-        clng = sum(m[2] for m in members) / len(members)
-        radius = max(
-            (haversine_py(clat, clng, m[1], m[2]) for m in members),
-            default=0.0,
-        )
-        clusters.append({
-            "id": f"cluster_{len(clusters)}",
-            "center_lat": clat, "center_lng": clng,
-            "node_ids": [m[0] for m in members],
-            "radius_km": radius,
-        })
-    return clusters

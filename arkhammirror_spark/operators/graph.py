@@ -1,18 +1,18 @@
 """Graph analytics over the co-mention edge table.
 
 Reference lineage: arkham-shard-graph/arkham_shard_graph/algorithms.py
-(pure-Python in-memory adjacency: degree :398, PageRank :496, connected
-components :1025, shortest path :31, clustering :996). The reference caps
-graphs at 500 nodes / 1000 edges (builder.py:166,264), so driver-side
-computation over the collected edge list is proportionate; for
-beyond-memory graphs, `connected_components_distributed` provides the
-iterative min-label-propagation (hash-join per round, AQE-planned) that
-scales with the cluster.
+(pure-Python in-memory adjacency: PageRank :496, connected components
+:1025, betweenness :436, Louvain :583). The reference caps graphs at 500
+nodes / 1000 edges (builder.py:166,264), so driver-side computation over
+the collected edge list is proportionate; for beyond-memory graphs,
+`connected_components_distributed` provides the iterative
+min-label-propagation (hash-join per round, AQE-planned) that scales with
+the cluster.
 """
 
 from __future__ import annotations
 
-from collections import defaultdict, deque
+from collections import defaultdict
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -26,15 +26,6 @@ def _adjacency(edge_rows) -> dict[str, set[str]]:
         adj[r["entity_a"]].add(r["entity_b"])
         adj[r["entity_b"]].add(r["entity_a"])
     return adj
-
-
-def degree_centrality(edges: DataFrame) -> dict[str, float]:
-    """Normalized degree (algorithms.py:398-434)."""
-    adj = _adjacency(edges.collect())
-    n = len(adj)
-    if n <= 1:
-        return {k: 0.0 for k in adj}
-    return {k: len(v) / (n - 1) for k, v in adj.items()}
 
 
 def pagerank(
@@ -53,47 +44,6 @@ def pagerank(
             nxt[node] = (1 - damping) / n + damping * incoming
         rank = nxt
     return rank
-
-
-def connected_components(edges: DataFrame) -> dict[str, int]:
-    """Union-find components (algorithms.py:1025)."""
-    adj = _adjacency(edges.collect())
-    comp: dict[str, int] = {}
-    cid = 0
-    for start in adj:
-        if start in comp:
-            continue
-        queue = deque([start])
-        while queue:
-            node = queue.popleft()
-            if node in comp:
-                continue
-            comp[node] = cid
-            queue.extend(adj[node] - comp.keys())
-        cid += 1
-    return comp
-
-
-def shortest_path(edges: DataFrame, src: str, dst: str) -> list[str] | None:
-    """Unweighted BFS path (algorithms.py:31-85)."""
-    adj = _adjacency(edges.collect())
-    if src not in adj:
-        return None
-    prev: dict[str, str] = {src: src}
-    queue = deque([src])
-    while queue:
-        node = queue.popleft()
-        if node == dst:
-            path = [node]
-            while node != src:
-                node = prev[node]
-                path.append(node)
-            return path[::-1]
-        for nb in adj[node]:
-            if nb not in prev:
-                prev[nb] = node
-                queue.append(nb)
-    return None
 
 
 def ego_network(edges: DataFrame, center: str, depth: int = 1) -> DataFrame:
@@ -373,8 +323,8 @@ def label_propagation_communities(
     edges: DataFrame, max_iterations: int = 20, weight_col: str | None = None
 ) -> DataFrame:
     """Distributed community detection for graphs beyond the reference's
-    500-node cap — the scale sibling of `graph_algorithms.
-    louvain_communities`. Louvain's local-moving is inherently sequential
+    500-node cap — the scale sibling of the reference's Louvain
+    communities (algorithms.py:583). Louvain's local-moving is inherently sequential
     (node-by-node moves over an in-memory graph), so the distributed lane
     uses synchronous WEIGHTED LABEL PROPAGATION: each round every node
     adopts the label with the greatest incident edge-weight sum among its

@@ -1,26 +1,15 @@
-"""Driver-side graph analytics over the capped co-mention edge list.
+"""Driver-side betweenness centrality over a collected edge list — the
+reference `graph_scoring.betweenness_distributed` is tested against.
 
 Reference lineage: arkham-shard-graph/arkham_shard_graph/algorithms.py —
-all-paths DFS (:87), weighted Dijkstra path (:150), constrained BFS path
-(:224), paths-through (:314), betweenness (:436), Louvain-style communities
-(:583), statistics (:707), clustering (:996), structural holes (:1332).
-
-The reference caps graphs at 500 nodes / 1000 edges (builder.py:166,264), so
-pure-Python computation over the collected LIMIT-1000 edge table is
-proportionate — these functions take a plain edge list (collected rows or
-tuples) and reproduce the reference's semantics including its quirks
-(adjacency in edge-append order, heap tie ordering, the shortest-path
-enumeration condition, self-pair modularity term). Distributed siblings for
-beyond-cap graphs live in operators.graph (connected components, PageRank,
-statistics as DataFrame aggregations).
-
-tests/test_graph_algorithms.py fuzzes every function against the ACTUAL
+betweenness (:436). It reproduces the reference's semantics including its
+quirks (adjacency in edge-append order, the shortest-path enumeration
+condition). tests/test_graph_algorithms.py fuzzes it against the ACTUAL
 reference module loaded by file path.
 """
 
 from __future__ import annotations
 
-import heapq
 from collections import defaultdict, deque
 
 # An edge is (source, target, weight, relationship_type). Helpers accept
@@ -48,14 +37,6 @@ def _adj(edges) -> dict[str, list[str]]:
     return adj
 
 
-def _wadj(edges) -> dict[str, list[tuple[str, float]]]:
-    adj: dict[str, list[tuple[str, float]]] = defaultdict(list)
-    for s, t, w, _r in edges:
-        adj[s].append((t, w))
-        adj[t].append((s, w))
-    return adj
-
-
 def _nodes_in_order(edges) -> list[str]:
     """First-appearance node order (source before target, edge order)."""
     seen: dict[str, None] = {}
@@ -63,184 +44,6 @@ def _nodes_in_order(edges) -> list[str]:
         seen.setdefault(s)
         seen.setdefault(t)
     return list(seen)
-
-
-def _path_weight(edges, path: list[str]) -> float:
-    """Sum of weights along a path, first matching edge per hop
-    (algorithms.py _get_path_edges: later duplicates overwrite earlier in
-    the lookup map, so the LAST edge for a pair wins)."""
-    emap: dict[tuple[str, str], float] = {}
-    for s, t, w, _r in edges:
-        emap[(s, t)] = w
-        emap[(t, s)] = w
-    total = 0.0
-    for i in range(len(path) - 1):
-        w = emap.get((path[i], path[i + 1]))
-        if w is not None:
-            total += w
-    return total
-
-
-def all_paths(
-    edges, source: str, target: str, max_depth: int = 6, max_paths: int = 10
-) -> list[dict]:
-    """DFS path enumeration (algorithms.py:87-146), shortest first."""
-    edges = _norm_edges(edges)
-    adj = _adj(edges)
-    found: list[dict] = []
-
-    def dfs(cur: str, path: list[str], visited: set[str]) -> None:
-        if len(found) >= max_paths or len(path) > max_depth + 1:
-            return
-        if cur == target:
-            found.append(
-                {
-                    "path": list(path),
-                    "total_weight": _path_weight(edges, path),
-                    "path_length": len(path) - 1,
-                }
-            )
-            return
-        for nb in adj.get(cur, []):
-            if nb not in visited:
-                visited.add(nb)
-                path.append(nb)
-                dfs(nb, path, visited)
-                path.pop()
-                visited.remove(nb)
-
-    dfs(source, [source], {source})
-    found.sort(key=lambda p: p["path_length"])
-    return found
-
-
-def weighted_path(
-    edges, source: str, target: str, max_depth: int = 10,
-    use_max_weight: bool = True,
-) -> dict | None:
-    """Dijkstra (algorithms.py:150-222); max-weight mode negates weights."""
-    edges = _norm_edges(edges)
-    adj = _wadj(edges)
-    heap: list[tuple[float, int, str, list[str]]] = [(0.0, 0, source, [source])]
-    settled: dict[str, float] = {}
-    while heap:
-        cost, plen, cur, path = heapq.heappop(heap)
-        if plen > max_depth:
-            continue
-        if cur in settled:
-            continue
-        settled[cur] = cost
-        if cur == target:
-            return {
-                "path": path,
-                "total_weight": _path_weight(edges, path),
-                "path_length": len(path) - 1,
-            }
-        for nb, w in adj.get(cur, []):
-            if nb not in settled:
-                step = -w if use_max_weight else w
-                heapq.heappush(heap, (cost + step, plen + 1, nb, path + [nb]))
-    return None
-
-
-def constrained_path(
-    edges,
-    source: str,
-    target: str,
-    required: list[str] | None = None,
-    excluded: list[str] | None = None,
-    required_types: list[str] | None = None,
-    min_edge_weight: float = 0.0,
-    max_depth: int = 8,
-) -> dict | None:
-    """BFS with (node, required-subset) state (algorithms.py:224-312)."""
-    edges = _norm_edges(edges)
-    req = set(required or [])
-    excl = set(excluded or [])
-    types = set(required_types) if required_types else None
-
-    adj: dict[str, list[tuple[str, float, str]]] = defaultdict(list)
-    for s, t, w, r in edges:
-        if types and r not in types:
-            continue
-        if w < min_edge_weight:
-            continue
-        adj[s].append((t, w, r))
-        adj[t].append((s, w, r))
-
-    init = req & {source}
-    queue = deque([(source, [source], init)])
-    seen = {(source, frozenset(init))}
-    while queue:
-        cur, path, have = queue.popleft()
-        if len(path) > max_depth + 1:
-            continue
-        if cur == target and have >= req:
-            return {
-                "path": path,
-                "total_weight": _path_weight(edges, path),
-                "path_length": len(path) - 1,
-            }
-        for nb, _w, _r in adj.get(cur, []):
-            if nb in excl or nb in path:
-                continue
-            nhave = have | ({nb} & req)
-            key = (nb, frozenset(nhave))
-            if key not in seen:
-                seen.add(key)
-                queue.append((nb, path + [nb], nhave))
-    return None
-
-
-def paths_through(
-    edges,
-    intermediate: str,
-    node_degrees: dict[str, int] | None = None,
-    max_sources: int = 5,
-    max_targets: int = 5,
-    max_depth: int = 3,
-) -> list[dict]:
-    """Paths bridged by one entity (algorithms.py:314-396): BFS reachability
-    around it, top-degree source/target candidates (ties keep BFS discovery
-    order — dict order, as the reference's stable sort over dict keys does),
-    constrained path requiring the intermediate, sorted by weight desc."""
-    edges = _norm_edges(edges)
-    adj = _adj(edges)
-    if node_degrees is None:
-        node_degrees = {k: len(v) for k, v in adj.items()}
-
-    reach: dict[str, int] = {}
-    queue = deque([(intermediate, 0)])
-    visited = {intermediate}
-    while queue:
-        cur, dist = queue.popleft()
-        if dist > max_depth:
-            continue
-        if cur != intermediate:
-            reach[cur] = dist
-        for nb in adj.get(cur, []):
-            if nb not in visited:
-                visited.add(nb)
-                queue.append((nb, dist + 1))
-
-    srcs = sorted(reach.keys(), key=lambda x: node_degrees.get(x, 0), reverse=True)[
-        :max_sources
-    ]
-    tgts = sorted(reach.keys(), key=lambda x: node_degrees.get(x, 0), reverse=True)[
-        :max_targets
-    ]
-    out = []
-    for s in srcs:
-        for t in tgts:
-            if s == t:
-                continue
-            p = constrained_path(
-                edges, s, t, required=[intermediate], max_depth=max_depth * 2 + 1
-            )
-            if p:
-                out.append(p)
-    out.sort(key=lambda p: p["total_weight"], reverse=True)
-    return out
 
 
 def _shortest_path_transits(adj, source: str, all_nodes: list[str]) -> dict[str, int]:
@@ -293,225 +96,3 @@ def betweenness_centrality(edges, limit: int = 50) -> list[dict]:
         {"node": k, "score": (v / norm if norm > 0 else 0.0), "rank": i}
         for i, (k, v) in enumerate(ranked[:limit], start=1)
     ]
-
-
-def louvain_communities(
-    edges, min_community_size: int = 3, resolution: float = 1.0
-) -> tuple[list[dict], float]:
-    """Single-level Louvain-style local moving (algorithms.py:583-705) with
-    the reference's simplified gain (edge weight to target community minus
-    weight to current, scaled by resolution) and its modularity formula
-    (which includes the self-pair term)."""
-    edges = _norm_edges(edges)
-    nodes = _nodes_in_order(edges)
-    wadj = _wadj(edges)
-    comm = {n: n for n in nodes}
-    total_weight = sum(w for _s, _t, w, _r in edges)
-    if total_weight == 0:
-        return [], 0.0
-
-    for _ in range(50):
-        moved = False
-        for node in nodes:
-            cur = comm[node]
-            best, best_gain = cur, 0.0
-            for cand in {comm[nb] for nb, _w in wadj.get(node, [])}:
-                if cand == cur:
-                    continue
-                to_cand = sum(
-                    w for nb, w in wadj.get(node, []) if comm[nb] == cand
-                )
-                to_cur = sum(w for nb, w in wadj.get(node, []) if comm[nb] == cur)
-                gain = (to_cand - to_cur) * resolution
-                if gain > best_gain:
-                    best_gain, best = gain, cand
-            if best != cur:
-                comm[node] = best
-                moved = True
-        if not moved:
-            break
-
-    members: dict[str, list[str]] = defaultdict(list)
-    for n, c in comm.items():
-        members[c].append(n)
-
-    communities = []
-    for cid, ms in members.items():
-        if len(ms) < min_community_size:
-            continue
-        mset = ms  # membership check against the list, as the reference does
-        internal = external = 0
-        for m in ms:
-            for nb, _w in wadj.get(m, []):
-                if nb in mset:
-                    internal += 1
-                else:
-                    external += 1
-        k = len(ms)
-        max_e = k * (k - 1)
-        communities.append(
-            {
-                "id": f"comm_{cid}",
-                "members": ms,
-                "size": k,
-                "density": internal / max_e if max_e > 0 else 0.0,
-                "internal_edges": internal // 2,
-                "external_edges": external,
-            }
-        )
-    return communities, modularity(comm, wadj, total_weight)
-
-
-def modularity(
-    comm: dict[str, str],
-    wadj: dict[str, list[tuple[str, float]]],
-    total_weight: float,
-) -> float:
-    """The reference's modularity (:961-994) — per same-community pair
-    (i ≤ j, INCLUDING i == j) actual minus expected weight over total."""
-    if total_weight == 0:
-        return 0.0
-    groups: dict[str, list[str]] = defaultdict(list)
-    for n, c in comm.items():
-        groups[c].append(n)
-    q = 0.0
-    for ms in groups.values():
-        for i, a in enumerate(ms):
-            for b in ms[i:]:
-                actual = sum(w for nb, w in wadj.get(a, []) if nb == b)
-                deg_a = sum(w for _nb, w in wadj.get(a, []))
-                deg_b = sum(w for _nb, w in wadj.get(b, []))
-                q += (actual - deg_a * deg_b / (2 * total_weight)) / total_weight
-    return q
-
-
-def avg_clustering(edges) -> float:
-    """Average clustering coefficient (algorithms.py:996-1023): nodes with
-    degree < 2 are excluded from the average."""
-    edges = _norm_edges(edges)
-    adj = _adj(edges)
-    coeffs = []
-    for node in _nodes_in_order(edges):
-        nbs = set(adj.get(node, []))
-        k = len(nbs)
-        if k < 2:
-            continue
-        closed = 0
-        for a in nbs:
-            for b in nbs:
-                if a < b and b in adj.get(a, []):
-                    closed += 1
-        coeffs.append(closed / (k * (k - 1) / 2))
-    return sum(coeffs) / len(coeffs) if coeffs else 0.0
-
-
-def structural_holes(edges, entity_id: str) -> dict[str, float]:
-    """Burt's structural-holes metrics (algorithms.py:1333-1482): effective
-    size, efficiency, constraint, hierarchy (reference's bounded Coleman-
-    Theil concentration)."""
-    edges = _norm_edges(edges)
-    wadj = _wadj(edges)
-    ego = wadj.get(entity_id, [])
-    alters = [nb for nb, _w in ego]
-    if not alters:
-        return {
-            "effective_size": 0.0,
-            "efficiency": 0.0,
-            "constraint": 1.0,
-            "hierarchy": 0.0,
-        }
-    weights = {}
-    total = 0.0
-    for nb, w in ego:
-        weights[nb] = w
-        total += w
-    p = {a: (weights[a] / total if total > 0 else 0.0) for a in alters}
-
-    def frac_to(q: str, j: str) -> float:
-        qn = wadj.get(q, [])
-        qt = sum(w for _nb, w in qn)
-        for nb, w in qn:
-            if nb == j:
-                return w / qt if qt > 0 else 0.0
-        return 0.0
-
-    redundancy = {
-        j: sum(p[q] * frac_to(q, j) for q in alters if q != j) for j in alters
-    }
-    eff = len(alters) - sum(redundancy.values())
-    constraint = 0.0
-    indiv = {}
-    for j in alters:
-        c = p[j] + sum(p[q] * frac_to(q, j) for q in alters if q != j)
-        indiv[j] = c * c
-        constraint += c * c
-
-    hierarchy = 0.0
-    if constraint > 0 and len(alters) > 1:
-        cs = list(indiv.values())
-        csum = sum(cs)
-        if csum > 0:
-            n = len(cs)
-            avg = csum / n
-            if avg > 0:
-                hierarchy = min(
-                    1.0, sum((c - avg) ** 2 for c in cs) / (n * avg * avg) / n
-                )
-    return {
-        "effective_size": eff,
-        "efficiency": eff / len(alters),
-        "constraint": constraint,
-        "hierarchy": hierarchy,
-    }
-
-
-def statistics_summary(edges, sample_cap: int = 50) -> dict:
-    """Whole-graph statistics (algorithms.py:707-792): density, avg degree,
-    avg clustering, component count, diameter + avg path length over BFS
-    from the first `sample_cap` nodes (the reference samples for perf)."""
-    edges = _norm_edges(edges)
-    adj = _adj(edges)
-    nodes = _nodes_in_order(edges)
-    n, e = len(nodes), len(edges)
-    if n == 0:
-        return {
-            "node_count": 0, "edge_count": 0, "density": 0.0, "avg_degree": 0.0,
-            "avg_clustering": 0.0, "connected_components": 0, "diameter": 0,
-            "avg_path_length": 0.0,
-        }
-    comp: dict[str, str] = {}
-    for start in nodes:
-        if start in comp:
-            continue
-        queue = deque([start])
-        while queue:
-            cur = queue.popleft()
-            if cur in comp:
-                continue
-            comp[cur] = start
-            queue.extend(nb for nb in adj.get(cur, []) if nb not in comp)
-
-    dists = []
-    diameter = 0
-    for src in nodes[:sample_cap]:
-        d = {src: 0}
-        queue = deque([src])
-        while queue:
-            cur = queue.popleft()
-            for nb in adj.get(cur, []):
-                if nb not in d:
-                    d[nb] = d[cur] + 1
-                    queue.append(nb)
-        for node, dist in d.items():
-            dists.append(dist)
-            diameter = max(diameter, dist)
-    return {
-        "node_count": n,
-        "edge_count": e,
-        "density": e / (n * (n - 1) / 2) if n > 1 else 0.0,
-        "avg_degree": sum(len(adj[x]) for x in nodes) / n,
-        "avg_clustering": avg_clustering(edges),
-        "connected_components": len(set(comp.values())),
-        "diameter": diameter,
-        "avg_path_length": sum(dists) / len(dists) if dists else 0.0,
-    }

@@ -1,13 +1,9 @@
-"""Graph export sinks: JSON / GraphML / GEXF (graph/exporter.py:24-265)
-plus a distributed JSONL lane.
+"""Graph export sinks: JSON / GraphML / GEXF (graph/exporter.py:24-265).
 
 The XML formats are single-document presentation sinks — the reference
 only ever exports its ≤500-node capped graphs — so the XML builders run
 driver-side over collected frames, spec-driven (attribute keys declared
-as data, one loop per section) rather than call-per-attribute. For
-graphs past the presentation cap, ``export_jsonl`` serializes node and
-edge frames as JSON lines entirely JVM-side (``to_json`` over structs),
-which a DataFrameWriter can emit as text at any scale.
+as data, one loop per section) rather than call-per-attribute.
 
 Byte-parity with the reference serializers (same stdlib ElementTree
 ``indent`` / ``json.dumps(indent=2)`` rendering) is pinned by the
@@ -21,7 +17,7 @@ import json
 from typing import Any
 from xml.etree import ElementTree as ET
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 _NODE_FIELDS = ("id", "entity_id", "label", "entity_type",
                 "document_count", "degree")
@@ -252,16 +248,3 @@ def _gexf_attvalue(parent, aid, value):
     av = ET.SubElement(parent, "attvalue")
     av.set("for", aid)
     av.set("value", value)
-
-
-def export_jsonl(
-    nodes: DataFrame, edges: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Scale lane: one JSON document per node/edge row, built JVM-side
-    (`to_json` over a struct of all columns) — write with
-    `df.write.text(...)` to export a graph of any size without a
-    collect; the XML formats above stay the capped presentation sinks."""
-    return (
-        nodes.select(F.to_json(F.struct(*nodes.columns)).alias("json")),
-        edges.select(F.to_json(F.struct(*edges.columns)).alias("json")),
-    )

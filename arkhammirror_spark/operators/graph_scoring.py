@@ -1,4 +1,4 @@
-"""Composite entity-importance scoring + the three centralities it adds.
+"""Composite entity-importance scoring.
 
 Reference lineage: arkham-shard-graph/scoring.py (`CompositeScorer`):
 - ``calculate_scores`` (:150-234): per-entity composite = normalized
@@ -17,20 +17,12 @@ Reference lineage: arkham-shard-graph/scoring.py (`CompositeScorer`):
   rated mentions, 0.5 neutral everywhere ratings are absent.
 - ``_calculate_corroboration_scores`` (:426-462): distinct-source count
   (fallback ``document_count``), score = 1 − 1/count, ≤1 → 0.
-- ``_eigenvector_centrality`` (:563-605) / ``_hits_centrality``
-  (:607-664) / ``_closeness_centrality`` (:666-713): the three
-  centralities the scorer adds beyond the repo's existing
-  pagerank/betweenness/degree lanes.
 
 The reference scores ONE ≤500-node visualization graph per call in
 driver Python; here the component scores and the composition are
 corpus-wide DataFrame aggregations (mention tables join once per
 component, every agg map-side combinable), so importance ranks over the
-full entity graph in a fixed number of shuffles. The centralities keep
-the repo's two-lane pattern: exact driver ports for the reference's
-≤500-cap envelope (differential-tested), plus a join-per-round
-distributed eigenvector (the CC/PageRank shape, per-round
-localCheckpoint) for graphs past it.
+full entity graph in a fixed number of shuffles.
 """
 
 from __future__ import annotations
@@ -71,197 +63,6 @@ class CompositeConfig:
             "credibility": self.credibility_weight / total,
             "corroboration": self.corroboration_weight / total,
         }
-
-
-# --- driver parity lane: the reference's own ≤500-cap envelope ----------
-
-
-def _sym_adjacency(edge_rows) -> dict[str, list[tuple[str, float]]]:
-    """_build_adjacency (:466-472): symmetric weighted lists."""
-    adj: dict[str, list[tuple[str, float]]] = {}
-    for s, t, w in edge_rows:
-        adj.setdefault(s, []).append((t, float(w)))
-        adj.setdefault(t, []).append((s, float(w)))
-    return adj
-
-
-def eigenvector_centrality(
-    edge_rows, node_ids, max_iterations: int = 100, tolerance: float = 1e-6
-) -> dict[str, float]:
-    """Power iteration with per-round L2 normalization (:563-605)."""
-    adj = _sym_adjacency(edge_rows)
-    scores = {nid: 1.0 for nid in node_ids}
-    for _ in range(max_iterations):
-        new = {
-            nid: sum(scores.get(nb, 0.0) * w for nb, w in adj.get(nid, []))
-            for nid in node_ids
-        }
-        norm = math.sqrt(sum(v * v for v in new.values()))
-        if norm > 0:
-            new = {k: v / norm for k, v in new.items()}
-        diff = max(abs(new[n] - scores[n]) for n in node_ids)
-        scores = new
-        if diff < tolerance:
-            break
-    return scores
-
-
-def hits_authority(
-    edge_rows, node_ids, max_iterations: int = 100, tolerance: float = 1e-6
-) -> dict[str, float]:
-    """HITS over the SYMMETRIC adjacency, authority side (:607-664) —
-    the reference builds undirected adjacency, so hubs and authorities
-    update against the same neighbor lists; the exact update order
-    (auth from old hubs, hubs from NEW auths, each L2-normalized) is
-    preserved."""
-    adj = _sym_adjacency(edge_rows)
-    hub = {nid: 1.0 for nid in node_ids}
-    auth = {nid: 1.0 for nid in node_ids}
-    for _ in range(max_iterations):
-        new_auth = {
-            nid: sum(hub.get(src, 0.0) * w for src, w in adj.get(nid, []))
-            for nid in node_ids
-        }
-        norm = math.sqrt(sum(v * v for v in new_auth.values()))
-        if norm > 0:
-            new_auth = {k: v / norm for k, v in new_auth.items()}
-        new_hub = {
-            nid: sum(new_auth.get(t, 0.0) * w for t, w in adj.get(nid, []))
-            for nid in node_ids
-        }
-        norm = math.sqrt(sum(v * v for v in new_hub.values()))
-        if norm > 0:
-            new_hub = {k: v / norm for k, v in new_hub.items()}
-        diff = max(abs(new_auth[n] - auth[n]) for n in node_ids)
-        hub, auth = new_hub, new_auth
-        if diff < tolerance:
-            break
-    return auth
-
-
-def closeness_centrality(
-    edge_rows, node_ids, sample_cap: int = 50
-) -> dict[str, float]:
-    """BFS closeness = 1/avg-distance over reachable nodes (:666-713),
-    including the reference's sampling quirks verbatim: only the FIRST
-    ``sample_cap`` nodes in ``node_ids`` order are computed, the rest
-    get the sampled average — node order is part of the semantics."""
-    from collections import deque
-
-    adj: dict[str, list[str]] = {}
-    for s, t, _w in edge_rows:
-        adj.setdefault(s, []).append(t)
-        adj.setdefault(t, []).append(s)
-    scores: dict[str, float] = {}
-    for nid in node_ids[:sample_cap]:
-        dist = {nid: 0}
-        q = deque([nid])
-        while q:
-            cur = q.popleft()
-            for nb in adj.get(cur, []):
-                if nb not in dist:
-                    dist[nb] = dist[cur] + 1
-                    q.append(nb)
-        reachable = len(dist) - 1
-        if reachable > 0:
-            avg = sum(dist.values()) / reachable
-            scores[nid] = 1.0 / avg if avg > 0 else 0.0
-        else:
-            scores[nid] = 0.0
-    avg_score = sum(scores.values()) / len(scores) if scores else 0.0
-    for nid in node_ids:
-        if nid not in scores:
-            scores[nid] = avg_score
-    return scores
-
-
-# --- distributed eigenvector (graphs past the driver envelope) ----------
-
-
-def eigenvector_centrality_distributed(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    weight_col: str | None = "weight",
-    max_iterations: int = 100,
-    tolerance: float = 1e-6,
-) -> DataFrame:
-    """Join-per-round power iteration: scores(v) ← Σ w(u,v)·scores(u)
-    over the symmetric edge frame, L2-normalized each round, stopping at
-    max|Δ| < tolerance — the same fixed point as the driver lane.
-
-    Two Spark jobs per round: (1) the heavy join+agg materialized once
-    as an eager localCheckpoint of (node, raw, old) — flat lineage, the
-    CC/PageRank invariant; (2) ONE 1-row stat job over that checkpoint
-    whose DAG folds the L2 norm (a broadcast 1-row subtree) together
-    with max|raw/norm − old|, so convergence costs no extra pass over
-    the joined frame (measured: 8 rounds on a 4k-node/20k-edge graph at
-    local[8] dropped 22.1s -> 14.1s vs the three-pass round). Returns
-    (node, score)."""
-    w = (
-        F.col(weight_col).cast("double")
-        if weight_col and weight_col in edges.columns
-        else F.lit(1.0)
-    )
-    sym = (
-        edges.select(
-            F.col(src_col).alias("a"), F.col(dst_col).alias("b"),
-            w.alias("w"),
-        )
-        .unionByName(
-            edges.select(
-                F.col(dst_col).alias("a"), F.col(src_col).alias("b"),
-                w.alias("w"),
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
-    nodes = sym.select(F.col("a").alias("node")).distinct()
-    scores = nodes.withColumn("score", F.lit(1.0)).localCheckpoint(
-        eager=True
-    )
-    for _ in range(max_iterations):
-        contrib = (
-            sym.join(scores, sym["a"] == scores["node"])
-            .groupBy(F.col("b").alias("node"))
-            .agg(F.sum(F.col("w") * F.col("score")).alias("raw"))
-        )
-        both = (
-            nodes.join(contrib, "node", "left")
-            .join(
-                scores.select("node", F.col("score").alias("old")),
-                "node",
-            )
-            .select(
-                "node", F.coalesce("raw", F.lit(0.0)).alias("raw"), "old"
-            )
-            .localCheckpoint(eager=True)
-        )
-        # the reference keeps raw scores when norm == 0 (:592-595);
-        # dividing by 1.0 reproduces that
-        norm_df = both.agg(
-            F.when(
-                F.sqrt(F.sum(F.col("raw") * F.col("raw"))) > 0,
-                F.sqrt(F.sum(F.col("raw") * F.col("raw"))),
-            ).otherwise(F.lit(1.0)).alias("nz")
-        )
-        stat = (
-            both.crossJoin(F.broadcast(norm_df))
-            .agg(
-                F.max(
-                    F.abs(F.col("raw") / F.col("nz") - F.col("old"))
-                ).alias("d"),
-                F.first("nz").alias("nz"),
-            )
-            .collect()[0]
-        )
-        delta, nz = stat["d"], stat["nz"]
-        scores = both.select(
-            "node", (F.col("raw") / F.lit(nz)).alias("score")
-        )
-        if delta is not None and delta < tolerance:
-            break
-    return scores
 
 
 # --- corpus-wide component scores + composition --------------------------

@@ -1,9 +1,6 @@
-"""Temporal graph evolution — snapshots, deltas, and churn metrics.
+"""Temporal graph evolution — the per-snapshot summary series.
 
 Reference lineage: arkham-shard-graph/temporal.py (`TemporalGraphEngine`):
-- ``get_temporal_range`` (:131-187): min/max mention timestamps,
-  distinct days, the interval auto-rule (≤7d → 1d, ≤30d → 7d,
-  ≤365d → 30d, else 90d), snapshot_count = max(1, days // interval).
 - ``generate_snapshots`` (:189-265) + ``get_snapshot_at`` (:267-407):
   snapshots at interval steps (interval re-widened to fit
   ``max_snapshots``, :229-233). Snapshot membership is MENTION-driven:
@@ -14,10 +11,6 @@ Reference lineage: arkham-shard-graph/temporal.py (`TemporalGraphEngine`):
   (:344-363). Each snapshot records added/removed node and edge sets vs
   the previous snapshot (:249-256; snapshot 0 diffs the empty set) and
   the n(n−1)/2 density (:384-388).
-- ``calculate_evolution_metrics`` (:409-474): added/removed totals,
-  growth per interval, the FIRST peak snapshot, stable elements present
-  in every snapshot, churn vs the final counts.
-- ``filter_snapshot_by_date_range`` (:476-532).
 
 The reference materializes every snapshot with one SQL round trip per
 snapshot and diffs sets in driver Python. Here nothing is materialized
@@ -28,7 +21,7 @@ per snapshot:
   min over docs of max(first mention of either endpoint in that doc))
   — counts come from one broadcast range-join against the
   ≤``max_snapshots`` snapshot frame, added = the k_first group,
-  removals are structurally zero, stable = k_first == 0.
+  removals are structurally zero.
 - windowed mode: each mention lands in at most TWO windows (step ==
   window, inclusive bounds), so the membership frame is ≤2× the
   mention count — never |snapshots|× — and added/removed are two
@@ -43,33 +36,6 @@ visualization caps, deliberately absent from the corpus-scale series
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def temporal_range(
-    mentions: DataFrame, ts_col: str = "created_at"
-) -> DataFrame:
-    """get_temporal_range (:146-183) as one aggregation. Returns
-    (earliest, latest, distinct_days, interval_days, snapshot_count)."""
-    agg = mentions.where(F.col(ts_col).isNotNull()).agg(
-        F.min(ts_col).alias("earliest"),
-        F.max(ts_col).alias("latest"),
-        F.count_distinct(F.to_date(ts_col)).alias("distinct_days"),
-    )
-    total_days = F.datediff(F.to_date("latest"), F.to_date("earliest"))
-    interval = (
-        F.when(total_days <= 7, 1)
-        .when(total_days <= 30, 7)
-        .when(total_days <= 365, 30)
-        .otherwise(90)
-    )
-    return agg.select(
-        "earliest", "latest",
-        F.greatest("distinct_days", F.lit(1)).alias("distinct_days"),
-        interval.alias("interval_days"),
-        F.greatest(
-            F.floor(total_days / interval), F.lit(1)
-        ).cast("long").alias("snapshot_count"),
-    )
 
 
 def _fit_interval(start, end, interval_days: int, max_snapshots: int) -> int:
@@ -274,153 +240,3 @@ def _window_memberships(m: DataFrame, snaps, interval_days: int):
         "source", "target", "k"
     ).distinct()
     return member_n, member_e
-
-
-def stable_counts(
-    mentions: DataFrame,
-    start,
-    end,
-    interval_days: int,
-    cumulative: bool = True,
-    max_snapshots: int = 50,
-    entity_col: str = "entity_id",
-    doc_col: str = "document_id",
-    ts_col: str = "created_at",
-) -> tuple[int, int]:
-    """Elements present in EVERY snapshot (:446-459) — cumulative:
-    first-member index 0; windowed: distinct window count == n_snap."""
-    spark = mentions.sparkSession
-    interval_days = _fit_interval(start, end, interval_days, max_snapshots)
-    n_snap = (end - start).days // interval_days + 1
-    m = mentions.select(
-        F.col(entity_col).alias("entity_id"),
-        F.col(doc_col).alias("document_id"),
-        F.to_date(ts_col).alias("d"),
-    ).where(F.col("d").isNotNull())
-    start_d = F.lit(str(start)).cast("date")
-
-    if cumulative:
-        sn = (
-            m.groupBy("entity_id")
-            .agg(F.min("d").alias("d0"))
-            .where(F.col("d0") <= start_d)
-            .count()
-        )
-        de_first = m.groupBy("document_id", "entity_id").agg(
-            F.min("d").alias("d0")
-        )
-        se = _pair_first(de_first).where(F.col("d0") <= start_d).count()
-        return sn, se
-
-    snaps = _snaps_frame(spark, start, n_snap, interval_days)
-    member_n, member_e = _window_memberships(m, snaps, interval_days)
-    sn = (
-        member_n.groupBy("entity_id")
-        .agg(F.count(F.lit(1)).alias("nk"))
-        .where(F.col("nk") == n_snap)
-        .count()
-    )
-    se = (
-        member_e.groupBy("source", "target")
-        .agg(F.count(F.lit(1)).alias("nk"))
-        .where(F.col("nk") == n_snap)
-        .count()
-    )
-    return sn, se
-
-
-def evolution_metrics(
-    summary: DataFrame,
-    stable_node_count: int = 0,
-    stable_edge_count: int = 0,
-) -> DataFrame:
-    """calculate_evolution_metrics (:409-474) over the summary stream:
-    added/removed totals, growth per interval, the FIRST peak snapshot
-    (strictly-greater updates, :440-444), churn vs the final counts.
-    Stable counts come from :func:`stable_counts` (the summary stream
-    alone cannot attribute removals to the snapshot-0 cohort)."""
-    rows = summary.orderBy("snapshot_idx").collect()
-    if not rows:
-        raise ValueError("empty snapshot summary")
-    totals = {
-        "na": sum(r["nodes_added"] for r in rows),
-        "nr": sum(r["nodes_removed"] for r in rows),
-        "ea": sum(r["edges_added"] for r in rows),
-        "er": sum(r["edges_removed"] for r in rows),
-    }
-    peak = max(rows, key=lambda r: (r["node_count"], -r["snapshot_idx"]))
-    num_intervals = max(1, len(rows) - 1)
-    final_nodes = rows[-1]["node_count"]
-    final_edges = rows[-1]["edge_count"]
-    spark = summary.sparkSession
-    return spark.createDataFrame(
-        [(
-            int(totals["na"]), int(totals["nr"]), int(totals["ea"]),
-            int(totals["er"]),
-            totals["na"] / num_intervals,
-            totals["ea"] / num_intervals,
-            int(peak["node_count"]), int(peak["edge_count"]),
-            str(peak["snapshot_date"]),
-            int(stable_node_count), int(stable_edge_count),
-            (
-                (totals["na"] + totals["nr"]) / final_nodes
-                if final_nodes else 0.0
-            ),
-            (
-                (totals["ea"] + totals["er"]) / final_edges
-                if final_edges else 0.0
-            ),
-        )],
-        "total_nodes_added long, total_nodes_removed long, "
-        "total_edges_added long, total_edges_removed long, "
-        "node_growth_rate double, edge_growth_rate double, "
-        "peak_node_count long, peak_edge_count long, "
-        "peak_date string, stable_node_count long, "
-        "stable_edge_count long, node_churn_rate double, "
-        "edge_churn_rate double",
-    )
-
-
-def filter_graph_by_date_range(
-    nodes: DataFrame,
-    edges: DataFrame,
-    min_date=None,
-    max_date=None,
-    node_ts: str = "created_at",
-    edge_ts: str = "created_at",
-) -> dict[str, DataFrame]:
-    """filter_snapshot_by_date_range (:476-532): date-filter nodes,
-    prune edges to surviving endpoints AND the edge's own date, plus the
-    summary row with the reference's density quirk (denominator 1 when
-    n ≤ 1)."""
-    fn = nodes
-    if min_date is not None:
-        fn = fn.where(F.col(node_ts) >= F.lit(str(min_date)).cast("date"))
-    if max_date is not None:
-        fn = fn.where(F.col(node_ts) <= F.lit(str(max_date)).cast("date"))
-    ids = fn.select(F.col("node_id").alias("_nid")).distinct()
-    fe = (
-        edges.join(ids, edges["source"] == F.col("_nid"), "left_semi")
-        .join(ids, edges["target"] == F.col("_nid"), "left_semi")
-    )
-    if min_date is not None:
-        fe = fe.where(F.col(edge_ts) >= F.lit(str(min_date)).cast("date"))
-    if max_date is not None:
-        fe = fe.where(F.col(edge_ts) <= F.lit(str(max_date)).cast("date"))
-    counts = fn.agg(F.count(F.lit(1)).alias("n")).withColumn(
-        "_k", F.lit(1)
-    ).join(
-        fe.agg(F.count(F.lit(1)).alias("e")).withColumn("_k", F.lit(1)),
-        "_k",
-    )
-    summary = counts.select(
-        F.col("n").cast("long").alias("node_count"),
-        F.col("e").cast("long").alias("edge_count"),
-        (
-            F.col("e")
-            / F.when(
-                F.col("n") > 1, F.col("n") * (F.col("n") - 1) / 2
-            ).otherwise(F.lit(1.0))
-        ).alias("density"),
-    )
-    return {"nodes": fn, "edges": fe, "summary": summary}

@@ -19,7 +19,6 @@ Reference lineage: arkham-shard-anomalies/hidden_content.py
   StegoIndicator confidences (entropy_spike 0.7, high_global_entropy
   0.8, file_type_mismatch 0.9, lsb_pattern = LSB confidence,
   histogram_anomaly 0.6), stego_confidence = max confidence.
-- ``quick_scan`` (:504-531): entropy-only screening.
 
 The reference scans ONE file per call with scipy + python-magic + PIL;
 here the scan is one Arrow-batched ``mapInPandas`` pass over a binary
@@ -438,50 +437,3 @@ def hidden_content_scan(
         F.sha2(F.col(data_col), 512).alias("sha512"),
     )
     return scanned.join(hashes, id_col)
-
-
-def quick_scan(
-    media: DataFrame,
-    id_col: str = "media_id",
-    data_col: str = "data",
-    chunk_size: int = ENTROPY_CHUNK_SIZE,
-) -> DataFrame:
-    """quick_scan (:504-531): entropy-only screening — the cheap first
-    pass a 100-TB sweep runs before full scans on the flagged tail."""
-    import pandas as pd
-
-    from ..shipping import ensure_shipped
-
-    ensure_shipped(media.sparkSession)
-
-    id_ddl = media.schema[id_col].dataType.simpleString()
-    schema = (
-        f"{id_col} {id_ddl}, global_entropy double, is_high_entropy "
-        "boolean, suspicious_regions long, requires_full_scan boolean"
-    )
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, data in zip(pdf[id_col], pdf[data_col]):
-                b = bytes(data) if data is not None else b""
-                e = shannon_entropy(b)
-                n_high = sum(
-                    1 for r in entropy_regions(b, chunk_size) if r[3]
-                )
-                rows.append({
-                    id_col: rid,
-                    "global_entropy": e,
-                    "is_high_entropy": e >= ENTROPY_THRESHOLD_HIGH,
-                    "suspicious_regions": n_high,
-                    "requires_full_scan": (
-                        n_high > 0 or e >= ENTROPY_THRESHOLD_SUSPICIOUS
-                    ),
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "global_entropy", "is_high_entropy",
-                         "suspicious_regions", "requires_full_scan"],
-            )
-
-    return media.select(id_col, data_col).mapInPandas(_run, schema)

@@ -1,4 +1,4 @@
-"""Entity linking + canonical merge.
+"""Entity linking.
 
 Reference lineage:
 - E12 linker (arkham-shard-parse/linkers/entity_linker.py:30-147): exact
@@ -17,8 +17,6 @@ the block. The first-character constraint is the one documented
 approximation (a pair whose edit touches position 0 is missed); length
 bucketing loses nothing for k < bucket width. Plans: shuffled hash/sort-merge
 equi-join, never a nested loop (asserted in tests/test_plan_hygiene.py).
-- merge_canonicals (arkham-frame/services/entities.py:899-959): relink
-  mentions of merged entities and union alias arrays → groupBy + array_union.
 """
 
 from __future__ import annotations
@@ -114,20 +112,3 @@ def link_mentions(
         )
     )
     return matched.unionByName(fuzzy)
-
-
-def merge_canonicals(canonical: DataFrame) -> DataFrame:
-    """Merge canonical entities sharing (lower(name), entity_type): union
-    aliases, sum mention counts (entities.py:899-959 semantics)."""
-    return (
-        canonical.groupBy(
-            F.lower(F.col("name")).alias("name_lower"), F.col("entity_type")
-        )
-        .agg(
-            F.array_sort(
-                F.array_distinct(F.flatten(F.collect_list(F.col("aliases"))))
-            ).alias("aliases"),
-            F.sum("mention_count").alias("mention_count"),
-            F.min("canonical_id").alias("canonical_id"),
-        )
-    )

@@ -17,9 +17,8 @@ once per worker; the mode decides what its absence means):
 
 The preprocessing ops the real lane exposes are numpy restatements of the
 reference's pipeline where cv2 isn't required: RGB→gray with the
-ITU-R BT.601 weights cv2.COLOR_RGB2GRAY uses, Otsu's threshold
-(image_worker.py binarize step), and aspect-preserving thumbnail dims with
-PIL.thumbnail semantics (resize step). Denoise/CLAHE/deskew stay behind
+ITU-R BT.601 weights cv2.COLOR_RGB2GRAY uses and Otsu's threshold
+(image_worker.py binarize step). Resize/denoise/CLAHE/deskew stay behind
 the PIL/cv2 gate — no honest stdlib equivalent.
 
 Audio decode was already real (stdlib RIFF/PCM); video frame DECODE stays
@@ -219,7 +218,7 @@ def _decode_pnm(payload: bytes):
 
 
 def encode_png(arr) -> bytes:
-    """Deterministic filter-0 PNG encode (fixtures + resize output): 8-bit
+    """Deterministic filter-0 PNG encode (fixtures): 8-bit
     gray/RGB/RGBA, fixed zlib level — same bytes on every run."""
     import numpy as np
 
@@ -250,16 +249,6 @@ def encode_png(arr) -> bytes:
         + chunk(b"IDAT", zlib.compress(raw, 6))
         + chunk(b"IEND", b"")
     )
-
-
-def encode_pnm(arr) -> bytes:
-    """Binary P5/P6 encode."""
-    import numpy as np
-
-    a = np.ascontiguousarray(arr, dtype=np.uint8)
-    h, w = a.shape[:2]
-    magic = b"P5" if a.ndim == 2 else b"P6"
-    return magic + f"\n{w} {h}\n255\n".encode() + a.tobytes()
 
 
 def encode_bmp(arr) -> bytes:
@@ -334,25 +323,6 @@ def otsu_threshold(gray) -> int:
     return int(np.argmax(sigma_b))
 
 
-def thumbnail_dims(w: int, h: int, max_w: int, max_h: int) -> tuple[int, int]:
-    """PIL.Image.thumbnail semantics (the reference's maintain_aspect resize):
-    scale to fit inside (max_w, max_h), never upscale, round half-even like
-    PIL's draft math, floor at 1px."""
-    scale = min(max_w / w, max_h / h, 1.0)
-    return max(1, round(w * scale)), max(1, round(h * scale))
-
-
-def resample_nearest(arr, new_w: int, new_h: int):
-    """Nearest-neighbor resample (the stdlib lane's resize; the PIL lane
-    uses LANCZOS like image_worker._resize — engine column records which)."""
-    import numpy as np
-
-    h, w = arr.shape[:2]
-    ys = np.minimum((np.arange(new_h) + 0.5) * h / new_h, h - 1).astype(int)
-    xs = np.minimum((np.arange(new_w) + 0.5) * w / new_w, w - 1).astype(int)
-    return arr[ys][:, xs]
-
-
 RESIZE_SCHEMA = StructType(
     [
         StructField("media_id", StringType(), False),
@@ -365,89 +335,6 @@ RESIZE_SCHEMA = StructType(
         StructField("error", StringType(), True),
     ]
 )
-
-
-def resize_images(
-    media: DataFrame,
-    width: int | None = None,
-    height: int | None = None,
-    maintain_aspect: bool = True,
-    mode: str = "auto",
-) -> DataFrame:
-    """The reference's resize contract (image_worker.py:283-333):
-    maintain_aspect=True → PIL.thumbnail semantics (fit inside the box,
-    never upscale); False → exact (width, height), both required. Same
-    auto/strict/mock gate as extract_image_features.
-
-    Emits the RESIZED image as a deterministic filter-0 PNG in `payload`
-    (LANCZOS resample on the PIL lane like image_worker._resize,
-    nearest-neighbor on the stdlib lane; mock lane emits NULL). A resize
-    whose target equals the source dims re-encodes without resampling so
-    the output column is uniformly PNG."""
-    if mode not in ("auto", "strict", "mock"):
-        raise ValueError(f"unknown mode {mode!r}")
-    if not maintain_aspect and (not width or not height):
-        raise ValueError("width and height required when maintain_aspect=False")
-    from ..shipping import ensure_shipped
-
-    ensure_shipped(media.sparkSession)
-    names = [f.name for f in RESIZE_SCHEMA.fields]
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pil = None
-        if mode != "mock":
-            pil = _load_pil()
-            if pil is None and mode == "strict":
-                raise ImportError(_PIL_HINT)
-        engine = "mock" if mode == "mock" else ("pil" if pil else "stdlib")
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"].tolist(), pdf["payload"].tolist()):
-                try:
-                    if payload is None:
-                        raise ValueError("empty payload")
-                    raw = bytes(payload)
-                    if mode == "mock":
-                        ow, oh, _ = _mock_image_features(raw)
-                    else:
-                        arr = decode_image(raw, pil)
-                        oh, ow = arr.shape[:2]
-                    if maintain_aspect:
-                        nw, nh = thumbnail_dims(
-                            ow, oh, width or 10000, height or 10000
-                        )
-                    else:
-                        nw, nh = int(width), int(height)
-                    out_png = None
-                    if mode != "mock":
-                        if (nw, nh) != (ow, oh):
-                            if pil is not None:
-                                img = pil.fromarray(arr).resize(
-                                    (nw, nh), pil.Resampling.LANCZOS
-                                )
-                                import numpy as np
-
-                                arr = np.asarray(img)
-                            else:
-                                arr = resample_nearest(arr, nw, nh)
-                        out_png = encode_png(arr)
-                    rows.append(
-                        {"media_id": mid, "orig_width": ow, "orig_height": oh,
-                         "new_width": nw, "new_height": nh, "payload": out_png,
-                         "engine": engine, "error": None}
-                    )
-                except Exception as exc:
-                    rows.append(
-                        {"media_id": mid, "orig_width": None, "orig_height": None,
-                         "new_width": None, "new_height": None, "payload": None,
-                         "engine": engine,
-                         "error": f"{type(exc).__name__}: {exc}"}
-                    )
-            yield pd.DataFrame(rows, columns=names)
-
-    return media.where("media_type = 'image'").select("media_id", "payload").mapInPandas(
-        _run, RESIZE_SCHEMA
-    )
 
 
 def _real_image_features(arr) -> tuple[int, int, list[float]]:

@@ -5,7 +5,7 @@ Reference semantics: arkham-shard-media-forensics/services/perceptual_hash.py
 :57-109 (pHash = 32x32 grayscale -> orthonormal 2D DCT -> top-left 8x8 vs
 median-excluding-DC; aHash = 8x8 grayscale vs mean; dHash = 9x8 grayscale
 adjacent-column compare; all packed row-major, first bit most significant,
-hex zfill to 16 chars) and :111-132 (hamming distance / similarity score).
+hex zfill to 16 chars) and :111-132 (hamming distance).
 The reference computes hashes one file at a time with PIL + scipy and finds
 similar images by scanning every stored hash in Python (:134-180); here the
 hashes are an Arrow-batched mapInPandas pass over the media frame and the
@@ -299,8 +299,3 @@ def hamming_distance_hex(hash1: str, hash2: str) -> int:
     if len(hash1) != len(hash2):
         raise ValueError("Hashes must be same length")
     return bin(int(hash1, 16) ^ int(hash2, 16)).count("1")
-
-
-def similarity_score_hex(hash1: str, hash2: str) -> float:
-    """Reference parity helper (perceptual_hash.py:125-132)."""
-    return 1.0 - hamming_distance_hex(hash1, hash2) / (len(hash1) * 4)

@@ -1,4 +1,4 @@
-"""PII detection and redaction — pure column expressions, Luhn included.
+"""PII detection — pure column expressions, Luhn included.
 
 Training-data pipelines scrub personally identifiable information before
 anything ships; the standard pattern families (emails, North-American
@@ -74,19 +74,3 @@ def detect_pii(
         (F.col("n_email") + F.col("n_phone") + F.col("n_ssn")
          + F.col("n_ipv4") + F.col("n_card_valid")) > 0,
     )
-
-
-def redact_pii(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    replacement: str = "[PII]",
-    kinds: list[str] | None = None,
-) -> DataFrame:
-    """Replace every PII match with `replacement` (chained regexp_replace;
-    card candidates are redacted regardless of Luhn validity — leaving an
-    almost-valid number in a training corpus serves nobody)."""
-    text = F.col(text_col)
-    for kind in kinds or ["email", "ssn", "card", "phone", "ipv4"]:
-        text = F.regexp_replace(text, PII_PATTERNS[kind], replacement)
-    return df.select(F.col(id_col), text.alias(text_col))

@@ -11,7 +11,6 @@ vectors.py:469-548). Spark restatement:
   pseudo-planes derived from xxhash — no stored plane matrix) → probe only
   the query's bucket (optionally multi-probe neighbors at Hamming 1). The
   scale path: the scan prunes to ~1/2^H of the corpus per probe.
-- pairwise_cosine_above: all pairs with cosine ≥ τ via block self-join.
 """
 
 from __future__ import annotations
@@ -228,32 +227,6 @@ def pairwise_cosine_above_banded(
     )
 
 
-def pairwise_cosine_above(
-    emb: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-) -> DataFrame:
-    """Near-duplicate embedding pairs: bucket by hyperplane LSH, exact cosine
-    within buckets (embedding-cosine near-dup for training pipelines)."""
-    v = F.col(vec_col).cast("array<double>")
-    b = emb.select(
-        F.col(id_col), v.alias("v"), hyperplane_bucket(v, n_planes).alias("bucket")
-    )
-    a, c = b.alias("a"), b.alias("b")
-    pairs = a.join(
-        c,
-        (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    ).select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-        _score("cosine", F.col("a.v"), F.col("b.v")).alias("cosine"),
-    )
-    return pairs.where(F.col("cosine") >= threshold)
-
-
 def fit_ivf(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -268,10 +241,9 @@ def fit_ivf(
     ivfflat (embedding) WITH (lists = N)` builds exactly this structure).
 
     Returns (cluster centers, assigned DataFrame (id, v, list_id)). The
-    assignment is the expensive part — at scale, materialize it once:
-    `operators.bucketing.write_bucketed(assigned, ..., bucket_col="list_id")`
-    gives Exchange-free probes, the Iceberg story being a `bucket(N,
-    list_id)` partition transform. Repeated queries then call `ivf_probe`
+    assignment is the expensive part — at scale, materialize it once,
+    bucketed by list_id (`bucketBy(N, "list_id")` for Exchange-free probes,
+    or a `bucket(N, list_id)` Iceberg partition transform). Repeated queries then call `ivf_probe`
     with no re-fit (the round-2 API re-fit KMeans per query — a
     scale-killer for repeated ANN lookups).
     """
@@ -317,8 +289,8 @@ def ivf_probe(
     reference ANDs `payload @> filter::jsonb` into the ivfflat scan,
     :920-925): a Column over metadata columns carried through
     `fit_ivf(..., carry_cols=[...])`. Applied BEFORE the distance
-    projection, so over materialized inverted lists (write_bucketed on
-    list_id) Catalyst pushes BOTH the probe's `list_id IN (...)` (file
+    projection, so over materialized inverted lists (bucketed on list_id)
+    Catalyst pushes BOTH the probe's `list_id IN (...)` (file
     pruning, SelectedBucketsCount) and the payload predicate
     (PushedFilters) into the parquet scan — rows failing the filter never
     reach the cosine math. `score_threshold` mirrors :927-930."""

@@ -25,7 +25,7 @@ from ..reference_impl.claims import extract_claims
 from ..reference_impl.dates import extract_iso_dates, extract_relative_dates
 from ..reference_impl.ner import mock_ner
 from ..reference_impl.relations import extract_relations
-from ..schemas import CHUNK_STRUCT, CLAIM_STRUCT, DATE_STRUCT, MENTION_STRUCT, REL_STRUCT
+from ..schemas import CHUNK_STRUCT, CLAIM_STRUCT, DATE_STRUCT, REL_STRUCT
 
 
 def _explode_per_doc(
@@ -75,11 +75,6 @@ def _per_url(
     return _explode_per_doc(docs.select("url", "extracted_text"), fn, schema)
 
 
-def extract_mentions(docs: DataFrame) -> DataFrame:
-    """Mock-NER mentions (ner.py:94-143 semantics)."""
-    return _per_url(docs, mock_ner, MENTION_STRUCT)
-
-
 def extract_dates(docs: DataFrame, include_relative: bool = True) -> DataFrame:
     """ISO + relative date mentions (dates.py:94-160)."""
 
@@ -119,20 +114,6 @@ def extract_chunks(
 def extract_claims_df(docs: DataFrame) -> DataFrame:
     """Rule-based claims (claims/shard.py:300-374)."""
     return _per_url(docs, extract_claims, CLAIM_STRUCT)
-
-
-def extract_chunks_strategy(
-    docs: DataFrame, strategy: str, **kw
-) -> DataFrame:
-    """Frame ChunkService strategies C4–C8 (services/chunks.py:310-647):
-    fixed_size / fixed_tokens / sentence / paragraph / recursive / markdown /
-    code / semantic(→sentence), dispatched per document in one Arrow pass."""
-    from ..reference_impl.frame_chunks import chunk_with_strategy
-
-    def _fn(text: str) -> list[dict]:
-        return chunk_with_strategy(text, strategy, **kw)
-
-    return _per_url(docs, _fn, CHUNK_STRUCT)
 
 
 def extract_chunks_semantic(

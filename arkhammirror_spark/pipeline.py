@@ -12,10 +12,13 @@ Scale design (the 100 TB story):
 - input is repartitioned by xxhash64(url) before the extract UDF: uniform
   work distribution no matter how skewed the host mix is, and a stable
   partitioning the downstream doc-keyed join can reuse;
-- host-level statistics (used for skew detection itself) run as a salted
-  two-phase aggregation so a 30%-of-corpus mega-host can't hot-spot a reducer;
+- host-level statistics (`salted_host_stats`, `detect_heavy_hosts`) are
+  helpers no stage runs: a salted two-phase aggregation, so a 30%-of-corpus
+  mega-host can't hot-spot a reducer when a caller asks for them;
 - column pruning: the UDF sees only (url, warc_ts, html, text, kind); the
   audit pass aggregates the side-channel columns before the public write;
+- commit: every run writes its tables as snapshots of one
+  `ParquetSnapshotCatalog` and becomes visible in one run commit;
 - resume: the committed docs snapshots' url sets are anti-joined against the
   input — already-extracted urls are never re-extracted.
 """
@@ -45,35 +48,6 @@ from .schemas import AUDIT_SCHEMA
 
 
 HOST_RE = r"^[a-z][a-z0-9+.-]*://([^/]+)"
-
-# Scratch parquet dirs from no-catalog runs. The snapshot must outlive the
-# lazy DataFrames handed back to the caller, so deletion is deferred to
-# interpreter exit rather than happening eagerly — but without this hook
-# every run_pipeline(out_dir=None) call leaked a full docs copy in /tmp.
-_SCRATCH_DIRS: list[str] = []
-
-
-def _register_scratch_dir(path: str) -> None:
-    import atexit
-    import shutil
-
-    if not _SCRATCH_DIRS:
-        atexit.register(
-            lambda: [shutil.rmtree(p, ignore_errors=True) for p in _SCRATCH_DIRS]
-        )
-    _SCRATCH_DIRS.append(path)
-
-
-def cleanup_scratch_dirs() -> int:
-    """Eagerly delete registered no-catalog scratch snapshots (call once the
-    returned DataFrames are no longer needed). Returns the count removed."""
-    import shutil
-
-    n = len(_SCRATCH_DIRS)
-    for p in _SCRATCH_DIRS:
-        shutil.rmtree(p, ignore_errors=True)
-    _SCRATCH_DIRS.clear()
-    return n
 
 
 def host_col(url):
@@ -113,7 +87,6 @@ class PipelineResult:
     snapshot_id: str
     tables: dict[str, DataFrame] = field(default_factory=dict)
     audit: DataFrame | None = None
-    stats: dict = field(default_factory=dict)
 
 
 def _audit_from_docs(docs_raw: DataFrame, snapshot_id: str) -> DataFrame:
@@ -144,7 +117,6 @@ def run_extraction_stats(
     spark: SparkSession,
     pages: DataFrame,
     num_partitions: int | None = None,
-    min_edge_count: int = 2,
 ) -> dict:
     """Compute-only extraction run (the scaling-bench unit of work): one
     extract pass, a SLIM persisted frame (scalars + the filtered name arrays
@@ -175,20 +147,9 @@ def run_extraction_stats(
         .collect()[0]["n"]
         or 0
     )
-    edges = comention_edges_from_name_sets(
-        slim.where(F.col("error").isNull()), min_count=min_edge_count
-    )
+    edges = comention_edges_from_name_sets(slim.where(F.col("error").isNull()))
     n_edges = edges.count()
-    audit_rows = (
-        slim.groupBy("_part_id")
-        .agg(
-            F.count(F.lit(1)).alias("input_rows"),
-            F.sum(F.when(F.col("error").isNull(), 1).otherwise(0)).alias("output_rows"),
-            F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("error_rows"),
-            F.sum("_batch_ms").alias("wall_ms"),
-        )
-        .collect()
-    )
+    audit_rows = _audit_from_docs(slim, "").collect()
     slim.unpersist()
     return {
         "docs": n_docs,
@@ -202,31 +163,22 @@ def run_extraction_stats(
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
-    out_dir: str | None = None,
+    out_dir: str,
     num_partitions: int | None = None,
-    resume: bool = True,
-    with_spans: bool = True,
-    min_edge_count: int = 2,
-    snapshot_id: str | None = None,
-    edge_doc_ids: bool = False,
 ) -> PipelineResult:
-    """Run the extraction DAG; when `out_dir` is set, commit snapshots + audit
-    and honor resume-from-checkpoint."""
+    """Run the extraction DAG, commit its snapshots + audit as one run of the
+    catalog at `out_dir`, and resume from the runs committed there."""
     from .shipping import ensure_shipped
 
     ensure_shipped(spark)
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism
-    snapshot_id = snapshot_id or hashlib.sha256(
-        f"{time.time_ns()}".encode()
-    ).hexdigest()[:16]
-
-    catalog = ParquetSnapshotCatalog(out_dir) if out_dir else None
-    stats: dict = {}
+    snapshot_id = hashlib.sha256(f"{time.time_ns()}".encode()).hexdigest()[:16]
+    catalog = ParquetSnapshotCatalog(out_dir)
 
     # committed docs of earlier runs: the resume key set, and the prior part
     # of the entities/edges recompute below
-    prior_docs = catalog.read_table(spark, "docs") if catalog else None
-    if prior_docs is not None and resume:
+    prior_docs = catalog.read_table(spark, "docs")
+    if prior_docs is not None:
         # AQE converts this to a broadcast anti-join when the committed
         # url set is small; at 10^12 scale it stays a shuffle anti-join
         # co-partitioned with the url-hash repartition below.
@@ -235,127 +187,97 @@ def run_pipeline(
     pages = partition_pages(pages, num_partitions)
 
     # mock-NER is fused into the extract pass (one Arrow trip for the text)
-    docs_raw = extract_docs(pages, include_mentions=with_spans)
+    docs_raw = extract_docs(pages, include_mentions=True)
 
-    if catalog:
-        # Storage-checkpoint pattern: materialize the extract output ONCE to
-        # parquet, then feed every downstream table from column-pruned reads
-        # of that snapshot. Caching the full frame instead (text + mention
-        # arrays) measurably thrashes executor memory at corpus scale; a
-        # parquet read prunes to exactly the 1-2 columns each consumer needs.
-        catalog.write_snapshot(docs_raw, "docs", snapshot_id)
-        # downstream processes THIS run's increment only (committed earlier
-        # snapshots were fully processed by their own runs)
-        docs_raw = catalog.read_snapshot(spark, "docs", snapshot_id)
-    else:
-        # No catalog: still NEVER persist the full frame — extracted_text +
-        # _mentions in the block cache is the exact invariant-5 violation
-        # (measured 3× slowdown at 600k docs). Use the same
-        # write-then-pruned-read storage checkpoint as the catalog path,
-        # into a synthesized scratch dir (recorded in stats["scratch_dir"];
-        # it must outlive the returned lazy DataFrames).
-        import tempfile
-
-        scratch = tempfile.mkdtemp(prefix="arkham_docs_scratch_")
-        _register_scratch_dir(scratch)
-        scratch_path = f"{scratch}/docs_{snapshot_id}"
-        docs_raw.write.mode("overwrite").parquet(scratch_path)
-        docs_raw = spark.read.parquet(scratch_path)
-        stats["scratch_dir"] = scratch
+    # Storage-checkpoint pattern: materialize the extract output ONCE to
+    # parquet, then feed every downstream table from column-pruned reads of
+    # that snapshot. Caching the full frame instead (text + mention arrays)
+    # measurably thrashes executor memory at corpus scale; a parquet read
+    # prunes to exactly the 1-2 columns each consumer needs.
+    catalog.write_snapshot(docs_raw, "docs", snapshot_id)
+    # downstream processes THIS run's increment only (committed earlier
+    # snapshots were fully processed by their own runs)
+    docs_raw = catalog.read_snapshot(spark, "docs", snapshot_id)
 
     audit = _audit_from_docs(docs_raw, snapshot_id)
     _PRIVATE = ("_part_id", "_batch_ms", "_mentions", "_names", "_n_mentions")
-    docs = docs_raw.drop(*_PRIVATE)
 
-    tables: dict[str, DataFrame] = {"docs": docs}
-    # the tables built from the docs, as builders: the catalog arm builds
-    # each frame in the thread that writes it, so plan analysis (a py4j
-    # round trip per column expression) overlaps the writes already running
-    builders: dict[str, Callable[[], DataFrame]] = {}
-
-    if with_spans:
-        clean = docs_raw.select("url", "extracted_text", "error").where(
-            F.col("error").isNull()
-        )
-        # entities/edges are DERIVED AGGREGATES, not append tables: a
-        # per-increment aggregation would split counts across snapshots,
-        # apply min_count per increment (dropping cross-snapshot
-        # co-occurrences) and turn limit into a per-increment top-N.
-        # Recompute them over the FULL committed docs (prior runs + this
-        # increment) each run; readers take the latest run's result.
-        full_docs = docs_raw if prior_docs is None else prior_docs.unionByName(docs_raw)
-        full_docs = full_docs.where(F.col("error").isNull())
-        builders = {
-            "mentions": lambda: _mentions_from_docs(docs_raw),
-            "dates": lambda: extract_dates(clean),
-            # native pair combination over the fused _mentions — the Python
-            # re-extraction variant cost half the pipeline wall (see
-            # extract_rels_from_mentions)
-            "rels": lambda: extract_rels_from_mentions(docs_raw),
-            "chunks": lambda: extract_chunks(clean),
-            "claims": lambda: extract_claims_df(clean),
-            # the docs' `_mentions` explode to exactly the mentions table's
-            # rows, so entities never wait on the mentions write
-            "entities": lambda: aggregate_entities(
-                filter_valid_mentions(_mentions_from_docs(full_docs))
-            ),
-            # Edges build from the fused `_names` arrays (the sorted distinct
-            # valid lowered names the extract pass already computed):
-            # output-identical to comention_edges over the exploded valid
-            # mentions (verified equal on the full bench corpus) with one
-            # narrow explode instead of a mention-row explode + per-doc
-            # re-aggregation — half the shuffles. document_ids arrays are
-            # opt-in: at 10^12-doc scale an unbounded ARRAY_AGG per edge is a
-            # memory hazard; the (doc, entity) mapping is already
-            # materialized in the mentions table.
-            "edges": lambda: comention_edges_from_name_sets(
-                full_docs, min_count=min_edge_count, include_doc_ids=edge_doc_ids,
-            ),
-        }
-
-    if not catalog:
-        tables.update((name, build()) for name, build in builders.items())
-    else:
-        # Every table left to write reads only docs snapshots already on
-        # disk (this run's and the committed runs'), never another table of
-        # this run, so the writes are independent jobs: submit them all at
-        # once from worker threads and let Spark's scheduler interleave
-        # their stages (each job alone underutilizes the executors during
-        # its narrow final write stage). Each callable carries the caller's
-        # local properties (job group, description, scheduler pool), so
-        # cancelling the caller's job group stops the wave too. Run-level
-        # atomicity is untouched: commit_run happens only after the barrier
-        # below.
-        wave = {**builders, "audit": lambda: audit}
-
-        def write(name: str, build: Callable[[], DataFrame]) -> dict:
-            return catalog.write_snapshot(build(), name, snapshot_id)
-
-        with ThreadPoolExecutor(max_workers=len(wave)) as ex:
-            futures = [
-                ex.submit(inheritable_thread_target(spark)(write), name, build)
-                for name, build in wave.items()
-            ]
-            for fut in futures:
-                fut.result()  # surface the first failure, keep run orphaned
-        # run-level atomic commit point: ONLY now does this increment become
-        # visible to readers and to resume. A crash anywhere above leaves an
-        # invisible orphan run whose urls are re-extracted next time — no
-        # half-committed increment, no silently lost downstream rows.
-        catalog.commit_run(snapshot_id, ["docs", *wave])
-
-        # expose committed data; public docs view prunes the internal columns
-        _DERIVED = ("entities", "edges")
-        tables = {
-            name: (
-                catalog.read_table_latest(spark, name)
-                if name in _DERIVED
-                else catalog.read_table(spark, name)
-            )
-            for name in ["docs", *builders]
-        }
-        tables["docs"] = tables["docs"].drop(*_PRIVATE)
-
-    return PipelineResult(
-        snapshot_id=snapshot_id, tables=tables, audit=audit, stats=stats
+    clean = docs_raw.select("url", "extracted_text", "error").where(
+        F.col("error").isNull()
     )
+    # entities/edges are DERIVED AGGREGATES, not append tables: a
+    # per-increment aggregation would split counts across snapshots, apply
+    # min_count per increment (dropping cross-snapshot co-occurrences) and
+    # turn limit into a per-increment top-N. Recompute them over the FULL
+    # committed docs (prior runs + this increment) each run; readers take
+    # the latest run's result.
+    full_docs = docs_raw if prior_docs is None else prior_docs.unionByName(docs_raw)
+    full_docs = full_docs.where(F.col("error").isNull())
+    # the tables built from the docs, as builders: each frame is built in the
+    # thread that writes it, so plan analysis (a py4j round trip per column
+    # expression) overlaps the writes already running
+    builders: dict[str, Callable[[], DataFrame]] = {
+        "mentions": lambda: _mentions_from_docs(docs_raw),
+        "dates": lambda: extract_dates(clean),
+        # native pair combination over the fused _mentions — the Python
+        # re-extraction variant cost half the pipeline wall (see
+        # extract_rels_from_mentions)
+        "rels": lambda: extract_rels_from_mentions(docs_raw),
+        "chunks": lambda: extract_chunks(clean),
+        "claims": lambda: extract_claims_df(clean),
+        # the docs' `_mentions` explode to exactly the mentions table's
+        # rows, so entities never wait on the mentions write
+        "entities": lambda: aggregate_entities(
+            filter_valid_mentions(_mentions_from_docs(full_docs))
+        ),
+        # Edges build from the fused `_names` arrays (the sorted distinct
+        # valid lowered names the extract pass already computed):
+        # output-identical to comention_edges over the exploded valid
+        # mentions (verified equal on the full bench corpus) with one narrow
+        # explode instead of a mention-row explode + per-doc re-aggregation
+        # — half the shuffles. No document_ids arrays: at 10^12-doc scale an
+        # unbounded ARRAY_AGG per edge is a memory hazard; the (doc, entity)
+        # mapping is already materialized in the mentions table.
+        "edges": lambda: comention_edges_from_name_sets(full_docs),
+    }
+
+    # Every table left to write reads only docs snapshots already on disk
+    # (this run's and the committed runs'), never another table of this run,
+    # so the writes are independent jobs: submit them all at once from
+    # worker threads and let Spark's scheduler interleave their stages (each
+    # job alone underutilizes the executors during its narrow final write
+    # stage). Each callable carries the caller's local properties (job
+    # group, description, scheduler pool), so cancelling the caller's job
+    # group stops the wave too. Run-level atomicity is untouched: commit_run
+    # happens only after the barrier below.
+    wave = {**builders, "audit": lambda: audit}
+
+    def write(name: str, build: Callable[[], DataFrame]) -> dict:
+        return catalog.write_snapshot(build(), name, snapshot_id)
+
+    with ThreadPoolExecutor(max_workers=len(wave)) as ex:
+        futures = [
+            ex.submit(inheritable_thread_target(spark)(write), name, build)
+            for name, build in wave.items()
+        ]
+        for fut in futures:
+            fut.result()  # surface the first failure, keep run orphaned
+    # run-level atomic commit point: ONLY now does this increment become
+    # visible to readers and to resume. A crash anywhere above leaves an
+    # invisible orphan run whose urls are re-extracted next time — no
+    # half-committed increment, no silently lost downstream rows.
+    catalog.commit_run(snapshot_id, ["docs", *wave])
+
+    # expose committed data; public docs view prunes the internal columns
+    _DERIVED = ("entities", "edges")
+    tables = {
+        name: (
+            catalog.read_table_latest(spark, name)
+            if name in _DERIVED
+            else catalog.read_table(spark, name)
+        )
+        for name in ["docs", *builders]
+    }
+    tables["docs"] = tables["docs"].drop(*_PRIVATE)
+
+    return PipelineResult(snapshot_id=snapshot_id, tables=tables, audit=audit)

@@ -1,6 +1,7 @@
 from .inspect import (
     executed_plan,
     has_row_python,
+    plan_shape,
     pushed_filters,
     python_node_count,
     read_schema,
@@ -10,6 +11,7 @@ from .inspect import (
 __all__ = [
     "executed_plan",
     "has_row_python",
+    "plan_shape",
     "pushed_filters",
     "python_node_count",
     "read_schema",

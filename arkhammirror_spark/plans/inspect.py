@@ -28,6 +28,24 @@ def python_node_count(df: DataFrame) -> int:
     return len(re.findall(r"MapInPandas|ArrowEvalPython|PythonMapInArrow|FlatMapGroupsInPandas", plan))
 
 
+def plan_shape(df: DataFrame) -> dict[str, int]:
+    """Counts of the plan nodes that set a query's cost: Exchange (shuffle,
+    broadcast and reused), HashAggregate (hash and object-hash), Window,
+    Python (Arrow-batched, as `python_node_count`) and Scan (file, RDD,
+    in-memory and local) nodes."""
+    names = [
+        re.match(r"\w*", raw.lstrip(" :+-*(0123456789)")).group()
+        for raw in executed_plan(df).splitlines()
+    ]
+    return {
+        "Exchange": sum(n.endswith("Exchange") for n in names),
+        "HashAggregate": sum(n.endswith("HashAggregate") for n in names),
+        "Window": names.count("Window"),
+        "Python": python_node_count(df),
+        "Scan": sum(n == "Scan" or n.endswith("Scan") for n in names),
+    }
+
+
 _ORDER_DIR_RE = re.compile(r"\b(?:ASC|DESC) NULLS (?:FIRST|LAST)\b")
 
 

@@ -13,11 +13,6 @@ Design:
 - `warc_to_pages` turns a DataFrame of (path, content) binary rows into the
   pages schema — one Arrow-batched pass, so ingestion composes with
   extract_docs into a single WARC → extracted-docs job.
-- `read_warc` reads segment files via Spark's binaryFile source. Whole-file
-  rows are the pragmatic reader for ≤1 GiB Common-Crawl segments (one task
-  per segment = the same parallelism Common Crawl's own examples use); a
-  splittable custom DataSource is the upgrade path if segments outgrow
-  executor memory.
 - `build_warc` writes deterministic WARC bytes (fixture/datagen helper —
   every field pinned, no wall clock).
 """
@@ -30,7 +25,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
     StringType,
@@ -199,26 +194,6 @@ def warc_to_pages(
             yield pd.DataFrame(rows, columns=names)
 
     return segments.select(path_col, content_col).mapInPandas(_run, PAGES_SCHEMA)
-
-
-def read_warc(spark: SparkSession, path_glob: str) -> DataFrame:
-    """WARC segment files → pages DataFrame."""
-    segments = spark.read.format("binaryFile").load(path_glob)
-    return warc_to_pages(segments)
-
-
-def warc_main_content(spark: SparkSession, path_glob: str):
-    """The north-star lane end to end: WARC segments → pages → flattened-DOM
-    density-scored main text (operators.boilerplate). Returns
-    (url, main_text, n_blocks, n_chars); malformed records and non-HTML
-    payloads simply contribute no nodes."""
-    from ..operators.boilerplate import extract_main_content
-
-    pages = read_warc(spark, path_glob)
-    ok = pages.where(
-        pages["error"].isNull() & pages["html"].isNotNull()
-    )
-    return extract_main_content(ok)
 
 
 def build_warc(records: list[dict], gzip_members: bool = True) -> bytes:

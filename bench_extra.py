@@ -6,6 +6,7 @@ Usage:
   python bench_extra.py plan  <part> [part ...]   # explain("formatted") dump
   python bench_extra.py both  <part> [part ...]
   python bench_extra.py entry <entry> [...]       # contract-entry level
+  python bench_extra.py shapes                    # rewrite plans/shapes.json
 
 Parts come from arkhammirror_spark.queries.QUERIES (the fine-grained
 registry bench.py itself sums into contract entries); entries come from
@@ -13,14 +14,44 @@ the 50-entry driver contract. Timing uses the noop sink (guide §1.4) so
 the computation — not the count() shortcut or a real sink — is what is
 measured, and each job is labelled (guide §1.5).
 
-Env knobs match bench.py: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
+Env knobs match bench.py: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS. Plan dumps
+go to PLAN_DIR (default: a directory under the system temp dir).
+
+`shapes` records every part's `plan_shape` (node counts per kind) in
+plans/shapes.json, which tests/test_plan_hygiene.py asserts. It plans in
+the test session's shape (local[4], 8 shuffle partitions) against the
+test's own data directory, whatever SPARK_GRAFT_SF_DIR says: the
+planner's broadcast choices follow data size.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
+import tempfile
 import time
+
+SHAPES_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "shapes.json")
+
+
+def write_shapes() -> None:
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tests"))
+    from test_plan_hygiene import SF as sf_dir
+
+    from arkhammirror_spark.plans import plan_shape
+    from arkhammirror_spark.queries import QUERIES
+    from arkhammirror_spark.session import get_spark
+
+    spark = get_spark("arkhammirror-plan-shapes", master="local[4]", shuffle_partitions=8)
+    rows = [
+        f"  {json.dumps(name)}: {json.dumps(plan_shape(QUERIES[name](spark, sf_dir)))}"
+        for name in sorted(QUERIES)
+    ]
+    spark.stop()
+    with open(SHAPES_PATH, "w") as f:
+        f.write("{\n" + ",\n".join(rows) + "\n}\n")
+    print(f"# {len(rows)} plan shapes written: {SHAPES_PATH}", flush=True)
 
 
 def main() -> None:
@@ -28,9 +59,14 @@ def main() -> None:
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    plan_dir = os.environ.get("PLAN_DIR", "plans/r08")
+    plan_dir = os.environ.get(
+        "PLAN_DIR", os.path.join(tempfile.gettempdir(), "arkhammirror-plans")
+    )
     plan_tag = os.environ.get("PLAN_TAG", "before")
     repeat = int(os.environ.get("REPEAT", "1"))
+    if mode == "shapes":
+        write_shapes()
+        return
 
     from arkhammirror_spark.session import get_spark
 

@@ -154,7 +154,7 @@ class TestSelection:
     def test_warc_to_main_content_lane(self, spark, tmp_path):
         """Common-Crawl shape end to end: .warc.gz segment → pages →
         boilerplate-stripped main text."""
-        from arkhammirror_spark.sources.warc import build_warc, warc_main_content
+        from arkhammirror_spark.sources.warc import build_warc, warc_to_pages
 
         raw = build_warc(
             [{"url": "https://w/a", "date": "2026-01-02T03:04:05Z",
@@ -162,7 +162,9 @@ class TestSelection:
         )
         seg = tmp_path / "seg-0.warc.gz"
         seg.write_bytes(raw)
-        out = warc_main_content(spark, str(seg)).collect()
+        pages = warc_to_pages(spark.read.format("binaryFile").load(str(seg)))
+        ok = pages.where(pages["error"].isNull() & pages["html"].isNotNull())
+        out = extract_main_content(ok).collect()
         assert len(out) == 1
         assert "first real paragraph" in out[0]["main_text"]
         assert "Terms of service" not in out[0]["main_text"]
@@ -186,7 +188,7 @@ class TestSelection:
         assert "Home" not in out["https://w/a"]      # nav stripped
 
     def test_python_selection_equals_window_selection(self, spark):
-        """main_content_py (the streaming/pin path) must match the
+        """main_content_py (the Python pin path) must match the
         url-partitioned window variant exactly on every fixture page —
         including the webtext fixtures with their rescue/heading cases."""
         from arkhammirror_spark.operators.boilerplate import main_content_py
@@ -204,35 +206,6 @@ class TestSelection:
                 assert url not in batch, url
             else:
                 assert batch[url] == (text, n), url
-
-    def test_streaming_main_content_exactly_once(self, spark, tmp_path):
-        from arkhammirror_spark.sources.warc import build_warc
-        from arkhammirror_spark.streaming.pipeline import stream_main_content
-
-        warc_dir = tmp_path / "landing"
-        warc_dir.mkdir()
-        (warc_dir / "seg-0.warc.gz").write_bytes(build_warc(
-            [{"url": "https://w/a", "date": "2026-01-02T03:04:05Z",
-              "payload": ARTICLE_PAGE.encode()}]
-        ))
-        out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-        q = stream_main_content(spark, str(warc_dir), out, ckpt).trigger(
-            availableNow=True).start()
-        q.awaitTermination()
-        rows = spark.read.parquet(out).collect()
-        assert len(rows) == 1 and "first real paragraph" in rows[0]["main_text"]
-
-        # second segment: only the delta processes (checkpoint exactly-once)
-        (warc_dir / "seg-1.warc.gz").write_bytes(build_warc(
-            [{"url": "https://w/b", "date": "2026-01-03T03:04:05Z",
-              "payload": ARTICLE_PAGE.replace("Article Title",
-                                              "Second Title").encode()}]
-        ))
-        q = stream_main_content(spark, str(warc_dir), out, ckpt).trigger(
-            availableNow=True).start()
-        q.awaitTermination()
-        urls = sorted(r["url"] for r in spark.read.parquet(out).collect())
-        assert urls == ["https://w/a", "https://w/b"]
 
     def test_scoring_is_native(self, spark):
         """Stages 2-4 must be pure column math: exactly ONE Arrow node

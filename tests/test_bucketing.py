@@ -1,34 +1,12 @@
-"""Bucketed co-located joins: plan must be Exchange-free, results identical
-to the shuffled join."""
-
-import pytest
-
-from pyspark.sql import functions as F
-
-from arkhammirror_spark.operators.bucketing import co_located_join, write_bucketed
+"""IVF inverted lists materialized as a parquet table bucketed by list_id:
+a probe prunes buckets at the scan and returns what the in-memory probe
+returns."""
 
 
-@pytest.fixture()
-def bucketed_tables(spark, tmp_path):
-    docs = spark.range(0, 2000).select(
-        F.col("id").alias("doc_id"),
-        (F.col("id") % 7).alias("f"),
-    )
-    mentions = spark.range(0, 6000).select(
-        (F.col("id") % 2000).alias("doc_id"),
-        F.concat(F.lit("m"), F.col("id")).alias("mention"),
-    )
-    write_bucketed(docs, "bkt_docs", ["doc_id"], 8, sort_cols=["doc_id"])
-    write_bucketed(mentions, "bkt_mentions", ["doc_id"], 8, sort_cols=["doc_id"])
-    yield docs, mentions
-    spark.sql("DROP TABLE IF EXISTS bkt_docs")
-    spark.sql("DROP TABLE IF EXISTS bkt_mentions")
-
-
-def test_bucketed_join_is_exchange_free(spark, bucketed_tables):
-    joined = co_located_join(spark, "bkt_docs", "bkt_mentions", ["doc_id"])
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan  # zero shuffle on either side
+def _write_bucketed_lists(assigned, table: str) -> None:
+    assigned.write.format("parquet").mode("overwrite").bucketBy(
+        8, "list_id"
+    ).sortBy("list_id").saveAsTable(table)
 
 
 def test_ivf_lists_materialize_bucketed_and_prune(spark, tmp_path):
@@ -42,7 +20,6 @@ def test_ivf_lists_materialize_bucketed_and_prune(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from arkhammirror_spark.operators.bucketing import write_bucketed
     from arkhammirror_spark.operators.similarity import fit_ivf, ivf_probe
 
     rng = random.Random(11)
@@ -56,8 +33,7 @@ def test_ivf_lists_materialize_bucketed_and_prune(spark, tmp_path):
     import shutil
 
     shutil.rmtree("spark-warehouse/ivf_lists_test", ignore_errors=True)
-    write_bucketed(assigned, "ivf_lists_test", ["list_id"], 8,
-                   sort_cols=["list_id"])
+    _write_bucketed_lists(assigned, "ivf_lists_test")
     lists = spark.table("ivf_lists_test")
 
     qv = rows[3][1]
@@ -84,16 +60,6 @@ def test_ivf_lists_materialize_bucketed_and_prune(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS ivf_lists_test")
 
 
-def test_bucketed_join_matches_shuffled_join(spark, bucketed_tables):
-    docs, mentions = bucketed_tables
-    got = sorted(
-        map(tuple, co_located_join(spark, "bkt_docs", "bkt_mentions", ["doc_id"]).collect())
-    )
-    exp = sorted(map(tuple, docs.join(mentions, "doc_id").collect()))
-    assert got == exp
-    assert len(got) == 6000
-
-
 def test_ivf_filtered_probe_prunes_before_distance(spark, tmp_path):
     """Payload-filtered ANN (vectors.py:856-934, filter arm :920-925):
     the metadata predicate AND the probe's list_id IN (...) both reach
@@ -107,7 +73,6 @@ def test_ivf_filtered_probe_prunes_before_distance(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from arkhammirror_spark.operators.bucketing import write_bucketed
     from arkhammirror_spark.operators.similarity import (
         brute_force_topk, fit_ivf, ivf_probe,
     )
@@ -128,8 +93,7 @@ def test_ivf_filtered_probe_prunes_before_distance(spark, tmp_path):
 
     spark.sql("DROP TABLE IF EXISTS ivf_lists_filt_test")
     shutil.rmtree("spark-warehouse/ivf_lists_filt_test", ignore_errors=True)
-    write_bucketed(assigned, "ivf_lists_filt_test", ["list_id"], 8,
-                   sort_cols=["list_id"])
+    _write_bucketed_lists(assigned, "ivf_lists_filt_test")
     lists = spark.table("ivf_lists_filt_test")
 
     pred = F.col("category") == "cat1"

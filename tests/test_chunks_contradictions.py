@@ -3,7 +3,7 @@
 import pytest
 
 from arkhammirror_spark.operators.contradictions import detect_contradictions
-from arkhammirror_spark.operators.spans import extract_chunks_strategy
+from arkhammirror_spark.operators.spans import _per_url
 from arkhammirror_spark.reference_impl.frame_chunks import (
     chunk_code,
     chunk_fixed_size,
@@ -70,11 +70,16 @@ class TestFrameChunks:
         assert [r["chunk_index"] for r in recs] == list(range(len(recs)))
 
     def test_spark_operator(self, spark):
+        """A strategy dispatched per document through the span explode lane."""
+        from arkhammirror_spark.schemas import CHUNK_STRUCT
+
         docs = spark.createDataFrame(
             [("u1", "One sentence here. Two sentences now. Three arrive.")],
             "url: string, extracted_text: string",
         )
-        got = extract_chunks_strategy(docs, "sentence", chunk_size=40).collect()
+        got = _per_url(
+            docs, lambda t: chunk_with_strategy(t, "sentence", chunk_size=40), CHUNK_STRUCT
+        ).collect()
         assert [r["text"] for r in got] == [
             "One sentence here. Two sentences now.",
             "Three arrive.",

@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import asyncio
 import importlib.util
-import math
 import os
 import sys
 import types
@@ -59,7 +58,7 @@ class _Events:
         self.emitted.append((topic, payload))
 
 
-def _make_shard(ref, claims, evidence=(), vectors=None):
+def _make_shard(ref, claims, evidence=()):
     """In-memory ClaimsShard: storage methods overridden, logic real."""
     models, shard_mod = ref
 
@@ -69,7 +68,7 @@ def _make_shard(ref, claims, evidence=(), vectors=None):
             self._db = None
             self._events = _Events()
             self._llm = None
-            self._vectors = vectors
+            self._vectors = None
             self._claims = {c.id: c for c in claims}
             self._evidence = list(evidence)
 
@@ -210,99 +209,6 @@ def test_similar_claims_fuzzy_limit(ref, spark):
             if r["claim_id"] == cid
         )
         assert got_scores == exp_scores, cid
-
-
-class _Vectors:
-    """Vector-service stub: brute cosine over injected embeddings, the
-    shape find_similar_claims consumes (shard.py:894-899)."""
-
-    def __init__(self, vecs, text_to_id):
-        self.vecs = vecs
-        self.text_to_id = text_to_id
-
-    def is_available(self):
-        return True
-
-    async def search(self, collection, query, limit):
-        qid = self.text_to_id[query]
-        q = self.vecs[qid]
-
-        def cos(a, b):
-            d = sum(x * y for x, y in zip(a, b))
-            na = math.sqrt(sum(x * x for x in a))
-            nb = math.sqrt(sum(x * x for x in b))
-            return d / (na * nb) if na and nb else 0.0
-
-        scored = sorted(
-            ((i, cos(q, v)) for i, v in self.vecs.items()),
-            key=lambda t: t[1],
-            reverse=True,
-        )
-        return [{"id": i, "score": s} for i, s in scored[:limit]]
-
-
-def _unit_vecs(n, dim=8):
-    """Deterministic cluster structure: three anchor directions, members
-    perturbed so in-cluster cosines straddle 0.8 and a few exceed 0.95."""
-    vecs = {}
-    for i in range(n):
-        anchor = i % 3
-        base = [0.0] * dim
-        base[anchor] = 1.0
-        # perturbation magnitude cycles: tight (merge), loose (review), far
-        eps = [0.05, 0.3, 1.2][(i // 3) % 3]
-        for d in range(dim):
-            base[d] += eps * (((i * 7 + d * 13) % 11) - 5) / 11.0
-        norm = math.sqrt(sum(x * x for x in base))
-        vecs[f"c{i:03d}"] = [x / norm for x in base]
-    return vecs
-
-
-def test_similar_claims_semantic_parity(ref, spark):
-    """Vector arm (shard.py:894-908): same embeddings to both engines;
-    match sets, scores, and the 0.95 review/merge rule agree. Spark
-    candidates use exhaustive banding (rows_per_band=1 → recall 1) so the
-    comparison isolates scoring semantics from LSH recall."""
-    from arkhammirror_spark.operators.claims_ops import similar_claims_semantic
-
-    models, _ = ref
-    n = 18
-    vecs = _unit_vecs(n)
-    texts = [f"claim text number {i}" for i in range(n)]
-    text_to_id = {t: f"c{i:03d}" for i, t in enumerate(texts)}
-    sh = _make_shard(
-        ref, _mk_claims(models, texts), vectors=_Vectors(vecs, text_to_id)
-    )
-
-    exp = {}
-    for i in range(n):
-        cid = f"c{i:03d}"
-        matches = asyncio.run(
-            sh.find_similar_claims(cid, threshold=0.8, limit=100)
-        )
-        exp[cid] = sorted(
-            (m.matched_claim_id, round(m.similarity_score, 6),
-             m.match_type, m.suggested_action)
-            for m in matches
-        )
-
-    emb = spark.createDataFrame(
-        [(cid, v) for cid, v in vecs.items()],
-        "claim_id string, embedding array<double>",
-    )
-    got_rows = similar_claims_semantic(
-        emb, threshold=0.8, limit=100, bands=1, rows_per_band=1
-    ).collect()
-    got = {f"c{i:03d}": [] for i in range(n)}
-    for r in got_rows:
-        got[r["claim_id"]].append(
-            (r["matched_claim_id"], round(r["similarity_score"], 6),
-             r["match_type"], r["suggested_action"])
-        )
-    got = {k: sorted(v) for k, v in got.items()}
-    assert any("merge" in str(v) for v in exp.values())
-    assert any("review" in str(v) for v in exp.values())
-    assert got == exp
 
 
 _MERGE_GROUPS = {"c000": ["c001", "c002", "c000"], "c005": ["c006"]}

@@ -265,24 +265,3 @@ def test_bounds_and_filter_parity(ref, spark):
     assert got_edges == [("n0", "n4")]  # Sydney edge pruned
     tot = got["total"].collect()[0]["total_distance_km"]
     assert tot == pytest.approx(exp.total_distance_km, rel=1e-9)
-
-
-def test_cluster_parity(ref):
-    from arkhammirror_spark.operators.geospatial import cluster_geo_nodes
-
-    models, geo = ref
-    eng = geo.GeoGraphEngine()
-    geo_nodes = eng.extract_geo_nodes(_ref_graph(models))
-    exp = eng.cluster_nodes(geo_nodes, radius_km=500.0)
-    got = cluster_geo_nodes(
-        [(n.entity_id, n.latitude, n.longitude) for n in geo_nodes],
-        radius_km=500.0,
-    )
-    assert len(got) == len(exp)
-    assert len(got) < len(geo_nodes)  # European cities actually merge
-    for g, e in zip(got, exp):
-        assert g["id"] == e.id
-        assert g["node_ids"] == e.node_ids
-        assert g["center_lat"] == pytest.approx(e.center_lat, rel=1e-12)
-        assert g["center_lng"] == pytest.approx(e.center_lng, rel=1e-12)
-        assert g["radius_km"] == pytest.approx(e.radius_km, rel=1e-12)

@@ -1,7 +1,7 @@
-"""Differential tests for the §2.5 graph-analytics suite: load the ACTUAL
-reference algorithms module (arkham-shard-graph) by file path and compare
-every function against operators.graph_algorithms on fuzzed small graphs
-(within the reference's own 500-node/1000-edge caps).
+"""Differential test for the driver betweenness: load the ACTUAL reference
+algorithms module (arkham-shard-graph) by file path and compare it against
+operators.graph_algorithms on fuzzed small graphs (within the reference's
+own 500-node/1000-edge caps).
 
 No Spark session needed — these are the driver-side algorithms.
 """
@@ -86,79 +86,11 @@ def _fuzz_edges(seed: int, n_nodes: int = 12, n_edges: int = 20):
         if (a, b) in seen or (b, a) in seen:
             continue
         seen.add((a, b))
-        # irregular weights avoid exact modularity-gain ties (the reference's
-        # tie-break iterates a set, which is not cross-impl deterministic)
         edges.append((a, b, round(rng.uniform(0.05, 1.0), 3), rng.choice(rels)))
     return edges
 
 
 SEEDS = range(12)
-
-
-@pytest.mark.parametrize("seed", SEEDS)
-def test_all_paths_parity(ref, seed):
-    models, algo = ref
-    edges = _fuzz_edges(seed)
-    g = _mk_graph(models, edges)
-    src, dst = "n00", "n05"
-    got = ours.all_paths(edges, src, dst, max_depth=4, max_paths=8)
-    exp = algo.find_all_paths(g, src, dst, max_depth=4, max_paths=8)
-    assert [p["path"] for p in got] == [p.path for p in exp]
-    for o, e in zip(got, exp):
-        assert abs(o["total_weight"] - e.total_weight) < 1e-12
-        assert o["path_length"] == e.path_length
-
-
-@pytest.mark.parametrize("seed", SEEDS)
-@pytest.mark.parametrize("use_max", [True, False])
-def test_weighted_path_parity(ref, seed, use_max):
-    models, algo = ref
-    edges = _fuzz_edges(seed)
-    g = _mk_graph(models, edges)
-    got = ours.weighted_path(edges, "n00", "n07", use_max_weight=use_max)
-    exp = algo.find_weighted_path(g, "n00", "n07", use_max_weight=use_max)
-    if exp is None:
-        assert got is None
-    else:
-        assert got["path"] == exp.path
-        assert abs(got["total_weight"] - exp.total_weight) < 1e-12
-
-
-@pytest.mark.parametrize("seed", SEEDS)
-def test_constrained_path_parity(ref, seed):
-    models, algo = ref
-    edges = _fuzz_edges(seed)
-    g = _mk_graph(models, edges)
-    kwargs = dict(
-        required_entities=["n03"],
-        excluded_entities=["n09"],
-        required_relationship_types=["co_occurrence", "mentions"],
-        min_edge_weight=0.1,
-        max_depth=6,
-    )
-    got = ours.constrained_path(
-        edges, "n00", "n05",
-        required=kwargs["required_entities"],
-        excluded=kwargs["excluded_entities"],
-        required_types=kwargs["required_relationship_types"],
-        min_edge_weight=0.1, max_depth=6,
-    )
-    exp = algo.find_constrained_path(g, "n00", "n05", **kwargs)
-    if exp is None:
-        assert got is None
-    else:
-        assert got["path"] == exp.path
-        assert abs(got["total_weight"] - exp.total_weight) < 1e-12
-
-
-@pytest.mark.parametrize("seed", SEEDS)
-def test_paths_through_parity(ref, seed):
-    models, algo = ref
-    edges = _fuzz_edges(seed)
-    g = _mk_graph(models, edges)
-    got = ours.paths_through(edges, "n02", max_depth=2)
-    exp = algo.find_paths_through(g, "n02", max_depth=2)
-    assert [p["path"] for p in got] == [p.path for p in exp]
 
 
 @pytest.mark.parametrize("seed", SEEDS)
@@ -173,59 +105,3 @@ def test_betweenness_parity(ref, seed):
     ]
     for o, e in zip(got, exp):
         assert abs(o["score"] - e.score) < 1e-12
-
-
-@pytest.mark.parametrize("seed", SEEDS)
-def test_louvain_parity(ref, seed):
-    models, algo = ref
-    edges = _fuzz_edges(seed, n_nodes=10, n_edges=18)
-    g = _mk_graph(models, edges)
-    got, got_q = ours.louvain_communities(edges, min_community_size=2)
-    exp, exp_q = algo.detect_communities_louvain(g, min_community_size=2)
-    assert abs(got_q - exp_q) < 1e-9
-    assert sorted(tuple(sorted(c["members"])) for c in got) == sorted(
-        tuple(sorted(c.entity_ids)) for c in exp
-    )
-    gd = {tuple(sorted(c["members"])): (c["density"], c["internal_edges"]) for c in got}
-    for c in exp:
-        d, i = gd[tuple(sorted(c.entity_ids))]
-        assert abs(d - c.density) < 1e-12 and i == c.internal_edges
-
-
-@pytest.mark.parametrize("seed", SEEDS)
-def test_clustering_and_statistics_parity(ref, seed):
-    models, algo = ref
-    edges = _fuzz_edges(seed)
-    g = _mk_graph(models, edges)
-    stats = ours.statistics_summary(edges)
-    exp = algo.calculate_statistics(g)
-    assert stats["node_count"] == exp.node_count
-    assert stats["edge_count"] == exp.edge_count
-    assert abs(stats["density"] - exp.density) < 1e-12
-    assert abs(stats["avg_degree"] - exp.avg_degree) < 1e-12
-    assert abs(stats["avg_clustering"] - exp.avg_clustering) < 1e-12
-    assert stats["connected_components"] == exp.connected_components
-    assert stats["diameter"] == exp.diameter
-    assert abs(stats["avg_path_length"] - exp.avg_path_length) < 1e-12
-
-
-@pytest.mark.parametrize("seed", SEEDS)
-def test_structural_holes_parity(ref, seed):
-    models, algo = ref
-    edges = _fuzz_edges(seed)
-    g = _mk_graph(models, edges)
-    for ego in ("n00", "n04", "n11"):
-        got = ours.structural_holes(edges, ego)
-        exp = algo.calculate_structural_holes(g, ego)
-        for k in ("effective_size", "efficiency", "constraint", "hierarchy"):
-            assert abs(got[k] - exp[k]) < 1e-12, (ego, k)
-
-
-def test_structural_holes_isolated_node(ref):
-    models, algo = ref
-    edges = _fuzz_edges(0)
-    got = ours.structural_holes(edges, "missing")
-    assert got == {
-        "effective_size": 0.0, "efficiency": 0.0,
-        "constraint": 1.0, "hierarchy": 0.0,
-    }

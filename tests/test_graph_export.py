@@ -157,24 +157,6 @@ class TestExporters:
         got = export_gexf(nodes, edges, "proj1", updated_at=_TS)
         assert got == exp
 
-    def test_jsonl_scale_lane_round_trips(self, spark, gref):
-        import json as _json
-
-        from arkhammirror_spark.operators.graph_export import export_jsonl
-
-        models, _, _ = gref
-        g = _mk_graph(models, random.Random(9))
-        nodes, edges = _frames(spark, g)
-        nj, ej = export_jsonl(nodes.drop("created_at"),
-                              edges.drop("created_at"))
-        got_nodes = sorted(
-            _json.loads(r["json"])["id"] for r in nj.collect()
-        )
-        assert got_nodes == sorted(n.id for n in g.nodes)
-        plan = ej._jdf.queryExecution().executedPlan().toString()
-        assert "BatchEvalPython" not in plan  # pure JVM serialization
-        assert ej.count() == len(g.edges)
-
 
 class TestFilterGraph:
     @pytest.mark.parametrize("seed", range(6))

@@ -2,8 +2,7 @@
 reference TemporalGraphEngine (graph/temporal.py) with its db_service
 stubbed as an in-memory evaluator of the THREE SQL shapes the engine
 issues (range / entities-with-qualifying-mentions / co-occurrence
-pairs) — generate_snapshots, calculate_evolution_metrics, and
-filter_snapshot_by_date_range all run the reference's own code."""
+pairs) — generate_snapshots runs the reference's own code."""
 
 from __future__ import annotations
 
@@ -197,59 +196,6 @@ def test_snapshot_series_parity(ref, spark, cumulative):
         assert any(len(s.removed_nodes) for s in snaps)
 
 
-@pytest.mark.parametrize("cumulative", [True, False])
-def test_evolution_metrics_parity(ref, spark, cumulative):
-    from arkhammirror_spark.operators.graph_temporal import (
-        evolution_metrics, snapshot_series, stable_counts,
-    )
-
-    models, temporal = ref
-    snaps = _run_reference(ref, cumulative)
-    eng = temporal.TemporalGraphEngine()
-    exp = eng.calculate_evolution_metrics(snaps)
-
-    m = _spark_mentions(spark)
-    summary = snapshot_series(
-        m, D0.date(), END.date(), INTERVAL, cumulative=cumulative
-    )
-    sn, se = stable_counts(
-        m, D0.date(), END.date(), INTERVAL, cumulative=cumulative
-    )
-    got = evolution_metrics(summary, sn, se).collect()[0]
-    assert got["total_nodes_added"] == exp.total_nodes_added
-    assert got["total_nodes_removed"] == exp.total_nodes_removed
-    assert got["total_edges_added"] == exp.total_edges_added
-    assert got["total_edges_removed"] == exp.total_edges_removed
-    assert got["node_growth_rate"] == pytest.approx(exp.node_growth_rate)
-    assert got["edge_growth_rate"] == pytest.approx(exp.edge_growth_rate)
-    assert got["peak_node_count"] == exp.peak_node_count
-    assert got["peak_edge_count"] == exp.peak_edge_count
-    assert got["peak_date"] == str(exp.peak_timestamp.date())
-    assert got["stable_node_count"] == exp.stable_node_count
-    assert got["stable_edge_count"] == exp.stable_edge_count
-    assert got["node_churn_rate"] == pytest.approx(exp.node_churn_rate)
-    assert got["edge_churn_rate"] == pytest.approx(exp.edge_churn_rate)
-
-
-def test_temporal_range_parity(ref, spark):
-    from arkhammirror_spark.operators.graph_temporal import temporal_range
-
-    models, temporal = ref
-    eng = temporal.TemporalGraphEngine(db_service=_Db(_mention_rows()))
-    exp = asyncio.run(eng.get_temporal_range("p"))
-    got = temporal_range(
-        spark.createDataFrame(
-            [(e, d, ts) for e, d, ts in _mention_rows()],
-            "entity_id string, document_id string, "
-            "created_at timestamp",
-        )
-    ).collect()[0]
-    assert str(got["earliest"]) == str(exp.start_date)
-    assert str(got["latest"]) == str(exp.end_date)
-    assert got["interval_days"] == exp.interval.days
-    assert got["snapshot_count"] == exp.snapshot_count
-
-
 def test_interval_autofit_rule(ref):
     """The max_snapshots re-widening (:229-233) on a long range."""
     from arkhammirror_spark.operators.graph_temporal import _fit_interval
@@ -261,41 +207,3 @@ def test_interval_autofit_rule(ref):
     # 400 days at 1-day interval = 400 intervals > 50 → widen to 8
     assert _fit_interval(start, end, 1, 50) == 400 // 50
     assert _fit_interval(start, end, 30, 50) == 30  # already fits
-
-
-def test_filter_snapshot_parity(ref, spark):
-    from arkhammirror_spark.operators.graph_temporal import (
-        filter_graph_by_date_range,
-    )
-
-    models, temporal = ref
-    eng = temporal.TemporalGraphEngine()
-    snaps = _run_reference(ref, True)
-    snap = snaps[-1]
-    lo = (D0 + datetime.timedelta(days=20)).replace(hour=0)
-    hi = (D0 + datetime.timedelta(days=90)).replace(hour=0)
-    exp = eng.filter_snapshot_by_date_range(
-        snap, min_date=lo, max_date=hi
-    )
-    nodes = spark.createDataFrame(
-        [(n.id, n.created_at.date()) for n in snap.nodes],
-        "node_id string, created_at date",
-    )
-    edges = spark.createDataFrame(
-        [(e.source, e.target, e.created_at.date()) for e in snap.edges],
-        "source string, target string, created_at date",
-    )
-    got = filter_graph_by_date_range(
-        nodes, edges, min_date=lo.date(), max_date=hi.date()
-    )
-    got_nodes = sorted(r["node_id"] for r in got["nodes"].collect())
-    assert got_nodes == sorted(n.id for n in exp.nodes)
-    got_edges = sorted(
-        (r["source"], r["target"]) for r in got["edges"].collect()
-    )
-    assert got_edges == sorted((e.source, e.target) for e in exp.edges)
-    s = got["summary"].collect()[0]
-    assert s["node_count"] == exp.node_count
-    assert s["edge_count"] == exp.edge_count
-    assert s["density"] == pytest.approx(exp.density, rel=1e-12)
-    assert exp.node_count and exp.node_count < snap.node_count

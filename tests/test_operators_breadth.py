@@ -29,7 +29,6 @@ from arkhammirror_spark.operators.search import (
 from arkhammirror_spark.operators.similarity import (
     brute_force_topk,
     lsh_bucket_topk,
-    pairwise_cosine_above,
 )
 
 
@@ -275,10 +274,6 @@ class TestSimilarity:
         assert ann and ann[0] == 900
         assert len(set(brute) & set(ann)) >= 2
 
-    def test_pairwise_cosine(self, spark, emb):
-        pairs = pairwise_cosine_above(emb, 0.999, n_planes=6).collect()
-        assert {(p["id_a"], p["id_b"]) for p in pairs} == {(0, 900)}
-
     def test_banded_lsh_auto_r_scales_with_corpus(self, spark, emb):
         from arkhammirror_spark.operators.similarity import (
             pairwise_cosine_above_banded,
@@ -327,12 +322,9 @@ class TestRerankers:
 class TestLshHotBucketCap:
     def test_identical_signature_cluster_is_capped(self, spark):
         """10k docs with the SAME signature land in one bucket per band;
-        the guard must bound candidates to C(cap, 2) instead of ~50M,
-        flag them truncated, and ledger the dropped members."""
-        from arkhammirror_spark.operators.dedup import (
-            lsh_bucket_audit,
-            lsh_candidate_pairs,
-        )
+        the guard must bound candidates to C(cap, 2) instead of ~50M and
+        flag them truncated."""
+        from arkhammirror_spark.operators.dedup import lsh_candidate_pairs
 
         sig = list(range(16))
         sigs = spark.range(10_000).select(
@@ -347,20 +339,11 @@ class TestLshHotBucketCap:
         # survivors are the 50 smallest ids, all mutually paired
         ids = {r["id_a"] for r in pairs} | {r["id_b"] for r in pairs}
         assert ids == set(range(50))
-        audit = lsh_bucket_audit(
-            sigs, bands=4, rows=4, bucket_cap=50
-        ).collect()
-        assert len(audit) == 4  # one hot bucket per band
-        assert all(a["size"] == 10_000 and a["dropped"] == 9_950
-                   for a in audit)
 
     def test_cap_leaves_cold_buckets_exact_and_unflagged(self, spark):
         """Distinct-signature corpus: capped output == uncapped output,
-        nothing flagged truncated, audit empty."""
-        from arkhammirror_spark.operators.dedup import (
-            lsh_bucket_audit,
-            lsh_candidate_pairs,
-        )
+        nothing flagged truncated."""
+        from arkhammirror_spark.operators.dedup import lsh_candidate_pairs
 
         # 40 docs in 20 identical-signature pairs -> 20 candidate pairs
         sigs = spark.range(40).select(
@@ -380,5 +363,3 @@ class TestLshHotBucketCap:
         assert c == u
         assert len(c) == 20
         assert not any(t for _, _, t in c)
-        assert lsh_bucket_audit(sigs, bands=4, rows=4,
-                                bucket_cap=50).count() == 0

@@ -195,49 +195,20 @@ class TestPlanHygiene:
 
 
 class TestExtractionStats:
-    def test_stats_match_full_pipeline(self, spark, pages):
+    def test_stats_match_full_pipeline(self, spark, pages, tmp_path):
         from arkhammirror_spark.pipeline import run_extraction_stats, run_pipeline
 
         stats = run_extraction_stats(spark, pages, num_partitions=8)
-        res = run_pipeline(spark, pages, out_dir=None, num_partitions=8)
+        res = run_pipeline(spark, pages, out_dir=str(tmp_path / "catalog"), num_partitions=8)
         assert stats["docs"] == res.tables["docs"].count() == N_ROWS
         assert stats["errors"] == res.tables["docs"].where("error is not null").count()
         assert stats["mentions"] == res.tables["mentions"].count()
         assert stats["edges"] == res.tables["edges"].count()
-
-    def test_no_catalog_path_never_persists_heavy_frame(self, spark, pages):
-        """CLAUDE.md invariant 5 on EVERY path: the no-catalog pipeline must
-        storage-checkpoint (write-then-pruned-read), not cache a frame that
-        carries extracted_text/_mentions. Verified structurally: downstream
-        tables read from the scratch parquet (FileScan), no InMemoryRelation
-        anywhere in their plans."""
-        import os
-
-        from arkhammirror_spark.pipeline import run_pipeline
-
-        res = run_pipeline(spark, pages, out_dir=None, num_partitions=8)
-        assert "scratch_dir" in res.stats and os.path.isdir(res.stats["scratch_dir"])
-        for name in ("docs", "mentions", "rels", "chunks", "claims", "dates"):
-            plan = res.tables[name]._jdf.queryExecution().optimizedPlan().toString()
+        # every table reads its committed snapshot (FileScan), never a
+        # cached frame carrying extracted_text/_mentions
+        for name, df in res.tables.items():
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
             assert "InMemoryRelation" not in plan, f"{name} reads a cached frame"
-        assert res.tables["docs"].count() > 0
-
-    def test_scratch_dirs_registered_and_cleanable(self, spark, pages):
-        """No-catalog scratch snapshots must not leak /tmp copies forever:
-        each is registered for atexit removal, and cleanup_scratch_dirs()
-        deletes them eagerly once the frames are done with."""
-        import os
-
-        from arkhammirror_spark import pipeline as pl
-
-        res = pl.run_pipeline(spark, pages, out_dir=None, num_partitions=8)
-        scratch = res.stats["scratch_dir"]
-        assert scratch in pl._SCRATCH_DIRS
-        assert res.tables["docs"].count() > 0
-        removed = pl.cleanup_scratch_dirs()
-        assert removed >= 1
-        assert not os.path.exists(scratch)
-        assert pl._SCRATCH_DIRS == []
 
     def test_name_set_edges_equal_mention_edges(self, spark, pages):
         from pyspark.sql import functions as F
@@ -344,8 +315,8 @@ class TestObservedRowCounts:
         returned = []
         write = ParquetSnapshotCatalog.write_snapshot
 
-        def spy(cat, df, table, snapshot_id, extra_meta=None):
-            manifest = write(cat, df, table, snapshot_id, extra_meta)
+        def spy(cat, df, table, snapshot_id):
+            manifest = write(cat, df, table, snapshot_id)
             returned.append(manifest)
             return manifest
 

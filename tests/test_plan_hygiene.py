@@ -1,13 +1,18 @@
 """Plan-hygiene gate: every registry query must be free of row-at-a-time
-Python, and document-table queries must column-prune their scans. Plan-only
-(no execution) so the whole sweep is fast. The structural rules beside it
-include the dead-module guard (every package module is imported by an
-entry point)."""
+Python, keep the plan shape recorded in plans/shapes.json, and
+document-table queries must column-prune their scans. Plan-only (no
+execution) so the whole sweep is fast. The structural rules beside it
+include the dead-module and dead-function guards (every package module and
+top-level function is reached from an entry point)."""
+
+import json
+from pathlib import Path
 
 import pytest
 
 from arkhammirror_spark.plans import (
     has_row_python,
+    plan_shape,
     python_node_count,
     pushed_filters,
     read_schema,
@@ -16,6 +21,11 @@ from arkhammirror_spark.plans import (
 from arkhammirror_spark.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
+
+# every part's node counts per kind; `python bench_extra.py shapes` rewrites it
+_SHAPES = json.loads(
+    (Path(__file__).resolve().parent.parent / "plans" / "shapes.json").read_text()
+)
 
 # (min, max) Arrow-batched python nodes a query's plan may print. Queries
 # whose semantics genuinely need grouped-pandas execution get exactly one
@@ -84,6 +94,7 @@ def test_no_row_python_and_bounded_arrow(spark, name):
     # range-partitioned rank constructions).
     wins = unpartitioned_windows(df)
     assert not wins, f"{name}: unpartitioned Window node(s): {wins}"
+    assert plan_shape(df) == _SHAPES[name], f"{name}: plan shape moved"
 
 
 def test_document_scans_are_pruned(spark):
@@ -197,14 +208,10 @@ def test_pipeline_job_budget(spark, tmp_path):
 
 
 # Modules under arkhammirror_spark/ that no entry point imports, kept on
-# purpose (with the packages enclosing them). Anything else unreachable is
-# dead code and fails the guard below.
-_UNREACHABLE_OK = {
-    "arkhammirror_spark.plans.inspect",  # plan-inspection tooling for tests
-    # capabilities SURVEY §2.0 claims; keep-or-delete decision deferred
-    "arkhammirror_spark.streaming.pipeline",
-    "arkhammirror_spark.operators.bucketing",
-}
+# purpose (with the packages enclosing them); none today — bench_extra.py's
+# `shapes` mode reaches plans.inspect. Anything unreachable is dead code and
+# fails the guard below.
+_UNREACHABLE_OK: set[str] = set()
 
 
 def _package_modules():
@@ -277,3 +284,116 @@ def test_no_unreachable_modules():
     )
     dead = sorted(set(files) - kept)
     assert not dead, f"modules nothing imports: {dead}"
+
+
+# Top-level functions and classes no entry point reaches, kept on purpose
+# (with the helpers only they reach). Anything else unreached is test-only
+# code and fails the guard below.
+_TEST_ONLY_OK = {
+    # test references for reachable code
+    "arkhammirror_spark.operators.graph_algorithms.betweenness_centrality":
+        "reference for graph.betweenness_distributed",
+    "arkhammirror_spark.operators.spans.extract_rels":
+        "reference for extract_rels_from_mentions",
+    "arkhammirror_spark.operators.geospatial.haversine_py":
+        "driver haversine the native haversine_km is tested against",
+    "arkhammirror_spark.operators.phash.hamming_distance_hex":
+        "the hamming distance the phash tests measure with",
+    "arkhammirror_spark.operators.boilerplate.main_content_py":
+        "Python twin of extract_main_content",
+    "arkhammirror_spark.operators.boilerplate.select_blocks_py":
+        "Python twin of extract_main_content's block selection",
+    "arkhammirror_spark.operators.similarity.ivf_topk":
+        "reference for fit_ivf/ivf_probe",
+    "arkhammirror_spark.operators.embed_model.fake_embedding":
+        "builds the vectors tests feed to the live ANN parts",
+    # the salted two-phase host aggregation the north rule names
+    "arkhammirror_spark.pipeline.salted_host_stats": "salted host stats",
+    "arkhammirror_spark.pipeline.detect_heavy_hosts": "heavy hosts off the salted stats",
+    "arkhammirror_spark.pipeline.host_col": "host key of the salted stats",
+    # the only callers of a reference_impl module: deleting either would
+    # orphan a parity anchor
+    "arkhammirror_spark.operators.spans.extract_chunks_semantic":
+        "only caller of reference_impl.semantic_chunker",
+    "arkhammirror_spark.operators.timeline.merge_timeline_events":
+        "only caller of reference_impl.timeline_merge",
+}
+
+
+def _top_level_defs():
+    """(import-time root nodes, {qualified name: def node}) over the package
+    (bar reference_impl/) and the entry-point scripts. Import-time code is
+    everything outside def bodies; registered parts and the driver-contract
+    functions of __spark_entry__.py are roots too."""
+    import ast
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    files = [p for p in (repo / "arkhammirror_spark").rglob("*.py") if "reference_impl" not in p.parts]
+    files += [repo / f for f in ("bench.py", "bench_extra.py", "__spark_entry__.py")]
+    files += sorted((repo / "scripts").glob("*.py")) + sorted((repo / "perfbench").glob("*.py"))
+
+    def registered(node) -> bool:
+        return any(
+            isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+            for d in node.decorator_list
+        )
+
+    roots, defs = [], {}
+    for path in files:
+        mod = ".".join(path.relative_to(repo).with_suffix("").parts)
+        for node in ast.parse(path.read_text()).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                roots.append(node)
+                continue
+            defs[f"{mod}.{node.name}"] = node
+            # decorators, argument defaults and base classes run at import
+            roots += node.decorator_list + getattr(node, "bases", [])
+            if not isinstance(node, ast.ClassDef):
+                roots += node.args.defaults + [d for d in node.args.kw_defaults if d]
+            if registered(node) or mod == "__spark_entry__":
+                roots.append(ast.Constant(node.name))
+    return roots, defs
+
+
+def _reached_names(roots, defs) -> set[str]:
+    """Names of the defs referenced, transitively, from `roots`: a Name, an
+    attribute or a string constant equal to a def's name reaches every def
+    of that name. An import alias is not a use."""
+    import ast
+
+    by_name: dict[str, list] = {}
+    for node in defs.values():
+        by_name.setdefault(node.name, []).append(node)
+    reached: set[str] = set()
+    todo = list(roots)
+    while todo:
+        for node in ast.walk(todo.pop()):
+            if isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                name = node.value
+            else:
+                continue
+            if name in by_name and name not in reached:
+                reached.add(name)
+                todo += by_name[name]
+    return reached
+
+
+def test_no_test_only_functions():
+    """Every top-level function and class under arkhammirror_spark/ (bar
+    reference_impl/) is reached from the package's import-time code, the
+    registered parts, bench.py, bench_extra.py, __spark_entry__.py,
+    scripts/ or perfbench/ — or is on the allow-list."""
+    roots, defs = _top_level_defs()
+    assert set(_TEST_ONLY_OK) <= set(defs), sorted(set(_TEST_ONLY_OK) - set(defs))
+    reached = _reached_names(roots, defs)
+    assert "comention_edges_from_name_sets" in reached  # the walk follows calls
+    stale = sorted(q for q in _TEST_ONLY_OK if defs[q].name in reached)
+    assert not stale, f"allow-listed functions are reachable again: {stale}"
+    kept = _reached_names(roots + [defs[q] for q in _TEST_ONLY_OK], defs)
+    dead = sorted(q for q, node in defs.items() if node.name not in kept and q not in _TEST_ONLY_OK)
+    assert not dead, f"{len(dead)} functions only tests reach: {dead}"

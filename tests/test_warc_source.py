@@ -1,5 +1,5 @@
-"""WARC source: parser unit tests, Spark reader, and the end-to-end
-WARC → pages → extract_docs chain."""
+"""WARC source: parser unit tests, segment files read through Spark's
+binaryFile source, and the end-to-end WARC → pages → extract_docs chain."""
 
 import gzip
 
@@ -8,7 +8,6 @@ import pytest
 from arkhammirror_spark.sources.warc import (
     build_warc,
     parse_warc_records,
-    read_warc,
     warc_to_pages,
 )
 
@@ -21,6 +20,11 @@ RECORDS = [
      "payload": "Résumé text only.".encode("utf-8")},
     {"url": None, "warc_type": "warcinfo", "payload": b"software: test"},
 ]
+
+
+def read_warc(spark, path_glob: str):
+    """WARC segment files → pages through Spark's binaryFile source."""
+    return warc_to_pages(spark.read.format("binaryFile").load(path_glob))
 
 
 class TestParser:
@@ -121,36 +125,6 @@ class TestSparkReader:
         assert "John Smith" in names
         # the utf-8 text-only record went through the decode cascade
         assert "Résumé" in got["https://b.example/2"]["extracted_text"]
-
-
-class TestStreamingWarc:
-    def test_streaming_segments_exactly_once(self, spark, tmp_path):
-        """Two triggers over a landing dir: each segment processed once,
-        resume from checkpoint picks up only the new segment."""
-        from arkhammirror_spark.streaming.pipeline import stream_warc_extract
-
-        land = tmp_path / "landing"
-        land.mkdir()
-        out = str(tmp_path / "docs")
-        ckpt = str(tmp_path / "ckpt")
-
-        (land / "seg-0.warc.gz").write_bytes(build_warc(RECORDS))
-        q = stream_warc_extract(spark, str(land), out, ckpt).trigger(
-            availableNow=True
-        ).start()
-        q.awaitTermination()
-        assert spark.read.parquet(out).count() == 2  # both response records
-
-        more = [{"url": "https://c.example/3", "date": "2026-03-01T00:00:00Z",
-                 "payload": b"<html><body><p>Globex Inc expands.</p></body></html>"}]
-        (land / "seg-1.warc.gz").write_bytes(build_warc(more))
-        q = stream_warc_extract(spark, str(land), out, ckpt).trigger(
-            availableNow=True
-        ).start()
-        q.awaitTermination()
-        docs = spark.read.parquet(out)
-        assert docs.count() == 3  # seg-0 NOT reprocessed
-        assert docs.where("url = 'https://c.example/3'").count() == 1
 
 
 class TestWarcRoundTripFuzz:
