@@ -4,7 +4,7 @@ _r03 each contain exactly the first 50 keys in iteration order, against
 52- and 65-entry contracts), so the full 108-part registry is folded into
 EXACTLY 50 entries — every operator keeps a hard-signal row.
 
-Mechanics: related part-queries merge into one entry as a null-padded
+Mechanics: related part-queries merge into one entry as a sentinel-padded
 UNION with a `part` tag (or a doc_id JOIN for the doc-profile family);
 the DuckDB oracle merges the SAME way from the part oracles, so each
 merged entry remains value-identical per part — nothing is weakened,
@@ -18,7 +18,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .queries import ORACLE_SQL, QUERIES
+from .queries import _SENTINEL, ORACLE_SQL, QUERIES, padded_union
 
 # (spark_type, duck_type) aliases
 _B = ("bigint", "BIGINT")
@@ -28,49 +28,38 @@ _S = ("string", "VARCHAR")
 _DT = ("date", "DATE")
 _BO = ("boolean", "BOOLEAN")
 
-# Padding for part-absent columns uses typed SENTINELS, not NULLs: the
-# driver's value compare sorts rows as tuples, and a column that is None
-# in one row and a string in another makes that sort raise (None and str
-# are unordered in Python) — measured on this suite's own mirror of the
-# compare. Sentinels keep every cell orderable on both engines.
-_SENTINEL = {
-    "bigint": "-424242",
-    "int": "-424242",
-    "double": "-424242.0",
-    "string": "'<na>'",
-    "date": "DATE'1900-01-01'",
-    "boolean": "false",
-}
+
+def _cols(*same: str, **renamed: str) -> dict[str, str]:
+    """A part's {out_name: source_col} map: each of `same` passes through
+    under its own name; `renamed` maps out_name=source_col."""
+    return {**{c: c for c in same}, **renamed}
+
 
 # merged entry -> (columns, parts)
 #   columns: [(out_name, (spark_type, duck_type))]
-#   parts:   [(tag, source_entry, {out_name: source_col})]
+#   parts:   [(tag, source_entry, {out_name: source_col})]; columns a part
+#            lacks are padded with their type's `_SENTINEL`
 MERGES: dict[str, tuple[list, list]] = {
     "date_extractions": (
         [("doc_id", _B), ("date_text", _S), ("normalized_date", _DT),
          ("confidence", _D), ("date_type", _S)],
         [("iso", "iso_dates",
-          {"doc_id": "doc_id", "date_text": "date_text",
-           "normalized_date": "normalized_date", "confidence": "confidence",
-           "date_type": "date_type"}),
+          _cols("doc_id", "date_text", "normalized_date", "confidence",
+                "date_type")),
          ("relative", "relative_dates",
-          {"doc_id": "doc_id", "date_text": "date_text",
-           "confidence": "confidence", "date_type": "date_type"})],
+          _cols("doc_id", "date_text", "confidence", "date_type"))],
     ),
     "chunking": (
         [("doc_id", _B), ("chunk_index", _B), ("chunk_text", _S),
          ("char_start", _B), ("char_end", _B), ("token_count", _B)],
         [("fixed", "chunk_fixed",
-          {"doc_id": "doc_id", "chunk_index": "chunk_index",
-           "chunk_text": "chunk_text", "char_start": "char_start",
-           "char_end": "char_end", "token_count": "token_count"}),
+          _cols("doc_id", "chunk_index", "chunk_text", "char_start",
+                "char_end", "token_count")),
          ("sentences", "chunk_sentences",
-          {"doc_id": "doc_id", "chunk_index": "chunk_index",
-           "chunk_text": "chunk_text", "char_start": "char_start",
-           "char_end": "char_end", "token_count": "token_count"}),
+          _cols("doc_id", "chunk_index", "chunk_text", "char_start",
+                "char_end", "token_count")),
          ("paragraph", "chunk_strategy_paragraph",
-          {"doc_id": "doc_id", "chunk_index": "chunk_index",
-           "chunk_text": "chunk_text"})],
+          _cols("doc_id", "chunk_index", "chunk_text"))],
     ),
     "anomalies": (
         [("id", _B), ("metric", _S), ("z_score", _D), ("severity", _S),
@@ -80,24 +69,16 @@ MERGES: dict[str, tuple[list, list]] = {
          ("magic_expected", _S), ("magic_actual", _S),
          ("file_mismatch", _BO), ("findings", _S), ("scan_status", _S)],
         [("zscore_len", "zscore_len_anomaly",
-          {"id": "doc_id", "metric": "metric", "z_score": "z_score",
-           "severity": "severity"}),
+          _cols("metric", "z_score", "severity", id="doc_id")),
          ("embedding", "embedding_anomaly",
-          {"id": "vec_id", "z_score": "z_score", "dist": "dist",
-           "confidence": "confidence"}),
+          _cols("z_score", "dist", "confidence", id="vec_id")),
          ("content", "content_anomaly",
-          {"id": "vec_id", "z_score": "z_score", "severity": "severity",
-           "dist": "min_dist", "confidence": "confidence",
-           "mean_dist": "mean_dist", "std_dist": "std_dist"}),
+          _cols("z_score", "severity", "confidence", "mean_dist", "std_dist",
+                id="vec_id", dist="min_dist")),
          ("hidden", "hidden_content",
-          {"id": "doc_id", "confidence": "stego_confidence",
-           "entropy_global": "entropy_global",
-           "n_high_regions": "n_high_regions",
-           "max_region_entropy": "max_region_entropy",
-           "magic_expected": "magic_expected",
-           "magic_actual": "magic_actual",
-           "file_mismatch": "file_mismatch", "findings": "findings",
-           "scan_status": "scan_status"})],
+          _cols("entropy_global", "n_high_regions", "max_region_entropy",
+                "magic_expected", "magic_actual", "file_mismatch", "findings",
+                "scan_status", id="doc_id", confidence="stego_confidence"))],
     ),
     "simhash_neardup": (
         [("id_a", _B), ("id_b", _B), ("val", _B), ("bits", _S),
@@ -106,51 +87,42 @@ MERGES: dict[str, tuple[list, list]] = {
          ("documents_cleaned", _B), ("stat_total", _B),
          ("stat_with_hash", _B), ("stat_unique", _B),
          ("stat_potential", _B)],
-        [("sig", "simhash_fingerprint", {"id_a": "doc_id", "val": "simhash"}),
+        [("sig", "simhash_fingerprint", _cols(id_a="doc_id", val="simhash")),
          ("pair", "simhash_hamming_pairs",
-          {"id_a": "id_a", "id_b": "id_b", "val": "hamming"}),
+          _cols("id_a", "id_b", val="hamming")),
          ("ref64", "reference_simhash",
-          {"id_a": "doc_id", "bits": "simhash_bits"}),
+          _cols(id_a="doc_id", bits="simhash_bits")),
          ("groups", "simhash_duplicate_groups",
-          {"id_a": "primary_id", "id_b": "member_id"}),
+          _cols(id_a="primary_id", id_b="member_id")),
          ("merge", "dedup_merge",
-          {"id_a": "id", "kind": "kind", "status": "status",
-           "merged_into": "merged_into", "merged_count": "merged_count",
-           "references_updated": "references_updated",
-           "documents_cleaned": "documents_cleaned",
-           "stat_total": "stat_total", "stat_with_hash": "stat_with_hash",
-           "stat_unique": "stat_unique",
-           "stat_potential": "stat_potential"})],
+          _cols("kind", "status", "merged_into", "merged_count",
+                "references_updated", "documents_cleaned", "stat_total",
+                "stat_with_hash", "stat_unique", "stat_potential",
+                id_a="id"))],
     ),
     "graph_node_labels": (
         [("name", _S), ("label", _S), ("size", _B), ("gkind", _S),
          ("lat", _D), ("lng", _D), ("km", _D), ("payload", _S)],
-        [("components", "graph_components",
-          {"name": "name", "label": "component"}),
-         ("communities", "graph_communities",
-          {"name": "community", "size": "size"}),
+        [("components", "graph_components", _cols("name", label="component")),
+         ("communities", "graph_communities", _cols("size", name="community")),
          ("geo", "geo_analysis",
-          {"gkind": "gkind", "name": "name", "label": "label",
-           "size": "size", "lat": "lat", "lng": "lng", "km": "km"}),
+          _cols("gkind", "name", "label", "size", "lat", "lng", "km")),
          ("export_filter", "graph_export_filter",
-          {"gkind": "kind", "name": "id1", "label": "id2", "size": "n",
-           "km": "w", "payload": "payload"})],
+          _cols("payload", gkind="kind", name="id1", label="id2", size="n",
+                km="w"))],
     ),
     "graph_centrality": (
         [("node", _S), ("score", _D), ("rank_pos", _I),
          ("entity_type", _S), ("centrality_s", _D), ("frequency_s", _D),
          ("recency_s", _D), ("credibility_s", _D),
          ("corroboration_s", _D), ("source_count", _B)],
-        [("pagerank", "graph_pagerank", {"node": "name", "score": "rank"}),
+        [("pagerank", "graph_pagerank", _cols(node="name", score="rank")),
          ("betweenness", "graph_betweenness",
-          {"node": "node", "score": "score", "rank_pos": "rank"}),
+          _cols("node", "score", rank_pos="rank")),
          ("composite", "composite_scores",
-          {"node": "entity_id", "score": "composite",
-           "rank_pos": "rank_pos", "entity_type": "entity_type",
-           "centrality_s": "centrality_s", "frequency_s": "frequency_s",
-           "recency_s": "recency_s", "credibility_s": "credibility_s",
-           "corroboration_s": "corroboration_s",
-           "source_count": "source_count"})],
+          _cols("rank_pos", "entity_type", "centrality_s", "frequency_s",
+                "recency_s", "credibility_s", "corroboration_s",
+                "source_count", node="entity_id", score="composite"))],
     ),
     "graph_overview": (
         [("entity_name", _S), ("degree", _B), ("n_nodes", _B),
@@ -161,97 +133,80 @@ MERGES: dict[str, tuple[list, list]] = {
          ("category", _S), ("label", _S), ("etype", _S),
          ("total_flow", _D)],
         [("stats", "graph_stats",
-          {"n_nodes": "n_nodes", "n_edges": "n_edges", "density": "density",
-           "avg_degree": "avg_degree"}),
-         ("degrees", "edge_degrees",
-          {"entity_name": "entity_name", "degree": "degree"}),
+          _cols("n_nodes", "n_edges", "density", "avg_degree")),
+         ("degrees", "edge_degrees", _cols("entity_name", "degree")),
          ("temporal", "temporal_snapshots",
-          {"kind": "kind", "snapshot_idx": "snapshot_idx",
-           "snapshot_date": "snapshot_date", "n_nodes": "n_nodes",
-           "n_edges": "n_edges", "density": "density",
-           "nodes_added": "nodes_added",
-           "nodes_removed": "nodes_removed",
-           "edges_added": "edges_added",
-           "edges_removed": "edges_removed"}),
+          _cols("kind", "snapshot_idx", "snapshot_date", "n_nodes", "n_edges",
+                "density", "nodes_added", "nodes_removed", "edges_added",
+                "edges_removed")),
          ("flows", "graph_flows",
-          {"kind": "kind", "entity_name": "id1", "flow_target": "id2",
-           "flow_value": "value", "category": "category",
-           "snapshot_idx": "layer", "label": "label", "etype": "etype",
-           "total_flow": "total", "n_nodes": "layer_count"})],
+          _cols("kind", "category", "label", "etype", entity_name="id1",
+                flow_target="id2", flow_value="value", snapshot_idx="layer",
+                total_flow="total", n_nodes="layer_count"))],
     ),
     "ann_topk": (
         [("vec_id", _B), ("score", _D), ("k", _B), ("recall_ok", _BO),
          ("coll", _S), ("opt_lists", _B), ("opt_probes", _B),
          ("subopt", _BO), ("days_since", _B), ("overdue", _BO),
          ("warn", _S)],
-        [("brute", "embedding_knn", {"vec_id": "vec_id", "score": "cosine"}),
-         ("lsh", "ann_lsh_topk", {"vec_id": "vec_id", "score": "score"}),
-         ("ivf", "ann_ivf_topk", {"k": "k", "recall_ok": "recall_ok"}),
-         ("fivf", "ann_ivf_filtered",
-          {"k": "k", "recall_ok": "recall_ok"}),
+        [("brute", "embedding_knn", _cols("vec_id", score="cosine")),
+         ("lsh", "ann_lsh_topk", _cols("vec_id", "score")),
+         ("ivf", "ann_ivf_topk", _cols("k", "recall_ok")),
+         ("fivf", "ann_ivf_filtered", _cols("k", "recall_ok")),
          ("tuning", "ivf_tuning",
-          {"coll": "name", "k": "vector_count",
-           "opt_lists": "optimal_lists", "opt_probes": "optimal_probes",
-           "subopt": "lists_suboptimal",
-           "days_since": "days_since_reindex",
-           "overdue": "reindex_overdue", "warn": "warnings"})],
+          _cols(coll="name", k="vector_count", opt_lists="optimal_lists",
+                opt_probes="optimal_probes", subopt="lists_suboptimal",
+                days_since="days_since_reindex", overdue="reindex_overdue",
+                warn="warnings"))],
     ),
     "container_extracts": (
         [("url", _S), ("lang", _S), ("member_name", _S), ("ts", _S),
          ("sha", _S), ("extension", _S), ("category", _S),
          ("mime_type", _S), ("file_route", _S)],
-        [("formats", "format_extracts",
-          {"url": "url", "lang": "lang", "sha": "text_sha"}),
+        [("formats", "format_extracts", _cols("url", "lang", sha="text_sha")),
          ("archive", "archive_members",
-          {"url": "url", "member_name": "member_name", "sha": "payload_sha"}),
-         ("warc", "warc_ingest", {"url": "url", "ts": "ts", "sha": "text_sha"}),
+          _cols("url", "member_name", sha="payload_sha")),
+         ("warc", "warc_ingest", _cols("url", "ts", sha="text_sha")),
          ("routes", "file_routes",
-          {"url": "file_name", "extension": "extension",
-           "category": "category", "mime_type": "mime_type",
-           "file_route": "file_route"})],
+          _cols("extension", "category", "mime_type", "file_route",
+                url="file_name"))],
     ),
     "mentions": (
         [("doc_id", _B), ("entity_text", _S), ("entity_type", _S),
          ("start_char", _B), ("end_char", _B), ("confidence", _D)],
-        [("mock", "mentions", {"doc_id": "doc_id", "entity_text": "entity_text"}),
+        [("mock", "mentions", _cols("doc_id", "entity_text")),
          ("model", "ner_model_mentions",
-          {"doc_id": "doc_id", "entity_text": "entity_text",
-           "entity_type": "entity_type", "start_char": "start_char",
-           "end_char": "end_char", "confidence": "confidence"})],
+          _cols("doc_id", "entity_text", "entity_type", "start_char",
+                "end_char", "confidence"))],
     ),
     "mention_resolution": (
         [("doc_id", _B), ("text", _S), ("target", _S),
          ("link_confidence", _D), ("link_reason", _S)],
         [("linked", "linked_mentions",
-          {"doc_id": "doc_id", "text": "text", "target": "canonical_id",
-           "link_confidence": "link_confidence", "link_reason": "link_reason"}),
+          _cols("doc_id", "text", "link_confidence", "link_reason",
+                target="canonical_id")),
          ("coref", "coref_resolutions",
-          {"doc_id": "doc_id", "text": "pronoun", "target": "resolved_to"})],
+          _cols("doc_id", text="pronoun", target="resolved_to"))],
     ),
     "content_scans": (
         [("doc_id", _B), ("n_flags", _B), ("flagged", _BO), ("n_email", _B),
          ("n_phone", _B), ("n_ssn", _B), ("n_ipv4", _B),
          ("n_card_valid", _B), ("has_pii", _BO), ("pattern_type", _S),
          ("rf_score", _D), ("rf_severity", _S), ("rf_confidence", _D)],
-        [("red_flags", "red_flag_scan",
-          {"doc_id": "doc_id", "n_flags": "n_flags", "flagged": "flagged"}),
+        [("red_flags", "red_flag_scan", _cols("doc_id", "n_flags", "flagged")),
          ("rf_ref", "red_flags_ref",
-          {"doc_id": "doc_id", "pattern_type": "pattern_type",
-           "rf_score": "score", "rf_severity": "severity",
-           "rf_confidence": "confidence"}),
+          _cols("doc_id", "pattern_type", rf_score="score",
+                rf_severity="severity", rf_confidence="confidence")),
          ("pii", "pii_scan",
-          {"doc_id": "doc_id", "n_email": "n_email", "n_phone": "n_phone",
-           "n_ssn": "n_ssn", "n_ipv4": "n_ipv4",
-           "n_card_valid": "n_card_valid", "has_pii": "has_pii"})],
+          _cols("doc_id", "n_email", "n_phone", "n_ssn", "n_ipv4",
+                "n_card_valid", "has_pii"))],
     ),
     "image_hashes": (
         [("id_a", _S), ("id_b", _S), ("ahash", _S), ("dhash", _S),
          ("phash", _S), ("hamming", _B)],
         [("hashes", "image_phash",
-          {"id_a": "media_id", "ahash": "ahash", "dhash": "dhash",
-           "phash": "phash"}),
-         ("pairs", "image_neardup",
-          {"id_a": "id_a", "id_b": "id_b", "hamming": "hamming"})],
+          _cols("ahash", "dhash", "phash", id_a="media_id")),
+         ("pairs", "image_neardup", _cols("id_a", "id_b", "hamming"))],
     ),
     "media_forensics": (
         [("media_id", _S), ("mean_error", _D), ("std_error", _D),
@@ -266,32 +221,22 @@ MERGES: dict[str, tuple[list, list]] = {
          ("c2pa_ts", _S), ("finding", _S), ("conf_level", _S),
          ("implications", _S), ("is_ai_generated", _BO)],
         [("ela", "ela_metrics",
-          {"media_id": "media_id", "mean_error": "mean_error",
-           "std_error": "std_error", "max_error": "max_error",
-           "uniformity_score": "uniformity_score",
-           "assessment": "assessment", "err": "err"}),
+          _cols("media_id", "mean_error", "std_error", "max_error",
+                "uniformity_score", "assessment", "err")),
          ("sunpos", "sun_positions",
-          {"media_id": "pid", "sun_altitude": "sun_altitude",
-           "sun_azimuth": "sun_azimuth",
-           "expected_shadow_direction": "expected_shadow_direction",
-           "shadow_length_ratio": "shadow_length_ratio",
-           "sun_above_horizon": "sun_above_horizon",
-           "interpretation": "interpretation"}),
+          _cols("sun_altitude", "sun_azimuth", "expected_shadow_direction",
+                "shadow_length_ratio", "sun_above_horizon", "interpretation",
+                media_id="pid")),
          ("timeline", "metadata_timeline",
-          {"media_id": "media_id", "event_type": "event_type",
-           "event_ts": "event_ts", "event_source": "event_source",
-           "event_actor": "event_actor"}),
+          _cols("media_id", "event_type", "event_ts", "event_source",
+                "event_actor")),
          ("relationships", "metadata_relationships",
-          {"media_id": "id_a", "id_b": "id_b",
-           "relationship_type": "relationship_type",
-           "match_score": "match_score", "rel_confidence": "confidence",
-           "similarity_types": "similarity_types"}),
+          _cols("id_b", "relationship_type", "match_score", "similarity_types",
+                media_id="id_a", rel_confidence="confidence")),
          ("c2pa", "c2pa_scan",
-          {"media_id": "media_id", "has_c2pa": "has_c2pa",
-           "signer": "signer", "c2pa_ts": "c2pa_ts", "finding": "finding",
-           "conf_level": "conf_level", "interpretation": "interpretation",
-           "implications": "implications",
-           "is_ai_generated": "is_ai_generated"})],
+          _cols("media_id", "has_c2pa", "signer", "c2pa_ts", "finding",
+                "conf_level", "interpretation", "implications",
+                "is_ai_generated"))],
     ),
     "credibility_analysis": (
         [("source_id", _B), ("cred_score", _I), ("cred_level", _S),
@@ -299,14 +244,11 @@ MERGES: dict[str, tuple[list, list]] = {
          ("n_assessments", _B), ("avg_score", _D), ("latest_score", _B),
          ("min_score", _B), ("max_score", _B), ("score_trend", _S)],
         [("scores", "credibility_scores",
-          {"source_id": "source_id", "cred_score": "cred_score",
-           "cred_level": "cred_level", "deception_score": "deception_score",
-           "risk_level": "risk_level"}),
+          _cols("source_id", "cred_score", "cred_level", "deception_score",
+                "risk_level")),
          ("trend", "credibility_trend",
-          {"source_id": "source_id", "n_assessments": "n_assessments",
-           "avg_score": "avg_score", "latest_score": "latest_score",
-           "min_score": "min_score", "max_score": "max_score",
-           "score_trend": "score_trend"})],
+          _cols("source_id", "n_assessments", "avg_score", "latest_score",
+                "min_score", "max_score", "score_trend"))],
     ),
     "ach_analysis": (
         [("matrix_id", _S), ("hypothesis_id", _S),
@@ -325,40 +267,26 @@ MERGES: dict[str, tuple[list, list]] = {
          ("strength", _D), ("rating_value", _S), ("status", _S),
          ("support", _B), ("attack", _B), ("net", _D)],
         [("scores", "ach_scores",
-          {"matrix_id": "matrix_id", "hypothesis_id": "hypothesis_id",
-           "consistency_score": "consistency_score",
-           "inconsistency_count": "inconsistency_count",
-           "weighted_score": "weighted_score",
-           "normalized_score": "normalized_score",
-           "evidence_count": "evidence_count", "rank": "rank"}),
+          _cols("matrix_id", "hypothesis_id", "consistency_score",
+                "inconsistency_count", "weighted_score", "normalized_score",
+                "evidence_count", "rank")),
          ("diagnosticity", "ach_diagnosticity",
-          {"matrix_id": "matrix_id", "evidence_id": "evidence_id",
-           "variance": "variance", "mean_consistency": "mean_consistency",
-           "rating_count": "rating_count"}),
+          _cols("matrix_id", "evidence_id", "variance", "mean_consistency",
+                "rating_count")),
          ("sensitivity", "ach_sensitivity",
-          {"kind": "kind", "matrix_id": "matrix_id",
-           "hypothesis_id": "hypothesis_id", "rank": "original_rank",
-           "new_rank": "new_rank", "change": "change",
-           "sensitivity": "sensitivity",
-           "uncertain_count": "uncertain_count",
-           "max_rank_change": "max_rank_change"}),
+          _cols("kind", "matrix_id", "hypothesis_id", "new_rank", "change",
+                "sensitivity", "uncertain_count", "max_rank_change",
+                rank="original_rank")),
          ("evidence", "ach_evidence",
-          {"kind": "kind", "matrix_id": "matrix_id",
-           "evidence_id": "id1", "id2": "id2", "q_score": "q_score",
-           "q_level": "q_level", "issues": "issues",
-           "warnings": "warnings", "severity": "severity",
-           "detail": "detail", "agree": "agree", "disagree": "disagree",
-           "sugg_idx": "sugg_idx", "suggestion": "suggestion"}),
+          _cols("kind", "matrix_id", "id2", "q_score", "q_level", "issues",
+                "warnings", "severity", "detail", "agree", "disagree",
+                "sugg_idx", "suggestion", evidence_id="id1")),
          ("argumentation", "ach_argumentation",
-          {"kind": "kind", "matrix_id": "matrix_id",
-           "evidence_id": "id1", "id2": "id2", "label": "label",
-           "confidence": "confidence",
-           "consistency_score": "consistency", "rank": "rank_pos",
-           "is_lead": "is_lead", "credibility": "credibility",
-           "evtype": "evtype", "esource": "esource",
-           "edge_type": "edge_type", "strength": "strength",
-           "rating_value": "rating_value", "status": "status",
-           "support": "support", "attack": "attack", "net": "net"})],
+          _cols("kind", "matrix_id", "id2", "label", "confidence", "is_lead",
+                "credibility", "evtype", "esource", "edge_type", "strength",
+                "rating_value", "status", "support", "attack", "net",
+                evidence_id="id1", consistency_score="consistency",
+                rank="rank_pos"))],
     ),
     "pattern_analysis": (
         [("user_id", _B), ("session_idx", _B), ("n_events", _B),
@@ -368,28 +296,23 @@ MERGES: dict[str, tuple[list, list]] = {
          ("description", _S), ("n_docs", _B), ("group_id", _B),
          ("spearman", _D)],
         [("sessions", "event_sessions",
-          {"user_id": "user_id", "session_idx": "session_idx",
-           "n_events": "n_events", "start_epoch": "start_epoch",
-           "end_epoch": "end_epoch"}),
+          _cols("user_id", "session_idx", "n_events", "start_epoch",
+                "end_epoch")),
          ("correlations", "entity_correlations",
-          {"entity_a": "entity_a", "entity_b": "entity_b",
-           "correlation_score": "correlation_score",
-           "co_occurrence_count": "co_occurrence_count",
-           "correlation_type": "correlation_type",
-           "description": "description", "n_docs": "n_docs"}),
+          _cols("entity_a", "entity_b", "correlation_score",
+                "co_occurrence_count", "correlation_type", "description",
+                "n_docs")),
          ("spearman", "spearman_corr",
-          {"group_id": "group_id", "spearman": "spearman",
-           "n_docs": "n"}),
+          _cols("group_id", "spearman", n_docs="n")),
          ("recurring", "recurring_patterns",
-          {"entity_a": "name", "entity_b": "word",
-           "correlation_score": "confidence",
-           "co_occurrence_count": "n_occurrences",
-           "description": "description"}),
+          _cols("description", entity_a="name", entity_b="word",
+                correlation_score="confidence",
+                co_occurrence_count="n_occurrences")),
          ("matches", "pattern_doc_matches",
-          {"entity_a": "pattern_name", "group_id": "doc_id",
-           "correlation_score": "match_score",
-           "co_occurrence_count": "start_char", "n_events": "end_char",
-           "description": "excerpt"})],
+          _cols(entity_a="pattern_name", group_id="doc_id",
+                correlation_score="match_score",
+                co_occurrence_count="start_char", n_events="end_char",
+                description="excerpt"))],
     ),
     "interval_conflicts": (
         [("doc_id", _B), ("date_text", _S), ("date_start", _DT),
@@ -399,17 +322,12 @@ MERGES: dict[str, tuple[list, list]] = {
          ("description", _S), ("resolution", _S), ("date_diff_days", _B),
          ("median_gap", _B), ("text1", _S), ("text2", _S)],
         [("gaps", "interval_conflicts",
-          {"doc_id": "doc_id", "date_text": "date_text",
-           "date_start": "date_start", "prev_date": "prev_date",
-           "gap_days": "gap_days"}),
+          _cols("doc_id", "date_text", "date_start", "prev_date", "gap_days")),
          ("detector", "temporal_conflicts",
-          {"conflict_type": "conflict_type", "severity": "severity",
-           "event1_id": "event1_id", "event2_id": "event2_id",
-           "doc1": "doc1", "doc2": "doc2", "entity_id": "entity_id",
-           "description": "description", "resolution": "resolution",
-           "date_diff_days": "date_diff_days", "gap_days": "gap_days",
-           "median_gap": "median_gap", "text1": "text1",
-           "text2": "text2"})],
+          _cols("conflict_type", "severity", "event1_id", "event2_id", "doc1",
+                "doc2", "entity_id", "description", "resolution",
+                "date_diff_days", "gap_days", "median_gap", "text1",
+                "text2"))],
     ),
     "timeline_events": (
         [("doc_id", _B), ("date_text", _S), ("date_start", _DT),
@@ -417,17 +335,14 @@ MERGES: dict[str, tuple[list, list]] = {
          ("event_count", _B), ("range_start", _DT), ("range_end", _DT),
          ("related", _S)],
         [("events", "timeline_events",
-          {"doc_id": "doc_id", "date_text": "date_text",
-           "date_start": "date_start", "event_kind": "event_kind",
-           "confidence": "confidence"}),
-         ("links", "entity_event_links",
-          {"doc_id": "doc_id", "entity_id": "entity_id"}),
+          _cols("doc_id", "date_text", "date_start", "event_kind",
+                "confidence")),
+         ("links", "entity_event_links", _cols("doc_id", "entity_id")),
          ("tl", "entity_timeline_events",
-          {"doc_id": "doc_id", "date_text": "date_text",
-           "date_start": "date_start"}),
+          _cols("doc_id", "date_text", "date_start")),
          ("summary", "entity_timeline_stats",
-          {"event_count": "event_count", "range_start": "range_start",
-           "range_end": "range_end", "related": "related_entities"})],
+          _cols("event_count", "range_start", "range_end",
+                related="related_entities"))],
     ),
     "claims": (
         [("doc_id", _B), ("claim_text", _S), ("confidence", _D),
@@ -437,42 +352,31 @@ MERGES: dict[str, tuple[list, list]] = {
          ("merged_count", _B), ("evidence_transferred", _B),
          ("entities_merged", _B), ("evidence_count", _B),
          ("supporting_count", _B), ("refuting_count", _B)],
-        [("extract", "claims",
-          {"doc_id": "doc_id", "claim_text": "claim_text",
-           "confidence": "confidence"}),
+        [("extract", "claims", _cols("doc_id", "claim_text", "confidence")),
          ("similar", "similar_claims",
-          {"id_a": "claim_id", "id_b": "matched_claim_id",
-           "score": "similarity_score", "match_type": "match_type",
-           "action": "suggested_action", "match_rank": "match_rank"}),
+          _cols("match_type", "match_rank", id_a="claim_id",
+                id_b="matched_claim_id", score="similarity_score",
+                action="suggested_action")),
          ("merge", "claims_merge",
-          {"id_a": "id", "kind": "kind", "status": "status",
-           "notes": "notes", "merge_role": "merge_role",
-           "entity_ids_out": "entity_ids_out",
-           "merged_count": "merged_count",
-           "evidence_transferred": "evidence_transferred",
-           "entities_merged": "entities_merged",
-           "evidence_count": "evidence_count",
-           "supporting_count": "supporting_count",
-           "refuting_count": "refuting_count"})],
+          _cols("kind", "status", "notes", "merge_role", "entity_ids_out",
+                "merged_count", "evidence_transferred", "entities_merged",
+                "evidence_count", "supporting_count", "refuting_count",
+                id_a="id"))],
     ),
     "graph_ego": (
         [("entity_a", _S), ("entity_b", _S), ("co_occurrence_count", _B),
          ("weight", _D), ("kind", _S), ("n", _B), ("strength", _D),
          ("flag", _BO)],
         [("ego", "graph_ego",
-          {"entity_a": "entity_a", "entity_b": "entity_b",
-           "co_occurrence_count": "co_occurrence_count",
-           "weight": "weight"}),
+          _cols("entity_a", "entity_b", "co_occurrence_count", "weight")),
          ("causal", "causal_analysis",
-          {"kind": "kind", "entity_a": "a", "entity_b": "b", "n": "n",
-           "strength": "strength", "flag": "flag"})],
+          _cols("kind", "n", "strength", "flag", entity_a="a", entity_b="b"))],
     ),
     "neardup_jaccard": (
         [("id_a", _B), ("id_b", _B), ("jaccard", _D)],
-        [("exact", "neardup_jaccard",
-          {"id_a": "id_a", "id_b": "id_b", "jaccard": "jaccard"}),
+        [("exact", "neardup_jaccard", _cols("id_a", "id_b", "jaccard")),
          ("capped", "neardup_jaccard_capped",
-          {"id_a": "id_a", "id_b": "id_b", "jaccard": "jaccard"})],
+          _cols("id_a", "id_b", "jaccard"))],
     ),
     "media_features": (
         [("media_id", _S), ("width", _I), ("height", _I), ("f_mean", _D),
@@ -487,28 +391,18 @@ MERGES: dict[str, tuple[list, list]] = {
          ("needs_downscale", _BO), ("downscale_factor", _D),
          ("issues", _S), ("route", _S)],
         [("image", "image_features",
-          {"media_id": "media_id", "width": "width", "height": "height",
-           "f_mean": "f_mean", "f_std": "f_std", "f_min": "f_min",
-           "f_max": "f_max", "f_median": "f_median", "f_otsu": "f_otsu",
-           "f_fg": "f_fg", "f_aspect": "f_aspect"}),
+          _cols("media_id", "width", "height", "f_mean", "f_std", "f_min",
+                "f_max", "f_median", "f_otsu", "f_fg", "f_aspect")),
          ("audio", "audio_features",
-          {"media_id": "media_id", "sample_rate": "sample_rate",
-           "channels": "channels", "bits": "bits",
-           "duration_s": "duration_s", "rms": "rms", "peak": "peak"}),
+          _cols("media_id", "sample_rate", "channels", "bits", "duration_s",
+                "rms", "peak")),
          ("video", "video_frame_samples",
-          {"media_id": "media_id", "frame_index": "frame_index",
-           "frame_ts_s": "frame_ts_s", "frame_digest": "frame_digest"}),
+          _cols("media_id", "frame_index", "frame_ts_s", "frame_digest")),
          ("quality", "image_quality",
-          {"media_id": "media_id", "dpi": "dpi",
-           "is_grayscale": "is_grayscale",
-           "compression_ratio": "compression_ratio",
-           "contrast_ratio": "contrast_ratio",
-           "skew_angle": "skew_angle", "has_noise": "has_noise",
-           "layout": "layout_complexity", "is_blank": "is_blank",
-           "classification": "classification",
-           "needs_downscale": "needs_downscale",
-           "downscale_factor": "downscale_factor", "issues": "issues",
-           "route": "route"})],
+          _cols("media_id", "dpi", "is_grayscale", "compression_ratio",
+                "contrast_ratio", "skew_angle", "has_noise", "is_blank",
+                "classification", "needs_downscale", "downscale_factor",
+                "issues", "route", layout="layout_complexity"))],
     ),
 }
 
@@ -519,23 +413,14 @@ PROFILE_JOIN = ("doc_profile", ["text_quality_flags", "lang_script_counts",
 
 
 def _merged_query(columns, parts) -> Callable[[SparkSession, str], DataFrame]:
+    schema = ", ".join(f"{out} {styp}" for out, (styp, _) in columns)
+
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        frames = []
-        for tag, src, mapping in parts:
-            df = QUERIES[src](spark, sf_dir)
-            cols = [F.lit(tag).alias("part")]
-            for out, (styp, _) in columns:
-                if out in mapping:
-                    cols.append(F.col(mapping[out]).cast(styp).alias(out))
-                else:
-                    cols.append(
-                        F.expr(_SENTINEL[styp]).cast(styp).alias(out)
-                    )
-            frames.append(df.select(*cols))
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
+        return padded_union("part", schema, [
+            (tag, QUERIES[src](spark, sf_dir).select(
+                *[F.col(c).alias(out) for out, c in mapping.items()]))
+            for tag, src, mapping in parts
+        ])
 
     return q
 

@@ -19,13 +19,17 @@ an oracle built after its function is attached in the same module as
 chain: each module imports the next one on its last line, after its own
 parts are registered. Whichever of them is imported first, the registry
 ends up with every part, in this module order.
+
+A kind-tagged output (a part or contract entry whose rows come in several
+kinds) is built with ``padded_union``, which fills the columns a kind
+lacks with the typed sentinels of ``_SENTINEL``, never NULL.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -56,6 +60,48 @@ def register(name: str, oracle: str | None):
         return fn
 
     return deco
+
+
+# A column that a kind-tagged output's row does not have is padded with its
+# type's SENTINEL, not NULL: the driver's value compare sorts rows as tuples,
+# and a column that is None in one row and a string in another makes that
+# sort raise (None and str are unordered in Python) — measured on this
+# suite's own mirror of the compare. Each sentinel is SQL text valid on both
+# engines, so Spark and the DuckDB oracles pad with the same values.
+_SENTINEL = {
+    "bigint": "-424242",
+    "int": "-424242",
+    "double": "-424242.0",
+    "string": "'<na>'",
+    "date": "DATE'1900-01-01'",
+    "boolean": "false",
+}
+
+
+def sentinel(spark_type: str) -> Column:
+    """The typed sentinel column for `spark_type` (a `_SENTINEL` key)."""
+    return F.expr(_SENTINEL[spark_type]).cast(spark_type)
+
+
+def padded_union(
+    tag: str, schema: str, frames: list[tuple[str | Column, DataFrame]]
+) -> DataFrame:
+    """Union kind-tagged frames into `tag` plus the `schema` columns
+    ("name type, ...", in output order). Each frame comes with its tag
+    value (a Column when its rows carry their own kinds) and selects only
+    the columns it really has; the rest get their type's sentinel."""
+    cols = [c.split() for c in schema.split(",")]
+    out = None
+    for value, df in frames:
+        have = set(df.columns)
+        assert have <= {c for c, _ in cols} | {tag}, (tag, value, have)
+        df = df.select(
+            F.lit(value).alias(tag),
+            *[(F.col(c).cast(t) if c in have else sentinel(t)).alias(c)
+              for c, t in cols],
+        )
+        out = df if out is None else out.unionByName(df)
+    return out
 
 
 # ---------------------------------------------------------------------------

@@ -13,7 +13,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .queries import ORACLE_SQL, _cased_spark, _cased_sql, _load, register
+from .queries import (
+    ORACLE_SQL, _cased_spark, _cased_sql, _load, register, sentinel,
+)
 from .operators.spans import _explode_per_doc
 from .operators.spread import spread as _spread
 
@@ -2403,20 +2405,13 @@ def q_temporal_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "conflict_type", "severity", "event1_id", "event2_id", "doc1",
         "doc2",
-        F.coalesce("entity_id", F.lit("<na>")).alias("entity_id"),
+        F.coalesce("entity_id", sentinel("string")).alias("entity_id"),
         "description",
         F.col("suggested_resolution").alias("resolution"),
-        F.coalesce("date_diff_days", F.lit(-424242)).cast("long").alias(
-            "date_diff_days"
-        ),
-        F.coalesce("gap_days", F.lit(-424242)).cast("long").alias(
-            "gap_days"
-        ),
-        F.coalesce("median_gap", F.lit(-424242)).cast("long").alias(
-            "median_gap"
-        ),
-        F.coalesce("text1", F.lit("<na>")).alias("text1"),
-        F.coalesce("text2", F.lit("<na>")).alias("text2"),
+        *[F.coalesce(F.col(c).cast("long"), sentinel("bigint")).alias(c)
+          for c in ("date_diff_days", "gap_days", "median_gap")],
+        F.coalesce("text1", sentinel("string")).alias("text1"),
+        F.coalesce("text2", sentinel("string")).alias("text2"),
     )
 
 

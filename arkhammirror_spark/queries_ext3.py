@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .queries import ORACLE_SQL, _load, register
+from .queries import ORACLE_SQL, _load, padded_union, register, sentinel
 
 
 # ---------------------------------------------------------------------------
@@ -185,15 +185,15 @@ def q_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = full_scan(_metadata_fixture(spark))
     # absent fields surface as typed sentinels, not NULLs: the driver's
     # value compare sorts rows as tuples and None is unorderable vs str
-    s = lambda c: F.coalesce(F.col(c), F.lit("<na>")).alias(c)  # noqa: E731
+    s = lambda c: F.coalesce(c, sentinel("string")).alias(c)  # noqa: E731
     return out.select(
         "media_id", "kind", s("make"), s("model"), s("software"),
         s("datetime_original"),
-        F.coalesce("gps_lat", F.lit(-424242.0)).alias("gps_lat"),
-        F.coalesce("gps_lon", F.lit(-424242.0)).alias("gps_lon"),
+        F.coalesce("gps_lat", sentinel("double")).alias("gps_lat"),
+        F.coalesce("gps_lon", sentinel("double")).alias("gps_lon"),
         s("title"), s("author"), s("producer"), s("created"), s("modified"),
         s("last_modified_by"),
-        F.coalesce("revision", F.lit(-424242)).alias("revision"),
+        F.coalesce("revision", sentinel("int")).alias("revision"),
         s("png_text"),
         F.array_join("warnings", "|").alias("warnings"),
         "integrity_status",
@@ -256,11 +256,9 @@ def q_ela_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("error").isNotNull().cast("int").alias("err"),
     ).select(  # sentinel-pad the quarantine row (driver sort needs no NULLs)
         "media_id",
-        F.coalesce("mean_error", F.lit(-424242.0)).alias("mean_error"),
-        F.coalesce("std_error", F.lit(-424242.0)).alias("std_error"),
-        F.coalesce("max_error", F.lit(-424242.0)).alias("max_error"),
-        F.coalesce("uniformity_score", F.lit(-424242.0)).alias("uniformity_score"),
-        F.coalesce("assessment", F.lit("<na>")).alias("assessment"),
+        *[F.coalesce(c, sentinel("double")).alias(c) for c in (
+            "mean_error", "std_error", "max_error", "uniformity_score")],
+        F.coalesce("assessment", sentinel("string")).alias("assessment"),
         "err",
     )
 
@@ -319,7 +317,7 @@ def q_metadata_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = metadata_timeline(_provenance_fixture(spark))
     return out.select(
         "media_id", "event_type", "event_ts", "event_source",
-        F.coalesce("event_actor", F.lit("<na>")).alias("event_actor"),
+        F.coalesce("event_actor", sentinel("string")).alias("event_actor"),
     )
 
 
@@ -985,8 +983,8 @@ def q_c2pa_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "media_id",
         "has_c2pa",
-        F.coalesce("signer", F.lit("<na>")).alias("signer"),
-        F.coalesce("c2pa_ts", F.lit("<na>")).alias("c2pa_ts"),
+        F.coalesce("signer", sentinel("string")).alias("signer"),
+        F.coalesce("c2pa_ts", sentinel("string")).alias("c2pa_ts"),
         "finding",
         F.col("conf_level"),
         "interpretation",
@@ -1481,44 +1479,20 @@ def q_dedup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         cleanup_action="soft_delete", id_col="doc_id",
     )
 
-    sent_b = F.lit(-424242).cast("long")
     hist = out["history"].select(
-        F.lit("history").alias("kind"),
-        F.col("primary_id").cast("long").alias("id"),
-        F.lit("<na>").alias("status"),
-        sent_b.alias("merged_into"),
-        F.col("merged_count"),
-        F.col("references_updated"),
-        F.col("documents_cleaned"),
-        sent_b.alias("stat_total"), sent_b.alias("stat_with_hash"),
-        sent_b.alias("stat_unique"), sent_b.alias("stat_potential"),
+        F.col("primary_id").alias("id"), "merged_count",
+        "references_updated", "documents_cleaned",
     )
     docs_state = out["documents"].select(
-        F.lit("doc").alias("kind"),
-        F.col("doc_id").cast("long").alias("id"),
-        F.col("status"),
-        F.coalesce(F.col("merged_into_id").cast("long"), sent_b).alias(
-            "merged_into"
-        ),
-        sent_b.alias("merged_count"), sent_b.alias("references_updated"),
-        sent_b.alias("documents_cleaned"),
-        sent_b.alias("stat_total"), sent_b.alias("stat_with_hash"),
-        sent_b.alias("stat_unique"), sent_b.alias("stat_potential"),
+        F.col("doc_id").alias("id"), "status",
+        F.coalesce(
+            F.col("merged_into_id").cast("long"), sentinel("bigint")
+        ).alias("merged_into"),
     )
     refs = (
         out["mentions"]
-        .groupBy("document_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.lit("refs").alias("kind"),
-            F.col("document_id").cast("long").alias("id"),
-            F.lit("<na>").alias("status"),
-            sent_b.alias("merged_into"), sent_b.alias("merged_count"),
-            F.col("n").cast("long").alias("references_updated"),
-            sent_b.alias("documents_cleaned"),
-            sent_b.alias("stat_total"), sent_b.alias("stat_with_hash"),
-            sent_b.alias("stat_unique"), sent_b.alias("stat_potential"),
-        )
+        .groupBy(F.col("document_id").alias("id"))
+        .agg(F.count(F.lit(1)).alias("references_updated"))
     )
     pair_base = d.select(
         (F.col("doc_id") - F.col("doc_id") % 2).alias("base"),
@@ -1534,18 +1508,19 @@ def q_dedup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     stats = deduplication_stats(docs, hashes).select(
-        F.lit("stats").alias("kind"),
-        sent_b.alias("id"), F.lit("<na>").alias("status"),
-        sent_b.alias("merged_into"), sent_b.alias("merged_count"),
-        sent_b.alias("references_updated"),
-        sent_b.alias("documents_cleaned"),
         F.col("total_documents").alias("stat_total"),
         F.col("documents_with_hash").alias("stat_with_hash"),
         F.col("unique_content_hashes").alias("stat_unique"),
         F.col("potential_duplicates").alias("stat_potential"),
     )
-    return hist.unionByName(docs_state).unionByName(refs).unionByName(
-        stats
+    return padded_union(
+        "kind",
+        "id bigint, status string, merged_into bigint, merged_count bigint, "
+        "references_updated bigint, documents_cleaned bigint, "
+        "stat_total bigint, stat_with_hash bigint, stat_unique bigint, "
+        "stat_potential bigint",
+        [("history", hist), ("doc", docs_state), ("refs", refs),
+         ("stats", stats)],
     )
 
 
@@ -1790,52 +1765,32 @@ def q_claims_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = merge_claims(claims, plan, evidence=ev)
 
-    sent_b = F.lit(-424242).cast("long")
-    sent_s = F.lit("<na>")
     res = out["results"].select(
-        F.lit("res").alias("kind"),
-        F.col("primary_claim_id").cast("long").alias("id"),
-        sent_s.alias("status"), sent_s.alias("notes"),
-        sent_s.alias("merge_role"), sent_s.alias("entity_ids_out"),
-        F.col("merged_count").cast("long"),
-        F.col("evidence_transferred").cast("long"),
-        F.col("entities_merged").cast("long"),
-        sent_b.alias("evidence_count"), sent_b.alias("supporting_count"),
-        sent_b.alias("refuting_count"),
+        F.col("primary_claim_id").alias("id"), "merged_count",
+        "evidence_transferred", "entities_merged",
     )
     states = out["claim_states"].select(
-        F.lit("state").alias("kind"),
-        F.col("claim_id").cast("long").alias("id"),
-        "status",
-        F.when(F.col("notes") == "", sent_s).otherwise(
+        F.col("claim_id").alias("id"), "status",
+        F.when(F.col("notes") == "", sentinel("string")).otherwise(
             F.col("notes")
         ).alias("notes"),
-        "merge_role", "entity_ids_out",
-        sent_b.alias("merged_count"),
-        sent_b.alias("evidence_transferred"),
-        sent_b.alias("entities_merged"),
-        F.col("evidence_count").cast("long"),
-        F.col("supporting_count").cast("long"),
-        F.col("refuting_count").cast("long"),
+        "merge_role", "entity_ids_out", "evidence_count",
+        "supporting_count", "refuting_count",
     )
     ev_counts = (
         out["evidence_out"]
-        .groupBy("claim_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.lit("ev").alias("kind"),
-            F.col("claim_id").cast("long").alias("id"),
-            sent_s.alias("status"), sent_s.alias("notes"),
-            sent_s.alias("merge_role"), sent_s.alias("entity_ids_out"),
-            sent_b.alias("merged_count"),
-            sent_b.alias("evidence_transferred"),
-            sent_b.alias("entities_merged"),
-            F.col("n").cast("long").alias("evidence_count"),
-            sent_b.alias("supporting_count"),
-            sent_b.alias("refuting_count"),
-        )
+        .groupBy(F.col("claim_id").alias("id"))
+        .agg(F.count(F.lit(1)).alias("evidence_count"))
     )
-    return res.unionByName(states).unionByName(ev_counts)
+    return padded_union(
+        "kind",
+        "id bigint, status string, notes string, merge_role string, "
+        "entity_ids_out string, merged_count bigint, "
+        "evidence_transferred bigint, entities_merged bigint, "
+        "evidence_count bigint, supporting_count bigint, "
+        "refuting_count bigint",
+        [("res", res), ("state", states), ("ev", ev_counts)],
+    )
 
 
 ORACLE_SQL["claims_merge"] = """
@@ -2362,22 +2317,25 @@ def q_temporal_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     start = datetime.date(2026, 1, 1)
     end = datetime.date(2026, 5, 1)  # 120 days
-    frames = []
-    for kind, cumulative in [("cum", True), ("win", False)]:
-        s = snapshot_series(
+    frames = [
+        (kind, snapshot_series(
             mentions, start, end, 30, cumulative=cumulative
-        )
-        frames.append(s.select(
-            F.lit(kind).alias("kind"),
-            "snapshot_idx",
-            F.col("snapshot_date").cast("string").alias("snapshot_date"),
+        ).select(
+            "snapshot_idx", "snapshot_date",
             F.col("node_count").alias("n_nodes"),
             F.col("edge_count").alias("n_edges"),
             F.round("density", 6).alias("density"),
-            "nodes_added", "nodes_removed", "edges_added",
-            "edges_removed",
+            "nodes_added", "nodes_removed", "edges_added", "edges_removed",
         ))
-    return frames[0].unionByName(frames[1])
+        for kind, cumulative in [("cum", True), ("win", False)]
+    ]
+    return padded_union(
+        "kind",
+        "snapshot_idx bigint, snapshot_date string, n_nodes bigint, "
+        "n_edges bigint, density double, nodes_added bigint, "
+        "nodes_removed bigint, edges_added bigint, edges_removed bigint",
+        frames,
+    )
 
 
 ORACLE_SQL["temporal_snapshots"] = """
@@ -2513,9 +2471,6 @@ def q_causal_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     node_ids = sorted({c for c, _, _ in edge_rows}
                       | {e for _, e, _ in edge_rows})
 
-    sent_b = F.lit(-424242).cast("long")
-    sent_d = F.lit(-424242.0)
-
     # distributed Kahn layers → per-edge topological witness
     layers = causal_ordering_distributed(ed)
     order_rows = (
@@ -2530,21 +2485,20 @@ def q_causal_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
             "effect",
         )
         .select(
-            F.lit("order").alias("kind"),
             F.col("cause").alias("a"), F.col("effect").alias("b"),
-            sent_b.alias("n"), sent_d.alias("strength"),
             ((F.col("lc") >= 0) & (F.col("lc") < F.col("le"))).alias(
                 "flag"
             ),
         )
     )
 
+    # None where a driver row's kind has no value; sentinel-padded below
     driver_rows = []
     ok, _cycles = validate_dag(edge_rows, node_ids)
-    driver_rows.append(("dag", "acyclic", "<na>", -424242, -424242.0, ok))
+    driver_rows.append(("dag", "acyclic", None, None, None, ok))
     cyc_rows = edge_rows + [("V19", "V00", 0.1)]
     ok_c, _ = validate_dag(cyc_rows, node_ids)
-    driver_rows.append(("dag", "cyclic", "<na>", -424242, -424242.0, ok_c))
+    driver_rows.append(("dag", "cyclic", None, None, None, ok_c))
     for a, b in [("V00", "V12"), ("V03", "V15")]:
         paths = find_causal_paths(edge_rows, a, b)
         driver_rows.append((
@@ -2553,7 +2507,7 @@ def q_causal_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         ))
     for c in identify_confounders(edge_rows, "V08", "V16"):
         driver_rows.append((
-            "confounder", "V08", c["id"], -424242, -424242.0,
+            "confounder", "V08", c["id"], None, None,
             c["affects_treatment"] and c["affects_outcome"],
         ))
     iv = intervention_effect(edge_rows, "V00", "V12")
@@ -2565,14 +2519,20 @@ def q_causal_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         driver_rows,
         "kind string, a string, b string, n long, strength double, "
         "flag boolean",
-    ).withColumn(
+    ).select(
+        "kind", "a",
+        F.coalesce("b", sentinel("string")).alias("b"),
+        F.coalesce("n", sentinel("bigint")).alias("n"),
         # HALF_UP like the DuckDB oracle; python round() is banker's
-        "strength",
-        F.when(
-            F.col("strength") != -424242.0, F.round("strength", 6)
-        ).otherwise(F.col("strength")),
+        F.coalesce(F.round("strength", 6), sentinel("double")).alias(
+            "strength"
+        ),
+        "flag",
     )
-    return order_rows.unionByName(ddf)
+    return padded_union(
+        "kind", "a string, b string, n bigint, strength double, flag boolean",
+        [("order", order_rows), (F.col("kind"), ddf)],
+    )
 
 
 ORACLE_SQL["causal_analysis"] = """
@@ -2716,64 +2676,43 @@ def q_geo_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     gedges = edge_distances(gnodes, edges)
 
-    sent_d = F.lit(-424242.0)
     node_rows = gnodes.select(
-        F.lit("node").alias("gkind"),
         F.col("node_id").alias("name"),
         F.col("location_type").alias("label"),
-        F.lit(-424242).cast("long").alias("size"),
         F.round("latitude", 6).alias("lat"),
         F.round("longitude", 6).alias("lng"),
-        sent_d.alias("km"),
     )
     edge_rows = gedges.select(
-        F.lit("edge").alias("gkind"),
         F.col("source_id").alias("name"),
         F.col("target_id").alias("label"),
-        F.lit(-424242).cast("long").alias("size"),
-        sent_d.alias("lat"), sent_d.alias("lng"),
         F.round("distance_km", 3).alias("km"),
     )
     b = geo_bounds(gnodes)
-    bounds_rows = (
-        b.select(
-            F.lit("bounds").alias("gkind"), F.lit("min").alias("name"),
-            F.lit("<na>").alias("label"),
-            F.lit(-424242).cast("long").alias("size"),
-            F.round("min_lat", 6).alias("lat"),
-            F.round("min_lng", 6).alias("lng"), sent_d.alias("km"),
-        )
-        .unionByName(b.select(
-            F.lit("bounds").alias("gkind"), F.lit("max").alias("name"),
-            F.lit("<na>").alias("label"),
-            F.lit(-424242).cast("long").alias("size"),
-            F.round("max_lat", 6).alias("lat"),
-            F.round("max_lng", 6).alias("lng"), sent_d.alias("km"),
+    bounds_rows = [
+        ("bounds", b.select(
+            F.lit(k).alias("name"),
+            F.round(f"{k}_lat", 6).alias("lat"),
+            F.round(f"{k}_lng", 6).alias("lng"),
         ))
-        .unionByName(b.select(
-            F.lit("bounds").alias("gkind"), F.lit("center").alias("name"),
-            F.lit("<na>").alias("label"),
-            F.lit(-424242).cast("long").alias("size"),
-            F.round("center_lat", 6).alias("lat"),
-            F.round("center_lng", 6).alias("lng"), sent_d.alias("km"),
-        ))
-    )
+        for k in ("min", "max", "center")
+    ]
     filt = filter_by_bounds(gnodes, gedges, -30, 30, -60, 60)
     filt_row = (
         filt["nodes"].agg(F.count(F.lit(1)).alias("n"))
         .withColumn("_k", F.lit(1))
         .join(filt["total"].withColumn("_k", F.lit(1)), "_k")
         .select(
-            F.lit("filtered").alias("gkind"), F.lit("box").alias("name"),
-            F.lit("<na>").alias("label"),
-            F.col("n").cast("long").alias("size"),
-            sent_d.alias("lat"), sent_d.alias("lng"),
+            F.lit("box").alias("name"), F.col("n").alias("size"),
             F.round("total_distance_km", 3).alias("km"),
         )
     )
-    return node_rows.unionByName(edge_rows).unionByName(
-        bounds_rows
-    ).unionByName(filt_row)
+    return padded_union(
+        "gkind",
+        "name string, label string, size bigint, lat double, lng double, "
+        "km double",
+        [("node", node_rows), ("edge", edge_rows), *bounds_rows,
+         ("filtered", filt_row)],
+    )
 
 
 ORACLE_SQL["geo_analysis"] = """
@@ -3131,22 +3070,6 @@ def _ach_hypotheses(spark: SparkSession) -> DataFrame:
     )
 
 
-def _NA_B():
-    return F.lit(-424242).cast("long")
-
-
-def _NA_I():
-    return F.lit(-424242).cast("int")
-
-
-def _NA_D():
-    return F.lit(-424242.0)
-
-
-def _NA_S():
-    return F.lit("<na>")
-
-
 @register("ach_sensitivity", None)  # oracle below
 def q_ach_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sensitivity analysis (scoring.py:185-259): rank changes after
@@ -3159,24 +3082,20 @@ def q_ach_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratings = _ach_ratings(spark)
     evidence = _ach_evidence(spark)
     ch = ach_sensitivity_changes(ratings, evidence).select(
-        F.lit("change").alias("kind"), "matrix_id", "hypothesis_id",
-        F.col("original_rank").cast("int").alias("original_rank"),
-        F.col("new_rank").cast("int").alias("new_rank"),
-        F.col("change").cast("int").alias("change"),
-        _NA_S().alias("sensitivity"), _NA_B().alias("uncertain_count"),
-        _NA_I().alias("max_rank_change"),
+        "matrix_id", "hypothesis_id", "original_rank", "new_rank", "change",
     )
     su = ach_sensitivity_summary(ratings, evidence).select(
-        F.lit("summary").alias("kind"), "matrix_id",
-        _NA_S().alias("hypothesis_id"), _NA_I().alias("original_rank"),
-        _NA_I().alias("new_rank"), _NA_I().alias("change"),
-        "sensitivity",
-        F.col("uncertain_evidence_count").cast("long").alias(
-            "uncertain_count"
-        ),
-        F.col("max_rank_change").cast("int").alias("max_rank_change"),
+        "matrix_id", "sensitivity",
+        F.col("uncertain_evidence_count").alias("uncertain_count"),
+        "max_rank_change",
     )
-    return ch.unionByName(su)
+    return padded_union(
+        "kind",
+        "matrix_id string, hypothesis_id string, original_rank int, "
+        "new_rank int, change int, sensitivity string, "
+        "uncertain_count bigint, max_rank_change int",
+        [("change", ch), ("summary", su)],
+    )
 
 
 @register("ach_evidence", None)  # oracle below
@@ -3193,46 +3112,33 @@ def q_ach_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     evidence = _ach_evidence(spark)
     hyps = _ach_hypotheses(spark)
     q = evidence_quality(evidence).select(
-        F.lit("quality").alias("kind"), "matrix_id",
-        F.col("evidence_id").alias("id1"), _NA_S().alias("id2"),
+        "matrix_id", F.col("evidence_id").alias("id1"),
         F.round("quality_score", 6).alias("q_score"),
         F.col("quality_level").alias("q_level"), "issues", "warnings",
-        _NA_S().alias("severity"), _NA_S().alias("detail"),
-        _NA_B().alias("agree"), _NA_B().alias("disagree"),
-        _NA_I().alias("sugg_idx"), _NA_S().alias("suggestion"),
     )
     g = evidence_gaps(ratings, evidence).select(
-        F.lit("gap").alias("kind"), "matrix_id",
-        F.col("ref_id").alias("id1"), _NA_S().alias("id2"),
-        _NA_D().alias("q_score"), _NA_S().alias("q_level"),
-        _NA_S().alias("issues"), _NA_S().alias("warnings"),
-        "severity", F.col("gap_type").alias("detail"),
-        _NA_B().alias("agree"), _NA_B().alias("disagree"),
-        _NA_I().alias("sugg_idx"),
+        "matrix_id", F.col("ref_id").alias("id1"), "severity",
+        F.col("gap_type").alias("detail"),
         F.col("detail").alias("suggestion"),
     )
     c = compare_evidence_pairs(ratings).select(
-        F.lit("compare").alias("kind"), "matrix_id",
-        F.col("evidence1_id").alias("id1"),
+        "matrix_id", F.col("evidence1_id").alias("id1"),
         F.col("evidence2_id").alias("id2"),
-        _NA_D().alias("q_score"), _NA_S().alias("q_level"),
-        _NA_S().alias("issues"), _NA_S().alias("warnings"),
-        _NA_S().alias("severity"), _NA_S().alias("detail"),
-        F.col("agreement_count").cast("long").alias("agree"),
-        F.col("disagreement_count").cast("long").alias("disagree"),
-        _NA_I().alias("sugg_idx"), _NA_S().alias("suggestion"),
+        F.col("agreement_count").alias("agree"),
+        F.col("disagreement_count").alias("disagree"),
     )
     s = suggest_evidence(ratings, evidence, hyps).select(
-        F.lit("suggest").alias("kind"), "matrix_id",
-        F.col("hypothesis_id").alias("id1"), _NA_S().alias("id2"),
-        _NA_D().alias("q_score"), _NA_S().alias("q_level"),
-        _NA_S().alias("issues"), _NA_S().alias("warnings"),
-        _NA_S().alias("severity"), _NA_S().alias("detail"),
-        _NA_B().alias("agree"), _NA_B().alias("disagree"),
-        F.col("suggestion_idx").cast("int").alias("sugg_idx"),
-        "suggestion",
+        "matrix_id", F.col("hypothesis_id").alias("id1"),
+        F.col("suggestion_idx").alias("sugg_idx"), "suggestion",
     )
-    return q.unionByName(g).unionByName(c).unionByName(s)
+    return padded_union(
+        "kind",
+        "matrix_id string, id1 string, id2 string, q_score double, "
+        "q_level string, issues string, warnings string, severity string, "
+        "detail string, agree bigint, disagree bigint, sugg_idx int, "
+        "suggestion string",
+        [("quality", q), ("gap", g), ("compare", c), ("suggest", s)],
+    )
 
 
 @register("ach_argumentation", None)  # oracle below
@@ -3250,57 +3156,38 @@ def q_ach_argumentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     hyps = _ach_hypotheses(spark)
     sc = ach_scores(ratings)
     hn = hypothesis_nodes(hyps, sc).select(
-        F.lit("hyp_node").alias("kind"), "matrix_id",
-        F.col("node_id").alias("id1"), _NA_S().alias("id2"),
-        "label",
+        "matrix_id", F.col("node_id").alias("id1"), "label",
         F.round("confidence", 6).alias("confidence"),
-        F.col("consistency_score").cast("long").alias("consistency"),
-        F.col("rank").cast("int").alias("rank_pos"),
-        "is_lead",
-        _NA_D().alias("credibility"), _NA_S().alias("evtype"),
-        _NA_S().alias("esource"), _NA_S().alias("edge_type"),
-        _NA_D().alias("strength"), _NA_S().alias("rating_value"),
-        _NA_S().alias("status"), _NA_B().alias("support"),
-        _NA_B().alias("attack"), _NA_D().alias("net"),
+        F.col("consistency_score").alias("consistency"),
+        F.col("rank").alias("rank_pos"), "is_lead",
     )
     en = evidence_nodes(evidence).select(
-        F.lit("ev_node").alias("kind"), "matrix_id",
-        F.col("node_id").alias("id1"), _NA_S().alias("id2"),
-        "label", _NA_D().alias("confidence"), _NA_B().alias("consistency"),
-        _NA_I().alias("rank_pos"), F.lit(False).alias("is_lead"),
+        "matrix_id", F.col("node_id").alias("id1"), "label",
         F.round("credibility", 6).alias("credibility"),
         F.col("evidence_type").alias("evtype"),
-        F.col("source").alias("esource"), _NA_S().alias("edge_type"),
-        _NA_D().alias("strength"), _NA_S().alias("rating_value"),
-        _NA_S().alias("status"), _NA_B().alias("support"),
-        _NA_B().alias("attack"), _NA_D().alias("net"),
+        F.col("source").alias("esource"),
     )
     ed = argument_edges(ratings).select(
-        F.lit("edge").alias("kind"), "matrix_id",
-        F.col("source").alias("id1"), F.col("target").alias("id2"),
-        _NA_S().alias("label"), _NA_D().alias("confidence"),
-        _NA_B().alias("consistency"), _NA_I().alias("rank_pos"),
-        F.lit(False).alias("is_lead"), _NA_D().alias("credibility"),
-        _NA_S().alias("evtype"), _NA_S().alias("esource"),
-        "edge_type", "strength", "rating_value",
-        _NA_S().alias("status"), _NA_B().alias("support"),
-        _NA_B().alias("attack"),
-        F.round("confidence", 6).alias("net"),
+        "matrix_id", F.col("source").alias("id1"),
+        F.col("target").alias("id2"), "edge_type", "strength",
+        "rating_value", F.round("confidence", 6).alias("net"),
     )
     st = argument_statuses(ratings).select(
-        F.lit("status").alias("kind"), "matrix_id",
-        F.col("node_id").alias("id1"), _NA_S().alias("id2"),
-        _NA_S().alias("label"), _NA_D().alias("confidence"),
-        _NA_B().alias("consistency"), _NA_I().alias("rank_pos"),
-        F.lit(False).alias("is_lead"), _NA_D().alias("credibility"),
-        _NA_S().alias("evtype"), _NA_S().alias("esource"),
-        _NA_S().alias("edge_type"), _NA_D().alias("strength"),
-        _NA_S().alias("rating_value"), "status",
-        F.col("support_count").cast("long").alias("support"),
-        F.col("attack_count").cast("long").alias("attack"),
+        "matrix_id", F.col("node_id").alias("id1"), "status",
+        F.col("support_count").alias("support"),
+        F.col("attack_count").alias("attack"),
         F.round("net_score", 6).alias("net"),
     )
-    return hn.unionByName(en).unionByName(ed).unionByName(st)
+    return padded_union(
+        "kind",
+        "matrix_id string, id1 string, id2 string, label string, "
+        "confidence double, consistency bigint, rank_pos int, "
+        "is_lead boolean, credibility double, evtype string, "
+        "esource string, edge_type string, strength double, "
+        "rating_value string, status string, support bigint, "
+        "attack bigint, net double",
+        [("hyp_node", hn), ("ev_node", en), ("edge", ed), ("status", st)],
+    )
 
 
 _ACH_FIX_SQL = """
@@ -3735,41 +3622,27 @@ def q_graph_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
         nodes, edges, aggregate_by_type=True
     )
 
-    def _node_rows(df, kind):
+    def _node_rows(df):
         return df.select(
-            F.lit(kind).alias("kind"), F.col("id").alias("id1"),
-            _NA_S().alias("id2"), F.round("value", 6).alias("value"),
-            _NA_S().alias("category"),
-            F.col("layer").cast("long").alias("layer"),
-            "label", F.col("entity_type").alias("etype"),
-            _NA_D().alias("total"), _NA_B().alias("layer_count"),
+            F.col("id").alias("id1"), F.round("value", 6).alias("value"),
+            "layer", "label", F.col("entity_type").alias("etype"),
         )
 
-    def _link_rows(df, kind):
+    def _link_rows(df):
         return df.select(
-            F.lit(kind).alias("kind"), F.col("source").alias("id1"),
-            F.col("target").alias("id2"),
+            F.col("source").alias("id1"), F.col("target").alias("id2"),
             F.round("value", 6).alias("value"), "category",
-            _NA_B().alias("layer"), _NA_S().alias("label"),
-            _NA_S().alias("etype"), _NA_D().alias("total"),
-            _NA_B().alias("layer_count"),
         )
 
-    st = stats.select(
-        F.lit("stats").alias("kind"), _NA_S().alias("id1"),
-        _NA_S().alias("id2"), _NA_D().alias("value"),
-        _NA_S().alias("category"), _NA_B().alias("layer"),
-        _NA_S().alias("label"), _NA_S().alias("etype"),
-        F.round("total_flow", 6).alias("total"),
-        F.col("layer_count").cast("long").alias("layer_count"),
-    )
-    return (
-        _node_rows(fn, "enode")
-        .unionByName(_link_rows(fl, "eflow"))
-        .unionByName(_node_rows(an, "agg_node"))
-        .unionByName(_link_rows(al, "agg_link"))
-        .unionByName(_link_rows(rl, "rflow"))
-        .unionByName(st)
+    st = stats.select(F.round("total_flow", 6).alias("total"), "layer_count")
+    return padded_union(
+        "kind",
+        "id1 string, id2 string, value double, category string, "
+        "layer bigint, label string, etype string, total double, "
+        "layer_count bigint",
+        [("enode", _node_rows(fn)), ("eflow", _link_rows(fl)),
+         ("agg_node", _node_rows(an)), ("agg_link", _link_rows(al)),
+         ("rflow", _link_rows(rl)), ("stats", st)],
     )
 
 
@@ -3974,15 +3847,9 @@ def q_graph_export_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fn = fn.orderBy("id").localCheckpoint(eager=True)
     fe = fe.orderBy("source", "target").localCheckpoint(eager=True)
-    node_rows = fn.select(
-        F.lit("fnode").alias("kind"), F.col("id").alias("id1"),
-        _NA_S().alias("id2"),
-        F.col("degree").cast("long").alias("n"),
-        _NA_D().alias("w"), _NA_S().alias("payload"),
-    )
+    node_rows = fn.select(F.col("id").alias("id1"), F.col("degree").alias("n"))
     edge_rows = fe.select(
-        F.lit("fedge").alias("kind"), F.col("source").alias("id1"),
-        F.col("target").alias("id2"), _NA_B().alias("n"),
+        F.col("source").alias("id1"), F.col("target").alias("id2"),
         F.col("weight").alias("w"), F.col("relationship_type").alias("payload"),
     )
     exports = [
@@ -3991,17 +3858,14 @@ def q_graph_export_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("gexf", export_gexf(fn, fe, "proj1")),
     ]
     exp_rows = spark.createDataFrame(
-        [
-            ("export", fmt, hashlib.sha256(s.encode()).hexdigest(),
-             len(s))
-            for fmt, s in exports
-        ],
-        "kind string, id1 string, id2 string, n long",
-    ).select(
-        "kind", "id1", "id2", "n", _NA_D().alias("w"),
-        _NA_S().alias("payload"),
+        [(fmt, hashlib.sha256(s.encode()).hexdigest(), len(s))
+         for fmt, s in exports],
+        "id1 string, id2 string, n long",
     )
-    return node_rows.unionByName(edge_rows).unionByName(exp_rows)
+    return padded_union(
+        "kind", "id1 string, id2 string, n bigint, w double, payload string",
+        [("fnode", node_rows), ("fedge", edge_rows), ("export", exp_rows)],
+    )
 
 
 def _gf_oracle() -> str:

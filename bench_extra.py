@@ -17,11 +17,11 @@ measured, and each job is labelled (guide §1.5).
 Env knobs match bench.py: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS. Plan dumps
 go to PLAN_DIR (default: a directory under the system temp dir).
 
-`shapes` records every part's `plan_shape` (node counts per kind) in
-plans/shapes.json, which tests/test_plan_hygiene.py asserts. It plans in
-the test session's shape (local[4], 8 shuffle partitions) against the
-test's own data directory, whatever SPARK_GRAFT_SF_DIR says: the
-planner's broadcast choices follow data size.
+`shapes` records every part's `plan_shape` (node counts per kind) and
+output schema in plans/shapes.json, which tests/test_plan_hygiene.py
+asserts. It plans in the test session's shape (local[4], 8 shuffle
+partitions) against the test's own data directory, whatever
+SPARK_GRAFT_SF_DIR says: the planner's broadcast choices follow data size.
 """
 
 from __future__ import annotations
@@ -44,10 +44,11 @@ def write_shapes() -> None:
     from arkhammirror_spark.session import get_spark
 
     spark = get_spark("arkhammirror-plan-shapes", master="local[4]", shuffle_partitions=8)
-    rows = [
-        f"  {json.dumps(name)}: {json.dumps(plan_shape(QUERIES[name](spark, sf_dir)))}"
-        for name in sorted(QUERIES)
-    ]
+    rows = []
+    for name in sorted(QUERIES):
+        df = QUERIES[name](spark, sf_dir)
+        shape = {**plan_shape(df), "schema": df.schema.simpleString()}
+        rows.append(f"  {json.dumps(name)}: {json.dumps(shape)}")
     spark.stop()
     with open(SHAPES_PATH, "w") as f:
         f.write("{\n" + ",\n".join(rows) + "\n}\n")

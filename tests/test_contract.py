@@ -6,22 +6,27 @@ columns (the gate's pandas row-sort comparator factorizes cells; a list
 cell raises `unhashable type: 'list'` — measured on canonical_urls in
 round 4)."""
 
+import ast
 import json
 import os
+import re
 import subprocess
 import sys
 from pathlib import Path
 
+import duckdb
 import pytest
 from pyspark.sql import types as T
 
-from arkhammirror_spark.contract import (
-    MERGES,
-    PROFILE_JOIN,
+from arkhammirror_spark import queries
+from arkhammirror_spark.contract import MERGES, PROFILE_JOIN, build_contract
+from arkhammirror_spark.queries import (
     _SENTINEL,
-    build_contract,
+    ORACLE_SQL,
+    QUERIES,
+    padded_union,
+    sentinel,
 )
-from arkhammirror_spark.queries import ORACLE_SQL, QUERIES
 
 
 def test_contract_fits_the_50_entry_gate():
@@ -123,20 +128,98 @@ def test_every_part_query_is_served_exactly_once():
 
 
 def test_merge_specs_reference_real_columns():
-    """Every mapped source column must exist in the part oracle's SQL text
-    (cheap textual guard; the rehearsal suite checks values for real)."""
+    """Every mapped source column must occur as a whole word in the part
+    oracle's SQL text (cheap textual guard; the rehearsal suite checks
+    values for real)."""
     for name, (columns, parts) in MERGES.items():
         out_names = {c for c, _ in columns}
         for tag, src, mapping in parts:
             assert set(mapping) <= out_names, (name, tag)
             for out, src_col in mapping.items():
-                assert src_col.replace("_", "").isalnum(), (name, out)
+                assert re.search(rf"\b{src_col}\b", ORACLE_SQL[src]), (
+                    name, tag, out, src_col,
+                )
 
 
 def test_sentinels_cover_every_type_used():
     for _, (columns, _) in MERGES.items():
         for _, (styp, _) in columns:
             assert styp in _SENTINEL, styp
+
+
+# the sentinel literals as they would be hand-written in Python or SQL text
+# (`-424242` parses as a unary minus over 424242, which 424242.0 equals)
+_SENTINEL_LITERALS = {"<na>", 424242, "'<na>'", "-424242", "-424242.0"}
+
+
+def test_sentinels_are_written_only_in_the_table():
+    """The query modules and the contract take every sentinel from
+    `queries._SENTINEL`; a literal anywhere else is a second copy of the
+    encoding. Oracle SQL texts are larger constants and never match."""
+    pkg = Path(queries.__file__).parent
+    sites = []
+    for path in sorted([*pkg.glob("queries*.py"), pkg / "contract.py"]):
+        tree = ast.parse(path.read_text())
+        table = {
+            id(n)
+            for stmt in tree.body
+            if isinstance(stmt, ast.Assign)
+            and [getattr(t, "id", None) for t in stmt.targets] == ["_SENTINEL"]
+            for n in ast.walk(stmt)
+        }
+        sites += [
+            f"{path.name}:{n.lineno}: {n.value!r}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Constant) and id(n) not in table
+            and n.value in _SENTINEL_LITERALS
+        ]
+    assert not sites, sites
+
+
+_DUCK_TYPES = {
+    "bigint": "BIGINT", "int": "INTEGER", "double": "DOUBLE",
+    "string": "VARCHAR", "date": "DATE", "boolean": "BOOLEAN",
+}
+
+
+@pytest.fixture(scope="module")
+def duck_sentinels():
+    con = duckdb.connect()
+    return {
+        t: con.execute(f"SELECT ({sql})::{_DUCK_TYPES[t]}").fetchone()[0]
+        for t, sql in _SENTINEL.items()
+    }
+
+
+def test_sentinels_agree_across_engines(spark, duck_sentinels):
+    """Each table entry reads back as the same non-null value from Spark's
+    typed sentinel column and from the DuckDB cast the oracles use."""
+    row = spark.range(1).select(
+        *[sentinel(t).alias(t) for t in _SENTINEL]
+    ).first()
+    for t in _SENTINEL:
+        assert row[t] is not None and duck_sentinels[t] is not None, t
+        assert row[t] == duck_sentinels[t], (t, row[t], duck_sentinels[t])
+
+
+def test_padded_union_fills_absent_columns_with_sentinels(
+    spark, duck_sentinels
+):
+    a = spark.createDataFrame([(1, "x")], "n int, s string")
+    b = spark.createDataFrame([(True,)], "flag boolean")
+    out = padded_union(
+        "kind", "s string, flag boolean, n bigint, d date",
+        [("a", a), ("b", b)],
+    )
+    assert out.schema.simpleString() == (
+        "struct<kind:string,s:string,flag:boolean,n:bigint,d:date>"
+    )
+    rows = {r["kind"]: tuple(r) for r in out.collect()}
+    na = duck_sentinels
+    assert rows == {
+        "a": ("a", "x", na["boolean"], 1, na["date"]),
+        "b": ("b", na["string"], True, na["bigint"], na["date"]),
+    }
 
 
 def test_merged_oracle_padding_uses_sentinels_not_null():
