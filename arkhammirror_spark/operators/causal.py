@@ -33,6 +33,8 @@ from collections import deque
 
 from pyspark.sql import DataFrame, functions as F
 
+from .driver_lane import bounded_collect
+
 
 # --- driver parity lane --------------------------------------------------
 
@@ -233,11 +235,10 @@ def causal_ordering_distributed(
     # bounded edge set is EXACTLY the distributed loop's labeling
     # (including the all-remaining = -1 cycle rule). Bounded probes read
     # the checkpoints, so nothing upstream recomputes.
-    driver_cap = 100_000
-    e_head = e.limit(driver_cap + 1).collect()
-    if len(e_head) <= driver_cap:
-        n_head = all_nodes.limit(driver_cap + 1).collect()
-        if len(n_head) <= driver_cap:
+    e_head = bounded_collect(e, 100_000)
+    if e_head is not None:
+        n_head = bounded_collect(all_nodes, 100_000)
+        if n_head is not None:
             node_set = {r["n"] for r in n_head}
             succ: dict[str, list[str]] = {}
             indeg = {n: 0 for n in node_set}
@@ -268,6 +269,9 @@ def causal_ordering_distributed(
                 # the rest unlabeled, also like the distributed arm.
                 for n in remaining:
                     layers_d[n] = -1
+            # pickled rows, not `local_frame`: q_causal_analysis joins this
+            # result twice, and a LocalRelation's size statistics would turn
+            # both joins into broadcasts, moving its recorded plan shape
             return edges.sparkSession.createDataFrame(
                 sorted(layers_d.items()), "node string, layer long"
             )

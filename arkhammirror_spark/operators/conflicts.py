@@ -38,6 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .driver_lane import local_frame
+
 MARKERS_LATER = ["later", "after", "following", "next", "then"]
 
 ALL_CONFLICT_TYPES = ["contradiction", "inconsistency", "gap", "overlap"]
@@ -394,7 +396,7 @@ def _detect_gaps_global(ev: DataFrame) -> DataFrame:
     )
     n_ev = sum(r["n"] for r in info)
     if n_ev < 3:
-        return spark.createDataFrame([], _GAP_SCHEMA)
+        return local_frame(spark, [], _GAP_SCHEMA)
 
     wb = Window.partitionBy("_b").orderBy("date_start", "ord")
     brows = []
@@ -406,7 +408,8 @@ def _detect_gaps_global(ev: DataFrame) -> DataFrame:
                  prev["_last"]["document_id"])
             )
         prev = r
-    bdf = spark.createDataFrame(
+    bdf = local_frame(
+        spark,
         brows, "_b int, _bprev_id string, _bprev_date date, _bprev_doc string"
     )
     first = F.col("_rn") == 1
@@ -449,7 +452,7 @@ def _detect_gaps_global(ev: DataFrame) -> DataFrame:
     )
     n_gaps = sum(n for _, n in hist)
     if n_gaps == 0:
-        return spark.createDataFrame([], _GAP_SCHEMA)
+        return local_frame(spark, [], _GAP_SCHEMA)
     k = n_gaps // 2 + 1
     acc = 0
     med_val = None

@@ -35,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .driver_lane import local_frame
+
 _D = "double"
 
 
@@ -113,8 +115,8 @@ def entity_correlations(
     if entities is not None:
         # explicit schema: an empty entity list must yield an empty
         # result, not a schema-inference ValueError
-        elist = occ.sparkSession.createDataFrame(
-            [(e,) for e in entities], "e string"
+        elist = local_frame(
+            occ.sparkSession, [(e,) for e in entities], "e string"
         )
         occ = occ.join(F.broadcast(elist), "e", "left_semi")
     elif top_k is not None:

@@ -12,9 +12,12 @@ the cluster.
 
 from __future__ import annotations
 
+import math
 from collections import defaultdict
 
 from pyspark.sql import DataFrame, functions as F
+
+from .driver_lane import bounded_collect, local_frame
 
 
 # ----------------------------- driver-side (≤ reference caps) --------------
@@ -70,6 +73,51 @@ def ego_network(edges: DataFrame, center: str, depth: int = 1) -> DataFrame:
 # ----------------------------- distributed (beyond reference caps) ---------
 
 
+def _undirected_edges(edges: DataFrame) -> DataFrame:
+    """Each undirected edge once as (a, b) with a <= b, self-loops kept:
+    the driver lanes' probe input. Checkpointed BEFORE the cap probe:
+    limit().collect() executes incrementally (1, 4, 16 … partitions per
+    attempt) and each attempt would otherwise recompute the whole upstream
+    (NER + comention) lineage — measured ~1.7× the full input cost. Two
+    string columns per distinct edge, invariant-5-slim."""
+    return edges.select(
+        F.least("entity_a", "entity_b").alias("a"),
+        F.greatest("entity_a", "entity_b").alias("b"),
+    ).distinct().localCheckpoint(eager=True)
+
+
+def _pagerank_fixed_point(
+    head, damping: float, iterations: int, scale: int
+) -> list[tuple[str, float]]:
+    """`pagerank_distributed`'s quantized loop on the driver, over the rows
+    of `_undirected_edges`: the same symmetric edge set, the same
+    expressions evaluated in the same IEEE order (the constant terms are the
+    same Python doubles the loop's F.lit carries), and an exact integer
+    incoming sum — so every rank is bit-identical to the loop's."""
+    nbrs: dict[str, list[str]] = {}
+    for r in head:
+        a, b = r["a"], r["b"]
+        nbrs.setdefault(a, []).append(b)
+        if a != b:
+            nbrs.setdefault(b, []).append(a)
+    n = len(nbrs)
+    if n == 0:
+        return []
+    fscale = float(scale)
+    base = (1.0 - damping) / n
+    rank = dict.fromkeys(nbrs, 1.0 / n)
+    r_int = {v: math.floor(x * fscale + 0.5) for v, x in rank.items()}
+    for _ in range(iterations):
+        inc = dict.fromkeys(nbrs, 0)
+        for u, out in nbrs.items():
+            c = r_int[u] // len(out)
+            for v in out:
+                inc[v] += c
+        rank = {v: base + damping * (float(inc[v]) / fscale) for v in nbrs}
+        r_int = {v: math.floor(x * fscale + 0.5) for v, x in rank.items()}
+    return sorted(rank.items())
+
+
 def graph_statistics(edges: DataFrame) -> DataFrame:
     """Whole-graph statistics (algorithms.py:707-760): node count, edge
     count, density 2E/(N(N−1)), average degree 2E/N — one aggregation, no
@@ -102,6 +150,7 @@ def pagerank_distributed(
     damping: float = 0.85,
     iterations: int = 20,
     quantize: int | None = None,
+    driver_cap: int | None = 100_000,
 ) -> DataFrame:
     """Distributed power iteration on the undirected co-mention graph —
     the DataFrame sibling of `pagerank` (algorithms.py:496 semantics:
@@ -118,7 +167,24 @@ def pagerank_distributed(
     last ulp, which can flip a round(…, 6) comparison). The quantization
     error is ≤ deg·10⁻ᴰ per node per iteration — invisible at D=12 when the
     comparison precision is 6 digits.
+
+    Quantized runs take CC's adaptive small-graph lane: when the distinct
+    undirected edge set fits under `driver_cap`, one bounded collect
+    fetches the whole graph and the same fixed-point iteration runs on the
+    driver (`_pagerank_fixed_point`), bit-identical to the loop and
+    without its per-round jobs. The float form stays distributed (its sum
+    is order-dependent, so a driver re-run could differ in the last ulp).
+    Set driver_cap=None to force the distributed loop.
     """
+    spark = edges.sparkSession
+    if quantize is not None and driver_cap is not None:
+        head = bounded_collect(_undirected_edges(edges), driver_cap)
+        if head is not None:
+            return local_frame(
+                spark,
+                _pagerank_fixed_point(head, damping, iterations, 10**quantize),
+                "name string, rank double",
+            )
     sym = (
         edges.select(F.col("entity_a").alias("src"), F.col("entity_b").alias("dst"))
         .unionAll(
@@ -131,7 +197,7 @@ def pagerank_distributed(
     n = deg.count()
     if n == 0:
         sym.unpersist()
-        return edges.sparkSession.createDataFrame([], "name string, rank double")
+        return local_frame(spark, [], "name string, rank double")
     ranks = deg.select(
         F.col("src").alias("name"), F.lit(1.0 / n).alias("rank"), "deg"
     )
@@ -257,7 +323,7 @@ def betweenness_distributed(
                 nodes.append(v)
     n = len(nodes)
     if n == 0:
-        return spark.createDataFrame([], "node string, score double, rank int")
+        return local_frame(spark, [], "node string, score double, rank int")
 
     if sample_sources is None and n > auto_sample_above:
         sample_sources = auto_sample_above
@@ -308,12 +374,13 @@ def betweenness_distributed(
     # row_number window over all nodes); ranks are assigned on the driver
     # over the ≤limit collected rows (this is already a driver-capped lane
     # — the whole adjacency was collected above). Materializing through
-    # createDataFrame also frees the broadcast immediately, as before.
+    # local_frame also frees the broadcast immediately, as before.
     top = (
         scored.orderBy(F.desc("score"), F.asc("node")).limit(limit).collect()
     )
     bc.destroy()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r["node"], r["score"], i + 1) for i, r in enumerate(top)],
         "node string, score double, rank int",
     )
@@ -371,9 +438,8 @@ def label_propagation_communities(
     # (including the unweighted w=1 contract path) the per-label sums are
     # exact in float regardless of addition order, so labels are identical
     # to the distributed loop's.
-    driver_cap = 100_000
-    head = sym.limit(driver_cap + 1).collect()
-    if len(head) <= driver_cap:
+    head = bounded_collect(sym, 100_000)
+    if head is not None:
         adj: dict[str, dict[str, float]] = {}
         for r in head:
             adj.setdefault(r["src"], {})[r["dst"]] = r["w"]
@@ -395,8 +461,9 @@ def label_propagation_communities(
             labels_d = new_labels
             if changed == 0:
                 break
-        return edges.sparkSession.createDataFrame(
-            sorted(labels_d.items()), "name string, community string"
+        return local_frame(
+            edges.sparkSession, sorted(labels_d.items()),
+            "name string, community string",
         )
 
     sym = sym.persist()
@@ -479,17 +546,8 @@ def connected_components_distributed(
         # parent{} as its own component, matching the distributed path
         # (where min over neighbors ∪ self keeps such nodes) — filtering
         # them out would make the output depend on which path ran
-        # slim (a, b) checkpoint BEFORE the cap probe: limit().collect()
-        # executes incrementally (1, 4, 16 … partitions per attempt) and
-        # each attempt would otherwise recompute the whole upstream
-        # (NER + comention) lineage — measured ~1.7× the full input cost.
-        # Two string columns per distinct edge, invariant-5-slim.
-        dedup_edges = edges.select(
-            F.least("entity_a", "entity_b").alias("a"),
-            F.greatest("entity_a", "entity_b").alias("b"),
-        ).distinct().localCheckpoint(eager=True)
-        head = dedup_edges.limit(driver_cap + 1).collect()
-        if len(head) <= driver_cap:
+        head = bounded_collect(_undirected_edges(edges), driver_cap)
+        if head is not None:
             parent: dict[str, str] = {}
 
             def find(x: str) -> str:
@@ -515,8 +573,8 @@ def connected_components_distributed(
                 if r not in comp_min or n < comp_min[r]:
                     comp_min[r] = n
             out = [(n, comp_min[find(n)]) for n in parent]
-            return edges.sparkSession.createDataFrame(
-                out, "name string, component string"
+            return local_frame(
+                edges.sparkSession, out, "name string, component string"
             )
 
     sym = (

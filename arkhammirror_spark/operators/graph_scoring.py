@@ -32,6 +32,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .driver_lane import bounded_collect, local_frame
+
 
 @dataclass
 class CompositeConfig:
@@ -123,7 +125,8 @@ def composite_entity_scores(
     m = (
         mentions
         if mentions is not None
-        else n.sparkSession.createDataFrame(
+        else local_frame(
+            n.sparkSession,
             [],
             "entity_id string, document_id string, mention_date date, "
             "source_id string",
@@ -307,11 +310,11 @@ def composite_entity_scores(
     ]
     order = [F.desc("composite_score"), F.asc("entity_id")]
     base = out.localCheckpoint(eager=True)
-    n_scored = base.count()
-    if n_scored <= 100_000:
-        keys = base.select("entity_id", "composite_score").collect()
+    keys = bounded_collect(base.select("entity_id", "composite_score"), 100_000)
+    if keys is not None:
         keys.sort(key=lambda r: (-r["composite_score"], r["entity_id"]))
-        rank_df = spark.createDataFrame(
+        rank_df = local_frame(
+            spark,
             [(r["entity_id"], i + 1) for i, r in enumerate(keys)],
             "entity_id string, rank int",
         )

@@ -64,7 +64,13 @@ def gopher_repetition(
     # the 1+len(top_ns)+len(dup_ns) explode branches below each re-run the
     # upstream scan; fan a small single-file scan out first so the heavy
     # split/explode work parallelizes
-    base = spread(df, id_col).select(F.col(id_col).alias("_id"), text.alias("_t"))
+    # the word array is a column of `base`, tokenized once per document:
+    # written inline in the gram lambdas below it would be re-split for
+    # every gram position (O(words²) per document)
+    words = F.filter(F.split(F.lower(text), r"\s+"), lambda w: F.length(w) > 0)
+    base = spread(df, id_col).select(
+        F.col(id_col).alias("_id"), text.alias("_t"), words.alias("_w")
+    )
     total_chars = F.length("_t").cast("double")
 
     lines = F.filter(F.split(F.col("_t"), r"\n"), lambda l: F.length(F.trim(l)) > 0)
@@ -95,7 +101,7 @@ def gopher_repetition(
         )
     )
 
-    words = F.filter(F.split(F.lower(F.col("_t")), r"\s+"), lambda w: F.length(w) > 0)
+    words = F.col("_w")
 
     def gram_stats(n: int, top: bool) -> DataFrame:
         grams = F.when(

@@ -44,6 +44,7 @@ from .operators.spread import spread as _spread
 from .operators.entities import aggregate_entities, filter_valid_mentions
 from .reference_impl.claims import extract_claims
 from .reference_impl.ner import mock_ner
+from .sources import read_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
@@ -117,7 +118,7 @@ def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from .shipping import ensure_shipped
 
     ensure_shipped(spark)  # UDF closures need the package on executor workers
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_table(spark, sf_dir, name)
 
 
 def _cased_spark(col):

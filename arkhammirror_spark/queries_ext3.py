@@ -2848,7 +2848,7 @@ def _ee_entities_df(spark: SparkSession) -> DataFrame:
 
 def _ee_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        _load(spark, sf_dir, "documents")
         .where(F.col("doc_id") % _EE_MOD == 0)
         .select("doc_id", "text")
     )

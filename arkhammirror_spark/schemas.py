@@ -4,6 +4,11 @@ The reference declares fixed DDL at service startup (documents.py:149-247,
 entities.py:257-357); we mirror that regime: explicit schemas everywhere,
 never inferSchema. Input table shape is fixed by BASELINE.json input_hint:
 pages(url string, warc_ts timestamp, html binary, text string, lang string).
+
+The driver's fixture tables (documents, embeddings, events and the TPC-H
+tables) are read with `FIXTURE_SCHEMAS`, each equal to what parquet
+inference gives for every scale factor (nullable columns, NTZ timestamps),
+so opening a fixture runs no schema-inference job.
 """
 
 from __future__ import annotations
@@ -12,11 +17,13 @@ from pyspark.sql.types import (
     ArrayType,
     BinaryType,
     DoubleType,
+    FloatType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
     TimestampType,
 )
 
@@ -136,3 +143,49 @@ AUDIT_SCHEMA = StructType(
         StructField("snapshot_id", StringType(), False),
     ]
 )
+
+
+def _nullable(*fields) -> StructType:
+    return StructType([StructField(name, t, True) for name, t in fields])
+
+
+_S, _L, _I, _D, _NTZ = (
+    StringType(), LongType(), IntegerType(), DoubleType(), TimestampNTZType()
+)
+
+# the driver's fixture tables, by name (`{sf_dir}/{name}.parquet`)
+FIXTURE_SCHEMAS = {
+    "documents": _nullable(
+        ("doc_id", _L), ("text", _S), ("lang", _S), ("source", _S), ("n_chars", _L)
+    ),
+    "embeddings": _nullable(
+        ("vec_id", _L), ("embedding", ArrayType(FloatType())), ("label", _I)
+    ),
+    "events": _nullable(
+        ("event_id", _L), ("ts", _NTZ), ("user_id", _L), ("event_type", _S),
+        ("value", _D), ("props", _S),
+    ),
+    "lineitem": _nullable(
+        ("l_orderkey", _L), ("l_partkey", _L), ("l_suppkey", _L),
+        ("l_linenumber", _I), ("l_quantity", _D), ("l_extendedprice", _D),
+        ("l_discount", _D), ("l_tax", _D), ("l_returnflag", _S),
+        ("l_linestatus", _S), ("l_shipdate", _NTZ),
+    ),
+    "orders": _nullable(
+        ("o_orderkey", _L), ("o_custkey", _L), ("o_orderstatus", _S),
+        ("o_totalprice", _D), ("o_orderdate", _NTZ), ("o_orderpriority", _S),
+    ),
+    "customer": _nullable(
+        ("c_custkey", _L), ("c_name", _S), ("c_nationkey", _I),
+        ("c_acctbal", _D), ("c_mktsegment", _S),
+    ),
+    "nation": _nullable(("n_nationkey", _I), ("n_name", _S), ("n_regionkey", _I)),
+    "region": _nullable(("r_regionkey", _I), ("r_name", _S)),
+    "supplier": _nullable(
+        ("s_suppkey", _L), ("s_name", _S), ("s_nationkey", _I), ("s_acctbal", _D)
+    ),
+    "part": _nullable(
+        ("p_partkey", _L), ("p_name", _S), ("p_brand", _S), ("p_type", _S),
+        ("p_size", _I), ("p_retailprice", _D),
+    ),
+}

@@ -14,12 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..schemas import PAGES_SCHEMA
-
-TESTDATA_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
+from ..schemas import FIXTURE_SCHEMAS, PAGES_SCHEMA
 
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
@@ -28,14 +23,16 @@ def read_pages(spark: SparkSession, path: str) -> DataFrame:
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """A driver fixture table, read with its declared schema (no
+    schema-inference job)."""
+    return spark.read.schema(FIXTURE_SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register the driver's tables as temp views for spark.sql access."""
     import os
 
-    for t in TESTDATA_TABLES:
+    for t in FIXTURE_SCHEMAS:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
-            spark.read.parquet(p).createOrReplaceTempView(t)
+            read_table(spark, sf_dir, t).createOrReplaceTempView(t)

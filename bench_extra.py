@@ -7,6 +7,7 @@ Usage:
   python bench_extra.py both  <part> [part ...]
   python bench_extra.py entry <entry> [...]       # contract-entry level
   python bench_extra.py shapes                    # rewrite plans/shapes.json
+  python bench_extra.py split <part ...|mix|all>  # build / plan / run walls
 
 Parts come from arkhammirror_spark.queries.QUERIES (the fine-grained
 registry bench.py itself sums into contract entries); entries come from
@@ -22,6 +23,12 @@ output schema in plans/shapes.json, which tests/test_plan_hygiene.py
 asserts. It plans in the test session's shape (local[4], 8 shuffle
 partitions) against the test's own data directory, whatever
 SPARK_GRAFT_SF_DIR says: the planner's broadcast choices follow data size.
+
+`split` times three walls per part, in order: building the frame (eager
+jobs and py4j round trips on the driver), planning it
+(`queryExecution().executedPlan()`) and running it to the noop sink. It
+prints one line per part and writes them to SPLIT_JSON (default: a file
+under the system temp dir). `mix` names the benchmark's analyst mix.
 """
 
 from __future__ import annotations
@@ -55,6 +62,30 @@ def write_shapes() -> None:
     print(f"# {len(rows)} plan shapes written: {SHAPES_PATH}", flush=True)
 
 
+def split_walls(spark, registry, names, sf_dir: str, out_path: str) -> None:
+    rows = []
+    for name in names:
+        t0 = time.perf_counter()
+        df = registry[name](spark, sf_dir)
+        t1 = time.perf_counter()
+        df._jdf.queryExecution().executedPlan()
+        t2 = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        t3 = time.perf_counter()
+        row = {"part": name, "build_s": t1 - t0, "plan_s": t2 - t1, "run_s": t3 - t2}
+        rows.append(row)
+        print(
+            f"{name}\tbuild={row['build_s']:.3f}s\tplan={row['plan_s']:.3f}s"
+            f"\trun={row['run_s']:.3f}s",
+            flush=True,
+        )
+    totals = {k: sum(r[k] for r in rows) for k in ("build_s", "plan_s", "run_s")}
+    print("total\t" + "\t".join(f"{k[:-2]}={v:.3f}s" for k, v in totals.items()), flush=True)
+    with open(out_path, "w") as f:
+        json.dump({"sf_dir": sf_dir, "parts": rows, "total": totals}, f, indent=1)
+    print(f"# split walls written: {out_path}", flush=True)
+
+
 def main() -> None:
     mode = sys.argv[1]
     names = sys.argv[2:]
@@ -85,6 +116,16 @@ def main() -> None:
 
     if names == ["all"]:
         names = list(registry.keys())
+    elif names == ["mix"]:
+        from perfbench.run import MIX as names
+
+    if mode == "split":
+        out = os.environ.get(
+            "SPLIT_JSON", os.path.join(tempfile.gettempdir(), "arkhammirror-split.json")
+        )
+        split_walls(spark, registry, names, sf_dir, out)
+        spark.stop()
+        return
 
     import gc
 

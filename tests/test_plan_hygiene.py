@@ -214,6 +214,41 @@ def test_pipeline_job_budget(spark, tmp_path):
     )
 
 
+# Spark jobs each part of the benchmark's analyst mix may start to build its
+# frame and run it to a noop sink at SF (48 in all, measured). A fixture read
+# that infers its schema, a count() beside a collect(), or a per-round
+# PageRank loop where the bounded driver lane fits adds jobs, and fails this
+# gate.
+_PART_JOB_BUDGET = {
+    "entities": 3,
+    "comention_edges": 4,
+    "linked_mentions": 8,
+    "graph_components": 6,
+    "graph_pagerank": 6,
+    "bm25_search": 9,
+    "gopher_repetition": 5,
+    "interval_conflicts": 2,
+    "pricing_summary": 2,
+    "exact_dedup": 2,
+    "regex_search_email": 1,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PART_JOB_BUDGET))
+def test_analyst_part_job_budget(spark, name):
+    sc = spark.sparkContext
+    group = f"part-job-budget-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        QUERIES[name](spark, SF).write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= _PART_JOB_BUDGET[name], (
+        f"{name}: {len(jobs)} Spark jobs, budget {_PART_JOB_BUDGET[name]}"
+    )
+
+
 
 # Modules under arkhammirror_spark/ that no entry point imports, kept on
 # purpose (with the packages enclosing them); none today — bench_extra.py's
