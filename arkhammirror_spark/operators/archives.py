@@ -2,7 +2,7 @@
 
 The reference recursively extracts archives to a filesystem silo and
 re-ingests each member (archive_worker.py:93-516). Spark restatement: one
-``mapInPandas`` pass turns each archive payload into (url, member_name,
+pass of the row lane turns each archive payload into (url, member_name,
 member_payload) rows — which feed straight back into ``extract_docs`` (the
 member urls are ``{url}!{member}``, so lineage stays visible). Bombs and
 traversal names quarantine per the error-column contract.
@@ -10,14 +10,11 @@ traversal names quarantine per the error-column contract.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
 from ..reference_impl.archive import extract_archive_members, sniff_archive
+from .lane import explode_lane
 
 MEMBER_SCHEMA = StructType(
     [
@@ -30,31 +27,17 @@ MEMBER_SCHEMA = StructType(
 
 
 def explode_archives(pages: DataFrame, payload_col: str = "html") -> DataFrame:
-    """Archive rows → one row per member (+ one error row per bad archive)."""
-    from ..shipping import ensure_shipped
+    """Archive rows → one row per member (+ one error row per bad archive,
+    keyed by the archive's url)."""
 
-    ensure_shipped(pages.sparkSession)
+    def _members(url, payload) -> list[dict]:
+        raw = bytes(payload) if payload is not None else b""
+        if sniff_archive(raw) is None:
+            return []
+        return [
+            {"url": f"{url}!{name}", "member_name": name, "payload": data}
+            for name, data in extract_archive_members(raw)
+        ]
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for url, payload in zip(pdf["url"].tolist(), pdf[payload_col].tolist()):
-                if payload is None:
-                    continue
-                raw = bytes(payload)
-                if sniff_archive(raw) is None:
-                    continue
-                try:
-                    for name, data in extract_archive_members(raw):
-                        rows.append(
-                            {"url": f"{url}!{name}", "member_name": name,
-                             "payload": data, "error": None}
-                        )
-                except Exception as exc:
-                    rows.append(
-                        {"url": url, "member_name": None, "payload": None,
-                         "error": f"{type(exc).__name__}: {exc}"}
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEMBER_SCHEMA.fields])
-
-    return pages.select("url", payload_col).mapInPandas(_run, MEMBER_SCHEMA)
+    src = pages.select("url", F.col("url").alias("archive_url"), payload_col)
+    return explode_lane(src, _members, MEMBER_SCHEMA)

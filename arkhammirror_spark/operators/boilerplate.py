@@ -6,8 +6,8 @@ text-density + link-density scoring over a flattened DOM node table)".
 This module IS that restatement, deliberately split so each stage runs
 where it belongs at 100 TB:
 
-1. `flatten_dom` / `flatten_pages` — the ONLY Python stage: one Arrow
-   batch pass (stdlib html.parser, no deps) turning each page into block
+1. `flatten_dom` / `flatten_pages` — the ONLY Python stage: one pass of
+   the row lane (stdlib html.parser, no deps) turning each page into block
    rows (url, node_idx, tag, depth, text, text_len, link_text_len,
    n_children). One page → tens of rows of small scalars; the heavy HTML
    string never leaves this pass.
@@ -36,9 +36,6 @@ CJK pages without spaces still classify).
 from __future__ import annotations
 
 from html.parser import HTMLParser
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import (
@@ -48,6 +45,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .lane import explode_lane
 
 # content accumulates into the nearest enclosing block-level element
 BLOCK_TAGS = {
@@ -223,24 +222,15 @@ def flatten_pages(
     pages: DataFrame, url_col: str = "url", html_col: str = "html"
 ) -> DataFrame:
     """pages(url, html binary|string) → the flattened DOM node table."""
-    from ..shipping import ensure_shipped
 
-    ensure_shipped(pages.sparkSession)
-    names = [f.name for f in NODES_SCHEMA.fields]
+    def _nodes(html) -> list[dict]:
+        if html is None:
+            return []
+        if isinstance(html, (bytes, bytearray)):
+            html = bytes(html).decode("utf-8", "replace")
+        return flatten_dom(html)
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf[url_col].tolist(), pdf[html_col].tolist()):
-                if html is None:
-                    continue
-                if isinstance(html, (bytes, bytearray)):
-                    html = bytes(html).decode("utf-8", "replace")
-                for r in flatten_dom(html):
-                    rows.append({"url": url, **r})
-            yield pd.DataFrame(rows, columns=names)
-
-    return pages.select(url_col, html_col).mapInPandas(_run, NODES_SCHEMA)
+    return explode_lane(pages.select(url_col, html_col), _nodes, NODES_SCHEMA)
 
 
 def score_nodes(nodes: DataFrame) -> DataFrame:

@@ -16,23 +16,20 @@ in JPEG inside APP11 (0xFFEB) marker segments with common identifier
 "JP", in PNG inside a `caBX` chunk.  `sniff_c2pa` walks those
 containers, checks the JUMBF description-box label for the `c2pa`
 manifest-store signature, and returns the embedded JSON manifest store.
-The external `c2pa` library, when importable, replaces the sniff
-(auto/strict/mock gate, same contract as the PIL lanes in
-multimodal.py); this container has no such lib, so the stdlib lane is
-the one under test.
+The external `c2pa` library, when importable (imported lazily, once per
+worker, as PIL is in multimodal.py), replaces the sniff; without it the
+stdlib sniff runs.
 
-Scale shape: the sniff is a bounded per-row byte scan inside one
-mapInPandas pass (Arrow-batched, no per-row Python round trips); the
+Scale shape: the sniff is a bounded per-row byte scan inside one pass of
+the row lane (Arrow-batched, no per-row Python round trips); the
 interpretation is pure Catalyst and mirrors 1:1 into the DuckDB oracle.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import struct
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -41,6 +38,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .lane import error_text, explode_lane
 
 # JUMBF content-type UUID for a C2PA manifest store (public C2PA spec);
 # the description-box label is "c2pa" for the store superbox
@@ -264,84 +263,64 @@ _C2PA_SCHEMA = StructType([
 ])
 
 
-def _lib_or_none(mode: str):
-    if mode == "mock":
-        return None
+@functools.cache
+def _load_c2pa():
+    """The external `c2pa` lib, once per worker, when importable, else None."""
     try:
         import c2pa  # noqa: F401 — external, optional
         return c2pa
     except ImportError:
-        if mode == "strict":
-            raise
         return None
+
+
+def _read_manifest(raw: bytes) -> str | None:
+    """The embedded manifest-store JSON: the `c2pa` lib's Reader when
+    importable, else the stdlib JUMBF sniff."""
+    lib = _load_c2pa()
+    if lib is None:
+        return sniff_c2pa(raw)
+    import io
+
+    with lib.Reader("application/octet-stream", io.BytesIO(raw)) as reader:
+        return reader.json()
 
 
 def extract_c2pa(
     media: DataFrame,
     id_col: str = "media_id",
     payload_col: str = "payload",
-    mode: str = "auto",
-    batch_hint: int = 256,
 ) -> DataFrame:
     """Per-media C2PA scan: (media_id, has_c2pa, c2pa_error,
     signature_valid, signer, c2pa_ts, claim_generator, actions_str,
     n_manifests).  `actions_str` joins each action's str() with '|'
-    (the interpretation rules only substring-match it).
-
-    mode: auto = external `c2pa` lib when importable, else the stdlib
-    JUMBF sniff; strict = ImportError without the lib; mock = always the
-    stdlib sniff."""
-    if mode not in ("auto", "strict", "mock"):
-        raise ValueError(f"mode must be auto/strict/mock, got {mode!r}")
-    from ..shipping import ensure_shipped
-
-    ensure_shipped(media.sparkSession)
+    (the interpretation rules only substring-match it). A corrupt manifest
+    is not a quarantined row but a finding: it reads has_c2pa false with
+    the error in `c2pa_error`, which the interpretation rules consume."""
     src = media.select(
         F.col(id_col).cast("string").alias("media_id"),
         F.col(payload_col).alias("payload"),
     ).repartition(max(media.sparkSession.sparkContext.defaultParallelism, 8))
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lib = _lib_or_none(mode)
-        for pdf in batches:
-            rows = []
-            for mid, raw in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(raw) if raw is not None else b""
-                manifest_json = None
-                err = None
-                try:
-                    if lib is not None:
-                        import io
-                        with lib.Reader("application/octet-stream",
-                                        io.BytesIO(raw)) as reader:
-                            manifest_json = reader.json()
-                    else:
-                        manifest_json = sniff_c2pa(raw)
-                    if manifest_json is None:
-                        rows.append((mid, False, None, False, None, None,
-                                     None, None, None))
-                        continue
-                    fields = extract_manifest_fields(
-                        json.loads(manifest_json)
-                    )
-                    rows.append((
-                        mid, True, None,
-                        bool(fields["signature_valid"]),
-                        fields["signer"], fields["timestamp"],
-                        fields["claim_generator"],
-                        "|".join(str(a) for a in fields["actions"]),
-                        str(len(fields["manifests"])),
-                    ))
-                except Exception as e:  # corrupt manifest -> error lane
-                    rows.append((mid, False, f"{type(e).__name__}: {e}",
-                                 False, None, None, None, None, None))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _C2PA_SCHEMA.fields]
-            )
+    def _scan(payload) -> list[dict]:
+        absent = {"has_c2pa": False, "signature_valid": False}
+        try:
+            manifest_json = _read_manifest(bytes(payload) if payload is not None else b"")
+            if manifest_json is None:
+                return [absent]
+            fields = extract_manifest_fields(json.loads(manifest_json))
+            return [{
+                "has_c2pa": True,
+                "signature_valid": bool(fields["signature_valid"]),
+                "signer": fields["signer"],
+                "c2pa_ts": fields["timestamp"],
+                "claim_generator": fields["claim_generator"],
+                "actions_str": "|".join(str(a) for a in fields["actions"]),
+                "n_manifests": str(len(fields["manifests"])),
+            }]
+        except Exception as exc:  # corrupt manifest -> error lane
+            return [{**absent, "c2pa_error": error_text(exc)}]
 
-    return src.mapInPandas(
-        _run, _C2PA_SCHEMA, barrier=False
-    )
+    return explode_lane(src, _scan, _C2PA_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -15,8 +15,8 @@ these are the standard web-corpus near-dup family, built Spark-native:
   (computed on the shingle sets) ≥ threshold. With B=32,R=4 the miss
   probability at J≥0.8 is (1−0.8⁴)³² ≈ 5e−8, so output = brute-force truth
   with overwhelming probability at a fraction of the cost.
-- simhash64 / simhash_neardup: 64-bit SimHash over tokens + Hamming-ball
-  pairing via bit_count(xor).
+- simhash64_reference / simhash_pairs_from_sigs: the documents shard's
+  64-bit SimHash + Hamming-ball pairing via bit_count(xor).
 - ngram_jaccard_pairs: exact brute-force Jaccard via shared-shingle join
   (the small-scale oracle for the LSH path).
 """
@@ -384,38 +384,6 @@ def dedup_lines(
     )
 
 
-def simhash64(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """64-bit SimHash over word tokens, fully native.
-
-    For each of the 64 bits: sum(+1/−1 weighted by token hash bit) > 0.
-    Implemented as 64 aggregate expressions over exploded tokens.
-    """
-    from .spread import spread
-
-    toks = spread(df, id_col).select(
-        F.col(id_col),
-        F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("tok"),
-    ).where(F.length("tok") > 0)
-    h = F.xxhash64(F.col("tok"))
-    aggs = [
-        F.sum(
-            F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"b{i}")
-        for i in range(64)
-    ]
-    per_doc = toks.groupBy(id_col).agg(*aggs)
-    sim = None
-    for i in range(64):
-        bit = F.when(F.col(f"b{i}") > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        term = F.shiftleft(bit, i)
-        sim = term if sim is None else sim.bitwiseOR(term)
-    return per_doc.select(F.col(id_col), sim.alias("simhash"))
-
-
 def simhash_pairs_from_sigs(
     sigs: DataFrame,
     id_col: str = "doc_id",
@@ -533,19 +501,6 @@ def simhash_pairs_from_sigs(
     return out.where(ham <= max_hamming).select(
         "id_a", "id_b", ham.alias("hamming")
     )
-
-
-def simhash_neardup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    band_bits: int = 16,  # kept for signature compat; 64/(k+1) bands derive it
-) -> DataFrame:
-    """Hamming-≤k pairs via banded SimHash blocking (pigeonhole: any pair
-    within Hamming k shares at least one of the k+1 bands)."""
-    sigs = simhash64(df, id_col, text_col)
-    return simhash_pairs_from_sigs(sigs, id_col, max_hamming=max_hamming)
 
 
 def simhash64_reference(

@@ -17,7 +17,23 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+
+
+def ordered_pairs(arr: Column, first: str, second: str) -> Column:
+    """Every i<j element pair of ``arr``, in order, as structs
+    (``first`` = element i, ``second`` = element j). Element i pairs with
+    the ``size - i - 1`` elements after it, so a 0- or 1-element array
+    yields no pairs."""
+    return F.flatten(
+        F.transform(
+            arr,
+            lambda x, i: F.transform(
+                F.slice(arr, i + 2, F.size(arr) - i - 1),
+                lambda y: F.struct(x.alias(first), y.alias(second)),
+            ),
+        )
+    )
 
 
 def comention_edges(
@@ -55,24 +71,10 @@ def comention_edges_from_name_sets(
     all); ``comention_edges`` builds them from mention rows. Per-doc entity
     counts are bounded (documents are bounded size), so the combination
     explosion is O(m²) with small m, inside one task."""
-    n = F.size(names_col)
-    pair_structs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.transform(
-                F.slice(F.col(names_col), i + 1, n - i),
-                lambda y: F.struct(
-                    F.element_at(F.col(names_col), i).alias("entity_a"),
-                    y.alias("entity_b"),
-                ),
-            ),
-        )
-    )
-    exploded = (
-        docs.where(n >= 2)
-        .select(F.col(doc_col).alias("doc"), F.explode(pair_structs).alias("p"))
-        .select("doc", "p.entity_a", "p.entity_b")
-    )
+    exploded = docs.select(
+        F.col(doc_col).alias("doc"),
+        F.explode(ordered_pairs(F.col(names_col), "entity_a", "entity_b")).alias("p"),
+    ).select("doc", "p.entity_a", "p.entity_b")
     aggs = [F.count(F.lit(1)).alias("co_occurrence_count")]
     if include_doc_ids:
         aggs.append(F.sort_array(F.collect_list(F.col("doc"))).alias("document_ids"))

@@ -1,13 +1,13 @@
 """Error-Level Analysis (ELA) — media_forensics/services/ela_analyzer.py
-:42-169 re-expressed as an Arrow-batched pass.
+:42-169 re-expressed as one pass of the row lane.
 
 The reference loads a file with PIL, re-saves it as JPEG at a known
 quality, and interprets |original - resaved| statistics (:59-104). The
-JPEG re-encode is the only codec-dependent step, so it is gated like OCR:
-PIL lane re-encodes for real (LANCZOS-free, quality passthrough); the mock
-lane substitutes a deterministic quantization degrade ((v // 8) * 8 — an
-idealized compressor's value rounding) so the diff/scale/block-statistics/
-interpretation math runs for real everywhere. strict raises without PIL.
+JPEG re-encode is the only codec-dependent step: with PIL importable the
+lane re-encodes for real (LANCZOS-free, quality passthrough, engine
+"pil"); without it a deterministic quantization degrade ((v // 8) * 8 — an
+idealized compressor's value rounding, engine "mock") stands in, so the
+diff/scale/block-statistics/interpretation math runs for real everywhere.
 
 Interpretation parity (:114-169): mean/std/max of the scaled error, 64-px
 block means over range(0, dim - 64, 64) — the reference's loop EXCLUDES
@@ -17,10 +17,7 @@ block_std < 5 / > 20."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     DoubleType,
     StringType,
@@ -28,7 +25,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .multimodal import _load_pil, _PIL_HINT, decode_image
+from .lane import explode_lane
+from .multimodal import _load_pil, decode_image
 
 
 def ela_from_arrays(orig, resaved, scale: int = 15) -> dict[str, object]:
@@ -94,54 +92,30 @@ ELA_SCHEMA = StructType(
         StructField("max_error", DoubleType(), True),
         StructField("uniformity_score", DoubleType(), True),
         StructField("assessment", StringType(), True),
-        StructField("engine", StringType(), False),
+        StructField("engine", StringType(), True),
         StructField("error", StringType(), True),
     ]
 )
 
 
-def ela_metrics(
-    media: DataFrame, quality: int = 95, scale: int = 15, mode: str = "auto"
-) -> DataFrame:
-    """media(image rows) -> per-image ELA statistics + assessment."""
-    if mode not in ("auto", "strict", "mock"):
-        raise ValueError(f"unknown mode {mode!r}")
-    from ..shipping import ensure_shipped
+def ela_metrics(media: DataFrame, quality: int = 95, scale: int = 15) -> DataFrame:
+    """media(image rows) -> per-image ELA statistics + assessment; `engine`
+    names the resave the session's Python offers (pil | mock), on every
+    row. Undecodable payloads quarantine per row."""
 
-    ensure_shipped(media.sparkSession)
-    names = [f.name for f in ELA_SCHEMA.fields]
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _ela(payload) -> list[dict]:
         import numpy as np
 
-        pil = None
-        if mode != "mock":
-            pil = _load_pil()
-            if pil is None and mode == "strict":
-                raise ImportError(_PIL_HINT)
-        engine = "pil" if (mode != "mock" and pil) else "mock"
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"].tolist(), pdf["payload"].tolist()):
-                row: dict[str, object] = {c: None for c in names}
-                row["media_id"] = mid
-                row["engine"] = engine
-                try:
-                    if payload is None:
-                        raise ValueError("empty payload")
-                    arr = decode_image(bytes(payload), pil)
-                    if arr.ndim == 2:
-                        arr = np.stack([arr] * 3, axis=2)
-                    if pil is not None:
-                        resaved = _pil_resave(pil, arr, quality)
-                    else:
-                        resaved = _mock_resave(arr)
-                    row.update(ela_from_arrays(arr, resaved, scale))
-                except Exception as exc:
-                    row["error"] = f"{type(exc).__name__}: {exc}"
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=names)
+        if payload is None:
+            raise ValueError("empty payload")
+        pil = _load_pil()
+        arr = decode_image(bytes(payload), pil)
+        if arr.ndim == 2:
+            arr = np.stack([arr] * 3, axis=2)
+        resaved = _pil_resave(pil, arr, quality) if pil else _mock_resave(arr)
+        return [ela_from_arrays(arr, resaved, scale)]
 
-    return media.where("media_type = 'image'").select("media_id", "payload").mapInPandas(
-        _run, ELA_SCHEMA
+    images = media.where("media_type = 'image'").select("media_id", "payload")
+    return explode_lane(images, _ela, ELA_SCHEMA).withColumn(
+        "engine", F.lit("pil" if _load_pil() else "mock")
     )

@@ -2,14 +2,15 @@
 model contract).
 
 Reference lineage: arkham_shard_embed/embedder.py — EmbeddingManager loads a
-sentence-transformers model once (:67-130). `_load_model` does the same and
-returns None when the library is absent (it is in this sandbox), and
+sentence-transformers model once (:67-130). `_load_model` does the same, once
+per worker, and returns None when the library is absent, and
 `fake_embedding` is the DETERMINISTIC fallback (md5-derived unit vector) —
 same shape, so a real model is a config change, not a code change.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import math
 
@@ -34,7 +35,9 @@ def fake_embedding(text: str, dim: int = 64, normalize: bool = True) -> list[flo
     return out
 
 
+@functools.cache
 def _load_model(model_name: str):
+    """The sentence-transformers model, once per worker, or None."""
     try:
         from sentence_transformers import SentenceTransformer  # type: ignore
 

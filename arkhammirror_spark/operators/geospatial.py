@@ -27,9 +27,10 @@ from __future__ import annotations
 
 import math
 import re
-from typing import Iterator
 
 from pyspark.sql import DataFrame, functions as F
+
+from .lane import explode_lane
 
 EARTH_RADIUS_KM = 6371.0
 
@@ -151,53 +152,29 @@ def extract_geo_nodes(
     label-anchored arm needs a per-row regex); rows without valid
     coordinates drop, exactly like the reference. Returns
     (node_id, label, latitude, longitude, location_type)."""
-    import pandas as pd
-
-    from ..shipping import ensure_shipped
-
-    ensure_shipped(nodes.sparkSession)
-    opt = ["lat", "lng", "sentence", "description", "address"]
-    cols = [id_col, label_col] + [c for c in opt if c in nodes.columns]
+    opt = [c for c in ("lat", "lng", "sentence", "description", "address")
+           if c in nodes.columns]
     id_ddl = nodes.schema[id_col].dataType.simpleString()
     schema = (
         f"node_id {id_ddl}, label string, latitude double, "
         "longitude double, location_type string"
     )
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                # Arrow renders NULL doubles as NaN — which would read
-                # as "explicit coordinate present" and poison the
-                # cascade (NaN fails the range check and SKIPS the row)
-                lat = r.get("lat")
-                lng = r.get("lng")
-                if lat is not None and pd.isna(lat):
-                    lat = None
-                if lng is not None and pd.isna(lng):
-                    lng = None
-                res = resolve_coordinates(
-                    r.get(label_col) or "",
-                    lat, lng,
-                    sentence=r.get("sentence") or "",
-                    description=r.get("description") or "",
-                    address=r.get("address") or "",
-                )
-                if res is None:
-                    continue
-                rows.append({
-                    "node_id": r[id_col], "label": r[label_col],
-                    "latitude": res[0], "longitude": res[1],
-                    "location_type": res[2],
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["node_id", "label", "latitude", "longitude",
-                         "location_type"],
-            )
+    def _geo(label, *values) -> list[dict]:
+        r = dict(zip(opt, values))
+        res = resolve_coordinates(
+            label or "",
+            r.get("lat"), r.get("lng"),
+            sentence=r.get("sentence") or "",
+            description=r.get("description") or "",
+            address=r.get("address") or "",
+        )
+        if res is None:
+            return []
+        return [{"label": label, "latitude": res[0], "longitude": res[1],
+                 "location_type": res[2]}]
 
-    return nodes.select(*cols).mapInPandas(_run, schema)
+    return explode_lane(nodes.select(id_col, label_col, *opt), _geo, schema)
 
 
 def edge_distances(

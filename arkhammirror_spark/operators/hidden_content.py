@@ -21,8 +21,8 @@ Reference lineage: arkham-shard-anomalies/hidden_content.py
   histogram_anomaly 0.6), stego_confidence = max confidence.
 
 The reference scans ONE file per call with scipy + python-magic + PIL;
-here the scan is one Arrow-batched ``mapInPandas`` pass over a binary
-column (numpy ``bincount`` entropy — no per-byte Python), the magic
+here the scan is one pass of the row lane (``lane.explode_lane``) over a
+binary column (numpy ``bincount`` entropy — no per-byte Python), the magic
 sniffer is a dependency-free byte-prefix classifier emitting the same
 MIME strings the decision table expects, the chi-square p-value is the
 exact closed form for df=1 (``1 − chi2.cdf(x, 1) = erfc(√(x/2))``,
@@ -39,9 +39,10 @@ identical below the cap (the differential-test regime).
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 from pyspark.sql import DataFrame, functions as F
+
+from .lane import explode_lane
 
 # HiddenContentConfig defaults (models.py:300-325)
 ENTROPY_THRESHOLD_HIGH = 7.5
@@ -398,35 +399,19 @@ def hidden_content_scan(
     :284-301) stay native (`F.md5`/`F.sha2`) so the hash math never
     leaves the JVM. At 100 TB the scan is embarrassingly parallel — no
     shuffle at all; partition count follows the input files."""
-    import pandas as pd
-
-    from ..shipping import ensure_shipped
-
-    ensure_shipped(media.sparkSession)
-
-    id_field = media.schema[id_col]
-    id_ddl = id_field.dataType.simpleString()
+    id_ddl = media.schema[id_col].dataType.simpleString()
     schema = ", ".join(
         [f"{id_col} {id_ddl}"] + [f"{n} {t}" for n, t in _SCAN_FIELDS]
     )
-    cols = [n for n, _ in _SCAN_FIELDS]
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, data, ext, mime in zip(
-                pdf[id_col], pdf[data_col], pdf[ext_col], pdf[mime_col]
-            ):
-                r = scan_payload(
-                    bytes(data) if data is not None else b"",
-                    ext or "", mime, chunk_size=chunk_size,
-                )
-                r[id_col] = rid
-                rows.append(r)
-            yield pd.DataFrame(rows, columns=[id_col] + cols)
+    def _scan(data, ext, mime) -> list[dict]:
+        return [scan_payload(
+            bytes(data) if data is not None else b"",
+            ext or "", mime, chunk_size=chunk_size,
+        )]
 
-    scanned = media.select(id_col, data_col, ext_col, mime_col).mapInPandas(
-        _run, schema
+    scanned = explode_lane(
+        media.select(id_col, data_col, ext_col, mime_col), _scan, schema
     )
     if not with_hashes:
         return scanned

@@ -6,10 +6,10 @@ ImageQualityScore rules (ingest/models.py:67-136) + get_ocr_route
 (classifiers/image_quality.py:274-341):
 
 - ``image_quality_metrics`` — the five numpy heuristics (contrast,
-  skew, noise, layout, blank) run per image inside an Arrow-batched
-  ``mapInPandas`` over binary payloads, decoded with the repo's stdlib
-  PNG/BMP/PNM lane (operators/multimodal.py) — no per-row Python in
-  the driver path, one pass per image.
+  skew, noise, layout, blank) run per image inside one pass of the row
+  lane over binary payloads, decoded with the repo's stdlib PNG/BMP/PNM
+  lane (operators/multimodal.py) — no per-row Python in the driver path,
+  one pass per image.
 - ``classify_image_quality`` / ``ocr_route`` — the issue ladder
   (CLEAN/FIXABLE/MESSY), downscale rule (dpi > 200 → target 150), the
   issues list, and worker routing are pure column CASE logic, JVM-side.
@@ -29,11 +29,10 @@ the ACTUAL classifier with an injected PIL facade):
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
+
+from .lane import explode_lane
+from .multimodal import decode_image, grayscale
 
 DOWNSCALE_THRESHOLD_DPI = 200
 TARGET_DPI = 150
@@ -139,59 +138,40 @@ def image_quality_metrics(
     container-declared mode; decode failures land in the reference's
     except arm (contrast 0.5, has_noise True, layout 'unknown',
     err = 1)."""
-    from ..shipping import ensure_shipped
-
-    ensure_shipped(media.sparkSession)
     cols = media.select(
         F.col(id_col).cast("string").alias("media_id"),
         F.col(payload_col).alias("payload"),
     )
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from arkhammirror_spark.operators.multimodal import (
-            decode_image, grayscale,
-        )
+    def _metrics(payload) -> list[dict]:
+        try:
+            payload = bytes(payload)
+            gray = grayscale(decode_image(payload))
+            h, w = gray.shape
+            mode = _png_mode(payload)
+            raw_size = w * h * (3 if mode == "RGB" else 1)
+            return [{
+                "width": w, "height": h, "mode": mode,
+                "is_grayscale": mode in ("L", "LA", "1"),
+                "compression_ratio": (
+                    len(payload) / raw_size if raw_size > 0 else 1.0
+                ),
+                "contrast_ratio": contrast_ratio(gray),
+                "skew_angle": skew_angle(gray),
+                "has_noise": has_noise(gray),
+                "layout_complexity": layout_complexity(gray),
+                "is_blank": is_blank(gray),
+                "err": 0,
+            }]
+        except Exception:  # the reference's except arm
+            return [{
+                "width": 0, "height": 0, "mode": "RGB",
+                "is_grayscale": False, "compression_ratio": 1.0,
+                "contrast_ratio": 0.5, "skew_angle": 0.0, "has_noise": True,
+                "layout_complexity": "unknown", "is_blank": False, "err": 1,
+            }]
 
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(
-                pdf["media_id"].tolist(), pdf["payload"].tolist()
-            ):
-                base = {
-                    "media_id": mid, "width": 0, "height": 0,
-                    "mode": "RGB", "is_grayscale": False,
-                    "compression_ratio": 1.0, "contrast_ratio": 0.5,
-                    "skew_angle": 0.0, "has_noise": True,
-                    "layout_complexity": "unknown", "is_blank": False,
-                    "err": 1,
-                }
-                try:
-                    payload = bytes(payload)
-                    arr = decode_image(payload)
-                    gray = grayscale(arr)
-                    h, w = gray.shape
-                    mode = _png_mode(payload)
-                    raw_size = w * h * (3 if mode == "RGB" else 1)
-                    base.update(
-                        width=w, height=h, mode=mode,
-                        is_grayscale=mode in ("L", "LA", "1"),
-                        compression_ratio=(
-                            len(payload) / raw_size if raw_size > 0
-                            else 1.0
-                        ),
-                        contrast_ratio=contrast_ratio(gray),
-                        skew_angle=skew_angle(gray),
-                        has_noise=has_noise(gray),
-                        layout_complexity=layout_complexity(gray),
-                        is_blank=is_blank(gray),
-                        err=0,
-                    )
-                except Exception:
-                    pass
-                rows.append(base)
-            yield pd.DataFrame(rows)
-
-    return cols.mapInPandas(_run, _METRICS_SCHEMA)
+    return explode_lane(cols, _metrics, _METRICS_SCHEMA)
 
 
 def classify_image_quality(

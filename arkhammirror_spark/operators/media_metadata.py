@@ -13,8 +13,8 @@ Reference semantics:
   rules).
 
 The reference shells out to PIL/exifread/pypdf per file; here the binary
-payload column is walked with struct/zipfile/ElementTree inside one
-mapInPandas pass: JPEG APP1 segments -> TIFF IFD chain (II/MM, IFD0 ->
+payload column is walked with struct/zipfile/ElementTree inside one pass
+of the row lane: JPEG APP1 segments -> TIFF IFD chain (II/MM, IFD0 ->
 Exif IFD -> GPS IFD), PNG tEXt/iTXt chunks, PDF trailer Info dictionary,
 OOXML core-properties part. Magic bytes pick the lane (forensics.py's
 python-magic step); unknown containers yield kind='unknown' with empty
@@ -26,9 +26,7 @@ from __future__ import annotations
 
 import re
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
@@ -38,6 +36,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .lane import error_text, explode_lane
 
 # ---------------------------------------------------------------------------
 # TIFF / EXIF walking
@@ -495,14 +495,12 @@ METADATA_SCHEMA = StructType(
 )
 
 
-def metadata_row(mid, payload) -> dict[str, object]:
-    """One payload -> one METADATA_SCHEMA-shaped dict (kind sniff, parser
-    dispatch, warnings, integrity; per-row quarantine on corrupt
-    containers). Shared by extract_media_metadata and the provenance
-    full_scan single-pass composition."""
-    names = [f.name for f in METADATA_SCHEMA.fields]
-    row: dict[str, object] = {c: None for c in names}
-    row["media_id"] = mid
+def metadata_row(payload) -> dict[str, object]:
+    """One payload -> one METADATA_SCHEMA-shaped record without the key
+    (kind sniff, parser dispatch, warnings, integrity; per-row quarantine
+    on corrupt containers). Shared by extract_media_metadata and the
+    provenance full_scan single-pass composition."""
+    row: dict[str, object] = {f.name: None for f in METADATA_SCHEMA.fields[1:]}
     row["warnings"] = []
     row["integrity_status"] = "unknown"
     row["integrity_confidence"] = 0.0
@@ -540,7 +538,7 @@ def metadata_row(mid, payload) -> dict[str, object]:
         row["integrity_findings"] = findings
     except Exception as exc:
         row["kind"] = row.get("kind") or "unknown"
-        row["error"] = f"{type(exc).__name__}: {exc}"
+        row["error"] = error_text(exc)
     return row
 
 
@@ -550,27 +548,11 @@ def extract_media_metadata(
     """binary payload column -> one wide metadata row per document. All
     stdlib; corrupt containers of a recognized kind quarantine per-row,
     unknown containers pass through with empty metadata + kind='unknown'."""
-    from ..shipping import ensure_shipped
-
-    ensure_shipped(media.sparkSession)
-    names = [f.name for f in METADATA_SCHEMA.fields]
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                metadata_row(mid, payload)
-                for mid, payload in zip(
-                    pdf[id_col].tolist(), pdf[payload_col].tolist()
-                )
-            ]
-            out = pd.DataFrame(rows, columns=names)
-            for c in ("orientation", "revision"):
-                out[c] = pd.array(
-                    [r.get(c) for r in rows], dtype="Int64"
-                )  # None-bearing int columns must not decay to float64
-            yield out
-
-    return media.select(id_col, payload_col).mapInPandas(_run, METADATA_SCHEMA)
+    return explode_lane(
+        media.select(id_col, payload_col),
+        lambda payload: [metadata_row(payload)],
+        METADATA_SCHEMA,
+    )
 
 
 # ---------------------------------------------------------------------------

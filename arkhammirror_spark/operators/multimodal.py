@@ -4,16 +4,11 @@ Reference lineage: image preprocessing (arkham-shard-ingest/workers/
 image_worker.py:212-687 — grayscale/denoise/deskew/Otsu-binarize/resize via
 PIL/cv2) and OCR (arkham-shard-ocr/workers/paddle_worker.py:123-293).
 
-Image decode is gated THREE ways (the optional library is imported lazily,
-once per worker; the mode decides what its absence means):
-- mode="auto" (default): PIL when importable, else the REAL stdlib lane —
-  PNG (zlib inflate + scanline unfilter), uncompressed 24-bit BMP, and
-  binary PNM (P5/P6) decode to numpy with no codec library; undecodable
-  payloads (JPEG etc. without PIL) quarantine per row.
-- mode="strict": raise ImportError when PIL is missing (deployments where
-  a silent format-coverage downgrade would be wrong).
-- mode="mock": the deterministic payload-hash fake (plumbing tests on any
-  machine, the round-1/2 behavior).
+Image decode: PIL when importable (imported lazily, once per worker), else
+the REAL stdlib lane — PNG (zlib inflate + scanline unfilter), uncompressed
+24-bit BMP, and binary PNM (P5/P6) decode to numpy with no codec library.
+Undecodable payloads (JPEG etc. without PIL) quarantine per row through the
+row lane (``lane.explode_lane``), as every media operator here does.
 
 The preprocessing ops the real lane exposes are numpy restatements of the
 reference's pipeline where cv2 isn't required: RGB→gray with the
@@ -28,12 +23,10 @@ sampling plan (timestamps, indices, batch shape) is real.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import struct
 import zlib
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -46,7 +39,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-_PIL_HINT = "PIL not installed. Install with: pip install pillow"
+from .lane import explode_lane
 
 MEDIA_SCHEMA = StructType(
     [
@@ -80,8 +73,9 @@ FRAME_SAMPLE_SCHEMA = StructType(
 )
 
 
+@functools.cache
 def _load_pil():
-    """Lazy PIL gate: the module when importable, else None."""
+    """Lazy PIL gate, once per worker: the module when importable, else None."""
     try:
         from PIL import Image  # type: ignore
 
@@ -358,64 +352,19 @@ def _real_image_features(arr) -> tuple[int, int, list[float]]:
     return w, h, [round(f, 9) for f in feature]
 
 
-def _mock_image_features(payload: bytes) -> tuple[int, int, list[float]]:
-    """Deterministic payload-hash fake: dims from the digest, 8-dim feature
-    = normalized digest bytes (plumbing tests on any machine)."""
-    digest = hashlib.sha256(payload).digest()
-    width = 64 + digest[0] % 192
-    height = 64 + digest[1] % 192
-    feature = [b / 255.0 for b in digest[2:10]]
-    return width, height, feature
+def extract_image_features(media: DataFrame) -> DataFrame:
+    """media(image rows) → (media_id, width, height, feature[8], error):
+    PIL-else-stdlib real decode (see module docstring); null and
+    undecodable payloads quarantine per row."""
 
+    def _features(payload) -> list[dict]:
+        if payload is None:
+            raise ValueError("empty payload")
+        w, h, feat = _real_image_features(decode_image(bytes(payload), _load_pil()))
+        return [{"width": w, "height": h, "feature": feat}]
 
-def extract_image_features(
-    media: DataFrame, batch_hint: int = 256, mode: str = "auto"
-) -> DataFrame:
-    """media(image rows) → (media_id, width, height, feature[8], error).
-
-    mode gates the decode (see module docstring): auto = PIL-else-stdlib
-    real decode with per-row quarantine; strict = ImportError when PIL is
-    missing (raised once per worker, before any row is decoded);
-    mock = deterministic payload-hash fake.
-    """
-    if mode not in ("auto", "strict", "mock"):
-        raise ValueError(f"unknown mode {mode!r}")
-    from ..shipping import ensure_shipped
-
-    ensure_shipped(media.sparkSession)
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pil = None
-        if mode != "mock":
-            pil = _load_pil()  # once per python worker
-            if pil is None and mode == "strict":
-                raise ImportError(_PIL_HINT)
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"].tolist(), pdf["payload"].tolist()):
-                try:
-                    if payload is None:
-                        raise ValueError("empty payload")
-                    raw = bytes(payload)
-                    if mode == "mock":
-                        w, h, feat = _mock_image_features(raw)
-                    else:
-                        w, h, feat = _real_image_features(decode_image(raw, pil))
-                    rows.append(
-                        {"media_id": mid, "width": w, "height": h,
-                         "feature": feat, "error": None}
-                    )
-                except Exception as exc:
-                    rows.append(
-                        {"media_id": mid, "width": None, "height": None,
-                         "feature": None, "error": f"{type(exc).__name__}: {exc}"}
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGE_FEATURES_SCHEMA.fields])
-
-    return media.where("media_type = 'image'").select("media_id", "payload").mapInPandas(
-        _run, IMAGE_FEATURES_SCHEMA
-    )
+    images = media.where("media_type = 'image'").select("media_id", "payload")
+    return explode_lane(images, _features, IMAGE_FEATURES_SCHEMA)
 
 
 def sample_video_frames(
@@ -424,36 +373,22 @@ def sample_video_frames(
     """Frame sampling plan for video rows: deterministic frame timestamps from
     duration (decode stubbed — digests derive from payload+index)."""
 
-    from ..shipping import ensure_shipped
+    def _frames(payload, dur) -> list[dict]:
+        if payload is None or dur is None or dur <= 0:
+            return []
+        n = min(max_frames, max(1, int(dur * fps)))
+        base = hashlib.sha256(bytes(payload)).hexdigest()[:16]
+        return [
+            {
+                "frame_index": i,
+                "frame_ts_s": round(i / fps, 3),
+                "frame_digest": hashlib.sha256(f"{base}:{i}".encode()).hexdigest()[:16],
+            }
+            for i in range(n)
+        ]
 
-    ensure_shipped(media.sparkSession)
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload, dur in zip(
-                pdf["media_id"].tolist(), pdf["payload"].tolist(), pdf["duration_s"].tolist()
-            ):
-                if payload is None or dur is None or dur <= 0:
-                    continue
-                n = min(max_frames, max(1, int(dur * fps)))
-                base = hashlib.sha256(bytes(payload)).hexdigest()[:16]
-                for i in range(n):
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_index": i,
-                            "frame_ts_s": round(i / fps, 3),
-                            "frame_digest": hashlib.sha256(
-                                f"{base}:{i}".encode()
-                            ).hexdigest()[:16],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SAMPLE_SCHEMA.fields])
-
-    return media.where("media_type = 'video'").select(
-        "media_id", "payload", "duration_s"
-    ).mapInPandas(_run, FRAME_SAMPLE_SCHEMA)
+    videos = media.where("media_type = 'video'").select("media_id", "payload", "duration_s")
+    return explode_lane(videos, _frames, FRAME_SAMPLE_SCHEMA)
 
 
 AUDIO_FEATURES_SCHEMA = StructType(
@@ -516,29 +451,13 @@ def _decode_wav(payload: bytes) -> dict:
 def extract_audio_features(media: DataFrame) -> DataFrame:
     """audio rows → (sample_rate, channels, bits, duration, rms, peak).
 
-    Unlike the image path, this decode is REAL: PCM WAV needs only stdlib
-    RIFF parsing + numpy. Undecodable payloads quarantine per row."""
-    from ..shipping import ensure_shipped
+    PCM WAV decode needs only stdlib RIFF parsing + numpy. Undecodable
+    payloads quarantine per row."""
 
-    ensure_shipped(media.sparkSession)
-    names = [f.name for f in AUDIO_FEATURES_SCHEMA.fields]
+    def _features(payload) -> list[dict]:
+        if payload is None:
+            raise ValueError("empty payload")
+        return [_decode_wav(bytes(payload))]
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"].tolist(), pdf["payload"].tolist()):
-                try:
-                    if payload is None:
-                        raise ValueError("empty payload")
-                    rows.append({"media_id": mid, **_decode_wav(bytes(payload)), "error": None})
-                except Exception as exc:
-                    rows.append(
-                        {"media_id": mid, "sample_rate": None, "channels": None,
-                         "bits": None, "duration_s": None, "rms": None,
-                         "peak": None, "error": f"{type(exc).__name__}: {exc}"}
-                    )
-            yield pd.DataFrame(rows, columns=names)
-
-    return media.where("media_type = 'audio'").select("media_id", "payload").mapInPandas(
-        _run, AUDIO_FEATURES_SCHEMA
-    )
+    audio = media.where("media_type = 'audio'").select("media_id", "payload")
+    return explode_lane(audio, _features, AUDIO_FEATURES_SCHEMA)

@@ -8,22 +8,22 @@ ner_worker.py:17-33.
 
 Spark pattern (the reference's lazy per-worker singleton,
 ner_worker.py:72-111): the model loads ONCE per executor python worker
-inside the mapInPandas closure and is reused across Arrow batches. With no
-spaCy in this sandbox the operator transparently produces the mock path —
-same schema, same downstream pipeline — so installing the model is a
-config change, not a code change.
+(``functools.cache``) and is reused across tasks and Arrow batches of the
+per-document text lane. Without spaCy the operator transparently produces
+the mock path — same schema, same downstream pipeline — so installing the
+model is a config change, not a code change.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
+import functools
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StringType, StructField, StructType
 
+from ..reference_impl.ner import mock_ner
 from ..schemas import MENTION_STRUCT
+from .spans import _explode_per_doc
 
 # spaCy label → standard lowercase type (ner_worker.py:17-33)
 SPACY_TYPE_MAP = {
@@ -45,51 +45,41 @@ def model_confidence(text: str) -> float:
     return min(conf, 1.0)
 
 
+@functools.cache
+def _load_spacy(model_name: str):
+    """The spaCy pipeline, once per worker, or None when spaCy or the model
+    is missing."""
+    try:
+        import spacy  # type: ignore
+
+        return spacy.load(model_name)
+    except Exception:
+        return None
+
+
 def extract_mentions_model(
     docs: DataFrame,
     model_name: str = "en_core_web_sm",
     text_col: str = "extracted_text",
 ) -> DataFrame:
     """Mentions via spaCy when importable, mock-NER otherwise (ner.py:63-65)."""
-    from ..shipping import ensure_shipped
-
-    ensure_shipped(docs.sparkSession)
     schema = StructType(
         [StructField("url", StringType(), False)] + list(MENTION_STRUCT.fields)
     )
-    names = [f.name for f in schema.fields]
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # lazy per-python-worker singleton (ner_worker.py:72-111)
-        nlp = None
-        try:
-            import spacy  # type: ignore
+    def _mentions(text: str) -> list[dict]:
+        nlp = _load_spacy(model_name)
+        if nlp is None:
+            return mock_ner(text)
+        return [
+            {
+                "text": ent.text,
+                "entity_type": SPACY_TYPE_MAP.get(ent.label_, "other"),
+                "start_char": ent.start_char,
+                "end_char": ent.end_char,
+                "confidence": model_confidence(ent.text),
+            }
+            for ent in nlp(text).ents
+        ]
 
-            nlp = spacy.load(model_name)
-        except Exception:
-            nlp = None
-        from ..reference_impl.ner import mock_ner
-
-        for pdf in batches:
-            rows: list[dict] = []
-            for url, text in zip(pdf["url"].tolist(), pdf[text_col].tolist()):
-                if not text:
-                    continue
-                if nlp is not None:
-                    for ent in nlp(text).ents:
-                        rows.append(
-                            {
-                                "url": url,
-                                "text": ent.text,
-                                "entity_type": SPACY_TYPE_MAP.get(ent.label_, "other"),
-                                "start_char": ent.start_char,
-                                "end_char": ent.end_char,
-                                "confidence": model_confidence(ent.text),
-                            }
-                        )
-                else:
-                    for m in mock_ner(text):
-                        rows.append({"url": url, **m})
-            yield pd.DataFrame(rows, columns=names)
-
-    return docs.select("url", text_col).mapInPandas(_run, schema)
+    return _explode_per_doc(docs.select("url", text_col), _mentions, schema)

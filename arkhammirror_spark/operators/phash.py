@@ -8,23 +8,18 @@ adjacent-column compare; all packed row-major, first bit most significant,
 hex zfill to 16 chars) and :111-132 (hamming distance).
 The reference computes hashes one file at a time with PIL + scipy and finds
 similar images by scanning every stored hash in Python (:134-180); here the
-hashes are an Arrow-batched mapInPandas pass over the media frame and the
+hashes are one pass of the row lane over the media frame and the
 similar-image search is the same Manku block-combination hamming join the
 SimHash lane uses — bucketed, never all-pairs.
 
-Lanes (the extract_image_features gate): PIL when present (convert("L") +
-LANCZOS like the reference), stdlib else (BT.601 grayscale + box-average
-resample over the repo's own PNG/BMP/PNM decode), mock = payload-digest
-fake. The DCT needs no scipy: the orthonormal DCT-II is a 32x32 matrix
-product, numpy-only.
+Decode as extract_image_features: PIL when present (convert("L") + LANCZOS
+like the reference), stdlib else (BT.601 grayscale + box-average resample
+over the repo's own PNG/BMP/PNM decode). The DCT needs no scipy: the
+orthonormal DCT-II is a 32x32 matrix product, numpy-only.
 """
 
 from __future__ import annotations
 
-import hashlib
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     LongType,
@@ -33,7 +28,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .multimodal import _load_pil, _PIL_HINT, decode_image, grayscale
+from .lane import explode_lane
+from .multimodal import _load_pil, decode_image, grayscale
 
 
 def dct_matrix(n: int):
@@ -146,18 +142,6 @@ def _pil_gray(pil, raw: bytes, w: int, h: int):
         )
 
 
-def _mock_hashes(raw: bytes) -> dict[str, object]:
-    """Deterministic digest fake: 64 bits per hash from sha256(payload||tag)."""
-    out: dict[str, object] = {}
-    for tag in ("ahash", "dhash", "phash"):
-        digest = hashlib.sha256(raw + tag.encode()).digest()[:8]
-        bits = [(digest[i // 8] >> (7 - i % 8)) & 1 for i in range(64)]
-        hx, sig = _bits_to_hex_and_long(bits)
-        out[tag] = hx
-        out[f"{tag}_sig"] = sig
-    return out
-
-
 PHASH_SCHEMA = StructType(
     [
         StructField("media_id", StringType(), False),
@@ -167,86 +151,39 @@ PHASH_SCHEMA = StructType(
         StructField("dhash_sig", LongType(), True),
         StructField("phash", StringType(), True),
         StructField("phash_sig", LongType(), True),
-        StructField("engine", StringType(), False),
+        StructField("engine", StringType(), True),
         StructField("error", StringType(), True),
     ]
 )
 
 
-def image_perceptual_hashes(media: DataFrame, mode: str = "auto") -> DataFrame:
+def image_perceptual_hashes(media: DataFrame) -> DataFrame:
     """media(image rows) -> one row per image with all three 64-bit
     perceptual hashes, as reference-format hex strings AND signed longs
-    (the longs feed the hamming band join). auto/strict/mock gate as
-    extract_image_features; undecodable payloads quarantine per-row."""
-    if mode not in ("auto", "strict", "mock"):
-        raise ValueError(f"unknown mode {mode!r}")
-    from ..shipping import ensure_shipped
+    (the longs feed the hamming band join). `engine` names the decode the
+    session's Python offers (pil | stdlib), on every row; undecodable
+    payloads quarantine per row."""
 
-    ensure_shipped(media.sparkSession)
-    names = [f.name for f in PHASH_SCHEMA.fields]
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pil = None
-        if mode != "mock":
-            pil = _load_pil()
-            if pil is None and mode == "strict":
-                raise ImportError(_PIL_HINT)
-        engine = "mock" if mode == "mock" else ("pil" if pil else "stdlib")
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"].tolist(), pdf["payload"].tolist()):
-                base = {"media_id": mid, "engine": engine, "error": None}
-                try:
-                    if payload is None:
-                        raise ValueError("empty payload")
-                    raw = bytes(payload)
-                    if mode == "mock":
-                        base.update(_mock_hashes(raw))
-                    elif pil is not None:
-                        a_hex, a_sig = _bits_to_hex_and_long(
-                            ahash_bits(_pil_gray(pil, raw, 8, 8))
-                        )
-                        d_hex, d_sig = _bits_to_hex_and_long(
-                            dhash_bits(_pil_gray(pil, raw, 9, 8))
-                        )
-                        p_hex, p_sig = _bits_to_hex_and_long(
-                            phash_bits(_pil_gray(pil, raw, 32, 32))
-                        )
-                        base.update(
-                            {"ahash": a_hex, "ahash_sig": a_sig,
-                             "dhash": d_hex, "dhash_sig": d_sig,
-                             "phash": p_hex, "phash_sig": p_sig}
-                        )
-                    else:
-                        base.update(
-                            perceptual_hashes_from_array(decode_image(raw))
-                        )
-                except Exception as exc:
-                    base.update(
-                        {"ahash": None, "ahash_sig": None, "dhash": None,
-                         "dhash_sig": None, "phash": None, "phash_sig": None,
-                         "error": f"{type(exc).__name__}: {exc}"}
-                    )
-                rows.append(base)
-            # build sig columns straight from the python ints as nullable
-            # Int64: letting pd.DataFrame infer them would coerce any column
-            # containing a None to float64 and shear the low bits off the
-            # 64-bit signatures before any astype could save them
-            out = pd.DataFrame(
-                {
-                    c: (
-                        pd.array([r.get(c) for r in rows], dtype="Int64")
-                        if c.endswith("_sig")
-                        else [r.get(c) for r in rows]
-                    )
-                    for c in names
-                },
-                columns=names,
+    def _hashes(payload) -> list[dict]:
+        if payload is None:
+            raise ValueError("empty payload")
+        raw, pil = bytes(payload), _load_pil()
+        if pil is None:
+            return [perceptual_hashes_from_array(decode_image(raw))]
+        out: dict[str, object] = {}
+        for name, bits, (w, h) in (
+            ("ahash", ahash_bits, (8, 8)),
+            ("dhash", dhash_bits, (9, 8)),
+            ("phash", phash_bits, (32, 32)),
+        ):
+            out[name], out[f"{name}_sig"] = _bits_to_hex_and_long(
+                bits(_pil_gray(pil, raw, w, h))
             )
-            yield out
+        return [out]
 
-    return media.where("media_type = 'image'").select("media_id", "payload").mapInPandas(
-        _run, PHASH_SCHEMA
+    images = media.where("media_type = 'image'").select("media_id", "payload")
+    return explode_lane(images, _hashes, PHASH_SCHEMA).withColumn(
+        "engine", F.lit("pil" if _load_pil() else "stdlib")
     )
 
 
@@ -254,7 +191,6 @@ def image_neardup(
     media: DataFrame,
     hash_type: str = "phash",
     max_hamming: int = 6,
-    mode: str = "auto",
     blocks: int | None = None,
 ) -> DataFrame:
     """Similar-image pairs: perceptual hashes + the SimHash lane's Manku
@@ -275,7 +211,7 @@ def image_neardup(
     if blocks is None and max_hamming > 6:
         blocks = max_hamming + 2  # C(k+3,3) explodes past k=6
     sigs = (
-        image_perceptual_hashes(media, mode=mode)
+        image_perceptual_hashes(media)
         .where(F.col("error").isNull())
         .select("media_id", F.col(f"{hash_type}_sig").alias("sig"))
         # slim (id, 64-bit sig) checkpoint: both sides of the banded

@@ -205,8 +205,8 @@ def full_scan(
     kind-dispatched metadata walk, integrity analysis, and the timeline
     event count, with scan_status completed/failed.
 
-    Single-pass shape: the payload crosses into Python ONCE — one
-    mapInPandas computes the metadata row AND the hashlib digests per
+    Single-pass shape: the payload crosses into Python ONCE — one pass of
+    the row lane computes the metadata row AND the hashlib digests per
     batch (hashing natively in Catalyst would be JVM-fast but forces a
     second full scan of the payload column to join back; at 100 TB the
     Arrow transfer dominates, so it rides the pass that already moves the
@@ -217,9 +217,7 @@ def full_scan(
     kind (same branches, content-derived — a 100-TB crawl cannot trust
     declared MIME)."""
     import hashlib
-    from typing import Iterator
 
-    import pandas as pd
     from pyspark.sql.types import (
         LongType,
         StringType,
@@ -227,10 +225,9 @@ def full_scan(
         StructType,
     )
 
-    from ..shipping import ensure_shipped
+    from .lane import explode_lane
     from .media_metadata import METADATA_SCHEMA, metadata_row
 
-    ensure_shipped(media.sparkSession)
     schema = StructType(
         METADATA_SCHEMA.fields
         + [
@@ -240,31 +237,20 @@ def full_scan(
             StructField("file_size", LongType(), True),
         ]
     )
-    names = [f.name for f in schema.fields]
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(
-                pdf[id_col].tolist(), pdf[payload_col].tolist()
-            ):
-                row = metadata_row(mid, payload)
-                raw = bytes(payload) if payload is not None else b""
-                row["file_hash_md5"] = hashlib.md5(raw).hexdigest()
-                row["file_hash_sha256"] = hashlib.sha256(raw).hexdigest()
-                row["file_hash_sha512"] = hashlib.sha512(raw).hexdigest()
-                row["file_size"] = len(raw)
-                rows.append(row)
-            out = pd.DataFrame(rows, columns=names)
-            for c in ("orientation", "revision", "file_size"):
-                out[c] = pd.array([r.get(c) for r in rows], dtype="Int64")
-            yield out
+    def _scan(payload) -> list[dict]:
+        raw = bytes(payload) if payload is not None else b""
+        return [{
+            **metadata_row(payload),
+            "file_hash_md5": hashlib.md5(raw).hexdigest(),
+            "file_hash_sha256": hashlib.sha256(raw).hexdigest(),
+            "file_hash_sha512": hashlib.sha512(raw).hexdigest(),
+            "file_size": len(raw),
+        }]
 
-    scanned = (
-        media.select(id_col, payload_col)
-        .mapInPandas(_run, schema)
-        .localCheckpoint(eager=False)
-    )
+    scanned = explode_lane(
+        media.select(id_col, payload_col), _scan, schema
+    ).localCheckpoint(eager=False)
     timeline_counts = (
         metadata_timeline(scanned, id_col="media_id")
         .groupBy("media_id")

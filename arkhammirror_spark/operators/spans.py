@@ -1,9 +1,10 @@
 """Span-extraction stage: docs → mentions / dates / relations / chunks / claims.
 
-Each derived table is one ``mapInPandas`` pass over (url, extracted_text)
-applying the corresponding reference_impl oracle function per document inside
-the Arrow batch, exploding to rows in-batch (pandas), so the Spark plan stays
-a single Python node per table with native exchanges around it.
+Each derived table is one pass of the row lane (``lane.explode_lane``) over
+(url, extracted_text) applying the corresponding reference_impl oracle
+function per document inside the Arrow batch, exploding to rows in-batch, so
+the Spark plan stays a single Python node per table with native exchanges
+around it.
 
 Reference lineage: parse shard orchestration (arkham_shard_parse/shard.py:
 286-344) runs NER → dates → relations → chunks per page; here each family is
@@ -13,9 +14,7 @@ Spark schedule them in parallel instead of sequentially per document.
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
-
-import pandas as pd
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StringType, StructField, StructType
@@ -26,45 +25,17 @@ from ..reference_impl.dates import extract_iso_dates, extract_relative_dates
 from ..reference_impl.ner import mock_ner
 from ..reference_impl.relations import extract_relations
 from ..schemas import CHUNK_STRUCT, CLAIM_STRUCT, DATE_STRUCT, REL_STRUCT
+from .lane import explode_lane
 
 
 def _explode_per_doc(
     docs: DataFrame, fn: Callable[[str], list[dict]], schema: StructType
 ) -> DataFrame:
-    """The per-document explode lane: one ``mapInPandas`` pass over a
-    two-column (key, text) frame — key ``url`` on the pipeline side,
-    ``doc_id`` on the query side. ``fn`` maps each document's text to
-    records; each record gets the document's key and the rows are projected
-    onto ``schema``, the caller's full output schema (key field first).
-    Null or empty texts emit nothing: every extractor routed here returns an
-    empty result on ""."""
-    from ..shipping import ensure_shipped
-
-    ensure_shipped(docs.sparkSession)
-    key, text_col = docs.columns
-    names = [f.name for f in schema.fields]
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_rows: list[dict] = []
-            for k, text in zip(pdf[key].tolist(), pdf[text_col].tolist()):
-                if not text:
-                    continue
-                for rec in fn(text):
-                    rec = dict(rec)
-                    rec[key] = k
-                    out_rows.append(rec)
-            if out_rows:
-                out = pd.DataFrame(out_rows)
-                if "normalized_date" in out.columns:
-                    out["normalized_date"] = pd.to_datetime(
-                        out["normalized_date"], utc=True
-                    )
-                yield out[names]
-            else:
-                yield pd.DataFrame({n: pd.Series(dtype="object") for n in names})
-
-    return docs.mapInPandas(_run, schema)
+    """The per-document text lane over a two-column (key, text) frame — key
+    ``url`` on the pipeline side, ``doc_id`` on the query side: the row lane
+    with a null text read as "" (every extractor routed here returns an
+    empty result on "")."""
+    return explode_lane(docs, lambda text: fn(text or ""), schema)
 
 
 def _per_url(
@@ -130,12 +101,8 @@ def extract_chunks_semantic(
     from ..reference_impl.semantic_chunker import chunk_semantic
     from .embed_model import _load_model, fake_embedding
 
-    model_holder: list = []
-
     def _fn(text: str) -> list[dict]:
-        if not model_holder:  # lazy per-python-worker singleton
-            model_holder.append(_load_model("BAAI/bge-m3"))
-        model = model_holder[0]
+        model = _load_model("BAAI/bge-m3")
 
         def _embed(sents: list[str]):
             if model is not None:
@@ -163,23 +130,11 @@ def extract_rels_from_mentions(docs_raw: DataFrame) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    names = F.col("_mentions").getField("text")
-    sz = F.size(names)
-    pairs = F.when(
-        sz >= 2,
-        F.flatten(
-            F.transform(
-                F.sequence(F.lit(0), sz - 2),
-                lambda i: F.transform(
-                    F.slice(names, i + 2, F.size(names) - i - 1),
-                    lambda t: F.struct(
-                        F.element_at(names, i + 1).alias("source_text"),
-                        t.alias("target_text"),
-                    ),
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<struct<source_text:string,target_text:string>>"))
+    from .edges import ordered_pairs
+
+    pairs = ordered_pairs(
+        F.col("_mentions").getField("text"), "source_text", "target_text"
+    )
     return (
         docs_raw.where(F.col("error").isNull())
         .select("url", F.explode(pairs).alias("p"))

@@ -38,6 +38,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .operators.dedup import exact_dedup
 from .operators.edges import comention_edges
 from .operators.spans import _explode_per_doc
 from .operators.spread import spread as _spread
@@ -115,9 +116,6 @@ _FP_MOD = 1_000_000_000_000_037  # fits (mod*31 + c) in int64
 
 
 def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .shipping import ensure_shipped
-
-    ensure_shipped(spark)  # UDF closures need the package on executor workers
     return read_table(spark, sf_dir, name)
 
 
@@ -177,6 +175,27 @@ def _mentions_df(
         lambda t: [{"entity_text": m["text"]} for m in mock_ner(t)],
         _MENTIONS_SCHEMA,
     )
+
+
+def _valid_mentions(
+    spark: SparkSession, sf_dir: str, docs_where=None
+) -> DataFrame:
+    """The mock-NER mentions as (doc_id, text, entity_type='PERSON') rows,
+    through the entity noise filter."""
+    m = _mentions_df(spark, sf_dir, docs_where).select(
+        F.col("doc_id"),
+        F.col("entity_text").alias("text"),
+        F.lit("PERSON").alias("entity_type"),
+    )
+    return filter_valid_mentions(m)
+
+
+def _comention(spark: SparkSession, sf_dir: str, docs_where=None) -> DataFrame:
+    """Co-mention edges (min count 2, top 1000) over the valid mentions."""
+    return comention_edges(
+        _valid_mentions(spark, sf_dir, docs_where),
+        doc_col="doc_id", min_count=2, limit=1000, include_doc_ids=False,
+    ).select("entity_a", "entity_b", "co_occurrence_count", "weight")
 
 
 # gaps-and-islands reproduction of ner.py:94-143 (validated row-identical
@@ -263,14 +282,8 @@ SELECT lower(entity_text) AS name_lower,
 FROM valid GROUP BY 1, 2
 """)
 def q_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    m = _mentions_df(spark, sf_dir).select(
-        F.col("doc_id"),
-        F.col("entity_text").alias("text"),
-        F.lit("PERSON").alias("entity_type"),
-    )
-    valid = filter_valid_mentions(m)
     return (
-        aggregate_entities(valid, doc_col="doc_id")
+        aggregate_entities(_valid_mentions(spark, sf_dir), doc_col="doc_id")
         .select("name_lower", "entity_type", "mention_count", "doc_count")
     )
 
@@ -292,15 +305,7 @@ ORDER BY co_occurrence_count DESC, entity_a, entity_b
 LIMIT 1000
 """)
 def q_comention_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    m = _mentions_df(spark, sf_dir).select(
-        F.col("doc_id"),
-        F.col("entity_text").alias("text"),
-        F.lit("PERSON").alias("entity_type"),
-    )
-    valid = filter_valid_mentions(m)
-    return comention_edges(
-        valid, doc_col="doc_id", min_count=2, limit=1000, include_doc_ids=False
-    ).select("entity_a", "entity_b", "co_occurrence_count", "weight")
+    return _comention(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -313,13 +318,9 @@ SELECT sha256(text) AS checksum, count(*) AS n_copies, min(doc_id) AS keeper_doc
 FROM documents GROUP BY 1
 """)
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _load(spark, sf_dir, "documents")
-    return (
-        docs.groupBy(F.sha2(F.col("text"), 256).alias("checksum"))
-        .agg(
-            F.count(F.lit(1)).alias("n_copies"),
-            F.min("doc_id").alias("keeper_doc_id"),
-        )
+    # the unselected member_ids aggregate is pruned from the plan
+    return exact_dedup(_load(spark, sf_dir, "documents"), "text", "doc_id").select(
+        "checksum", "n_copies", F.col("keeper").alias("keeper_doc_id")
     )
 
 

@@ -9,10 +9,6 @@ the derivation is identical SQL/DataFrame logic on both engines.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -25,6 +21,7 @@ from pyspark.sql.types import (
 
 from .queries import ORACLE_SQL, _MENTIONS_CTE, _cased_spark, _load, register
 from .operators.dedup import ngram_jaccard_pairs, verified_neardup_pairs
+from .operators.edges import ordered_pairs
 from .operators.spans import _explode_per_doc
 from .operators.spread import spread as _spread
 from .operators.timeline import extract_timeline_events
@@ -615,36 +612,12 @@ def q_relations_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("names", ArrayType(StringType()), False),
         ]
     )
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                {"doc_id": doc_id,
-                 "names": [m["text"] for m in mock_ner(t or "")]}
-                for doc_id, t in zip(pdf["doc_id"].tolist(), pdf["t"].tolist())
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "names"])
-
-    with_names = _spread(docs, "doc_id").mapInPandas(_run, names_schema)
-    names = F.col("names")
-    sz = F.size(names)
-    pairs = F.when(
-        sz >= 2,
-        F.flatten(
-            F.transform(
-                F.sequence(F.lit(0), sz - 2),
-                lambda i: F.transform(
-                    F.slice(names, i + 2, sz - i - 1),
-                    lambda t: F.struct(
-                        F.element_at(names, i + 1).alias("source_text"),
-                        t.alias("target_text"),
-                    ),
-                ),
-            )
-        ),
-    ).otherwise(
-        F.array().cast("array<struct<source_text:string,target_text:string>>")
+    with_names = _explode_per_doc(
+        _spread(docs, "doc_id"),
+        lambda t: [{"names": [m["text"] for m in mock_ner(t)]}],
+        names_schema,
     )
+    pairs = ordered_pairs(F.col("names"), "source_text", "target_text")
     return with_names.select("doc_id", F.explode(pairs).alias("p")).select(
         "doc_id",
         F.col("p.source_text"),

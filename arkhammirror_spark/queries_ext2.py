@@ -377,20 +377,15 @@ ORACLE_SQL["simhash_hamming_pairs"] = _simhash_pairs_oracle()
 
 @register("linked_mentions", None)  # oracle below
 def q_linked_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.entities import aggregate_entities, filter_valid_mentions
+    from .operators.entities import aggregate_entities
     from .operators.linking import link_mentions
-    from .queries import _mentions_df
+    from .queries import _valid_mentions
 
-    m = _mentions_df(spark, sf_dir).select(
-        "doc_id",
-        F.col("entity_text").alias("text"),
-        F.lit("PERSON").alias("entity_type"),
-    )
     # one mock-NER pass: checkpoint the slim distinct mention pairs, then
     # derive BOTH link input and canonical dictionary from it (without this
     # the mention UDF subtree executes once per join branch)
     valid = (
-        filter_valid_mentions(m)
+        _valid_mentions(spark, sf_dir)
         .select("doc_id", "text")
         .distinct()
         .localCheckpoint(eager=True)
@@ -1059,9 +1054,6 @@ def _format_fixture_pages(spark: SparkSession):
 def q_format_extracts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.extract import extract_docs
 
-    from .shipping import ensure_shipped
-
-    ensure_shipped(spark)
     docs = extract_docs(_format_fixture_pages(spark))
     return docs.select(
         "url", "lang", F.sha2(F.col("extracted_text"), 256).alias("text_sha"),
@@ -1103,9 +1095,6 @@ def _archive_fixture_pages(spark: SparkSession):
 def q_archive_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.archives import explode_archives
 
-    from .shipping import ensure_shipped
-
-    ensure_shipped(spark)
     members = explode_archives(_archive_fixture_pages(spark))
     return members.where(F.col("error").isNull()).select(
         "url",
@@ -1267,10 +1256,8 @@ def _warc_fixture_segment(spark: SparkSession):
 @register("warc_ingest", None)  # oracle (VALUES) below
 def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.extract import extract_docs
-    from .shipping import ensure_shipped
     from .sources.warc import warc_to_pages
 
-    ensure_shipped(spark)
     pages = (
         warc_to_pages(_warc_fixture_segment(spark))
         .where(F.col("error").isNull())
@@ -1489,9 +1476,6 @@ def _media_fixture(spark: SparkSession):
 @register("audio_features", None)  # oracle (VALUES) attached below
 def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.multimodal import extract_audio_features
-    from .shipping import ensure_shipped
-
-    ensure_shipped(spark)
     out = extract_audio_features(_media_fixture(spark))
     return out.select(
         "media_id", "sample_rate", "channels", "bits",
@@ -1504,9 +1488,6 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("video_frame_samples", None)  # oracle (VALUES) attached below
 def q_video_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.multimodal import sample_video_frames
-    from .shipping import ensure_shipped
-
-    ensure_shipped(spark)
     return sample_video_frames(_media_fixture(spark), fps=1.0, max_frames=4).select(
         "media_id", "frame_index", F.round("frame_ts_s", 3).alias("frame_ts_s"),
         "frame_digest",
@@ -2178,9 +2159,6 @@ def q_webtext_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle (deterministic fixtures; each stage separately oracle-gated by
     its own entry)."""
     from .operators.webtext import prepare_webtext_corpus
-    from .shipping import ensure_shipped
-
-    ensure_shipped(spark)
     pages = spark.createDataFrame(_WEBTEXT_PAGES, "url string, html string")
     out = prepare_webtext_corpus(pages, min_words=40)
     return out.select(
@@ -2242,9 +2220,6 @@ def q_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every block is link-saturated). Pinned VALUES oracle (sha256 of the
     extracted main text, the format_extracts pattern)."""
     from .operators.boilerplate import extract_main_content
-    from .shipping import ensure_shipped
-
-    ensure_shipped(spark)
     pages = spark.createDataFrame(_BOILER_PAGES, "url string, html string")
     out = extract_main_content(pages)
     return out.select(
@@ -2294,10 +2269,7 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     the junk row quarantines. Values pinned (numpy arithmetic on a
     deterministic fixture, like the audio_features WAV pins)."""
     from .operators.multimodal import extract_image_features
-    from .shipping import ensure_shipped
-
-    ensure_shipped(spark)
-    out = extract_image_features(_image_fixture(spark), mode="auto")
+    out = extract_image_features(_image_fixture(spark))
     f = lambda i: F.round(F.element_at("feature", i), 6)  # noqa: E731
     return out.where(F.col("error").isNull()).select(
         "media_id", "width", "height",

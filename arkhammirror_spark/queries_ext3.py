@@ -70,10 +70,7 @@ def q_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     first bit most significant, zfill 16). Junk row quarantines (excluded
     here; its absence is part of the pin)."""
     from .operators.phash import image_perceptual_hashes
-    from .shipping import ensure_shipped
-
-    ensure_shipped(spark)
-    out = image_perceptual_hashes(_phash_fixture(spark), mode="auto")
+    out = image_perceptual_hashes(_phash_fixture(spark))
     return out.where(F.col("error").isNull()).select(
         "media_id", "ahash", "dhash", "phash"
     )
@@ -87,9 +84,6 @@ def q_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     check: the engineered base/edit near-dup must survive, the mirror and
     independent texture must not pair."""
     from .operators.phash import image_neardup
-    from .shipping import ensure_shipped
-
-    ensure_shipped(spark)
     pairs = image_neardup(_phash_fixture(spark), max_hamming=6)
     return pairs.select(
         "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
@@ -179,9 +173,6 @@ def q_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     file size, timeline event count, and scan status, all in one payload
     pass."""
     from .operators.provenance import full_scan
-    from .shipping import ensure_shipped
-
-    ensure_shipped(spark)
     out = full_scan(_metadata_fixture(spark))
     # absent fields surface as typed sentinels, not NULLs: the driver's
     # value compare sorts rows as tuples and None is unorderable vs str
@@ -242,10 +233,7 @@ def _ela_fixture(spark: SparkSession) -> DataFrame:
 @register("ela_metrics", None)  # oracle (VALUES) attached below
 def q_ela_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.ela import ela_metrics
-    from .shipping import ensure_shipped
-
-    ensure_shipped(spark)
-    out = ela_metrics(_ela_fixture(spark), mode="auto")
+    out = ela_metrics(_ela_fixture(spark))
     return out.select(
         "media_id",
         F.round("mean_error", 6).alias("mean_error"),
@@ -311,9 +299,6 @@ def q_metadata_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     per populated timestamp field with the reference's suppression rules
     (digitized == original dropped, modified == created dropped)."""
     from .operators.provenance import metadata_timeline
-    from .shipping import ensure_shipped
-
-    ensure_shipped(spark)
     out = metadata_timeline(_provenance_fixture(spark))
     return out.select(
         "media_id", "event_type", "event_ts", "event_source",
@@ -328,9 +313,6 @@ def q_metadata_relationships(spark: SparkSession, sf_dir: str) -> DataFrame:
     same_camera-beats-same_device precedence, multi-similarity match
     scores, and author blocking across pdf/office lanes."""
     from .operators.provenance import metadata_relationships
-    from .shipping import ensure_shipped
-
-    ensure_shipped(spark)
     out = metadata_relationships(_provenance_fixture(spark))
     return out.select(
         "id_a", "id_b", "relationship_type",
@@ -795,15 +777,9 @@ SELECT * FROM (VALUES
 @register("entity_correlations", None)  # oracle below
 def q_entity_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.correlations import entity_correlations
-    from .operators.entities import filter_valid_mentions
-    from .queries import _mentions_df
+    from .queries import _valid_mentions
 
-    m = _mentions_df(spark, sf_dir).select(
-        "doc_id",
-        F.col("entity_text").alias("text"),
-        F.lit("PERSON").alias("entity_type"),
-    )
-    valid = filter_valid_mentions(m).select(
+    valid = _valid_mentions(spark, sf_dir).select(
         "doc_id", F.lower(F.col("text")).alias("entity")
     )
     out = entity_correlations(
@@ -3555,36 +3531,20 @@ _FLOW_NTYPES = ["person", "organization", "location", "event"]
 _FLOW_RTYPES = ["works_for", "located_in", "mentioned_with"]
 
 
-def _flows_comention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Co-mention edges over a third of the corpus (doc_id % 3 == 0):
-    the flow semantics are corpus-size-independent and the full-corpus
-    comention lane is already gated by `comention_edges`, so this part
-    doesn't pay the Python NER pass twice over everything."""
-    from .operators.edges import comention_edges
-    from .operators.entities import filter_valid_mentions
-    from .queries import _mentions_df
-
-    m = _mentions_df(
-        spark, sf_dir, docs_where=F.col("doc_id") % 3 == 0
-    ).select(
-        F.col("doc_id"),
-        F.col("entity_text").alias("text"),
-        F.lit("PERSON").alias("entity_type"),
-    )
-    valid = filter_valid_mentions(m)
-    return comention_edges(
-        valid, doc_col="doc_id", min_count=2, limit=1000,
-        include_doc_ids=False,
-    ).select("entity_a", "entity_b", "co_occurrence_count", "weight")
-
-
 @register("graph_flows", None)  # oracle below
 def q_graph_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.flows import (
         aggregate_flows, extract_entity_flows, extract_relationship_flows,
     )
+    from .queries import _comention
 
-    edges0 = _flows_comention(spark, sf_dir).localCheckpoint(eager=True)
+    # co-mention edges over a third of the corpus: the flow semantics are
+    # corpus-size-independent and the full-corpus comention lane is already
+    # gated by `comention_edges`, so this part doesn't pay the Python NER
+    # pass twice over everything
+    edges0 = _comention(
+        spark, sf_dir, docs_where=F.col("doc_id") % 3 == 0
+    ).localCheckpoint(eager=True)
     names = (
         edges0.select(F.col("entity_a").alias("id"))
         .unionByName(edges0.select(F.col("entity_b").alias("id")))
@@ -3648,8 +3608,8 @@ def q_graph_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _graph_flows_oracle() -> str:
     comention = ORACLE_SQL["comention_edges"]
-    # mirror the doc_id % 3 bound of _flows_comention (the comention SQL
-    # reads `documents` exactly once, in its cased CTE)
+    # mirror the doc_id % 3 bound of q_graph_flows' comention edges (the
+    # comention SQL reads `documents` exactly once, in its cased CTE)
     assert comention.count("FROM documents") == 1
     comention = comention.replace(
         "FROM documents",

@@ -1,3 +1,3 @@
-from .pages import read_pages, read_table, register_views
+from .pages import read_table
 
-__all__ = ["read_pages", "read_table", "register_views"]
+__all__ = ["read_table"]

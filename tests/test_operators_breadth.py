@@ -14,8 +14,8 @@ from arkhammirror_spark.operators.dedup import (
     minhash_signatures,
     ngram_jaccard_pairs,
     shingles,
-    simhash64,
-    simhash_neardup,
+    simhash64_reference,
+    simhash_pairs_from_sigs,
     verified_neardup_pairs,
 )
 from arkhammirror_spark.operators.search import (
@@ -28,7 +28,10 @@ from arkhammirror_spark.operators.search import (
 )
 from arkhammirror_spark.operators.similarity import (
     brute_force_topk,
+    ivf_health_check,
     lsh_bucket_topk,
+    optimal_lists,
+    optimal_probes,
 )
 
 
@@ -242,13 +245,34 @@ class TestDedup:
         assert {r["doc_id"]: r["signature"] for r in sigs} == sigs2
 
     def test_simhash_dup_and_neardup(self, spark, docs):
-        sims = {r["doc_id"]: r["simhash"] for r in simhash64(docs).collect()}
+        sigs = simhash64_reference(docs)
+        sims = {r["doc_id"]: r["simhash"] for r in sigs.collect()}
         assert sims[1] == sims[4]
-        pairs = simhash_neardup(docs, max_hamming=0).collect()
+        pairs = simhash_pairs_from_sigs(sigs, max_hamming=0).collect()
         assert {(p["id_a"], p["id_b"]) for p in pairs} >= {(1, 4)}
 
 
 class TestSimilarity:
+    @pytest.mark.parametrize("recall", [0.9, 0.95, 0.99])
+    def test_ivf_health_sizing_matches_python_twins(self, spark, recall):
+        """ivf_health_check's native lists/probes columns equal the Python
+        sizing twins (which the reference-parity suite fuzzes) at every
+        branch boundary of the lists formula."""
+        counts = [0, 1, 999, 1000, 9_999, 10_000, 10_001, 999_999,
+                  1_000_000, 1_000_001, 9_999_999, 5_000_000_000]
+        cat = spark.createDataFrame(
+            [(f"c{n}", n, 0, None) for n in counts],
+            "name string, vector_count long, lists long, last_reindex string",
+        )
+        got = {
+            r["vector_count"]: (r["optimal_lists"], r["optimal_probes"])
+            for r in ivf_health_check(cat, "2026-01-01", target_recall=recall).collect()
+        }
+        assert got == {
+            n: (optimal_lists(n), optimal_probes(optimal_lists(n), recall))
+            for n in counts
+        }
+
     @pytest.fixture(scope="class")
     def emb(self, spark):
         import random

@@ -133,6 +133,23 @@ class TestEdges:
         assert e["document_ids"] == ["d1", "d2", "d3"]
         assert abs(e["weight"] - 0.3) < 1e-12
 
+    def test_ordered_pairs_at_every_small_size(self, spark):
+        """Every i<j pair in order; no pairs (and no error) for a null,
+        empty or one-element array."""
+        from itertools import combinations
+
+        from arkhammirror_spark.operators.edges import ordered_pairs
+
+        arrays = [None, [], ["a"], ["a", "b"], ["a", "b", "c", "d"]]
+        df = spark.createDataFrame(
+            [(i, a) for i, a in enumerate(arrays)], "i int, names array<string>"
+        )
+        got = {
+            r["i"]: [(p["x"], p["y"]) for p in r["p"] or []]
+            for r in df.select("i", ordered_pairs(F.col("names"), "x", "y").alias("p")).collect()
+        }
+        assert got == {i: list(combinations(a or [], 2)) for i, a in enumerate(arrays)}
+
 
 class TestAuditAndResume:
     def test_audit_reconciles(self, result):

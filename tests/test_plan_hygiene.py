@@ -254,6 +254,37 @@ def test_analyst_part_job_budget(spark, name):
 # purpose (with the packages enclosing them); none today — bench_extra.py's
 # `shapes` mode reaches plans.inspect. Anything unreachable is dead code and
 # fails the guard below.
+# The modules that may start a pandas UDF, each for its reason; every other
+# row-wise operator keeps only its per-row function and runs through the lane.
+_PANDAS_UDF_MODULES = {
+    "operators/lane.py": "the per-row lane itself",
+    "operators/extract.py": "batch-level _part_id/_batch_ms audit columns",
+    "operators/graph.py": "betweenness aggregates per batch",
+    "operators/timeline.py": "grouped applyInPandas merge",
+    "datagen/pages.py": "a spark.range generator",
+    "sources/warc.py": "error rows keyed by segment path; tz-naive timestamps",
+}
+
+
+def test_pandas_udfs_only_in_the_lane():
+    """mapInPandas/applyInPandas appear only in the modules listed above,
+    and each listed module still uses one."""
+    import ast
+
+    pkg = Path(__file__).resolve().parent.parent / "arkhammirror_spark"
+    sites = {
+        path.relative_to(pkg).as_posix()
+        for path in pkg.rglob("*.py")
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute)
+        and node.attr in ("mapInPandas", "applyInPandas")
+    }
+    assert sites == set(_PANDAS_UDF_MODULES), (
+        f"outside the lane: {sorted(sites - set(_PANDAS_UDF_MODULES))}; "
+        f"stale: {sorted(set(_PANDAS_UDF_MODULES) - sites)}"
+    )
+
+
 _UNREACHABLE_OK: set[str] = set()
 
 
@@ -350,6 +381,17 @@ _TEST_ONLY_OK = {
         "reference for fit_ivf/ivf_probe",
     "arkhammirror_spark.operators.embed_model.fake_embedding":
         "builds the vectors tests feed to the live ANN parts",
+    "arkhammirror_spark.operators.graph.pagerank":
+        "driver reference for pagerank_distributed",
+    "arkhammirror_spark.operators.similarity.optimal_lists":
+        "Python twin of ivf_health_check's optimal_lists column",
+    "arkhammirror_spark.operators.similarity.optimal_probes":
+        "Python twin of ivf_health_check's optimal_probes column",
+    # plan assertions the hygiene tests make
+    "arkhammirror_spark.plans.inspect.has_row_python": "no BatchEvalPython node",
+    "arkhammirror_spark.plans.inspect.pushed_filters": "filter pushdown reaches parquet",
+    "arkhammirror_spark.plans.inspect.read_schema": "document scans are column-pruned",
+    "arkhammirror_spark.plans.inspect.unpartitioned_windows": "no single-partition Window",
     # the salted two-phase host aggregation the north rule names
     "arkhammirror_spark.pipeline.salted_host_stats": "salted host stats",
     "arkhammirror_spark.pipeline.detect_heavy_hosts": "heavy hosts off the salted stats",
@@ -395,14 +437,14 @@ def _top_level_defs():
             if not isinstance(node, ast.ClassDef):
                 roots += node.args.defaults + [d for d in node.args.kw_defaults if d]
             if registered(node) or mod == "__spark_entry__":
-                roots.append(ast.Constant(node.name))
+                roots.append(ast.Name(node.name))
     return roots, defs
 
 
 def _reached_names(roots, defs) -> set[str]:
-    """Names of the defs referenced, transitively, from `roots`: a Name, an
-    attribute or a string constant equal to a def's name reaches every def
-    of that name. An import alias is not a use."""
+    """Names of the defs referenced, transitively, from `roots`: a Name or
+    an attribute equal to a def's name reaches every def of that name. An
+    import alias or a string constant is not a use."""
     import ast
 
     by_name: dict[str, list] = {}
@@ -416,8 +458,6 @@ def _reached_names(roots, defs) -> set[str]:
                 name = node.id
             elif isinstance(node, ast.Attribute):
                 name = node.attr
-            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
-                name = node.value
             else:
                 continue
             if name in by_name and name not in reached:
