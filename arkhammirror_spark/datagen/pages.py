@@ -252,5 +252,5 @@ def gen_pages_df(spark, n_rows: int, seed: int = 42, partitions: int | None = No
     return spark.range(0, n_rows, numPartitions=parts).mapInPandas(_gen, PAGES_SCHEMA)
 
 
-def write_pages(spark, out_dir: str, n_rows: int, seed: int = 42) -> None:
-    gen_pages_df(spark, n_rows, seed).write.mode("overwrite").parquet(out_dir)
+def write_pages(spark, out_dir: str, n_rows: int) -> None:
+    gen_pages_df(spark, n_rows, 42).write.mode("overwrite").parquet(out_dir)

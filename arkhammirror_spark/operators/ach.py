@@ -90,10 +90,10 @@ def ach_scores(ratings: DataFrame) -> DataFrame:
     )
 
 
-def diagnosticity(ratings: DataFrame, min_variance: float = 0.5) -> DataFrame:
+def diagnosticity(ratings: DataFrame) -> DataFrame:
     """Evidence whose ratings VARY across hypotheses is diagnostic
     (scoring.py:131-182): population variance of the rating scores per
-    evidence row, kept when > min_variance and rated against >= 2
+    evidence row, kept when > 0.5 and rated against >= 2
     hypotheses. Returns (matrix_id, evidence_id, variance, mean_consistency,
     rating_count) — variance computed from exact integer sums
     (E[x^2] - E[x]^2 with one float division each)."""
@@ -115,7 +115,7 @@ def diagnosticity(ratings: DataFrame, min_variance: float = 0.5) -> DataFrame:
             mean.alias("mean_consistency"),
             "rating_count",
         )
-        .where(F.col("variance") > min_variance)
+        .where(F.col("variance") > 0.5)
     )
 
 
@@ -125,10 +125,7 @@ def diagnosticity(ratings: DataFrame, min_variance: float = 0.5) -> DataFrame:
 
 
 def _new_ranks_without_uncertain(
-    ratings: DataFrame,
-    evidence: DataFrame,
-    cred_threshold: int = 70,
-    rel_threshold: int = 70,
+    ratings: DataFrame, evidence: DataFrame
 ) -> DataFrame:
     """Re-rank hypotheses with uncertain evidence's ratings removed
     (scoring.py:203-222). Evidence is uncertain when credibility < 0.7 OR
@@ -138,8 +135,7 @@ def _new_ranks_without_uncertain(
     from pyspark.sql import Window
 
     uncertain = evidence.where(
-        (F.col("cred_centi") < cred_threshold)
-        | (F.col("rel_centi") < rel_threshold)
+        (F.col("cred_centi") < 70) | (F.col("rel_centi") < 70)
     ).select("matrix_id", "evidence_id")
     filtered = ratings.join(
         uncertain, ["matrix_id", "evidence_id"], "left_anti"
@@ -429,13 +425,12 @@ def suggest_evidence(
     ratings: DataFrame,
     evidence: DataFrame,
     hypotheses: DataFrame,
-    max_suggestions: int = 5,
 ) -> DataFrame:
     """suggest_evidence (evidence.py:183-246): rule-based suggestions per
     hypothesis in the reference's emit order — the four type templates
     (document, testimony, physical, circumstantial) for types missing
     from the matrix, then the conflicting-evidence rule, then the
-    limited-evidence rule; truncated to max_suggestions. hypotheses:
+    limited-evidence rule; truncated to 5. hypotheses:
     (matrix_id, hypothesis_id, title)."""
     present = evidence.groupBy("matrix_id").agg(
         F.collect_set("evidence_type").alias("types")
@@ -492,7 +487,7 @@ def suggest_evidence(
     )
     suggestions = F.slice(
         F.filter(F.array(*items), lambda x: x.isNotNull()),
-        1, max_suggestions,
+        1, 5,
     )
     return base.select(
         "matrix_id", "hypothesis_id",

@@ -19,28 +19,25 @@ from pyspark.sql import DataFrame, functions as F
 def zscore_anomalies(
     df: DataFrame,
     metrics: list[str],
-    id_col: str = "doc_id",
-    group_col: str | None = None,
     threshold: float = 3.0,
 ) -> DataFrame:
-    """Rows whose |z| exceeds threshold on any metric; one row per (id, metric)."""
+    """Rows whose |z| exceeds threshold on any metric; one row per
+    (doc_id, metric)."""
     stacked = None
     for m in metrics:
         part = df.select(
-            F.col(id_col),
-            *( [F.col(group_col)] if group_col else [] ),
+            F.col("doc_id"),
             F.lit(m).alias("metric"),
             F.col(m).cast("double").alias("value"),
         )
         stacked = part if stacked is None else stacked.unionAll(part)
 
-    keys = ([group_col] if group_col else []) + ["metric"]
-    stats = stacked.groupBy(*keys).agg(
+    stats = stacked.groupBy("metric").agg(
         F.avg("value").alias("corpus_mean"),
         F.stddev_samp("value").alias("corpus_std"),
     )
 
-    joined = stacked.join(F.broadcast(stats), keys)
+    joined = stacked.join(F.broadcast(stats), "metric")
     z = F.abs((F.col("value") - F.col("corpus_mean")) / F.col("corpus_std"))
     return (
         joined.where(F.col("corpus_std") > 0)
@@ -60,9 +57,7 @@ def zscore_anomalies(
     )
 
 
-def text_stat_metrics(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def text_stat_metrics(docs: DataFrame) -> DataFrame:
     """_calculate_text_stats (detector.py:384-395) as native columns:
     word_count (whitespace-run split, Python str.split semantics —
     `(?U)\\s+` matches the Unicode White_Space set like the simhash lane;
@@ -75,25 +70,25 @@ def text_stat_metrics(
 
     # the per-doc split/aggregate lambdas below run interpreted; fan a
     # one-task scan out first (no-op at real scale)
-    docs = spread(docs, id_col)
+    docs = spread(docs, "doc_id")
     words = F.filter(
-        F.split(F.col(text_col), r"(?U)\s+"), lambda w: F.length(w) > 0
+        F.split(F.col("text"), r"(?U)\s+"), lambda w: F.length(w) > 0
     )
     word_count = F.size(words).cast("double")
-    sentence_count = F.size(F.split(F.col(text_col), r"\.", -1)).cast(
+    sentence_count = F.size(F.split(F.col("text"), r"\.", -1)).cast(
         "double"
     )
     total_word_len = F.aggregate(
         words, F.lit(0), lambda acc, w: acc + F.length(w)
     ).cast("double")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         word_count.alias("word_count"),
         sentence_count.alias("sentence_count"),
         F.when(word_count > 0, total_word_len / word_count)
         .otherwise(F.lit(0.0)).alias("avg_word_length"),
         (word_count / sentence_count).alias("avg_sentence_length"),
-        F.length(F.col(text_col)).cast("double").alias("char_count"),
+        F.length(F.col("text")).cast("double").alias("char_count"),
     )
 
 
@@ -103,37 +98,25 @@ TEXT_STAT_METRICS = [
 ]
 
 
-def statistical_anomalies(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 3.0,
-) -> DataFrame:
+def statistical_anomalies(docs: DataFrame, threshold: float = 3.0) -> DataFrame:
     """detect_statistical_anomalies (detector.py:139-209) corpus-wide:
     the reference's exact five text stats z-scored against the corpus,
     severity per _calculate_severity."""
     return zscore_anomalies(
-        text_stat_metrics(docs, id_col, text_col),
-        TEXT_STAT_METRICS,
-        id_col=id_col,
-        threshold=threshold,
+        text_stat_metrics(docs), TEXT_STAT_METRICS, threshold=threshold
     )
 
 
 def content_anomalies(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 3.0,
     min_cluster_distance: float = 0.7,
     nn_mode: str = "auto",
-    bands: int = 8,
-    rows_per_band: int | None = None,
     auto_brute_max: int = 8192,
 ) -> DataFrame:
     """A1 detect_content_anomalies, reference-FAITHFUL port
-    (detector.py:64-137): for each document, cosine distances to every
-    OTHER document; flag when z = (min−mean)/std exceeds the threshold
+    (detector.py:64-137): for each document (vec_id, embedding),
+    cosine distances to every OTHER document; flag when
+    z = (min−mean)/std exceeds the threshold 3
     (with min ≤ mean this arm is structurally ≤ 0 — the reference's own
     quirk) OR the nearest neighbor is farther than
     ``min_cluster_distance``. Severity from z per _calculate_severity,
@@ -153,13 +136,13 @@ def content_anomalies(
     picks "brute" (exact all-pairs top-1, the oracle lane) when the
     corpus has at most ``auto_brute_max`` vectors (8192 ≈ 67M pair
     evaluations, fine on one executor wave) and "banded" (hyperplane-LSH
-    candidates, conservative error direction — isolation can only be
-    over-reported) above it, so a 100-TB caller gets the sublinear lane
+    candidates over 8 bands, conservative error direction — isolation can
+    only be over-reported) above it, so a 100-TB caller gets the sublinear lane
     without remembering to flip the flag. The moments arm is
     mode-independent either way."""
     v = emb.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").cast("array<double>").alias("v"),
     )
     norm = F.sqrt(
         F.aggregate(F.col("v"), F.lit(0.0), lambda a, x: a + x * x)
@@ -221,10 +204,10 @@ def content_anomalies(
     if nn_mode == "banded":
         from .similarity import hyperplane_bucket, recommended_rows_per_band
 
-        r = rows_per_band or recommended_rows_per_band(n)
+        r = recommended_rows_per_band(n)
         band_keys = [
             hyperplane_bucket(F.col("u"), r, plane_offset=b * r)
-            for b in range(bands)
+            for b in range(8)
         ]
         banded = u.select(
             "_id", "u",
@@ -272,38 +255,34 @@ def content_anomalies(
     return (
         stats.withColumn("z_score", z)
         .where(
-            (F.col("z_score") > threshold)
+            (F.col("z_score") > 3.0)
             | (F.col("min_dist") > min_cluster_distance)
         )
         .withColumn(
             "severity",
-            F.when(F.col("z_score") >= 2 * threshold, "critical")
-            .when(F.col("z_score") >= 1.5 * threshold, "high")
-            .when(F.col("z_score") >= threshold, "medium")
+            F.when(F.col("z_score") >= 6.0, "critical")
+            .when(F.col("z_score") >= 4.5, "high")
+            .when(F.col("z_score") >= 3.0, "medium")
             .otherwise("low"),
         )
         .withColumn(
             "confidence", F.least(F.lit(1.0), F.col("z_score") / 5.0)
         )
         .select(
-            F.col("_id").alias(id_col), "min_dist", "mean_dist",
+            F.col("_id").alias("vec_id"), "min_dist", "mean_dist",
             "std_dist", "z_score", "severity", "confidence",
         )
     )
 
 
-def embedding_anomalies(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 3.0,
-) -> DataFrame:
-    """A1: distance from the corpus centroid, z-scored (detector.py:64-137).
+def embedding_anomalies(emb: DataFrame, threshold: float = 3.0) -> DataFrame:
+    """A1: distance of each (vec_id, embedding) from the corpus centroid,
+    z-scored (detector.py:64-137).
 
     Centroid via element-wise avg (posexplode + groupBy(pos)); distance is a
     native zip_with/aggregate fold — no UDF.
     """
-    v = emb.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"))
+    v = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     centroid = (
         v.select(F.posexplode("v").alias("pos", "x"))
         .groupBy("pos")
@@ -319,7 +298,7 @@ def embedding_anomalies(
         )
     )
     with_dist = v.crossJoin(F.broadcast(centroid)).select(
-        F.col(id_col), dist.alias("dist")
+        "vec_id", dist.alias("dist")
     )
     stats = with_dist.agg(
         F.avg("dist").alias("mean_d"), F.stddev_samp("dist").alias("std_d")
@@ -330,7 +309,7 @@ def embedding_anomalies(
         .withColumn("z_score", F.abs((F.col("dist") - F.col("mean_d")) / F.col("std_d")))
         .where(F.col("z_score") > threshold)
         .withColumn("confidence", F.least(F.lit(1.0), F.col("z_score") / 5.0))
-        .select(id_col, "dist", "z_score", "confidence")
+        .select("vec_id", "dist", "z_score", "confidence")
     )
 
 
@@ -352,17 +331,15 @@ SENSITIVE_KEYWORDS = [
 ]
 
 
-def red_flags(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def red_flags(docs: DataFrame) -> DataFrame:
     """detect_red_flags (:211-319) corpus-wide, fully native: one row
-    per FIRED arm per document — money count > 10 (high, 0.9), date
+    per FIRED arm per (doc_id, text) document — money count > 10 (high, 0.9), date
     count > 15 (medium, 0.8), UNIQUE capitalized-name pairs > 20
     (medium, 0.7), any sensitive keyword (critical, 1.0, score = number
     of distinct keywords present). The reference regex-scans one
     document per call; these are four regexp_extract_all columns in one
     Catalyst pass."""
-    t = F.col(text_col)
+    t = F.col("text")
     money = F.size(
         F.regexp_extract_all(t, F.lit("(?i)" + RED_FLAG_MONEY), F.lit(0))
     )
@@ -381,13 +358,13 @@ def red_flags(
             lambda k: low.contains(k),
         )
     )
-    base = docs.select(F.col(id_col), money.alias("money"),
+    base = docs.select("doc_id", money.alias("money"),
                        dates.alias("dates"), names.alias("names"),
                        kw.alias("kw"))
 
     def arm(cnt, gate, ptype, severity, conf):
         return base.where(gate).select(
-            F.col(id_col),
+            "doc_id",
             F.lit(ptype).alias("pattern_type"),
             cnt.cast("double").alias("score"),
             F.lit(severity).alias("severity"),

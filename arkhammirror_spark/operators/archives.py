@@ -26,8 +26,8 @@ MEMBER_SCHEMA = StructType(
 )
 
 
-def explode_archives(pages: DataFrame, payload_col: str = "html") -> DataFrame:
-    """Archive rows → one row per member (+ one error row per bad archive,
+def explode_archives(pages: DataFrame) -> DataFrame:
+    """Archive rows (url, html payload) → one row per member (+ one error row per bad archive,
     keyed by the archive's url)."""
 
     def _members(url, payload) -> list[dict]:
@@ -39,5 +39,5 @@ def explode_archives(pages: DataFrame, payload_col: str = "html") -> DataFrame:
             for name, data in extract_archive_members(raw)
         ]
 
-    src = pages.select("url", F.col("url").alias("archive_url"), payload_col)
+    src = pages.select("url", F.col("url").alias("archive_url"), "html")
     return explode_lane(src, _members, MEMBER_SCHEMA)

@@ -58,6 +58,10 @@ BLOCK_TAGS = {
 SKIP_TAGS = {"script", "style", "noscript", "template", "svg", "head",
              "iframe", "object"}
 HEADING_TAGS = {"h1", "h2", "h3", "h4", "h5", "h6"}
+# the keep/rescue thresholds select_content and its Python twin share
+MIN_CHARS = 25
+MAX_LINK_DENSITY = 0.33
+RESCUE_MIN_CHARS = 8
 
 NODES_SCHEMA = StructType(
     [
@@ -178,29 +182,24 @@ def flatten_dom(html: str) -> list[dict]:
     return p.rows
 
 
-def select_blocks_py(
-    rows: list[dict],
-    min_chars: int = 25,
-    max_link_density: float = 0.33,
-    rescue_min_chars: int = 8,
-) -> list[dict]:
+def select_blocks_py(rows: list[dict]) -> list[dict]:
     """Pure-python twin of score_nodes + select_content over ONE page's
     node rows — selection only ever looks at a page's own neighbours, so
     per-page python ≡ the url-partitioned window variant (pinned by a
     differential test); the oracle pins use it."""
     base = [
-        (r["text_len"] >= min_chars)
-        and (r["link_text_len"] / max(1, r["text_len"]) <= max_link_density)
+        (r["text_len"] >= MIN_CHARS)
+        and (r["link_text_len"] / max(1, r["text_len"]) <= MAX_LINK_DENSITY)
         for r in rows
     ]
     kept = []
     for i, r in enumerate(rows):
-        ld_ok = r["link_text_len"] / max(1, r["text_len"]) <= max_link_density
+        ld_ok = r["link_text_len"] / max(1, r["text_len"]) <= MAX_LINK_DENSITY
         prev_b = base[i - 1] if i > 0 else False
         next_b = base[i + 1] if i + 1 < len(rows) else False
         rescue = (
             not base[i] and prev_b and next_b
-            and r["text_len"] >= rescue_min_chars and ld_ok
+            and r["text_len"] >= RESCUE_MIN_CHARS and ld_ok
         )
         heading = r["tag"] in HEADING_TAGS and next_b and ld_ok
         if base[i] or rescue or heading:
@@ -208,19 +207,13 @@ def select_blocks_py(
     return kept
 
 
-def main_content_py(
-    html: str, min_chars: int = 25, max_link_density: float = 0.33
-) -> tuple[str, int]:
+def main_content_py(html: str) -> tuple[str, int]:
     """(main_text, n_blocks) for one page — flatten + python selection."""
-    kept = select_blocks_py(
-        flatten_dom(html), min_chars=min_chars, max_link_density=max_link_density
-    )
+    kept = select_blocks_py(flatten_dom(html))
     return "\n\n".join(r["text"] for r in kept), len(kept)
 
 
-def flatten_pages(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def flatten_pages(pages: DataFrame) -> DataFrame:
     """pages(url, html binary|string) → the flattened DOM node table."""
 
     def _nodes(html) -> list[dict]:
@@ -230,7 +223,7 @@ def flatten_pages(
             html = bytes(html).decode("utf-8", "replace")
         return flatten_dom(html)
 
-    return explode_lane(pages.select(url_col, html_col), _nodes, NODES_SCHEMA)
+    return explode_lane(pages.select("url", "html"), _nodes, NODES_SCHEMA)
 
 
 def score_nodes(nodes: DataFrame) -> DataFrame:
@@ -244,23 +237,19 @@ def score_nodes(nodes: DataFrame) -> DataFrame:
     )
 
 
-def select_content(
-    scored: DataFrame,
-    min_chars: int = 25,
-    max_link_density: float = 0.33,
-    rescue_min_chars: int = 8,
-) -> DataFrame:
+def select_content(scored: DataFrame) -> DataFrame:
     """Keep/drop classifier + window smoothing (boilerpipe's sequence rule
     via lag/lead instead of a sequential scan):
 
-    - base keep: text_len ≥ min_chars AND link_density ≤ max_link_density;
-    - rescue: a shorter low-link block BETWEEN two kept blocks is content
-      (short connector paragraphs inside an article);
+    - base keep: text_len ≥ MIN_CHARS AND link_density ≤ MAX_LINK_DENSITY;
+    - rescue: a block of ≥ RESCUE_MIN_CHARS low-link chars BETWEEN two
+      kept blocks is content (short connector paragraphs inside an
+      article);
     - headings: a heading immediately followed by kept content is kept.
     """
     w = Window.partitionBy("url").orderBy("node_idx")
-    base = (F.col("text_len") >= min_chars) & (
-        F.col("link_density") <= max_link_density
+    base = (F.col("text_len") >= MIN_CHARS) & (
+        F.col("link_density") <= MAX_LINK_DENSITY
     )
     df = scored.withColumn("_base", base)
     prev_keep = F.lag("_base", 1, False).over(w)
@@ -269,13 +258,13 @@ def select_content(
         ~F.col("_base")
         & prev_keep
         & next_keep
-        & (F.col("text_len") >= rescue_min_chars)
-        & (F.col("link_density") <= max_link_density)
+        & (F.col("text_len") >= RESCUE_MIN_CHARS)
+        & (F.col("link_density") <= MAX_LINK_DENSITY)
     )
     heading = (
         F.col("tag").isin(*sorted(HEADING_TAGS))
         & next_keep
-        & (F.col("link_density") <= max_link_density)
+        & (F.col("link_density") <= MAX_LINK_DENSITY)
     )
     return df.withColumn("keep", F.col("_base") | rescue | heading).drop("_base")
 
@@ -302,20 +291,7 @@ def main_content(selected: DataFrame) -> DataFrame:
     )
 
 
-def extract_main_content(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-    min_chars: int = 25,
-    max_link_density: float = 0.33,
-) -> DataFrame:
-    """End-to-end: flatten → score → select → join. One Arrow pass + one
-    url-keyed shuffle."""
-    nodes = flatten_pages(pages, url_col, html_col)
-    return main_content(
-        select_content(
-            score_nodes(nodes),
-            min_chars=min_chars,
-            max_link_density=max_link_density,
-        )
-    )
+def extract_main_content(pages: DataFrame) -> DataFrame:
+    """pages(url, html) end-to-end: flatten → score → select → join. One
+    Arrow pass + one url-keyed shuffle."""
+    return main_content(select_content(score_nodes(flatten_pages(pages))))

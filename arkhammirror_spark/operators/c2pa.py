@@ -186,17 +186,16 @@ def sniff_c2pa(raw: bytes) -> str | None:
 # ---------------------------------------------------------------------------
 
 
-def extract_manifest_fields(
-    store: dict, signature_verification_available: bool = False
-) -> dict:
+def extract_manifest_fields(store: dict) -> dict:
     """The post-Reader manifest walk of c2pa_parser.parse(), on an
-    already-decoded manifest store dict."""
+    already-decoded manifest store dict, with no signature verification
+    available (so no signature reads valid)."""
     result = {
         "has_c2pa": True,
         "manifests": [],
         "active_manifest": None,
         "signature_valid": False,
-        "signature_verification_available": signature_verification_available,
+        "signature_verification_available": False,
         "signer": None,
         "timestamp": None,
         "actions": [],
@@ -214,7 +213,7 @@ def extract_manifest_fields(
             result["claim_generator"] = manifest.get("claim_generator")
             if "signature_info" in manifest:
                 sig_info = manifest["signature_info"]
-                result["signature_valid"] = signature_verification_available
+                result["signature_valid"] = False
                 result["signer"] = sig_info.get("issuer")
                 result["timestamp"] = sig_info.get("time")
             for assertion in manifest.get("assertions", []):
@@ -285,20 +284,16 @@ def _read_manifest(raw: bytes) -> str | None:
         return reader.json()
 
 
-def extract_c2pa(
-    media: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Per-media C2PA scan: (media_id, has_c2pa, c2pa_error,
+def extract_c2pa(media: DataFrame) -> DataFrame:
+    """Per-media (media_id, payload) C2PA scan: (media_id, has_c2pa, c2pa_error,
     signature_valid, signer, c2pa_ts, claim_generator, actions_str,
     n_manifests).  `actions_str` joins each action's str() with '|'
     (the interpretation rules only substring-match it). A corrupt manifest
     is not a quarantined row but a finding: it reads has_c2pa false with
     the error in `c2pa_error`, which the interpretation rules consume."""
     src = media.select(
-        F.col(id_col).cast("string").alias("media_id"),
-        F.col(payload_col).alias("payload"),
+        F.col("media_id").cast("string").alias("media_id"),
+        "payload",
     ).repartition(max(media.sparkSession.sparkContext.defaultParallelism, 8))
 
     def _scan(payload) -> list[dict]:

@@ -176,7 +176,6 @@ def intervention_effect(
     edge_rows,
     intervention_node: str,
     target_node: str,
-    adjustment_set: list[str] | None = None,
 ) -> dict:
     """do-calculus estimate (:496-548): mean path strength, confounder
     adjustment set, ±0.2 clipped interval."""
@@ -187,8 +186,7 @@ def intervention_effect(
             "confounders_adjusted": [], "confidence_interval": None,
         }
     confs = identify_confounders(edge_rows, intervention_node, target_node)
-    conf_ids = [c["id"] for c in confs]
-    adjusted = adjustment_set if adjustment_set else conf_ids
+    adjusted = [c["id"] for c in confs]
     effect = sum(p["total_strength"] for p in paths) / len(paths)
     return {
         "estimated_effect": effect,
@@ -203,31 +201,25 @@ def intervention_effect(
 # --- distributed Kahn layers ---------------------------------------------
 
 
-def causal_ordering_distributed(
-    edges: DataFrame,
-    nodes: DataFrame | None = None,
-    src_col: str = "cause",
-    dst_col: str = "effect",
-    max_rounds: int = 10_000,
-) -> DataFrame:
+def causal_ordering_distributed(edges: DataFrame) -> DataFrame:
     """Kahn peeling as join-per-round layer assignment: round L removes
     every zero-in-degree node and labels it layer L, so for every edge
     layer(cause) < layer(effect) — the distributed witness of a valid
     topological order (any per-layer tiebreak yields one). Nodes left
     after the loop sit on or downstream of a cycle and get layer −1;
     the graph is a DAG iff none do. Each round is one anti-join + one
-    checkpointed subtraction — the CC/PageRank lineage discipline.
-    Returns (node, layer)."""
+    checkpointed subtraction — the CC/PageRank lineage discipline; at
+    most 10 000 rounds. Takes (cause, effect) edges, returns (node,
+    layer)."""
     e = edges.select(
-        F.col(src_col).alias("c"), F.col(dst_col).alias("x")
+        F.col("cause").alias("c"), F.col("effect").alias("x")
     ).distinct().localCheckpoint(eager=True)
     all_nodes = (
-        nodes.select(F.col("node").alias("n"))
-        if nodes is not None
-        else e.select(F.col("c").alias("n")).unionByName(
-            e.select(F.col("x").alias("n"))
-        ).distinct()
-    ).localCheckpoint(eager=True)
+        e.select(F.col("c").alias("n"))
+        .unionByName(e.select(F.col("x").alias("n")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
 
     # Adaptive small-graph fast path (the CC/LPA cap pattern): the layer
     # of a node — the synchronous round at which its in-degree reaches
@@ -250,7 +242,7 @@ def causal_ordering_distributed(
             frontier = sorted(n for n in node_set if indeg[n] == 0)
             lvl = 0
             remaining = set(node_set)
-            while frontier and lvl < max_rounds:
+            while frontier and lvl < 10_000:
                 nxt: list[str] = []
                 for n in frontier:
                     layers_d[n] = lvl
@@ -265,7 +257,7 @@ def causal_ordering_distributed(
             if not frontier:
                 # loop ended with no zero-in-degree node left: everything
                 # remaining is on/downstream of a cycle (-1, like the
-                # distributed arm). A max_rounds exhaustion instead leaves
+                # distributed arm). A round-cap exhaustion instead leaves
                 # the rest unlabeled, also like the distributed arm.
                 for n in remaining:
                     layers_d[n] = -1
@@ -281,7 +273,7 @@ def causal_ordering_distributed(
     spark = edges.sparkSession
     layers = spark.createDataFrame([], "node string, layer long")
     layer = 0
-    while layer < max_rounds:
+    while layer < 10_000:
         n_left = remaining_nodes.count()
         if n_left == 0:
             break

@@ -36,37 +36,36 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from .contradictions import candidate_claim_pairs
 
+# find_similar_claims' word-Jaccard cut
+_SIMILAR_THRESHOLD = 0.8
 
-def _ranked_matches(
-    pairs: DataFrame,
-    score_col: str,
-    threshold: float,
-    limit: int,
-) -> DataFrame:
-    """Symmetrize unordered (id_a < id_b) pairs into per-claim match lists:
-    score ≥ threshold, sorted score-desc (matched-id tiebreak for
-    determinism — the reference's sort is stable on DB order, which has no
-    cross-engine meaning), truncated to ``limit`` per claim (shard.py:924),
-    tagged fuzzy/review like the reference's fallback arm.
+
+def _ranked_matches(pairs: DataFrame) -> DataFrame:
+    """Symmetrize unordered (id_a < id_b) `similarity` pairs into
+    per-claim match lists: score ≥ _SIMILAR_THRESHOLD, sorted score-desc
+    (matched-id tiebreak for determinism — the reference's sort is stable
+    on DB order, which has no cross-engine meaning), truncated to 10 per
+    claim (shard.py:924), tagged fuzzy/review like the reference's
+    fallback arm.
     """
     sym = pairs.select(
         F.col("id_a").alias("claim_id"),
         F.col("id_b").alias("matched_claim_id"),
-        F.col(score_col).alias("similarity_score"),
+        F.col("similarity").alias("similarity_score"),
     ).unionByName(
         pairs.select(
             F.col("id_b").alias("claim_id"),
             F.col("id_a").alias("matched_claim_id"),
-            F.col(score_col).alias("similarity_score"),
+            F.col("similarity").alias("similarity_score"),
         )
     )
     w = Window.partitionBy("claim_id").orderBy(
         F.desc("similarity_score"), F.asc("matched_claim_id")
     )
     return (
-        sym.where(F.col("similarity_score") >= threshold)
+        sym.where(F.col("similarity_score") >= _SIMILAR_THRESHOLD)
         .withColumn("match_rank", F.row_number().over(w))
-        .where(F.col("match_rank") <= limit)
+        .where(F.col("match_rank") <= 10)
         .withColumn("match_type", F.lit("fuzzy"))
         .withColumn("suggested_action", F.lit("review"))
         .select(
@@ -76,44 +75,35 @@ def _ranked_matches(
     )
 
 
-def similar_claims(
-    claims: DataFrame,
-    id_col: str = "claim_id",
-    text_col: str = "claim_text",
-    threshold: float = 0.8,
-    limit: int = 10,
-    df_cap: int | None = None,
-) -> DataFrame:
-    """Corpus-wide ``find_similar_claims`` fallback arm (shard.py:909-922):
-    word-set Jaccard ≥ threshold, fuzzy/review, top-``limit`` per claim.
+def similar_claims(claims: DataFrame, df_cap: int | None = None) -> DataFrame:
+    """Corpus-wide ``find_similar_claims`` fallback arm (shard.py:909-922)
+    over (claim_id, claim_text): word-set Jaccard ≥ 0.8, fuzzy/review,
+    top-10 per claim.
 
     ``candidate_claim_pairs`` computes the exact ``_simple_similarity``
     word-Jaccard over every candidate's FULL word sets — only candidate
     GENERATION is blocked (rare-token ∪ masked-fingerprint), with the
-    recall contract documented in operators.contradictions. At the default
-    threshold 0.8 a qualifying pair shares ≥ 80% of its vocabulary, so a
+    recall contract documented in operators.contradictions. At threshold
+    0.8 a qualifying pair shares ≥ 80% of its vocabulary, so a
     miss requires every shared token to sit above the DF cap AND the
     masked fingerprints to differ — boilerplate-only near-identical pairs
     block through the fingerprint channel by construction.
     """
     pairs = candidate_claim_pairs(
-        claims, id_col=id_col, text_col=text_col,
-        threshold=threshold, df_cap=df_cap,
+        claims, threshold=_SIMILAR_THRESHOLD, df_cap=df_cap
     )
-    return _ranked_matches(pairs, "similarity", threshold, limit)
+    return _ranked_matches(pairs)
 
 
 def merge_claims(
     claims: DataFrame,
     merge_plan: DataFrame,
     evidence: DataFrame | None = None,
-    id_col: str = "claim_id",
-    entity_col: str = "entity_ids",
 ) -> dict[str, DataFrame]:
     """Batch ``merge_claims`` (shard.py:926-983) over ALL merge groups.
 
-    Inputs: ``claims`` keyed by ``id_col`` with optional ``status`` and an
-    ``entity_col`` array of linked entity ids; ``merge_plan`` =
+    Inputs: ``claims`` keyed by ``claim_id`` with optional ``status`` and
+    an ``entity_ids`` array of linked entity ids; ``merge_plan`` =
     (primary_claim_id, member_id) rows — e.g.
     :func:`operators.dedup.duplicate_groups` output renamed;
     ``evidence`` keyed by ``evidence_id`` with ``claim_id`` and
@@ -145,8 +135,8 @@ def merge_claims(
         .distinct()
     )
 
-    c = claims.withColumnRenamed(id_col, "_cid")
-    ent = F.col(entity_col) if entity_col in claims.columns else F.array()
+    c = claims.withColumnRenamed("claim_id", "_cid")
+    ent = F.col("entity_ids") if "entity_ids" in claims.columns else F.array()
 
     # evidence re-pointing: one left join against the member->primary map
     if evidence is not None:
@@ -215,7 +205,7 @@ def merge_claims(
     member_states = (
         c.join(members, "_cid")
         .select(
-            F.col("_cid").alias(id_col),
+            F.col("_cid").alias("claim_id"),
             F.lit("retracted").alias("status"),
             F.concat(
                 F.lit("Merged into "), F.col("_into").cast("string")
@@ -257,7 +247,7 @@ def merge_claims(
             .withColumn("refuting_count", F.lit(None))
         )
     primary_states = primaries.select(
-        F.col("_cid").alias(id_col),
+        F.col("_cid").alias("claim_id"),
         "status",
         F.lit("").alias("notes"),
         F.lit("primary").alias("merge_role"),

@@ -26,12 +26,10 @@ input rows carry an `ord` column — the reference list index — and
 
 Scale notes: the word-join arm has no stopword filter because the
 reference has none — two shared "the"/"a" words make events similar. At
-corpus scale that is the hot-shingle shape; `word_df_cap` (default None =
-full parity) applies the df-cap-with-audit pattern from
-`dedup.ngram_jaccard_pairs` when the corpus demands it. The gap arm sorts
-ONE timeline's events in one partition — a timeline is a bounded,
-per-case artifact in the reference (its whole event list sat in one
-Python process); pass `group_col` to run many timelines in parallel.
+corpus scale that is the hot-shingle shape. The gap arm treats the whole
+input as ONE timeline — a timeline is a bounded, per-case artifact in the
+reference (its whole event list sat in one Python process) — and still
+runs distributed. Dates match exactly (the reference's tolerance_days=0).
 """
 
 from __future__ import annotations
@@ -42,8 +40,6 @@ from .driver_lane import local_frame
 
 MARKERS_LATER = ["later", "after", "following", "next", "then"]
 
-ALL_CONFLICT_TYPES = ["contradiction", "inconsistency", "gap", "overlap"]
-
 _OUT_COLS = [
     "conflict_type", "severity", "event1_id", "event2_id", "doc1", "doc2",
     "entity_id", "description", "suggested_resolution", "date_diff_days",
@@ -51,9 +47,7 @@ _OUT_COLS = [
 ]
 
 
-def _prep(
-    events: DataFrame, passthrough: tuple[str, ...] = ()
-) -> DataFrame:
+def _prep(events: DataFrame) -> DataFrame:
     cols = {
         "ord": F.col("ord").cast("long"),
         "id": F.col("id").cast("string"),
@@ -72,10 +66,7 @@ def _prep(
             else F.lit(None).cast("long")
         ),
     }
-    ev = events.select(
-        *[c.alias(n) for n, c in cols.items()],
-        *[F.col(p) for p in passthrough],
-    )
+    ev = events.select(*[c.alias(n) for n, c in cols.items()])
     ranks = ev.groupBy("document_id").agg(F.min("ord").alias("doc_rank"))
     # slim frame reused by every arm; lazy checkpoint keeps contract
     # schema analysis free while the candidate joins share one compute
@@ -108,15 +99,10 @@ def _severity(conf1, conf2, dd):
     )
 
 
-def detect_contradictions(
-    events: DataFrame,
-    tolerance_days: int = 0,
-    day_window: int = 7,
-    min_shared_words: int = 2,
-    word_df_cap: int | None = None,
-) -> DataFrame:
+def detect_contradictions(events: DataFrame) -> DataFrame:
     """Cross-document similar-event pairs with mismatched dates
-    (conflicts.py:72-128). Pair orientation: event1 belongs to the doc
+    (conflicts.py:72-128); similar = a shared entity, ≥ 2 shared words or
+    dates within 7 days. Pair orientation: event1 belongs to the doc
     whose first event appears earlier in the input order (`doc_rank`)."""
     ev = _prep(events)
 
@@ -140,13 +126,6 @@ def detect_contradictions(
             F.array_distinct(F.split(F.lower(F.col("text")), r"\s+"))
         ).alias("w"),
     ).where(F.length("w") > 0)
-    if word_df_cap is not None:
-        hot = (
-            words.groupBy("w")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .where(F.col("df") > word_df_cap)
-        )
-        words = words.join(hot.select("w"), "w", "left_anti")
     c2 = (
         words.alias("a")
         .join(
@@ -158,19 +137,18 @@ def detect_contradictions(
             F.col("a.ord").alias("ord_a"), F.col("b.ord").alias("ord_b")
         )
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared_words)
+        .where(F.col("n_shared") >= 2)
         .select("ord_a", "ord_b")
     )
 
-    # --- candidate arm 3: dates within `day_window` (:345-348) — banded
+    # --- candidate arm 3: dates within 7 days (:345-348) — banded
     # join on 8-day buckets with ±1 probing (window 7 < bucket width 8 ⇒
     # a qualifying pair differs by at most one bucket; each pair matches
     # exactly one probe, so no within-arm duplicates)
-    width = day_window + 1
     days = F.datediff(F.col("date_start"), F.lit("1970-01-01").cast("date"))
     keyed = ev.select(
         "ord", "doc_rank", days.alias("days"),
-        F.floor(days / width).alias("bkt"),
+        F.floor(days / 8).alias("bkt"),
     )
     probes = keyed.select(
         "ord", "doc_rank", "days",
@@ -185,7 +163,7 @@ def detect_contradictions(
             (F.col("a.bkt") == F.col("b.bkt"))
             & (F.col("a.doc_rank") < F.col("b.doc_rank")),
         )
-        .where(F.abs(F.col("a.days") - F.col("b.days")) <= day_window)
+        .where(F.abs(F.col("a.days") - F.col("b.days")) <= 7)
         .select(F.col("a.ord").alias("ord_a"), F.col("b.ord").alias("ord_b"))
     )
 
@@ -197,7 +175,7 @@ def detect_contradictions(
     return (
         cands.join(a, cands.ord_a == F.col("x.ord"))
         .join(b, cands.ord_b == F.col("y.ord"))
-        .where(dd > tolerance_days)  # NOT _dates_match (:353-369)
+        .where(dd > 0)  # NOT _dates_match (:353-369)
         .select(
             F.lit("contradiction").alias("conflict_type"),
             _severity(
@@ -271,57 +249,6 @@ def detect_inconsistencies(events: DataFrame) -> DataFrame:
     )
 
 
-def detect_gaps(
-    events: DataFrame, group_col: str | None = None
-) -> DataFrame:
-    """Chronological gaps > 3× the median gap and > 30 days
-    (conflicts.py:200-257). The median is the reference's exact pick:
-    sorted_gaps[len(gaps) // 2]. Fewer than 3 events → no conflicts.
-
-    With no `group_col` the whole input is ONE timeline — the reference's
-    call shape (one project per scan), which is inherently a total order.
-    That arm runs DISTRIBUTED anyway (r8): the lag runs per range
-    partition with per-partition boundary rows stitched on the driver
-    (bounded by the partition count), and the median is an exact
-    distributed order-statistic selection — no single-partition
-    WindowExec anywhere. At corpus scale pass `group_col` (project/case
-    id) for the fully windowed per-group form."""
-    # _prep projects events down to a fixed column set, so a caller-named
-    # group column must be computed BEFORE the projection and carried
-    # through it (a post-_prep F.col(group_col) would be unresolvable).
-    if group_col and group_col in events.columns:
-        ev = _prep(
-            events.withColumn("_g", F.col(group_col)), passthrough=("_g",)
-        )
-        w = Window.partitionBy("_g").orderBy("date_start", "ord")
-        adj = (
-            ev.withColumn(
-                "n_ev", F.count(F.lit(1)).over(Window.partitionBy("_g"))
-            )
-            .withColumn("prev_id", F.lag("id").over(w))
-            .withColumn("prev_date", F.lag("date_start").over(w))
-            .withColumn("prev_doc", F.lag("document_id").over(w))
-            .where(F.col("prev_id").isNotNull() & (F.col("n_ev") >= 3))
-            .withColumn(
-                "gap_days",
-                F.datediff(
-                    F.col("date_start"), F.col("prev_date")
-                ).cast("long"),
-            )
-        )
-        gw = Window.partitionBy("_g").orderBy("gap_days")
-        med = (
-            adj.withColumn("_rn", F.row_number().over(gw))
-            .withColumn(
-                "_n", F.count(F.lit(1)).over(Window.partitionBy("_g"))
-            )
-            .where(F.col("_rn") == F.floor(F.col("_n") / 2) + 1)
-            .select("_g", F.col("gap_days").alias("median_gap"))
-        )
-        return _gap_select(adj.join(med, "_g"))
-    return _detect_gaps_global(_prep(events))
-
-
 def _gap_select(adj: DataFrame) -> DataFrame:
     return adj.where(
         (F.col("gap_days") > F.col("median_gap") * 3)
@@ -355,8 +282,14 @@ _GAP_SCHEMA = (
 )
 
 
-def _detect_gaps_global(ev: DataFrame) -> DataFrame:
-    """Ungrouped (single-timeline) gap arm, distributed:
+def detect_gaps(events: DataFrame) -> DataFrame:
+    """Chronological gaps > 3× the median gap and > 30 days
+    (conflicts.py:200-257). The median is the reference's exact pick:
+    sorted_gaps[len(gaps) // 2]. Fewer than 3 events → no conflicts.
+
+    The whole input is ONE timeline — the reference's call shape (one
+    project per scan), which is inherently a total order — and the arm
+    runs distributed (no single-partition WindowExec anywhere):
 
     1. range-partition by the timeline order (date_start, ord) and PIN the
        assignment with an eager localCheckpoint;
@@ -368,11 +301,12 @@ def _detect_gaps_global(ev: DataFrame) -> DataFrame:
        partition the gaps, locate the target partition by per-partition
        counts, row_number only within it.
 
-    Identical to the windowed form: (date_start, ord) is a total order
+    Identical to a global window: (date_start, ord) is a total order
     (ord is the unique reference list index), so per-partition lag +
     boundary stitching reproduces the global lag row-for-row, and the
     selected gap value is the same order statistic regardless of how ties
     are split across partitions."""
+    ev = _prep(events)
     spark = ev.sparkSession
     nparts = max(2, spark.sparkContext.defaultParallelism)
     parted = (
@@ -466,31 +400,22 @@ def _detect_gaps_global(ev: DataFrame) -> DataFrame:
     )
 
 
-def detect_overlaps(
-    events: DataFrame, tolerance_days: int = 0
-) -> DataFrame:
-    """Cross-document events sharing an entity on matching dates
+def detect_overlaps(events: DataFrame) -> DataFrame:
+    """Cross-document events sharing an entity on the same date
     (conflicts.py:259-319) — one conflict PER SHARED ENTITY per pair,
     exactly like the reference's per-entity loop; pair orientation is
-    input order (ord). tolerance_days=0 is a plain (entity, date)
-    equi-join; a positive tolerance uses the banded-date join."""
+    input order (ord). A plain (entity, date) equi-join."""
     ev = _prep(events)
     ent = ev.select(
         "ord", "id", "document_id", "date_start", "text", "confidence",
         F.explode("entities").alias("e"),
     )
     a, b = ent.alias("a"), ent.alias("b")
-    base_cond = (
+    cond = (
         (F.col("a.e") == F.col("b.e"))
         & (F.col("a.ord") < F.col("b.ord"))
+        & (F.col("a.date_start") == F.col("b.date_start"))
     )
-    if tolerance_days == 0:
-        cond = base_cond & (F.col("a.date_start") == F.col("b.date_start"))
-    else:
-        cond = base_cond & (
-            F.abs(F.datediff(F.col("a.date_start"), F.col("b.date_start")))
-            <= tolerance_days
-        )
     return (
         a.join(b, cond)
         .where(F.col("a.document_id") != F.col("b.document_id"))
@@ -515,34 +440,14 @@ def detect_overlaps(
     )
 
 
-def detect_temporal_conflicts(
-    events: DataFrame,
-    tolerance_days: int = 0,
-    conflict_types: list[str] | None = None,
-    group_col: str | None = None,
-    word_df_cap: int | None = None,
-) -> DataFrame:
+def detect_temporal_conflicts(events: DataFrame) -> DataFrame:
     """All four arms unioned into one frame (detect_conflicts,
     conflicts.py:38-70). Input columns: ord (reference list index), id,
     document_id, text, date_start, confidence[, entities array<string>]
     [, pos (span start; null = no span)]."""
-    types = conflict_types or ALL_CONFLICT_TYPES
-    parts = []
-    if "contradiction" in types:
-        parts.append(
-            _pad(
-                detect_contradictions(
-                    events, tolerance_days, word_df_cap=word_df_cap
-                )
-            )
-        )
-    if "inconsistency" in types:
-        parts.append(_pad(detect_inconsistencies(events)))
-    if "gap" in types:
-        parts.append(_pad(detect_gaps(events, group_col)))
-    if "overlap" in types:
-        parts.append(_pad(detect_overlaps(events, tolerance_days)))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return (
+        _pad(detect_contradictions(events))
+        .unionByName(_pad(detect_inconsistencies(events)))
+        .unionByName(_pad(detect_gaps(events)))
+        .unionByName(_pad(detect_overlaps(events)))
+    )

@@ -65,14 +65,10 @@ def _jaccard(a, b):
 
 
 def candidate_claim_pairs(
-    claims: DataFrame,
-    id_col: str = "claim_id",
-    text_col: str = "claim_text",
-    threshold: float = 0.5,
-    df_cap: int | None = None,
+    claims: DataFrame, threshold: float = 0.5, df_cap: int | None = None
 ) -> DataFrame:
-    """Claim pairs with word-Jaccard ≥ threshold (the keyword candidate path,
-    detector.py:432-446).
+    """(claim_id, claim_text) pairs with word-Jaccard ≥ threshold (the
+    keyword candidate path, detector.py:432-446).
 
     Candidates = pairs sharing at least one RARE token (document frequency ≤
     df_cap, default max(10, 1% of claims)) UNION pairs sharing a masked
@@ -82,9 +78,9 @@ def candidate_claim_pairs(
     Similarity is then the exact word-Jaccard over the full word sets.
     """
     toks = claims.select(
-        F.col(id_col).alias("cid"),
-        F.col(text_col).alias("ctext"),
-        _word_set(F.col(text_col)).alias("ws"),
+        F.col("claim_id").alias("cid"),
+        F.col("claim_text").alias("ctext"),
+        _word_set(F.col("claim_text")).alias("ws"),
     )
     ex = toks.select("cid", F.explode("ws").alias("w"))
 
@@ -116,7 +112,7 @@ def candidate_claim_pairs(
 
     # channel 2: masked-fingerprint blocking (one row per claim, no skew key)
     masked_ws = _word_set(
-        F.regexp_replace(F.lower(F.col(text_col)), _NUM_RE, "NUM")
+        F.regexp_replace(F.lower(F.col("claim_text")), _NUM_RE, "NUM")
     )
     fp = F.concat_ws(
         " ",
@@ -124,7 +120,7 @@ def candidate_claim_pairs(
             F.array_except(masked_ws, F.array(*[F.lit(m) for m in MARKER_TOKENS]))
         ),
     )
-    fps = claims.select(F.col(id_col).alias("cid"), fp.alias("fp")).where(
+    fps = claims.select(F.col("claim_id").alias("cid"), fp.alias("fp")).where(
         F.length("fp") > 0
     )
     cand_fp = (
@@ -197,13 +193,5 @@ def verify_contradictions(pairs: DataFrame) -> DataFrame:
     )
 
 
-def detect_contradictions(
-    claims: DataFrame,
-    id_col: str = "claim_id",
-    text_col: str = "claim_text",
-    threshold: float = 0.5,
-    df_cap: int | None = None,
-) -> DataFrame:
-    return verify_contradictions(
-        candidate_claim_pairs(claims, id_col, text_col, threshold, df_cap)
-    )
+def detect_contradictions(claims: DataFrame) -> DataFrame:
+    return verify_contradictions(candidate_claim_pairs(claims))

@@ -21,11 +21,10 @@ Spark-first shape (no driver-side vectors, no per-row Python):
   exact at any n whose products stay under 2^53, i.e. every test scale).
 - pair candidates come from a self-equi-join of the DISTINCT slim
   (entity, doc) frame on doc — shuffle keyed on doc_id, never all-pairs;
-  restricting to an explicit entity list or `top_k` bounds per-doc fanout
-  to K^2 and lets the per-entity count frames broadcast.
-- the reference's |union| < 2 degenerate branch (score 1.0, type
-  'co_occurrence') is a `when` on the broadcast 1-row stats frame, not a
-  driver-side count.
+  `top_k` bounds per-doc fanout to K^2 and lets the per-entity count
+  frames broadcast.
+- pairs need 2 common documents (the reference's min_occurrences), so
+  the reference's |union| < 2 degenerate branch cannot fire.
 
 The reference sorts by |r| descending (shard.py:803); deterministic
 tie-breaks on the pair names are added so LIMIT-ed outputs are stable.
@@ -35,7 +34,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .driver_lane import local_frame
 
 _D = "double"
 
@@ -87,39 +85,27 @@ def _describe(r, c):
 
 def entity_correlations(
     mentions: DataFrame,
-    doc_col: str = "doc_id",
     entity_col: str = "entity_text",
-    entities: list[str] | None = None,
     top_k: int | None = None,
-    min_occurrences: int = 2,
 ) -> DataFrame:
     """(entity_a, entity_b, correlation_score, co_occurrence_count,
     correlation_type, description, n_docs) — one row per entity pair with
-    >= min_occurrences common documents, ordered strongest-|r| first.
+    >= 2 common documents (doc_id), ordered strongest-|r| first. Two
+    common documents imply |union docs| >= 2, so the reference's
+    single-document branch (shard.py:722-745) never fires.
 
-    `entities` restricts to an explicit id list (the reference's request
-    shape); `top_k` instead keeps the K most document-frequent entities
-    (ties broken by name).  Either bound makes the count-side joins
-    broadcastable; with neither, the joins shuffle on the entity key.
+    `top_k` keeps the K most document-frequent entities (ties broken by
+    name), which makes the count-side joins broadcastable; without it,
+    the joins shuffle on the entity key.
     """
-    if min_occurrences < 1:
-        raise ValueError("min_occurrences must be >= 1 (zero-common pairs "
-                         "never materialize from the doc-keyed join)")
     occ = (
         mentions.select(
-            F.col(entity_col).alias("e"), F.col(doc_col).alias("d")
+            F.col(entity_col).alias("e"), F.col("doc_id").alias("d")
         )
         .distinct()
     )
-    bounded = entities is not None or top_k is not None
-    if entities is not None:
-        # explicit schema: an empty entity list must yield an empty
-        # result, not a schema-inference ValueError
-        elist = local_frame(
-            occ.sparkSession, [(e,) for e in entities], "e string"
-        )
-        occ = occ.join(F.broadcast(elist), "e", "left_semi")
-    elif top_k is not None:
+    bounded = top_k is not None
+    if top_k is not None:
         top = (
             occ.groupBy("e")
             .agg(F.count(F.lit(1)).alias("dc"))
@@ -143,7 +129,7 @@ def entity_correlations(
         .where(F.col("entity_a") < F.col("entity_b"))
         .groupBy("entity_a", "entity_b")
         .agg(F.count(F.lit(1)).alias("c"))
-        .where(F.col("c") >= min_occurrences)
+        .where(F.col("c") >= 2)
     )
     j = (
         pairs.join(
@@ -160,21 +146,14 @@ def entity_correlations(
     )
     r = _pearson_from_counts(F.col("n"), F.col("a_cnt"), F.col("b_cnt"),
                              F.col("c"))
-    degenerate = F.col("n") < 2  # shard.py:722-745
-    score = F.when(degenerate, F.lit(1.0)).otherwise(r)
-    ctype = F.when(degenerate, F.lit("co_occurrence")).otherwise(_classify(r))
-    desc = F.when(
-        degenerate,
-        F.format_string("Found in %d common documents", F.col("c")),
-    ).otherwise(_describe(r, F.col("c")))
     return (
         j.select(
             "entity_a",
             "entity_b",
-            score.alias("correlation_score"),
+            r.alias("correlation_score"),
             F.col("c").cast("long").alias("co_occurrence_count"),
-            ctype.alias("correlation_type"),
-            desc.alias("description"),
+            _classify(r).alias("correlation_type"),
+            _describe(r, F.col("c")).alias("description"),
             F.col("n").cast("long").alias("n_docs"),
         )
         .orderBy(F.abs(F.col("correlation_score")).desc(),

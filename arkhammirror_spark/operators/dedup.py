@@ -29,14 +29,16 @@ from pyspark.sql import DataFrame, Window, functions as F
 # < 2^62, safely inside int64 — ANSI-mode sessions (Spark 4 default) would
 # throw ARITHMETIC_OVERFLOW on anything wider.
 _P = (1 << 31) - 1
+# the Jaccard cut both near-dup lanes and their DuckDB oracles apply
+JACCARD_THRESHOLD = 0.8
 
 
-def _hash_params(k: int, seed: int = 7) -> list[tuple[int, int]]:
-    """Deterministic (a, b) pairs for the K permutation hashes."""
+def _hash_params() -> list[tuple[int, int]]:
+    """Deterministic (a, b) pairs for the 128 permutation hashes."""
     import random
 
-    rng = random.Random(seed)
-    return [(rng.randrange(1, _P), rng.randrange(0, _P)) for _ in range(k)]
+    rng = random.Random(7)
+    return [(rng.randrange(1, _P), rng.randrange(0, _P)) for _ in range(128)]
 
 
 def exact_dedup(df: DataFrame, key_col: str, id_col: str) -> DataFrame:
@@ -48,23 +50,20 @@ def exact_dedup(df: DataFrame, key_col: str, id_col: str) -> DataFrame:
     )
 
 
-def shingles(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
-    """Distinct word n-gram shingles per document — native (split + transform)."""
-    words = F.split(F.lower(F.col(text_col)), r"\s+")
+def shingles(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Distinct word 3-gram shingles of each document's `text` — native
+    (split + transform)."""
+    words = F.split(F.lower(F.col("text")), r"\s+")
     grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
-        lambda i: F.array_join(F.slice(words, i + 1, n), " "),
+        F.sequence(F.lit(0), F.greatest(F.size(words) - 3, F.lit(0))),
+        lambda i: F.array_join(F.slice(words, i + 1, 3), " "),
     )
     return df.select(
         F.col(id_col), F.explode(F.array_distinct(grams)).alias("shingle")
     ).where(F.length("shingle") > 0)
 
 
-def shingle_hashes(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
+def shingle_hashes(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, h) rows: the RAW 64-bit xxhash64 of each distinct shingle.
 
     This is the SLIM frame the near-dup operators share: two longs per
@@ -81,22 +80,20 @@ def shingle_hashes(
     """
     from .spread import spread
 
-    return shingles(spread(df, id_col), id_col, text_col, n).select(
+    return shingles(spread(df, id_col), id_col).select(
         F.col(id_col), F.xxhash64(F.col("shingle")).alias("h")
     )
 
 
-def minhash_signatures(
-    sh: DataFrame, id_col: str = "doc_id", k: int = 128, seed: int = 7
-) -> DataFrame:
-    """K-element minhash signature per doc from a (id, shingle) or (id, h)
-    frame.
+def minhash_signatures(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """128-element minhash signature per doc from a (id, shingle) or
+    (id, h) frame.
 
-    One pass: each of the K permutation functions is min over (a*h + b)
-    mod p, computed as K aggregate exprs — map-side partial min keeps the
-    shuffle at K longs per doc.
+    One pass: each of the 128 permutation functions is min over (a*h + b)
+    mod p, computed as 128 aggregate exprs — map-side partial min keeps the
+    shuffle at 128 longs per doc.
     """
-    params = _hash_params(k, seed)
+    params = _hash_params()
     # Fold the 64-bit equality key into [0, p) here, where the mod-p range
     # is needed for overflow-free (a*h + b) mod p under ANSI. pmod (not
     # abs % p) — abs(Long.MinValue) throws ARITHMETIC_OVERFLOW in ANSI mode.
@@ -112,23 +109,22 @@ def minhash_signatures(
     sig = base.groupBy(id_col).agg(*aggs)
     return sig.select(
         F.col(id_col),
-        F.array(*[F.col(f"mh_{i}") for i in range(k)]).alias("signature"),
+        F.array(*[F.col(f"mh_{i}") for i in range(len(params))]).alias("signature"),
     )
 
 
-def _banded_buckets(
-    sigs: DataFrame, id_col: str, bands: int, rows: int
-) -> DataFrame:
+def _banded_buckets(sigs: DataFrame, id_col: str) -> DataFrame:
+    """32 bands of 4 signature rows each."""
     return sigs.select(
         F.col(id_col),
         F.posexplode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(31)),
                 lambda bnd: F.xxhash64(
                     F.concat_ws(
                         ",",
                         F.transform(
-                            F.slice(F.col("signature"), bnd * rows + 1, rows),
+                            F.slice(F.col("signature"), bnd * 4 + 1, 4),
                             lambda x: x.cast("string"),
                         ),
                     )
@@ -139,14 +135,10 @@ def _banded_buckets(
 
 
 def lsh_candidate_pairs(
-    sigs: DataFrame,
-    id_col: str = "doc_id",
-    bands: int = 32,
-    rows: int = 4,
-    bucket_cap: int = 5000,
+    sigs: DataFrame, id_col: str = "doc_id", bucket_cap: int = 5000
 ) -> DataFrame:
-    """Band the signature; docs sharing any band bucket become candidates
-    -> (id_a, id_b, truncated).
+    """Band the 128-long signature into 32 bands of 4 rows; docs sharing
+    any band bucket become candidates -> (id_a, id_b, truncated).
 
     Hot-bucket guard: a pathological band bucket (thousands of
     near-identical boilerplate pages surviving exact dedup) would emit
@@ -156,24 +148,19 @@ def lsh_candidate_pairs(
     so a bucket's join fan-out is bounded by bucket_cap^2 while every
     surviving member still pairs with every other (near-identical pages
     collapse to the same keeper set either way). `truncated` flags pairs
-    whose every co-occurrence was in a capped bucket. bucket_cap=None
-    disables the guard entirely."""
-    banded = _banded_buckets(sigs, id_col, bands, rows)
-    if bucket_cap is not None:
-        w = Window.partitionBy("band", "bucket").orderBy(id_col)
-        banded = (
-            banded.withColumn("_rn", F.row_number().over(w))
-            .withColumn(
-                "_capped",
-                F.count(F.lit(1)).over(
-                    Window.partitionBy("band", "bucket")
-                ) > bucket_cap,
-            )
-            .where(F.col("_rn") <= bucket_cap)
-            .drop("_rn")
+    whose every co-occurrence was in a capped bucket."""
+    w = Window.partitionBy("band", "bucket").orderBy(id_col)
+    banded = (
+        _banded_buckets(sigs, id_col)
+        .withColumn("_rn", F.row_number().over(w))
+        .withColumn(
+            "_capped",
+            F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
+            > bucket_cap,
         )
-    else:
-        banded = banded.withColumn("_capped", F.lit(False))
+        .where(F.col("_rn") <= bucket_cap)
+        .drop("_rn")
+    )
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -196,22 +183,12 @@ def lsh_candidate_pairs(
     )
 
 
-def verified_neardup_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    k: int = 128,
-    bands: int = 32,
-    rows: int = 4,
-    threshold: float = 0.8,
-    bucket_cap: int = 5000,
-) -> DataFrame:
-    """MinHash-LSH candidates verified with exact Jaccard ≥ threshold.
+def verified_neardup_pairs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """MinHash-LSH candidates verified with exact Jaccard ≥
+    JACCARD_THRESHOLD.
 
-    `bucket_cap` forwards to lsh_candidate_pairs' hot-bucket guard; a
-    capped bucket loses its kept-x-dropped pairs too (bounded recall by
-    design — disable with bucket_cap=None).
+    lsh_candidate_pairs' hot-bucket guard (5000 rows) applies; a capped
+    bucket loses its kept-x-dropped pairs too (bounded recall by design).
 
     Storage discipline (CLAUDE.md invariant 5): the RAW shingle frame is
     ~n× the corpus text and is never cached. Instead the slim HASHED frame
@@ -221,9 +198,8 @@ def verified_neardup_pairs(
     difference at sf0.1). At 100 TB scale, swap localCheckpoint for a
     storage checkpoint (write-then-pruned-read) of the same slim table.
     """
-    sh = shingle_hashes(df, id_col, text_col, n).localCheckpoint(eager=True)
-    sigs = minhash_signatures(sh, id_col, k)
-    cands = lsh_candidate_pairs(sigs, id_col, bands, rows, bucket_cap)
+    sh = shingle_hashes(df, id_col).localCheckpoint(eager=True)
+    cands = lsh_candidate_pairs(minhash_signatures(sh, id_col), id_col)
     # Verify via per-doc shingle-hash ARRAYS + native array_intersect:
     # |S_a ∩ S_b| over the distinct per-doc hash sets is exactly the
     # shared-row count of the explode join (sh is distinct per doc), but
@@ -241,14 +217,12 @@ def verified_neardup_pairs(
         cands.join(a, "id_a")
         .join(b, "id_b")
         .withColumn("jaccard", jac.cast("double"))
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("id_a", "id_b", "jaccard")
     )
 
 
-def hot_shingles(
-    sh: DataFrame, id_col: str = "doc_id", df_cap: int = 1000
-) -> DataFrame:
+def hot_shingles(sh: DataFrame, df_cap: int) -> DataFrame:
     """Audit frame for the df-cap: (h, df) of every shingle whose document
     frequency exceeds `df_cap` — the shingles `ngram_jaccard_pairs`
     excludes when called with the same cap. The sum of df*(df-1)/2 over
@@ -260,15 +234,9 @@ def hot_shingles(
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-    df_cap: int | None = None,
-) -> DataFrame:
-    """Brute-force exact Jaccard pairs via shared-shingle join (oracle path).
+def ngram_jaccard_pairs(df: DataFrame, df_cap: int | None = None) -> DataFrame:
+    """Brute-force exact Jaccard pairs (≥ JACCARD_THRESHOLD) of (doc_id,
+    text) documents via shared-shingle join (oracle path).
 
     Same slim-hashed-checkpoint discipline as verified_neardup_pairs: the
     text-explode runs once; only (id, h) longs are stored.
@@ -287,14 +255,12 @@ def ngram_jaccard_pairs(
     df_cap per shingle. Audit the dropped shingles with `hot_shingles`
     at the same cap. Default None preserves the unfiltered oracle path.
     """
-    sh = shingle_hashes(df, id_col, text_col, n).localCheckpoint(eager=True)
+    sh = shingle_hashes(df).localCheckpoint(eager=True)
     if df_cap is not None:
-        sh = sh.join(
-            hot_shingles(sh, id_col, df_cap).select("h"), "h", "left_anti"
-        )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.select(F.col(id_col).alias("id_a"), "h")
-    b = sh.select(F.col(id_col).alias("id_b"), "h")
+        sh = sh.join(hot_shingles(sh, df_cap).select("h"), "h", "left_anti")
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+    a = sh.select(F.col("doc_id").alias("id_a"), "h")
+    b = sh.select(F.col("doc_id").alias("id_b"), "h")
     shared = (
         a.join(b, "h")
         .where(F.col("id_a") < F.col("id_b"))
@@ -303,29 +269,23 @@ def ngram_jaccard_pairs(
     )
     return (
         shared.join(
-            sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("sz", "sz_a"),
+            sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sz", "sz_a"),
             "id_a",
         )
         .join(
-            sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("sz", "sz_b"),
+            sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sz", "sz_b"),
             "id_b",
         )
         .withColumn(
             "jaccard",
             F.col("n_shared") / (F.col("sz_a") + F.col("sz_b") - F.col("n_shared")),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("id_a", "id_b", "jaccard")
     )
 
 
-def dedup_lines(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_chars: int = 10,
-    keep_first: bool = True,
-) -> DataFrame:
+def dedup_lines(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Corpus-level LINE deduplication (the RefinedWeb/MassiveText rule:
     a line duplicated across documents is boilerplate — cookie banners,
     navigation, share buttons — and is removed everywhere except its first
@@ -334,24 +294,22 @@ def dedup_lines(
     Mechanics: one explode to (id, line_idx, line), global first-occurrence
     selection via row_number over xxhash64(line) ordered by (id, line_idx)
     — a single hash-partitioned window, no self-join — then document
-    reassembly in line order. Lines shorter than `min_chars` are exempt
+    reassembly in line order. Lines shorter than 10 chars are exempt
     (blank separators and short structural lines dedup meaninglessly).
-    keep_first=False drops EVERY occurrence of a cross-document duplicate
-    line instead (the more aggressive C4-style variant).
 
     Scale: shuffle keys are (line-hash) then (doc id) — both well-spread;
     the heaviest skew possible is one line duplicated across the whole
     corpus, which this exists to remove, and a window over its hash
     partition is a sort of that one group. Returns (id, text) with the
-    deduped text.
+    deduped `text`.
     """
     from pyspark.sql import Window
 
     lines = df.select(
         F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), r"\n")).alias("line_idx", "line"),
+        F.posexplode(F.split(F.col("text"), r"\n")).alias("line_idx", "line"),
     )
-    exempt = F.length(F.trim(F.col("line"))) < min_chars
+    exempt = F.length(F.trim(F.col("line"))) < 10
     # Partition key is (hash, line), not hash alone: at 10^12 lines the
     # expected number of 64-bit colliding DISTINCT line pairs is ~n^2/2^65
     # (tens of thousands), and a collision would merge two unrelated lines
@@ -359,15 +317,9 @@ def dedup_lines(
     # the raw line splits colliding groups; Spark hash-partitions the
     # composite key, so the shuffle shape/cost is unchanged.
     w = Window.partitionBy(F.xxhash64("line"), "line").orderBy(id_col, "line_idx")
-    ranked = lines.withColumn("_rn", F.row_number().over(w)).withColumn(
-        "_cnt",
-        F.count(F.lit(1)).over(Window.partitionBy(F.xxhash64("line"), "line")),
+    kept = lines.withColumn("_rn", F.row_number().over(w)).where(
+        exempt | (F.col("_rn") == 1)
     )
-    if keep_first:
-        keep = exempt | (F.col("_rn") == 1)
-    else:
-        keep = exempt | (F.col("_cnt") == 1)
-    kept = ranked.where(keep)
     return (
         kept.groupBy(id_col)
         .agg(
@@ -379,7 +331,7 @@ def dedup_lines(
             F.col(id_col),
             F.concat_ws(
                 "\n", F.transform(F.col("_ls"), lambda s: s["line"])
-            ).alias(text_col),
+            ).alias("text"),
         )
     )
 
@@ -503,9 +455,7 @@ def simhash_pairs_from_sigs(
     )
 
 
-def simhash64_reference(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash64_reference(df: DataFrame) -> DataFrame:
     """BYTE-PARITY 64-bit SimHash of the documents shard's own
     implementation (arkham-shard-documents/services/deduplication.py:48-149),
     fully native: lowercase + strip non-word/space chars (:75-77, Unicode
@@ -516,7 +466,7 @@ def simhash64_reference(
     MSB-first +-1 bit voting and MSB-first reassembly (:110-148), empty or
     token-free text -> 0 (:121-127).
 
-    Output: (id, simhash BIGINT — same 64 bits as the reference's
+    Output: (doc_id, simhash BIGINT — same 64 bits as the reference's
     unsigned int, reinterpreted signed — and simhash_bits, the 64-char
     MSB-first bitstring both engines can compare without unsigned-shift
     pitfalls). The signed simhash feeds simhash_pairs_from_sigs directly.
@@ -524,7 +474,7 @@ def simhash64_reference(
     from pyspark.sql import Window
 
     norm = F.regexp_replace(
-        F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+        F.lower(F.coalesce(F.col("text"), F.lit(""))),
         r"(?U)[^\w\s]", ""
     )
     words = F.filter(
@@ -543,12 +493,12 @@ def simhash64_reference(
     # net extra exchange.
     from .spread import spread
 
-    win = Window.partitionBy(id_col).orderBy("pos")
+    win = Window.partitionBy("doc_id").orderBy("pos")
     word_rows = (
         # spread: the tokenize+md5 explode below inherits a one-task scan
         # otherwise (single-file bench inputs); no-op at real scale
-        spread(df, id_col)
-        .select(F.col(id_col), F.posexplode(words).alias("pos", "w"))
+        spread(df, "doc_id")
+        .select(F.col("doc_id"), F.posexplode(words).alias("pos", "w"))
         .withColumn("w2", F.lead("w", 1).over(win))
         .withColumn("w3", F.lead("w", 2).over(win))
     )
@@ -567,9 +517,9 @@ def simhash64_reference(
     # the md5/conv chain inside all 64 sums would recompute it 64x per
     # shingle (measured 13 s -> ~2 s at 500 docs)
     toks = word_rows.select(
-        F.col(id_col), F.explode(grams).alias("tok")
+        F.col("doc_id"), F.explode(grams).alias("tok")
     ).where(F.col("tok").isNotNull()).select(
-        id_col,
+        "doc_id",
         F.conv(F.substring(md5, 1, 8), 16, 10).cast("long").alias("hi"),
         F.conv(F.substring(md5, 9, 8), 16, 10).cast("long").alias("lo"),
     )
@@ -594,7 +544,7 @@ def simhash64_reference(
             )
         )
         aggs.append(F.sum(packed).alias(f"p{i}"))
-    per = toks.groupBy(id_col).agg(*aggs)
+    per = toks.groupBy("doc_id").agg(*aggs)
     sim = None
     bits = []
     for i in range(64):
@@ -609,17 +559,17 @@ def simhash64_reference(
         sim = term if sim is None else sim.bitwiseOR(term)
         bits.append(F.when(set_i, F.lit("1")).otherwise(F.lit("0")))
     hashed = per.select(
-        F.col(id_col),
+        F.col("doc_id"),
         sim.alias("simhash"),
         F.concat(*bits).alias("simhash_bits"),
     )
     # docs with zero shingles (empty/whitespace/normalized-away text)
     # never reach the explode: reference returns 0 for them
     return (
-        df.select(id_col)
-        .join(hashed, id_col, "left")
+        df.select("doc_id")
+        .join(hashed, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.coalesce("simhash", F.lit(0).cast("long")).alias("simhash"),
             F.coalesce("simhash_bits", F.lit("0" * 64)).alias(
                 "simhash_bits"
@@ -628,31 +578,23 @@ def simhash64_reference(
     )
 
 
-def content_hashes(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Per-document content-hash record (documents shard's compute_hash,
+def content_hashes(df: DataFrame) -> DataFrame:
+    """Per-document (doc_id, text) content-hash record (documents shard's compute_hash,
     deduplication.py:213-241): md5 + sha256 of the UTF-8 text, the
     byte-parity reference SimHash, and the character length — all native
     (F.md5/F.sha2 hash UTF-8 bytes exactly like text.encode('utf-8'),
     F.length counts characters like Python len)."""
     base = df.select(
-        F.col(id_col),
-        F.md5(F.col(text_col)).alias("content_md5"),
-        F.sha2(F.col(text_col), 256).alias("content_sha256"),
-        F.length(F.col(text_col)).cast("long").alias("text_length"),
+        F.col("doc_id"),
+        F.md5(F.col("text")).alias("content_md5"),
+        F.sha2(F.col("text"), 256).alias("content_sha256"),
+        F.length(F.col("text")).cast("long").alias("text_length"),
     )
-    sims = simhash64_reference(df, id_col, text_col)
-    return base.join(sims, id_col)
+    return base.join(simhash64_reference(df), "doc_id")
 
 
-def duplicate_groups(
-    hashes: DataFrame,
-    threshold: float = 0.85,
-    id_col: str = "doc_id",
-    sig_col: str = "simhash",
-) -> DataFrame:
-    """Project-wide duplicate groups (deduplication.py's
+def duplicate_groups(hashes: DataFrame, threshold: float = 0.85) -> DataFrame:
+    """Project-wide (doc_id, simhash) duplicate groups (deduplication.py's
     scan_project_duplicates, :403-490): similarity >= threshold pairs,
     grouped transitively; one row per member of each multi-member group
     with its group primary.
@@ -675,17 +617,12 @@ def duplicate_groups(
     # the join again — without truncation the 64-aggregate simhash
     # subtree recomputes 3-4x through that lineage (invariant 5; the
     # measured shingle-recompute lesson)
-    sigs = hashes.select(
-        F.col(id_col), F.col(sig_col).alias("simhash")
-    ).localCheckpoint(eager=False)
+    sigs = hashes.select("doc_id", "simhash").localCheckpoint(eager=False)
     # k+1 blocks, not the k+3 combo default: at the large k a similarity
     # threshold implies (k = 12 at t = 0.8), C(k+3, 3) explodes into
     # hundreds of keys per row while C(k+1, 1) = k+1 keys of ~59 bits
     # each stay selective
-    pairs = simhash_pairs_from_sigs(
-        sigs, id_col=id_col, sig_col="simhash", max_hamming=max_h,
-        blocks=max_h + 1,
-    )
+    pairs = simhash_pairs_from_sigs(sigs, max_hamming=max_h, blocks=max_h + 1)
     edges = pairs.select(
         F.col("id_a").cast("string").alias("entity_a"),
         F.col("id_b").cast("string").alias("entity_b"),
@@ -712,11 +649,6 @@ def merge_documents(
     groups: DataFrame,
     mentions: DataFrame | None = None,
     claims: DataFrame | None = None,
-    strategy: str = "keep_primary",
-    preserve_references: bool = True,
-    cleanup_action: str = "soft_delete",
-    id_col: str = "doc_id",
-    doc_col: str = "document_id",
 ) -> dict[str, DataFrame]:
     """Duplicate-group merge (DeduplicationService.merge_documents,
     deduplication.py:498-660) as one declarative batch over ALL groups:
@@ -725,17 +657,17 @@ def merge_documents(
     a 100-TB corpus merges in three shuffles (map join per reference
     table + one history agg) instead of O(groups x dups) round trips.
 
-    Inputs: `documents` keyed by `id_col` with optional `status`;
+    The reference's keep_primary strategy with preserve_references and
+    the soft_delete cleanup.
+
+    Inputs: `documents` keyed by `doc_id` with optional `status`;
     `groups` = duplicate_groups() output (primary_document_id,
-    member_id); mentions/claims keyed by `doc_col`.
+    member_id); mentions/claims keyed by `document_id`.
 
     Returns frames mirroring the reference's post-merge state:
-      documents — status/merged_into_id per cleanup_action
-        (soft_delete -> status 'merged' + merged_into_id, archive ->
-        'archived' + archived_reason, hard_delete -> dup rows REMOVED,
-        keep -> untouched);
-      mentions / claims — `doc_col` re-pointed to the group primary when
-        preserve_references (the two UPDATEs at :550-574);
+      documents — dups get status 'merged' + merged_into_id;
+      mentions / claims — `document_id` re-pointed to the group primary
+        (the two UPDATEs at :550-574);
       history — one row per group: merged_count, references_updated,
         documents_cleaned, strategy, cleanup_action (merge_history
         insert at :637-652; uuid/timestamp omitted, duplicate ids
@@ -753,14 +685,12 @@ def merge_documents(
     def _repoint(df: DataFrame | None) -> DataFrame | None:
         if df is None:
             return None
-        if not preserve_references:
-            return df.withColumn("_from_dup", F.lit(None).cast("string"))
         out = df.join(
-            dup_map, df[doc_col] == dup_map._dup_id, "left"
+            dup_map, df["document_id"] == dup_map._dup_id, "left"
         )
         return out.select(
-            *[c for c in df.columns if c != doc_col],
-            F.coalesce(dup_map._primary_id, df[doc_col]).alias(doc_col),
+            *[c for c in df.columns if c != "document_id"],
+            F.coalesce(dup_map._primary_id, df["document_id"]).alias("document_id"),
             # original dup id kept for the per-group rowcount ledger
             dup_map._dup_id.alias("_from_dup"),
         )
@@ -773,44 +703,24 @@ def merge_documents(
         F.col("status") if "status" in documents.columns
         else F.lit("active")
     )
-    d = docs.join(dup_map, docs[id_col] == dup_map._dup_id, "left")
-    if cleanup_action == "soft_delete":
-        docs_out = d.select(
-            *[c for c in docs.columns if c != "status"],
-            F.when(dup_map._dup_id.isNotNull(), F.lit("merged"))
-            .otherwise(status_col).alias("status"),
-            dup_map._primary_id.alias("merged_into_id"),
-        )
-    elif cleanup_action == "archive":
-        docs_out = d.select(
-            *[c for c in docs.columns if c != "status"],
-            F.when(dup_map._dup_id.isNotNull(), F.lit("archived"))
-            .otherwise(status_col).alias("status"),
-            F.when(
-                dup_map._dup_id.isNotNull(),
-                F.concat(
-                    F.lit("duplicate_of_"),
-                    dup_map._primary_id.cast("string"),
-                ),
-            ).alias("archived_reason"),
-        )
-    elif cleanup_action == "hard_delete":
-        docs_out = d.where(dup_map._dup_id.isNull()).select(*docs.columns)
-    elif cleanup_action == "keep":
-        docs_out = documents
-    else:
-        raise ValueError(f"unknown cleanup_action {cleanup_action!r}")
+    d = docs.join(dup_map, docs["doc_id"] == dup_map._dup_id, "left")
+    docs_out = d.select(
+        *[c for c in docs.columns if c != "status"],
+        F.when(dup_map._dup_id.isNotNull(), F.lit("merged"))
+        .otherwise(status_col).alias("status"),
+        dup_map._primary_id.alias("merged_into_id"),
+    )
 
     # per-group ledger: references_updated sums the re-pointed rowcounts
     # across BOTH reference tables (:560, :572); documents_cleaned counts
-    # dups except under `keep` (:630-632)
+    # every dup (:630-632)
     def _ref_counts(df: DataFrame | None) -> DataFrame | None:
-        if df is None or not preserve_references:
+        if df is None:
             return None
-        # re-pointed rows already carry the primary in doc_col
+        # re-pointed rows already carry the primary in document_id
         return (
             df.where(F.col("_from_dup").isNotNull())
-            .groupBy(F.col(doc_col).alias("_primary_id"))
+            .groupBy(F.col("document_id").alias("_primary_id"))
             .agg(F.count(F.lit(1)).alias("n_refs"))
         )
 
@@ -843,16 +753,12 @@ def merge_documents(
         F.col("_primary_id").alias("primary_id"),
         F.col("merged_count").cast("long").alias("merged_count"),
         "merged_document_ids",
-        F.lit(strategy).alias("strategy"),
-        F.lit(cleanup_action).alias("cleanup_action"),
+        F.lit("keep_primary").alias("strategy"),
+        F.lit("soft_delete").alias("cleanup_action"),
         F.col("references_updated").cast("long").alias(
             "references_updated"
         ),
-        (
-            F.lit(0).cast("long")
-            if cleanup_action == "keep"
-            else F.col("merged_count").cast("long")
-        ).alias("documents_cleaned"),
+        F.col("merged_count").cast("long").alias("documents_cleaned"),
     )
 
     def _strip(df: DataFrame | None) -> DataFrame | None:
@@ -866,18 +772,14 @@ def merge_documents(
     }
 
 
-def deduplication_stats(
-    documents: DataFrame,
-    hashes: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def deduplication_stats(documents: DataFrame, hashes: DataFrame) -> DataFrame:
     """Corpus dedup stats (get_deduplication_stats, deduplication.py:
     662-701): documents LEFT JOIN content_hashes, counting hash coverage
     and distinct sha256; potential_duplicates = with_hash - unique when
     positive. One aggregation job at any corpus size."""
-    j = documents.select(F.col(id_col).alias("_d")).join(
+    j = documents.select(F.col("doc_id").alias("_d")).join(
         hashes.select(
-            F.col(id_col).alias("_d"), F.col("content_sha256")
+            F.col("doc_id").alias("_d"), F.col("content_sha256")
         ),
         "_d",
         "left",

@@ -39,8 +39,6 @@ def ordered_pairs(arr: Column, first: str, second: str) -> Column:
 def comention_edges(
     mentions: DataFrame,
     doc_col: str = "url",
-    min_count: int = 2,
-    limit: int | None = 1000,
     include_doc_ids: bool = True,
 ) -> DataFrame:
     # Join-free formulation of the reference SQL: first aggregate each doc's
@@ -53,7 +51,7 @@ def comention_edges(
         F.sort_array(F.collect_set(F.lower(F.col("text")))).alias("names")
     )
     return comention_edges_from_name_sets(
-        per_doc, "names", "doc", min_count, limit, include_doc_ids
+        per_doc, "names", "doc", include_doc_ids
     )
 
 
@@ -61,12 +59,11 @@ def comention_edges_from_name_sets(
     docs: DataFrame,
     names_col: str = "_names",
     doc_col: str = "url",
-    min_count: int = 2,
-    limit: int | None = 1000,
     include_doc_ids: bool = False,
 ) -> DataFrame:
     """Edge build from per-doc sorted-distinct name arrays: one narrow pair
-    explosion feeding a tiny partial-aggregated count. The pipeline passes
+    explosion feeding a tiny partial-aggregated count; pairs co-mentioned
+    in at least 2 documents, the top 1000 by count. The pipeline passes
     the arrays its fused extract already produced (no per-doc groupBy at
     all); ``comention_edges`` builds them from mention rows. Per-doc entity
     counts are bounded (documents are bounded size), so the combination
@@ -81,16 +78,15 @@ def comention_edges_from_name_sets(
     edges = (
         exploded.groupBy("entity_a", "entity_b")
         .agg(*aggs)
-        .where(F.col("co_occurrence_count") >= min_count)
+        .where(F.col("co_occurrence_count") >= 2)
         .withColumn(
             "weight",
             F.least(F.lit(1.0), F.col("co_occurrence_count") / F.lit(10.0)),
         )
     )
-    ordered = edges.orderBy(
+    return edges.orderBy(
         F.desc("co_occurrence_count"), F.asc("entity_a"), F.asc("entity_b")
-    )
-    return ordered.limit(limit) if limit else ordered
+    ).limit(1000)
 
 
 def node_degrees(edges: DataFrame) -> DataFrame:

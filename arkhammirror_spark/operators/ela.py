@@ -29,13 +29,13 @@ from .lane import explode_lane
 from .multimodal import _load_pil, decode_image
 
 
-def ela_from_arrays(orig, resaved, scale: int = 15) -> dict[str, object]:
-    """|orig - resaved| * scale (clipped u8) -> the reference's
+def ela_from_arrays(orig, resaved) -> dict[str, object]:
+    """|orig - resaved| * 15 (clipped u8) -> the reference's
     interpretation dict fields (ela_analyzer.py:77-145)."""
     import numpy as np
 
     diff = np.abs(orig.astype(np.int16) - resaved.astype(np.int16))
-    ela = np.clip(diff * scale, 0, 255).astype(np.uint8)
+    ela = np.clip(diff * 15, 0, 255).astype(np.uint8)
     mean_error = float(np.mean(ela))
     std_error = float(np.std(ela))
     max_error = float(np.max(ela))
@@ -69,7 +69,7 @@ def _mock_resave(arr):
     return (arr // 8) * 8
 
 
-def _pil_resave(pil, arr, quality: int):
+def _pil_resave(pil, arr):
     import io
 
     import numpy as np
@@ -78,7 +78,7 @@ def _pil_resave(pil, arr, quality: int):
     if img.mode != "RGB":
         img = img.convert("RGB")
     buf = io.BytesIO()
-    img.save(buf, format="JPEG", quality=quality)
+    img.save(buf, format="JPEG", quality=95)
     buf.seek(0)
     with pil.open(buf) as back:
         return np.array(back)
@@ -98,7 +98,7 @@ ELA_SCHEMA = StructType(
 )
 
 
-def ela_metrics(media: DataFrame, quality: int = 95, scale: int = 15) -> DataFrame:
+def ela_metrics(media: DataFrame) -> DataFrame:
     """media(image rows) -> per-image ELA statistics + assessment; `engine`
     names the resave the session's Python offers (pil | mock), on every
     row. Undecodable payloads quarantine per row."""
@@ -112,8 +112,8 @@ def ela_metrics(media: DataFrame, quality: int = 95, scale: int = 15) -> DataFra
         arr = decode_image(bytes(payload), pil)
         if arr.ndim == 2:
             arr = np.stack([arr] * 3, axis=2)
-        resaved = _pil_resave(pil, arr, quality) if pil else _mock_resave(arr)
-        return [ela_from_arrays(arr, resaved, scale)]
+        resaved = _pil_resave(pil, arr) if pil else _mock_resave(arr)
+        return [ela_from_arrays(arr, resaved)]
 
     images = media.where("media_type = 'image'").select("media_id", "payload")
     return explode_lane(images, _ela, ELA_SCHEMA).withColumn(

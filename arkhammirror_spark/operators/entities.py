@@ -78,25 +78,21 @@ def aggregate_entities(mentions: DataFrame, doc_col: str = "url") -> DataFrame:
     )
 
 
-def dedup_relationships(
-    rels: DataFrame,
-    src_col: str = "source_text",
-    dst_col: str = "target_text",
-    type_col: str = "relation_type",
-) -> DataFrame:
-    """E11 relationship dedup (shard-entities/shard.py:597-615): the reference
+def dedup_relationships(rels: DataFrame) -> DataFrame:
+    """E11 relationship dedup of (source_text, target_text, relation_type,
+    confidence) rows (shard-entities/shard.py:597-615): the reference
     inserts a relationship only if no row with the same (source_id, target_id,
     relationship_type) exists, where entity ids key on lowercased names — so
     the set semantics are one global dropDuplicates on the lowercased triple,
     keeping the first-seen confidence (min confidence = deterministic stand-in
     for insert order, which the reference doesn't define across workers)."""
-    keyed = rels.withColumn("_src", F.lower(F.col(src_col))).withColumn(
-        "_dst", F.lower(F.col(dst_col))
+    keyed = rels.withColumn("_src", F.lower(F.col("source_text"))).withColumn(
+        "_dst", F.lower(F.col("target_text"))
     )
     return (
         keyed.groupBy(F.col("_src").alias("source_lower"),
                       F.col("_dst").alias("target_lower"),
-                      F.col(type_col))
+                      F.col("relation_type"))
         .agg(F.min("confidence").alias("confidence"),
              F.count(F.lit(1)).alias("n_evidence"))
     )

@@ -29,7 +29,7 @@ no Python in the plan). Index entries whose name has no word character
 at all (pure punctuation; vanishingly rare) fall back to a
 broadcast-join arm against the events so correctness never depends on
 the blocking key. The index frame is tiny relative to the corpus
-(entities ≪ events) and is broadcast by default.
+(entities ≪ events) and is always broadcast.
 
 Determinism: the reference's alias-suppression depends on DB fetch
 order; here row order is pinned by ``order_col`` (default: the entity
@@ -56,11 +56,10 @@ def _literal_pattern(lower_col):
 def entity_name_index(
     entities: DataFrame,
     id_col: str = "entity_id",
-    name_col: str = "name",
-    aliases_col: str | None = "aliases",
     order_col: str | None = None,
 ) -> DataFrame:
-    """(entity_id, match_lower, first_token, pattern) match list.
+    """(entity_id, match_lower, first_token, pattern) match list from the
+    entities' `name` and (when present) `aliases` columns.
 
     Reference rules (shard.py:583-625): rows with NULL/empty name are
     skipped; every primary name enters the list; an alias enters only if
@@ -70,23 +69,21 @@ def entity_name_index(
     (order_col value, item_idx) structs, so no global sort is needed.
     """
     order_col = order_col or id_col
-    base = entities.where(
-        F.col(name_col).isNotNull() & (F.col(name_col) != "")
-    )
+    base = entities.where(F.col("name").isNotNull() & (F.col("name") != ""))
     names = base.select(
         F.col(id_col).alias("entity_id"),
-        F.lower(F.col(name_col)).alias("match_lower"),
+        F.lower(F.col("name")).alias("match_lower"),
         F.struct(
             F.col(order_col).alias("r"), F.lit(0).alias("i")
         ).alias("pos"),
         F.lit(True).alias("is_name"),
     )
     items = names
-    if aliases_col is not None and aliases_col in entities.columns:
+    if "aliases" in entities.columns:
         aliases = base.select(
             F.col(id_col).alias("entity_id"),
             F.col(order_col).alias("_r"),
-            F.posexplode(F.col(aliases_col)).alias("_i", "_alias"),
+            F.posexplode(F.col("aliases")).alias("_i", "_alias"),
         ).where(
             F.col("_alias").isNotNull() & (F.col("_alias") != "")
         ).select(
@@ -119,15 +116,11 @@ def link_entities_to_events(
     events: DataFrame,
     entities: DataFrame,
     event_id_col: str = "id",
-    text_col: str = "text",
-    entities_col: str = "entities",
     entity_id_col: str = "entity_id",
-    name_col: str = "name",
-    aliases_col: str | None = "aliases",
     order_col: str | None = None,
-    broadcast_index: bool = True,
 ) -> DataFrame:
-    """Events with ``entities`` = sorted(existing ∪ matched entity ids).
+    """Events with ``entities`` = sorted(existing ∪ entity ids matched
+    in their ``text``); the name index is broadcast.
 
     Matching is `re.search(r'\\b' + re.escape(name_lower) + r'\\b',
     text_lower)` per the reference (shard.py:636-648), run JVM-side as
@@ -140,14 +133,12 @@ def link_entities_to_events(
     """
     from .spread import spread
 
-    idx = entity_name_index(
-        entities, entity_id_col, name_col, aliases_col, order_col
-    )
+    idx = entity_name_index(entities, entity_id_col, order_col)
     # spread: the tokenize explode + RLIKE verify below inherit a one-task
     # scan otherwise (single-file bench inputs); no-op at real scale
     ev = spread(events, event_id_col).select(
         F.col(event_id_col).alias("_eid"),
-        F.lower(F.col(text_col)).alias("_tl"),
+        F.lower(F.col("text")).alias("_tl"),
     ).where(F.col("_tl").isNotNull() & (F.col("_tl") != ""))
 
     # blocked arm: candidate (event, index entry) pairs share a word token
@@ -162,11 +153,9 @@ def link_entities_to_events(
             )
         ).alias("_tok"),
     )
-    tok_idx = idx.where(F.col("first_token") != "")
-    if broadcast_index:
-        # hint at the join site (hinting the shared index frame would
-        # also tag the no-token probe below, which has no join)
-        tok_idx = F.broadcast(tok_idx)
+    # hint at the join site (hinting the shared index frame would also
+    # tag the no-token probe below, which has no join)
+    tok_idx = F.broadcast(idx.where(F.col("first_token") != ""))
     blocked = tokens.join(
         tok_idx, tokens["_tok"] == F.col("first_token")
     ).select("_eid", "entity_id", "pattern")
@@ -193,8 +182,8 @@ def link_entities_to_events(
     )
 
     existing = (
-        F.col(entities_col)
-        if entities_col in events.columns
+        F.col("entities")
+        if "entities" in events.columns
         else F.lit(None).cast("array<string>")
     )
     out_entities = F.when(
@@ -209,9 +198,9 @@ def link_entities_to_events(
     joined = events.join(
         matched, events[event_id_col] == matched["_eid"], "left"
     )
-    keep = [c for c in events.columns if c != entities_col]
+    keep = [c for c in events.columns if c != "entities"]
     return joined.select(
-        *[events[c] for c in keep], out_entities.alias(entities_col)
+        *[events[c] for c in keep], out_entities.alias("entities")
     )
 
 
@@ -220,17 +209,16 @@ def entity_timeline(
     entity_id: str,
     start: dt.date | None = None,
     end: dt.date | None = None,
-    entities_col: str = "entities",
-    date_col: str = "date_start",
 ) -> DataFrame:
-    """Events mentioning the entity, date-range filtered
+    """Events whose `entities` mention the entity, `date_start`-range
+    filtered
     (get_entity_timeline, shard.py:503-527: events strictly before
     `start` or strictly after `end` are dropped)."""
-    out = events.where(F.array_contains(F.col(entities_col), entity_id))
+    out = events.where(F.array_contains(F.col("entities"), entity_id))
     if start is not None:
-        out = out.where(F.col(date_col) >= F.lit(start))
+        out = out.where(F.col("date_start") >= F.lit(start))
     if end is not None:
-        out = out.where(F.col(date_col) <= F.lit(end))
+        out = out.where(F.col("date_start") <= F.lit(end))
     return out
 
 
@@ -239,39 +227,28 @@ def entity_timeline_summary(
     entity_id: str,
     start: dt.date | None = None,
     end: dt.date | None = None,
-    entities_col: str = "entities",
-    date_col: str = "date_start",
-    include_related: bool = True,
 ) -> DataFrame:
     """One row: (entity_id, event_count, range_start, range_end,
     related_entities csv) — get_entity_timeline's aggregate shape
     (shard.py:529-556: related = union of co-event entities minus the
     queried id)."""
-    ev = entity_timeline(
-        events, entity_id, start, end, entities_col, date_col
-    )
-    related = (
-        F.array_join(
-            F.array_sort(
-                F.array_remove(
-                    F.coalesce(
-                        F.array_distinct(
-                            F.flatten(F.collect_list(entities_col))
-                        ),
-                        F.array().cast("array<string>"),
-                    ),
-                    entity_id,
-                )
-            ),
-            ",",
-        )
-        if include_related
-        else F.lit("")
+    ev = entity_timeline(events, entity_id, start, end)
+    related = F.array_join(
+        F.array_sort(
+            F.array_remove(
+                F.coalesce(
+                    F.array_distinct(F.flatten(F.collect_list("entities"))),
+                    F.array().cast("array<string>"),
+                ),
+                entity_id,
+            )
+        ),
+        ",",
     )
     return ev.agg(
         F.lit(entity_id).alias("entity_id"),
         F.count(F.lit(1)).alias("event_count"),
-        F.min(date_col).alias("range_start"),
-        F.max(date_col).alias("range_end"),
+        F.min("date_start").alias("range_start"),
+        F.max("date_start").alias("range_end"),
         related.alias("related_entities"),
     )

@@ -31,7 +31,8 @@ from ..reference_impl.tabular import extract_csv
 from ..reference_impl.normalize import assess_quality, detect_language, normalize_text
 from ..reference_impl.pdfmini import extract_pdf_text
 from ..reference_impl.textdecode import decode_text_bytes
-from ..schemas import DOCS_MENTIONS_SCHEMA, DOCS_SCHEMA
+from ..schemas import DOCS_SCHEMA
+from .lane import error_text
 
 
 def sniff_kind(payload: bytes | None, declared: str | None) -> str:
@@ -104,7 +105,7 @@ def extract_one(payload: bytes | None, pre_text: str | None, kind: str | None) -
             "quality_issues": ["extraction_error"],
             "word_count": 0,
             "n_pages": 0,
-            "error": f"{type(exc).__name__}: {exc}",
+            "error": error_text(exc),
         }
 
     normalized, _changes = normalize_text(raw_text)
@@ -122,61 +123,56 @@ def extract_one(payload: bytes | None, pre_text: str | None, kind: str | None) -
     }
 
 
-def _make_batches(include_mentions: bool):
-    schema = DOCS_MENTIONS_SCHEMA if include_mentions else DOCS_SCHEMA
-    names = [f.name for f in schema.fields]
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        if include_mentions:
-            from ..reference_impl.entity_filter import is_valid_entity
-            from ..reference_impl.ner import mock_ner
-
-        ctx = TaskContext.get()
-        part_id = ctx.partitionId() if ctx else -1
-
-        for pdf in it:
-            t0 = time.perf_counter()
-            recs = []
-            payloads = pdf["html"].tolist()
-            pre_texts = pdf["text"].tolist()
-            kinds = pdf["kind"].tolist() if "kind" in pdf.columns else [None] * len(pdf)
-            for payload, pre, kind in zip(payloads, pre_texts, kinds):
-                payload = bytes(payload) if payload is not None else None
-                rec = extract_one(payload, pre, kind)
-                basis = payload if payload is not None else (pre or "").encode("utf-8")
-                rec["checksum"] = hashlib.sha256(basis).hexdigest()
-                if include_mentions:
-                    ments = mock_ner(rec["extracted_text"])
-                    rec["_mentions"] = ments
-                    rec["_names"] = sorted(
-                        {
-                            m["text"].lower()
-                            for m in ments
-                            if is_valid_entity(m["text"], m["entity_type"])
-                        }
-                    )
-                    rec["_n_mentions"] = len(ments)
-                recs.append(rec)
-            elapsed_ms = (time.perf_counter() - t0) * 1000.0
-            out = pd.DataFrame(recs)
-            out.insert(0, "url", pdf["url"].values)
-            out.insert(1, "warc_ts", pdf["warc_ts"].values)
-            out["_part_id"] = part_id
-            out["_batch_ms"] = elapsed_ms / max(1, len(out))
-            yield out[names]
-
-    return _batches
+_DOCS_NAMES = [f.name for f in DOCS_SCHEMA.fields]
 
 
-def extract_docs(pages: DataFrame, include_mentions: bool = False) -> DataFrame:
+def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    from pyspark import TaskContext
+
+    from ..reference_impl.entity_filter import is_valid_entity
+    from ..reference_impl.ner import mock_ner
+
+    ctx = TaskContext.get()
+    part_id = ctx.partitionId() if ctx else -1
+
+    for pdf in it:
+        t0 = time.perf_counter()
+        recs = []
+        payloads = pdf["html"].tolist()
+        pre_texts = pdf["text"].tolist()
+        kinds = pdf["kind"].tolist() if "kind" in pdf.columns else [None] * len(pdf)
+        for payload, pre, kind in zip(payloads, pre_texts, kinds):
+            payload = bytes(payload) if payload is not None else None
+            rec = extract_one(payload, pre, kind)
+            basis = payload if payload is not None else (pre or "").encode("utf-8")
+            rec["checksum"] = hashlib.sha256(basis).hexdigest()
+            ments = mock_ner(rec["extracted_text"])
+            rec["_mentions"] = ments
+            rec["_names"] = sorted(
+                {
+                    m["text"].lower()
+                    for m in ments
+                    if is_valid_entity(m["text"], m["entity_type"])
+                }
+            )
+            rec["_n_mentions"] = len(ments)
+            recs.append(rec)
+        elapsed_ms = (time.perf_counter() - t0) * 1000.0
+        out = pd.DataFrame(recs)
+        out.insert(0, "url", pdf["url"].values)
+        out.insert(1, "warc_ts", pdf["warc_ts"].values)
+        out["_part_id"] = part_id
+        out["_batch_ms"] = elapsed_ms / max(1, len(out))
+        yield out[_DOCS_NAMES]
+
+
+def extract_docs(pages: DataFrame) -> DataFrame:
     """pages → docs (audit side-channel columns included; see pipeline.py).
 
-    With ``include_mentions`` the mock-NER pass is fused into the same Arrow
-    batch (column ``_mentions: array<mention>``): the extracted text is
-    shipped to Python exactly once instead of per span family — at corpus
-    scale this halves the Arrow transfer volume of the mention path.
+    The mock-NER pass is fused into the same Arrow batch (column
+    ``_mentions: array<mention>``): the extracted text is shipped to Python
+    exactly once instead of per span family — at corpus scale this halves
+    the Arrow transfer volume of the mention path.
     """
     from ..shipping import ensure_shipped
 
@@ -184,8 +180,7 @@ def extract_docs(pages: DataFrame, include_mentions: bool = False) -> DataFrame:
     cols = ["url", "warc_ts", "html", "text"]
     if "kind" in pages.columns:
         cols.append("kind")
-    schema = DOCS_MENTIONS_SCHEMA if include_mentions else DOCS_SCHEMA
-    return pages.select(*cols).mapInPandas(_make_batches(include_mentions), schema)
+    return pages.select(*cols).mapInPandas(_batches, DOCS_SCHEMA)
 
 
 # --- filename-based type classification + worker routing -------------------
@@ -224,9 +219,9 @@ _FALLBACK_MIME = {
 _FILE_CATEGORIES = {"document", "image", "audio", "archive", "unknown"}
 
 
-def file_type_info(files, name_col: str = "file_name"):
-    """Extension / category / MIME / worker route as native columns
-    (file_type.py:71-195), no per-row Python.
+def file_type_info(files):
+    """Extension / category / MIME / worker route of each `file_name` as
+    native columns (file_type.py:71-195), no per-row Python.
 
     Faithful quirks: route categories absent from the FileCategory enum
     (spreadsheet/text/email) classify as 'document' (file_type.py:141);
@@ -236,7 +231,7 @@ def file_type_info(files, name_col: str = "file_name"):
     extensions route to cpu-light. Extension uses pathlib suffix
     semantics (last dot, never the leading dot of a hidden file)."""
     ext = F.lower(
-        F.regexp_extract(F.col(name_col), r".+(\.[^./\\]+)$", 1)
+        F.regexp_extract(F.col("file_name"), r".+(\.[^./\\]+)$", 1)
     )
     cat_pairs = [
         (e, cat) for cat, (exts, _) in FILE_TYPE_ROUTES.items()

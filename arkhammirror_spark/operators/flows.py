@@ -40,14 +40,12 @@ def extract_entity_flows(
     source_types: list[str] | None = None,
     target_types: list[str] | None = None,
     intermediate_types: list[str] | None = None,
-    relationship_types: list[str] | None = None,
-    min_weight: float = 0.0,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Layered entity-type flows (flows.py:47-185): sources -> layer 0,
     intermediates -> 1, targets -> 2 (or 1 without intermediates);
-    type precedence source > target > intermediate. Edges below
-    min_weight, outside relationship_types, touching unlayered nodes, or
-    within one layer are dropped; flows are reoriented low->high layer.
+    type precedence source > target > intermediate. Edges with a
+    negative or null weight, touching unlayered nodes, or within one
+    layer are dropped; flows are reoriented low->high layer.
     Returns (flow_nodes, flow_links, stats)."""
     source_types = [t.lower() for t in (source_types or ["person"])]
     target_types = [
@@ -69,12 +67,9 @@ def extract_entity_flows(
     ).where(F.col("layer").isNotNull())
 
     et = _edge_type_col()
-    e = edges.where(F.col("weight") >= min_weight).select(
+    e = edges.where(F.col("weight") >= 0.0).select(
         "source", "target", "weight", et.alias("category")
     )
-    if relationship_types:
-        allow = [t.lower() for t in relationship_types]
-        e = e.where(F.lower(F.col("category")).isin(allow))
     sl = layered.select(
         F.col("nid").alias("source"), F.col("layer").alias("slayer")
     )
@@ -142,134 +137,67 @@ def _flow_stats(links: DataFrame, flow_nodes: DataFrame) -> DataFrame:
 
 
 def extract_relationship_flows(
-    nodes: DataFrame,
-    edges: DataFrame,
-    flow_relationship_types: list[str] | None = None,
-    min_weight: float = 0.0,
-    aggregate_by_type: bool = True,
+    nodes: DataFrame, edges: DataFrame
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Relationship-type flows (flows.py:186-370). Aggregated mode
-    groups weight by (source type, target type, relationship type) into
-    type_<t> pseudo-nodes, layering each by the 1.5x out/in-flow rule;
-    raw mode keeps individual node flows, layering nodes by the 1.5x
-    out/in EDGE-COUNT rule (counted over relationship-filtered edges
-    before the weight filter, like the reference)."""
-    allow = (
-        [t.lower() for t in flow_relationship_types]
-        if flow_relationship_types
-        else None
-    )
+    """Relationship-type flows (flows.py:186-370), aggregated by type:
+    weight (negative and null weights dropped) grouped by (source type,
+    target type, relationship type) into type_<t> pseudo-nodes, layering
+    each by the 1.5x out/in-flow rule."""
     et = _edge_type_col()
-    e_rel = edges.select(
+    e_w = edges.select(
         "source", "target", "weight", F.lower(et).alias("category")
-    )
-    if allow:
-        e_rel = e_rel.where(F.col("category").isin(allow))
-    e_w = e_rel.where(F.col("weight") >= min_weight)
+    ).where(F.col("weight") >= 0.0)
 
-    if aggregate_by_type:
-        typed = nodes.select(
-            F.col("id").alias("nid"), _node_type_col().alias("ntype")
-        )
-        flows = (
-            e_w.join(
-                typed.select(
-                    F.col("nid").alias("source"),
-                    F.col("ntype").alias("stype"),
-                ),
-                "source",
-            )
-            .join(
-                typed.select(
-                    F.col("nid").alias("target"),
-                    F.col("ntype").alias("ttype"),
-                ),
-                "target",
-            )
-            .groupBy("stype", "ttype", "category")
-            .agg(F.sum("weight").alias("value"))
-        )
-        links = flows.select(
-            F.concat(F.lit("type_"), F.col("stype")).alias("source"),
-            F.concat(F.lit("type_"), F.col("ttype")).alias("target"),
-            "value",
-            "category",
-        )
-        outv = links.groupBy(F.col("source").alias("node_id")).agg(
-            F.sum("value").alias("out_val")
-        )
-        inv = links.groupBy(F.col("target").alias("node_id")).agg(
-            F.sum("value").alias("in_val")
-        )
-        both = (
-            outv.join(inv, "node_id", "full")
-            .withColumn("out_val", F.coalesce("out_val", F.lit(0.0)))
-            .withColumn("in_val", F.coalesce("in_val", F.lit(0.0)))
-        )
-        layer = (
-            F.when(F.col("out_val") > F.col("in_val") * 1.5, 0)
-            .when(F.col("in_val") > F.col("out_val") * 1.5, 2)
-            .otherwise(F.lit(1))
-        )
-        etype = F.substring(F.col("node_id"), 6, 2_000_000)
-        flow_nodes = both.select(
-            F.col("node_id").alias("id"),
-            F.initcap(etype).alias("label"),
-            etype.alias("entity_type"),
-            layer.alias("layer"),
-            (F.col("out_val") + F.col("in_val")).alias("value"),
-        )
-        stats = _flow_stats(links, flow_nodes)
-        return flow_nodes, links, stats
-
-    # raw mode: layers from edge COUNTS over the rel-filtered (not
-    # weight-filtered) edge set; nodes absent from the count default to
-    # layer 1 (flows.py:228-239)
-    outc = e_rel.groupBy(F.col("source").alias("nid")).agg(
-        F.count(F.lit(1)).alias("outn")
+    typed = nodes.select(
+        F.col("id").alias("nid"), _node_type_col().alias("ntype")
     )
-    inc = e_rel.groupBy(F.col("target").alias("nid")).agg(
-        F.count(F.lit(1)).alias("inn")
-    )
-    counts = (
-        nodes.select(F.col("id").alias("nid"))
-        .join(outc, "nid", "left")
-        .join(inc, "nid", "left")
-        .withColumn("outn", F.coalesce("outn", F.lit(0)))
-        .withColumn("inn", F.coalesce("inn", F.lit(0)))
-    )
-    layer = (
-        F.when(
-            F.col("outn").cast("double") > F.col("inn") * 1.5, 0
+    flows = (
+        e_w.join(
+            typed.select(
+                F.col("nid").alias("source"),
+                F.col("ntype").alias("stype"),
+            ),
+            "source",
         )
-        .when(F.col("inn").cast("double") > F.col("outn") * 1.5, 2)
-        .otherwise(F.lit(1))
+        .join(
+            typed.select(
+                F.col("nid").alias("target"),
+                F.col("ntype").alias("ttype"),
+            ),
+            "target",
+        )
+        .groupBy("stype", "ttype", "category")
+        .agg(F.sum("weight").alias("value"))
     )
-    layered = counts.select("nid", layer.alias("layer"))
-    sl = layered.select(
-        F.col("nid").alias("source"), F.col("layer").alias("slayer")
-    )
-    tl = layered.select(
-        F.col("nid").alias("target"), F.col("layer").alias("tlayer")
-    )
-    joined = (
-        e_w.join(sl, "source", "left")
-        .join(tl, "target", "left")
-        .withColumn("slayer", F.coalesce("slayer", F.lit(1)))
-        .withColumn("tlayer", F.coalesce("tlayer", F.lit(1)))
-    )
-    links = joined.select(
-        F.when(
-            F.col("slayer") > F.col("tlayer"), F.col("target")
-        ).otherwise(F.col("source")).alias("source"),
-        F.when(
-            F.col("slayer") > F.col("tlayer"), F.col("source")
-        ).otherwise(F.col("target")).alias("target"),
-        F.col("weight").alias("value"),
+    links = flows.select(
+        F.concat(F.lit("type_"), F.col("stype")).alias("source"),
+        F.concat(F.lit("type_"), F.col("ttype")).alias("target"),
+        "value",
         "category",
     )
-    flow_nodes = _nodes_from_links(links, nodes, layered).withColumn(
-        "layer", F.coalesce("layer", F.lit(1))
+    outv = links.groupBy(F.col("source").alias("node_id")).agg(
+        F.sum("value").alias("out_val")
+    )
+    inv = links.groupBy(F.col("target").alias("node_id")).agg(
+        F.sum("value").alias("in_val")
+    )
+    both = (
+        outv.join(inv, "node_id", "full")
+        .withColumn("out_val", F.coalesce("out_val", F.lit(0.0)))
+        .withColumn("in_val", F.coalesce("in_val", F.lit(0.0)))
+    )
+    layer = (
+        F.when(F.col("out_val") > F.col("in_val") * 1.5, 0)
+        .when(F.col("in_val") > F.col("out_val") * 1.5, 2)
+        .otherwise(F.lit(1))
+    )
+    etype = F.substring(F.col("node_id"), 6, 2_000_000)
+    flow_nodes = both.select(
+        F.col("node_id").alias("id"),
+        F.initcap(etype).alias("label"),
+        etype.alias("entity_type"),
+        layer.alias("layer"),
+        (F.col("out_val") + F.col("in_val")).alias("value"),
     )
     stats = _flow_stats(links, flow_nodes)
     return flow_nodes, links, stats

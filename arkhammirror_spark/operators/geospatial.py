@@ -142,19 +142,15 @@ def haversine_km(lat1, lng1, lat2, lng2):
     )
 
 
-def extract_geo_nodes(
-    nodes: DataFrame,
-    id_col: str = "node_id",
-    label_col: str = "label",
-) -> DataFrame:
-    """Corpus-wide extract_geo_nodes: optional columns lat/lng/sentence/
+def extract_geo_nodes(nodes: DataFrame) -> DataFrame:
+    """Corpus-wide extract_geo_nodes over (node_id, label): optional columns lat/lng/sentence/
     description/address are consumed when present. One Arrow pass (the
     label-anchored arm needs a per-row regex); rows without valid
     coordinates drop, exactly like the reference. Returns
     (node_id, label, latitude, longitude, location_type)."""
     opt = [c for c in ("lat", "lng", "sentence", "description", "address")
            if c in nodes.columns]
-    id_ddl = nodes.schema[id_col].dataType.simpleString()
+    id_ddl = nodes.schema["node_id"].dataType.simpleString()
     schema = (
         f"node_id {id_ddl}, label string, latitude double, "
         "longitude double, location_type string"
@@ -174,17 +170,12 @@ def extract_geo_nodes(
         return [{"label": label, "latitude": res[0], "longitude": res[1],
                  "location_type": res[2]}]
 
-    return explode_lane(nodes.select(id_col, label_col, *opt), _geo, schema)
+    return explode_lane(nodes.select("node_id", "label", *opt), _geo, schema)
 
 
-def edge_distances(
-    geo_nodes: DataFrame,
-    edges: DataFrame,
-    src_col: str = "source",
-    dst_col: str = "target",
-) -> DataFrame:
-    """calculate_edge_distances (:292-333): edges whose both endpoints
-    resolved, distance as a native column."""
+def edge_distances(geo_nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """calculate_edge_distances (:292-333): (source, target) edges whose
+    both endpoints resolved, distance as a native column."""
     a = geo_nodes.select(
         F.col("node_id").alias("_sid"),
         F.col("latitude").alias("lat1"),
@@ -196,11 +187,11 @@ def edge_distances(
         F.col("longitude").alias("lng2"),
     )
     return (
-        edges.join(a, edges[src_col] == F.col("_sid"))
-        .join(b, edges[dst_col] == F.col("_tid"))
+        edges.join(a, edges["source"] == F.col("_sid"))
+        .join(b, edges["target"] == F.col("_tid"))
         .select(
-            F.col(src_col).alias("source_id"),
-            F.col(dst_col).alias("target_id"),
+            F.col("source").alias("source_id"),
+            F.col("target").alias("target_id"),
             haversine_km(
                 F.col("lat1"), F.col("lng1"), F.col("lat2"), F.col("lng2")
             ).alias("distance_km"),

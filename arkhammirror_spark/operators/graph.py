@@ -19,6 +19,9 @@ from pyspark.sql import DataFrame, functions as F
 
 from .driver_lane import bounded_collect, local_frame
 
+# the PageRank damping factor of the driver reference, the distributed loop,
+# its driver lane and the DuckDB oracle (algorithms.py:496)
+DAMPING = 0.85
 
 # ----------------------------- driver-side (≤ reference caps) --------------
 
@@ -31,9 +34,7 @@ def _adjacency(edge_rows) -> dict[str, set[str]]:
     return adj
 
 
-def pagerank(
-    edges: DataFrame, damping: float = 0.85, iterations: int = 20
-) -> dict[str, float]:
+def pagerank(edges: DataFrame, iterations: int = 20) -> dict[str, float]:
     """Power iteration on the undirected co-mention graph (algorithms.py:496)."""
     adj = _adjacency(edges.collect())
     n = len(adj)
@@ -44,27 +45,21 @@ def pagerank(
         nxt = {}
         for node in adj:
             incoming = sum(rank[nb] / len(adj[nb]) for nb in adj[node])
-            nxt[node] = (1 - damping) / n + damping * incoming
+            nxt[node] = (1 - DAMPING) / n + DAMPING * incoming
         rank = nxt
     return rank
 
 
-def ego_network(edges: DataFrame, center: str, depth: int = 1) -> DataFrame:
-    """BFS ego-subgraph (builder.py:549-619) as iterative DataFrame filters."""
-    frontier = {center}
+def ego_network(edges: DataFrame, center: str) -> DataFrame:
+    """Depth-1 ego-subgraph (builder.py:549-619): the edges among the
+    center and its neighbours, as two DataFrame filters."""
+    rows = edges.where(
+        (F.col("entity_a") == center) | (F.col("entity_b") == center)
+    ).collect()
     seen = {center}
-    for _ in range(depth):
-        rows = edges.where(
-            F.col("entity_a").isin(*frontier) | F.col("entity_b").isin(*frontier)
-        ).collect()
-        nxt = set()
-        for r in rows:
-            nxt.add(r["entity_a"])
-            nxt.add(r["entity_b"])
-        frontier = nxt - seen
-        seen |= nxt
-        if not frontier:
-            break
+    for r in rows:
+        seen.add(r["entity_a"])
+        seen.add(r["entity_b"])
     return edges.where(
         F.col("entity_a").isin(*seen) & F.col("entity_b").isin(*seen)
     )
@@ -87,7 +82,7 @@ def _undirected_edges(edges: DataFrame) -> DataFrame:
 
 
 def _pagerank_fixed_point(
-    head, damping: float, iterations: int, scale: int
+    head, iterations: int, scale: int
 ) -> list[tuple[str, float]]:
     """`pagerank_distributed`'s quantized loop on the driver, over the rows
     of `_undirected_edges`: the same symmetric edge set, the same
@@ -104,7 +99,7 @@ def _pagerank_fixed_point(
     if n == 0:
         return []
     fscale = float(scale)
-    base = (1.0 - damping) / n
+    base = (1.0 - DAMPING) / n
     rank = dict.fromkeys(nbrs, 1.0 / n)
     r_int = {v: math.floor(x * fscale + 0.5) for v, x in rank.items()}
     for _ in range(iterations):
@@ -113,7 +108,7 @@ def _pagerank_fixed_point(
             c = r_int[u] // len(out)
             for v in out:
                 inc[v] += c
-        rank = {v: base + damping * (float(inc[v]) / fscale) for v in nbrs}
+        rank = {v: base + DAMPING * (float(inc[v]) / fscale) for v in nbrs}
         r_int = {v: math.floor(x * fscale + 0.5) for v, x in rank.items()}
     return sorted(rank.items())
 
@@ -147,7 +142,6 @@ def graph_statistics(edges: DataFrame) -> DataFrame:
 
 def pagerank_distributed(
     edges: DataFrame,
-    damping: float = 0.85,
     iterations: int = 20,
     quantize: int | None = None,
     driver_cap: int | None = 100_000,
@@ -182,7 +176,7 @@ def pagerank_distributed(
         if head is not None:
             return local_frame(
                 spark,
-                _pagerank_fixed_point(head, damping, iterations, 10**quantize),
+                _pagerank_fixed_point(head, iterations, 10**quantize),
                 "name string, rank double",
             )
     sym = (
@@ -221,13 +215,13 @@ def pagerank_distributed(
         )
         if scale is None:
             rank_col = (
-                F.lit((1.0 - damping) / n)
-                + F.lit(damping) * F.coalesce(F.col("incoming"), F.lit(0.0))
+                F.lit((1.0 - DAMPING) / n)
+                + F.lit(DAMPING) * F.coalesce(F.col("incoming"), F.lit(0.0))
             ).alias("rank")
         else:
             rank_col = (
-                F.lit((1.0 - damping) / n)
-                + F.lit(damping)
+                F.lit((1.0 - DAMPING) / n)
+                + F.lit(DAMPING)
                 * (
                     F.coalesce(F.col("incoming"), F.lit(0)).cast("double")
                     / F.lit(float(scale))
@@ -251,7 +245,6 @@ def betweenness_distributed(
     edges: DataFrame,
     limit: int = 50,
     sample_sources: int | None = None,
-    seed: int = 7,
     edge_cap: int = 10_000_000,
     auto_sample_above: int = 4096,
 ) -> DataFrame:
@@ -332,7 +325,7 @@ def betweenness_distributed(
     if sample_sources is not None and sample_sources < n:
         import random
 
-        sources = random.Random(seed).sample(nodes, sample_sources)
+        sources = random.Random(7).sample(nodes, sample_sources)
         scale = n / sample_sources
 
     bc = spark.sparkContext.broadcast((adj, nodes))
@@ -386,15 +379,13 @@ def betweenness_distributed(
     )
 
 
-def label_propagation_communities(
-    edges: DataFrame, max_iterations: int = 20, weight_col: str | None = None
-) -> DataFrame:
+def label_propagation_communities(edges: DataFrame) -> DataFrame:
     """Distributed community detection for graphs beyond the reference's
     500-node cap — the scale sibling of the reference's Louvain
     communities (algorithms.py:583). Louvain's local-moving is inherently sequential
     (node-by-node moves over an in-memory graph), so the distributed lane
     uses synchronous WEIGHTED LABEL PROPAGATION: each round every node
-    adopts the label with the greatest incident edge-weight sum among its
+    adopts the label with the greatest incident edge count among its
     neighbours' labels ∪ its own label (self counted with weight 1 — the
     standard damping that stops two-node oscillation), ties broken to the
     smaller label, so the result is deterministic under any partitioning.
@@ -403,18 +394,15 @@ def label_propagation_communities(
     Semantics note: LPA optimizes local label agreement, not modularity —
     parity with the reference Louvain is NOT claimed (and is impossible to
     pin: Louvain's result depends on its sequential visit order). Converges
-    on no-change; the cap is the standard LPA remedy for rare oscillation
+    on no-change; the 20-round cap is the standard LPA remedy for rare
+    oscillation
     and capping out returns the current labels (heuristic contract, unlike
     connected_components_distributed whose labels must be exact).
     Returns (name, community).
     """
     from pyspark.sql import Window
 
-    w_expr = (
-        F.col(weight_col).cast("double")
-        if weight_col
-        else F.lit(1.0)
-    )
+    w_expr = F.lit(1.0)
     sym = (
         edges.select(
             F.col("entity_a").alias("src"), F.col("entity_b").alias("dst"),
@@ -434,17 +422,16 @@ def label_propagation_communities(
     # connected_components_distributed's): bounded graphs pay only fixed
     # per-round scheduling in the distributed loop, so emulate the EXACT
     # synchronous min-tie weighted LPA on the driver. The update rule is
-    # deterministic under any partitioning, and for integer-valued weights
-    # (including the unweighted w=1 contract path) the per-label sums are
-    # exact in float regardless of addition order, so labels are identical
-    # to the distributed loop's.
+    # deterministic under any partitioning, and the per-label sums of unit
+    # weights are exact in float regardless of addition order, so labels
+    # are identical to the distributed loop's.
     head = bounded_collect(sym, 100_000)
     if head is not None:
         adj: dict[str, dict[str, float]] = {}
         for r in head:
             adj.setdefault(r["src"], {})[r["dst"]] = r["w"]
         labels_d = {n: n for n in adj}
-        for _ in range(max_iterations):
+        for _ in range(20):
             new_labels = {}
             changed = 0
             for n, nbrs in adj.items():
@@ -472,7 +459,7 @@ def label_propagation_communities(
     )
     win = Window.partitionBy("src").orderBy(F.desc("s"), F.asc("community"))
     win_all = Window.partitionBy("src")
-    for _ in range(max_iterations):
+    for _ in range(20):
         # One fused round: the self row (weight-1 damping) doubles as the
         # carrier of the PREVIOUS label — `is_self` survives the groupBy as
         # a max flag, and a same-partition window recovers prev per node, so
@@ -513,18 +500,14 @@ def label_propagation_communities(
 
 
 def connected_components_distributed(
-    edges: DataFrame,
-    max_iterations: int = 50,
-    require_convergence: bool = True,
-    driver_cap: int | None = 100_000,
+    edges: DataFrame, driver_cap: int | None = 100_000
 ) -> DataFrame:
     """Min-label propagation over (node, component) frames.
 
     Each round: component := min(component over neighbors ∪ self); converges
     in O(diameter) rounds. The loop runs UNTIL the changed-count reaches 0 —
-    max_iterations is a safety cap, and exhausting it without convergence
-    raises (require_convergence=True, default) rather than silently
-    returning partially-propagated labels: a long-chain component deeper
+    50 rounds is a safety cap, and exhausting it without convergence
+    raises rather than silently returning partially-propagated labels: a long-chain component deeper
     than the cap would otherwise produce wrong components that no downstream
     check can see. Pure DataFrame joins → scales with the cluster
     (what the reference cannot do beyond one process's memory).
@@ -589,7 +572,7 @@ def connected_components_distributed(
         "component", F.col("name")
     )
     converged = False
-    for _ in range(max_iterations):
+    for _ in range(50):
         # Fused round: each node's new label is min(own ∪ neighbors'); the
         # self contribution rides the same groupBy tagged is_self so the OLD
         # label comes out of the aggregate (max over the when() keeps the
@@ -656,11 +639,10 @@ def connected_components_distributed(
             converged = True
             break
     sym.unpersist()
-    if not converged and require_convergence:
+    if not converged:
         raise RuntimeError(
-            f"connected_components_distributed did not converge within "
-            f"{max_iterations} iterations (graph diameter exceeds the cap); "
-            f"raise max_iterations or pass require_convergence=False"
+            "connected_components_distributed did not converge within 50 "
+            "iterations (the graph's diameter exceeds the cap)"
         )
     return labels
 
@@ -672,17 +654,14 @@ def filter_graph(
     min_degree: int | None = None,
     min_edge_weight: float | None = None,
     relationship_types: list[str] | None = None,
-    document_ids: list[str] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Multi-criteria graph filter (builder.py:458-547), frame-native.
 
     Reference order preserved: node filters run against the STORED
     degree (pre-filter), edges keep only pairs whose BOTH endpoints
-    survive, then weight / relationship-type / document-id (any-overlap)
-    filters, then degrees are recomputed over the filtered edges and
+    survive, then weight / relationship-type filters, then degrees are recomputed over the filtered edges and
     isolated nodes dropped. nodes: (id, label, entity_type, degree[,
-    ...]); edges: (source, target, relationship_type, weight[,
-    document_ids array<string>, ...]). Every step is a column filter or
+    ...]); edges: (source, target, relationship_type, weight[, ...]). Every step is a column filter or
     an equi-join on the node id — no collect, holds at any graph size.
     Returns (filtered_nodes_with_recomputed_degree, filtered_edges)."""
     n = nodes
@@ -699,13 +678,6 @@ def filter_graph(
         e = e.where(F.col("weight") >= min_edge_weight)
     if relationship_types:
         e = e.where(F.col("relationship_type").isin(*relationship_types))
-    if document_ids and "document_ids" in edges.columns:
-        e = e.where(
-            F.arrays_overlap(
-                F.col("document_ids"),
-                F.array(*[F.lit(d) for d in document_ids]),
-            )
-        )
     ends = e.select(F.col("source").alias("id")).unionAll(
         e.select(F.col("target").alias("id"))
     )

@@ -75,19 +75,10 @@ def _xml_string(root: ET.Element) -> str:
     return out.getvalue()
 
 
-def export_json(
-    nodes: DataFrame,
-    edges: DataFrame,
-    project_id: str,
-    include_metadata: bool = True,
-    metadata: dict[str, Any] | None = None,
-    created_at=None,
-    updated_at=None,
-) -> str:
-    """exporter.py:50-66 / Graph.to_dict (models.py:169-183): nodes and
-    edges rendered in frame order with `json.dumps(indent=2)`; metadata
-    carries created/updated timestamps plus entity/relationship
-    counts."""
+def export_json(nodes: DataFrame, edges: DataFrame, project_id: str) -> str:
+    """exporter.py:50-66 / Graph.to_dict (models.py:169-183) with
+    include_metadata=False: nodes and edges rendered in frame order with
+    `json.dumps(indent=2)`, no metadata block."""
     nrows, erows = _rows(nodes, edges)
     data: dict[str, Any] = {
         "project_id": project_id,
@@ -114,29 +105,15 @@ def export_json(
             }
             for e in erows
         ],
-        "metadata": {
-            **(metadata or {}),
-            "created_at": created_at.isoformat() if created_at else None,
-            "updated_at": updated_at.isoformat() if updated_at else None,
-            "entity_count": len(nrows),
-            "relationship_count": len(erows),
-        },
     }
-    if not include_metadata:
-        data.pop("metadata", None)
     return json.dumps(data, indent=2)
 
 
-def export_graphml(
-    nodes: DataFrame,
-    edges: DataFrame,
-    project_id: str,
-    include_metadata: bool = True,
-) -> str:
+def export_graphml(nodes: DataFrame, edges: DataFrame, project_id: str) -> str:
     """exporter.py:68-140: Gephi/Cytoscape/yEd-compatible GraphML with
     the reference's exact key declarations, undirected graph element,
-    e<i> edge ids, and prop_<k> custom node properties when
-    include_metadata."""
+    e<i> edge ids, and prop_<k> custom node properties (the reference's
+    include_metadata=True)."""
     nrows, erows = _rows(nodes, edges)
     root = ET.Element("graphml")
     root.set("xmlns", "http://graphml.graphdrawing.org/xmlns")
@@ -159,7 +136,7 @@ def export_graphml(
         el.set("id", n["id"])
         for kid, _, fn in _GRAPHML_NODE_KEYS:
             _graphml_data(el, kid, fn(n))
-        if include_metadata and n.get("properties"):
+        if n.get("properties"):
             for k, v in n["properties"].items():
                 _graphml_data(el, f"prop_{k}", str(v))
     for i, e in enumerate(erows):
@@ -172,24 +149,17 @@ def export_graphml(
     return _xml_string(root)
 
 
-def export_gexf(
-    nodes: DataFrame,
-    edges: DataFrame,
-    project_id: str,
-    updated_at=None,
-) -> str:
+def export_gexf(nodes: DataFrame, edges: DataFrame, project_id: str) -> str:
     """exporter.py:141-227: GEXF 1.2draft with the reference's meta
-    block (creator/description), static undirected graph, numbered
-    attvalues, and weight as an edge attribute."""
+    block (creator/description; an empty lastmodifieddate, the
+    reference's value for a graph without updated_at), static undirected
+    graph, numbered attvalues, and weight as an edge attribute."""
     nrows, erows = _rows(nodes, edges)
     root = ET.Element("gexf")
     root.set("xmlns", "http://www.gexf.net/1.2draft")
     root.set("version", "1.2")
     meta = ET.SubElement(root, "meta")
-    meta.set(
-        "lastmodifieddate",
-        updated_at.strftime("%Y-%m-%d") if updated_at else "",
-    )
+    meta.set("lastmodifieddate", "")
     creator = ET.SubElement(meta, "creator")
     creator.text = "ArkhamMirror Graph Shard"
     desc = ET.SubElement(meta, "description")

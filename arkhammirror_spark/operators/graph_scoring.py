@@ -74,7 +74,6 @@ def composite_entity_scores(
     nodes: DataFrame,
     mentions: DataFrame | None = None,
     credibility: DataFrame | None = None,
-    centrality: DataFrame | None = None,
     config: CompositeConfig | None = None,
     reference_date=None,
 ) -> DataFrame:
@@ -83,9 +82,8 @@ def composite_entity_scores(
     ``nodes``: (node_id, entity_id, label, entity_type, degree,
     document_count). ``mentions``: (entity_id, document_id, mention_date,
     source_id) — any column may be null. ``credibility``: (source_id,
-    rating). ``centrality``: (node_id, raw) precomputed by any of the
-    repo's centrality lanes; None → degree centrality (:255-256, raw =
-    node degree). ``reference_date``: an ISO string/date for the recency
+    rating). Centrality is degree centrality (:255-256, raw = node
+    degree). ``reference_date``: an ISO string/date for the recency
     clock — REQUIRED when recency is enabled (the reference defaults to
     utcnow(), :347, which a deterministic engine must pin explicitly).
 
@@ -103,11 +101,7 @@ def composite_entity_scores(
     )
 
     # centrality: raw/max, node-keyed (:271-283)
-    cent_raw = (
-        centrality.select("node_id", F.col("raw").cast("double").alias("raw"))
-        if centrality is not None
-        else n.select("node_id", F.col("degree").cast("double").alias("raw"))
-    )
+    cent_raw = n.select("node_id", F.col("degree").cast("double").alias("raw"))
     cent_max = cent_raw.agg(
         F.max(F.when(F.col("raw") > 0, F.col("raw"))).alias("m")
     ).withColumn("_k", F.lit(1))

@@ -2,8 +2,8 @@
 
 Reference lineage: arkham-shard-graph/temporal.py (`TemporalGraphEngine`):
 - ``generate_snapshots`` (:189-265) + ``get_snapshot_at`` (:267-407):
-  snapshots at interval steps (interval re-widened to fit
-  ``max_snapshots``, :229-233). Snapshot membership is MENTION-driven:
+  snapshots at interval steps (interval re-widened to fit the reference's
+  max_snapshots=50, :229-233). Snapshot membership is MENTION-driven:
   an entity is present iff it has a mention passing the date filter
   (cumulative ``created_at <= ts``, or the inclusive window
   ``ts - interval <= created_at <= ts``, :298-306); an edge is present
@@ -20,7 +20,7 @@ per snapshot:
   its FIRST-member snapshot index (entities: min mention date; edges:
   min over docs of max(first mention of either endpoint in that doc))
   — counts come from one broadcast range-join against the
-  ≤``max_snapshots`` snapshot frame, added = the k_first group,
+  ≤50-snapshot frame, added = the k_first group,
   removals are structurally zero.
 - windowed mode: each mention lands in at most TWO windows (step ==
   window, inclusive bounds), so the membership frame is ≤2× the
@@ -103,23 +103,18 @@ def snapshot_series(
     end,
     interval_days: int,
     cumulative: bool = True,
-    max_snapshots: int = 50,
-    entity_col: str = "entity_id",
-    doc_col: str = "document_id",
-    ts_col: str = "created_at",
 ) -> DataFrame:
-    """The per-snapshot summary stream of generate_snapshots: one row
-    per snapshot with node/edge counts, density, and added/removed
-    counts vs the previous snapshot."""
+    """The per-snapshot summary stream of generate_snapshots over
+    (entity_id, document_id, created_at) mentions: one row per snapshot
+    (at most 50) with node/edge counts, density, and added/removed counts
+    vs the previous snapshot."""
     spark = mentions.sparkSession
-    interval_days = _fit_interval(start, end, interval_days, max_snapshots)
+    interval_days = _fit_interval(start, end, interval_days, 50)
     n_snap = (end - start).days // interval_days + 1
     snaps = _snaps_frame(spark, start, n_snap, interval_days)
 
     m = mentions.select(
-        F.col(entity_col).alias("entity_id"),
-        F.col(doc_col).alias("document_id"),
-        F.to_date(ts_col).alias("d"),
+        "entity_id", "document_id", F.to_date("created_at").alias("d")
     ).where(F.col("d").isNotNull())
 
     if cumulative:

@@ -166,15 +166,13 @@ def shannon_entropy(data: bytes) -> float:
     return float(-(p * np.log2(p)).sum())
 
 
-def entropy_regions(
-    data: bytes, chunk_size: int = ENTROPY_CHUNK_SIZE
-) -> list[tuple[int, int, float, bool, str]]:
+def entropy_regions(data: bytes) -> list[tuple[int, int, float, bool, str]]:
     """analyze_entropy_regions (:92-139): (start, end, entropy,
     is_anomalous, description) per chunk; trailing chunks < 64 bytes
     skipped exactly like the reference."""
     regions = []
-    for i in range(0, len(data), chunk_size):
-        chunk = data[i:i + chunk_size]
+    for i in range(0, len(data), ENTROPY_CHUNK_SIZE):
+        chunk = data[i:i + ENTROPY_CHUNK_SIZE]
         if len(chunk) < 64:
             continue
         e = shannon_entropy(chunk)
@@ -185,7 +183,7 @@ def entropy_regions(
         else:
             desc = ""
         regions.append(
-            (i, min(i + chunk_size, len(data)), e,
+            (i, min(i + ENTROPY_CHUNK_SIZE, len(data)), e,
              e >= ENTROPY_THRESHOLD_SUSPICIOUS, desc)
         )
     return regions
@@ -198,7 +196,7 @@ def chi2_sf_df1(x: float) -> float:
     return math.erfc(math.sqrt(x / 2.0)) if x > 0 else 1.0
 
 
-def lsb_stats(arr, sample_size: int = LSB_SAMPLE_SIZE) -> dict | None:
+def lsb_stats(arr) -> dict | None:
     """analyze_lsb_image (:161-210) over a DECODED pixel array: LSBs of
     the first 3 channels (gray → the single channel), 50/50 chi-square,
     suspicion rule and confidence verbatim. Above the sample cap the
@@ -215,8 +213,8 @@ def lsb_stats(arr, sample_size: int = LSB_SAMPLE_SIZE) -> dict | None:
     n_pix = pix.shape[0]
     if n_pix == 0:
         return None
-    if n_pix > sample_size:
-        idx = np.linspace(0, n_pix - 1, sample_size).astype(np.int64)
+    if n_pix > LSB_SAMPLE_SIZE:
+        idx = np.linspace(0, n_pix - 1, LSB_SAMPLE_SIZE).astype(np.int64)
         pix = pix[idx]
     lsbs = (pix & 1).ravel()
     n = int(lsbs.size)
@@ -274,7 +272,6 @@ def scan_payload(
     data: bytes,
     file_extension: str,
     mime_type: str | None,
-    chunk_size: int = ENTROPY_CHUNK_SIZE,
     max_file_size_mb: int = MAX_FILE_SIZE_MB,
 ) -> dict:
     """full_scan (:366-502) for one payload — pure function shared by the
@@ -303,7 +300,7 @@ def scan_payload(
     confidences: list[float] = []
 
     out["entropy_global"] = shannon_entropy(data)
-    regions = entropy_regions(data, chunk_size)
+    regions = entropy_regions(data)
     out["n_regions"] = len(regions)
     high = [r for r in regions if r[3]]
     out["n_high_regions"] = len(high)
@@ -388,13 +385,10 @@ _SCAN_FIELDS = [
 def hidden_content_scan(
     media: DataFrame,
     id_col: str = "media_id",
-    data_col: str = "data",
-    ext_col: str = "ext",
-    mime_col: str = "mime",
-    chunk_size: int = ENTROPY_CHUNK_SIZE,
     with_hashes: bool = True,
 ) -> DataFrame:
-    """Corpus-wide full_scan: one Arrow-batched pass computes the entropy/
+    """Corpus-wide full_scan of (id_col, data, ext, mime) rows: one
+    Arrow-batched pass computes the entropy/
     magic/LSB/histogram arms; md5/sha256/sha512 (calculate_file_hashes,
     :284-301) stay native (`F.md5`/`F.sha2`) so the hash math never
     leaves the JVM. At 100 TB the scan is embarrassingly parallel — no
@@ -406,19 +400,18 @@ def hidden_content_scan(
 
     def _scan(data, ext, mime) -> list[dict]:
         return [scan_payload(
-            bytes(data) if data is not None else b"",
-            ext or "", mime, chunk_size=chunk_size,
+            bytes(data) if data is not None else b"", ext or "", mime
         )]
 
     scanned = explode_lane(
-        media.select(id_col, data_col, ext_col, mime_col), _scan, schema
+        media.select(id_col, "data", "ext", "mime"), _scan, schema
     )
     if not with_hashes:
         return scanned
     hashes = media.select(
         F.col(id_col),
-        F.md5(F.col(data_col)).alias("md5"),
-        F.sha2(F.col(data_col), 256).alias("sha256"),
-        F.sha2(F.col(data_col), 512).alias("sha512"),
+        F.md5(F.col("data")).alias("md5"),
+        F.sha2(F.col("data"), 256).alias("sha256"),
+        F.sha2(F.col("data"), 512).alias("sha512"),
     )
     return scanned.join(hashes, id_col)

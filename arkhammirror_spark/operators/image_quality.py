@@ -127,20 +127,17 @@ _METRICS_SCHEMA = (
 )
 
 
-def image_quality_metrics(
-    media: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Per-image quality metrics (classify(), image_quality.py:41-119).
+def image_quality_metrics(media: DataFrame) -> DataFrame:
+    """Per-image (media_id, payload) quality metrics (classify(),
+    image_quality.py:41-119).
 
     compression_ratio = payload bytes / (w*h*(3 if RGB else 1)) with the
     container-declared mode; decode failures land in the reference's
     except arm (contrast 0.5, has_noise True, layout 'unknown',
     err = 1)."""
     cols = media.select(
-        F.col(id_col).cast("string").alias("media_id"),
-        F.col(payload_col).alias("payload"),
+        F.col("media_id").cast("string").alias("media_id"),
+        "payload",
     )
 
     def _metrics(payload) -> list[dict]:
@@ -255,57 +252,34 @@ def classify_image_quality(
     )
 
 
-def ocr_route(
-    classified: DataFrame,
-    ocr_mode: str = "auto",
-    enable_downscale: bool = True,
-    skip_blank_pages: bool = True,
-) -> DataFrame:
-    """get_ocr_route (image_quality.py:274-341) as one CASE column:
-    blank pages skip OCR entirely; high-DPI images get the downscale
-    step prepended; qwen_only / paddle_only overrides; auto routing by
-    classification with complex/mixed MESSY layouts escalating to the
-    VLM. Route serialized pipe-joined (empty string = skip)."""
-    down = F.col("needs_downscale") & F.lit(enable_downscale)
-    pre = F.when(down, F.array(F.lit("cpu-image:downscale"))).otherwise(
-        F.array().cast("array<string>")
-    )
-    if ocr_mode == "qwen_only":
-        tail = F.array(F.lit("cpu-image"), F.lit("gpu-qwen"))
-    elif ocr_mode == "paddle_only":
-        tail = F.when(
-            (F.col("classification") == "clean") & ~down,
+def ocr_route(classified: DataFrame) -> DataFrame:
+    """get_ocr_route (image_quality.py:274-341) in its default auto
+    mode, as one CASE column: blank pages skip OCR entirely; high-DPI
+    images get the downscale step prepended; routing by classification
+    with complex/mixed MESSY layouts escalating to the VLM. Route
+    serialized pipe-joined (empty string = skip)."""
+    pre = F.when(
+        F.col("needs_downscale"), F.array(F.lit("cpu-image:downscale"))
+    ).otherwise(F.array().cast("array<string>"))
+    tail = (
+        F.when(
+            F.col("classification") == "clean",
             F.array(F.lit("gpu-paddle")),
-        ).otherwise(
-            F.concat(
-                F.when(
-                    F.col("classification") != "clean",
-                    F.array(F.lit("cpu-image")),
-                ).otherwise(F.array().cast("array<string>")),
-                F.array(F.lit("gpu-paddle")),
-            )
         )
-    else:
-        tail = (
+        .when(
+            F.col("classification") == "fixable",
+            F.array(F.lit("cpu-image"), F.lit("gpu-paddle")),
+        )
+        .otherwise(
             F.when(
-                F.col("classification") == "clean",
-                F.array(F.lit("gpu-paddle")),
-            )
-            .when(
-                F.col("classification") == "fixable",
-                F.array(F.lit("cpu-image"), F.lit("gpu-paddle")),
-            )
-            .otherwise(
-                F.when(
-                    F.col("layout_complexity").isin("mixed", "complex"),
-                    F.array(F.lit("cpu-image"), F.lit("gpu-qwen")),
-                ).otherwise(
-                    F.array(F.lit("cpu-image"), F.lit("gpu-paddle"))
-                )
+                F.col("layout_complexity").isin("mixed", "complex"),
+                F.array(F.lit("cpu-image"), F.lit("gpu-qwen")),
+            ).otherwise(
+                F.array(F.lit("cpu-image"), F.lit("gpu-paddle"))
             )
         )
+    )
     route = F.when(
-        F.col("is_blank") & F.lit(skip_blank_pages),
-        F.array().cast("array<string>"),
+        F.col("is_blank"), F.array().cast("array<string>")
     ).otherwise(F.concat(pre, tail))
     return classified.withColumn("route", F.array_join(route, "|"))

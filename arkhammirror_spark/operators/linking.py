@@ -25,18 +25,13 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 
-def link_mentions(
-    mentions: DataFrame,
-    canonical: DataFrame,
-    mention_text: str = "text",
-    canon_name: str = "name_lower",
-    canon_id: str = "canonical_id",
-    fuzzy_max_dist: int = 2,
-) -> DataFrame:
-    """Attach (canonical_id, link_confidence, link_reason) to each mention."""
-    m = mentions.withColumn("_mlow", F.lower(F.col(mention_text)))
+def link_mentions(mentions: DataFrame, canonical: DataFrame) -> DataFrame:
+    """Attach (canonical_id, link_confidence, link_reason) to each
+    mention's `text`: an exact match on the canonical `name_lower`, else
+    the nearest name within Levenshtein distance 2."""
+    m = mentions.withColumn("_mlow", F.lower(F.col("text")))
     c = canonical.select(
-        F.col(canon_name).alias("_clow"), F.col(canon_id).alias("_cid")
+        F.col("name_lower").alias("_clow"), F.col("canonical_id").alias("_cid")
     )
 
     exact = m.join(F.broadcast(c), m["_mlow"] == c["_clow"], "left").select(
@@ -54,7 +49,7 @@ def link_mentions(
     )
 
     # --- fuzzy tier: blocked equi-join + in-block Levenshtein verify --------
-    bucket_w = fuzzy_max_dist + 2  # bucket width > k ⇒ |len diff|<=k spans <=1 bucket boundary
+    bucket_w = 4  # bucket width > k=2 ⇒ |len diff|<=k spans <=1 bucket boundary
     m_blocked = unmatched.withColumn(
         "_blk",
         F.explode(
@@ -82,9 +77,9 @@ def link_mentions(
     # pair instead of O(len²)); returns -1 above the bound → null out
     dist = F.when(
         F.col("_clow").isNotNull()
-        & (F.abs(F.length("_mlow") - F.length("_clow")) <= fuzzy_max_dist),
+        & (F.abs(F.length("_mlow") - F.length("_clow")) <= 2),
         F.nullif(
-            F.levenshtein(F.col("_mlow"), F.col("_clow"), fuzzy_max_dist),
+            F.levenshtein(F.col("_mlow"), F.col("_clow"), 2),
             F.lit(-1),
         ),
     )

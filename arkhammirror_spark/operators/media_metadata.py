@@ -542,14 +542,12 @@ def metadata_row(payload) -> dict[str, object]:
     return row
 
 
-def extract_media_metadata(
-    media: DataFrame, id_col: str = "media_id", payload_col: str = "payload"
-) -> DataFrame:
-    """binary payload column -> one wide metadata row per document. All
+def extract_media_metadata(media: DataFrame) -> DataFrame:
+    """(media_id, binary payload) -> one wide metadata row per document. All
     stdlib; corrupt containers of a recognized kind quarantine per-row,
     unknown containers pass through with empty metadata + kind='unknown'."""
     return explode_lane(
-        media.select(id_col, payload_col),
+        media.select("media_id", "payload"),
         lambda payload: [metadata_row(payload)],
         METADATA_SCHEMA,
     )

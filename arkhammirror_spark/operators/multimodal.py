@@ -367,21 +367,20 @@ def extract_image_features(media: DataFrame) -> DataFrame:
     return explode_lane(images, _features, IMAGE_FEATURES_SCHEMA)
 
 
-def sample_video_frames(
-    media: DataFrame, fps: float = 1.0, max_frames: int = 16
-) -> DataFrame:
-    """Frame sampling plan for video rows: deterministic frame timestamps from
-    duration (decode stubbed — digests derive from payload+index)."""
+def sample_video_frames(media: DataFrame, max_frames: int = 16) -> DataFrame:
+    """Frame sampling plan for video rows at one frame per second:
+    deterministic frame timestamps from duration (decode stubbed — digests
+    derive from payload+index)."""
 
     def _frames(payload, dur) -> list[dict]:
         if payload is None or dur is None or dur <= 0:
             return []
-        n = min(max_frames, max(1, int(dur * fps)))
+        n = min(max_frames, max(1, int(dur)))
         base = hashlib.sha256(bytes(payload)).hexdigest()[:16]
         return [
             {
                 "frame_index": i,
-                "frame_ts_s": round(i / fps, 3),
+                "frame_ts_s": float(i),
                 "frame_digest": hashlib.sha256(f"{base}:{i}".encode()).hexdigest()[:16],
             }
             for i in range(n)

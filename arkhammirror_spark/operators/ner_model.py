@@ -46,29 +46,26 @@ def model_confidence(text: str) -> float:
 
 
 @functools.cache
-def _load_spacy(model_name: str):
-    """The spaCy pipeline, once per worker, or None when spaCy or the model
-    is missing."""
+def _load_spacy():
+    """The en_core_web_sm spaCy pipeline, once per worker, or None when
+    spaCy or the model is missing."""
     try:
         import spacy  # type: ignore
 
-        return spacy.load(model_name)
+        return spacy.load("en_core_web_sm")
     except Exception:
         return None
 
 
-def extract_mentions_model(
-    docs: DataFrame,
-    model_name: str = "en_core_web_sm",
-    text_col: str = "extracted_text",
-) -> DataFrame:
-    """Mentions via spaCy when importable, mock-NER otherwise (ner.py:63-65)."""
+def extract_mentions_model(docs: DataFrame) -> DataFrame:
+    """Mentions of each doc's `extracted_text` via spaCy when importable,
+    mock-NER otherwise (ner.py:63-65)."""
     schema = StructType(
         [StructField("url", StringType(), False)] + list(MENTION_STRUCT.fields)
     )
 
     def _mentions(text: str) -> list[dict]:
-        nlp = _load_spacy(model_name)
+        nlp = _load_spacy()
         if nlp is None:
             return mock_ner(text)
         return [
@@ -82,4 +79,4 @@ def extract_mentions_model(
             for ent in nlp(text).ents
         ]
 
-    return _explode_per_doc(docs.select("url", text_col), _mentions, schema)
+    return _explode_per_doc(docs.select("url", "extracted_text"), _mentions, schema)

@@ -17,7 +17,7 @@ The reference concatenates the requested documents into one blob and
 counts in driver Python; at corpus scale the same semantics are one
 explode + hash aggregation (counts and first positions combine
 associatively — map-side partial agg, one shuffle on the word), and the
-matcher is a pattern x document cross of bounded size (<= top_n
+matcher is a pattern x document cross of bounded size (<= 10
 patterns, broadcast) with native instr/substring — no Python anywhere.
 """
 
@@ -27,20 +27,16 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 
 def detect_recurring_patterns(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_confidence: float = 0.0,
-    min_count: int = 5,
-    top_n: int = 10,
+    docs: DataFrame, min_confidence: float = 0.0
 ) -> DataFrame:
     """(name, description, word, n_occurrences, confidence, first_doc,
-    first_pos) — the reference's recurring-theme patterns over the corpus
-    formed by all rows ordered by `id_col` (its text-blob order)."""
+    first_pos) — the reference's recurring-theme patterns (words of 5+
+    chars seen at least 5 times, the first 10) over the corpus formed by
+    all (doc_id, text) rows ordered by doc_id (its text-blob order)."""
     words = docs.select(
-        F.col(id_col).alias("_doc"),
+        F.col("doc_id").alias("_doc"),
         F.posexplode(
-            F.split(F.lower(F.col(text_col)), r"\s+")
+            F.split(F.lower(F.col("text")), r"\s+")
         ).alias("_pos", "word"),
     ).where((F.col("word") != "") & (F.length("word") > 4))
     counts = words.groupBy("word").agg(
@@ -51,11 +47,11 @@ def detect_recurring_patterns(
         F.col("n_occurrences").cast("double") / 20.0, F.lit(1.0)
     )
     return (
-        counts.where(F.col("n_occurrences") >= min_count)
+        counts.where(F.col("n_occurrences") >= 5)
         .withColumn("confidence", conf)
         .where(F.col("confidence") >= min_confidence)
         .orderBy(F.col("_first._doc"), F.col("_first._pos"))
-        .limit(top_n)
+        .limit(10)
         .select(
             F.concat(F.lit("Recurring: "), F.col("word")).alias("name"),
             F.format_string(
@@ -71,29 +67,23 @@ def detect_recurring_patterns(
     )
 
 
-def match_patterns_to_docs(
-    patterns: DataFrame,
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    keywords_col: str = "keywords",
-    pattern_name_col: str = "name",
-) -> DataFrame:
+def match_patterns_to_docs(patterns: DataFrame, docs: DataFrame) -> DataFrame:
     """(pattern_name, doc, match_score, start_char, end_char, excerpt) —
-    one row per (pattern, document) whose text contains any of the
+    one row per (name, keywords) pattern and (doc_id, text) document
+    whose text contains any of the
     pattern's keywords, FIRST keyword in criteria order winning
     (shard.py:1629-1631 loops keywords and returns on the first hit).
 
     `patterns` is small by construction (the reference matches at most
     100 listed patterns) — broadcast side of the cross."""
     kw = patterns.select(
-        F.col(pattern_name_col).alias("pattern_name"),
-        F.posexplode(F.col(keywords_col)).alias("_kwi", "keyword"),
+        F.col("name").alias("pattern_name"),
+        F.posexplode(F.col("keywords")).alias("_kwi", "keyword"),
     )
     d = docs.select(
-        F.col(id_col).alias("doc"),
-        F.col(text_col).alias("_text"),
-        F.lower(F.col(text_col)).alias("_ltext"),
+        F.col("doc_id").alias("doc"),
+        F.col("text").alias("_text"),
+        F.lower(F.col("text")).alias("_ltext"),
     )
     hit = (
         d.crossJoin(F.broadcast(kw))

@@ -187,33 +187,22 @@ def image_perceptual_hashes(media: DataFrame) -> DataFrame:
     )
 
 
-def image_neardup(
-    media: DataFrame,
-    hash_type: str = "phash",
-    max_hamming: int = 6,
-    blocks: int | None = None,
-) -> DataFrame:
-    """Similar-image pairs: perceptual hashes + the SimHash lane's Manku
-    block-combination hamming join (exact Hamming-ball result, bucketed).
-    Returns (id_a, id_b, hamming).
+def image_neardup(media: DataFrame) -> DataFrame:
+    """Similar-image pairs: phash signatures within Hamming distance 6,
+    through the SimHash lane's Manku block-combination hamming join (exact
+    Hamming-ball result, bucketed). Returns (id_a, id_b, hamming).
 
-    Scale note: candidate discrimination falls as max_hamming grows — keys
-    are b-k of b signature blocks, so k=6 with the default b=k+3 keys on
-    ~21 bits (C(9,3)=84 combos). The reference's looser UI threshold of 10
-    is available but keys on ~11 bits with b=k+2 (C(12,2)=66 combos) and is
-    only appropriate for collection-sized corpora, not web scale; pass
-    `blocks` explicitly to trade explode factor vs bucket size.
+    Scale note: candidate discrimination falls as the distance grows — keys
+    are b-k of b signature blocks, so k=6 with b=k+3 keys on ~21 bits
+    (C(9,3)=84 combos). The reference's looser UI threshold of 10 would key
+    on ~11 bits and only suits collection-sized corpora, not web scale.
     """
     from .dedup import simhash_pairs_from_sigs
 
-    if hash_type not in ("ahash", "dhash", "phash"):
-        raise ValueError(f"unknown hash_type {hash_type!r}")
-    if blocks is None and max_hamming > 6:
-        blocks = max_hamming + 2  # C(k+3,3) explodes past k=6
     sigs = (
         image_perceptual_hashes(media)
         .where(F.col("error").isNull())
-        .select("media_id", F.col(f"{hash_type}_sig").alias("sig"))
+        .select("media_id", F.col("phash_sig").alias("sig"))
         # slim (id, 64-bit sig) checkpoint: both sides of the banded
         # self-join would otherwise re-run the decode+hash Arrow pass
         # (the invariant-5 slim-hash rule; swap for a storage checkpoint
@@ -221,12 +210,7 @@ def image_neardup(
         .localCheckpoint(eager=True)
     )
     return simhash_pairs_from_sigs(
-        sigs,
-        id_col="media_id",
-        sig_col="sig",
-        max_hamming=max_hamming,
-        n_bits=64,
-        blocks=blocks,
+        sigs, id_col="media_id", sig_col="sig", max_hamming=6
     )
 
 

@@ -49,12 +49,11 @@ def luhn_valid(cand) -> "F.Column":
     return (F.length(clean) >= 13) & (F.pmod(total, F.lit(10)) == 0)
 
 
-def detect_pii(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Per-document PII counts: (id, n_email, n_phone, n_ssn, n_ipv4,
-    n_card_valid, has_pii). Card candidates only count when Luhn-valid."""
-    text = F.col(text_col)
+def detect_pii(df: DataFrame) -> DataFrame:
+    """Per-document PII counts of (doc_id, text) rows: (doc_id, n_email,
+    n_phone, n_ssn, n_ipv4, n_card_valid, has_pii). Card candidates only
+    count when Luhn-valid."""
+    text = F.col("text")
 
     def n_matches(pat: str):
         return F.size(F.regexp_extract_all(text, F.lit(pat), F.lit(0))).cast("long")
@@ -62,7 +61,7 @@ def detect_pii(
     cards = F.regexp_extract_all(text, F.lit(PII_PATTERNS["card"]), F.lit(0))
     n_card_valid = F.size(F.filter(cards, luhn_valid)).cast("long")
     out = df.select(
-        F.col(id_col),
+        "doc_id",
         n_matches(PII_PATTERNS["email"]).alias("n_email"),
         n_matches(PII_PATTERNS["phone"]).alias("n_phone"),
         n_matches(PII_PATTERNS["ssn"]).alias("n_ssn"),

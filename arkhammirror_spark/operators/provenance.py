@@ -7,16 +7,16 @@ Reference semantics: arkham-shard-provenance/forensics.py —
   created/modified from PDF Info and Office core properties, each with its
   source and actor (camera string, software, creator/producer, author/
   last_modified_by), chronologically sorted;
-- compare_documents (:677-808): pairwise similarity checks — exact hash,
-  same camera make+model (conf .9), same device serial (conf .99), same
-  author (conf .8), same creator software (conf .5) — with first-match
-  relationship precedence copy > same_source > same_camera > same_author
-  > unrelated and match_score = mean similarity confidence (1.0 for an
-  exact hash match).
+- compare_documents (:677-808): pairwise similarity checks — same camera
+  make+model (conf .9), same device serial (conf .99), same author
+  (conf .8), same creator software (conf .5) — with first-match
+  relationship precedence same_camera > same_source > same_author >
+  unrelated and match_score = mean similarity confidence. The reference's
+  exact-hash check (copy) needs a checksum the metadata frame lacks.
 
 The reference compares TWO documents per call; at corpus scale the same
-semantics become BLOCKED EQUI-JOINS on each similarity key (checksum,
-(make, model), serial, author) — candidates only where a key matches,
+semantics become BLOCKED EQUI-JOINS on each similarity key ((make,
+model), serial, author) — candidates only where a key matches,
 never all-pairs, the same shape as the linking/near-dup lanes. Both
 operators consume `extract_media_metadata`'s wide frame (raw NULLs, not
 the contract sentinels).
@@ -28,18 +28,16 @@ from pyspark.sql import DataFrame, functions as F
 
 # similarity type -> confidence (forensics.py:711-774)
 SIM_CONFIDENCE = {
-    "exact_hash_match": 1.0,
     "same_device": 0.99,
     "same_camera": 0.9,
     "same_author": 0.8,
     "same_creator_software": 0.5,
 }
 # relationship precedence with assigned confidence — the reference's
-# first-match-wins CHECK ORDER (forensics.py:708-788): hash, then camera,
-# then serial, then author. A camera+serial pair therefore stays
+# first-match-wins CHECK ORDER (forensics.py:708-788): camera, then
+# serial, then author. A camera+serial pair therefore stays
 # same_camera (the serial branch is guarded by `if not relationship_type`).
 _REL_PRECEDENCE = [
-    ("exact_hash_match", "copy", 1.0),
     ("same_camera", "same_camera", 0.7),
     ("same_device", "same_source", 0.95),
     ("same_author", "same_author", 0.6),
@@ -53,8 +51,8 @@ def _parse_any_ts(col):
     )
 
 
-def metadata_timeline(meta: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Wide metadata frame -> (doc, event_type, event_ts raw + parsed,
+def metadata_timeline(meta: DataFrame) -> DataFrame:
+    """Wide metadata frame -> (media_id, event_type, event_ts raw + parsed,
     event_source, event_actor) rows, one per populated timestamp field,
     with the reference's dedup rules (digitized suppressed when equal to
     original, modified suppressed when equal to created)."""
@@ -109,12 +107,10 @@ def metadata_timeline(meta: DataFrame, id_col: str = "media_id") -> DataFrame:
         ),
     )
     out = (
-        meta.select(
-            F.col(id_col), F.explode(events).alias("e"),
-        )
+        meta.select("media_id", F.explode(events).alias("e"))
         .where(F.col("e._keep"))
         .select(
-            id_col,
+            "media_id",
             "e.event_type",
             "e.event_ts",
             # sources 'pdf'/'ooxml' come from the kind column; 'ooxml'
@@ -129,18 +125,14 @@ def metadata_timeline(meta: DataFrame, id_col: str = "media_id") -> DataFrame:
     return out
 
 
-def metadata_relationships(
-    meta: DataFrame,
-    id_col: str = "media_id",
-    checksum_col: str | None = None,
-) -> DataFrame:
-    """Wide metadata frame -> (id_a, id_b, relationship_type, confidence,
+def metadata_relationships(meta: DataFrame) -> DataFrame:
+    """Wide metadata frame keyed by media_id -> (id_a, id_b, relationship_type, confidence,
     match_score, similarity_types). Candidates come ONLY from equality on
     a similarity key (blocked joins — scale-safe); unrelated pairs are
     not emitted (they are the complement)."""
 
     def key_join(frame, keys, sim_type):
-        slim = frame.select(F.col(id_col).alias("_id"), *keys).dropna(
+        slim = frame.select(F.col("media_id").alias("_id"), *keys).dropna(
             subset=[k if isinstance(k, str) else k for k in keys]
         )
         a, b = slim.alias("a"), slim.alias("b")
@@ -160,8 +152,6 @@ def metadata_relationships(
         key_join(meta, ["author"], "same_author"),
         key_join(meta, ["creator"], "same_creator_software"),
     ]
-    if checksum_col:
-        sims.append(key_join(meta, [checksum_col], "exact_hash_match"))
     all_sims = sims[0]
     for s in sims[1:]:
         all_sims = all_sims.unionByName(s)
@@ -180,11 +170,7 @@ def metadata_relationships(
         "id_a",
         "id_b",
         rel.alias("relationship_type"),
-        # an exact hash match pins match_score to 1.0 (forensics.py:718)
-        F.when(
-            F.array_contains(F.col("similarity_types"), "exact_hash_match"),
-            1.0,
-        ).otherwise(F.col("match_score")).alias("match_score"),
+        "match_score",
         conf.alias("confidence"),
         "similarity_types",
     )
@@ -195,12 +181,8 @@ def metadata_relationships(
 # ---------------------------------------------------------------------------
 
 
-def full_scan(
-    media: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Complete forensic scan, one row per document (forensics.py:810-889):
+def full_scan(media: DataFrame) -> DataFrame:
+    """Complete forensic scan, one row per (media_id, payload) document (forensics.py:810-889):
     md5/sha256/sha512 + file size (calculate_hashes, :70-84), the
     kind-dispatched metadata walk, integrity analysis, and the timeline
     event count, with scan_status completed/failed.
@@ -249,10 +231,10 @@ def full_scan(
         }]
 
     scanned = explode_lane(
-        media.select(id_col, payload_col), _scan, schema
+        media.select("media_id", "payload"), _scan, schema
     ).localCheckpoint(eager=False)
     timeline_counts = (
-        metadata_timeline(scanned, id_col="media_id")
+        metadata_timeline(scanned)
         .groupBy("media_id")
         .agg(F.count(F.lit(1)).alias("n_timeline_events"))
     )

@@ -6,7 +6,7 @@ every large-scale training-data pipeline applies after main-content
 extraction. All seven rules compile to Catalyst expressions over one
 split — no Python anywhere:
 
-- word count within [min_words, max_words];
+- word count within [min_words, 100 000];
 - mean word length within [3, 10];
 - symbol-to-word ratio (# and ellipsis) ≤ 0.1;
 - ≤ 90% of lines start with a bullet;
@@ -31,8 +31,6 @@ BULLET_CHARS = ("•", "‣", "▪", "-", "*")
 
 def gopher_repetition(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     top_ns: tuple[int, ...] = (2, 3, 4),
     dup_ns: tuple[int, ...] = (5, 10),
 ) -> DataFrame:
@@ -40,7 +38,7 @@ def gopher_repetition(
     repetitive documents are low-value training data even when the static
     rules pass.
 
-    Per document:
+    Per (doc_id, text) document:
     - dup_line_frac       — lines occurring more than once / lines;
     - dup_line_char_frac  — chars in all occurrences of duplicated lines /
                             chars across lines;
@@ -60,7 +58,7 @@ def gopher_repetition(
     """
     from .spread import spread
 
-    text = F.col(text_col)
+    text = F.col("text")
     # the 1+len(top_ns)+len(dup_ns) explode branches below each re-run the
     # upstream scan; fan a small single-file scan out first so the heavy
     # split/explode work parallelizes
@@ -68,8 +66,8 @@ def gopher_repetition(
     # written inline in the gram lambdas below it would be re-split for
     # every gram position (O(words²) per document)
     words = F.filter(F.split(F.lower(text), r"\s+"), lambda w: F.length(w) > 0)
-    base = spread(df, id_col).select(
-        F.col(id_col).alias("_id"), text.alias("_t"), words.alias("_w")
+    base = spread(df, "doc_id").select(
+        F.col("doc_id").alias("_id"), text.alias("_t"), words.alias("_w")
     )
     total_chars = F.length("_t").cast("double")
 
@@ -142,17 +140,15 @@ def gopher_repetition(
         passes = passes & (F.col(f"top_{n}gram_frac") <= top_thr.get(n, 0.16))
     for n in dup_ns:
         passes = passes & (F.col(f"dup_{n}gram_frac") <= round(0.20 - 0.01 * n, 2))
-    return out.withColumnRenamed("_id", id_col).withColumn("passes", passes)
+    return out.withColumnRenamed("_id", "doc_id").withColumn("passes", passes)
 
 
 def gopher_quality(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_words: int = 50,
-    max_words: int = 100_000,
+    df: DataFrame, id_col: str = "doc_id", min_words: int = 50
 ) -> DataFrame:
-    text = F.col(text_col)
+    """The seven static rules over the `text` column, keyed by `id_col`;
+    documents of at most 100 000 words pass the word-count rule."""
+    text = F.col("text")
     words = F.filter(F.split(text, r"\s+"), lambda w: F.length(w) > 0)
     n_words = F.size(words)
     total_chars = F.aggregate(
@@ -196,7 +192,7 @@ def gopher_quality(
     )
     passes = (
         (F.col("n_words") >= min_words)
-        & (F.col("n_words") <= max_words)
+        & (F.col("n_words") <= 100_000)
         & (F.col("mean_word_len") >= 3.0)
         & (F.col("mean_word_len") <= 10.0)
         & (F.col("symbol_word_ratio") <= 0.1)

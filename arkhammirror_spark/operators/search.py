@@ -50,18 +50,11 @@ def tokenize_col(text):
     )
 
 
-def bm25_scores(
-    docs: DataFrame,
-    query_terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    normalize: bool = True,
-) -> DataFrame:
-    """BM25 over a document table for a fixed query; returns (id, score)."""
+def bm25_scores(docs: DataFrame, query_terms: list[str]) -> DataFrame:
+    """BM25 over a (doc_id, text) table for a fixed query; returns
+    (doc_id, score), scores normalized by the best one."""
     toks = docs.select(
-        F.col(id_col), tokenize_col(F.col(text_col)).alias("tokens")
+        "doc_id", tokenize_col(F.col("text")).alias("tokens")
     ).withColumn("doc_len", F.size("tokens").cast("double"))
 
     stats = toks.agg(
@@ -69,14 +62,14 @@ def bm25_scores(
     )
 
     terms = (
-        toks.select(F.col(id_col), "doc_len", F.explode("tokens").alias("term"))
+        toks.select("doc_id", "doc_len", F.explode("tokens").alias("term"))
         .where(F.col("term").isin(*[t.lower() for t in query_terms]))
-        .groupBy(id_col, "doc_len", "term")
+        .groupBy("doc_id", "doc_len", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
 
     df_counts = terms.groupBy("term").agg(
-        F.countDistinct(id_col).alias("doc_freq")
+        F.countDistinct("doc_id").alias("doc_freq")
     )
 
     scored = (
@@ -93,42 +86,33 @@ def bm25_scores(
         .withColumn(
             "term_score",
             F.col("idf")
-            * (F.col("tf") * (k1 + 1))
+            * (F.col("tf") * (BM25_K1 + 1))
             / (
                 F.col("tf")
-                + k1 * (1 - b + b * F.col("doc_len") / F.col("avg_len"))
+                + BM25_K1
+                * (1 - BM25_B + BM25_B * F.col("doc_len") / F.col("avg_len"))
             ),
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum("term_score").alias("raw_score"))
     )
-    if not normalize:
-        return scored.select(id_col, F.col("raw_score").alias("score"))
     mx = scored.agg(F.max("raw_score").alias("mx"))
     return scored.crossJoin(F.broadcast(mx)).select(
-        id_col,
+        "doc_id",
         F.when(F.col("mx") > 0, F.col("raw_score") / F.col("mx"))
         .otherwise(0.0)
         .alias("score"),
     )
 
 
-def regex_search(
-    docs: DataFrame,
-    pattern: str | None = None,
-    preset: str | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """All matches of a pattern/preset per document (engines/regex.py)."""
-    if preset:
-        pattern = REGEX_PRESETS[preset]
-    if not pattern:
-        raise ValueError("pattern or preset required")
+def regex_search(docs: DataFrame, preset: str, text_col: str = "text") -> DataFrame:
+    """All matches of a REGEX_PRESETS pattern per doc_id (engines/regex.py)."""
     return docs.select(
-        F.col(id_col),
+        "doc_id",
         F.explode(
-            F.regexp_extract_all(F.col(text_col), F.lit(pattern), F.lit(0))
+            F.regexp_extract_all(
+                F.col(text_col), F.lit(REGEX_PRESETS[preset]), F.lit(0)
+            )
         ).alias("match_text"),
     )
 
@@ -145,17 +129,14 @@ def hybrid_weights(dimensions: int | None) -> tuple[float, float]:
 
 
 def hybrid_merge(
-    semantic: DataFrame,
-    keyword: DataFrame,
-    id_col: str = "doc_id",
-    dimensions: int | None = None,
+    semantic: DataFrame, keyword: DataFrame, dimensions: int | None = None
 ) -> DataFrame:
-    """Weighted full-outer merge of (id, score) frames (hybrid.py:51-81)."""
+    """Weighted full-outer merge of (doc_id, score) frames (hybrid.py:51-81)."""
     sw, kw = hybrid_weights(dimensions)
-    s = semantic.select(F.col(id_col), F.col("score").alias("sem"))
-    k = keyword.select(F.col(id_col), F.col("score").alias("kw"))
-    return s.join(k, id_col, "full_outer").select(
-        id_col,
+    s = semantic.select("doc_id", F.col("score").alias("sem"))
+    k = keyword.select("doc_id", F.col("score").alias("kw"))
+    return s.join(k, "doc_id", "full_outer").select(
+        "doc_id",
         (
             F.coalesce(F.col("sem"), F.lit(0.0)) * sw
             + F.coalesce(F.col("kw"), F.lit(0.0)) * kw
@@ -166,94 +147,77 @@ def hybrid_merge(
 
 
 def exact_match_boost(
-    results: DataFrame, query: str, text_lookup: DataFrame,
-    id_col: str = "doc_id", text_col: str = "text",
-    boost: float = 1.5, score_col: str = "score",
+    results: DataFrame, query: str, text_lookup: DataFrame
 ) -> DataFrame:
-    """ranking.py exact-match booster: multiply score when the literal query
-    string occurs in the document text."""
+    """ranking.py exact-match booster: multiply `score` by 1.5 when the
+    literal query string occurs in the (doc_id, text) document text."""
     hit = text_lookup.select(
-        F.col(id_col),
-        F.col(text_col).contains(query).alias("_exact"),
+        "doc_id", F.col("text").contains(query).alias("_exact")
     )
     return (
-        results.join(hit, id_col, "left")
+        results.join(hit, "doc_id", "left")
         .withColumn(
-            score_col,
-            F.when(F.col("_exact"), F.col(score_col) * boost).otherwise(
-                F.col(score_col)
+            "score",
+            F.when(F.col("_exact"), F.col("score") * 1.5).otherwise(
+                F.col("score")
             ),
         )
         .drop("_exact")
     )
 
 
-def entity_boost(
-    results: DataFrame,
-    priority_entities: list[str],
-    entities_col: str = "entities",
-    score_col: str = "score",
-    boost: float = 0.2,
-) -> DataFrame:
-    """ranking.py:45-77 rerank_by_entities: score ×= (1 + boost × matches)
+def entity_boost(results: DataFrame, priority_entities: list[str]) -> DataFrame:
+    """ranking.py:45-77 rerank_by_entities: score ×= (1 + 0.2 × matches)
     where matches = |priority ∩ result.entities| (set intersection)."""
     if not priority_entities:
         return results
     prio = F.array(*[F.lit(e) for e in sorted(set(priority_entities))])
-    matches = F.size(F.array_intersect(F.array_distinct(F.col(entities_col)), prio))
+    matches = F.size(F.array_intersect(F.array_distinct(F.col("entities")), prio))
     return results.withColumn(
-        score_col,
-        F.when(matches > 0, F.col(score_col) * (1.0 + boost * matches)).otherwise(
-            F.col(score_col)
+        "score",
+        F.when(matches > 0, F.col("score") * (1.0 + 0.2 * matches)).otherwise(
+            F.col("score")
         ),
     )
 
 
 def autocomplete(
-    docs: DataFrame, prefix: str, col: str = "text", limit: int = 10,
-    tiebreak_col: str | None = None,
+    docs: DataFrame, prefix: str, tiebreak_col: str | None = None
 ) -> DataFrame:
-    """Prefix completion (keyword.py:346-378 LIKE 'prefix%'). `tiebreak_col`
-    makes the LIMIT deterministic when completions collide (duplicate texts
-    are planted by the corpus generator)."""
-    order = [F.col(col)] + ([F.col(tiebreak_col)] if tiebreak_col else [])
-    return docs.where(F.col(col).startswith(prefix)).orderBy(*order).limit(limit)
+    """The first 10 prefix completions of `text` (keyword.py:346-378 LIKE
+    'prefix%'). `tiebreak_col` makes the LIMIT deterministic when
+    completions collide (duplicate texts are planted by the corpus
+    generator)."""
+    order = [F.col("text")] + ([F.col(tiebreak_col)] if tiebreak_col else [])
+    return docs.where(F.col("text").startswith(prefix)).orderBy(*order).limit(10)
 
 
-def recency_boost(
-    results: DataFrame,
-    ts_col: str = "created_at",
-    score_col: str = "score",
-    decay_factor: float = 0.5,
-) -> DataFrame:
+def recency_boost(results: DataFrame) -> DataFrame:
     """ranking.py:85-123 recency reranker: recency = 1/(1 + age_days·0.1)
-    against the newest result; score = score·(1−d) + recency·d. Rows with a
-    null timestamp keep their score (the reference's `continue`)."""
-    newest = results.agg(F.max(ts_col).alias("_newest"))
-    age_days = F.datediff(F.col("_newest"), F.col(ts_col))
+    of `created_at` against the newest result; score = score·0.5 +
+    recency·0.5. Rows with a null timestamp keep their score (the
+    reference's `continue`)."""
+    newest = results.agg(F.max("created_at").alias("_newest"))
+    age_days = F.datediff(F.col("_newest"), F.col("created_at"))
     rec = 1.0 / (1.0 + age_days * 0.1)
     return (
         results.crossJoin(F.broadcast(newest))
         .withColumn(
-            score_col,
+            "score",
             F.when(
-                F.col(ts_col).isNotNull(),
-                F.col(score_col) * (1.0 - decay_factor) + rec * decay_factor,
-            ).otherwise(F.col(score_col)),
+                F.col("created_at").isNotNull(),
+                F.col("score") * 0.5 + rec * 0.5,
+            ).otherwise(F.col("score")),
         )
         .drop("_newest")
     )
 
 
-def dedupe_results(
-    results: DataFrame, by: str = "doc_id", score_col: str = "score",
-    tiebreak_col: str | None = None,
-) -> DataFrame:
-    """ranking.py:125-160: keep the highest-scoring row per key."""
+def dedupe_results(results: DataFrame) -> DataFrame:
+    """ranking.py:125-160: keep the highest-scoring row per doc_id."""
     from pyspark.sql.window import Window
 
-    order = [F.desc(score_col)] + ([F.asc(tiebreak_col)] if tiebreak_col else [])
-    w = Window.partitionBy(by).orderBy(*order)
+    w = Window.partitionBy("doc_id").orderBy(F.desc("score"))
     return (
         results.withColumn("_rk", F.row_number().over(w))
         .where(F.col("_rk") == 1)
@@ -264,18 +228,17 @@ def dedupe_results(
 def diversify_by_source(
     results: DataFrame,
     source_col: str = "doc_id",
-    score_col: str = "score",
-    max_per_source: int = 3,
     tiebreak_col: str | None = None,
 ) -> DataFrame:
-    """ranking.py:189-216: cap results per source, keeping the best-scored.
-    `tiebreak_col` makes the cut deterministic under score ties."""
+    """ranking.py:189-216: cap results at 3 per source, keeping the
+    best-scored. `tiebreak_col` makes the cut deterministic under score
+    ties."""
     from pyspark.sql.window import Window
 
-    order = [F.desc(score_col)] + ([F.asc(tiebreak_col)] if tiebreak_col else [])
+    order = [F.desc("score")] + ([F.asc(tiebreak_col)] if tiebreak_col else [])
     w = Window.partitionBy(source_col).orderBy(*order)
     return (
         results.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= max_per_source)
+        .where(F.col("_rk") <= 3)
         .drop("_rk")
     )

@@ -4,18 +4,26 @@ Reference lineage: pgvector semantic search (arkham-frame/services/
 vectors.py:888-934 — cosine `<=>`, L2 `<->`, dot `<#>`; ivfflat ANN index
 vectors.py:469-548). Spark restatement:
 
-- brute_force_topk: exact top-k by cosine/dot/L2 against a query vector —
+- brute_force_topk: exact top-k by cosine against a query vector —
   native zip_with/aggregate fold, TakeOrderedAndProject for the top-k.
   The baseline path; at 10^12 rows this is one scan + per-partition top-k.
 - lsh_bucket_topk: random-hyperplane LSH (sign bits of dot with H seeded
-  pseudo-planes derived from xxhash — no stored plane matrix) → probe only
-  the query's bucket (optionally multi-probe neighbors at Hamming 1). The
-  scale path: the scan prunes to ~1/2^H of the corpus per probe.
+  pseudo-planes derived from xxhash — no stored plane matrix) → probe the
+  query's bucket and its Hamming-1 neighbors. The scale path: the scan
+  prunes to ~1/2^H of the corpus per probe.
+
+Every operator reads (vec_id, embedding) rows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+# embedding width of the hyperplane planes (the lane and its DuckDB oracle)
+PLANE_DIM = 64
+# the recall target of the IVF probe sizing (ivf_health_check and its
+# Python twin optimal_probes)
+TARGET_RECALL = 0.95
 
 
 def _fold_dot(a, b):
@@ -28,35 +36,18 @@ def _norm(a):
     return F.sqrt(_fold_dot(a, a))
 
 
-def _score(metric: str, v, q):
-    if metric == "cosine":
-        return _fold_dot(v, q) / (_norm(v) * _norm(q))
-    if metric == "dot":
-        return _fold_dot(v, q)
-    if metric == "l2":
-        return -F.sqrt(
-            F.aggregate(
-                F.zip_with(v, q, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-    raise ValueError(f"unknown metric {metric}")
+def _cosine(v, q):
+    return _fold_dot(v, q) / (_norm(v) * _norm(q))
 
 
 def brute_force_topk(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    metric: str = "cosine",
+    emb: DataFrame, query_vec: list[float], k: int = 10
 ) -> DataFrame:
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
-        emb.select(F.col(id_col), _score(metric, v, q).alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
+        emb.select("vec_id", _cosine(v, q).alias("score"))
+        .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(k)
     )
 
@@ -72,11 +63,10 @@ def _plane_sign(dim_idx: int, plane_idx: int) -> float:
     return 1.0 if x & 1 else -1.0
 
 
-def hyperplane_bucket(vec_col, n_planes: int = 12, dim: int = 64,
-                      plane_offset: int = 0):
+def hyperplane_bucket(vec_col, n_planes: int = 12, plane_offset: int = 0):
     """Bucket id = sign bits of dot(v, plane_j) for H pseudo-random ±1
-    planes (plane ids plane_offset..plane_offset+H−1; H ≤ 62 so the packed
-    key stays in int64). The plane matrix is H×dim CONSTANT literals
+    PLANE_DIM-wide planes (plane ids plane_offset..plane_offset+H−1; H ≤ 62 so the packed
+    key stays in int64). The plane matrix is H×PLANE_DIM CONSTANT literals
     (folded by Catalyst) — the earlier per-element xxhash64(concat)
     formulation cost ~10M string hashes per 5k vectors and dominated the
     LSH wall time."""
@@ -86,7 +76,7 @@ def hyperplane_bucket(vec_col, n_planes: int = 12, dim: int = 64,
     bits = []
     for j in range(n_planes):
         plane = F.array(
-            *[F.lit(_plane_sign(i, plane_offset + j)) for i in range(dim)]
+            *[F.lit(_plane_sign(i, plane_offset + j)) for i in range(PLANE_DIM)]
         )
         proj = F.aggregate(
             F.zip_with(v, plane, lambda x, p: x * p),
@@ -103,18 +93,13 @@ def hyperplane_bucket(vec_col, n_planes: int = 12, dim: int = 64,
 
 
 def lsh_bucket_topk(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    multiprobe: bool = True,
+    emb: DataFrame, query_vec: list[float], n_planes: int = 12
 ) -> DataFrame:
-    """ANN: probe the query's hyperplane bucket (+ Hamming-1 neighbors)."""
-    v = F.col(vec_col).cast("array<double>")
+    """ANN top-10: probe the query's hyperplane bucket and its Hamming-1
+    neighbors."""
+    v = F.col("embedding").cast("array<double>")
     bucketed = emb.select(
-        F.col(id_col), v.alias("v"), hyperplane_bucket(v, n_planes).alias("bucket")
+        "vec_id", v.alias("v"), hyperplane_bucket(v, n_planes).alias("bucket")
     )
 
     spark = emb.sparkSession
@@ -123,16 +108,14 @@ def lsh_bucket_topk(
     )
     qrow = qdf.collect()[0]
     qbucket = qrow["qbucket"]
-    probes = [qbucket] + (
-        [qbucket ^ (1 << j) for j in range(n_planes)] if multiprobe else []
-    )
+    probes = [qbucket] + [qbucket ^ (1 << j) for j in range(n_planes)]
 
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         bucketed.where(F.col("bucket").isin(probes))
-        .select(F.col(id_col), _score("cosine", F.col("v"), q).alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
+        .select("vec_id", _cosine(F.col("v"), q).alias("score"))
+        .orderBy(F.desc("score"), F.asc("vec_id"))
+        .limit(10)
     )
 
 
@@ -146,16 +129,9 @@ def recommended_rows_per_band(n_vectors: int) -> int:
     return max(4, math.ceil(math.log2(max(2, n_vectors))))
 
 
-def pairwise_cosine_above_banded(
-    emb: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bands: int = 8,
-    rows_per_band: int | None = None,
-) -> DataFrame:
+def pairwise_cosine_above_banded(emb: DataFrame, threshold: float) -> DataFrame:
     """Embedding near-dup pairs via BANDED hyperplane LSH (OR-construction):
-    B bands of R sign-bits each; a pair is a candidate if ANY band matches,
+    B=8 bands of R sign-bits each; a pair is a candidate if ANY band matches,
     then exact cosine ≥ threshold verifies. For cosine ≥ 0.999 (θ ≈ 0.045
     rad, plane-agreement p ≈ 0.9857) the per-pair miss probability is
     (1 − p^R)^B ≈ 2e-8 at B=8, R=8 — the hyperplane analogue of the
@@ -166,13 +142,11 @@ def pairwise_cosine_above_banded(
     probability ~(1/2)^R, so R=8 prunes to ~3% of all pairs where R=4
     admits ~39% (measured: near-brute-force cost). ANY fixed R goes
     superlinear eventually (candidates ~ n^2/2^R; measured 10.6x wall on
-    10x data at R=8), so the DEFAULT derives R = recommended_rows_per_band
-    (count) = ~log2(n), holding expected random candidates ~ n as the
-    corpus grows — one count job; at a fixed deployment scale pass the
-    constant instead."""
-    if rows_per_band is None:
-        rows_per_band = recommended_rows_per_band(emb.count())
-    v = F.col(vec_col).cast("array<double>")
+    10x data at R=8), so R = recommended_rows_per_band(count) = ~log2(n),
+    holding expected random candidates ~ n as the corpus grows — one
+    count job."""
+    rows_per_band = recommended_rows_per_band(emb.count())
+    v = F.col("embedding").cast("array<double>")
     # one R-bit key per band, each from its own plane block (no packed
     # 64-bit intermediate — B×R can exceed the int64 sign bit); keys are
     # computed over the checkpointed "v" column below
@@ -180,7 +154,7 @@ def pairwise_cosine_above_banded(
         hyperplane_bucket(
             F.col("v"), rows_per_band, plane_offset=b * rows_per_band
         )
-        for b in range(bands)
+        for b in range(8)
     ]
     # Slim frames: the banded self-join and the pair dedupe move ONLY
     # (band, key, id) — the vectors are re-attached to the ~output-sized
@@ -194,34 +168,27 @@ def pairwise_cosine_above_banded(
     # the B×R hyperplane projections (the single most expensive expression
     # here) through the join lineage. spread() fans a one-file scan out so
     # that single key pass parallelizes.
-    slim = spread(
-        emb.select(F.col(id_col), v.alias("v")), id_col
-    )
+    slim = spread(emb.select("vec_id", v.alias("v")), "vec_id")
     slim = slim.select(
-        F.col(id_col), "v", F.array(*band_keys).alias("_keys")
+        "vec_id", "v", F.array(*band_keys).alias("_keys")
     ).localCheckpoint(eager=True)
     banded = slim.select(
-        F.col(id_col),
-        F.posexplode(F.col("_keys")).alias("band", "key"),
+        "vec_id", F.posexplode(F.col("_keys")).alias("band", "key")
     )
-    a = banded.select(
-        F.col(id_col).alias("id_a"), "band", "key"
-    )
-    c = banded.select(
-        F.col(id_col).alias("id_b"), "band", "key"
-    )
+    a = banded.select(F.col("vec_id").alias("id_a"), "band", "key")
+    c = banded.select(F.col("vec_id").alias("id_b"), "band", "key")
     pairs = (
         a.join(c, ["band", "key"])
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
     )
-    va = slim.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"))
-    vb = slim.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"))
+    va = slim.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"))
+    vb = slim.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"))
     return (
         pairs.join(va, "id_a")
         .join(vb, "id_b")
-        .withColumn("cosine", _score("cosine", F.col("va"), F.col("vb")))
+        .withColumn("cosine", _cosine(F.col("va"), F.col("vb")))
         .where(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
@@ -279,7 +246,6 @@ def ivf_probe(
     id_col: str = "vec_id",
     n_probe: int = 2,
     predicate=None,
-    score_threshold: float | None = None,
 ) -> DataFrame:
     """Scan only the `n_probe` inverted lists whose centroids are nearest
     the query; rank by exact cosine. Probed fraction ≈ n_probe/n_clusters;
@@ -293,7 +259,7 @@ def ivf_probe(
     Catalyst pushes BOTH the probe's `list_id IN (...)` (file
     pruning, SelectedBucketsCount) and the payload predicate
     (PushedFilters) into the parquet scan — rows failing the filter never
-    reach the cosine math. `score_threshold` mirrors :927-930."""
+    reach the cosine math."""
     import numpy as np
 
     c = np.asarray(centers)
@@ -305,11 +271,7 @@ def ivf_probe(
     scan = assigned.where(F.col("list_id").isin(probes))
     if predicate is not None:
         scan = scan.where(predicate)
-    scored = scan.select(
-        F.col(id_col), _score("cosine", F.col("v"), qcol).alias("score")
-    )
-    if score_threshold is not None:
-        scored = scored.where(F.col("score") >= float(score_threshold))
+    scored = scan.select(F.col(id_col), _cosine(F.col("v"), qcol).alias("score"))
     return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 
@@ -344,9 +306,9 @@ def optimal_lists(expected_rows: int) -> int:
     return max(100, int(expected_rows ** 0.5))
 
 
-def optimal_probes(lists: int, target_recall: float = 0.95) -> int:
+def optimal_probes(lists: int, target_recall: float = TARGET_RECALL) -> int:
     """Probe sizing for a recall target (vectors.py:478-488; default
-    0.95 per the service's _target_recall)."""
+    TARGET_RECALL per the service's _target_recall)."""
     if target_recall >= 0.99:
         return max(lists // 2, int(lists ** 0.5) * 3)
     if target_recall >= 0.95:
@@ -354,45 +316,32 @@ def optimal_probes(lists: int, target_recall: float = 0.95) -> int:
     return max(5, lists // 10)
 
 
-def ivf_health_check(
-    collections: DataFrame,
-    reference_date,
-    target_recall: float = 0.95,
-    name_col: str = "name",
-    count_col: str = "vector_count",
-    lists_col: str = "lists",
-    reindex_col: str = "last_reindex",
-) -> DataFrame:
+def ivf_health_check(collections: DataFrame, reference_date) -> DataFrame:
     """The health_check rules (vector_maintenance.py:441-518) as native
-    columns over a collections catalog: suggested lists/probes, the
+    columns over a (name, vector_count, lists, last_reindex) collections
+    catalog, probes sized for TARGET_RECALL: suggested lists/probes, the
     >50%-deviation suboptimal warning (only when vectors exist and a
     lists value is set), and the 14-day reindex-overdue warning —
     warning STRINGS formatted exactly like the reference so a catalog
     sweep emits the same ledger. ``reference_date`` pins the clock
     (the reference uses utcnow(), which a deterministic engine cannot)."""
-    vc = F.col(count_col).cast("long")
-    cur = F.col(lists_col).cast("long")
+    vc = F.col("vector_count").cast("long")
+    cur = F.col("lists").cast("long")
     opt = (
         F.when(vc < 1000, F.lit(10))
         .when(vc < 1_000_000, F.greatest(F.lit(10), F.floor(vc / 1000)))
         .otherwise(F.greatest(F.lit(100), F.floor(F.sqrt(vc))))
         .cast("long")
     )
-    if target_recall >= 0.99:
-        probes = F.greatest(
-            F.floor(opt / 2), F.floor(F.sqrt(opt)) * 3
-        )
-    elif target_recall >= 0.95:
-        probes = F.greatest(F.lit(10), F.floor(F.sqrt(opt)))
-    else:
-        probes = F.greatest(F.lit(5), F.floor(opt / 10))
+    # optimal_probes at TARGET_RECALL 0.95: max(10, √lists)
+    probes = F.greatest(F.lit(10), F.floor(F.sqrt(opt)))
     subopt = (
         (vc > 0) & (cur > 0)
         & (F.abs(cur - opt) / opt > 0.5)
     )
     ref_d = F.lit(str(reference_date)).cast("date")
-    days_since = F.datediff(ref_d, F.to_date(F.col(reindex_col)))
-    overdue = (vc > 0) & F.col(reindex_col).isNotNull() & (
+    days_since = F.datediff(ref_d, F.to_date(F.col("last_reindex")))
+    overdue = (vc > 0) & F.col("last_reindex").isNotNull() & (
         days_since > 14
     )
     warn = F.concat_ws(
@@ -402,19 +351,19 @@ def ivf_health_check(
             F.format_string(
                 "%s: lists=%d may be suboptimal (suggested ~%d for %d "
                 "vectors)",
-                F.col(name_col), cur, opt, vc,
+                F.col("name"), cur, opt, vc,
             ),
         ),
         F.when(
             overdue,
             F.format_string(
                 "%s: last reindex was %d days ago",
-                F.col(name_col), days_since.cast("long"),
+                F.col("name"), days_since.cast("long"),
             ),
         ),
     )
     return collections.select(
-        F.col(name_col).alias("name"),
+        F.col("name").alias("name"),
         vc.alias("vector_count"),
         cur.alias("current_lists"),
         opt.alias("optimal_lists"),

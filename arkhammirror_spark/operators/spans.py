@@ -19,7 +19,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StringType, StructField, StructType
 
-from ..reference_impl.chunker import chunk_fixed, chunk_sentences
+from ..reference_impl.chunker import chunk_sentences
 from ..reference_impl.claims import extract_claims
 from ..reference_impl.dates import extract_iso_dates, extract_relative_dates
 from ..reference_impl.ner import mock_ner
@@ -46,14 +46,11 @@ def _per_url(
     return _explode_per_doc(docs.select("url", "extracted_text"), fn, schema)
 
 
-def extract_dates(docs: DataFrame, include_relative: bool = True) -> DataFrame:
+def extract_dates(docs: DataFrame) -> DataFrame:
     """ISO + relative date mentions (dates.py:94-160)."""
 
     def _fn(text: str) -> list[dict]:
-        out = extract_iso_dates(text)
-        if include_relative:
-            out = out + extract_relative_dates(text)
-        return out
+        return extract_iso_dates(text) + extract_relative_dates(text)
 
     return _per_url(docs, _fn, DATE_STRUCT)
 
@@ -67,19 +64,10 @@ def extract_rels(docs: DataFrame) -> DataFrame:
     return _per_url(docs, _fn, REL_STRUCT)
 
 
-def extract_chunks(
-    docs: DataFrame,
-    method: str = "sentence",
-    chunk_size: int = 500,
-    overlap: int = 50,
-) -> DataFrame:
-    """Chunking (chunker.py:64-197); parse-shard defaults method=sentence/500/50."""
-    chunker = chunk_sentences if method == "sentence" else chunk_fixed
-
-    def _fn(text: str) -> list[dict]:
-        return chunker(text, chunk_size=chunk_size, overlap=overlap)
-
-    return _per_url(docs, _fn, CHUNK_STRUCT)
+def extract_chunks(docs: DataFrame) -> DataFrame:
+    """Sentence chunking (chunker.py:64-197) at the parse shard's
+    defaults: 500-char chunks, overlap 50."""
+    return _per_url(docs, chunk_sentences, CHUNK_STRUCT)
 
 
 def extract_claims_df(docs: DataFrame) -> DataFrame:

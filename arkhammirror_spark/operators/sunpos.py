@@ -64,13 +64,8 @@ def _interpretation(altitude, azimuth):
     )
 
 
-def sun_positions(
-    df: DataFrame,
-    lat_col: str = "gps_lat",
-    lon_col: str = "gps_lon",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """(.., lat, lon, utc TIMESTAMP_NTZ ts) -> + sun_altitude, sun_azimuth,
+def sun_positions(df: DataFrame) -> DataFrame:
+    """(.., gps_lat, gps_lon, utc TIMESTAMP_NTZ ts) -> + sun_altitude, sun_azimuth,
     expected_shadow_direction, shadow_length_ratio, sun_above_horizon,
     interpretation — the calculate_sun_position surface (:77-88), rounded
     to 2 decimals like the reference. shadow_length_ratio is the sentinel
@@ -78,16 +73,16 @@ def sun_positions(
     rad = F.radians
     deg = F.degrees
     base_cols = list(df.columns)
-    lat, lon = F.col(lat_col), F.col(lon_col)
+    lat, lon = F.col("gps_lat"), F.col("gps_lon")
 
     epoch_secs = F.expr(
-        f"timestampdiff(SECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', {ts_col})"
+        "timestampdiff(SECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
     ).cast("double")
     # Julian day from unix epoch (86400 s days; epoch = JD 2440587.5)
     jd = epoch_secs / 86400.0 + 2440587.5
     mins_utc = (
-        F.hour(ts_col) * 60.0 + F.minute(ts_col)
-        + F.second(ts_col) / 60.0
+        F.hour("ts") * 60.0 + F.minute("ts")
+        + F.second("ts") / 60.0
     )
     s = df.select("*", ((jd - 2451545.0) / 36525.0).alias("_t"),
                   mins_utc.alias("_mins"))

@@ -35,13 +35,12 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     right_cols: list[str] | None = None,
-    strict: bool = False,
 ) -> DataFrame:
-    """Every left row + the latest right row with right_ts ≤ left_ts
-    (strict=True: <) on the same key. Right columns come back null when no
-    right row precedes the left row.
+    """Every left row + the latest right row with right_ts ≤ left_ts on
+    the same key. Right columns come back null when no right row precedes
+    the left row.
 
-    Ties (right_ts == left_ts, strict=False) match; multiple right rows
+    Ties (right_ts == left_ts) match; multiple right rows
     at the SAME (key, ts) resolve to the one whose payload sorts last —
     deterministic under any partitioning (the window orders by every
     carried column).
@@ -69,14 +68,14 @@ def asof_join(
               for c in left.columns if c != key],
         )
     )
-    # right rows sort before left at equal ts (non-strict ≤ semantics);
-    # strict mode sorts right rows AFTER left at equal ts so they are not
-    # yet visible to that left row. "_r" in the ordering makes same-ts
-    # right duplicates resolve deterministically (last payload wins).
-    side_order = F.col("_side").asc() if not strict else F.col("_side").desc()
+    # right rows sort before left at equal ts (≤ semantics). "_r" in the
+    # ordering makes same-ts right duplicates resolve deterministically
+    # (last payload wins).
     w = (
         Window.partitionBy(key)
-        .orderBy(F.col("_ts").asc(), side_order, F.col("_r").asc_nulls_first())
+        .orderBy(
+            F.col("_ts").asc(), F.col("_side").asc(), F.col("_r").asc_nulls_first()
+        )
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     matched = unioned.withColumn(
@@ -99,11 +98,10 @@ def range_join(
     point_ts: str,
     start_ts: str,
     end_ts: str,
-    bin_width_s: int = 3600,
-    how: str = "inner",
 ) -> DataFrame:
     """points ⋈ intervals where start_ts ≤ point_ts ≤ end_ts on the same
-    key, as a bin-bucketed EQUI-join + exact refine (no nested loop).
+    key, as a bin-bucketed (one-hour bins) inner EQUI-join + exact refine
+    (no nested loop).
 
     Every interval lands in each bin it overlaps (explode over the bin
     sequence); points land in exactly one bin; candidates = equi-join on
@@ -118,11 +116,11 @@ def range_join(
             f"CAST({name} AS TIMESTAMP_NTZ))"
         )
 
-    p_bin = F.floor(_epoch_s(point_ts) / bin_width_s)
+    p_bin = F.floor(_epoch_s(point_ts) / 3600)
     p = points.withColumn("_bin", p_bin.cast("long"))
     i_bins = F.sequence(
-        F.floor(_epoch_s(start_ts) / bin_width_s).cast("long"),
-        F.floor(_epoch_s(end_ts) / bin_width_s).cast("long"),
+        F.floor(_epoch_s(start_ts) / 3600).cast("long"),
+        F.floor(_epoch_s(end_ts) / 3600).cast("long"),
     )
     i = intervals.where(F.col(start_ts) <= F.col(end_ts)).withColumn(
         "_bin", F.explode(i_bins)
@@ -130,7 +128,4 @@ def range_join(
     joined = p.join(i, [key, "_bin"], "inner").where(
         (F.col(point_ts) >= F.col(start_ts)) & (F.col(point_ts) <= F.col(end_ts))
     )
-    out = joined.drop("_bin")
-    if how == "inner":
-        return out
-    raise ValueError(f"unsupported how={how!r}")
+    return joined.drop("_bin")

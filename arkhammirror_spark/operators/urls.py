@@ -51,18 +51,15 @@ def canonical_url(col) -> "F.Column":
     return u
 
 
-def with_canonical_url(
-    df: DataFrame, url_col: str = "url", out_col: str = "canonical_url"
-) -> DataFrame:
-    return df.withColumn(out_col, canonical_url(F.col(url_col)))
+def with_canonical_url(df: DataFrame) -> DataFrame:
+    return df.withColumn("canonical_url", canonical_url(F.col("url")))
 
 
-def dedup_canonical_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
+def dedup_canonical_urls(df: DataFrame) -> DataFrame:
     """(canonical_url, keeper_url, n_variants, variant_urls) — one row per
-    canonical page."""
-    c = with_canonical_url(df, url_col)
-    return c.groupBy("canonical_url").agg(
-        F.min(url_col).alias("keeper_url"),
+    canonical page of the `url` column."""
+    return with_canonical_url(df).groupBy("canonical_url").agg(
+        F.min("url").alias("keeper_url"),
         F.count(F.lit(1)).alias("n_variants"),
-        F.sort_array(F.collect_set(url_col)).alias("variant_urls"),
+        F.sort_array(F.collect_set("url")).alias("variant_urls"),
     )

@@ -29,31 +29,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def prepare_webtext_corpus(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-    min_words: int = 50,
-    jaccard_threshold: float = 0.8,
-    min_content_chars: int = 25,
-    line_dedup_min_chars: int = 10,
-    neardup_bucket_cap: int = 5000,
-) -> DataFrame:
+def prepare_webtext_corpus(pages: DataFrame, min_words: int = 50) -> DataFrame:
     """pages(url, html) → (url, text): the cleaned, deduplicated corpus.
 
-    `neardup_bucket_cap` forwards to the MinHash-LSH hot-bucket guard
-    (bounded near-dup recall in pathological boilerplate clusters;
-    None disables)."""
+    Near-dup pairs are verified at Jaccard ≥ 0.8 behind the MinHash-LSH
+    hot-bucket guard (5000 rows: bounded near-dup recall in pathological
+    boilerplate clusters); line dedup skips lines under 10 chars."""
     from .boilerplate import extract_main_content
     from .dedup import dedup_lines, verified_neardup_pairs
     from .quality import gopher_quality
     from .urls import dedup_canonical_urls
 
     # 1. one page per canonical url
-    keepers = dedup_canonical_urls(pages, url_col).select(
-        F.col("keeper_url").alias(url_col)
+    keepers = dedup_canonical_urls(pages).select(
+        F.col("keeper_url").alias("url")
     )
-    pages1 = pages.join(keepers, url_col)
+    pages1 = pages.join(keepers, "url")
 
     # 2. boilerplate-stripped main text — checkpointed ONCE: four
     # downstream branches (quality join, checksum join, near-dup chain,
@@ -63,15 +54,13 @@ def prepare_webtext_corpus(
     # consumes, so there is no pruning opportunity a write-then-read would
     # add; at cluster scale swap for a storage checkpoint of the same
     # two-column table.
-    mc = extract_main_content(
-        pages1, url_col, html_col, min_chars=min_content_chars
-    )
+    mc = extract_main_content(pages1)
     docs = mc.select(F.col("url"), F.col("main_text").alias("text")).localCheckpoint(
         eager=True
     )
 
     # 3. Gopher quality gate
-    q = gopher_quality(docs, id_col="url", text_col="text", min_words=min_words)
+    q = gopher_quality(docs, id_col="url", min_words=min_words)
     good = docs.join(q.where(F.col("passes")).select("url"), "url")
 
     # 4. exact checksum dedup (min-url keeper)
@@ -81,14 +70,9 @@ def prepare_webtext_corpus(
     uniq = good.join(exact_keep.select("url"), "url")
 
     # 5. MinHash-LSH near-dup: drop the larger url of every verified pair
-    pairs = verified_neardup_pairs(
-        uniq, id_col="url", text_col="text", threshold=jaccard_threshold,
-        bucket_cap=neardup_bucket_cap,
-    )
+    pairs = verified_neardup_pairs(uniq, id_col="url")
     dropped = pairs.select(F.col("id_b").alias("url")).distinct()
     survivors = uniq.join(dropped, "url", "left_anti")
 
     # 6. corpus-level line dedup over the survivors
-    return dedup_lines(
-        survivors, id_col="url", text_col="text", min_chars=line_dedup_min_chars
-    )
+    return dedup_lines(survivors, id_col="url")

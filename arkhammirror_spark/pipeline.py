@@ -38,6 +38,7 @@ from .catalog import ParquetSnapshotCatalog
 from .operators.edges import comention_edges_from_name_sets
 from .operators.entities import aggregate_entities, filter_valid_mentions
 from .operators.extract import extract_docs
+from .schemas import DOCS_SCHEMA
 from .operators.spans import (
     extract_chunks,
     extract_claims_df,
@@ -127,14 +128,9 @@ def run_extraction_stats(
     """
     from pyspark import StorageLevel
 
-    from .shipping import ensure_shipped
-
-    ensure_shipped(spark)
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism
 
-    docs_raw = extract_docs(
-        partition_pages(pages, num_partitions), include_mentions=True
-    )
+    docs_raw = extract_docs(partition_pages(pages, num_partitions))
     slim = docs_raw.select(
         "url", "error", "_part_id", "_batch_ms", "_n_mentions", "_names"
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -168,9 +164,6 @@ def run_pipeline(
 ) -> PipelineResult:
     """Run the extraction DAG, commit its snapshots + audit as one run of the
     catalog at `out_dir`, and resume from the runs committed there."""
-    from .shipping import ensure_shipped
-
-    ensure_shipped(spark)
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism
     snapshot_id = hashlib.sha256(f"{time.time_ns()}".encode()).hexdigest()[:16]
     catalog = ParquetSnapshotCatalog(out_dir)
@@ -187,7 +180,7 @@ def run_pipeline(
     pages = partition_pages(pages, num_partitions)
 
     # mock-NER is fused into the extract pass (one Arrow trip for the text)
-    docs_raw = extract_docs(pages, include_mentions=True)
+    docs_raw = extract_docs(pages)
 
     # Storage-checkpoint pattern: materialize the extract output ONCE to
     # parquet, then feed every downstream table from column-pruned reads of
@@ -200,7 +193,7 @@ def run_pipeline(
     docs_raw = catalog.read_snapshot(spark, "docs", snapshot_id)
 
     audit = _audit_from_docs(docs_raw, snapshot_id)
-    _PRIVATE = ("_part_id", "_batch_ms", "_mentions", "_names", "_n_mentions")
+    _PRIVATE = [f.name for f in DOCS_SCHEMA.fields if f.name.startswith("_")]
 
     clean = docs_raw.select("url", "extracted_text", "error").where(
         F.col("error").isNull()

@@ -194,7 +194,7 @@ def _comention(spark: SparkSession, sf_dir: str, docs_where=None) -> DataFrame:
     """Co-mention edges (min count 2, top 1000) over the valid mentions."""
     return comention_edges(
         _valid_mentions(spark, sf_dir, docs_where),
-        doc_col="doc_id", min_count=2, limit=1000, include_doc_ids=False,
+        doc_col="doc_id", include_doc_ids=False,
     ).select("entity_a", "entity_b", "co_occurrence_count", "weight")
 
 

@@ -20,7 +20,11 @@ from pyspark.sql.types import (
 
 
 from .queries import ORACLE_SQL, _MENTIONS_CTE, _cased_spark, _load, register
-from .operators.dedup import ngram_jaccard_pairs, verified_neardup_pairs
+from .operators.dedup import (
+    JACCARD_THRESHOLD,
+    ngram_jaccard_pairs,
+    verified_neardup_pairs,
+)
 from .operators.edges import ordered_pairs
 from .operators.spans import _explode_per_doc
 from .operators.spread import spread as _spread
@@ -197,9 +201,9 @@ WHERE s.n_shared::DOUBLE / (sa.sz + sb.sz - s.n_shared) >= {thr}
 """
 
 
-@register("neardup_jaccard", _NEARDUP_CTE.format(thr=0.8))
+@register("neardup_jaccard", _NEARDUP_CTE.format(thr=JACCARD_THRESHOLD))
 def q_neardup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ngram_jaccard_pairs(_neardup_docs(spark, sf_dir), threshold=0.8)
+    return ngram_jaccard_pairs(_neardup_docs(spark, sf_dir))
 
 
 # capped variant: every doc carries a constant boilerplate footer (a planted
@@ -225,10 +229,10 @@ def q_neardup_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.col("text"), F.lit(_CAPPED_FOOTER)).alias("text"),
         )
     )
-    return ngram_jaccard_pairs(docs, threshold=0.8, df_cap=30)
+    return ngram_jaccard_pairs(docs, df_cap=30)
 
 
-ORACLE_SQL["neardup_jaccard_capped"] = """
+ORACLE_SQL["neardup_jaccard_capped"] = f"""
 WITH nd AS (
   SELECT d.doc_id,
          a.text || printf(' marker%d tail', (d.doc_id % 3)::INT)
@@ -260,16 +264,16 @@ SELECT s.id_a, s.id_b,
 FROM shared s
 JOIN sizes sa ON sa.doc_id = s.id_a
 JOIN sizes sb ON sb.doc_id = s.id_b
-WHERE s.n_shared::DOUBLE / (sa.sz + sb.sz - s.n_shared) >= 0.8
+WHERE s.n_shared::DOUBLE / (sa.sz + sb.sz - s.n_shared) >= {JACCARD_THRESHOLD}
 """
 
 
-@register("minhash_lsh_neardup", _NEARDUP_CTE.format(thr=0.8))
+@register("minhash_lsh_neardup", _NEARDUP_CTE.format(thr=JACCARD_THRESHOLD))
 def q_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH + exact-Jaccard verification; equals brute force with miss
     probability (1−0.8⁴)³² ≈ 5e−8 per true pair, so the brute-force SQL is a
     valid oracle."""
-    return verified_neardup_pairs(_neardup_docs(spark, sf_dir), threshold=0.8)
+    return verified_neardup_pairs(_neardup_docs(spark, sf_dir))
 
 
 # --- simhash (md5 token hash so both engines agree) --------------------------

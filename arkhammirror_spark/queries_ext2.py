@@ -56,7 +56,7 @@ def q_regex_search_email(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _load(spark, sf_dir, "documents").select(
         "doc_id", F.concat(F.col("text"), _email_suffix_spark()).alias("t")
     )
-    return regex_search(docs, preset="email", id_col="doc_id", text_col="t")
+    return regex_search(docs, "email", text_col="t")
 
 
 # ---------------------------------------------------------------------------
@@ -76,7 +76,7 @@ def q_autocomplete_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.search import autocomplete
 
     docs = _load(spark, sf_dir, "documents").select("doc_id", "text")
-    return autocomplete(docs, "key ", col="text", limit=10, tiebreak_col="doc_id")
+    return autocomplete(docs, "key ", tiebreak_col="doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -101,11 +101,11 @@ def q_reranked_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _load(spark, sf_dir, "documents").select("doc_id", "text")
-    base = bm25_scores(docs, _RERANK_TERMS, id_col="doc_id", text_col="text")
+    base = bm25_scores(docs, _RERANK_TERMS)
 
     # exercise dedupe_results: union a decayed duplicate, keep the best
     dup = base.select("doc_id", (F.col("score") * 0.8).alias("score"))
-    merged = dedupe_results(base.unionAll(dup), by="doc_id", score_col="score")
+    merged = dedupe_results(base.unionAll(dup))
 
     ents = docs.select(
         "doc_id",
@@ -114,22 +114,15 @@ def q_reranked_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda e: F.col("text").contains(e),
         ).alias("entities"),
     )
-    boosted = entity_boost(
-        merged.join(ents, "doc_id"), _RERANK_PRIORITY, entities_col="entities"
-    )
-    boosted = exact_match_boost(
-        boosted, "slow merge", docs, id_col="doc_id", text_col="text"
-    )
+    boosted = entity_boost(merged.join(ents, "doc_id"), _RERANK_PRIORITY)
+    boosted = exact_match_boost(boosted, "slow merge", docs)
     dated = boosted.withColumn(
         "created_at",
         F.date_add(F.lit("2024-01-01").cast("date"), (F.col("doc_id") % 365).cast("int")),
     )
-    rescored = recency_boost(dated, ts_col="created_at", score_col="score")
+    rescored = recency_boost(dated)
     sourced = rescored.withColumn("source", (F.col("doc_id") % 5).cast("long"))
-    out = diversify_by_source(
-        sourced, source_col="source", score_col="score", max_per_source=3,
-        tiebreak_col="doc_id",
-    )
+    out = diversify_by_source(sourced, source_col="source", tiebreak_col="doc_id")
     return out.select("doc_id", "source", F.round("score", 6).alias("score"))
 
 
@@ -346,9 +339,7 @@ def q_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .queries_ext import q_simhash_fingerprint
 
     sigs = q_simhash_fingerprint(spark, sf_dir)  # 16 md5-derived bits
-    pairs = simhash_pairs_from_sigs(
-        sigs, id_col="doc_id", sig_col="simhash", max_hamming=3, n_bits=16
-    )
+    pairs = simhash_pairs_from_sigs(sigs, n_bits=16)
     return pairs.select(
         "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
     )
@@ -503,7 +494,7 @@ def q_claim_contradictions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.contradictions import detect_contradictions
 
     claims = _claims_frame(spark, sf_dir)
-    out = detect_contradictions(claims, threshold=0.5)
+    out = detect_contradictions(claims)
     return out.select(
         "id_a", "id_b", "contradiction_type", "severity",
         F.round("similarity", 6).alias("similarity"),
@@ -773,7 +764,7 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = q_comention_edges(spark, sf_dir)
     # runs to convergence (changed-count 0); the cap only guards runaways
     # and RAISES if exhausted, so an unconverged labeling can never pass
-    return connected_components_distributed(edges, max_iterations=50)
+    return connected_components_distributed(edges)
 
 
 def _cc_oracle() -> str:
@@ -812,9 +803,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quantize=12: fixed-point per-iteration ranks → the incoming sum is an
     # exact BIGINT sum, order-independent across partition counts, so the
     # round(…, 6) comparison vs DuckDB cannot flake on float sum order
-    pr = pagerank_distributed(
-        edges, damping=0.85, iterations=_PR_ITERS, quantize=12
-    )
+    pr = pagerank_distributed(edges, iterations=_PR_ITERS, quantize=12)
     return pr.select("name", F.round("rank", 6).alias("rank"))
 
 
@@ -826,10 +815,12 @@ def _pr_oracle() -> str:
     at the last ulp — CLAUDE.md invariant 2). The (1.0-0.85) and 0.85
     factors are written as the same IEEE double expressions Spark folds
     (1.0-0.85 != 0.15 in binary)."""
+    from .operators.graph import DAMPING
+
     # rank expression for iteration t, given integer incoming sum c.inc
     rank_expr = (
-        "(1.0::DOUBLE - 0.85::DOUBLE) / nn.n"
-        " + 0.85::DOUBLE * (coalesce(c.inc, 0)::DOUBLE / 1e12)"
+        f"(1.0::DOUBLE - {DAMPING}::DOUBLE) / nn.n"
+        f" + {DAMPING}::DOUBLE * (coalesce(c.inc, 0)::DOUBLE / 1e12)"
     )
     iters = ""
     prev = "r0"
@@ -943,9 +934,13 @@ WHERE {_sql_cos('a.v', 'b.v')} >= 0.999
 """
 
 
+# hyperplanes per bucket key of the ANN part and its oracle
+_ANN_PLANES = 8
+
+
 @register("ann_lsh_topk", None)  # exact oracle below (generated plane literals)
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2 scale path: hyperplane-bucket ANN with Hamming-1 multiprobe.
+    """Q2 scale path: hyperplane-bucket ANN probing the Hamming-1 neighbours.
 
     FULLY oracle-checked: the hyperplane buckets are deterministic ±1
     constant arithmetic (operators.similarity._plane_sign), so the DuckDB
@@ -962,16 +957,18 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         float(x)
         for x in emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]
     ]
-    out = lsh_bucket_topk(d.where(F.col("vec_id") != 0), qv, k=10, n_planes=8)
+    out = lsh_bucket_topk(d.where(F.col("vec_id") != 0), qv, n_planes=_ANN_PLANES)
     return out.select("vec_id", F.round("score", 6).alias("score"))
 
 
-def _ann_lsh_oracle(n_planes: int = 8, dim: int = 64) -> str:
+def _ann_lsh_oracle() -> str:
     """DuckDB mirror of lsh_bucket_topk: plane matrix embedded as ±1.0
     literals, projections as the same 0.0-seeded sequential left fold Spark's
     F.aggregate builds (left-associative + in SQL) → identical IEEE doubles,
     identical sign bits, identical bucket ids and probe membership."""
-    from .operators.similarity import _plane_sign
+    from .operators.similarity import PLANE_DIM as dim, _plane_sign
+
+    n_planes = _ANN_PLANES
 
     def plane_lits(j: int) -> str:
         return "[" + ", ".join(f"{_plane_sign(i, j):.1f}" for i in range(dim)) + "]"
@@ -1199,7 +1196,7 @@ def q_graph_ego(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(1)
         .collect()[0]["name"]
     )
-    return ego_network(edges, center, depth=1).select(
+    return ego_network(edges, center).select(
         "entity_a", "entity_b", "co_occurrence_count", "weight"
     )
 
@@ -1305,9 +1302,9 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         for x in emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]
     ]
     pool = d.where(F.col("vec_id") != 0)
-    centers, assigned = fit_ivf(pool, n_clusters=16)
-    ann = ivf_probe(assigned, centers, qv, k=10, n_probe=4).select("vec_id")
-    exact = brute_force_topk(pool, qv, k=10).select("vec_id")
+    centers, assigned = fit_ivf(pool)
+    ann = ivf_probe(assigned, centers, qv, n_probe=4).select("vec_id")
+    exact = brute_force_topk(pool, qv).select("vec_id")
     return exact.join(ann, "vec_id").agg(
         F.count(F.lit(1)).alias("n_hits")
     ).select(
@@ -1488,7 +1485,7 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("video_frame_samples", None)  # oracle (VALUES) attached below
 def q_video_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.multimodal import sample_video_frames
-    return sample_video_frames(_media_fixture(spark), fps=1.0, max_frames=4).select(
+    return sample_video_frames(_media_fixture(spark), max_frames=4).select(
         "media_id", "frame_index", F.round("frame_ts_s", 3).alias("frame_ts_s"),
         "frame_digest",
     )
@@ -1516,7 +1513,7 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("\nshared corpus-wide footer line\nok"),
         ).alias("text"),
     )
-    return dedup_lines(d, min_chars=10)
+    return dedup_lines(d)
 
 
 ORACLE_SQL["line_dedup"] = """
@@ -1834,7 +1831,7 @@ def q_range_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = range_join(
         events, ivals, key="user_id", point_ts="ts",
-        start_ts="w_start", end_ts="w_end", bin_width_s=3600,
+        start_ts="w_start", end_ts="w_end",
     )
     return out.select(F.col("event_id").alias("pid"), "iid")
 
@@ -2564,7 +2561,7 @@ def q_ann_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         for x in emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]
     ]
     pool = d.where(F.col("vec_id") != 0)
-    centers, assigned = fit_ivf(pool, n_clusters=16, carry_cols=["category"])
+    centers, assigned = fit_ivf(pool, carry_cols=["category"])
     pred = F.col("category") == 1
     ann = ivf_probe(
         assigned, centers, qv, k=5, n_probe=4, predicate=pred

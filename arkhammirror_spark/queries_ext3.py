@@ -84,7 +84,7 @@ def q_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     check: the engineered base/edit near-dup must survive, the mirror and
     independent texture must not pair."""
     from .operators.phash import image_neardup
-    pairs = image_neardup(_phash_fixture(spark), max_hamming=6)
+    pairs = image_neardup(_phash_fixture(spark))
     return pairs.select(
         "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
     )
@@ -782,10 +782,7 @@ def q_entity_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
     valid = _valid_mentions(spark, sf_dir).select(
         "doc_id", F.lower(F.col("text")).alias("entity")
     )
-    out = entity_correlations(
-        valid, doc_col="doc_id", entity_col="entity",
-        top_k=25, min_occurrences=2,
-    )
+    out = entity_correlations(valid, entity_col="entity", top_k=25)
     return out.select(
         "entity_a",
         "entity_b",
@@ -1450,10 +1447,7 @@ def q_dedup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("document_id"),
         F.explode(F.sequence(F.lit(1), n_c)).alias("claim_i"),
     )
-    out = merge_documents(
-        docs, groups, mentions=mentions, claims=claims,
-        cleanup_action="soft_delete", id_col="doc_id",
-    )
+    out = merge_documents(docs, groups, mentions=mentions, claims=claims)
 
     hist = out["history"].select(
         F.col("primary_id").alias("id"), "merged_count",
@@ -1629,7 +1623,7 @@ def q_similar_claims(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the differential suite — at sf0.001 the tiny soup vocabulary makes
     # cross-group tokens corpus-common, exactly the recall gap the
     # docstring warns about
-    out = similar_claims(claims, threshold=0.8, limit=10, df_cap=100000)
+    out = similar_claims(claims, df_cap=100000)
     return out.select(
         F.col("claim_id").cast("long"),
         F.col("matched_claim_id").cast("long"),
@@ -2844,7 +2838,6 @@ def _ee_linked(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         _ee_entities_df(spark),
         event_id_col="doc_id",
-        text_col="text",
         entity_id_col="id",
         order_col="id",
     ).select("doc_id", "entities").localCheckpoint(eager=False)
@@ -3578,9 +3571,7 @@ def q_graph_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     fn = fn.localCheckpoint(eager=True)
     fl = fl.localCheckpoint(eager=True)
     an, al = aggregate_flows(fn, fl, min_value=3.0, max_links=25)
-    _, rl, _ = extract_relationship_flows(
-        nodes, edges, aggregate_by_type=True
-    )
+    _, rl, _ = extract_relationship_flows(nodes, edges)
 
     def _node_rows(df):
         return df.select(
@@ -3813,7 +3804,7 @@ def q_graph_export_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("weight").alias("w"), F.col("relationship_type").alias("payload"),
     )
     exports = [
-        ("json", export_json(fn, fe, "proj1", include_metadata=False)),
+        ("json", export_json(fn, fe, "proj1")),
         ("graphml", export_graphml(fn, fe, "proj1")),
         ("gexf", export_gexf(fn, fe, "proj1")),
     ]

@@ -41,7 +41,21 @@ PAGES_SCHEMA = StructType(
     ]
 )
 
-# docs: one row per page/url after extraction + normalization (FIXTURES.md §4)
+MENTION_STRUCT_FIELDS = [
+    StructField("text", StringType(), False),
+    StructField("entity_type", StringType(), False),
+    StructField("start_char", IntegerType(), False),
+    StructField("end_char", IntegerType(), False),
+    StructField("confidence", DoubleType(), False),
+]
+
+# docs: one row per page/url after extraction + normalization (FIXTURES.md §4),
+# with the fused mock-NER pass and the audit side-channel (the `_` fields,
+# dropped from the public docs table): _mentions = full mention structs;
+# _names = sorted distinct lowercase names that pass the noise filter (the
+# edge-build input — persisting just this array instead of the full mention
+# structs keeps the cached working set small at corpus scale);
+# _n_mentions = len(_mentions)
 DOCS_SCHEMA = StructType(
     [
         StructField("url", StringType(), False),
@@ -55,28 +69,8 @@ DOCS_SCHEMA = StructType(
         StructField("n_pages", IntegerType(), True),
         StructField("checksum", StringType(), True),
         StructField("error", StringType(), True),
-        # audit side-channel (dropped from the public docs table)
         StructField("_part_id", IntegerType(), True),
         StructField("_batch_ms", DoubleType(), True),
-    ]
-)
-
-MENTION_STRUCT_FIELDS = [
-    StructField("text", StringType(), False),
-    StructField("entity_type", StringType(), False),
-    StructField("start_char", IntegerType(), False),
-    StructField("end_char", IntegerType(), False),
-    StructField("confidence", DoubleType(), False),
-]
-
-# docs + fused mock-NER mentions (extract_docs(include_mentions=True)):
-# _mentions = full mention structs; _names = sorted distinct lowercase names
-# that pass the noise filter (the edge-build input — persisting just this
-# array instead of the full mention structs keeps the cached working set
-# small at corpus scale); _n_mentions = len(_mentions).
-DOCS_MENTIONS_SCHEMA = StructType(
-    list(DOCS_SCHEMA.fields)
-    + [
         StructField("_mentions", ArrayType(StructType(MENTION_STRUCT_FIELDS)), True),
         StructField("_names", ArrayType(StringType()), True),
         StructField("_n_mentions", IntegerType(), True),

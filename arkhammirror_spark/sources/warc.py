@@ -152,10 +152,9 @@ def parse_warc_records(raw: bytes) -> list[dict]:
     return out
 
 
-def warc_to_pages(
-    segments: DataFrame, path_col: str = "path", content_col: str = "content"
-) -> DataFrame:
+def warc_to_pages(segments: DataFrame) -> DataFrame:
     """(path, content) binary rows → pages rows (one Arrow pass)."""
+    from ..operators.lane import error_text
     from ..shipping import ensure_shipped
 
     ensure_shipped(segments.sparkSession)
@@ -165,7 +164,7 @@ def warc_to_pages(
         for pdf in batches:
             rows = []
             for path, content in zip(
-                pdf[path_col].tolist(), pdf[content_col].tolist()
+                pdf["path"].tolist(), pdf["content"].tolist()
             ):
                 if content is None:
                     continue
@@ -175,7 +174,7 @@ def warc_to_pages(
                     rows.append(
                         {"url": None, "warc_ts": None, "html": None,
                          "text": None, "lang": None, "warc_path": path,
-                         "error": f"{type(exc).__name__}: {exc}"}
+                         "error": error_text(exc)}
                     )
                     continue
                 for r in recs:
@@ -193,7 +192,7 @@ def warc_to_pages(
                     )
             yield pd.DataFrame(rows, columns=names)
 
-    return segments.select(path_col, content_col).mapInPandas(_run, PAGES_SCHEMA)
+    return segments.select("path", "content").mapInPandas(_run, PAGES_SCHEMA)
 
 
 def build_warc(records: list[dict], gzip_members: bool = True) -> bytes:

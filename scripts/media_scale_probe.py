@@ -95,7 +95,7 @@ def main() -> None:
     for label, n in (("small", n_small), ("big", n_big)):
         media = build_image_corpus(spark, n).localCheckpoint(eager=True)
         t0 = time.perf_counter()
-        pairs = image_neardup(media, max_hamming=6).collect()
+        pairs = image_neardup(media).collect()
         wall = time.perf_counter() - t0
         planted = {(f"m{i-1:06d}", f"m{i:06d}") for i in range(n)
                    if i % 10 == 1}

@@ -515,9 +515,6 @@ class TestFlows:
             source_types=["person"],
             target_types=["location", "event"],
             intermediate_types=["organization"] if seed % 2 else None,
-            relationship_types=["works_for", "located_in"]
-            if seed % 3 == 0 else None,
-            min_weight=2.0 if seed % 2 else 0.0,
         )
         exp = fa.extract_entity_flows(g, **kw)
         nodes, edges = _graph_frames(spark, g)
@@ -538,19 +535,13 @@ class TestFlows:
         fa = flows_mod.FlowAnalyzer()
         rng = random.Random(200 + seed)
         g = _mk_graph(models, rng)
-        kw = dict(
-            flow_relationship_types=["works_for", "mentioned_with"]
-            if seed % 2 else None,
-            min_weight=1.5 if seed % 2 == 0 else 0.0,
-            aggregate_by_type=seed < 2,
-        )
-        exp = fa.extract_relationship_flows(g, **kw)
+        exp = fa.extract_relationship_flows(g, aggregate_by_type=True)
         nodes, edges = _graph_frames(spark, g)
         from arkhammirror_spark.operators.flows import (
             extract_relationship_flows,
         )
 
-        fn, fl, stats = extract_relationship_flows(nodes, edges, **kw)
+        fn, fl, stats = extract_relationship_flows(nodes, edges)
         assert _got_link_set(fl.collect()) == _link_set(exp.links), seed
         assert _got_node_map(fn.collect()) == _node_map(exp.nodes), seed
         s = stats.collect()[0]

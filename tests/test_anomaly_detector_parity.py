@@ -339,8 +339,7 @@ def test_content_anomalies_banded_mode(ref, spark):
         emb, min_cluster_distance=0.5
     ).collect()}
     banded = {r["vec_id"]: r for r in content_anomalies(
-        emb, min_cluster_distance=0.5, nn_mode="banded",
-        bands=8, rows_per_band=4,
+        emb, min_cluster_distance=0.5, nn_mode="banded"
     ).collect()}
     # conservative: everything brute flags, banded flags too
     assert set(brute) <= set(banded)
@@ -387,8 +386,6 @@ def test_content_anomalies_auto_mode_switch(ref, spark):
     # n = 19 <= auto_brute_max=19 -> brute (inclusive boundary)
     assert rows(nn_mode="auto", auto_brute_max=19) == rows(nn_mode="brute")
     # n = 19 > auto_brute_max=18 -> banded
-    assert rows(
-        nn_mode="auto", auto_brute_max=18, bands=8, rows_per_band=3
-    ) == rows(nn_mode="banded", bands=8, rows_per_band=3)
+    assert rows(nn_mode="auto", auto_brute_max=18) == rows(nn_mode="banded")
     # the shipped default (auto, 8192) is the brute lane at fixture scale
     assert rows() == rows(nn_mode="brute")

@@ -122,9 +122,4 @@ def test_ivf_filtered_probe_prunes_before_distance(spark, tmp_path):
     got = out.collect()
     assert [r["vec_id"] for r in got] == [r["vec_id"] for r in exp]
     assert all(r["vec_id"] % 3 == 1 and r["vec_id"] < 12 for r in got)
-
-    # score_threshold arm (:927-930): at 0.9 only the clones survive
-    thr = ivf_probe(lists, centers, base, k=50, n_probe=8,
-                    predicate=pred, score_threshold=0.9)
-    assert sorted(r["vec_id"] for r in thr.collect()) == [1, 4, 7, 10]
     spark.sql("DROP TABLE IF EXISTS ivf_lists_filt_test")

@@ -183,7 +183,7 @@ def test_manifest_field_walk_matches_reference_parse(c2pa_ref, store):
     mod, reader = c2pa_ref
     reader.payload = json.dumps(store)
     ref = asyncio.run(_ref_parser(c2pa_ref).parse("dummy.jpg"))
-    got = extract_manifest_fields(store, False)
+    got = extract_manifest_fields(store)
     assert got == ref
 
 

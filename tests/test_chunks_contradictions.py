@@ -98,7 +98,7 @@ class TestContradictions:
             ],
             "claim_id: long, claim_text: string",
         )
-        got = detect_contradictions(claims, threshold=0.5).collect()
+        got = detect_contradictions(claims).collect()
         found = {(r["id_a"], r["id_b"]): r["contradiction_type"] for r in got}
         assert found.get((1, 2)) == "direct"
         assert found.get((3, 4)) == "numeric"
@@ -112,7 +112,7 @@ class TestContradictions:
             ],
             "claim_id: long, claim_text: string",
         )
-        r = detect_contradictions(claims, threshold=0.5).collect()[0]
+        r = detect_contradictions(claims).collect()[0]
         assert abs(r["confidence"] - r["similarity"] * 0.8) < 1e-12
         assert r["severity"] == "high"
 
@@ -154,7 +154,7 @@ class TestContradictions:
         claims = spark.createDataFrame(rows, "claim_id: long, claim_text: string")
         got = {
             (r["id_a"], r["id_b"]): r["contradiction_type"]
-            for r in detect_contradictions(claims, threshold=0.5).collect()
+            for r in detect_contradictions(claims).collect()
         }
         assert got.get((900, 901)) == "direct"
         assert got.get((910, 911)) == "numeric"

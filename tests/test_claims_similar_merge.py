@@ -145,11 +145,11 @@ def _spark_claims(spark, texts):
     )
 
 
-@pytest.mark.parametrize("threshold", [0.5, 0.8])
-def test_similar_claims_fuzzy_parity(ref, spark, threshold):
-    """Fallback arm (shard.py:909-922): per-claim match sets and scores
-    are identical; limit chosen above the max match count so the
-    reference's DB-order tiebreak cannot differ."""
+def test_similar_claims_fuzzy_parity(ref, spark):
+    """Fallback arm (shard.py:909-922) at threshold 0.8, limit 10:
+    per-claim match sets and scores are identical (the fixture has fewer
+    matches per claim than the limit, so the reference's DB-order
+    tiebreak cannot differ)."""
     from arkhammirror_spark.operators.claims_ops import similar_claims
 
     models, _ = ref
@@ -160,7 +160,7 @@ def test_similar_claims_fuzzy_parity(ref, spark, threshold):
     for i in range(len(texts)):
         cid = f"c{i:03d}"
         matches = asyncio.run(
-            sh.find_similar_claims(cid, threshold=threshold, limit=100)
+            sh.find_similar_claims(cid, threshold=0.8, limit=10)
         )
         exp[cid] = sorted(
             (m.matched_claim_id, round(m.similarity_score, 9),
@@ -168,9 +168,7 @@ def test_similar_claims_fuzzy_parity(ref, spark, threshold):
             for m in matches
         )
 
-    got_rows = similar_claims(
-        _spark_claims(spark, texts), threshold=threshold, limit=100
-    ).collect()
+    got_rows = similar_claims(_spark_claims(spark, texts)).collect()
     got = {cid: [] for cid in exp}
     for r in got_rows:
         got[r["claim_id"]].append(
@@ -179,36 +177,8 @@ def test_similar_claims_fuzzy_parity(ref, spark, threshold):
         )
     got = {k: sorted(v) for k, v in got.items()}
     assert any(exp.values())  # fixture actually produces matches
+    assert all(len(v) < 10 for v in exp.values())  # no truncation tie
     assert got == exp
-
-
-def test_similar_claims_fuzzy_limit(ref, spark):
-    """When limit truncates, the kept SCORE multiset matches (the
-    reference's within-tie order is DB order, which has no cross-engine
-    meaning; scores are the contract)."""
-    from arkhammirror_spark.operators.claims_ops import similar_claims
-
-    models, _ = ref
-    texts = _fuzzy_texts()
-    sh = _make_shard(ref, _mk_claims(models, texts))
-    limit = 2
-
-    df = similar_claims(
-        _spark_claims(spark, texts), threshold=0.5, limit=limit
-    )
-    got_rows = df.collect()
-    for i in range(len(texts)):
-        cid = f"c{i:03d}"
-        matches = asyncio.run(
-            sh.find_similar_claims(cid, threshold=0.5, limit=limit)
-        )
-        exp_scores = sorted(round(m.similarity_score, 9) for m in matches)
-        got_scores = sorted(
-            round(r["similarity_score"], 9)
-            for r in got_rows
-            if r["claim_id"] == cid
-        )
-        assert got_scores == exp_scores, cid
 
 
 _MERGE_GROUPS = {"c000": ["c001", "c002", "c000"], "c005": ["c006"]}

@@ -163,22 +163,6 @@ def test_four_arm_parity(ref, spark, seed):
     assert got == exp
 
 
-@pytest.mark.parametrize("seed", [100, 101, 102])
-def test_parity_with_tolerance(ref, spark, seed):
-    """tolerance_days>0 softens both the contradiction date filter and the
-    overlap date match (banded-join arm)."""
-    models, rc = ref
-    evs = _fuzz_events(seed, n=14, date_spread=12)
-    det = rc.ConflictDetector(tolerance_days=3)
-    exp = _ref_sigs(det.detect_conflicts(_to_ref(models, evs)))
-    got = _spark_sigs(
-        detect_temporal_conflicts(
-            _spark_frame(spark, evs), tolerance_days=3
-        ).collect()
-    )
-    assert got == exp
-
-
 @pytest.mark.parametrize("seed", [200, 201])
 def test_parity_wide_dates(ref, spark, seed):
     """Wide date spread exercises the gap arm (3x-median + 30-day rule) and
@@ -246,74 +230,3 @@ def test_planted_all_arms(ref, spark):
     assert any(r["gap_days"] >= 365 for r in by_type["gap"])
     assert {(r["event1_id"], r["event2_id"], r["entity_id"])
             for r in by_type["overlap"]} == {("o1", "o2", "Y")}
-
-
-def test_word_df_cap_audit(ref, spark):
-    """word_df_cap drops hot shared words from the similarity arm only —
-    with a cap high enough, output is identical to the uncapped run."""
-    models, rc = ref
-    evs = _fuzz_events(7)
-    det = rc.ConflictDetector(tolerance_days=0)
-    exp = _ref_sigs(det.detect_conflicts(_to_ref(models, evs)))
-    got = _spark_sigs(
-        detect_temporal_conflicts(
-            _spark_frame(spark, evs), word_df_cap=10_000
-        ).collect()
-    )
-    assert got == exp
-
-
-def test_conflict_type_subset(ref, spark):
-    models, rc = ref
-    evs = _fuzz_events(3)
-    det = rc.ConflictDetector(tolerance_days=0)
-    ctypes = [t for t in rc.ConflictType if t.value in ("gap", "overlap")]
-    exp = _ref_sigs(det.detect_conflicts(_to_ref(models, evs), ctypes))
-    got = _spark_sigs(
-        detect_temporal_conflicts(
-            _spark_frame(spark, evs), conflict_types=["gap", "overlap"]
-        ).collect()
-    )
-    assert got == exp
-
-
-def test_gaps_group_col_survives_prep_projection(ref, spark):
-    """Regression: detect_gaps(group_col=...) with a caller-named column
-    (e.g. a project/case id) that is NOT in _prep's fixed projection must
-    not raise an unresolved-column error — the group column is computed
-    before the projection and carried through it. Per-group output must
-    equal running the reference detector on each group separately."""
-    models, rc = ref
-    evs_a = _fuzz_events(21, n=10, date_spread=60)
-    evs_b = _fuzz_events(22, n=10, date_spread=60)
-    for e in evs_b:
-        e["ord"] += 100
-        e["id"] = "b" + e["id"]
-        e["document_id"] = "pb_" + e["document_id"]
-    rows = [
-        (
-            e["ord"], e["id"], e["document_id"], e["text"],
-            e["date_start"].date(), e["confidence"], list(e["entities"]),
-            e["pos"], proj,
-        )
-        for proj, evs in (("alpha", evs_a), ("beta", evs_b))
-        for e in evs
-    ]
-    frame = spark.createDataFrame(
-        rows,
-        "ord long, id string, document_id string, text string, "
-        "date_start date, confidence double, entities array<string>, "
-        "pos long, project_id string",
-    )
-    det = rc.ConflictDetector(tolerance_days=0)
-    gap_types = [t for t in rc.ConflictType if t.value == "gap"]
-    exp = _ref_sigs(
-        det.detect_conflicts(_to_ref(models, evs_a), gap_types)
-        + det.detect_conflicts(_to_ref(models, evs_b), gap_types)
-    )
-    got = _spark_sigs(
-        detect_temporal_conflicts(
-            frame, conflict_types=["gap"], group_col="project_id"
-        ).collect()
-    )
-    assert got == exp

@@ -179,9 +179,7 @@ def test_entity_correlations_operator_matches_reference_loop(
     df = spark.createDataFrame(rows, ["doc_id", "entity_text"])
     got = {
         (r["entity_a"], r["entity_b"]): r
-        for r in entity_correlations(
-            df, entities=entities, min_occurrences=2
-        ).collect()
+        for r in entity_correlations(df).collect()
     }
     exp = {(e["entity_a"], e["entity_b"]): e for e in expected}
     assert set(got) == set(exp)
@@ -192,21 +190,6 @@ def test_entity_correlations_operator_matches_reference_loop(
         assert g["correlation_type"] == e["type"], key
         assert g["description"] == e["description"], key
         assert g["n_docs"] == len(all_docs)
-
-
-def test_degenerate_single_doc_branch(spark, patterns_ref):
-    """shard.py:722-745: |union docs| < 2 -> score 1.0, co_occurrence."""
-    from arkhammirror_spark.operators.correlations import entity_correlations
-
-    df = spark.createDataFrame(
-        [(1, "alpha"), (1, "beta"), (1, "gamma")], ["doc_id", "entity_text"]
-    )
-    rows = entity_correlations(df, min_occurrences=1).collect()
-    assert len(rows) == 3
-    for r in rows:
-        assert r["correlation_score"] == 1.0
-        assert r["correlation_type"] == "co_occurrence"
-        assert r["description"] == "Found in 1 common documents"
 
 
 def test_spearman_matches_reference_including_int_cast_quirk(
@@ -275,17 +258,14 @@ def test_description_dyadic_tie_rounds_to_even(spark, patterns_ref):
     docs_a = {0, 1, 2, 3}
     docs_b = {1, 2, 3, 4}
     rows = [(d, "aa") for d in docs_a] + [(d, "bb") for d in docs_b]
-    # pads are REQUESTED single-doc entities: they stretch the union to
-    # 12 docs (the reference unions the requested entities' docs) but
-    # form no pair with c >= 2
+    # pads are single-doc entities: they stretch the union to 12 docs
+    # (the reference unions the requested entities' docs) but form no
+    # pair with c >= 2
     rows += [(d, f"pad{d}") for d in range(12)]
     df = spark.createDataFrame(rows, ["doc_id", "entity_text"])
-    req = ["aa", "bb"] + [f"pad{d}" for d in range(12)]
     got = {
         (r["entity_a"], r["entity_b"]): r
-        for r in entity_correlations(
-            df, entities=req, min_occurrences=2
-        ).collect()
+        for r in entity_correlations(df).collect()
     }
     r = got[("aa", "bb")]
     assert r["correlation_score"] == pytest.approx(0.625)
@@ -297,13 +277,6 @@ def test_description_dyadic_tie_rounds_to_even(spark, patterns_ref):
                 "co-occurred in 3 documents")
     assert r["description"] == expected
     assert "(r=0.62)" in r["description"]
-
-
-def test_empty_entity_list_returns_empty(spark):
-    from arkhammirror_spark.operators.correlations import entity_correlations
-
-    df = spark.createDataFrame([(1, "a")], ["doc_id", "entity_text"])
-    assert entity_correlations(df, entities=[], min_occurrences=1).count() == 0
 
 
 # ---------------------------------------------------------------------------
@@ -442,7 +415,7 @@ def test_entity_correlations_fuzz_rounds(spark, patterns_ref):
         if len(all_docs) < 2:
             continue
         expected = _ref_find_correlations(
-            patterns_ref, entity_docs, all_docs, min_occurrences=1
+            patterns_ref, entity_docs, all_docs, min_occurrences=2
         )
         from arkhammirror_spark.operators.correlations import (
             entity_correlations,
@@ -451,9 +424,7 @@ def test_entity_correlations_fuzz_rounds(spark, patterns_ref):
         df = spark.createDataFrame(rows, ["doc_id", "entity_text"])
         got = {
             (r["entity_a"], r["entity_b"]): r
-            for r in entity_correlations(
-                df, entities=entities, min_occurrences=1
-            ).collect()
+            for r in entity_correlations(df).collect()
         }
         exp = {(e["entity_a"], e["entity_b"]): e for e in expected}
         assert set(got) == set(exp), seed

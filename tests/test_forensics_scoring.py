@@ -250,7 +250,7 @@ class TestEla:
         orig = np.zeros((192, 256, 3), dtype=np.uint8)
         resaved = orig.copy()
         resaved[:, :, :] = 2  # uniform error 2, scaled 30
-        got = ela_from_arrays(orig, resaved, scale=15)
+        got = ela_from_arrays(orig, resaved)
         assert got["mean_error"] == 30.0 and got["std_error"] == 0.0
         assert got["max_error"] == 30.0
         assert got["uniformity_score"] == 1.0

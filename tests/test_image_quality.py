@@ -254,27 +254,15 @@ def test_classification_and_routes_match_reference(ref, spark, corpus):
     assert seen_classes >= {"clean", "messy"}
 
     clf = iq.ImageQualityClassifier()
-    for mode in ("auto", "paddle_only", "qwen_only"):
-        for skip_blank in (True, False):
-            for enable_down in (True, False):
-                routed = {
-                    r["media_id"]: r["route"]
-                    for r in ocr_route(
-                        classified, ocr_mode=mode,
-                        enable_downscale=enable_down,
-                        skip_blank_pages=skip_blank,
-                    ).collect()
-                }
-                for name, q in exp.items():
-                    want = "|".join(
-                        clf.get_ocr_route(
-                            q, ocr_mode=mode,
-                            enable_downscale=enable_down,
-                            skip_blank_pages=skip_blank,
-                        )
-                    )
-                    assert routed[name] == want, (name, mode,
-                                                  skip_blank, enable_down)
+    routed = {r["media_id"]: r["route"] for r in ocr_route(classified).collect()}
+    for name, q in exp.items():
+        want = "|".join(
+            clf.get_ocr_route(
+                q, ocr_mode="auto", enable_downscale=True,
+                skip_blank_pages=True,
+            )
+        )
+        assert routed[name] == want, name
 
 
 def test_decode_failure_lands_in_except_arm(spark):

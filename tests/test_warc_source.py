@@ -118,7 +118,7 @@ class TestSparkReader:
         pages = read_warc(spark, str(p)).where("error is null").select(
             "url", "warc_ts", "html", "text"
         )
-        docs = extract_docs(pages, include_mentions=True)
+        docs = extract_docs(pages)
         got = {r["url"]: r for r in docs.collect()}
         assert "John Smith met Acme Corp." in got["https://a.example/1"]["extracted_text"]
         names = [m["text"] for m in got["https://a.example/1"]["_mentions"]]
