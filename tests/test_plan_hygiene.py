@@ -405,6 +405,16 @@ _TEST_ONLY_OK = {
 }
 
 
+def _registered(node) -> bool:
+    """The def is a part registered with `@register(...)`."""
+    import ast
+
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+        for d in node.decorator_list
+    )
+
+
 def _top_level_defs():
     """(import-time root nodes, {qualified name: def node}) over the package
     (bar reference_impl/) and the entry-point scripts. Import-time code is
@@ -418,12 +428,6 @@ def _top_level_defs():
     files += [repo / f for f in ("bench.py", "bench_extra.py", "__spark_entry__.py")]
     files += sorted((repo / "scripts").glob("*.py")) + sorted((repo / "perfbench").glob("*.py"))
 
-    def registered(node) -> bool:
-        return any(
-            isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
-            for d in node.decorator_list
-        )
-
     roots, defs = [], {}
     for path in files:
         mod = ".".join(path.relative_to(repo).with_suffix("").parts)
@@ -436,7 +440,7 @@ def _top_level_defs():
             roots += node.decorator_list + getattr(node, "bases", [])
             if not isinstance(node, ast.ClassDef):
                 roots += node.args.defaults + [d for d in node.args.kw_defaults if d]
-            if registered(node) or mod == "__spark_entry__":
+            if _registered(node) or mod == "__spark_entry__":
                 roots.append(ast.Name(node.name))
     return roots, defs
 
@@ -600,8 +604,7 @@ def test_no_unset_options():
         and isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
         and node.name in reached
         and q not in _TEST_ONLY_OK
-        and not any(getattr(d.func, "id", None) == "register"
-                    for d in node.decorator_list if isinstance(d, ast.Call))
+        and not _registered(node)
         for _, p, _ in _defaulted_params(node)
     }
     set_ = _set_options(defs)
