@@ -275,9 +275,9 @@ def content_anomalies(
     )
 
 
-def embedding_anomalies(emb: DataFrame, threshold: float = 3.0) -> DataFrame:
+def embedding_anomalies(emb: DataFrame) -> DataFrame:
     """A1: distance of each (vec_id, embedding) from the corpus centroid,
-    z-scored (detector.py:64-137).
+    z-scored (detector.py:64-137); rows past z 1.5 are anomalies.
 
     Centroid via element-wise avg (posexplode + groupBy(pos)); distance is a
     native zip_with/aggregate fold — no UDF.
@@ -307,7 +307,7 @@ def embedding_anomalies(emb: DataFrame, threshold: float = 3.0) -> DataFrame:
         with_dist.crossJoin(F.broadcast(stats))
         .where(F.col("std_d") > 0)
         .withColumn("z_score", F.abs((F.col("dist") - F.col("mean_d")) / F.col("std_d")))
-        .where(F.col("z_score") > threshold)
+        .where(F.col("z_score") > 1.5)
         .withColumn("confidence", F.least(F.lit(1.0), F.col("z_score") / 5.0))
         .select("vec_id", "dist", "z_score", "confidence")
     )

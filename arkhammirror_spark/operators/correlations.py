@@ -165,7 +165,7 @@ def spearman_int_rank(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    group_cols: list[str] | None = None,
+    group_cols: list[str],
 ) -> DataFrame:
     """Spearman rank correlation per group, reproducing the reference's
     int-cast quirk (shard.py:874-877): tie-averaged 1-based ranks are
@@ -182,17 +182,10 @@ def spearman_int_rank(
 
     Output: group_cols + (spearman double, n bigint).
     """
-    gb = list(group_cols or [])
+    gb = list(group_cols)
 
     def int_ranks(col: str, out: str):
-        # The ungrouped arm is a documented SMALL-DATA lane: with no
-        # group_cols the rank window is necessarily global (one partition).
-        # Every contract/production call passes group_cols (hash-partitioned
-        # windows); callers ranking an ungrouped corpus-scale frame should
-        # add a grouping key or pre-aggregate first.
-        w_rank = Window.partitionBy(*gb).orderBy(col) if gb else (
-            Window.orderBy(col)
-        )
+        w_rank = Window.partitionBy(*gb).orderBy(col)
         w_tie = Window.partitionBy(*(gb + [col]))
         return (
             F.rank().over(w_rank)

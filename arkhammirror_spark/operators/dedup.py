@@ -50,7 +50,7 @@ def exact_dedup(df: DataFrame, key_col: str, id_col: str) -> DataFrame:
     )
 
 
-def shingles(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def shingles(df: DataFrame, id_col: str) -> DataFrame:
     """Distinct word 3-gram shingles of each document's `text` — native
     (split + transform)."""
     words = F.split(F.lower(F.col("text")), r"\s+")
@@ -85,7 +85,7 @@ def shingle_hashes(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def minhash_signatures(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def minhash_signatures(sh: DataFrame, id_col: str) -> DataFrame:
     """128-element minhash signature per doc from a (id, shingle) or
     (id, h) frame.
 
@@ -135,7 +135,7 @@ def _banded_buckets(sigs: DataFrame, id_col: str) -> DataFrame:
 
 
 def lsh_candidate_pairs(
-    sigs: DataFrame, id_col: str = "doc_id", bucket_cap: int = 5000
+    sigs: DataFrame, id_col: str, bucket_cap: int = 5000
 ) -> DataFrame:
     """Band the 128-long signature into 32 bands of 4 rows; docs sharing
     any band bucket become candidates -> (id_a, id_b, truncated).

@@ -2,8 +2,8 @@
 
 Spark restatement of the reference's co-occurrence SQL
 (arkham-shard-graph/builder.py:240-265): self-join mentions on the document
-key with an ordered pair predicate, COUNT(DISTINCT doc), ARRAY_AGG(DISTINCT
-doc), HAVING count ≥ min, ORDER BY count DESC LIMIT n — plus edge weight
+key with an ordered pair predicate, COUNT(DISTINCT doc), HAVING count ≥
+min, ORDER BY count DESC LIMIT n — plus edge weight
 min(1, count/10) (builder.py:420-432) and node degrees (builder.py:439-456).
 
 Scale notes:
@@ -36,48 +36,37 @@ def ordered_pairs(arr: Column, first: str, second: str) -> Column:
     )
 
 
-def comention_edges(
-    mentions: DataFrame,
-    doc_col: str = "url",
-    include_doc_ids: bool = True,
-) -> DataFrame:
+def comention_edges(mentions: DataFrame) -> DataFrame:
+    """Co-mention edges over (doc_id, text) mention rows."""
     # Join-free formulation of the reference SQL: first aggregate each doc's
     # DISTINCT entity names into one sorted array (one shuffle, map-side
     # combinable), then explode the i<j combinations natively. Output is
     # identical to the self-join + COUNT(DISTINCT) form — each (a, b, doc)
     # appears exactly once, so count(*) ≡ COUNT(DISTINCT doc) — but the plan
     # has two shuffles instead of four and no join at all.
-    per_doc = mentions.groupBy(F.col(doc_col).alias("doc")).agg(
-        F.sort_array(F.collect_set(F.lower(F.col("text")))).alias("names")
+    per_doc = mentions.groupBy("doc_id").agg(
+        F.sort_array(F.collect_set(F.lower(F.col("text")))).alias("_names")
     )
-    return comention_edges_from_name_sets(
-        per_doc, "names", "doc", include_doc_ids
-    )
+    return comention_edges_from_name_sets(per_doc)
 
 
-def comention_edges_from_name_sets(
-    docs: DataFrame,
-    names_col: str = "_names",
-    doc_col: str = "url",
-    include_doc_ids: bool = False,
-) -> DataFrame:
-    """Edge build from per-doc sorted-distinct name arrays: one narrow pair
-    explosion feeding a tiny partial-aggregated count; pairs co-mentioned
-    in at least 2 documents, the top 1000 by count. The pipeline passes
-    the arrays its fused extract already produced (no per-doc groupBy at
-    all); ``comention_edges`` builds them from mention rows. Per-doc entity
-    counts are bounded (documents are bounded size), so the combination
-    explosion is O(m²) with small m, inside one task."""
+def comention_edges_from_name_sets(docs: DataFrame) -> DataFrame:
+    """Edge build from per-doc sorted-distinct `_names` arrays: one narrow
+    pair explosion feeding a tiny partial-aggregated count; pairs
+    co-mentioned in at least 2 documents, the top 1000 by count, as
+    (entity_a, entity_b, co_occurrence_count, weight). No document_ids
+    array: at 10^12-doc scale an unbounded ARRAY_AGG per edge is a memory
+    hazard, and the (doc, entity) mapping is already in the mention rows.
+    The pipeline passes the arrays its fused extract already produced (no
+    per-doc groupBy at all); ``comention_edges`` builds them from mention
+    rows. Per-doc entity counts are bounded (documents are bounded size),
+    so the combination explosion is O(m²) with small m, inside one task."""
     exploded = docs.select(
-        F.col(doc_col).alias("doc"),
-        F.explode(ordered_pairs(F.col(names_col), "entity_a", "entity_b")).alias("p"),
-    ).select("doc", "p.entity_a", "p.entity_b")
-    aggs = [F.count(F.lit(1)).alias("co_occurrence_count")]
-    if include_doc_ids:
-        aggs.append(F.sort_array(F.collect_list(F.col("doc"))).alias("document_ids"))
+        F.explode(ordered_pairs(F.col("_names"), "entity_a", "entity_b")).alias("p"),
+    ).select("p.entity_a", "p.entity_b")
     edges = (
         exploded.groupBy("entity_a", "entity_b")
-        .agg(*aggs)
+        .agg(F.count(F.lit(1)).alias("co_occurrence_count"))
         .where(F.col("co_occurrence_count") >= 2)
         .withColumn(
             "weight",

@@ -54,9 +54,7 @@ def _literal_pattern(lower_col):
 
 
 def entity_name_index(
-    entities: DataFrame,
-    id_col: str = "entity_id",
-    order_col: str | None = None,
+    entities: DataFrame, id_col: str, order_col: str | None
 ) -> DataFrame:
     """(entity_id, match_lower, first_token, pattern) match list from the
     entities' `name` and (when present) `aliases` columns.
@@ -205,28 +203,21 @@ def link_entities_to_events(
 
 
 def entity_timeline(
-    events: DataFrame,
-    entity_id: str,
-    start: dt.date | None = None,
-    end: dt.date | None = None,
+    events: DataFrame, entity_id: str, start: dt.date, end: dt.date
 ) -> DataFrame:
     """Events whose `entities` mention the entity, `date_start`-range
     filtered
     (get_entity_timeline, shard.py:503-527: events strictly before
     `start` or strictly after `end` are dropped)."""
-    out = events.where(F.array_contains(F.col("entities"), entity_id))
-    if start is not None:
-        out = out.where(F.col("date_start") >= F.lit(start))
-    if end is not None:
-        out = out.where(F.col("date_start") <= F.lit(end))
-    return out
+    return events.where(
+        F.array_contains(F.col("entities"), entity_id)
+        & (F.col("date_start") >= F.lit(start))
+        & (F.col("date_start") <= F.lit(end))
+    )
 
 
 def entity_timeline_summary(
-    events: DataFrame,
-    entity_id: str,
-    start: dt.date | None = None,
-    end: dt.date | None = None,
+    events: DataFrame, entity_id: str, start: dt.date, end: dt.date
 ) -> DataFrame:
     """One row: (entity_id, event_count, range_start, range_end,
     related_entities csv) — get_entity_timeline's aggregate shape

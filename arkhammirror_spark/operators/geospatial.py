@@ -79,9 +79,9 @@ def resolve_coordinates(
     label: str,
     lat,
     lng,
-    sentence: str = "",
-    description: str = "",
-    address: str = "",
+    sentence: str,
+    description: str,
+    address: str,
 ) -> tuple[float, float, str] | None:
     """The full per-node cascade (:136-202). Returns (lat, lng,
     location_type) or None."""

@@ -22,6 +22,10 @@ from .driver_lane import bounded_collect, local_frame
 # the PageRank damping factor of the driver reference, the distributed loop,
 # its driver lane and the DuckDB oracle (algorithms.py:496)
 DAMPING = 0.85
+# pagerank_distributed's power iterations and the decimal digits of its
+# fixed-point ranks, read by its driver lane and its DuckDB oracle too
+PR_ITERS = 3
+PR_DIGITS = 12
 
 # ----------------------------- driver-side (≤ reference caps) --------------
 
@@ -81,10 +85,8 @@ def _undirected_edges(edges: DataFrame) -> DataFrame:
     ).distinct().localCheckpoint(eager=True)
 
 
-def _pagerank_fixed_point(
-    head, iterations: int, scale: int
-) -> list[tuple[str, float]]:
-    """`pagerank_distributed`'s quantized loop on the driver, over the rows
+def _pagerank_fixed_point(head) -> list[tuple[str, float]]:
+    """`pagerank_distributed`'s fixed-point loop on the driver, over the rows
     of `_undirected_edges`: the same symmetric edge set, the same
     expressions evaluated in the same IEEE order (the constant terms are the
     same Python doubles the loop's F.lit carries), and an exact integer
@@ -98,11 +100,11 @@ def _pagerank_fixed_point(
     n = len(nbrs)
     if n == 0:
         return []
-    fscale = float(scale)
+    fscale = float(10**PR_DIGITS)
     base = (1.0 - DAMPING) / n
     rank = dict.fromkeys(nbrs, 1.0 / n)
     r_int = {v: math.floor(x * fscale + 0.5) for v, x in rank.items()}
-    for _ in range(iterations):
+    for _ in range(PR_ITERS):
         inc = dict.fromkeys(nbrs, 0)
         for u, out in nbrs.items():
             c = r_int[u] // len(out)
@@ -142,42 +144,36 @@ def graph_statistics(edges: DataFrame) -> DataFrame:
 
 def pagerank_distributed(
     edges: DataFrame,
-    iterations: int = 20,
-    quantize: int | None = None,
     driver_cap: int | None = 100_000,
 ) -> DataFrame:
     """Distributed power iteration on the undirected co-mention graph —
     the DataFrame sibling of `pagerank` (algorithms.py:496 semantics:
     r(v) = (1−d)/n + d·Σ_{u∈N(v)} r(u)/deg(u)), for graphs beyond the
-    reference's 500-node cap. One join + agg per iteration; the symmetric
-    edge list is the only reused frame (slim: two string columns).
-    Returns (name, rank).
+    reference's 500-node cap. PR_ITERS rounds of one join + agg; the
+    symmetric edge list is the only reused frame (slim: two string
+    columns). Returns (name, rank).
 
-    quantize=D switches each iteration to FIXED-POINT arithmetic: ranks are
-    held as floor(rank·10^D + 0.5) BIGINTs, per-edge contributions are
+    Each iteration runs in FIXED-POINT arithmetic: ranks are held as
+    floor(rank·10^PR_DIGITS + 0.5) BIGINTs, per-edge contributions are
     integer-divided by degree, and the incoming sum is an exact integer sum
     — order-independent, so the result is bit-identical across partition
     counts / engines (a float Σ rank/deg is partition-order-dependent at the
     last ulp, which can flip a round(…, 6) comparison). The quantization
-    error is ≤ deg·10⁻ᴰ per node per iteration — invisible at D=12 when the
+    error is ≤ deg·10⁻¹² per node per iteration — invisible when the
     comparison precision is 6 digits.
 
-    Quantized runs take CC's adaptive small-graph lane: when the distinct
-    undirected edge set fits under `driver_cap`, one bounded collect
-    fetches the whole graph and the same fixed-point iteration runs on the
-    driver (`_pagerank_fixed_point`), bit-identical to the loop and
-    without its per-round jobs. The float form stays distributed (its sum
-    is order-dependent, so a driver re-run could differ in the last ulp).
-    Set driver_cap=None to force the distributed loop.
+    Small graphs take CC's adaptive lane: when the distinct undirected edge
+    set fits under `driver_cap`, one bounded collect fetches the whole graph
+    and the same fixed-point iteration runs on the driver
+    (`_pagerank_fixed_point`), bit-identical to the loop and without its
+    per-round jobs. Set driver_cap=None to force the distributed loop.
     """
     spark = edges.sparkSession
-    if quantize is not None and driver_cap is not None:
+    if driver_cap is not None:
         head = bounded_collect(_undirected_edges(edges), driver_cap)
         if head is not None:
             return local_frame(
-                spark,
-                _pagerank_fixed_point(head, iterations, 10**quantize),
-                "name string, rank double",
+                spark, _pagerank_fixed_point(head), "name string, rank double"
             )
     sym = (
         edges.select(F.col("entity_a").alias("src"), F.col("entity_b").alias("dst"))
@@ -192,48 +188,29 @@ def pagerank_distributed(
     if n == 0:
         sym.unpersist()
         return local_frame(spark, [], "name string, rank double")
+    scale = F.lit(float(10**PR_DIGITS))
     ranks = deg.select(
         F.col("src").alias("name"), F.lit(1.0 / n).alias("rank"), "deg"
-    )
-    scale = None if quantize is None else 10**quantize
-    if scale is not None:
-        ranks = ranks.withColumn(
-            "r_int", F.floor(F.col("rank") * F.lit(float(scale)) + 0.5)
-        )
-    for _ in range(iterations):
-        if scale is None:
-            contrib_col = (F.col("rank") / F.col("deg")).alias("c")
-        else:
-            # BIGINT div BIGINT (both positive → truncate ≡ floor, matching
-            # DuckDB's //); the downstream SUM is over exact integers
-            contrib_col = F.expr("r_int div deg").alias("c")
+    ).withColumn("r_int", F.floor(F.col("rank") * scale + 0.5))
+    for _ in range(PR_ITERS):
+        # BIGINT div BIGINT (both positive → truncate ≡ floor, matching
+        # DuckDB's //); the downstream SUM is over exact integers
         contrib = (
             sym.join(ranks, sym.src == ranks.name)
-            .select(F.col("dst"), contrib_col)
+            .select(F.col("dst"), F.expr("r_int div deg").alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("incoming"))
         )
-        if scale is None:
-            rank_col = (
-                F.lit((1.0 - DAMPING) / n)
-                + F.lit(DAMPING) * F.coalesce(F.col("incoming"), F.lit(0.0))
-            ).alias("rank")
-        else:
-            rank_col = (
-                F.lit((1.0 - DAMPING) / n)
-                + F.lit(DAMPING)
-                * (
-                    F.coalesce(F.col("incoming"), F.lit(0)).cast("double")
-                    / F.lit(float(scale))
-                )
-            ).alias("rank")
-        ranks = deg.join(contrib, deg.src == contrib.dst, "left").select(
-            F.col("src").alias("name"), rank_col, "deg"
+        rank_col = (
+            F.lit((1.0 - DAMPING) / n)
+            + F.lit(DAMPING)
+            * (F.coalesce(F.col("incoming"), F.lit(0)).cast("double") / scale)
+        ).alias("rank")
+        ranks = (
+            deg.join(contrib, deg.src == contrib.dst, "left")
+            .select(F.col("src").alias("name"), rank_col, "deg")
+            .withColumn("r_int", F.floor(F.col("rank") * scale + 0.5))
         )
-        if scale is not None:
-            ranks = ranks.withColumn(
-                "r_int", F.floor(F.col("rank") * F.lit(float(scale)) + 0.5)
-            )
         # truncate lineage per round (see connected_components_distributed)
         ranks = ranks.localCheckpoint(eager=True)
     out = ranks.select("name", "rank")
@@ -243,7 +220,6 @@ def pagerank_distributed(
 
 def betweenness_distributed(
     edges: DataFrame,
-    limit: int = 50,
     sample_sources: int | None = None,
     edge_cap: int = 10_000_000,
     auto_sample_above: int = 4096,
@@ -264,7 +240,7 @@ def betweenness_distributed(
 
     Rank ties break lexicographically by node (deterministic under any
     partitioning; the driver-side sibling uses accumulation order).
-    Returns (node, score, rank) for the top `limit`.
+    Returns (node, score, rank) for the top 10.
 
     Ceilings (enforced, not advisory): the edge count is measured FIRST and
     anything above `edge_cap` raises before a single row reaches the driver
@@ -363,13 +339,13 @@ def betweenness_distributed(
             (F.col("cnt") * F.lit(scale) / F.lit(float(norm))).alias("score"),
         )
     )
-    # Top-`limit` via distributed TakeOrderedAndProject (no unpartitioned
+    # Top 10 via distributed TakeOrderedAndProject (no unpartitioned
     # row_number window over all nodes); ranks are assigned on the driver
-    # over the ≤limit collected rows (this is already a driver-capped lane
+    # over the ≤10 collected rows (this is already a driver-capped lane
     # — the whole adjacency was collected above). Materializing through
     # local_frame also frees the broadcast immediately, as before.
     top = (
-        scored.orderBy(F.desc("score"), F.asc("node")).limit(limit).collect()
+        scored.orderBy(F.desc("score"), F.asc("node")).limit(10).collect()
     )
     bc.destroy()
     return local_frame(

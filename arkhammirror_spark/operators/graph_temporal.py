@@ -102,7 +102,7 @@ def snapshot_series(
     start,
     end,
     interval_days: int,
-    cumulative: bool = True,
+    cumulative: bool,
 ) -> DataFrame:
     """The per-snapshot summary stream of generate_snapshots over
     (entity_id, document_id, created_at) mentions: one row per snapshot

@@ -171,18 +171,12 @@ def image_quality_metrics(media: DataFrame) -> DataFrame:
     return explode_lane(cols, _metrics, _METRICS_SCHEMA)
 
 
-def classify_image_quality(
-    metrics: DataFrame, dpi_col: str | None = None
-) -> DataFrame:
+def classify_image_quality(metrics: DataFrame, dpi_col: str) -> DataFrame:
     """ImageQualityScore's derived rules (models.py:88-136) as native
     columns: issue count -> CLEAN/FIXABLE/MESSY ladder, needs_downscale
     (dpi > 200), downscale_factor (150/dpi), and the formatted issues
     list (pipe-joined, reference append order)."""
-    dpi = (
-        F.col(dpi_col).cast("int")
-        if dpi_col and dpi_col in metrics.columns
-        else F.lit(72)
-    )
+    dpi = F.col(dpi_col).cast("int")
     low_dpi = dpi < 150
     skewed = F.abs(F.col("skew_angle")) > 2.0
     low_contrast = F.col("contrast_ratio") < 0.4

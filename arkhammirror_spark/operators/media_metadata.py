@@ -713,14 +713,15 @@ def make_pdf_with_info(info: dict[str, str]) -> bytes:
 
 def make_docx_with_core(
     paragraphs: list[str],
+    *,
+    author: str,
+    modified: str,
+    last_modified_by: str,
     title: str | None = None,
-    author: str | None = None,
-    created: str | None = None,
-    modified: str | None = None,
-    last_modified_by: str | None = None,
     revision: int | None = None,
 ) -> bytes:
-    """make_docx output plus a docProps/core.xml part."""
+    """make_docx output plus a docProps/core.xml part, created
+    2022-03-01T10:00:00Z."""
     import io
     import zipfile
 
@@ -732,20 +733,16 @@ def make_docx_with_core(
     parts = []
     if title:
         parts.append(f"<dc:title>{esc(title)}</dc:title>")
-    if author:
-        parts.append(f"<dc:creator>{esc(author)}</dc:creator>")
-    if last_modified_by:
-        parts.append(f"<cp:lastModifiedBy>{esc(last_modified_by)}</cp:lastModifiedBy>")
+    parts.append(f"<dc:creator>{esc(author)}</dc:creator>")
+    parts.append(f"<cp:lastModifiedBy>{esc(last_modified_by)}</cp:lastModifiedBy>")
     if revision is not None:
         parts.append(f"<cp:revision>{revision}</cp:revision>")
-    if created:
-        parts.append(
-            f'<dcterms:created xsi:type="dcterms:W3CDTF">{created}Z</dcterms:created>'
-        )
-    if modified:
-        parts.append(
-            f'<dcterms:modified xsi:type="dcterms:W3CDTF">{modified}Z</dcterms:modified>'
-        )
+    parts.append(
+        '<dcterms:created xsi:type="dcterms:W3CDTF">2022-03-01T10:00:00Z</dcterms:created>'
+    )
+    parts.append(
+        f'<dcterms:modified xsi:type="dcterms:W3CDTF">{modified}Z</dcterms:modified>'
+    )
     core = (
         '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
         f'<cp:coreProperties xmlns:cp="{_CP}" xmlns:dc="{_DC}" '

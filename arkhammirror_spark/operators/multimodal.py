@@ -367,15 +367,16 @@ def extract_image_features(media: DataFrame) -> DataFrame:
     return explode_lane(images, _features, IMAGE_FEATURES_SCHEMA)
 
 
-def sample_video_frames(media: DataFrame, max_frames: int = 16) -> DataFrame:
-    """Frame sampling plan for video rows at one frame per second:
+def sample_video_frames(media: DataFrame) -> DataFrame:
+    """Frame sampling plan for video rows at one frame per second, at most
+    four frames:
     deterministic frame timestamps from duration (decode stubbed — digests
     derive from payload+index)."""
 
     def _frames(payload, dur) -> list[dict]:
         if payload is None or dur is None or dur <= 0:
             return []
-        n = min(max_frames, max(1, int(dur)))
+        n = min(4, max(1, int(dur)))
         base = hashlib.sha256(bytes(payload)).hexdigest()[:16]
         return [
             {

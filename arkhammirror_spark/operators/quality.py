@@ -29,11 +29,13 @@ STOP_WORDS_REQUIRED = ["the", "be", "to", "of", "and", "that", "have", "with"]
 BULLET_CHARS = ("•", "‣", "▪", "-", "*")
 
 
-def gopher_repetition(
-    df: DataFrame,
-    top_ns: tuple[int, ...] = (2, 3, 4),
-    dup_ns: tuple[int, ...] = (5, 10),
-) -> DataFrame:
+# the Gopher repetition rules in use: n -> the largest passing fraction of
+# chars covered by the top / by all duplicated word n-grams
+_TOP_GRAM_MAX = {2: 0.20, 3: 0.18}
+_DUP_GRAM_MAX = {5: 0.15}
+
+
+def gopher_repetition(df: DataFrame) -> DataFrame:
     """The repetition half of the Gopher filters (Rae et al. 2021 §A1.1):
     repetitive documents are low-value training data even when the static
     rules pass.
@@ -43,25 +45,25 @@ def gopher_repetition(
     - dup_line_char_frac  — chars in all occurrences of duplicated lines /
                             chars across lines;
     - top_{n}gram_frac    — chars covered by the most frequent word n-gram
-                            (count × gram length / doc chars), n ∈ top_ns;
+                            (count × gram length / doc chars), n ∈ {2, 3};
     - dup_{n}gram_frac    — chars covered by ALL word n-grams occurring
                             more than once (count × gram length / doc
                             chars; overlaps counted per occurrence — the
                             standard fast approximation of Gopher's
                             character-coverage definition, mirrored
-                            exactly in the oracle), n ∈ dup_ns.
+                            exactly in the oracle), n = 5.
 
     Mechanics: one explode per n + per-(doc, gram) count + per-doc agg —
     all shuffles keyed by doc id, n small constants. `passes` applies the
-    paper's thresholds (0.30/0.20 lines; 0.20/0.18/0.16 top 2/3/4-grams;
-    0.15 … 0.10 for dup 5…10-grams, interpolated by n).
+    paper's thresholds (0.30/0.20 lines; 0.20/0.18 top 2/3-grams; 0.15 dup
+    5-grams).
     """
     from .spread import spread
 
     text = F.col("text")
-    # the 1+len(top_ns)+len(dup_ns) explode branches below each re-run the
-    # upstream scan; fan a small single-file scan out first so the heavy
-    # split/explode work parallelizes
+    # the four explode branches below each re-run the upstream scan; fan a
+    # small single-file scan out first so the heavy split/explode work
+    # parallelizes
     # the word array is a column of `base`, tokenized once per document:
     # written inline in the gram lambdas below it would be re-split for
     # every gram position (O(words²) per document)
@@ -127,19 +129,18 @@ def gopher_repetition(
         )
 
     out = line_stats.drop("_chars")
-    for n in top_ns:
+    for n in _TOP_GRAM_MAX:
         out = out.join(gram_stats(n, top=True), "_id")
-    for n in dup_ns:
+    for n in _DUP_GRAM_MAX:
         out = out.join(gram_stats(n, top=False), "_id")
 
-    top_thr = {2: 0.20, 3: 0.18, 4: 0.16}
     passes = (F.col("dup_line_frac") <= 0.30) & (
         F.col("dup_line_char_frac") <= 0.20
     )
-    for n in top_ns:
-        passes = passes & (F.col(f"top_{n}gram_frac") <= top_thr.get(n, 0.16))
-    for n in dup_ns:
-        passes = passes & (F.col(f"dup_{n}gram_frac") <= round(0.20 - 0.01 * n, 2))
+    for n, cap in _TOP_GRAM_MAX.items():
+        passes = passes & (F.col(f"top_{n}gram_frac") <= cap)
+    for n, cap in _DUP_GRAM_MAX.items():
+        passes = passes & (F.col(f"dup_{n}gram_frac") <= cap)
     return out.withColumnRenamed("_id", "doc_id").withColumn("passes", passes)
 
 

@@ -50,6 +50,27 @@ def tokenize_col(text):
     )
 
 
+def with_term_scores(tf: DataFrame) -> DataFrame:
+    """BM25's idf and per-term `term_score` (keyword.py:294-338, k1 =
+    BM25_K1, b = BM25_B) added to (tf, doc_len, doc_freq, n_docs, avg_len)
+    rows; the caller computes the corpus statistics."""
+    return tf.withColumn(
+        "idf",
+        F.log(
+            (F.col("n_docs") - F.col("doc_freq") + 0.5) / (F.col("doc_freq") + 0.5)
+            + 1.0
+        ),
+    ).withColumn(
+        "term_score",
+        F.col("idf")
+        * (F.col("tf") * (BM25_K1 + 1))
+        / (
+            F.col("tf")
+            + BM25_K1 * (1 - BM25_B + BM25_B * F.col("doc_len") / F.col("avg_len"))
+        ),
+    )
+
+
 def bm25_scores(docs: DataFrame, query_terms: list[str]) -> DataFrame:
     """BM25 over a (doc_id, text) table for a fixed query; returns
     (doc_id, score), scores normalized by the best one."""
@@ -73,25 +94,8 @@ def bm25_scores(docs: DataFrame, query_terms: list[str]) -> DataFrame:
     )
 
     scored = (
-        terms.join(F.broadcast(df_counts), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "idf",
-            F.log(
-                (F.col("n_docs") - F.col("doc_freq") + 0.5)
-                / (F.col("doc_freq") + 0.5)
-                + 1.0
-            ),
-        )
-        .withColumn(
-            "term_score",
-            F.col("idf")
-            * (F.col("tf") * (BM25_K1 + 1))
-            / (
-                F.col("tf")
-                + BM25_K1
-                * (1 - BM25_B + BM25_B * F.col("doc_len") / F.col("avg_len"))
-            ),
+        with_term_scores(
+            terms.join(F.broadcast(df_counts), "term").crossJoin(F.broadcast(stats))
         )
         .groupBy("doc_id")
         .agg(F.sum("term_score").alias("raw_score"))
@@ -105,34 +109,22 @@ def bm25_scores(docs: DataFrame, query_terms: list[str]) -> DataFrame:
     )
 
 
-def regex_search(docs: DataFrame, preset: str, text_col: str = "text") -> DataFrame:
-    """All matches of a REGEX_PRESETS pattern per doc_id (engines/regex.py)."""
+def regex_search(docs: DataFrame, preset: str) -> DataFrame:
+    """All matches of a REGEX_PRESETS pattern in the `t` column per doc_id
+    (engines/regex.py)."""
     return docs.select(
         "doc_id",
         F.explode(
-            F.regexp_extract_all(
-                F.col(text_col), F.lit(REGEX_PRESETS[preset]), F.lit(0)
-            )
+            F.regexp_extract_all(F.col("t"), F.lit(REGEX_PRESETS[preset]), F.lit(0))
         ).alias("match_text"),
     )
 
 
-def hybrid_weights(dimensions: int | None) -> tuple[float, float]:
-    """(semantic_weight, keyword_weight) by embedding dims (hybrid.py:13-48)."""
-    if dimensions is None:
-        return 0.6, 0.4
-    if dimensions <= 384:
-        return 0.5, 0.5
-    if dimensions <= 768:
-        return 0.6, 0.4
-    return 0.7, 0.3
-
-
-def hybrid_merge(
-    semantic: DataFrame, keyword: DataFrame, dimensions: int | None = None
-) -> DataFrame:
-    """Weighted full-outer merge of (doc_id, score) frames (hybrid.py:51-81)."""
-    sw, kw = hybrid_weights(dimensions)
+def hybrid_merge(semantic: DataFrame, keyword: DataFrame) -> DataFrame:
+    """Weighted full-outer merge of (doc_id, score) frames (hybrid.py:51-81)
+    at the (0.5, 0.5) semantic/keyword weights hybrid.py:13-48 gives
+    embeddings of at most 384 dimensions (the corpus's are 64-wide)."""
+    sw = kw = 0.5
     s = semantic.select("doc_id", F.col("score").alias("sem"))
     k = keyword.select("doc_id", F.col("score").alias("kw"))
     return s.join(k, "doc_id", "full_outer").select(
@@ -181,15 +173,16 @@ def entity_boost(results: DataFrame, priority_entities: list[str]) -> DataFrame:
     )
 
 
-def autocomplete(
-    docs: DataFrame, prefix: str, tiebreak_col: str | None = None
-) -> DataFrame:
+def autocomplete(docs: DataFrame, prefix: str) -> DataFrame:
     """The first 10 prefix completions of `text` (keyword.py:346-378 LIKE
-    'prefix%'). `tiebreak_col` makes the LIMIT deterministic when
+    'prefix%'). The doc_id tiebreak makes the LIMIT deterministic when
     completions collide (duplicate texts are planted by the corpus
     generator)."""
-    order = [F.col("text")] + ([F.col(tiebreak_col)] if tiebreak_col else [])
-    return docs.where(F.col("text").startswith(prefix)).orderBy(*order).limit(10)
+    return (
+        docs.where(F.col("text").startswith(prefix))
+        .orderBy(F.col("text"), F.col("doc_id"))
+        .limit(10)
+    )
 
 
 def recency_boost(results: DataFrame) -> DataFrame:
@@ -225,18 +218,13 @@ def dedupe_results(results: DataFrame) -> DataFrame:
     )
 
 
-def diversify_by_source(
-    results: DataFrame,
-    source_col: str = "doc_id",
-    tiebreak_col: str | None = None,
-) -> DataFrame:
-    """ranking.py:189-216: cap results at 3 per source, keeping the
-    best-scored. `tiebreak_col` makes the cut deterministic under score
-    ties."""
+def diversify_by_source(results: DataFrame) -> DataFrame:
+    """ranking.py:189-216: cap results at 3 per `source`, keeping the
+    best-scored. The doc_id tiebreak makes the cut deterministic under
+    score ties."""
     from pyspark.sql.window import Window
 
-    order = [F.desc("score")] + ([F.asc(tiebreak_col)] if tiebreak_col else [])
-    w = Window.partitionBy(source_col).orderBy(*order)
+    w = Window.partitionBy("source").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         results.withColumn("_rk", F.row_number().over(w))
         .where(F.col("_rk") <= 3)

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, functions as F
 
 # embedding width of the hyperplane planes (the lane and its DuckDB oracle)
 PLANE_DIM = 64
+# hyperplanes per bucket key of lsh_bucket_topk (and its DuckDB oracle)
+ANN_PLANES = 8
 # the recall target of the IVF probe sizing (ivf_health_check and its
 # Python twin optimal_probes)
 TARGET_RECALL = 0.95
@@ -63,7 +65,7 @@ def _plane_sign(dim_idx: int, plane_idx: int) -> float:
     return 1.0 if x & 1 else -1.0
 
 
-def hyperplane_bucket(vec_col, n_planes: int = 12, plane_offset: int = 0):
+def hyperplane_bucket(vec_col, n_planes: int, plane_offset: int = 0):
     """Bucket id = sign bits of dot(v, plane_j) for H pseudo-random ±1
     PLANE_DIM-wide planes (plane ids plane_offset..plane_offset+H−1; H ≤ 62 so the packed
     key stays in int64). The plane matrix is H×PLANE_DIM CONSTANT literals
@@ -92,23 +94,21 @@ def hyperplane_bucket(vec_col, n_planes: int = 12, plane_offset: int = 0):
     return out
 
 
-def lsh_bucket_topk(
-    emb: DataFrame, query_vec: list[float], n_planes: int = 12
-) -> DataFrame:
-    """ANN top-10: probe the query's hyperplane bucket and its Hamming-1
-    neighbors."""
+def lsh_bucket_topk(emb: DataFrame, query_vec: list[float]) -> DataFrame:
+    """ANN top-10: probe the query's ANN_PLANES-plane hyperplane bucket and
+    its Hamming-1 neighbors."""
     v = F.col("embedding").cast("array<double>")
     bucketed = emb.select(
-        "vec_id", v.alias("v"), hyperplane_bucket(v, n_planes).alias("bucket")
+        "vec_id", v.alias("v"), hyperplane_bucket(v, ANN_PLANES).alias("bucket")
     )
 
     spark = emb.sparkSession
     qdf = spark.createDataFrame([(query_vec,)], f"qv: array<double>").select(
-        F.col("qv"), hyperplane_bucket(F.col("qv"), n_planes).alias("qbucket")
+        F.col("qv"), hyperplane_bucket(F.col("qv"), ANN_PLANES).alias("qbucket")
     )
     qrow = qdf.collect()[0]
     qbucket = qrow["qbucket"]
-    probes = [qbucket] + [qbucket ^ (1 << j) for j in range(n_planes)]
+    probes = [qbucket] + [qbucket ^ (1 << j) for j in range(ANN_PLANES)]
 
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
@@ -244,7 +244,8 @@ def ivf_probe(
     query_vec: list[float],
     k: int = 10,
     id_col: str = "vec_id",
-    n_probe: int = 2,
+    *,
+    n_probe: int,
     predicate=None,
 ) -> DataFrame:
     """Scan only the `n_probe` inverted lists whose centroids are nearest
@@ -289,7 +290,7 @@ def ivf_topk(
     queries — issue repeated queries through fit_ivf ONCE + ivf_probe per
     query (see fit_ivf docstring)."""
     centers, assigned = fit_ivf(emb, id_col, vec_col, n_clusters, seed)
-    return ivf_probe(assigned, centers, query_vec, k, id_col, n_probe)
+    return ivf_probe(assigned, centers, query_vec, k, id_col, n_probe=n_probe)
 
 
 # --- IVF tuning + health (the maintenance math around the index) --------

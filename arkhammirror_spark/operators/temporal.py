@@ -34,20 +34,18 @@ def asof_join(
     key: str,
     left_ts: str,
     right_ts: str,
-    right_cols: list[str] | None = None,
+    right_cols: list[str],
 ) -> DataFrame:
     """Every left row + the latest right row with right_ts ≤ left_ts on
-    the same key. Right columns come back null when no right row precedes
-    the left row.
+    the same key, as right_<c> columns for right_ts and each of
+    `right_cols`. They come back null when no right row precedes the left
+    row.
 
     Ties (right_ts == left_ts) match; multiple right rows
     at the SAME (key, ts) resolve to the one whose payload sorts last —
     deterministic under any partitioning (the window orders by every
     carried column).
     """
-    right_cols = right_cols or [
-        c for c in right.columns if c not in (key, right_ts)
-    ]
     lt = left.withColumn("_ts", F.col(left_ts)).withColumn("_side", F.lit(1))
     rt = (
         right.select(

@@ -58,11 +58,11 @@ def _safe_date(yr, mon, day):
     ).cast("date")
 
 
-def _extract_family(docs, id_col, text_col, pattern, kind, conf, builder):
+def _extract_family(docs, pattern, kind, conf, builder):
     hits = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.regexp_extract_all(F.col(text_col), F.lit(pattern), F.lit(0))
+            F.regexp_extract_all(F.col("t"), F.lit(pattern), F.lit(0))
         ).alias("date_text"),
     )
     conf_col = conf(F.col("date_text")) if callable(conf) else F.lit(conf)
@@ -71,14 +71,12 @@ def _extract_family(docs, id_col, text_col, pattern, kind, conf, builder):
         .where(F.col("date_start").isNotNull())
         .withColumn("event_kind", F.lit(kind))
         .withColumn("confidence", conf_col)
-        .select(id_col, "date_text", "date_start", "event_kind", "confidence")
+        .select("doc_id", "date_text", "date_start", "event_kind", "confidence")
     )
 
 
-def extract_timeline_events(
-    docs: DataFrame, id_col: str = "url", text_col: str = "extracted_text"
-) -> DataFrame:
-    """Union of the native T1 families: iso, natural (mdy+dmy), numeric
+def extract_timeline_events(docs: DataFrame) -> DataFrame:
+    """Union of the native T1 families over (doc_id, t) documents: iso, natural (mdy+dmy), numeric
     (m/d/y vs d/m/y disambiguation), quarter, season, decade, approximate
     (circa-year → June 30), period (early/mid/late Month Year). date_start
     is a DATE (quarter/season/decade/period → period start, matching
@@ -158,15 +156,15 @@ def extract_timeline_events(
         return _safe_date(yr, mon, day)
 
     parts = [
-        _extract_family(docs, id_col, text_col, ISO_PAT, "iso", 0.99, iso_builder),
-        _extract_family(docs, id_col, text_col, MDY_PAT, "natural_mdy", 0.95, mdy_builder),
-        _extract_family(docs, id_col, text_col, DMY_PAT, "natural_dmy", 0.95, dmy_builder),
-        _extract_family(docs, id_col, text_col, NUMERIC_PAT, "numeric", numeric_conf, numeric_builder),
-        _extract_family(docs, id_col, text_col, QUARTER_PAT, "quarter", 0.9, quarter_builder),
-        _extract_family(docs, id_col, text_col, SEASON_PAT, "season", 0.85, season_builder),
-        _extract_family(docs, id_col, text_col, DECADE_PAT, "decade", 0.7, decade_builder),
-        _extract_family(docs, id_col, text_col, APPROX_PAT, "approximate", 0.6, approx_builder),
-        _extract_family(docs, id_col, text_col, PERIOD_PAT, "period", 0.7, period_builder),
+        _extract_family(docs, ISO_PAT, "iso", 0.99, iso_builder),
+        _extract_family(docs, MDY_PAT, "natural_mdy", 0.95, mdy_builder),
+        _extract_family(docs, DMY_PAT, "natural_dmy", 0.95, dmy_builder),
+        _extract_family(docs, NUMERIC_PAT, "numeric", numeric_conf, numeric_builder),
+        _extract_family(docs, QUARTER_PAT, "quarter", 0.9, quarter_builder),
+        _extract_family(docs, SEASON_PAT, "season", 0.85, season_builder),
+        _extract_family(docs, DECADE_PAT, "decade", 0.7, decade_builder),
+        _extract_family(docs, APPROX_PAT, "approximate", 0.6, approx_builder),
+        _extract_family(docs, PERIOD_PAT, "period", 0.7, period_builder),
     ]
     out = parts[0]
     for p in parts[1:]:
@@ -256,14 +254,12 @@ def merge_timeline_events(
     )
 
 
-def detect_interval_conflicts(
-    events: DataFrame, id_col: str = "url"
-) -> DataFrame:
+def detect_interval_conflicts(events: DataFrame) -> DataFrame:
     """T3 conflicts/gaps: adjacent-event deltas per document via lag window
     (replaces arkham-shard-timeline/conflicts.py's procedural scan)."""
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(id_col).orderBy("date_start", "date_text")
+    w = Window.partitionBy("doc_id").orderBy("date_start", "date_text")
     return (
         events.withColumn("prev_date", F.lag("date_start").over(w))
         .withColumn("gap_days", F.datediff(F.col("date_start"), F.col("prev_date")))

@@ -29,10 +29,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def prepare_webtext_corpus(pages: DataFrame, min_words: int = 50) -> DataFrame:
+def prepare_webtext_corpus(pages: DataFrame) -> DataFrame:
     """pages(url, html) → (url, text): the cleaned, deduplicated corpus.
 
-    Near-dup pairs are verified at Jaccard ≥ 0.8 behind the MinHash-LSH
+    The Gopher quality gate runs at a 40-word minimum. Near-dup pairs are
+    verified at Jaccard ≥ 0.8 behind the MinHash-LSH
     hot-bucket guard (5000 rows: bounded near-dup recall in pathological
     boilerplate clusters); line dedup skips lines under 10 chars."""
     from .boilerplate import extract_main_content
@@ -60,7 +61,7 @@ def prepare_webtext_corpus(pages: DataFrame, min_words: int = 50) -> DataFrame:
     )
 
     # 3. Gopher quality gate
-    q = gopher_quality(docs, id_col="url", min_words=min_words)
+    q = gopher_quality(docs, id_col="url", min_words=40)
     good = docs.join(q.where(F.col("passes")).select("url"), "url")
 
     # 4. exact checksum dedup (min-url keeper)

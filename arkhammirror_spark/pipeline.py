@@ -228,9 +228,7 @@ def run_pipeline(
         # output-identical to comention_edges over the exploded valid
         # mentions (verified equal on the full bench corpus) with one narrow
         # explode instead of a mention-row explode + per-doc re-aggregation
-        # — half the shuffles. No document_ids arrays: at 10^12-doc scale an
-        # unbounded ARRAY_AGG per edge is a memory hazard; the (doc, entity)
-        # mapping is already materialized in the mentions table.
+        # — half the shuffles.
         "edges": lambda: comention_edges_from_name_sets(full_docs),
     }
 

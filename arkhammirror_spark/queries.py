@@ -192,10 +192,7 @@ def _valid_mentions(
 
 def _comention(spark: SparkSession, sf_dir: str, docs_where=None) -> DataFrame:
     """Co-mention edges (min count 2, top 1000) over the valid mentions."""
-    return comention_edges(
-        _valid_mentions(spark, sf_dir, docs_where),
-        doc_col="doc_id", include_doc_ids=False,
-    ).select("entity_a", "entity_b", "co_occurrence_count", "weight")
+    return comention_edges(_valid_mentions(spark, sf_dir, docs_where))
 
 
 # gaps-and-islands reproduction of ner.py:94-143 (validated row-identical

@@ -48,6 +48,7 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     (keyword.py:166-213, 294-338): avgdl = AVG(LENGTH(text)) in CHARS over
     all docs; doc_freq(term) = COUNT docs with substring match; doc_length =
     filtered-token count; skip score < 0.01; normalize by max."""
+    from .operators.search import with_term_scores
     from .operators.spread import spread
 
     docs = spread(
@@ -92,20 +93,7 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     scored = (
-        tf.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "idf",
-            F.log(
-                (F.col("n_docs") - F.col("doc_freq") + 0.5) / (F.col("doc_freq") + 0.5)
-                + 1.0
-            ),
-        )
-        .withColumn(
-            "term_score",
-            F.col("idf") * (F.col("tf") * 2.5)
-            / (F.col("tf") + 1.5 * (1 - 0.75 + 0.75 * F.col("doc_len") / F.col("avg_len"))),
-        )
+        with_term_scores(tf.join(F.broadcast(dfreq), "term").crossJoin(F.broadcast(stats)))
         .groupBy("doc_id")
         .agg(F.sum("term_score").alias("raw"))
         .where(F.col("raw") >= 0.01)
@@ -417,7 +405,7 @@ def q_timeline_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.element_at(phr, (F.col("doc_id") % len(_TL_PHRASES) + 1).cast("int")),
         ).alias("t"),
     )
-    ev = extract_timeline_events(docs, id_col="doc_id", text_col="t")
+    ev = extract_timeline_events(docs)
     return ev.select("doc_id", "date_text", "date_start", "event_kind", "confidence")
 
 
@@ -759,7 +747,7 @@ def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(qv))
         .select(F.col("vec_id").alias("doc_id"), F.round(cos, 6).alias("score"))
     )
-    merged = hybrid_merge(sem, kw.select("doc_id", "score"), dimensions=64)
+    merged = hybrid_merge(sem, kw.select("doc_id", "score"))
     # components are 6-dp-rounded on both engines; the 0.5/0.5 blend is an
     # exact IEEE halving of their sum, so NO outer round — rounding again
     # would land on exact .5 ties at the 7th digit for ~half the rows

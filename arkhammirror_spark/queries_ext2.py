@@ -56,7 +56,7 @@ def q_regex_search_email(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _load(spark, sf_dir, "documents").select(
         "doc_id", F.concat(F.col("text"), _email_suffix_spark()).alias("t")
     )
-    return regex_search(docs, "email", text_col="t")
+    return regex_search(docs, "email")
 
 
 # ---------------------------------------------------------------------------
@@ -76,7 +76,7 @@ def q_autocomplete_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.search import autocomplete
 
     docs = _load(spark, sf_dir, "documents").select("doc_id", "text")
-    return autocomplete(docs, "key ", tiebreak_col="doc_id")
+    return autocomplete(docs, "key ")
 
 
 # ---------------------------------------------------------------------------
@@ -122,7 +122,7 @@ def q_reranked_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rescored = recency_boost(dated)
     sourced = rescored.withColumn("source", (F.col("doc_id") % 5).cast("long"))
-    out = diversify_by_source(sourced, source_col="source", tiebreak_col="doc_id")
+    out = diversify_by_source(sourced)
     return out.select("doc_id", "source", F.round("score", 6).alias("score"))
 
 
@@ -230,7 +230,7 @@ def q_embedding_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.anomalies import embedding_anomalies
 
     emb = _load(spark, sf_dir, "embeddings")
-    out = embedding_anomalies(emb, threshold=1.5)
+    out = embedding_anomalies(emb)
     return out.select(
         "vec_id",
         F.round("dist", 4).alias("dist"),
@@ -259,8 +259,8 @@ def q_interval_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(" "), F.element_at(phr, ((F.col("doc_id") + 3) % n + 1).cast("int")),
         ).alias("t"),
     )
-    ev = extract_timeline_events(docs, id_col="doc_id", text_col="t")
-    out = detect_interval_conflicts(ev, id_col="doc_id")
+    ev = extract_timeline_events(docs)
+    out = detect_interval_conflicts(ev)
     return out.select(
         "doc_id", "date_text", "date_start", "prev_date",
         F.col("gap_days").cast("long").alias("gap_days"),
@@ -788,10 +788,9 @@ ORACLE_SQL["graph_components"] = _cc_oracle()
 
 
 # ---------------------------------------------------------------------------
-# §2.5 distributed PageRank (3 unrolled iterations on both engines)
+# §2.5 distributed PageRank (graph.PR_ITERS unrolled iterations on both
+# engines)
 # ---------------------------------------------------------------------------
-
-_PR_ITERS = 3
 
 
 @register("graph_pagerank", None)  # oracle below
@@ -800,31 +799,31 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .queries import q_comention_edges
 
     edges = q_comention_edges(spark, sf_dir)
-    # quantize=12: fixed-point per-iteration ranks → the incoming sum is an
-    # exact BIGINT sum, order-independent across partition counts, so the
-    # round(…, 6) comparison vs DuckDB cannot flake on float sum order
-    pr = pagerank_distributed(edges, iterations=_PR_ITERS, quantize=12)
+    # fixed-point per-iteration ranks → the incoming sum is an exact BIGINT
+    # sum, order-independent across partition counts, so the round(…, 6)
+    # comparison vs DuckDB cannot flake on float sum order
+    pr = pagerank_distributed(edges)
     return pr.select("name", F.round("rank", 6).alias("rank"))
 
 
 def _pr_oracle() -> str:
-    """Fixed-point mirror of pagerank_distributed(quantize=12): per-edge
+    """Fixed-point mirror of pagerank_distributed: per-edge
     contributions are BIGINT floor-divisions and the incoming sum is an
     exact integer sum, so the value is identical on both engines regardless
     of partition/aggregation order (a float SUM(rank/deg) is order-dependent
     at the last ulp — CLAUDE.md invariant 2). The (1.0-0.85) and 0.85
     factors are written as the same IEEE double expressions Spark folds
     (1.0-0.85 != 0.15 in binary)."""
-    from .operators.graph import DAMPING
+    from .operators.graph import DAMPING, PR_DIGITS, PR_ITERS
 
     # rank expression for iteration t, given integer incoming sum c.inc
     rank_expr = (
         f"(1.0::DOUBLE - {DAMPING}::DOUBLE) / nn.n"
-        f" + {DAMPING}::DOUBLE * (coalesce(c.inc, 0)::DOUBLE / 1e12)"
+        f" + {DAMPING}::DOUBLE * (coalesce(c.inc, 0)::DOUBLE / 1e{PR_DIGITS})"
     )
     iters = ""
     prev = "r0"
-    for t in range(1, _PR_ITERS + 1):
+    for t in range(1, PR_ITERS + 1):
         iters += f""",
 c{t} AS (
   SELECT s.dst, sum(r.r_int // r.deg) AS inc
@@ -833,7 +832,7 @@ c{t} AS (
 r{t} AS (
   SELECT d.src AS name,
          {rank_expr} AS rank,
-         CAST(floor(({rank_expr}) * 1e12 + 0.5) AS BIGINT) AS r_int,
+         CAST(floor(({rank_expr}) * 1e{PR_DIGITS} + 0.5) AS BIGINT) AS r_int,
          d.deg
   FROM deg d LEFT JOIN c{t} c ON d.src = c.dst, nn
 )"""
@@ -849,7 +848,7 @@ deg AS (SELECT src, count(*) AS deg FROM sym GROUP BY 1),
 nn AS (SELECT count(*) AS n FROM deg),
 r0 AS (
   SELECT d.src AS name, 1.0::DOUBLE / nn.n AS rank,
-         CAST(floor((1.0::DOUBLE / nn.n) * 1e12 + 0.5) AS BIGINT) AS r_int,
+         CAST(floor((1.0::DOUBLE / nn.n) * 1e{PR_DIGITS} + 0.5) AS BIGINT) AS r_int,
          d.deg
   FROM deg d, nn){iters}
 SELECT name, round(rank, 6) AS rank FROM {prev}
@@ -934,10 +933,6 @@ WHERE {_sql_cos('a.v', 'b.v')} >= 0.999
 """
 
 
-# hyperplanes per bucket key of the ANN part and its oracle
-_ANN_PLANES = 8
-
-
 @register("ann_lsh_topk", None)  # exact oracle below (generated plane literals)
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2 scale path: hyperplane-bucket ANN probing the Hamming-1 neighbours.
@@ -957,7 +952,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         float(x)
         for x in emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]
     ]
-    out = lsh_bucket_topk(d.where(F.col("vec_id") != 0), qv, n_planes=_ANN_PLANES)
+    out = lsh_bucket_topk(d.where(F.col("vec_id") != 0), qv)
     return out.select("vec_id", F.round("score", 6).alias("score"))
 
 
@@ -966,9 +961,7 @@ def _ann_lsh_oracle() -> str:
     literals, projections as the same 0.0-seeded sequential left fold Spark's
     F.aggregate builds (left-associative + in SQL) → identical IEEE doubles,
     identical sign bits, identical bucket ids and probe membership."""
-    from .operators.similarity import PLANE_DIM as dim, _plane_sign
-
-    n_planes = _ANN_PLANES
+    from .operators.similarity import ANN_PLANES as n_planes, PLANE_DIM as dim, _plane_sign
 
     def plane_lits(j: int) -> str:
         return "[" + ", ".join(f"{_plane_sign(i, j):.1f}" for i in range(dim)) + "]"
@@ -1485,7 +1478,7 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("video_frame_samples", None)  # oracle (VALUES) attached below
 def q_video_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.multimodal import sample_video_frames
-    return sample_video_frames(_media_fixture(spark), max_frames=4).select(
+    return sample_video_frames(_media_fixture(spark)).select(
         "media_id", "frame_index", F.round("frame_ts_s", 3).alias("frame_ts_s"),
         "frame_digest",
     )
@@ -1866,7 +1859,7 @@ def q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.repeat(F.lit("\nrepeated closing line"), (F.col("doc_id") % 3).cast("int")),
         ).alias("text"),
     )
-    r = gopher_repetition(d, top_ns=(2, 3), dup_ns=(5,))
+    r = gopher_repetition(d)
     return r.select(
         "doc_id",
         F.round("dup_line_frac", 6).alias("dup_line_frac"),
@@ -2046,7 +2039,7 @@ def q_graph_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     (deterministic under any partitioning; ties rank by node)."""
     from .operators.graph import betweenness_distributed
 
-    out = betweenness_distributed(_fixture_graph(spark), limit=10)
+    out = betweenness_distributed(_fixture_graph(spark))
     return out.select("node", F.round("score", 6).alias("score"), "rank")
 
 
@@ -2157,7 +2150,7 @@ def q_webtext_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     its own entry)."""
     from .operators.webtext import prepare_webtext_corpus
     pages = spark.createDataFrame(_WEBTEXT_PAGES, "url string, html string")
-    out = prepare_webtext_corpus(pages, min_words=40)
+    out = prepare_webtext_corpus(pages)
     return out.select(
         "url", F.length("text").cast("long").alias("n_chars"),
         F.sha2("text", 256).alias("text_sha"),

@@ -150,7 +150,7 @@ def _metadata_fixture_rows() -> list[tuple[str, bytes]]:
              "ModDate": "D:20230101090000Z"})),
         ("memo-docx", make_docx_with_core(
             ["hello world"], title="Q3 Notes", author="Bob",
-            created="2022-03-01T10:00:00", modified="2022-04-01T10:00:00",
+            modified="2022-04-01T10:00:00",
             last_modified_by="Carol", revision=1)),
         ("junk", b"\xff\xd8\x00broken marker stream"),
     ]
@@ -284,8 +284,8 @@ def _provenance_fixture(spark: SparkSession) -> DataFrame:
             {"Author": "Alice", "Creator": "Word",
              "CreationDate": "D:20230301090000Z"})),
         ("d1", make_docx_with_core(
-            ["x"], author="Alice", created="2022-03-01T10:00:00",
-            modified="2022-03-01T10:00:00", last_modified_by="Bob")),
+            ["x"], author="Alice", modified="2022-03-01T10:00:00",
+            last_modified_by="Bob")),
     ]
     media = spark.createDataFrame(rows, "media_id: string, payload: binary")
     # slim checkpoint: BOTH provenance queries and the relationships
@@ -2908,7 +2908,7 @@ def _ee_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("t"),
     )
-    ev = extract_timeline_events(docs, id_col="doc_id", text_col="t")
+    ev = extract_timeline_events(docs)
     # slim (dates + entities) lazy checkpoint — the summary arms aggregate
     # this frame several ways; truncation keeps the nine-family timeline
     # regex pass to one execution

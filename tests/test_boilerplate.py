@@ -178,7 +178,7 @@ class TestSelection:
 
         pages = spark.createDataFrame(_WEBTEXT_PAGES, "url string, html string")
         out = {r["url"]: r["text"]
-               for r in prepare_webtext_corpus(pages, min_words=40).collect()}
+               for r in prepare_webtext_corpus(pages).collect()}
         assert set(out) == {"https://w/a", "https://w/b", "https://w/c"}
         assert _WT_FOOTER in out["https://w/a"]      # first occurrence kept
         assert _WT_FOOTER not in out["https://w/b"]  # line-deduped

@@ -91,12 +91,8 @@ def _lane_ran(df) -> bool:
 @pytest.mark.parametrize("seed", [1, 2])
 def test_pagerank_lane_at_cap_boundary(spark, n_edges, seed):
     edges = _random_graph(spark, n_edges, seed)
-    lane = pagerank_distributed(
-        edges, iterations=4, quantize=12, driver_cap=_CAP
-    )
-    loop = pagerank_distributed(
-        edges, iterations=4, quantize=12, driver_cap=None
-    )
+    lane = pagerank_distributed(edges, driver_cap=_CAP)
+    loop = pagerank_distributed(edges, driver_cap=None)
     assert _lane_ran(lane) == (n_edges <= _CAP)
     assert not _lane_ran(loop)
     got, want = sorted(lane.collect()), sorted(loop.collect())
@@ -120,7 +116,7 @@ def test_components_lane_at_cap_boundary(spark, n_edges, seed):
 def test_lanes_on_the_empty_graph(spark):
     edges = spark.createDataFrame([], "entity_a string, entity_b string")
     for cap in (_CAP, None):
-        assert pagerank_distributed(edges, quantize=12, driver_cap=cap).collect() == []
+        assert pagerank_distributed(edges, driver_cap=cap).collect() == []
         assert connected_components_distributed(edges, driver_cap=cap).collect() == []
 
 

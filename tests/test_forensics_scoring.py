@@ -106,13 +106,16 @@ class TestContainerMetadata:
 
     def test_ooxml_core_and_revision_rules(self):
         dx = make_docx_with_core(
-            ["x"], title="T", author="A", created="2022-01-01T00:00:00",
-            modified="2022-02-01T00:00:00", revision=1,
+            ["x"], title="T", author="A", modified="2022-04-01T10:00:00",
+            last_modified_by="B", revision=1,
         )
         m = parse_ooxml_metadata(dx)
         assert m["title"] == "T" and m["revision"] == 1
         assert metadata_warnings("ooxml", m) == ["REVISION_ANOMALY"]
-        heavy = parse_ooxml_metadata(make_docx_with_core(["x"], revision=150))
+        heavy = parse_ooxml_metadata(make_docx_with_core(
+            ["x"], author="A", modified="2022-03-01T10:00:00",
+            last_modified_by="A", revision=150,
+        ))
         assert metadata_warnings("ooxml", heavy) == ["HIGH_REVISION_COUNT"]
 
     def test_sniff(self):

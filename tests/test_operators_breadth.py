@@ -22,7 +22,6 @@ from arkhammirror_spark.operators.search import (
     autocomplete,
     bm25_scores,
     hybrid_merge,
-    hybrid_weights,
     regex_search,
     tokenize_col,
 )
@@ -86,24 +85,19 @@ class TestBM25:
 
 class TestRegexHybrid:
     def test_presets(self, spark, docs):
+        docs = docs.withColumnRenamed("text", "t")
         emails = regex_search(docs, preset="email").collect()
         assert emails[0]["match_text"] == "john.smith@example.com"
         phones = regex_search(docs, preset="phone_us").collect()
         assert phones[0]["match_text"] == "555-123-4567"
 
-    def test_hybrid_weights(self):
-        assert hybrid_weights(384) == (0.5, 0.5)
-        assert hybrid_weights(768) == (0.6, 0.4)
-        assert hybrid_weights(2048) == (0.7, 0.3)
-        assert hybrid_weights(None) == (0.6, 0.4)
-
     def test_hybrid_merge_full_outer(self, spark):
         sem = spark.createDataFrame([(1, 0.9), (2, 0.5)], "doc_id: long, score: double")
         kw = spark.createDataFrame([(2, 1.0), (3, 0.4)], "doc_id: long, score: double")
-        got = {r["doc_id"]: r["hybrid_score"] for r in hybrid_merge(sem, kw, dimensions=768).collect()}
-        assert abs(got[1] - 0.9 * 0.6) < 1e-12
-        assert abs(got[2] - (0.5 * 0.6 + 1.0 * 0.4)) < 1e-12
-        assert abs(got[3] - 0.4 * 0.4) < 1e-12
+        got = {r["doc_id"]: r["hybrid_score"] for r in hybrid_merge(sem, kw).collect()}
+        assert abs(got[1] - 0.9 * 0.5) < 1e-12
+        assert abs(got[2] - (0.5 * 0.5 + 1.0 * 0.5)) < 1e-12
+        assert abs(got[3] - 0.4 * 0.5) < 1e-12
 
     def test_autocomplete(self, spark, docs):
         got = autocomplete(docs, "the quick").collect()
@@ -127,7 +121,7 @@ class TestAnomalies:
     def test_embedding_outlier(self, spark):
         rows = [(i, [1.0, 0.0, 0.0]) for i in range(20)] + [(99, [-5.0, 8.0, 2.0])]
         df = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
-        got = embedding_anomalies(df, threshold=3.0).collect()
+        got = embedding_anomalies(df).collect()
         assert [r["vec_id"] for r in got] == [99]
 
 
@@ -140,7 +134,7 @@ class TestDedup:
         assert dup[0]["keeper"] == 1
 
     def test_shingles_match_python(self, spark, docs):
-        got = shingles(docs.where("doc_id = 1")).collect()
+        got = shingles(docs.where("doc_id = 1"), "doc_id").collect()
         text = "the quick brown fox jumps over the lazy dog"
         words = text.split()
         expected = {" ".join(words[i : i + 3]) for i in range(len(words) - 2)}
@@ -218,8 +212,8 @@ class TestDedup:
         assert (1, 4) in lsh
 
     def test_minhash_identical_docs_identical_sigs(self, spark, docs):
-        sh = shingles(docs)
-        sigs = {r["doc_id"]: r["signature"] for r in minhash_signatures(sh).collect()}
+        sh = shingles(docs, "doc_id")
+        sigs = {r["doc_id"]: r["signature"] for r in minhash_signatures(sh, "doc_id").collect()}
         assert sigs[1] == sigs[4]
         assert sigs[1] != sigs[3]
 
@@ -233,13 +227,13 @@ class TestDedup:
         assert min(hs) < 0 or max(hs) >= (1 << 31)  # escaped the [0, 2^31) fold
         # signature path still folds into [0, p): all minhash values bounded
         sh = shingle_hashes(docs)
-        sigs = minhash_signatures(sh).collect()
+        sigs = minhash_signatures(sh, "doc_id").collect()
         for r in sigs:
             assert all(0 <= v < (1 << 31) - 1 for v in r["signature"])
         # raw-shingle and hashed-frame inputs produce identical signatures
         sigs2 = {
             r["doc_id"]: r["signature"]
-            for r in minhash_signatures(shingles(docs)).collect()
+            for r in minhash_signatures(shingles(docs, "doc_id"), "doc_id").collect()
         }
         assert {r["doc_id"]: r["signature"] for r in sigs} == sigs2
 
@@ -291,7 +285,7 @@ class TestSimilarity:
         qv = [float(x) for x in emb.where("vec_id = 0").collect()[0]["embedding"]]
         pool = emb.where("vec_id <> 0")
         brute = [r["vec_id"] for r in brute_force_topk(pool, qv).collect()]
-        ann = [r["vec_id"] for r in lsh_bucket_topk(pool, qv, n_planes=8).collect()]
+        ann = [r["vec_id"] for r in lsh_bucket_topk(pool, qv).collect()]
         # the clone must be recalled; overall recall@10 ≥ 4/10 for the bucketed probe
         assert ann and ann[0] == 900
         assert len(set(brute) & set(ann)) >= 4
@@ -335,8 +329,11 @@ class TestRerankers:
 
         kept = dedupe_results(df).collect()
         assert {(r["rid"], r["doc_id"]) for r in kept} == {(1, "a"), (5, "b")}
-        div = diversify_by_source(df).collect()
-        assert sorted(r["rid"] for r in div) == [1, 2, 3, 5]
+        by_source = df.select(
+            F.col("rid").alias("doc_id"), F.col("doc_id").alias("source"), "score"
+        )
+        div = diversify_by_source(by_source).collect()
+        assert sorted(r["doc_id"] for r in div) == [1, 2, 3, 5]
 
 
 class TestLshHotBucketCap:
@@ -351,7 +348,7 @@ class TestLshHotBucketCap:
             F.col("id").alias("doc_id"),
             F.array(*[F.lit(v) for v in sig]).alias("signature"),
         )
-        pairs = lsh_candidate_pairs(sigs, bucket_cap=50).collect()
+        pairs = lsh_candidate_pairs(sigs, "doc_id", bucket_cap=50).collect()
         assert len(pairs) == 50 * 49 // 2
         assert all(r["truncated"] for r in pairs)
         # survivors are the 50 smallest ids, all mutually paired
@@ -372,8 +369,8 @@ class TestLshHotBucketCap:
                   for i in range(128)]
             ).alias("signature"),
         )
-        capped = lsh_candidate_pairs(sigs, bucket_cap=50)
-        uncapped = lsh_candidate_pairs(sigs)
+        capped = lsh_candidate_pairs(sigs, "doc_id", bucket_cap=50)
+        uncapped = lsh_candidate_pairs(sigs, "doc_id")
         c = sorted((r["id_a"], r["id_b"], r["truncated"])
                    for r in capped.collect())
         u = sorted((r["id_a"], r["id_b"], r["truncated"])

@@ -8,6 +8,8 @@ from pyspark.sql import functions as F
 
 from arkhammirror_spark.operators.coref import resolve_coref
 from arkhammirror_spark.operators.graph import (
+    PR_DIGITS,
+    PR_ITERS,
     connected_components_distributed,
     ego_network,
     pagerank,
@@ -37,13 +39,13 @@ class TestTimeline:
                 ("u4", "Back in the 1990s, during summer 2019 it rained."),
                 ("u5", "Invalid 2024-13-45 must vanish."),
             ],
-            "url: string, extracted_text: string",
+            "doc_id: string, t: string",
         )
         return extract_timeline_events(docs).cache()
 
     def test_iso(self, events):
         got = {
-            (r["url"], r["date_text"]): (r["date_start"], r["confidence"])
+            (r["doc_id"], r["date_text"]): (r["date_start"], r["confidence"])
             for r in events.where("event_kind = 'iso'").collect()
         }
         assert got[("u1", "2024-01-15")] == (dt.date(2024, 1, 15), 0.99)
@@ -57,7 +59,7 @@ class TestTimeline:
         assert nat["3rd of March 1999"] == dt.date(1999, 3, 3)
 
     def test_quarter_season_decade(self, events):
-        kinds = {r["event_kind"]: r for r in events.where("url in ('u3','u4')").collect()}
+        kinds = {r["event_kind"]: r for r in events.where("doc_id in ('u3','u4')").collect()}
         q = {r["date_text"]: r["date_start"] for r in events.where("event_kind='quarter'").collect()}
         assert q["third quarter of 2023"] == dt.date(2023, 7, 1)
         assert q["first quarter of 2021"] == dt.date(2021, 1, 1)
@@ -67,7 +69,7 @@ class TestTimeline:
         assert d["the 1990s"] == dt.date(1990, 1, 1)
 
     def test_conflict_gaps(self, spark, events):
-        gaps = detect_interval_conflicts(events.where("url = 'u1'")).collect()
+        gaps = detect_interval_conflicts(events.where("doc_id = 'u1'")).collect()
         assert len(gaps) == 1
         assert gaps[0]["gap_days"] == 10
 
@@ -94,11 +96,17 @@ class TestGraph:
         )
         pr2 = pagerank(star)
         assert pr2["hub"] > pr2["s1"]
-        # the driver iteration is the reference for pagerank_distributed
-        for g, ref in ((edges, pr), (star, pr2)):
+        # the float driver iteration at the same iteration count is the
+        # reference for pagerank_distributed's fixed-point ranks. Each round
+        # rounds a rank by half a unit of 10^-PR_DIGITS and truncates each
+        # contribution by under one unit; on these graphs (degree ≤ 3) the
+        # PR_ITERS = 3 rounds accumulate under 10 units at the star's hub
+        bound = PR_ITERS * 4 * 10.0**-PR_DIGITS
+        for g in (edges, star):
+            ref = pagerank(g, iterations=PR_ITERS)
             got = {r["name"]: r["rank"] for r in pagerank_distributed(g).collect()}
             assert got.keys() == ref.keys()
-            assert all(abs(got[k] - ref[k]) < 1e-12 for k in ref)
+            assert all(abs(got[k] - ref[k]) < bound for k in ref)
 
     def test_components_distributed_matches(self, spark, edges):
         dist = {
@@ -197,9 +205,13 @@ class TestGraph:
         driver = {r["node"]: r["score"] for r in
                   betweenness_centrality(edge_rows, limit=100)}
         dist = {r["node"]: r["score"] for r in
-                betweenness_distributed(edges, limit=100).collect()}
-        for node, score in driver.items():
-            assert abs(dist.get(node, 0.0) - score) < 1e-9, node
+                betweenness_distributed(edges).collect()}
+        # the top 10 of the 12 nodes, each with the driver's score
+        assert len(dist) == 10
+        for node, score in dist.items():
+            assert abs(driver[node] - score) < 1e-9, node
+        rest = [s for n, s in driver.items() if n not in dist]
+        assert max(rest) <= min(dist.values()) + 1e-9
 
     def test_label_propagation_separates_cliques(self, spark):
         """Two 4-cliques joined by one bridge edge must resolve into two
@@ -449,8 +461,8 @@ class TestMultimodal:
 
     def test_frame_sampling(self, media):
         frames = sample_video_frames(media).collect()
-        assert len(frames) == 5
-        assert [f["frame_index"] for f in frames] == list(range(5))
+        assert len(frames) == 4  # the 5 s video, capped at four frames
+        assert [f["frame_index"] for f in frames] == list(range(4))
         assert frames[1]["frame_ts_s"] == 1.0
 
 
@@ -708,7 +720,7 @@ class TestTemporalJoins:
 
         quotes, trades = self._frames(spark)
         got = {r["trade_id"]: r for r in
-               asof_join(trades, quotes, "key", "tts", "qts").collect()}
+               asof_join(trades, quotes, "key", "tts", "qts", ["price"]).collect()}
         assert got["t1"]["right_price"] == 100.0
         assert got["t2"]["right_price"] == 101.0   # ties match (<=)
         assert got["t0"]["right_price"] is None    # nothing precedes
@@ -842,7 +854,7 @@ class TestGopherRepetition:
         tiny = spark.createDataFrame([(9, "two words")],
                                      "doc_id: long, text: string")
         r = gopher_repetition(tiny).collect()[0]
-        assert r["dup_5gram_frac"] == 0.0 and r["top_4gram_frac"] == 0.0
+        assert r["dup_5gram_frac"] == 0.0 and r["top_3gram_frac"] == 0.0
 
 
 class TestAudioFeatures:

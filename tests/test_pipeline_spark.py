@@ -114,7 +114,7 @@ class TestEdges:
     def test_edge_semantics_small_case(self, spark):
         pdf = pd.DataFrame(
             {
-                "url": ["d1", "d1", "d2", "d2", "d3", "d3", "d3"],
+                "doc_id": ["d1", "d1", "d2", "d2", "d3", "d3", "d3"],
                 "text": ["Acme Corp", "John Smith", "Acme Corp", "John Smith",
                          "Acme Corp", "John Smith", "Acme Corp"],
                 "entity_type": ["ORG"] * 7,
@@ -130,7 +130,6 @@ class TestEdges:
         e = edges[0]
         assert (e["entity_a"], e["entity_b"]) == ("acme corp", "john smith")
         assert e["co_occurrence_count"] == 3
-        assert e["document_ids"] == ["d1", "d2", "d3"]
         assert abs(e["weight"] - 0.3) < 1e-12
 
     def test_ordered_pairs_at_every_small_size(self, spark):
@@ -247,10 +246,10 @@ class TestExtractionStats:
         from arkhammirror_spark.operators.extract import extract_docs
 
         docs_raw = extract_docs(pages).where("error is null")
-        m = docs_raw.select("url", F.explode("_mentions").alias("mm")).select("url", "mm.*")
-        via_mentions = comention_edges(
-            filter_valid_mentions(m), include_doc_ids=False
-        ).collect()
+        m = docs_raw.select(
+            F.col("url").alias("doc_id"), F.explode("_mentions").alias("mm")
+        ).select("doc_id", "mm.*")
+        via_mentions = comention_edges(filter_valid_mentions(m)).collect()
         via_names = comention_edges_from_name_sets(docs_raw).collect()
         assert sorted(map(tuple, via_mentions)) == sorted(map(tuple, via_names))
 

@@ -415,6 +415,17 @@ def _registered(node) -> bool:
     )
 
 
+def _program_files() -> list:
+    """Every non-test Python file: the package, bench.py, bench_extra.py,
+    __spark_entry__.py, scripts/ and perfbench/."""
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    files = sorted((repo / "arkhammirror_spark").rglob("*.py"))
+    files += [repo / f for f in ("bench.py", "bench_extra.py", "__spark_entry__.py")]
+    return files + sorted((repo / "scripts").glob("*.py")) + sorted((repo / "perfbench").glob("*.py"))
+
+
 def _top_level_defs():
     """(import-time root nodes, {qualified name: def node}) over the package
     (bar reference_impl/) and the entry-point scripts. Import-time code is
@@ -424,12 +435,10 @@ def _top_level_defs():
     from pathlib import Path
 
     repo = Path(__file__).resolve().parent.parent
-    files = [p for p in (repo / "arkhammirror_spark").rglob("*.py") if "reference_impl" not in p.parts]
-    files += [repo / f for f in ("bench.py", "bench_extra.py", "__spark_entry__.py")]
-    files += sorted((repo / "scripts").glob("*.py")) + sorted((repo / "perfbench").glob("*.py"))
-
     roots, defs = [], {}
-    for path in files:
+    for path in _program_files():
+        if "reference_impl" in path.parts:
+            continue
         mod = ".".join(path.relative_to(repo).with_suffix("").parts)
         for node in ast.parse(path.read_text()).body:
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
@@ -486,12 +495,14 @@ def test_no_test_only_functions():
     assert not dead, f"{len(dead)} functions only tests reach: {dead}"
 
 
-# Defaulted parameters that no non-test call sets, kept on purpose. A test
-# may keep one only to force one side of an auto-selected path that it
-# proves equal to the other side, or to lower a safety ceiling so that a
-# small input reaches it; a deployment setting and the corpus generator's
-# seed stay too. Any other option with one value in use is a constant and
-# fails the guard below.
+# Defaulted parameters without two values in program use, kept on purpose.
+# A test may keep one only to force one side of an auto-selected path that
+# it proves equal to the other side, or to lower a safety ceiling so that a
+# small input reaches it; a deployment setting, the corpus generator's
+# identity and a parameter a reference-parity suite varies (`parity:`, the
+# suite that skips without the reference tree) stay too. Any other option
+# with one value in use is a constant, and a default no program call relies
+# on goes; either fails the guard below.
 _OPTION_OK = {
     # a test forces one side of an auto-selected path it proves equal to
     # the other side
@@ -518,13 +529,86 @@ _OPTION_OK = {
         "the path-length cutoff of the DFS",
     "arkhammirror_spark.operators.dedup.lsh_candidate_pairs.bucket_cap":
         "the hot-bucket cap",
-    # deployment setting
+    # deployment settings
     "arkhammirror_spark.shipping.build_package_zip.dest_dir":
         "where spark-submit users write the --py-files zip",
-    # corpus identity: perfbench sets the seed of the pandas twin
-    # gen_pages_pandas; tests draw distinct seeded corpora from this side
+    "arkhammirror_spark.session.get_spark.master":
+        "the Spark master each entry point picks",
+    "arkhammirror_spark.session.get_spark.app_name":
+        "the application name each entry point picks",
+    "arkhammirror_spark.pipeline.run_pipeline.num_partitions":
+        "the partition count perfbench and bench.py size to their cores",
+    "arkhammirror_spark.pipeline.run_extraction_stats.num_partitions":
+        "the partition count perfbench and bench.py size to their cores",
+    # corpus identity: perfbench sets the seed and start of the pandas
+    # generator; tests draw distinct seeded corpora from the Spark twin
     "arkhammirror_spark.datagen.pages.gen_pages_df.seed":
         "the seed of gen_pages_pandas' Spark twin",
+    "arkhammirror_spark.datagen.pages.gen_pages_pandas.seed":
+        "the corpus seed perfbench passes through",
+    "arkhammirror_spark.datagen.pages.gen_pages_pandas.start":
+        "the first page id of a generated increment",
+    # a reference-parity suite (skipped without the reference tree) calls
+    # the function with a value other than the program's one, or names the
+    # parameter; narrowing it waits until that suite can run
+    "arkhammirror_spark.operators.anomalies.content_anomalies.min_cluster_distance":
+        "parity: test_anomaly_detector_parity.py passes 0.5 and 0.7",
+    "arkhammirror_spark.operators.anomalies.statistical_anomalies.threshold":
+        "parity: test_anomaly_detector_parity.py passes it by keyword",
+    "arkhammirror_spark.operators.anomalies.zscore_anomalies.threshold":
+        "parity: test_anomaly_detector_parity.py relies on the default",
+    "arkhammirror_spark.operators.claims_ops.merge_claims.evidence":
+        "parity: test_claims_similar_merge.py passes none and others",
+    "arkhammirror_spark.operators.claims_ops.similar_claims.df_cap":
+        "parity: test_claims_similar_merge.py runs uncapped",
+    "arkhammirror_spark.operators.correlations.entity_correlations.entity_col":
+        "parity: test_differential_correlations.py relies on the default",
+    "arkhammirror_spark.operators.correlations.entity_correlations.top_k":
+        "parity: test_differential_correlations.py runs unbounded",
+    "arkhammirror_spark.operators.dedup.duplicate_groups.threshold":
+        "parity: test_simhash_reference.py passes it by keyword",
+    "arkhammirror_spark.operators.dedup.merge_documents.claims":
+        "parity: test_merge_documents.py passes none and others",
+    "arkhammirror_spark.operators.dedup.merge_documents.mentions":
+        "parity: test_merge_documents.py passes none and others",
+    "arkhammirror_spark.operators.entity_events.link_entities_to_events.entity_id_col":
+        "parity: test_entity_events.py passes it by keyword",
+    "arkhammirror_spark.operators.entity_events.link_entities_to_events.event_id_col":
+        "parity: test_entity_events.py relies on the default",
+    "arkhammirror_spark.operators.entity_events.link_entities_to_events.order_col":
+        "parity: test_entity_events.py passes none and others",
+    "arkhammirror_spark.operators.flows.aggregate_flows.max_links":
+        "parity: test_ach_flows_extended.py passes 8",
+    "arkhammirror_spark.operators.flows.aggregate_flows.min_value":
+        "parity: test_ach_flows_extended.py passes 2.0",
+    "arkhammirror_spark.operators.flows.extract_entity_flows.intermediate_types":
+        "parity: test_ach_flows_extended.py passes none and others",
+    "arkhammirror_spark.operators.flows.extract_entity_flows.source_types":
+        "parity: test_ach_flows_extended.py passes none and others",
+    "arkhammirror_spark.operators.flows.extract_entity_flows.target_types":
+        "parity: test_ach_flows_extended.py passes none and others",
+    "arkhammirror_spark.operators.graph.filter_graph.entity_types":
+        "parity: test_graph_export.py runs unfiltered",
+    "arkhammirror_spark.operators.graph.filter_graph.min_degree":
+        "parity: test_graph_export.py runs unfiltered",
+    "arkhammirror_spark.operators.graph.filter_graph.min_edge_weight":
+        "parity: test_graph_export.py runs unfiltered",
+    "arkhammirror_spark.operators.graph.filter_graph.relationship_types":
+        "parity: test_graph_export.py runs unfiltered",
+    "arkhammirror_spark.operators.graph_scoring.composite_entity_scores.config":
+        "parity: test_graph_scoring.py passes other configs",
+    "arkhammirror_spark.operators.graph_scoring.composite_entity_scores.credibility":
+        "parity: test_graph_scoring.py passes none and others",
+    "arkhammirror_spark.operators.graph_scoring.composite_entity_scores.mentions":
+        "parity: test_graph_scoring.py passes none and others",
+    "arkhammirror_spark.operators.graph_scoring.composite_entity_scores.reference_date":
+        "parity: test_graph_scoring.py passes another date",
+    "arkhammirror_spark.operators.hidden_content.hidden_content_scan.id_col":
+        "parity: test_hidden_content.py relies on the default",
+    "arkhammirror_spark.operators.hidden_content.hidden_content_scan.with_hashes":
+        "parity: test_hidden_content.py relies on the default",
+    "arkhammirror_spark.operators.patterns.detect_recurring_patterns.min_confidence":
+        "parity: test_differential_correlations.py passes 0.0 and 0.3",
 }
 
 
@@ -546,23 +630,18 @@ def _defaulted_params(node):
     return out
 
 
-def _set_options(defs) -> set[str]:
-    """'<qualified def>.<param>' for every defaulted parameter some call in a
-    non-test file sets to a value whose source differs from its default's:
-    by keyword, positionally past its index, or through */**. A call reaches
-    every def of its name."""
+def _option_sources(defs, files) -> dict[str, set]:
+    """{'<qualified def>.<param>': value sources} for the defaulted
+    parameters `files`' calls pass: the source text of the value, the
+    default's for a call that omits it, None (unknown) for one a */**
+    argument may fill. A call reaches every def of its name."""
     import ast
-    from pathlib import Path
 
-    repo = Path(__file__).resolve().parent.parent
-    files = list((repo / "arkhammirror_spark").rglob("*.py"))
-    files += [repo / f for f in ("bench.py", "bench_extra.py", "__spark_entry__.py")]
-    files += sorted((repo / "scripts").glob("*.py")) + sorted((repo / "perfbench").glob("*.py"))
     by_name: dict[str, list] = {}
     for q, node in defs.items():
         if not isinstance(node, ast.ClassDef):
             by_name.setdefault(node.name, []).append((q, _defaulted_params(node)))
-    set_: set[str] = set()
+    sources: dict[str, set] = {}
     for path in files:
         for call in ast.walk(ast.parse(path.read_text())):
             if not isinstance(call, ast.Call):
@@ -572,43 +651,78 @@ def _set_options(defs) -> set[str]:
             keywords = {k.arg: ast.unparse(k.value) for k in call.keywords}
             for q, params in by_name.get(name, ()):
                 for i, p, default in params:
-                    if None in keywords:  # **kwargs
-                        value = None
-                    elif p in keywords:
+                    if p in keywords:
                         value = keywords[p]
-                    elif i is not None and starred is not None and i >= starred:
+                    elif None in keywords or (i is not None and starred is not None and i >= starred):
                         value = None
                     elif i is not None and i < len(call.args):
                         value = ast.unparse(call.args[i])
                     else:
-                        continue
-                    if value != default:
-                        set_.add(f"{q}.{p}")
-    return set_
+                        value = default
+                    sources.setdefault(f"{q}.{p}", set()).add(value)
+    return sources
+
+
+def _gated_suites() -> dict[str, Path]:
+    """{file name: path} of the test modules that skip as a whole where the
+    reference tree is absent: a module-level `pytestmark = skipif(...)` in a
+    module that names the reference packages path."""
+    import ast
+
+    out = {}
+    for path in sorted(Path(__file__).resolve().parent.glob("test_*.py")):
+        tree = ast.parse(path.read_text())
+        marked = any(
+            isinstance(n, ast.Assign) and "pytestmark" in map(ast.unparse, n.targets)
+            and "skipif" in ast.unparse(n.value)
+            for n in tree.body
+        )
+        if marked and any(
+            isinstance(n, ast.Constant) and "reference/packages" in str(n.value) for n in ast.walk(tree)
+        ):
+            out[path.name] = path
+    return out
 
 
 def test_no_unset_options():
     """Every defaulted parameter of a reachable top-level function under
     arkhammirror_spark/ (bar reference_impl/, the registered parts and the
-    test references) is set to a non-default value by a call in the
-    package, bench.py, bench_extra.py, __spark_entry__.py, scripts/ or
-    perfbench/ — or is on the allow-list with its reason."""
+    test references) has two values in use among the calls in the package,
+    bench.py, bench_extra.py, __spark_entry__.py, scripts/ and perfbench/:
+    some call relies on its default and some call passes another value —
+    or it is on the allow-list with its reason. A `parity:` reason names a
+    suite that skips without the reference tree and calls the function."""
     import ast
 
     roots, defs = _top_level_defs()
     reached = _reached_names(roots, defs)
-    options = {
-        f"{q}.{p}"
+    defaults = {
+        f"{q}.{p}": default
         for q, node in defs.items()
         if q.startswith("arkhammirror_spark.")
         and isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
         and node.name in reached
         and q not in _TEST_ONLY_OK
         and not _registered(node)
-        for _, p, _ in _defaulted_params(node)
+        for _, p, default in _defaulted_params(node)
     }
-    set_ = _set_options(defs)
-    unset = sorted(options - set_ - set(_OPTION_OK))
-    assert not unset, f"{len(unset)} options with one value in use: {unset}"
-    stale = sorted(o for o in _OPTION_OK if o not in options or o in set_)
-    assert not stale, f"allow-listed options that are set or gone: {stale}"
+    sources = _option_sources(defs, _program_files())
+    in_use = {
+        o for o, d in defaults.items()
+        if None in sources.get(o, ()) or (d in sources.get(o, ()) and len(sources[o]) > 1)
+    }
+    flagged = sorted(set(defaults) - in_use - set(_OPTION_OK))
+    assert not flagged, f"{len(flagged)} options without two values in use: {flagged}"
+    stale = sorted(o for o in _OPTION_OK if o not in defaults or o in in_use)
+    gated = _gated_suites()
+    for o, reason in _OPTION_OK.items():
+        if reason.startswith("parity: "):
+            suite, func = reason.removeprefix("parity: ").split()[0], o.split(".")[-2]
+            calls = {
+                getattr(c.func, "id", None) or getattr(c.func, "attr", None)
+                for c in ast.walk(ast.parse(gated[suite].read_text()))
+                if isinstance(c, ast.Call)
+            } if suite in gated else set()
+            if func not in calls:
+                stale.append(o)
+    assert not stale, f"allow-listed options that are in use, gone or not parity-gated: {sorted(stale)}"
