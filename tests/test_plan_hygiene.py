@@ -630,6 +630,17 @@ def _defaulted_params(node):
     return out
 
 
+def _call_name(call) -> str | None:
+    return getattr(call.func, "id", None) or getattr(call.func, "attr", None)
+
+
+def _called_names(path) -> set[str]:
+    """Names of the functions and methods `path` calls."""
+    import ast
+
+    return {_call_name(c) for c in ast.walk(ast.parse(path.read_text())) if isinstance(c, ast.Call)}
+
+
 def _option_sources(defs, files) -> dict[str, set]:
     """{'<qualified def>.<param>': value sources} for the defaulted
     parameters `files`' calls pass: the source text of the value, the
@@ -646,10 +657,9 @@ def _option_sources(defs, files) -> dict[str, set]:
         for call in ast.walk(ast.parse(path.read_text())):
             if not isinstance(call, ast.Call):
                 continue
-            name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
             starred = next((i for i, a in enumerate(call.args) if isinstance(a, ast.Starred)), None)
             keywords = {k.arg: ast.unparse(k.value) for k in call.keywords}
-            for q, params in by_name.get(name, ()):
+            for q, params in by_name.get(_call_name(call), ()):
                 for i, p, default in params:
                     if p in keywords:
                         value = keywords[p]
@@ -713,16 +723,16 @@ def test_no_unset_options():
     }
     flagged = sorted(set(defaults) - in_use - set(_OPTION_OK))
     assert not flagged, f"{len(flagged)} options without two values in use: {flagged}"
-    stale = sorted(o for o in _OPTION_OK if o not in defaults or o in in_use)
     gated = _gated_suites()
-    for o, reason in _OPTION_OK.items():
-        if reason.startswith("parity: "):
-            suite, func = reason.removeprefix("parity: ").split()[0], o.split(".")[-2]
-            calls = {
-                getattr(c.func, "id", None) or getattr(c.func, "attr", None)
-                for c in ast.walk(ast.parse(gated[suite].read_text()))
-                if isinstance(c, ast.Call)
-            } if suite in gated else set()
-            if func not in calls:
-                stale.append(o)
-    assert not stale, f"allow-listed options that are in use, gone or not parity-gated: {sorted(stale)}"
+
+    def ungated(option: str, reason: str) -> bool:
+        suite = reason.removeprefix("parity: ").split()[0]
+        return reason.startswith("parity: ") and (
+            suite not in gated or option.split(".")[-2] not in _called_names(gated[suite])
+        )
+
+    stale = sorted(
+        o for o, reason in _OPTION_OK.items()
+        if o not in defaults or o in in_use or ungated(o, reason)
+    )
+    assert not stale, f"allow-listed options that are in use, gone or not parity-gated: {stale}"
