@@ -1,7 +1,7 @@
 """Deterministic synthetic Common-Crawl-style `pages` table (FIXTURES.md §1,3).
 
 Every row is a pure function of (seed, row index), so generation is
-embarrassingly parallel (spark.range → mapInPandas) and reproducible at any
+embarrassingly parallel (spark.range → the per-row lane) and reproducible at any
 scale: the sf0.001 table is a strict prefix-equal subset of the sf100 table.
 
 Host distribution is Zipf-skewed with one mega-host owning ~30% of rows to
@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import datetime as dt
 import random
-from typing import Iterator
 
 import pandas as pd
 
@@ -233,23 +232,20 @@ def gen_pages_pandas(n_rows: int, seed: int = 42, start: int = 0) -> pd.DataFram
 
 
 def gen_pages_df(spark, n_rows: int, seed: int = 42, partitions: int | None = None):
-    """Distributed deterministic generation: spark.range → mapInPandas."""
-    from ..schemas import PAGES_SCHEMA
-    from ..shipping import ensure_shipped
+    """Distributed deterministic generation: spark.range → the per-row lane
+    (every row sets its own url, so the lane's key is a null url)."""
+    from pyspark.sql import functions as F
 
-    ensure_shipped(spark)
+    from ..operators.lane import explode_lane
+    from ..schemas import PAGES_SCHEMA
 
     parts = partitions or spark.sparkContext.defaultParallelism
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["id"].to_numpy()
-            rows = [_row(seed, int(i)) for i in ids]
-            out = pd.DataFrame(rows)
-            out["warc_ts"] = pd.to_datetime(out["warc_ts"], utc=True)
-            yield out
-
-    return spark.range(0, n_rows, numPartitions=parts).mapInPandas(_gen, PAGES_SCHEMA)
+    ids = spark.range(0, n_rows, numPartitions=parts)
+    return explode_lane(
+        ids.select(F.lit(None).cast("string").alias("url"), "id"),
+        lambda i: [_row(seed, i)],
+        PAGES_SCHEMA,
+    )
 
 
 def write_pages(spark, out_dir: str, n_rows: int) -> None:

@@ -86,8 +86,8 @@ def shingle_hashes(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 def minhash_signatures(sh: DataFrame, id_col: str) -> DataFrame:
-    """128-element minhash signature per doc from a (id, shingle) or
-    (id, h) frame.
+    """128-element minhash signature per doc from an (id, h) frame of
+    ``shingle_hashes``.
 
     One pass: each of the 128 permutation functions is min over (a*h + b)
     mod p, computed as 128 aggregate exprs — map-side partial min keeps the
@@ -97,11 +97,7 @@ def minhash_signatures(sh: DataFrame, id_col: str) -> DataFrame:
     # Fold the 64-bit equality key into [0, p) here, where the mod-p range
     # is needed for overflow-free (a*h + b) mod p under ANSI. pmod (not
     # abs % p) — abs(Long.MinValue) throws ARITHMETIC_OVERFLOW in ANSI mode.
-    if "h" in sh.columns:
-        base = sh.select(F.col(id_col), F.pmod(F.col("h"), F.lit(_P)).alias("h"))
-    else:
-        h = F.pmod(F.xxhash64(F.col("shingle")), F.lit(_P)).alias("h")
-        base = sh.select(F.col(id_col), h)
+    base = sh.select(F.col(id_col), F.pmod(F.col("h"), F.lit(_P)).alias("h"))
     aggs = [
         F.min((F.col("h") * F.lit(a) + F.lit(b)) % F.lit(_P)).alias(f"mh_{i}")
         for i, (a, b) in enumerate(params)

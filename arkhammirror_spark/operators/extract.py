@@ -2,37 +2,41 @@
 
 Spark-first restatement of the reference's ingest→light pipeline
 (extract_worker.py:90-213 dispatch; light_worker.py:110-426 normalize/lang/
-quality): one Arrow-batched ``mapInPandas`` pass — format dispatch, byte
-decode, tag strip, normalize, language, quality — with per-row error capture
-(the quarantine contract of extract_worker.py:202-213: a failing row yields
-success=False + error message, never a task failure).
+quality): one pass of the per-row lane (``lane.explode_lane``) — format
+dispatch, byte decode, tag strip, normalize, language, quality, checksum and
+the fused mock-NER — with per-row error capture (the quarantine contract of
+extract_worker.py:202-213: a failing row yields success=False + error
+message, never a task failure; ``extract_one`` writes that record itself).
 
 No per-row Python crosses the JVM boundary: the plan has exactly one
-PythonMapInArrow node; everything upstream/downstream is native.
+PythonMapInArrow node (the lane's); everything upstream/downstream is native.
 
-The ``_part_id``/``_batch_ms`` side-channel columns feed the per-partition
-audit table and are dropped from the public docs output.
+Two side-channel columns feed the per-partition audit table and are dropped
+from the public docs output: ``_batch_ms``, each row's own extract time
+(summed per partition into the audit's ``wall_ms``), and ``_part_id``, a
+native ``spark_partition_id()`` projected after the lane — the extract
+task's partition, so a row the lane quarantines still carries one.
 """
 
 from __future__ import annotations
 
 import hashlib
 import time
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..reference_impl.eml import extract_eml
+from ..reference_impl.entity_filter import is_valid_entity
 from ..reference_impl.htmlstrip import strip_html
 from ..reference_impl.ooxml import extract_docx, extract_xlsx
+from ..reference_impl.ner import mock_ner
 from ..reference_impl.tabular import extract_csv
 from ..reference_impl.normalize import assess_quality, detect_language, normalize_text
 from ..reference_impl.pdfmini import extract_pdf_text
 from ..reference_impl.textdecode import decode_text_bytes
 from ..schemas import DOCS_SCHEMA
-from .lane import error_text
+from .lane import error_text, explode_lane
 
 
 def sniff_kind(payload: bytes | None, declared: str | None) -> str:
@@ -123,47 +127,36 @@ def extract_one(payload: bytes | None, pre_text: str | None, kind: str | None) -
     }
 
 
-_DOCS_NAMES = [f.name for f in DOCS_SCHEMA.fields]
+def _extract_row(warc_us: int | None, html, text: str | None, kind: str | None) -> list[dict]:
+    """One page's docs record: ``extract_one``, the payload checksum and the
+    fused mock-NER mentions, with the row's own extract time in
+    ``_batch_ms``."""
+    t0 = time.perf_counter()
+    payload = bytes(html) if html is not None else None
+    rec = extract_one(payload, text, kind)
+    basis = payload if payload is not None else (text or "").encode("utf-8")
+    rec["checksum"] = hashlib.sha256(basis).hexdigest()
+    ments = mock_ner(rec["extracted_text"])
+    rec["_mentions"] = ments
+    rec["_names"] = sorted(
+        {m["text"].lower() for m in ments if is_valid_entity(m["text"], m["entity_type"])}
+    )
+    rec["_n_mentions"] = len(ments)
+    rec["warc_ts"] = warc_us
+    rec["_batch_ms"] = (time.perf_counter() - t0) * 1000.0
+    return [rec]
 
 
-def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from pyspark import TaskContext
-
-    from ..reference_impl.entity_filter import is_valid_entity
-    from ..reference_impl.ner import mock_ner
-
-    ctx = TaskContext.get()
-    part_id = ctx.partitionId() if ctx else -1
-
-    for pdf in it:
-        t0 = time.perf_counter()
-        recs = []
-        payloads = pdf["html"].tolist()
-        pre_texts = pdf["text"].tolist()
-        kinds = pdf["kind"].tolist() if "kind" in pdf.columns else [None] * len(pdf)
-        for payload, pre, kind in zip(payloads, pre_texts, kinds):
-            payload = bytes(payload) if payload is not None else None
-            rec = extract_one(payload, pre, kind)
-            basis = payload if payload is not None else (pre or "").encode("utf-8")
-            rec["checksum"] = hashlib.sha256(basis).hexdigest()
-            ments = mock_ner(rec["extracted_text"])
-            rec["_mentions"] = ments
-            rec["_names"] = sorted(
-                {
-                    m["text"].lower()
-                    for m in ments
-                    if is_valid_entity(m["text"], m["entity_type"])
-                }
-            )
-            rec["_n_mentions"] = len(ments)
-            recs.append(rec)
-        elapsed_ms = (time.perf_counter() - t0) * 1000.0
-        out = pd.DataFrame(recs)
-        out.insert(0, "url", pdf["url"].values)
-        out.insert(1, "warc_ts", pdf["warc_ts"].values)
-        out["_part_id"] = part_id
-        out["_batch_ms"] = elapsed_ms / max(1, len(out))
-        yield out[_DOCS_NAMES]
+# the lane's output: the docs schema without `_part_id` and with `warc_ts`
+# as epoch microseconds, which pass through the lane whatever the session
+# time zone; a native projection after the lane restores both
+_LANE_SCHEMA = StructType(
+    [
+        StructField("warc_ts", LongType()) if f.name == "warc_ts" else f
+        for f in DOCS_SCHEMA.fields
+        if f.name != "_part_id"
+    ]
+)
 
 
 def extract_docs(pages: DataFrame) -> DataFrame:
@@ -174,13 +167,14 @@ def extract_docs(pages: DataFrame) -> DataFrame:
     exactly once instead of per span family — at corpus scale this halves
     the Arrow transfer volume of the mention path.
     """
-    from ..shipping import ensure_shipped
-
-    ensure_shipped(pages.sparkSession)
-    cols = ["url", "warc_ts", "html", "text"]
-    if "kind" in pages.columns:
-        cols.append("kind")
-    return pages.select(*cols).mapInPandas(_batches, DOCS_SCHEMA)
+    kind = F.col("kind") if "kind" in pages.columns else F.lit(None).cast("string")
+    docs = explode_lane(
+        pages.select("url", F.unix_micros("warc_ts"), "html", "text", kind.alias("kind")),
+        _extract_row,
+        _LANE_SCHEMA,
+    )
+    native = {"warc_ts": F.timestamp_micros("warc_ts"), "_part_id": F.spark_partition_id()}
+    return docs.select(*[native.get(n, F.col(n)).alias(n) for n in DOCS_SCHEMA.fieldNames()])
 
 
 # --- filename-based type classification + worker routing -------------------

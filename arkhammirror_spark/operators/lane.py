@@ -1,8 +1,9 @@
 """The per-row Python lane: one Arrow-batched ``mapInPandas`` pass that
 applies a per-row function and explodes its records into rows.
 
-Every row-wise operator routes its Python work through ``explode_lane``, so
-three decisions live here once:
+Every row-wise operator routes its Python work through ``explode_lane`` —
+the ingest path (extract, the WARC reader, the page generator) included —
+so three decisions live here once:
 
 - the quarantine format: a row whose function raises becomes a key + error
   row (``error_text``) when the output schema has an ``error`` field, and
@@ -15,6 +16,10 @@ three decisions live here once:
   ``pd.to_datetime(utc=True)``;
 - executor shipping (``shipping.ensure_shipped``), which every pandas-UDF
   closure over this package needs.
+
+Two modules keep a pandas UDF of their own, and call ``ensure_shipped``
+themselves: ``graph.py``, whose betweenness pre-aggregates per batch, and
+``timeline.py``, whose merge is a grouped ``applyInPandas``.
 """
 
 from __future__ import annotations

@@ -195,19 +195,14 @@ def pairwise_cosine_above_banded(emb: DataFrame, threshold: float) -> DataFrame:
 
 
 def fit_ivf(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_clusters: int = 16,
-    seed: int = 7,
-    carry_cols: list[str] | None = None,
+    emb: DataFrame, carry_cols: list[str] | None = None
 ) -> tuple[list[list[float]], DataFrame]:
-    """Fit the IVF coarse quantizer ONCE: k-means the corpus into
-    `n_clusters` inverted lists (the pgvector-ivfflat analogue,
+    """Fit the IVF coarse quantizer ONCE: k-means the (vec_id, embedding)
+    corpus into 16 inverted lists (the pgvector-ivfflat analogue,
     arkham-frame/services/vectors.py:469-548 — `CREATE INDEX ... USING
     ivfflat (embedding) WITH (lists = N)` builds exactly this structure).
 
-    Returns (cluster centers, assigned DataFrame (id, v, list_id)). The
+    Returns (cluster centers, assigned DataFrame (vec_id, v, list_id)). The
     assignment is the expensive part — at scale, materialize it once,
     bucketed by list_id (`bucketBy(N, "list_id")` for Exchange-free probes,
     or a `bucket(N, list_id)` Iceberg partition transform). Repeated queries then call `ivf_probe`
@@ -217,20 +212,21 @@ def fit_ivf(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     carry = [F.col(c) for c in (carry_cols or [])]
-    feats = emb.select(F.col(id_col), v.alias("v"), *carry).withColumn(
+    feats = emb.select(F.col("vec_id"), v.alias("v"), *carry).withColumn(
         "features", array_to_vector(F.col("v"))
     )
     # seeded random init: the kmeans|| init alone costs several extra
     # cluster passes; for a coarse quantizer (recall comes from n_probe,
     # not centroid optimality) random init converges in fewer total
-    # passes. Deterministic under the fixed seed.
+    # passes. Deterministic under the fixed seed for a given input
+    # partitioning (the random init samples partition by partition).
     model = KMeans(
-        k=n_clusters, seed=seed, featuresCol="features", initMode="random"
+        k=16, seed=7, featuresCol="features", initMode="random"
     ).fit(feats)
     assigned = model.transform(feats).select(
-        F.col(id_col), "v",
+        F.col("vec_id"), "v",
         F.col(model.getPredictionCol()).alias("list_id"),
         *[F.col(c) for c in (carry_cols or [])],
     )
@@ -243,7 +239,6 @@ def ivf_probe(
     centers: list[list[float]],
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
     *,
     n_probe: int,
     predicate=None,
@@ -272,25 +267,18 @@ def ivf_probe(
     scan = assigned.where(F.col("list_id").isin(probes))
     if predicate is not None:
         scan = scan.where(predicate)
-    scored = scan.select(F.col(id_col), _cosine(F.col("v"), qcol).alias("score"))
-    return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
+    scored = scan.select(F.col("vec_id"), _cosine(F.col("v"), qcol).alias("score"))
+    return scored.orderBy(F.desc("score"), F.asc("vec_id")).limit(k)
 
 
 def ivf_topk(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_clusters: int = 16,
-    n_probe: int = 2,
-    seed: int = 7,
+    emb: DataFrame, query_vec: list[float], k: int = 10, n_probe: int = 2
 ) -> DataFrame:
     """One-shot IVF ANN: fit_ivf + ivf_probe. Convenience for single
     queries — issue repeated queries through fit_ivf ONCE + ivf_probe per
     query (see fit_ivf docstring)."""
-    centers, assigned = fit_ivf(emb, id_col, vec_col, n_clusters, seed)
-    return ivf_probe(assigned, centers, query_vec, k, id_col, n_probe=n_probe)
+    centers, assigned = fit_ivf(emb)
+    return ivf_probe(assigned, centers, query_vec, k, n_probe=n_probe)
 
 
 # --- IVF tuning + health (the maintenance math around the index) --------

@@ -1256,7 +1256,10 @@ def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = extract_docs(pages)
     return docs.select(
         "url",
-        F.date_format("warc_ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
+        # the UTC wall time, whatever the session time zone
+        F.date_format(
+            F.convert_timezone(None, F.lit("UTC"), "warc_ts"), "yyyy-MM-dd HH:mm:ss"
+        ).alias("ts"),
         F.sha2(F.col("extracted_text"), 256).alias("text_sha"),
     )
 

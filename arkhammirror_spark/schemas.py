@@ -51,7 +51,10 @@ MENTION_STRUCT_FIELDS = [
 
 # docs: one row per page/url after extraction + normalization (FIXTURES.md §4),
 # with the fused mock-NER pass and the audit side-channel (the `_` fields,
-# dropped from the public docs table): _mentions = full mention structs;
+# dropped from the public docs table): _part_id = the extract task's
+# partition (native spark_partition_id(), never null); _batch_ms = the row's
+# own extract time, summed per partition into the audit's wall_ms;
+# _mentions = full mention structs;
 # _names = sorted distinct lowercase names that pass the noise filter (the
 # edge-build input — persisting just this array instead of the full mention
 # structs keeps the cached working set small at corpus scale);
@@ -69,7 +72,7 @@ DOCS_SCHEMA = StructType(
         StructField("n_pages", IntegerType(), True),
         StructField("checksum", StringType(), True),
         StructField("error", StringType(), True),
-        StructField("_part_id", IntegerType(), True),
+        StructField("_part_id", IntegerType(), False),
         StructField("_batch_ms", DoubleType(), True),
         StructField("_mentions", ArrayType(StructType(MENTION_STRUCT_FIELDS)), True),
         StructField("_names", ArrayType(StringType()), True),

@@ -11,7 +11,7 @@ Design:
   header block from the payload, honors Content-Length, quarantines
   malformed records as error rows instead of failing the split.
 - `warc_to_pages` turns a DataFrame of (path, content) binary rows into the
-  pages schema — one Arrow-batched pass, so ingestion composes with
+  pages schema — one pass of the per-row lane, so ingestion composes with
   extract_docs into a single WARC → extracted-docs job.
 - `build_warc` writes deterministic WARC bytes (fixture/datagen helper —
   every field pinned, no wall clock).
@@ -21,11 +21,10 @@ from __future__ import annotations
 
 import gzip
 import io
-from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BinaryType,
     StringType,
@@ -33,6 +32,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from ..operators.lane import error_text, explode_lane
 
 PAGES_SCHEMA = StructType(
     [
@@ -152,47 +153,35 @@ def parse_warc_records(raw: bytes) -> list[dict]:
     return out
 
 
+def _segment_pages(path: str | None, content) -> list[dict]:
+    """One segment's pages rows; a segment that fails to parse (bad gzip
+    etc.) is one error row naming its path."""
+    if content is None:
+        return []
+    try:
+        recs = parse_warc_records(bytes(content))
+    except Exception as exc:
+        return [{"url": None, "warc_path": path, "error": error_text(exc)}]
+    return [
+        {
+            "url": r["url"],
+            "warc_ts": pd.to_datetime(r["warc_date"], utc=True, errors="coerce"),
+            "html": r["payload"],
+            "warc_path": path,
+            "error": r["error"],
+        }
+        for r in recs
+    ]
+
+
 def warc_to_pages(segments: DataFrame) -> DataFrame:
-    """(path, content) binary rows → pages rows (one Arrow pass)."""
-    from ..operators.lane import error_text
-    from ..shipping import ensure_shipped
-
-    ensure_shipped(segments.sparkSession)
-    names = [f.name for f in PAGES_SCHEMA.fields]
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, content in zip(
-                pdf["path"].tolist(), pdf["content"].tolist()
-            ):
-                if content is None:
-                    continue
-                try:
-                    recs = parse_warc_records(bytes(content))
-                except Exception as exc:  # bad gzip etc. → one error row
-                    rows.append(
-                        {"url": None, "warc_ts": None, "html": None,
-                         "text": None, "lang": None, "warc_path": path,
-                         "error": error_text(exc)}
-                    )
-                    continue
-                for r in recs:
-                    ts = pd.to_datetime(r["warc_date"], utc=True, errors="coerce")
-                    rows.append(
-                        {
-                            "url": r["url"],
-                            "warc_ts": None if pd.isna(ts) else ts.tz_localize(None),
-                            "html": r["payload"],
-                            "text": None,
-                            "lang": None,
-                            "warc_path": path,
-                            "error": r["error"],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=names)
-
-    return segments.select("path", "content").mapInPandas(_run, PAGES_SCHEMA)
+    """(path, content) binary rows → pages rows (one pass of the per-row
+    lane; every row sets its own url, so the lane's key is a null url)."""
+    return explode_lane(
+        segments.select(F.lit(None).cast("string").alias("url"), "path", "content"),
+        _segment_pages,
+        PAGES_SCHEMA,
+    )
 
 
 def build_warc(records: list[dict], gzip_members: bool = True) -> bytes:

@@ -25,7 +25,7 @@ def test_ivf_lists_materialize_bucketed_and_prune(spark, tmp_path):
     rng = random.Random(11)
     rows = [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(200)]
     emb = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
-    centers, assigned = fit_ivf(emb, n_clusters=8)
+    centers, assigned = fit_ivf(emb)
 
     spark.sql("DROP TABLE IF EXISTS ivf_lists_test")
     # a crashed earlier run can leave the warehouse dir without a catalog
@@ -89,7 +89,7 @@ def test_ivf_filtered_probe_prunes_before_distance(spark, tmp_path):
     emb = spark.createDataFrame(
         rows, "vec_id: long, embedding: array<double>, category: string"
     )
-    centers, assigned = fit_ivf(emb, n_clusters=8, carry_cols=["category"])
+    centers, assigned = fit_ivf(emb, carry_cols=["category"])
 
     spark.sql("DROP TABLE IF EXISTS ivf_lists_filt_test")
     shutil.rmtree("spark-warehouse/ivf_lists_filt_test", ignore_errors=True)

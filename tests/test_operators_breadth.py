@@ -13,6 +13,7 @@ from arkhammirror_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
+    shingle_hashes,
     shingles,
     simhash64_reference,
     simhash_pairs_from_sigs,
@@ -152,10 +153,7 @@ class TestDedup:
         through the boilerplate stop pairing, (b) genuinely similar docs
         still pair with the exact Jaccard over the filtered universe, and
         (c) the audit frame reports exactly the planted shingles."""
-        from arkhammirror_spark.operators.dedup import (
-            hot_shingles,
-            shingle_hashes,
-        )
+        from arkhammirror_spark.operators.dedup import hot_shingles
 
         # a 40-word footer outweighs each doc's own words, so footer-only
         # overlap clears the 0.8 Jaccard cut
@@ -212,7 +210,7 @@ class TestDedup:
         assert (1, 4) in lsh
 
     def test_minhash_identical_docs_identical_sigs(self, spark, docs):
-        sh = shingles(docs, "doc_id")
+        sh = shingle_hashes(docs)
         sigs = {r["doc_id"]: r["signature"] for r in minhash_signatures(sh, "doc_id").collect()}
         assert sigs[1] == sigs[4]
         assert sigs[1] != sigs[3]
@@ -221,8 +219,6 @@ class TestDedup:
         # the Jaccard equality key must be the RAW xxhash64 (full 64-bit
         # range, negatives included), not a 31-bit fold — a folded key
         # collides at ~n²/2³² per doc and silently inflates n_shared
-        from arkhammirror_spark.operators.dedup import shingle_hashes
-
         hs = [r["h"] for r in shingle_hashes(docs).collect()]
         assert min(hs) < 0 or max(hs) >= (1 << 31)  # escaped the [0, 2^31) fold
         # signature path still folds into [0, p): all minhash values bounded
@@ -230,12 +226,6 @@ class TestDedup:
         sigs = minhash_signatures(sh, "doc_id").collect()
         for r in sigs:
             assert all(0 <= v < (1 << 31) - 1 for v in r["signature"])
-        # raw-shingle and hashed-frame inputs produce identical signatures
-        sigs2 = {
-            r["doc_id"]: r["signature"]
-            for r in minhash_signatures(shingles(docs, "doc_id"), "doc_id").collect()
-        }
-        assert {r["doc_id"]: r["signature"] for r in sigs} == sigs2
 
     def test_simhash_dup_and_neardup(self, spark, docs):
         sigs = simhash64_reference(docs)

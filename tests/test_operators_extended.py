@@ -912,8 +912,10 @@ class TestIvfAnn:
 
         brute = [r["vec_id"] for r in brute_force_topk(emb, qv, k=9).collect()]
         ivf = [r["vec_id"] for r in
-               ivf_topk(emb, qv, k=9, n_clusters=8, n_probe=2).collect()]
-        # block 0's members dominate the true top-9 and share one IVF list
+               ivf_topk(emb, qv, k=9, n_probe=4).collect()]
+        # block 0's members dominate the true top-9; 16 lists over 8 blocks
+        # split a block over a few lists, which the query's 4 nearest
+        # (the ann_ivf_topk part's probe count) cover
         assert set(brute) & set(range(10)) <= set(ivf)
         assert len(set(brute) & set(ivf)) >= 8
 
@@ -923,9 +925,8 @@ class TestIvfAnn:
 
         rows = [(i, fake_embedding(f"v{i}", dim=16)) for i in range(60)]
         emb = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
-        out = ivf_topk(emb, fake_embedding("v3", dim=16), k=60,
-                       n_clusters=6, n_probe=1)
-        # with 1 of 6 lists probed, far fewer than all 60 rows survive the scan
+        out = ivf_topk(emb, fake_embedding("v3", dim=16), k=60, n_probe=1)
+        # with 1 of 16 lists probed, far fewer than all 60 rows survive the scan
         n = out.count()
         assert 0 < n < 40
 
@@ -946,13 +947,13 @@ class TestIvfAnn:
                    for j, a in enumerate(anchor)]
             rows.append((vid, vec))
         emb = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
-        centers, assigned = fit_ivf(emb, n_clusters=8)
+        centers, assigned = fit_ivf(emb)
         assigned = assigned.localCheckpoint(eager=True)  # materialized lists
-        assert len(centers) == 8 and len(centers[0]) == 16
+        assert len(centers) == 16 and len(centers[0]) == 16
         for block in ("block0", "block3"):
             qv = fake_embedding(block, dim=16)
             reused = [r["vec_id"] for r in
                       ivf_probe(assigned, centers, qv, k=9, n_probe=2).collect()]
             oneshot = [r["vec_id"] for r in
-                       ivf_topk(emb, qv, k=9, n_clusters=8, n_probe=2).collect()]
+                       ivf_topk(emb, qv, k=9, n_probe=2).collect()]
             assert reused == oneshot

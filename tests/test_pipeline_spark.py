@@ -34,6 +34,19 @@ def result(spark, pages, tmp_path_factory):
     return run_pipeline(spark, pages, out_dir=out, num_partitions=8), out
 
 
+def test_gen_pages_df_equals_gen_pages_pandas(spark):
+    """The Spark generator is row for row the pandas one: same ids in the
+    same order, warc_ts to the microsecond, html to the byte."""
+    got = gen_pages_df(spark, 50, seed=3).withColumn("us", F.unix_micros("warc_ts")).collect()
+    want = gen_pages_pandas(50, seed=3)
+    assert len(got) == len(want) == 50
+    for g, (_, w) in zip(got, want.iterrows()):
+        assert g["url"] == w["url"]
+        assert g["us"] == w["warc_ts"].value // 1000
+        assert (bytes(g["html"]) if g["html"] is not None else None) == w["html"]
+        assert (g["text"], g["lang"], g["kind"]) == (w["text"], w["lang"], w["kind"])
+
+
 class TestExtractByteIdentity:
     def test_extracted_text_matches_oracle_per_url(self, spark, pages, result):
         res, _ = result
@@ -161,6 +174,8 @@ class TestAuditAndResume:
         assert sum(r["output_rows"] for r in audit) == ok
         assert sum(r["error_rows"] for r in audit) == bad
         assert all(r["wall_ms"] >= 0 for r in audit)
+        # one audit row per extract task of the 8-way url repartition
+        assert all(r["partition_id"] in range(8) for r in audit)
 
     def test_resume_skips_committed_urls(self, spark, pages, result):
         res, out = result

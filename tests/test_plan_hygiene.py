@@ -250,41 +250,42 @@ def test_analyst_part_job_budget(spark, name):
 
 
 
-# Modules under arkhammirror_spark/ that no entry point imports, kept on
-# purpose (with the packages enclosing them); none today — bench_extra.py's
-# `shapes` mode reaches plans.inspect. Anything unreachable is dead code and
-# fails the guard below.
 # The modules that may start a pandas UDF, each for its reason; every other
 # row-wise operator keeps only its per-row function and runs through the lane.
 _PANDAS_UDF_MODULES = {
     "operators/lane.py": "the per-row lane itself",
-    "operators/extract.py": "batch-level _part_id/_batch_ms audit columns",
     "operators/graph.py": "betweenness aggregates per batch",
     "operators/timeline.py": "grouped applyInPandas merge",
-    "datagen/pages.py": "a spark.range generator",
-    "sources/warc.py": "error rows keyed by segment path; tz-naive timestamps",
 }
 
 
 def test_pandas_udfs_only_in_the_lane():
     """mapInPandas/applyInPandas appear only in the modules listed above,
-    and each listed module still uses one."""
+    and each listed module still uses one; exactly those modules call
+    `shipping.ensure_shipped`, which every pandas-UDF closure over the
+    package needs."""
     import ast
 
     pkg = Path(__file__).resolve().parent.parent / "arkhammirror_spark"
-    sites = {
-        path.relative_to(pkg).as_posix()
-        for path in pkg.rglob("*.py")
-        for node in ast.walk(ast.parse(path.read_text()))
-        if isinstance(node, ast.Attribute)
-        and node.attr in ("mapInPandas", "applyInPandas")
-    }
-    assert sites == set(_PANDAS_UDF_MODULES), (
-        f"outside the lane: {sorted(sites - set(_PANDAS_UDF_MODULES))}; "
-        f"stale: {sorted(set(_PANDAS_UDF_MODULES) - sites)}"
-    )
+    trees = {path.relative_to(pkg).as_posix(): ast.parse(path.read_text()) for path in pkg.rglob("*.py")}
+
+    def modules(hit) -> set[str]:
+        return {m for m, tree in trees.items() if any(hit(node) for node in ast.walk(tree))}
+
+    udfs = modules(lambda n: isinstance(n, ast.Attribute) and n.attr in ("mapInPandas", "applyInPandas"))
+    shipped = modules(lambda n: isinstance(n, ast.Call) and _call_name(n) == "ensure_shipped")
+    listed = set(_PANDAS_UDF_MODULES)
+    for what, found in (("pandas UDF", udfs), ("ensure_shipped call", shipped)):
+        assert found == listed, (
+            f"{what} outside the list: {sorted(found - listed)}; "
+            f"listed without one: {sorted(listed - found)}"
+        )
 
 
+# Modules under arkhammirror_spark/ that no entry point imports, kept on
+# purpose (with the packages enclosing them); none today — bench_extra.py's
+# `shapes` mode reaches plans.inspect. Anything unreachable is dead code and
+# fails the guard below.
 _UNREACHABLE_OK: set[str] = set()
 
 
@@ -645,16 +646,24 @@ def _option_sources(defs, files) -> dict[str, set]:
     """{'<qualified def>.<param>': value sources} for the defaulted
     parameters `files`' calls pass: the source text of the value, the
     default's for a call that omits it, None (unknown) for one a */**
-    argument may fill. A call reaches every def of its name."""
+    argument may fill. A call reaches every def of its name. The calls a
+    test reference (`_TEST_ONLY_OK`) makes are test code and count for
+    nothing."""
     import ast
 
+    repo = Path(__file__).resolve().parent.parent
     by_name: dict[str, list] = {}
     for q, node in defs.items():
         if not isinstance(node, ast.ClassDef):
             by_name.setdefault(node.name, []).append((q, _defaulted_params(node)))
     sources: dict[str, set] = {}
     for path in files:
-        for call in ast.walk(ast.parse(path.read_text())):
+        mod = ".".join(path.relative_to(repo).with_suffix("").parts)
+        program = [
+            top for top in ast.parse(path.read_text()).body
+            if f"{mod}.{getattr(top, 'name', '')}" not in _TEST_ONLY_OK
+        ]
+        for call in (node for top in program for node in ast.walk(top)):
             if not isinstance(call, ast.Call):
                 continue
             starred = next((i for i, a in enumerate(call.args) if isinstance(a, ast.Starred)), None)

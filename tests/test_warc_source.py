@@ -91,12 +91,28 @@ class TestParser:
 
 class TestSparkReader:
     def test_read_warc_files(self, spark, tmp_path):
+        import datetime as dt
+
+        import pyspark.sql.functions as F
+
+        undated = {"url": "https://c.example/3", "date": "not a date", "payload": b"x"}
         p = tmp_path / "seg-00000.warc.gz"
-        p.write_bytes(build_warc(RECORDS))
-        pages = read_warc(spark, str(tmp_path / "*.warc.gz"))
+        p.write_bytes(build_warc(RECORDS + [undated]))
+        pages = read_warc(spark, str(tmp_path / "*.warc.gz")).withColumn(
+            "epoch_s", F.unix_seconds("warc_ts")
+        )
         rows = {r["url"]: r for r in pages.collect()}
-        assert set(rows) == {"https://a.example/1", "https://b.example/2"}
-        assert rows["https://a.example/1"]["warc_ts"].year == 2026
+        assert set(rows) == {"https://a.example/1", "https://b.example/2", "https://c.example/3"}
+
+        def epoch(iso: str) -> int:
+            return int(dt.datetime.fromisoformat(iso.replace("Z", "+00:00")).timestamp())
+
+        # the exact instant of each WARC-Date, whatever the session time zone
+        assert rows["https://a.example/1"]["epoch_s"] == epoch(RECORDS[0]["date"])
+        assert rows["https://b.example/2"]["epoch_s"] == epoch(RECORDS[2]["date"])
+        # an unparseable WARC-Date reads null, the record survives
+        assert rows["https://c.example/3"]["warc_ts"] is None
+        assert rows["https://c.example/3"]["error"] is None
         assert bytes(rows["https://a.example/1"]["html"]).startswith(b"<html>")
         assert rows["https://a.example/1"]["error"] is None
 
@@ -106,6 +122,10 @@ class TestSparkReader:
         )
         rows = warc_to_pages(seg).collect()
         assert len(rows) == 1 and rows[0]["error"] is not None
+        # the error row names its segment, not a page
+        assert rows[0]["url"] is None
+        assert rows[0]["warc_path"] == "s1"
+        assert rows[0]["html"] is None
 
     def test_end_to_end_warc_to_extraction(self, spark, tmp_path):
         """WARC bytes → pages → extract_docs: the full ingest chain."""
@@ -125,6 +145,37 @@ class TestSparkReader:
         assert "John Smith" in names
         # the utf-8 text-only record went through the decode cascade
         assert "Résumé" in got["https://b.example/2"]["extracted_text"]
+
+
+    def test_instants_survive_a_non_utc_session(self, spark, tmp_path):
+        """WARC-Date → pages → docs keeps each record's instant when the
+        session time zone is not UTC: Python sees session-local wall times."""
+        import datetime as dt
+
+        import pyspark.sql.functions as F
+
+        from arkhammirror_spark.operators.extract import extract_docs
+
+        p = tmp_path / "seg.warc.gz"
+        p.write_bytes(build_warc(RECORDS))
+        zone = spark.conf.get("spark.sql.session.timeZone")
+        spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+        try:
+            pages = read_warc(spark, str(p)).where("error is null")
+            got = {
+                r["url"]: (r["pages_s"], r["docs_s"])
+                for r in extract_docs(pages.select("url", "warc_ts", "html", "text"))
+                .select("url", F.unix_seconds("warc_ts").alias("docs_s"))
+                .join(pages.select("url", F.unix_seconds("warc_ts").alias("pages_s")), "url")
+                .collect()
+            }
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", zone)
+        want = {
+            r["url"]: int(dt.datetime.fromisoformat(r["date"].replace("Z", "+00:00")).timestamp())
+            for r in RECORDS if r.get("date")
+        }
+        assert got == {u: (s, s) for u, s in want.items()}
 
 
 class TestWarcRoundTripFuzz:
