@@ -1,6 +1,6 @@
 """Differential tests: reference_impl.timeline_merge vs the ACTUAL
-arkham-shard-timeline merging module (loaded by file path), plus the Spark
-grouped-merge operator."""
+arkham-shard-timeline merging module (loaded by file path). The Spark merge
+operator is tested against reference_impl in tests/test_timeline_spark.py."""
 
 from __future__ import annotations
 
@@ -135,29 +135,3 @@ def test_date_range_parity(ref, seed):
     got = ours.date_range(evs)
     assert got == (exp.start, exp.end)
 
-
-def test_spark_grouped_merge(spark):
-    """The applyInPandas wrapper must agree with the local merger per group."""
-    from arkhammirror_spark.operators.timeline import merge_timeline_events
-
-    evs = []
-    for g in ("g1", "g2"):
-        for e in _fuzz_events(hash(g) % 100, n=10):
-            evs.append((g, e["id"], e["document_id"], e["text"],
-                        e["date_start"].date(), e["confidence"]))
-    df = spark.createDataFrame(
-        evs,
-        "case_id string, id string, document_id string, text string, "
-        "date_start date, confidence double",
-    )
-    got = merge_timeline_events(df, group_col="case_id", strategy="deduplicated")
-    rows = {(r["group_key"], r["id"]) for r in got.collect()}
-    for g in ("g1", "g2"):
-        local = [
-            {**e, "date_start": e["date_start"].date(), "entities": []}
-            for e in _fuzz_events(hash(g) % 100, n=10)
-        ]
-        kept, _ = ours.merge_deduplicated(local)
-        assert {(g, e["id"]) for e in kept} == {
-            (gg, i) for gg, i in rows if gg == g
-        }
