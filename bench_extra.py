@@ -18,11 +18,16 @@ measured, and each job is labelled (guide §1.5).
 Env knobs match bench.py: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS. Plan dumps
 go to PLAN_DIR (default: a directory under the system temp dir).
 
-`shapes` records every part's `plan_shape` (node counts per kind) and
-output schema in plans/shapes.json, which tests/test_plan_hygiene.py
-asserts. It plans in the test session's shape (local[4], 8 shuffle
-partitions) against the test's own data directory, whatever
-SPARK_GRAFT_SF_DIR says: the planner's broadcast choices follow data size.
+`shapes` records every part's `plan_shape` (node counts per kind), output
+schema and Spark job count (building the frame, planning it and running it
+to the noop sink) in plans/shapes.json, which tests/test_plan_hygiene.py
+asserts: the shape and schema exactly, the jobs as a budget. A part's job
+count varies by a job or two from run to run (AQE submits its query stages
+concurrently; temporal_snapshots read 48 to 50), so the budget recorded is
+the most jobs any of SHAPE_SWEEPS sweeps started. It runs in the
+test session's shape (local[4], 8 shuffle partitions) against the test's
+own data directory, whatever SPARK_GRAFT_SF_DIR says: the planner's
+broadcast choices follow data size.
 
 `split` times three walls per part, in order: building the frame (eager
 jobs and py4j round trips on the driver), planning it
@@ -40,23 +45,48 @@ import tempfile
 import time
 
 SHAPES_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "shapes.json")
+SHAPE_SWEEPS = 5
+
+
+def part_record(spark, registry, name: str, sf_dir: str):
+    """Part `name` built at `sf_dir`, planned and run to a noop sink in a
+    job group of its own: (the frame, its plan shape with the output schema
+    and the Spark jobs the three started)."""
+    from arkhammirror_spark.plans import plan_shape
+
+    sc = spark.sparkContext
+    group = f"part-jobs-{name}-{time.monotonic_ns()}"
+    sc.setJobGroup(group, name)
+    try:
+        df = registry[name](spark, sf_dir)
+        shape = {**plan_shape(df), "schema": df.schema.simpleString()}
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    shape["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
+    return df, shape
 
 
 def write_shapes() -> None:
     sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tests"))
     from test_plan_hygiene import SF as sf_dir
 
-    from arkhammirror_spark.plans import plan_shape
     from arkhammirror_spark.queries import QUERIES
     from arkhammirror_spark.session import get_spark
 
     spark = get_spark("arkhammirror-plan-shapes", master="local[4]", shuffle_partitions=8)
-    rows = []
-    for name in sorted(QUERIES):
-        df = QUERIES[name](spark, sf_dir)
-        shape = {**plan_shape(df), "schema": df.schema.simpleString()}
-        rows.append(f"  {json.dumps(name)}: {json.dumps(shape)}")
+    shapes: dict[str, dict] = {}
+    for _sweep in range(SHAPE_SWEEPS):
+        for name in sorted(QUERIES):
+            _df, shape = part_record(spark, QUERIES, name, sf_dir)
+            jobs = shape.pop("jobs")
+            seen = shapes.setdefault(name, {**shape, "jobs": jobs})
+            assert {k: v for k, v in seen.items() if k != "jobs"} == shape, (
+                f"{name}: plan shape differs between sweeps"
+            )
+            seen["jobs"] = max(seen["jobs"], jobs)
     spark.stop()
+    rows = [f"  {json.dumps(name)}: {json.dumps(shape)}" for name, shape in shapes.items()]
     with open(SHAPES_PATH, "w") as f:
         f.write("{\n" + ",\n".join(rows) + "\n}\n")
     print(f"# {len(rows)} plan shapes written: {SHAPES_PATH}", flush=True)

@@ -1,9 +1,10 @@
 """Plan-hygiene gate: every registry query must be free of row-at-a-time
 Python, keep the plan shape and output schema recorded in
-plans/shapes.json, and document-table queries must column-prune their
-scans. Plan-only (no execution) so the whole sweep is fast. The structural
-rules beside it include the dead-module and dead-function guards (every
-package module and top-level function is reached from an entry point)."""
+plans/shapes.json, start no more Spark jobs than recorded there, and
+document-table queries must column-prune their scans. Each part runs once,
+at sf0.001 to a noop sink. The structural rules beside it include the
+dead-module and dead-function guards (every package module and top-level
+function is reached from an entry point)."""
 
 import json
 from pathlib import Path
@@ -12,18 +13,18 @@ import pytest
 
 from arkhammirror_spark.plans import (
     has_row_python,
-    plan_shape,
     python_node_count,
     pushed_filters,
     read_schema,
     unpartitioned_windows,
 )
 from arkhammirror_spark.queries import QUERIES
+from bench_extra import part_record
 
 SF = "/root/testdata/sf0.001"
 
-# every part's node counts per kind and output schema; `python bench_extra.py
-# shapes` rewrites it
+# every part's node counts per kind, output schema and Spark jobs (its job
+# budget); `python bench_extra.py shapes` rewrites it
 _SHAPES = json.loads(
     (Path(__file__).resolve().parent.parent / "plans" / "shapes.json").read_text()
 )
@@ -82,7 +83,13 @@ _ARROW_BOUNDS = {
 
 @pytest.mark.parametrize("name", sorted(QUERIES.keys()))
 def test_no_row_python_and_bounded_arrow(spark, name):
-    df = QUERIES[name](spark, SF)
+    df, shape = part_record(spark, QUERIES, name, SF)
+    want = _SHAPES[name]
+    # the sweep is bound by per-job fixed cost: a fixture read that infers
+    # its schema, a count() beside a collect(), or a per-round loop where a
+    # bounded driver lane fits adds jobs, and fails here
+    jobs = shape.pop("jobs")
+    assert jobs <= want["jobs"], f"{name}: {jobs} Spark jobs, budget {want['jobs']}"
     assert not has_row_python(df), f"{name}: BatchEvalPython in plan"
     n_py = python_node_count(df)
     lo, hi = _ARROW_BOUNDS.get(name, (0, 0))
@@ -95,14 +102,12 @@ def test_no_row_python_and_bounded_arrow(spark, name):
     # range-partitioned rank constructions).
     wins = unpartitioned_windows(df)
     assert not wins, f"{name}: unpartitioned Window node(s): {wins}"
-    assert plan_shape(df) == {
-        k: v for k, v in _SHAPES[name].items() if k != "schema"
-    }, f"{name}: plan shape moved"
     # the oracle gate compares values only: a padded column drifting from
     # int to bigint would pass it, so each part's output schema is pinned
-    assert df.schema.simpleString() == _SHAPES[name]["schema"], (
-        f"{name}: output schema moved"
-    )
+    assert shape.pop("schema") == want["schema"], f"{name}: output schema moved"
+    assert shape == {
+        k: v for k, v in want.items() if k not in ("schema", "jobs")
+    }, f"{name}: plan shape moved"
 
 
 def test_document_scans_are_pruned(spark):
@@ -212,42 +217,6 @@ def test_pipeline_job_budget(spark, tmp_path):
         f"{len(jobs)} Spark jobs for a cold + resume run_pipeline, budget "
         f"{_PIPELINE_JOB_BUDGET}"
     )
-
-
-# Spark jobs each part of the benchmark's analyst mix may start to build its
-# frame and run it to a noop sink at SF (48 in all, measured). A fixture read
-# that infers its schema, a count() beside a collect(), or a per-round
-# PageRank loop where the bounded driver lane fits adds jobs, and fails this
-# gate.
-_PART_JOB_BUDGET = {
-    "entities": 3,
-    "comention_edges": 4,
-    "linked_mentions": 8,
-    "graph_components": 6,
-    "graph_pagerank": 6,
-    "bm25_search": 9,
-    "gopher_repetition": 5,
-    "interval_conflicts": 2,
-    "pricing_summary": 2,
-    "exact_dedup": 2,
-    "regex_search_email": 1,
-}
-
-
-@pytest.mark.parametrize("name", sorted(_PART_JOB_BUDGET))
-def test_analyst_part_job_budget(spark, name):
-    sc = spark.sparkContext
-    group = f"part-job-budget-{name}"
-    sc.setJobGroup(group, name)
-    try:
-        QUERIES[name](spark, SF).write.format("noop").mode("overwrite").save()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= _PART_JOB_BUDGET[name], (
-        f"{name}: {len(jobs)} Spark jobs, budget {_PART_JOB_BUDGET[name]}"
-    )
-
 
 
 # The modules that may start a pandas UDF, each for its reason; every other
