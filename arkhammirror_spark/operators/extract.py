@@ -24,7 +24,7 @@ import hashlib
 import time
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import StructType
 
 from ..reference_impl.eml import extract_eml
 from ..reference_impl.entity_filter import is_valid_entity
@@ -127,7 +127,7 @@ def extract_one(payload: bytes | None, pre_text: str | None, kind: str | None) -
     }
 
 
-def _extract_row(warc_us: int | None, html, text: str | None, kind: str | None) -> list[dict]:
+def _extract_row(warc_ts, html, text: str | None, kind: str | None) -> list[dict]:
     """One page's docs record: ``extract_one``, the payload checksum and the
     fused mock-NER mentions, with the row's own extract time in
     ``_batch_ms``."""
@@ -142,21 +142,9 @@ def _extract_row(warc_us: int | None, html, text: str | None, kind: str | None) 
         {m["text"].lower() for m in ments if is_valid_entity(m["text"], m["entity_type"])}
     )
     rec["_n_mentions"] = len(ments)
-    rec["warc_ts"] = warc_us
+    rec["warc_ts"] = warc_ts
     rec["_batch_ms"] = (time.perf_counter() - t0) * 1000.0
     return [rec]
-
-
-# the lane's output: the docs schema without `_part_id` and with `warc_ts`
-# as epoch microseconds, which pass through the lane whatever the session
-# time zone; a native projection after the lane restores both
-_LANE_SCHEMA = StructType(
-    [
-        StructField("warc_ts", LongType()) if f.name == "warc_ts" else f
-        for f in DOCS_SCHEMA.fields
-        if f.name != "_part_id"
-    ]
-)
 
 
 def extract_docs(pages: DataFrame) -> DataFrame:
@@ -169,12 +157,11 @@ def extract_docs(pages: DataFrame) -> DataFrame:
     """
     kind = F.col("kind") if "kind" in pages.columns else F.lit(None).cast("string")
     docs = explode_lane(
-        pages.select("url", F.unix_micros("warc_ts"), "html", "text", kind.alias("kind")),
+        pages.select("url", "warc_ts", "html", "text", kind.alias("kind")),
         _extract_row,
-        _LANE_SCHEMA,
+        StructType([f for f in DOCS_SCHEMA.fields if f.name != "_part_id"]),
     )
-    native = {"warc_ts": F.timestamp_micros("warc_ts"), "_part_id": F.spark_partition_id()}
-    return docs.select(*[native.get(n, F.col(n)).alias(n) for n in DOCS_SCHEMA.fieldNames()])
+    return docs.withColumn("_part_id", F.spark_partition_id()).select(*DOCS_SCHEMA.fieldNames())
 
 
 # --- filename-based type classification + worker routing -------------------

@@ -127,3 +127,35 @@ def test_empty_batches_give_the_typed_empty_frame(spark):
         out = explode_lane(df, lambda v: [], schema)
         assert out.schema == schema
         assert out.collect() == []
+
+
+def test_instants_cross_the_lane_in_any_session_zone(spark):
+    """The two 01:30 instants of the 2025-11-02 fall-back in Los Angeles
+    share one local wall time; a pass-through must return each instant (and
+    the null) unchanged, and the function sees tz-aware UTC datetimes."""
+    import pyspark.sql.functions as F
+
+    first = int(dt.datetime(2025, 11, 2, 8, 30, tzinfo=dt.timezone.utc).timestamp()) * 10**6
+    second = first + 3600 * 10**6
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        df = spark.createDataFrame(
+            [("a", first), ("b", second), ("n", None)], "k string, us long"
+        ).select("k", F.timestamp_micros("us").alias("ts"))
+        out = explode_lane(
+            df,
+            lambda ts: [{"ts": ts, "seen": None if ts is None else ts.isoformat()}],
+            _schema(StructField("ts", TimestampType()), StructField("seen", StringType())),
+        )
+        got = {
+            r["k"]: (r["us"], r["seen"])
+            for r in out.select("k", F.unix_micros("ts").alias("us"), "seen").collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    assert got == {
+        "a": (first, "2025-11-02T08:30:00+00:00"),
+        "b": (second, "2025-11-02T09:30:00+00:00"),
+        "n": (None, None),
+    }
