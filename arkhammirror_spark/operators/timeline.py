@@ -13,6 +13,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..reference_impl import timeline_merge as tm
+from .lane import explode_lane
+
 ISO_PAT = r"\b(\d{4})-(\d{1,2})-(\d{1,2})(?:T(\d{1,2}):(\d{1,2}):(\d{1,2}))?\b"
 _MONTHS = (
     "January|February|March|April|May|June|July|August|September|October|"
@@ -179,79 +182,53 @@ MERGED_SCHEMA = (
 )
 
 
+_MERGES = {
+    "chronological": lambda evs, _priority: tm.merge_chronological(evs),
+    "deduplicated": lambda evs, _priority: tm.merge_deduplicated(evs)[0],
+    "consolidated": lambda evs, _priority: tm.merge_consolidated(evs)[0],
+    "source_priority": tm.merge_source_priority,
+}
+
+
 def merge_timeline_events(
     events: DataFrame,
     group_col: str = "case_id",
     strategy: str = "deduplicated",
     priority_docs: list[str] | None = None,
 ) -> DataFrame:
-    """T3 timeline merging (merging.py strategies) as a grouped operator:
-    one merge per `group_col` timeline via applyInPandas — the reference
-    merges one bounded timeline at a time, so grouped-pandas is the honest
-    distributed shape (each group's sequential dedup/consolidate scan is
-    inherently ordered). Input columns: group, id, document_id, text,
-    date_start, confidence[, entities array].
+    """T3 timeline merging (merging.py strategies), one merge per
+    `group_col` timeline: the reference merges one bounded timeline at a
+    time and each strategy's dedup/consolidate scan is ordered, so each
+    group's events are collected into one array (sorted by id, so date ties
+    break the same way on every run) and merged by one lane row. Input
+    columns: group, id, document_id, text, date_start, confidence[,
+    entities array].
 
     Returns merged rows tagged with consolidated/source_count.
     """
-    import pandas as pd
-
-    from ..reference_impl import timeline_merge as tm
-    from ..shipping import ensure_shipped
-
-    ensure_shipped(events.sparkSession)
-
-    def _merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        evs = []
-        for r in pdf.itertuples(index=False):
-            evs.append(
-                {
-                    "id": r.id,
-                    "document_id": r.document_id,
-                    "text": r.text,
-                    "date_start": r.date_start,
-                    "confidence": float(r.confidence),
-                    "entities": list(getattr(r, "entities", []) or []),
-                }
-            )
-        if strategy == "chronological":
-            merged = tm.merge_chronological(evs)
-        elif strategy == "deduplicated":
-            merged, _ = tm.merge_deduplicated(evs)
-        elif strategy == "consolidated":
-            merged, _ = tm.merge_consolidated(evs)
-        elif strategy == "source_priority":
-            merged = tm.merge_source_priority(evs, priority_docs or [])
-        else:
-            raise ValueError(f"unknown merge strategy {strategy!r}")
-        return pd.DataFrame(
-            [
-                {
-                    "group_key": key[0],
-                    "id": ev["id"],
-                    "document_id": ev["document_id"],
-                    "text": ev["text"],
-                    "date_start": ev["date_start"],
-                    "confidence": ev["confidence"],
-                    "consolidated": bool(ev.get("consolidated", False)),
-                    "source_count": int(ev.get("source_count", 1)),
-                }
-                for ev in merged
-            ],
-            columns=[
-                "group_key", "id", "document_id", "text", "date_start",
-                "confidence", "consolidated", "source_count",
-            ],
-        )
-
-    cols = ["id", "document_id", "text", "date_start", "confidence"]
+    if strategy not in _MERGES:
+        raise ValueError(f"unknown merge strategy {strategy!r}")
+    merge = _MERGES[strategy]
+    priority = list(priority_docs or [])
+    fields = ["id", "document_id", "text", "date_start", "confidence"]
     if "entities" in events.columns:
-        cols.append("entities")
-    return (
-        events.select(F.col(group_col), *cols)
-        .groupBy(group_col)
-        .applyInPandas(_merge, MERGED_SCHEMA)
+        fields.append("entities")
+
+    def _merge(evs) -> list[dict]:
+        rows = [
+            {**ev, "entities": [] if ev.get("entities") is None else list(ev["entities"])}
+            for ev in evs
+        ]
+        return [
+            {**ev, "consolidated": ev.get("consolidated", False),
+             "source_count": ev.get("source_count", 1)}
+            for ev in merge(rows, priority)
+        ]
+
+    groups = events.groupBy(group_col).agg(
+        F.sort_array(F.collect_list(F.struct(*fields))).alias("events")
     )
+    return explode_lane(groups, _merge, MERGED_SCHEMA)
 
 
 def detect_interval_conflicts(events: DataFrame) -> DataFrame:

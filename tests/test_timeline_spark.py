@@ -76,10 +76,11 @@ def _merged(spark, by_group, strategy, entities):
     return sorted(tuple(r) for r in got)
 
 
+_STRATEGIES = ["chronological", "deduplicated", "consolidated", "source_priority"]
+
+
 @pytest.mark.parametrize("entities", [True, False], ids=["entities", "no_entities"])
-@pytest.mark.parametrize(
-    "strategy", ["chronological", "deduplicated", "consolidated", "source_priority"]
-)
+@pytest.mark.parametrize("strategy", _STRATEGIES)
 def test_merge_matches_the_local_merger(spark, strategy, entities):
     by_group = {g: _events(seed) for g, seed in _GROUPS.items()}
     want = sorted(
@@ -91,3 +92,17 @@ def test_merge_matches_the_local_merger(spark, strategy, entities):
         )
     )
     assert _merged(spark, by_group, strategy, entities) == want
+
+
+@pytest.mark.parametrize("strategy", _STRATEGIES)
+def test_date_ties_break_by_id(spark, strategy):
+    """Events sharing a date, a text and a confidence: which one a merge
+    keeps follows input order alone, and the operator merges them in id
+    order whatever order the rows arrive in."""
+    evs = [
+        {"id": f"t{i}", "document_id": f"d{i % 4}", "text": "court hearing delayed",
+         "date_start": _BASE, "confidence": 0.5, "entities": ["A"]}
+        for i in range(6)
+    ]
+    want = sorted(_row("t", ev) for ev in _local(strategy, evs))
+    assert _merged(spark, {"t": evs[::-1]}, strategy, True) == want
