@@ -18,6 +18,7 @@ from collections import defaultdict
 from pyspark.sql import DataFrame, functions as F
 
 from .driver_lane import bounded_collect, local_frame
+from .lane import explode_lane
 
 # the PageRank damping factor of the driver reference, the distributed loop,
 # its driver lane and the DuckDB oracle (algorithms.py:496)
@@ -230,66 +231,47 @@ def betweenness_distributed(
 
     Decomposition: per-source shortest-path-transit counting is independent
     across sources, so the adjacency (slim: string pairs) is broadcast once
-    and the SOURCE list is what distributes — each task runs the exact
-    reference enumeration (graph_algorithms._shortest_path_transits) for
-    its sources, partial (node, count) rows reduce map-side. Exact when
-    sample_sources is None; with sampling it is the Brandes–Pich style
-    estimator (scores scaled by n/|S|). Fits graphs up to executor memory
-    (~10⁷ edges) — far past the reference cap, though not the edge-table
-    scale that CC/PageRank's join-per-round forms handle.
+    and the SOURCE list is what distributes — the driver deals the sources
+    into one batch per core, each batch is one lane row, and the lane
+    function runs the exact reference enumeration
+    (graph_algorithms._shortest_path_transits) for its sources and sums
+    them into partial (node, count) rows. Exact when sample_sources is
+    None; with sampling it is the Brandes–Pich style estimator (scores
+    scaled by n/|S|). Fits graphs up to executor memory (~10⁷ edges) — far
+    past the reference cap, though not the edge-table scale that
+    CC/PageRank's join-per-round forms handle.
 
     Rank ties break lexicographically by node (deterministic under any
     partitioning; the driver-side sibling uses accumulation order).
     Returns (node, score, rank) for the top 10.
 
-    Ceilings (enforced, not advisory): the edge count is measured FIRST and
-    anything above `edge_cap` raises before a single row reaches the driver
-    — the adjacency build is what bounds this form, and past it the
-    join-per-round shapes (connected_components_distributed /
-    pagerank_distributed) are the right tool. Graphs with more than
+    Ceilings (enforced, not advisory): one bounded collect of at most
+    `edge_cap` + 1 edges decides and fetches the adjacency, and more than
+    `edge_cap` edges raise — the adjacency build is what bounds this form,
+    and past it the join-per-round shapes (connected_components_distributed
+    / pagerank_distributed) are the right tool. Graphs with more than
     `auto_sample_above` nodes and no explicit `sample_sources` switch to
     the Brandes–Pich sampled estimator automatically (exact per-source BFS
     over every source is O(n·m) — quadratic-ish compute long before memory
-    hurts). The adjacency streams in via toLocalIterator (no second row
-    list) and the result is materialized eagerly so the broadcast can be
-    destroyed before returning (each call previously leaked one broadcast
-    for the session lifetime).
+    hurts). The result is materialized eagerly so the broadcast can be
+    destroyed before returning.
     """
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from ..shipping import ensure_shipped
     from .graph_algorithms import _shortest_path_transits
 
     spark = edges.sparkSession
-    ensure_shipped(spark)
-    slim = edges.select("entity_a", "entity_b")
-    n_edges = slim.count()
-    if n_edges > edge_cap:
+    rows = bounded_collect(edges.select("entity_a", "entity_b"), edge_cap)
+    if rows is None:
         raise ValueError(
-            f"betweenness_distributed: {n_edges} edges exceeds edge_cap="
-            f"{edge_cap}; the broadcast-adjacency form is memory-bound — use "
+            f"betweenness_distributed: more than edge_cap={edge_cap} edges; "
+            "the broadcast-adjacency form is memory-bound — use "
             "connected_components_distributed / pagerank_distributed style "
             "join-per-round analytics or raise edge_cap explicitly."
         )
     adj: dict[str, list[str]] = {}
-    nodes: list[str] = []
-    seen: set[str] = set()
-    # collect() is BOUNDED here (the edge_cap gate above already counted);
-    # toLocalIterator would pay one job round-trip per partition for the
-    # same rows (measured 5x slower on fixture graphs)
-    for r in slim.collect():
-        a, b = r["entity_a"], r["entity_b"]
+    for a, b in rows:
         adj.setdefault(a, []).append(b)
         adj.setdefault(b, []).append(a)
-        for v in (a, b):
-            if v not in seen:
-                seen.add(v)
-                nodes.append(v)
+    nodes = list(adj)  # first-seen order, as the reference enumerates
     n = len(nodes)
     if n == 0:
         return local_frame(spark, [], "node string, score double, rank int")
@@ -306,32 +288,23 @@ def betweenness_distributed(
 
     bc = spark.sparkContext.broadcast((adj, nodes))
 
-    src_df = spark.createDataFrame([(s,) for s in sources], "src string")
-    parallelism = min(len(sources), spark.sparkContext.defaultParallelism)
-    src_df = src_df.repartition(parallelism)
-
-    out_schema = StructType(
-        [StructField("node", StringType(), False),
-         StructField("cnt", LongType(), False)]
-    )
-
-    def _run(batches):
-        import pandas as pd_  # executor-side
-
+    def _transits(srcs) -> list[dict]:
         adj_b, nodes_b = bc.value
-        for pdf in batches:
-            acc: dict[str, int] = {}
-            for src in pdf["src"].tolist():
-                for node, c in _shortest_path_transits(adj_b, src, nodes_b).items():
-                    acc[node] = acc.get(node, 0) + c
-            yield pd_.DataFrame(
-                {"node": list(acc.keys()), "cnt": list(acc.values())},
-                columns=["node", "cnt"],
-            )
+        acc: dict[str, int] = {}
+        for src in srcs:
+            for node, c in _shortest_path_transits(adj_b, src, nodes_b).items():
+                acc[node] = acc.get(node, 0) + c
+        return [{"node": node, "cnt": c} for node, c in acc.items()]
 
+    n_batches = min(len(sources), spark.sparkContext.defaultParallelism)
+    batches = local_frame(
+        spark,
+        [(i, sources[i::n_batches]) for i in range(n_batches)],
+        "batch int, srcs array<string>",
+    )
     norm = (n - 1) * (n - 2) / 2 if n > 2 else 1
     scored = (
-        src_df.mapInPandas(_run, out_schema)
+        explode_lane(batches, _transits, "batch int, node string, cnt long")
         .groupBy("node")
         .agg(F.sum("cnt").alias("cnt"))
         .select(
@@ -339,14 +312,10 @@ def betweenness_distributed(
             (F.col("cnt") * F.lit(scale) / F.lit(float(norm))).alias("score"),
         )
     )
-    # Top 10 via distributed TakeOrderedAndProject (no unpartitioned
-    # row_number window over all nodes); ranks are assigned on the driver
-    # over the ≤10 collected rows (this is already a driver-capped lane
-    # — the whole adjacency was collected above). Materializing through
-    # local_frame also frees the broadcast immediately, as before.
-    top = (
-        scored.orderBy(F.desc("score"), F.asc("node")).limit(10).collect()
-    )
+    # Top 10 via distributed TakeOrderedAndProject; ranks are assigned on
+    # the driver over the ≤10 collected rows, and returning through
+    # local_frame frees the broadcast immediately.
+    top = scored.orderBy(F.desc("score"), F.asc("node")).limit(10).collect()
     bc.destroy()
     return local_frame(
         spark,

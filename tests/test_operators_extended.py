@@ -256,8 +256,9 @@ class TestGraph:
         assert got["x"] == got["y"] == "x"
 
     def test_betweenness_edge_cap_raises_before_collect(self, spark):
-        """Above edge_cap the call must refuse (count-first gate) instead of
-        collecting an unbounded edge list to the driver."""
+        """Above edge_cap the call must refuse (one bounded collect of at
+        most edge_cap + 1 edges decides) instead of collecting an unbounded
+        edge list to the driver."""
         import pytest
 
         from arkhammirror_spark.operators.graph import betweenness_distributed
