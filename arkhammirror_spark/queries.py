@@ -167,7 +167,7 @@ def _mentions_df(
     docs = _load(spark, sf_dir, "documents")
     if docs_where is not None:
         # applied BEFORE the Python NER pass so the predicate reaches the
-        # parquet scan and bounds the mapInPandas work, not just its output
+        # parquet scan and bounds the lane's Python work, not just its output
         docs = docs.where(docs_where)
     docs = docs.select("doc_id", _cased_spark(F.col("text")).alias("t"))
     return _explode_per_doc(

@@ -219,20 +219,16 @@ def test_pipeline_job_budget(spark, tmp_path):
     )
 
 
-# The modules that may start a pandas UDF, each for its reason; every other
-# row-wise operator keeps only its per-row function and runs through the lane.
-_PANDAS_UDF_MODULES = {
-    "operators/lane.py": "the per-row lane itself",
-    "operators/graph.py": "betweenness aggregates per batch",
-    "operators/timeline.py": "grouped applyInPandas merge",
-}
+# The one module that may start a pandas UDF: every other operator keeps
+# only its per-row (or per-group, per-batch) function and runs through the
+# lane, which also decides how nulls and instants cross into Python.
+_PANDAS_UDF_MODULES = ["operators/lane.py"]
 
 
 def test_pandas_udfs_only_in_the_lane():
-    """mapInPandas/applyInPandas appear only in the modules listed above,
-    and each listed module still uses one; exactly those modules call
-    `shipping.ensure_shipped`, which every pandas-UDF closure over the
-    package needs."""
+    """mapInPandas/applyInPandas appear only in the module listed above,
+    and it still uses one; only it calls `shipping.ensure_shipped`, which
+    every pandas-UDF closure over the package needs."""
     import ast
 
     pkg = Path(__file__).resolve().parent.parent / "arkhammirror_spark"
