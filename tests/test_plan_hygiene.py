@@ -65,7 +65,7 @@ _ARROW_BOUNDS = {
     # the flatten pass and the shingle pass are both checkpoint-truncated:
     # no Python node may survive into the final plan
     "webtext_prep": (0, 0),
-    # eager checkpoint (broadcast release) truncates the transit pass
+    # the top 10 return through local_frame, which truncates the transit pass
     "graph_betweenness": (0, 0),
     "image_phash": (1, 1),        # the gated decode+hash mapInPandas pass
     "image_neardup": (0, 0),      # slim sigs checkpoint truncates the pass
