@@ -20,6 +20,7 @@ from arkhammirror_spark.plans import (
 )
 from arkhammirror_spark.queries import QUERIES
 from bench_extra import part_record
+from perfbench.run import MIX
 
 SF = "/root/testdata/sf0.001"
 
@@ -217,6 +218,24 @@ def test_pipeline_job_budget(spark, tmp_path):
         f"{len(jobs)} Spark jobs for a cold + resume run_pipeline, budget "
         f"{_PIPELINE_JOB_BUDGET}"
     )
+
+
+# The benchmark's analyst mix, each part run as the benchmark runs it: built
+# and sent to a noop sink, with no plan walk between. Its budget is the
+# part's recorded one in plans/shapes.json, so a part added to the mix
+# without a record fails here too.
+@pytest.mark.parametrize("name", sorted(MIX))
+def test_analyst_part_job_budget(spark, name):
+    sc = spark.sparkContext
+    group = f"part-job-budget-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        QUERIES[name](spark, SF).write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    budget = _SHAPES[name]["jobs"]
+    assert jobs <= budget, f"{name}: {jobs} Spark jobs, budget {budget}"
 
 
 # The one module that may start a pandas UDF: every other operator keeps
